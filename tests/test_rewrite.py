@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -9,7 +10,7 @@ import pytest
 from uquery_rs_spark.errors import UQueryError
 from uquery_rs_spark.rewrite import SqlRewriter
 
-FIXTURES = "/root/repo/tests/fixtures"
+FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
 
 
 @pytest.fixture

@@ -6,8 +6,14 @@ golden bytes.
 from __future__ import annotations
 
 import gzip
+import http.client
 import io
 import json
+import os
+import signal
+import socket
+import subprocess
+import sys
 import threading
 import urllib.error
 import urllib.request
@@ -28,12 +34,14 @@ GOLDEN_JSON = (
 )
 GOLDEN_CSV = b'Id,Name,Description\n1,Rust,"Safe, concurrent, performant systems language"\n'
 
-FIXTURES = "/root/repo/tests/fixtures"
+TESTS_DIR = os.path.dirname(os.path.abspath(__file__))
+FIXTURES = os.path.join(TESTS_DIR, "fixtures")
 
 
-def _serve(spark, **cfg_kwargs):
-    rewriter = SqlRewriter(spark, allowed_dirs=["/root/repo/tests"])
-    engine = Engine(spark, pool_size=2, rewriter=rewriter)
+def _serve(spark, engine=None, **cfg_kwargs):
+    if engine is None:
+        rewriter = SqlRewriter(spark, allowed_dirs=[TESTS_DIR])
+        engine = Engine(spark, pool_size=2, rewriter=rewriter)
     server = make_server("127.0.0.1", 0, ServiceConfig(engine, **cfg_kwargs))
     threading.Thread(target=server.serve_forever, daemon=True).start()
     return server, f"http://127.0.0.1:{server.server_address[1]}"
@@ -53,7 +61,9 @@ def cors_url(spark):
     server.shutdown()
 
 
-def post(url, body, content_type="application/json", accept="application/json", headers=None):
+def post(
+    url, body, content_type="application/json", accept="application/json", headers=None, timeout=120
+):
     data = json.dumps({"query": body}).encode() if content_type == "application/json" else body.encode()
     req = urllib.request.Request(url + "/", data=data, method="POST")
     req.add_header("Content-Type", content_type)
@@ -61,7 +71,7 @@ def post(url, body, content_type="application/json", accept="application/json", 
     for k, v in (headers or {}).items():
         req.add_header(k, v)
     try:
-        resp = urllib.request.urlopen(req, timeout=120)
+        resp = urllib.request.urlopen(req, timeout=timeout)
         return resp.status, dict(resp.headers), resp.read()
     except urllib.error.HTTPError as e:
         return e.code, dict(e.headers), e.read()
@@ -275,6 +285,102 @@ def test_query_timeout_408(spark):
         assert json.loads(body)["title"] == "Query Timeout"
     finally:
         server.shutdown()
+
+
+def test_timeout_cancels_query_before_its_job_starts(spark):
+    """The 408 fires during rewrite/analysis, before the query's job
+    exists; the job must still never run, or it holds the permit."""
+    engine = Engine(spark, pool_size=1, rewriter=SqlRewriter(spark, allowed_dirs=[TESTS_DIR]))
+    short, short_url = _serve(spark, engine, query_timeout_secs=0.05)
+    long, long_url = _serve(spark, engine, query_timeout_secs=30)
+    try:
+        slow = "SELECT count(*) AS n FROM range(3000000) a CROSS JOIN range(3000) b"
+        status, headers, _ = post(short_url, slow)
+        assert status == 408 and headers["Connection"] == "close"
+        # same engine, one permit: served only once the slow query let go
+        status, _, body = post(long_url, "SELECT 1 AS n", timeout=10)
+        assert status == 200 and json.loads(body) == [{"n": 1}]
+    finally:
+        for server in (short, long):
+            server.shutdown()
+            server.server_close()
+
+
+# -- one thread owns each response: streaming edge cases --------------------
+
+
+def test_client_disconnect_releases_permits(spark):
+    """Clients that hang up mid-stream must not keep pool permits: with a
+    pool of 2, four abandoned Arrow streams, then a query is still served."""
+    server, url = _serve(spark, query_timeout_secs=30)
+    port = server.server_address[1]
+    sql = b"SELECT id, id * 2 AS x FROM range(0, 600000, 1, 4) ORDER BY id DESC"
+    request = (
+        b"POST / HTTP/1.1\r\nHost: 127.0.0.1\r\nContent-Type: text/plain\r\n"
+        b"Accept: application/vnd.apache.arrow.stream\r\n"
+        b"Content-Length: %d\r\n\r\n%s" % (len(sql), sql)
+    )
+    try:
+        streams = [socket.create_connection(("127.0.0.1", port), timeout=30) for _ in range(4)]
+        for s in streams:
+            s.sendall(request)
+        for s in streams:
+            try:
+                s.recv(1024)
+            except socket.timeout:
+                pass
+            s.close()
+        status, _, body = post(url, "SELECT 1 AS n", timeout=10)
+        assert status == 200 and json.loads(body) == [{"n": 1}]
+    finally:
+        server.shutdown()
+        server.server_close()
+
+
+def test_csv_export_streams(base_url):
+    status, _, body = post(base_url, "SELECT * FROM range(100)", accept="text/csv")
+    assert status == 200
+    assert len(body.decode().splitlines()) == 101
+
+
+def test_mid_stream_failure_is_not_a_complete_200(base_url):
+    """An error after the 200 is committed cuts the chunked body short
+    instead of ending it cleanly with some of the rows."""
+    sql = (
+        "SELECT CASE WHEN id >= 150000 THEN CAST(raise_error('boom') AS BIGINT) "
+        "ELSE id END AS v FROM range(0, 200000, 1, 4)"
+    )
+    with pytest.raises(http.client.IncompleteRead):
+        post(base_url, sql, accept="application/jsonl")
+
+
+def test_sigterm_stops_server():
+    root = os.path.dirname(TESTS_DIR)
+    env = dict(os.environ, PYTHONPATH=root, UQ_DRIVER_MEMORY="1g")
+    proc = subprocess.Popen(
+        [sys.executable, "-u", "-m", "uquery_rs_spark.web", "--port", "0",
+         "--addr", "127.0.0.1", "--cpus", "1"],
+        cwd=root, env=env, stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True,
+        start_new_session=True,
+    )
+    watchdog = threading.Timer(300, proc.kill)  # bounds the wait for the start line
+    watchdog.start()
+    try:
+        for line in proc.stdout:
+            if "started" in line:
+                break
+        watchdog.cancel()
+        assert proc.poll() is None, "server exited before it started"
+        proc.send_signal(signal.SIGTERM)
+        proc.communicate(timeout=60)
+        assert proc.returncode == 0
+    finally:
+        watchdog.cancel()
+        try:  # whatever is left of the session, the JVM included
+            os.killpg(proc.pid, signal.SIGKILL)
+        except ProcessLookupError:
+            pass
+        proc.wait()
 
 
 def test_empty_result_streams_ok(base_url):

@@ -24,7 +24,6 @@ cancelJobGroup mid-scan.
 
 from __future__ import annotations
 
-import os
 import threading
 import uuid
 from abc import ABC, abstractmethod
@@ -37,7 +36,7 @@ from .errors import UQueryError
 DEFAULT_BATCH_ROWS = 8192
 # below this known result bound, JSON serialization stays on the driver
 # (the executor offload's extra stage costs more than it saves)
-_EXEC_JSON_MIN_ROWS = int(os.environ.get("UQ_EXEC_JSON_MIN_ROWS", "50000"))
+_EXEC_JSON_MIN_ROWS = 50000
 
 
 def _first_line(e: Exception) -> str:
@@ -115,8 +114,12 @@ class PreparedQuery:
         self._sql = sql
         self.job_group = f"uq-{uuid.uuid4().hex[:12]}"
         self._released = False
+        self._cancelled = False
 
     def cancel(self) -> None:
+        """Stop the query: its running jobs now, and any job it has not
+        started yet (execute() checks the flag before its first job)."""
+        self._cancelled = True
         self._engine.spark.sparkContext.cancelJobGroup(self.job_group)
 
     def release(self) -> None:
@@ -221,6 +224,8 @@ class PreparedQuery:
                     pass
             sc.setJobGroup(self.job_group, f"uquery {self.job_group}", interruptOnCancel=True)
             try:
+                if self._cancelled:  # cancelled during rewrite/analysis
+                    raise UQueryError.sql_error("query cancelled")
                 if ser_fn is not None:
                     ser = df.mapInArrow(ser_fn, "payload binary")
                     for row in ser.toLocalIterator(prefetchPartitions=True):

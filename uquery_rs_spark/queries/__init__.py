@@ -83,398 +83,6 @@ def _round13_window() -> list[str]:
     return (list(_ROUND13_NEW) + list(_ROUND13_R8))[:50]
 
 
-# Round-12 verification window (harnesses sample REGISTRY[:50]).
-# Rotation rule (standing since r7): entries ADDED this round first
-# (_ROUND12_NEW — the r11-verdict b36_math bisection MUST lead so the
-# driver's oracle isolates which math scalar its newer binary computes
-# differently, plus the wave-9 overflow b40_liststats), then the 34
-# round-7-signal entries displaced from the r11 window, then
-# round-8-signal entries alphabetically (= CORRECTNESS_r08 keys minus
-# every later window), trimmed to 50.
-_ROUND12_NEW: tuple[str, ...] = (
-    # b36_math bisection (r11 verdict #1 — the only red driver row):
-    "dialect_gap_b36m_gamma",
-    "dialect_gap_b36m_lgamma",
-    "dialect_gap_b36m_factorial",
-    "dialect_gap_b36m_even",  # the root-cause suspect (decimal-vs-double %)
-    "dialect_gap_b36m_cot",
-    "dialect_gap_b40_liststats",  # wave-9 overflow (r11 share cap)
-    "dialect_gap_b41_json_fe",  # wave-10: [#-n] from-end, json_group_structure
-    "dialect_gap_b42_strftime_map",  # wave-11: strftime codes, map_concat, list_zip
-    "text_heavy_hitters_mg",  # Misra-Gries candidates + exact verify pass
-    "events_hll_sliding_uniques",  # rolling 7-day distinct over daily sketches
-    "text_lm_kn_bigram",  # interpolated Kneser-Ney word-bigram LM scoring
-    "dialect_gap_b43_topn_aggs",  # wave-12: max/min/arg_max/arg_min top-n forms
-    "dialect_gap_b44_python_lambda",  # wave-12: DuckDB ≥1.3 lambda syntax
-    "dialect_gap_b45_try_expr",  # wave-12: DuckDB ≥1.2 TRY() expression
-    "corpus_cross_source_dup_matrix",  # source×source near-dup contingency
-)
-
-_ROUND12_R7TAIL = (
-    "emb_label_cohesion",
-    "emb_quantize_int8_error",
-    "explode_unnest_series",
-    "math_functions",
-    "q16_supplier_count_by_part",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_orders",
-    "q19_discounted_revenue",
-    "q20_potential_promotion",
-    "q21_suppliers_kept_waiting",
-    "q22_idle_rich_customers",
-    "q2_min_balance_supplier",
-    "q4_order_priority",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_type_profit",
-    "range_join_size_buckets",
-    "regex_functions",
-    "rollup_order_status_priority",
-    "scalar_subquery_above_avg_balance",
-    "semi_join_active_customers",
-    "set_ops_nation_membership",
-    "stats_aggregates_prices",
-    "string_functions_battery",
-    "text_fingerprint",
-    "text_intra_doc_dedup",
-    "text_language_id",
-    "text_ngram_topk",
-    "text_pii_scan",
-    "text_quality_score",
-    "text_repetition_stats",
-    "text_token_stats",
-    "union_all_price_tiers",
-    "values_inline_table",
-)
-
-# r8-signal entries (CORRECTNESS_r08 keys minus every later window),
-# alphabetical; the window takes the first 50 - len(new) - len(r7tail).
-_ROUND12_R8 = (
-    "ann_cosine_topk_int8",
-    "ann_ivf_persistent",
-    "approx_percentile_prices",
-    "cohort_retention_daily",
-    "columns_regex_battery",
-    "corpus_leakage_safe_split",
-    "corpus_quality_sample",
-    "corpus_shuffle_order",
-    "corpus_stratified_mix",
-    "daily_user_activity",
-    "datetime_edge_battery",
-    "dedup_semantic",
-    "dedup_simhash",
-    "dialect_gap_battery29",
-    "dialect_gap_battery30",
-    "dialect_gap_battery31",
-    "dialect_gap_battery32",
-    "dialect_gap_battery33",
-    "distinct_on_latest_order",
-    "escape_literal_battery",
-    "events_anomaly_zscore",
-    "except_all_priorities",
-    "from_first_syntax",
-    "funnel_view_click_purchase",
-    "ignore_nulls_window_battery",
-    "int_div_price_buckets",
-    "intersect_all_priorities",
-    "json_extract_props",
-    "len_slice_map_edge_battery",
-    "macros_battery",
-    "map_literal_ordered_agg",
-    "multimodal_audio_stats",
-    "multimodal_decode_stats",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "multimodal_gif_decode",
-    "multimodal_jpeg_decode",
-    "multimodal_jpeg_progressive",
-    "multimodal_metadata",
-    "multimodal_pixel_dedup",
-    "multimodal_resize",
-    "percentile_battery",
-    "planned_join_segment_revenue",
-    "positional_join_rank_zip",
-    "q10_returned_items",
-    "sessionization_30min",
-    "sliding_window_events",
-    "streaming_sliding_window",
-    "streaming_tumbling_window",
-    "tumbling_window_events",
-)
-
-
-def _round12_window() -> list[str]:
-    new = list(_ROUND12_NEW)[:15]
-    return (new + list(_ROUND12_R7TAIL) + list(_ROUND12_R8))[:50]
-
-
-# Round-11 verification window (harnesses sample REGISTRY[:50]).
-# Rotation rule (standing since r7): entries ADDED this round first
-# (_ROUND11_NEW — the r10-verdict battery36 family splits, which MUST
-# lead the window so the driver's oracle isolates the version-volatile
-# family), then the 19 round-6-signal entries displaced from the r10
-# window (the exact tail from the r10 note), then round-7-signal
-# entries alphabetically (= CORRECTNESS_r07 keys minus every later
-# window), trimmed to 50. The 27 r7-signal entries that don't fit roll
-# into round 12.
-_ROUND11_NEW: tuple[str, ...] = (
-    # battery36 split (r10 driver hash-fail → family isolation):
-    "dialect_gap_b36_listuniq",  # the CONFIRMED 1.0.0-vs-1.5.2 divergence
-    "dialect_gap_b36_fracdiv",  # the one family we could not re-derive
-    "dialect_gap_b36_temporal",
-    "dialect_gap_b36_intdiv",
-    "dialect_gap_b36_maplist",
-    "dialect_gap_b36_strdist",
-    "dialect_gap_b36_math",
-    "dialect_gap_b36_baseconv",
-    "corpus_dsir_weights",  # DSIR importance resampling (Xie et al. 2023)
-    "dialect_gap_b37_datelit_reflags",  # wave-6: pre-1000 dates, regexp flags
-    "emb_pca_project",  # distributed PCA, zero-shuffle moment pass
-    "events_hll_sketch_rollup",  # materialized re-mergeable HLL sketches
-    "prepared_statement_roundtrip",  # PREPARE/EXECUTE/DEALLOCATE lifecycle
-    "dialect_gap_b38_winpct",  # wave-7: running window percentiles, IGNORE NULLS
-    "dialect_gap_b39_json",  # wave-8: json_transform coercion, 2-arg len, path lists
-    # NOTE: dialect_gap_b40_liststats (wave-9) lands OUTSIDE this tuple —
-    # the r11 window is at the 15-new-entry share cap; it leads the r12
-    # window per the standing rotation rule.
-)
-
-_ROUND11_R6TAIL = (
-    "emb_dim_variance",
-    "emb_diversity_sample",
-    "filtered_aggregates",
-    "full_outer_nation_presence",
-    "left_join_customer_order_counts",
-    "limit_offset_pagination",
-    "listagg_nations_per_region",
-    "q11_important_stock",
-    "q12_shipmode_priority",
-    "q13_customer_distribution",
-    "q14_promo_revenue_ratio",
-    "q15_top_supplier",
-    "streaming_enrich_join",
-    "text_boilerplate_removal",
-    "text_c4_quality",
-    "text_gopher_quality",
-    "text_quality_classifier",
-    "web_domain_blocklist",
-    "web_url_canonicalize",
-)
-
-# r7-signal entries (CORRECTNESS_r07 keys minus every later window),
-# alphabetical; the window takes the first 50 - len(new) - len(r6tail).
-_ROUND11_R7 = (
-    "ann_cosine_topk",
-    "array_functions",
-    "corpus_filter_funnel",
-    "corpus_hash_split",
-    "corpus_length_buckets",
-    "datetime_functions",
-    "decontaminate_benchmark_overlap",
-    "dedup_cluster_canonical",
-    "dedup_embedding_cosine",
-    "dedup_embedding_lsh",
-    "dedup_exact_stats",
-    "dedup_incremental_delta",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dialect_gap_battery27",
-    "dialect_gap_battery28",
-    "emb_label_cohesion",
-    "emb_quantize_int8_error",
-    "explode_unnest_series",
-    "math_functions",
-    "q16_supplier_count_by_part",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_orders",
-    "q19_discounted_revenue",
-    "q20_potential_promotion",
-    "q21_suppliers_kept_waiting",
-    "q22_idle_rich_customers",
-    "q2_min_balance_supplier",
-    "q4_order_priority",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_type_profit",
-    "range_join_size_buckets",
-    "regex_functions",
-    "rollup_order_status_priority",
-    "scalar_subquery_above_avg_balance",
-    "semi_join_active_customers",
-    "set_ops_nation_membership",
-    "stats_aggregates_prices",
-    "string_functions_battery",
-    "text_fingerprint",
-    "text_intra_doc_dedup",
-    "text_language_id",
-    "text_ngram_topk",
-    "text_pii_scan",
-    "text_quality_score",
-    "text_repetition_stats",
-    "text_token_stats",
-    "union_all_price_tiers",
-    "values_inline_table",
-)
-
-# r10 lists retained for the window-derivation audit trail
-_ROUND10_NEW: tuple[str, ...] = (
-    "tumbling_window_approx",  # the documented 100 TB tumbling plan
-    "dialect_gap_battery35",  # map/struct/list COLUMN subscripts on data
-    "dedup_exact_substring",  # ExactSubstr span removal (Lee et al. 2022)
-    "dialect_gap_battery36",  # wave-4 gap-probe surface + divide///strftime closes
-    "corpus_pack_emit",  # materialized GPT-style packing (sequences, not stats)
-)
-
-_ROUND10_R5TAIL = (
-    "q6_forecast_revenue",
-    "qualify_top_orders_per_cust",
-    "recursive_cte_monthly_orders",
-    "regex_pattern_battery",
-    "series_struct_pack_battery",
-    "streaming_interval_join",
-    "streaming_rollup_parquet",
-    "text_bm25_search",
-    "text_bpe_tokenize",
-    "text_compression_ratio",
-    "text_tfidf_top_terms",
-    "topk_parts_per_brand",
-    "using_join_nation_region",
-    "window_analytics_orders",
-)
-
-_ROUND10_R6 = (
-    "approx_distinct_parts",
-    "asof_join_null_keys",
-    "asof_join_using_subquery",
-    "correlated_subquery_above_cust_avg",
-    "cross_join_region_status",
-    "cte_top_supplier_revenue",
-    "cube_returnflag_linestatus",
-    "dialect_gap_battery10",
-    "dialect_gap_battery11",
-    "dialect_gap_battery12",
-    "dialect_gap_battery13",
-    "dialect_gap_battery14",
-    "dialect_gap_battery15",
-    "dialect_gap_battery16",
-    "dialect_gap_battery17",
-    "dialect_gap_battery18",
-    "dialect_gap_battery19",
-    "dialect_gap_battery20",
-    "dialect_gap_battery21",
-    "dialect_gap_battery22",
-    "dialect_gap_battery23",
-    "dialect_gap_battery24",
-    "dialect_gap_battery25",
-    "dialect_gap_battery26",
-    "dialect_gap_battery4",
-    "dialect_gap_battery5",
-    "dialect_gap_battery6",
-    "dialect_gap_battery7",
-    "dialect_gap_battery8",
-    "dialect_gap_battery9",
-    "distinct_order_priorities",
-    "emb_dim_variance",
-    "emb_diversity_sample",
-    "filtered_aggregates",
-    "full_outer_nation_presence",
-    "left_join_customer_order_counts",
-    "limit_offset_pagination",
-    "listagg_nations_per_region",
-    "q11_important_stock",
-    "q12_shipmode_priority",
-    "q13_customer_distribution",
-    "q14_promo_revenue_ratio",
-    "q15_top_supplier",
-    "streaming_enrich_join",
-    "text_boilerplate_removal",
-    "text_c4_quality",
-    "text_gopher_quality",
-    "text_quality_classifier",
-    "web_domain_blocklist",
-    "web_url_canonicalize",
-)
-
-# r9 lists retained for the window-derivation audit trail
-_ROUND9_NEW: tuple[str, ...] = (
-    "dialect_gap_battery34",  # TIME ± INTERVAL midnight wraparound
-    "text_bpe_apply_ids",  # distributed BPE apply, exact closed-form oracle
-)
-
-_ROUND9_R4 = (
-    "regex_sort_escape_battery",
-    "salted_join_order_counts",
-    "sample_rows_count",
-    "select_exclude_group_by_all",
-    "star_replace_strftime",
-    "streaming_dedup",
-    "streaming_stateful_counter",
-    "struct_map_access",
-    "text_lm_perplexity",
-    "time_range_window_events",
-    "union_by_name_priorities",
-    "unpivot_part_measures",
-    "unpivot_statement_measures",
-)
-
-_ROUND9_R5 = (
-    "ann_cosine_topk_pq",
-    "ann_ivf_topk",
-    "anti_join_idle_customers",
-    "asof_direction_battery",
-    "asof_join_purchase_view",
-    "asof_join_sql_form",
-    "bracket_syntax_battery",
-    "corpus_chunk_documents",
-    "corpus_epoch_shuffle_battery",
-    "corpus_pack_sequences",
-    "corpus_per_source_cap",
-    "corpus_stats_card",
-    "corpus_token_budget_mix",
-    "corpus_version_diff",
-    "dedup_bloom_membership",
-    "dedup_funnel",
-    "dedup_ngram_containment",
-    "dedup_normalized",
-    "dedup_winnowing",
-    "dialect_edge_cases",
-    "dialect_gap_battery",
-    "dialect_gap_battery2",
-    "dialect_gap_battery3",
-    "emb_outlier_zscore",
-    "events_markov_transitions",
-    "events_resample_gapfill",
-    "function_rename_battery",
-    "grouping_sets_revenue",
-    "lateral_top_order_per_customer",
-    "multimodal_audio_rms",
-    "pivot_statement_status",
-    "pivot_status_by_priority",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "qualify_top_orders_per_cust",
-    "recursive_cte_monthly_orders",
-    "regex_pattern_battery",
-    "series_struct_pack_battery",
-    "streaming_interval_join",
-    "streaming_rollup_parquet",
-    "text_bm25_search",
-    "text_bpe_tokenize",
-    "text_compression_ratio",
-    "text_tfidf_top_terms",
-    "topk_parts_per_brand",
-    "using_join_nation_region",
-    "window_analytics_orders",
-)
-
-
-def _round11_window() -> list[str]:
-    new = list(_ROUND11_NEW)[:15]
-    return (new + list(_ROUND11_R6TAIL) + list(_ROUND11_R7))[:50]
-
-
 def load_all() -> None:
     """Import every query module so its ``@register`` calls run.
 

@@ -127,14 +127,16 @@ def main(argv: list[str] | None = None) -> int:
     )
     server = make_server(args.addr, args.port, config)
 
-    def shutdown(signum, frame):  # graceful SIGINT/SIGTERM (main.rs:81-105)
+    # graceful SIGINT/SIGTERM (main.rs:81-105): both interrupt serve_forever
+    signal.signal(signal.SIGINT, signal.default_int_handler)
+    signal.signal(signal.SIGTERM, signal.default_int_handler)
+    port = server.server_address[1]
+    print(f"uQuery-spark server started in {time.time() - t0:.2f}s on {args.addr}:{port}")
+    try:
+        server.serve_forever()
+    except KeyboardInterrupt:
         print("shutting down")
-        server.shutdown()
-
-    signal.signal(signal.SIGINT, shutdown)
-    signal.signal(signal.SIGTERM, shutdown)
-    print(f"uQuery-spark server started in {time.time() - t0:.2f}s on {args.addr}:{args.port}")
-    server.serve_forever()
+    server.server_close()
     spark.stop()
     return 0
 

@@ -5,49 +5,85 @@ Per-request pipeline (reference §3.1, re-expressed):
   parse body (≤256 KiB; JSON {"query"} or raw SQL)        request.rs:23-67
   → negotiate Accept (406 on no match)                    routers.rs:91-104
   → engine.prepare (blocks on pool permit)                duckdb.rs:31-39
-  → worker thread executes into format writer             routers.rs:114-148
-  → wait first batch with timeout: 408 / pre-stream error: 400
-                                                          routers.rs:153-182
-  → stream 200 chunked (gzip if requested), bounded queue routers.rs:108,184
+  → execute on the handler thread into the format writer  routers.rs:114-148
+  → the first write commits 200 chunked (gzip if requested) and streams
+    straight to the socket; before it, a timer may answer 408 and an
+    error answers 400/500                                 routers.rs:153-184
 """
 
 from __future__ import annotations
 
 import json
-import queue
 import threading
 import zlib
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-import pyarrow as pa
-
-from ..engine import Engine, RecordBatchConsumer
+from ..engine import Engine
 from ..errors import PROBLEM_JSON, UQueryError
 from ..writers import writer_for_format
 from .negotiate import first_compatible_format
 
 MAX_BODY_BYTES = 256 * 1024  # request.rs:41
-QUEUE_CHUNKS = 64  # bounded backpressure buffer (≈ the 1 MiB duplex pipe)
-
-_SENTINEL = object()
 
 
-class _QueueSink:
-    """write(bytes) → bounded chunk queue (worker side of the pipe).
+class _ResponseSink:
+    """The response body as a file object for the format writers.
 
-    Implements the minimal file-object protocol pyarrow's IPC writer
-    probes (`closed`, `flush`, `writable`).
+    The first write commits the response: it sends the 200 chunked
+    headers, then every write goes to the socket as one chunk. Until then
+    the deadline timer may claim the response for a 408 instead; a write
+    after that raises, which unwinds execute(). Implements the minimal
+    file-object protocol pyarrow's IPC writer probes (`closed`, `flush`,
+    `writable`).
     """
 
     closed = False
 
-    def __init__(self) -> None:
-        self.chunks: queue.Queue = queue.Queue(maxsize=QUEUE_CHUNKS)
+    def __init__(self, handler: "UQueryHandler", content_type: str, gzip_out: bool) -> None:
+        self._handler = handler
+        self._content_type = content_type
+        self._compressor = zlib.compressobj(wbits=31) if gzip_out else None
+        self._lock = threading.Lock()
+        self._claimed = False
+        self._committed = False
+
+    def claim(self) -> bool:
+        """Take the right to answer the request; only the first caller gets it."""
+        with self._lock:
+            taken, self._claimed = self._claimed, True
+        return not taken
+
+    def _commit(self) -> None:
+        if not self.claim():
+            raise ConnectionAbortedError("the response was already sent")
+        h = self._handler
+        h.send_response(200)
+        h.send_header("Content-Type", self._content_type)
+        if self._compressor is not None:
+            h.send_header("Content-Encoding", "gzip")
+        h.send_header("Transfer-Encoding", "chunked")
+        h._cors_headers()
+        h.end_headers()
+        self._committed = True
+
+    def _write_chunk(self, data: bytes) -> None:
+        if data:
+            self._handler.wfile.write(b"%x\r\n%b\r\n" % (len(data), data))
 
     def write(self, data: bytes) -> int:
         if data:
-            self.chunks.put(bytes(data))
+            if not self._committed:
+                self._commit()
+            self._write_chunk(self._compressor.compress(data) if self._compressor else data)
         return len(data)
+
+    def end(self) -> None:
+        """Terminate the body (committing an empty one if nothing was written)."""
+        if not self._committed:
+            self._commit()
+        if self._compressor is not None:
+            self._write_chunk(self._compressor.flush())
+        self._handler.wfile.write(b"0\r\n\r\n")
 
     def flush(self) -> None:
         pass
@@ -57,48 +93,6 @@ class _QueueSink:
 
     def seekable(self) -> bool:
         return False
-
-    def close(self) -> None:
-        self.chunks.put(_SENTINEL)
-
-
-class _FirstBatchNotifier(RecordBatchConsumer):
-    """Fires `ready` on the first batch — or on finish for empty results,
-    or with an error before any batch (reference routers.rs:34-58)."""
-
-    def __init__(self, inner: RecordBatchConsumer):
-        self.inner = inner
-        self.ready = threading.Event()
-        self.error: UQueryError | None = None
-        self._streaming = False
-
-    def on_schema(self, schema: pa.Schema) -> None:
-        self.inner.on_schema(schema)
-
-    def on_batch(self, batch: pa.RecordBatch) -> None:
-        self.inner.on_batch(batch)
-        self._streaming = True
-        self.ready.set()
-
-    def batch_bytes_serializer(self, schema: pa.Schema):
-        """Forward the engine's serialized fast path to the wrapped writer
-        (None → engine falls back to the Arrow-batch path)."""
-        f = getattr(self.inner, "batch_bytes_serializer", None)
-        return f(schema) if f is not None else None
-
-    def on_batch_bytes(self, payload: bytes) -> None:
-        self.inner.on_batch_bytes(payload)
-        self._streaming = True
-        self.ready.set()
-
-    def finish(self) -> None:
-        self.inner.finish()
-        self.ready.set()
-
-    def fail(self, err: UQueryError) -> None:
-        if not self._streaming:
-            self.error = err
-        self.ready.set()
 
 
 class ServiceConfig:
@@ -129,11 +123,13 @@ class UQueryHandler(BaseHTTPRequestHandler):
             self.send_header("Access-Control-Allow-Methods", "*")
             self.send_header("Access-Control-Allow-Headers", "*")
 
-    def _send_problem(self, err: UQueryError) -> None:
+    def _send_problem(self, err: UQueryError, close: bool = False) -> None:
         body = err.to_json()
         self.send_response(err.status)
         self.send_header("Content-Type", PROBLEM_JSON)
         self.send_header("Content-Length", str(len(body)))
+        if close:  # the handler thread may still be unwinding the query
+            self.send_header("Connection", "close")
         self._cors_headers()
         self.end_headers()
         self.wfile.write(body)
@@ -192,55 +188,33 @@ class UQueryHandler(BaseHTTPRequestHandler):
 
     def _run_query(self, sql: str, fmt_key: str, content_type: str) -> None:
         cfg = self.config
+        sink = _ResponseSink(self, content_type, "gzip" in self.headers.get("Accept-Encoding", ""))
+        writer = writer_for_format(fmt_key, sink)
         prepared = cfg.engine.prepare(sql)
-        sink = _QueueSink()
-        notifier = _FirstBatchNotifier(writer_for_format(fmt_key, sink))
-
-        def work() -> None:
-            try:
-                prepared.execute(notifier)
-            except UQueryError as e:
-                notifier.fail(e)
-            except Exception as e:  # noqa: BLE001
-                notifier.fail(UQueryError.internal(str(e)[:300]))
-            finally:
-                sink.close()
-
-        threading.Thread(target=work, daemon=True, name=f"uq-exec-{prepared.job_group}").start()
-
-        if not notifier.ready.wait(cfg.query_timeout):
-            prepared.cancel()  # job-group interrupt replaces Drop-based release
-            raise UQueryError.query_timeout(cfg.query_timeout)
-        if notifier.error is not None:
-            raise notifier.error
-
-        gzip_out = "gzip" in self.headers.get("Accept-Encoding", "")
-        self.send_response(200)
-        self.send_header("Content-Type", content_type)
-        if gzip_out:
-            self.send_header("Content-Encoding", "gzip")
-        self.send_header("Transfer-Encoding", "chunked")
-        self._cors_headers()
-        self.end_headers()
-
-        compressor = zlib.compressobj(wbits=31) if gzip_out else None
+        timer = None
+        if cfg.query_timeout:
+            timer = threading.Timer(cfg.query_timeout, self._time_out, (sink, prepared))
+            timer.start()
         try:
-            while True:
-                chunk = sink.chunks.get()
-                if chunk is _SENTINEL:
-                    break
-                if compressor is not None:
-                    chunk = compressor.compress(chunk)
-                self._write_chunk(chunk)
-            if compressor is not None:
-                self._write_chunk(compressor.flush())
-            self.wfile.write(b"0\r\n\r\n")
-        except (BrokenPipeError, ConnectionResetError):
-            prepared.cancel()  # client went away mid-stream
+            prepared.execute(writer)
+            sink.end()
+        except Exception:
+            if sink.claim():
+                raise  # nothing sent yet: do_POST answers with the problem
+            # mid-stream failure, disconnect, or already answered 408: stop
+            # the jobs and drop the connection without the final chunk
+            prepared.cancel()
+            self.close_connection = True
+        finally:
+            if timer is not None:
+                timer.cancel()
+                timer.join()  # a 408 being sent finishes before the socket closes
 
-    def _write_chunk(self, data: bytes) -> None:
-        if data:
-            self.wfile.write(f"{len(data):x}\r\n".encode() + data + b"\r\n")
+    def _time_out(self, sink: _ResponseSink, prepared) -> None:
+        """Deadline for the first batch (routers.rs:153-164)."""
+        if sink.claim():
+            prepared.cancel()  # job-group interrupt replaces Drop-based release
+            self._send_problem(UQueryError.query_timeout(self.config.query_timeout), close=True)
 
 
 def make_server(host: str, port: int, config: ServiceConfig) -> ThreadingHTTPServer:

@@ -78,7 +78,7 @@ class JsonArrayWriter(RecordBatchConsumer):
         self._first = True
 
     def on_schema(self, schema: pa.Schema) -> None:
-        self._sink.write(b"[")
+        pass  # `[` goes out with the first row, so nothing is written before it
 
     def on_batch(self, batch: pa.RecordBatch) -> None:
         rows = _rows(batch)
@@ -93,13 +93,11 @@ class JsonArrayWriter(RecordBatchConsumer):
     def on_batch_bytes(self, payload: bytes) -> None:
         if not payload:
             return
-        if not self._first:
-            self._sink.write(b",")
+        self._sink.write((b"[" if self._first else b",") + payload)
         self._first = False
-        self._sink.write(payload)
 
     def finish(self) -> None:
-        self._sink.write(b"]")
+        self._sink.write(b"[]" if self._first else b"]")
 
 
 class JsonLinesWriter(RecordBatchConsumer):
@@ -130,36 +128,43 @@ class JsonLinesWriter(RecordBatchConsumer):
 
 class CsvWriter(RecordBatchConsumer):
     """CSV with a single header row (reference golden: src/main.rs:192
-    `Id,Name,Description\\n1,Rust,"Safe, concurrent, ..."\\n`)."""
+    `Id,Name,Description\\n1,Rust,"Safe, concurrent, ..."\\n`).
+
+    One sink write per batch; the header rides on the first one (or on
+    finish for an empty result), so nothing is written before it."""
 
     def __init__(self, sink):
         self._sink = sink
-        self._names: list[str] = []
+        self._header: list[list[str]] = []
 
-    def _write_row(self, values) -> None:
+    def _write_rows(self, rows) -> None:
         buf = io.StringIO()
-        csv.writer(buf, lineterminator="\n").writerow(values)
-        self._sink.write(buf.getvalue().encode())
+        out = csv.writer(buf, lineterminator="\n")
+        out.writerows(self._header)
+        out.writerows(rows)
+        self._header = []
+        text = buf.getvalue()
+        if text:
+            self._sink.write(text.encode())
 
     def on_schema(self, schema: pa.Schema) -> None:
-        self._names = list(schema.names)
-        self._write_row(self._names)
+        self._header = [list(schema.names)]
 
     def on_batch(self, batch: pa.RecordBatch) -> None:
         # POSITIONAL conversion (zip of per-column pylists), never dict
         # rows: duplicate result-column names are legal SQL and a dict
         # would collapse them to the last value (round 11).
         cols = [c.to_pylist() for c in batch.columns]
-        for row in zip(*cols):
-            self._write_row(
-                [
-                    "" if v is None else (v.isoformat() if isinstance(v, (datetime, date)) else v)
-                    for v in row
-                ]
-            )
+        self._write_rows(
+            [
+                "" if v is None else (v.isoformat() if isinstance(v, (datetime, date)) else v)
+                for v in row
+            ]
+            for row in zip(*cols)
+        )
 
     def finish(self) -> None:
-        pass
+        self._write_rows(())
 
 
 class ArrowIpcWriter(RecordBatchConsumer):
