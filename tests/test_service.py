@@ -412,40 +412,77 @@ def test_explain_statement(base_url):
     assert "Physical Plan" in json.loads(body)[0]["plan"]
 
 
-# -- executor-side JSON serialization parity (engine fast path) -------------
+# -- one encode path: execute() bytes vs an independent reference ------------
 
 
-def test_json_fast_path_byte_parity(spark):
-    """engine.execute() serializes JSON rows executor-side (mapInArrow);
-    the bytes must be IDENTICAL to feeding the same Arrow batches through
-    the writer on the driver — across doubles, dates, timestamps, NULLs,
-    unicode and quotes."""
-    import io as _io
+def _reference_bytes(table: pa.Table, fmt: str) -> bytes:
+    """The response body for `table`, built from the collected result with
+    pyarrow's stream writer, csv.writer and _dump_row joins."""
+    import csv
+    from datetime import date, datetime
 
-    from uquery_rs_spark.engine import Engine, _arrow_schema, _stream_arrow_batches
-    from uquery_rs_spark.writers.consumers import JsonArrayWriter, JsonLinesWriter
+    from uquery_rs_spark.writers.consumers import _dump_row
+
+    if fmt == "arrow":
+        sink = pa.BufferOutputStream()
+        with pa.ipc.new_stream(sink, table.schema) as w:
+            for b in table.to_batches(max_chunksize=8192):
+                if b.num_rows:
+                    w.write_batch(b)
+        return sink.getvalue().to_pybytes()
+    if fmt == "csv":
+        buf = io.StringIO()
+        out = csv.writer(buf, lineterminator="\n")
+        out.writerow(table.column_names)
+        cols = [c.to_pylist() for c in table.columns]
+        for row in zip(*cols):
+            out.writerow(
+                "" if v is None else (v.isoformat() if isinstance(v, (datetime, date)) else v)
+                for v in row
+            )
+        return buf.getvalue().encode()
+    rows = [_dump_row(r) for r in table.to_pylist()]
+    if fmt == "jsonl":
+        return b"".join(r + b"\n" for r in rows)
+    return b"[" + b",".join(rows) + b"]"
+
+
+def test_execute_bytes_match_reference_all_formats(spark):
+    """engine.execute() encodes each batch in the executors and the writer
+    only frames the payloads; the bytes must equal a reference built from
+    the collected result — across doubles, dates, timestamps, NULLs,
+    unicode, quotes, several partitions and 8192-row Arrow slices, plus
+    an empty and a duplicate-name result."""
+    from uquery_rs_spark.writers import writer_for_format
 
     eng = Engine(spark, pool_size=2)
-    sql = (
+    cases = [
         "SELECT id, CAST(id AS DOUBLE)/7 AS frac, "
-        "concat('n\"é', CAST(id AS STRING)) AS s, id % 2 = 0 AS b, "
+        "concat('n\"é,', CAST(id AS STRING)) AS s, id % 2 = 0 AS b, "
         "DATE '2024-01-01' + CAST(id % 300 AS INT) AS d, "
         "TIMESTAMP_NTZ '2024-01-01 10:00:00' + make_interval(0,0,0,0,0,0,id % 86400) AS ts, "
         "IF(id % 10 = 0, NULL, id) AS nullable "
-        "FROM range(5000) DISTRIBUTE BY id % 4"
+        "FROM range(40000) DISTRIBUTE BY id % 4",
+        "SELECT 1 AS x WHERE 1 = 0",
+        "SELECT 1 AS x, 2 AS X",
+    ]
+    for sql in cases:
+        table = spark.sql(sql).toArrow()
+        for fmt in ("json", "jsonl", "csv", "arrow"):
+            sink = io.BytesIO()
+            eng.prepare(sql).execute(writer_for_format(fmt, sink))
+            assert sink.getvalue() == _reference_bytes(table, fmt), (sql, fmt)
+
+
+def test_task_failure_detail_names_root_cause(base_url):
+    """An error thrown inside a task reaches the client as its root cause,
+    not as py4j's "An error occurred while calling oNN.getResult." wrapper."""
+    status, _, body = post(
+        base_url, "SELECT CAST(raise_error('boom') AS BIGINT) + id AS v FROM range(0, 10, 1, 2)"
     )
-    for writer_cls in (JsonLinesWriter, JsonArrayWriter):
-        fast_sink = _io.BytesIO()
-        eng.prepare(sql).execute(writer_cls(fast_sink))
-        df = spark.sql(sql)
-        schema = _arrow_schema(df)
-        slow_sink = _io.BytesIO()
-        w = writer_cls(slow_sink)
-        w.on_schema(schema)
-        for b in _stream_arrow_batches(df, schema, 1024):
-            w.on_batch(b)
-        w.finish()
-        assert fast_sink.getvalue() == slow_sink.getvalue()
+    assert status == 400
+    detail = json.loads(body)["detail"]
+    assert "boom" in detail and "getResult" not in detail
 
 
 def test_interval_results_render_duckdb_text(base_url):

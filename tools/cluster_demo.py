@@ -32,7 +32,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # Round 8 (verdict item 3): the full perf-weak nine.
 QUERY_SET = [

@@ -12,7 +12,7 @@ dimensions in TPC-H proper too).
 Content tweaks that keep operator behavior realistic at scale:
 - documents: per-copy token prefix (``c{i} ``) so planted near-dup
   structure replicates per copy without creating k-squared cross-copy
-  duplicate pairs (same technique as tools/scale_probe.py).
+  duplicate pairs.
 - embeddings: per-copy deterministic sign-flip pattern over vector
   components.  Flipping ~half the signs decorrelates copies (cross-copy
   cosine ~ 0) while preserving norms and all intra-copy geometry, so

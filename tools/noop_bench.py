@@ -15,7 +15,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from uquery_rs_spark import queries as Q
 from uquery_rs_spark.session import get_spark

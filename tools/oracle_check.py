@@ -6,9 +6,11 @@ Usage:  python tools/oracle_check.py [sf_dir] [name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from uquery_rs_spark import queries as Q
 from uquery_rs_spark.oracle import compare_query, oracle_connection

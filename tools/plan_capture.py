@@ -9,7 +9,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from uquery_rs_spark import queries as Q
 from uquery_rs_spark.session import get_spark
@@ -22,7 +23,7 @@ def main() -> None:
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     names = sys.argv[3:] or [n for n, q in Q.REGISTRY.items() if q.bench]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    outdir = f"/root/repo/plans/{tag}"
+    outdir = os.path.join(ROOT, "plans", tag)
     os.makedirs(outdir, exist_ok=True)
     spark = get_spark("plan-capture")
     for name in names:

@@ -13,13 +13,15 @@ bounding concurrent queries on one session (FAIR scheduler), and `Drop`-
 based connection release becomes a context-managed permit.
 
 Streaming: the reference pulls Arrow batches one at a time with bounded
-memory (duckdb.rs:91-93). Here execute() keeps the data columnar end to
-end: mapInArrow IPC-serializes each executor-side Arrow batch into one
-binary-column row, and toLocalIterator(prefetchPartitions=True) pulls
-those rows incrementally — the driver holds one partition's serialized
-batches at a time and never materializes Python row objects. Cancellation:
-every execution runs in a job group so a timeout or client disconnect can
-cancelJobGroup mid-scan.
+memory (duckdb.rs:91-93) and hands each to the consumer, which encodes it.
+Here the batches live in the executors, so the consumer's encoder goes to
+them: execute() runs one mapInArrow that conforms each executor-side Arrow
+batch to the announced schema and encodes it into one binary cell of
+response bytes, and toLocalIterator(prefetchPartitions=True) pulls those
+cells in partition order — the driver holds one partition's payloads at a
+time, never decodes a batch, and only forwards bytes to the consumer.
+Cancellation: every execution runs in a job group so a timeout or client
+disconnect can cancelJobGroup mid-scan.
 """
 
 from __future__ import annotations
@@ -27,32 +29,49 @@ from __future__ import annotations
 import threading
 import uuid
 from abc import ABC, abstractmethod
+from collections.abc import Callable
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, types
 
 from .errors import UQueryError
 
-DEFAULT_BATCH_ROWS = 8192
-# below this known result bound, JSON serialization stays on the driver
-# (the executor offload's extra stage costs more than it saves)
-_EXEC_JSON_MIN_ROWS = 50000
 
-
-def _first_line(e: Exception) -> str:
-    lines = [ln for ln in str(e).splitlines() if ln.strip()]
+def _first_line(e: BaseException) -> str:
+    """The first line of the root cause: a task failure reaches the driver
+    as py4j's "An error occurred while calling oNN.getResult." wrapper, so
+    walk to the deepest Java cause and report its message."""
+    while e.__cause__ is not None:
+        e = e.__cause__
+    jexc = getattr(e, "java_exception", None)
+    if jexc is None:
+        text = str(e)
+    else:
+        while jexc.getCause() is not None:
+            jexc = jexc.getCause()
+        text = jexc.getMessage() or jexc.toString()
+    lines = [ln for ln in text.splitlines() if ln.strip()]
     return (lines[0] if lines else repr(e))[:500]
 
 
 class RecordBatchConsumer(ABC):
     """Sink interface — schema once, then batches, then finish
-    (reference: src/core/engine.rs:4-8)."""
+    (reference: src/core/engine.rs:4-8).
+
+    Departs from the reference trait in one place: the batches never reach
+    the driver, so instead of `on_batch(RecordBatch)` the consumer supplies
+    a picklable encoder (`batch_bytes_serializer`) that runs where each
+    batch is, and receives the encoded bytes in `on_batch_bytes`."""
 
     @abstractmethod
     def on_schema(self, schema: pa.Schema) -> None: ...
 
     @abstractmethod
-    def on_batch(self, batch: pa.RecordBatch) -> None: ...
+    def batch_bytes_serializer(self, schema: pa.Schema) -> Callable[[pa.RecordBatch], bytes]:
+        """A picklable function that encodes one batch of `schema`."""
+
+    @abstractmethod
+    def on_batch_bytes(self, payload: bytes) -> None: ...
 
     @abstractmethod
     def finish(self) -> None: ...
@@ -64,45 +83,29 @@ def _arrow_schema(df: DataFrame) -> pa.Schema:
     return to_arrow_schema(df.schema)
 
 
-def _ipc_serialize(iterator):
-    """Executor-side: wrap each Arrow batch as one IPC-stream blob.
+def _encode_batches(schema: pa.Schema, encode: Callable[[pa.RecordBatch], bytes]):
+    """mapInArrow function: conform each non-empty executor-side batch to
+    the announced schema, then encode it as one `payload: binary` cell.
 
-    Runs inside mapInArrow, so the JVM→Python hop is a vectorized Arrow
-    transfer (no per-row pickling); serialization is a memcpy-sized IPC
-    write. Each output row is a single `ipc: binary` cell holding one
-    whole input batch (sized by spark.sql.execution.arrow.maxRecordsPerBatch).
-    """
-    for batch in iterator:
-        sink = pa.BufferOutputStream()
-        with pa.ipc.new_stream(sink, batch.schema) as writer:
-            writer.write_batch(batch)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([sink.getvalue().to_pybytes()], type=pa.binary())], names=["ipc"]
-        )
+    Duplicate-name results travel under unique temp names (execute()
+    renames them for mapInArrow) and get the real names back here; Spark's
+    worker-side Arrow schema can differ in timestamp tz / nullability
+    metadata, hence the cast. mapInArrow is a per-partition map, so
+    partition order and any ORDER BY range-partitioned sort survive."""
 
+    def fn(iterator):
+        for batch in iterator:
+            if batch.num_rows == 0:
+                continue
+            if batch.schema.names != schema.names:
+                batch = batch.rename_columns(schema.names)
+            if batch.schema != schema:
+                batch = batch.cast(schema)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([encode(batch)], type=pa.binary())], names=["payload"]
+            )
 
-def _stream_arrow_batches(df: DataFrame, schema: pa.Schema, batch_rows: int):
-    """Yield the query result as Arrow RecordBatches with bounded driver
-    memory: one serialized batch in flight at a time, re-sliced to
-    `batch_rows`, cast to the announced schema (Spark's worker-side Arrow
-    schema can differ in timestamp tz / nullability metadata).
-
-    mapInArrow is a per-partition map, so partition order and any ORDER BY
-    range-partitioned sort survive; toLocalIterator walks partitions in
-    order without collecting the whole result.
-    """
-    ser = df.mapInArrow(_ipc_serialize, "ipc binary")
-    for row in ser.toLocalIterator(prefetchPartitions=True):
-        with pa.ipc.open_stream(row.ipc) as reader:
-            for batch in reader:
-                if batch.schema.names != schema.names:
-                    # duplicate-name results travel under unique temp
-                    # names (execute() renames them for mapInArrow)
-                    batch = batch.rename_columns(schema.names)
-                if batch.schema != schema:
-                    batch = batch.cast(schema)
-                for off in range(0, batch.num_rows, batch_rows):
-                    yield batch.slice(off, batch_rows)
+    return fn
 
 
 class PreparedQuery:
@@ -172,8 +175,9 @@ class PreparedQuery:
             df = df.select(cols).toDF(*orig)
         return df
 
-    def execute(self, consumer: RecordBatchConsumer, batch_rows: int = DEFAULT_BATCH_ROWS) -> None:
-        """Run the query, pushing schema + Arrow batches into `consumer`.
+    def execute(self, consumer: RecordBatchConsumer) -> None:
+        """Run the query, pushing the schema and then each batch's encoded
+        bytes into `consumer`.
 
         Raises UQueryError(400 "SQL Error") on analysis/execution failure —
         the web layer converts errors-before-first-batch into HTTP 400
@@ -189,7 +193,7 @@ class PreparedQuery:
                 # pyspark's OWN mapInArrow, which re-selects every
                 # column by name (map_ops.py: self[col]) — rename to
                 # unique temp names for the executor hop; the announced
-                # schema keeps the real names and every serializer
+                # schema keeps the real names and _encode_batches
                 # renames batches back to it (round-11; broader than
                 # the interval-only case the r10 ADVICE flagged).
                 # casefolded: Spark's default resolution is
@@ -202,37 +206,14 @@ class PreparedQuery:
             except Exception as e:  # AnalysisException etc.
                 raise UQueryError.sql_error(_first_line(e)) from e
             consumer.on_schema(schema)
-            # serialized fast path: a consumer that can accept pre-encoded
-            # row bytes (the JSON writers) supplies a mapInArrow factory —
-            # the Arrow→Python conversion + serialization then runs in the
-            # EXECUTORS, parallel across partitions, instead of single-
-            # threaded on the driver. Byte output is identical.
-            ser_factory = getattr(consumer, "batch_bytes_serializer", None)
-            ser_fn = ser_factory(schema) if ser_factory is not None else None
-            # payload-aware engage (round-7 measurement: at a 5000-row
-            # export the extra mapInArrow stage costs 5-12% wall under
-            # 8-client load — the offload only pays when driver-side
-            # encode dominates stage launch). maxRows is defined for
-            # LIMIT-bounded plans; unbounded scans (the big exports the
-            # offload exists for) stay on the executor path.
-            if ser_fn is not None:
-                try:
-                    mr = df._jdf.queryExecution().optimizedPlan().maxRows()
-                    if mr.isDefined() and int(str(mr.get())) < _EXEC_JSON_MIN_ROWS:
-                        ser_fn = None
-                except Exception:
-                    pass
+            encode = _encode_batches(schema, consumer.batch_bytes_serializer(schema))
             sc.setJobGroup(self.job_group, f"uquery {self.job_group}", interruptOnCancel=True)
             try:
                 if self._cancelled:  # cancelled during rewrite/analysis
                     raise UQueryError.sql_error("query cancelled")
-                if ser_fn is not None:
-                    ser = df.mapInArrow(ser_fn, "payload binary")
-                    for row in ser.toLocalIterator(prefetchPartitions=True):
-                        consumer.on_batch_bytes(row.payload)
-                else:
-                    for batch in _stream_arrow_batches(df, schema, batch_rows):
-                        consumer.on_batch(batch)
+                encoded = df.mapInArrow(encode, "payload binary")
+                for row in encoded.toLocalIterator(prefetchPartitions=True):
+                    consumer.on_batch_bytes(row.payload)
             except UQueryError:
                 raise
             except Exception as e:

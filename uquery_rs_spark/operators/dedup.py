@@ -327,7 +327,7 @@ def containment_pairs_exact(
     consumers can see WHICH regime flagged the pair. Columns: x, y,
     inter, nx, ny, containment, jaccard.
 
-    Scale note (measured, tools/scale_probe.py --round4: e = 1.32 at 8x):
+    Scale note (measured 1x vs 8x sf0.1 docs, round 4: e = 1.32 at 8x):
     like jaccard_pairs_exact this is the EXACT baseline, O(sum df²) in
     posting frequencies, superlinear by construction. MinHash-LSH is NOT
     the scale fix here — its candidates recall high-Jaccard pairs, and
@@ -385,8 +385,8 @@ def dedup_funnel(
     breaks bucket joins is gone by construction) and counts
     non-canonical members of the connected components. Output is 4 rows
     assembled from two 1-row aggregate frames — nothing corpus-sized
-    leaves the executors. Measured scaling (tools/scale_probe pattern,
-    1x vs 8x sf0.1 docs): e = 0.70 with the LSH tier (29 s at 8x) — the
+    leaves the executors. Measured scaling (1x vs 8x sf0.1 docs, see
+    NOTES.md): e = 0.70 with the LSH tier (29 s at 8x) — the
     exact-kernel variant measured e = 1.26 (104 s at 8x), which is why
     the funnel ships on LSH despite its higher 1x constant.
     """

@@ -27,17 +27,13 @@ MAX_BODY_BYTES = 256 * 1024  # request.rs:41
 
 
 class _ResponseSink:
-    """The response body as a file object for the format writers.
+    """The response body as a byte sink for the format writers.
 
     The first write commits the response: it sends the 200 chunked
     headers, then every write goes to the socket as one chunk. Until then
     the deadline timer may claim the response for a 408 instead; a write
-    after that raises, which unwinds execute(). Implements the minimal
-    file-object protocol pyarrow's IPC writer probes (`closed`, `flush`,
-    `writable`).
+    after that raises, which unwinds execute().
     """
-
-    closed = False
 
     def __init__(self, handler: "UQueryHandler", content_type: str, gzip_out: bool) -> None:
         self._handler = handler
@@ -84,15 +80,6 @@ class _ResponseSink:
         if self._compressor is not None:
             self._write_chunk(self._compressor.flush())
         self._handler.wfile.write(b"0\r\n\r\n")
-
-    def flush(self) -> None:
-        pass
-
-    def writable(self) -> bool:
-        return True
-
-    def seekable(self) -> bool:
-        return False
 
 
 class ServiceConfig:

@@ -1,4 +1,10 @@
-"""RecordBatchConsumer implementations for the four response formats."""
+"""RecordBatchConsumer implementations for the four response formats.
+
+Each writer pairs an encoder (module-level, picklable: one Arrow batch →
+bytes, run in the executors by engine.execute) with driver-side framing
+that only adds what sits between and around the payloads: the JSON
+array's brackets and commas, the CSV header, the Arrow schema message and
+end-of-stream marker."""
 
 from __future__ import annotations
 
@@ -37,36 +43,46 @@ def _dump_row(row: dict) -> bytes:
     return json.dumps(row, separators=(",", ":"), default=_json_default).encode()
 
 
-def _rows(batch: pa.RecordBatch) -> list[dict]:
-    return batch.to_pylist()
+def _json_encoder(sep: bytes):
+    """One batch → its rows as `sep`-joined compact JSON objects."""
+
+    def encode(batch: pa.RecordBatch) -> bytes:
+        return sep.join(map(_dump_row, batch.to_pylist()))
+
+    return encode
 
 
-def _json_payload_fn(schema: pa.Schema, sep: bytes):
-    """mapInArrow factory: serialize each executor-side Arrow batch to
-    `sep`-joined orjson rows as ONE binary cell. The JSON bytes are
-    IDENTICAL to the driver-side writers (same _dump_row), but the
-    Arrow→Python conversion + serialization — the measured bottleneck,
-    ~12 MB/s single-threaded — runs in the executors, parallel across
-    partitions and free of the driver's GIL. The batch is cast to the
-    ANNOUNCED schema first, like the driver path, so timestamp tz
-    metadata differences can't leak into the text."""
+def _csv_text(rows) -> bytes:
+    buf = io.StringIO()
+    csv.writer(buf, lineterminator="\n").writerows(rows)
+    return buf.getvalue().encode()
 
-    def fn(iterator):
-        for batch in iterator:
-            if batch.num_rows == 0:
-                continue
-            if batch.schema.names != schema.names:
-                # duplicate-name results travel under unique temp names
-                # (engine.execute() renames them for mapInArrow)
-                batch = batch.rename_columns(schema.names)
-            if batch.schema != schema:
-                batch = batch.cast(schema)
-            payload = sep.join(map(_dump_row, batch.to_pylist()))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([payload], type=pa.binary())], names=["payload"]
-            )
 
-    return fn
+def _csv_rows(batch: pa.RecordBatch) -> bytes:
+    # POSITIONAL conversion (zip of per-column pylists), never dict
+    # rows: duplicate result-column names are legal SQL and a dict
+    # would collapse them to the last value (round 11).
+    cols = [c.to_pylist() for c in batch.columns]
+    return _csv_text(
+        [
+            "" if v is None else (v.isoformat() if isinstance(v, (datetime, date)) else v)
+            for v in row
+        ]
+        for row in zip(*cols)
+    )
+
+
+# IPC record batches carry at most this many rows each
+_ARROW_BATCH_ROWS = 8192
+_ARROW_EOS = b"\xff\xff\xff\xff\x00\x00\x00\x00"
+
+
+def _arrow_messages(batch: pa.RecordBatch) -> bytes:
+    """One batch → the IPC stream messages of its _ARROW_BATCH_ROWS slices."""
+    return b"".join(
+        batch.slice(off, _ARROW_BATCH_ROWS).serialize()
+        for off in range(0, batch.num_rows, _ARROW_BATCH_ROWS)
+    )
 
 
 class JsonArrayWriter(RecordBatchConsumer):
@@ -80,19 +96,10 @@ class JsonArrayWriter(RecordBatchConsumer):
     def on_schema(self, schema: pa.Schema) -> None:
         pass  # `[` goes out with the first row, so nothing is written before it
 
-    def on_batch(self, batch: pa.RecordBatch) -> None:
-        rows = _rows(batch)
-        if not rows:
-            return
-        self.on_batch_bytes(b",".join(map(_dump_row, rows)))
-
     def batch_bytes_serializer(self, schema: pa.Schema):
-        """Engine fast path: rows serialized executor-side (same bytes)."""
-        return _json_payload_fn(schema, b",")
+        return _json_encoder(b",")
 
     def on_batch_bytes(self, payload: bytes) -> None:
-        if not payload:
-            return
         self._sink.write((b"[" if self._first else b",") + payload)
         self._first = False
 
@@ -109,18 +116,11 @@ class JsonLinesWriter(RecordBatchConsumer):
     def on_schema(self, schema: pa.Schema) -> None:
         pass
 
-    def on_batch(self, batch: pa.RecordBatch) -> None:
-        rows = _rows(batch)
-        if rows:
-            self.on_batch_bytes(b"\n".join(map(_dump_row, rows)))
-
     def batch_bytes_serializer(self, schema: pa.Schema):
-        """Engine fast path: rows serialized executor-side (same bytes)."""
-        return _json_payload_fn(schema, b"\n")
+        return _json_encoder(b"\n")
 
     def on_batch_bytes(self, payload: bytes) -> None:
-        if payload:
-            self._sink.write(payload + b"\n")
+        self._sink.write(payload + b"\n")
 
     def finish(self) -> None:
         pass
@@ -135,57 +135,46 @@ class CsvWriter(RecordBatchConsumer):
 
     def __init__(self, sink):
         self._sink = sink
-        self._header: list[list[str]] = []
-
-    def _write_rows(self, rows) -> None:
-        buf = io.StringIO()
-        out = csv.writer(buf, lineterminator="\n")
-        out.writerows(self._header)
-        out.writerows(rows)
-        self._header = []
-        text = buf.getvalue()
-        if text:
-            self._sink.write(text.encode())
+        self._header = b""
 
     def on_schema(self, schema: pa.Schema) -> None:
-        self._header = [list(schema.names)]
+        self._header = _csv_text([schema.names])
 
-    def on_batch(self, batch: pa.RecordBatch) -> None:
-        # POSITIONAL conversion (zip of per-column pylists), never dict
-        # rows: duplicate result-column names are legal SQL and a dict
-        # would collapse them to the last value (round 11).
-        cols = [c.to_pylist() for c in batch.columns]
-        self._write_rows(
-            [
-                "" if v is None else (v.isoformat() if isinstance(v, (datetime, date)) else v)
-                for v in row
-            ]
-            for row in zip(*cols)
-        )
+    def batch_bytes_serializer(self, schema: pa.Schema):
+        return _csv_rows
+
+    def on_batch_bytes(self, payload: bytes) -> None:
+        self._sink.write(self._header + payload)
+        self._header = b""
 
     def finish(self) -> None:
-        self._write_rows(())
+        if self._header:
+            self._sink.write(self._header)
 
 
 class ArrowIpcWriter(RecordBatchConsumer):
-    """Arrow IPC stream — schema header lazily on first use, then raw
-    batches; byte-compatible with any IPC reader (reference
-    src/web/consumers.rs:47-75, cross-library test src/main.rs:196-213)."""
+    """Arrow IPC stream — the schema message rides on the first payload
+    (or on finish for an empty result), then the record batch messages,
+    then the end-of-stream marker; byte-compatible with any IPC reader
+    (reference src/web/consumers.rs:47-75, cross-library test
+    src/main.rs:196-213)."""
 
     def __init__(self, sink):
         self._sink = sink
-        self._writer: pa.ipc.RecordBatchStreamWriter | None = None
+        self._header = b""
 
     def on_schema(self, schema: pa.Schema) -> None:
-        self._writer = pa.ipc.new_stream(self._sink, schema)
+        self._header = schema.serialize().to_pybytes()
 
-    def on_batch(self, batch: pa.RecordBatch) -> None:
-        assert self._writer is not None, "on_schema must precede on_batch"
-        self._writer.write_batch(batch)
+    def batch_bytes_serializer(self, schema: pa.Schema):
+        return _arrow_messages
+
+    def on_batch_bytes(self, payload: bytes) -> None:
+        self._sink.write(self._header + payload)
+        self._header = b""
 
     def finish(self) -> None:
-        if self._writer is not None:
-            self._writer.close()
+        self._sink.write(self._header + _ARROW_EOS)
 
 
 def writer_for_format(fmt: str, sink) -> RecordBatchConsumer:
