@@ -798,13 +798,22 @@ class TestContaminationAndSplit:
 
     def test_repetition_flags_loops(self, spark):
         docs = spark.createDataFrame(
-            [(1, "spam ham " * 20), (2, " ".join(f"w{i}" for i in range(40)))],
+            [
+                (1, "spam ham " * 20),
+                (2, " ".join(f"w{i}" for i in range(40))),
+                # no bigrams: empty, one-token and NULL docs drop out
+                # (0/0 must not raise DIVIDE_BY_ZERO under ANSI)
+                (3, ""),
+                (4, "solo"),
+                (5, None),
+            ],
             "doc_id long, text string",
         )
         docs = docs.select("doc_id", F.trim("text").alias("text"))
         out = {r.doc_id: r.top_bigram_frac for r in TX.repetition_stats(docs).collect()}
         assert 1 in out and out[1] > 0.4  # "spam ham" dominates
         assert 2 not in out  # all-distinct bigrams stay below threshold
+        assert not {3, 4, 5} & set(out)
 
 
 class TestPersistentIvf:

@@ -6,18 +6,11 @@ from __future__ import annotations
 import pytest
 
 from uquery_rs_spark import queries as Q
-from uquery_rs_spark.oracle import compare_query, oracle_connection
+from uquery_rs_spark.oracle import compare_query
 
 from .conftest import SF_SMALL
 
 Q.load_all()
-
-
-@pytest.fixture(scope="module")
-def oracle_con():
-    con = oracle_connection(SF_SMALL)
-    yield con
-    con.close()
 
 
 @pytest.mark.parametrize("name", sorted(Q.REGISTRY))

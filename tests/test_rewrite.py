@@ -1427,6 +1427,28 @@ def test_gap_hunt_batch17(spark, rw):
         assert got == want, f"{sql}: {got!r} != {want!r}"
 
 
+def test_sign_returns_tinyint_like_duckdb(spark, rw):
+    """DuckDB's sign() is TINYINT for every numeric input (DOUBLE,
+    INTEGER, DECIMAL, BIGINT); Spark's is DOUBLE. A column or alias
+    named ``sign`` is not a call and stays as written."""
+    import duckdb
+
+    sql = (
+        "SELECT sign(x - 2.5) AS a, sign(CAST(i AS INTEGER)) AS b, "
+        "sign(CAST(x AS DECIMAL(9, 2))) AS c, sign(-i) AS d, "
+        "sign(sign(x) - 2) AS e, i AS sign "
+        "FROM (SELECT 1.5 AS x, CAST(3 AS BIGINT) AS i) t ORDER BY sign"
+    )
+    out = rw.rewrite(sql)
+    assert out.count("AS TINYINT") == 6, out
+    assert "i AS sign FROM (SELECT 1.5 AS x, CAST(3 AS BIGINT) AS i) t ORDER BY sign" in out
+    df = spark.sql(out)
+    assert {f.dataType.simpleString() for f in df.schema.fields[:5]} == {"tinyint"}
+    want = duckdb.sql(sql).fetchall()
+    assert [tuple(r) for r in df.collect()] == want
+    assert {str(t) for t in duckdb.sql(sql).types[:5]} == {"TINYINT"}
+
+
 def test_read_text_blob_tvfs(spark, tmp_path):
     """read_text / read_blob TVFs (DuckDB schema: filename, content,
     size, last_modified) via Spark's binaryFile source — distributed

@@ -378,7 +378,8 @@ def repetition_stats(
             ),
         )
 
-    frac = F.col("s.top_c") / F.col("s.total")
+    # NULL (not 0/0) for docs without a bigram, so they drop out
+    frac = F.try_divide(F.col("s.top_c"), F.col("s.total"))
     return (
         with_tokens(docs, text_col)
         .select("doc_id", stats(F.col(TOKS)).alias("s"))

@@ -6,7 +6,7 @@ loads them all; ``__spark_entry__`` then exports the registry to the driver.
 
 from __future__ import annotations
 
-from .registry import REGISTRY, Query, register, load_tables  # noqa: F401
+from .registry import REGISTRY, Query, gateway_sql, load_tables, register, register_sql  # noqa: F401
 
 
 # Round-13 verification window (harnesses sample REGISTRY[:50]).

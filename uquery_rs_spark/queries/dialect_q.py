@@ -2,11 +2,20 @@
 USING/NATURAL join, positional join, bag set ops (SURVEY.md §2.B.2-§2.B.6).
 
 These are DuckDB-dialect forms the reference admits wholesale through its
-pass-through (reference: src/core/duckdb.rs:87-88). Each is re-expressed
-Spark-first: native Spark SQL where the dialect overlaps (recursive CTE,
-grouping sets, USING, INTERSECT/EXCEPT ALL), the pre-Catalyst rewriter
-where it doesn't (QUALIFY), and a row_number zip where Spark lacks the
-operator entirely (DuckDB POSITIONAL JOIN).
+pass-through (reference: src/core/duckdb.rs:87-88). Most entries are SQL
+text (registry.register_sql): the DuckDB text runs through the gateway
+rewriter exactly as a client's query would, which passes the forms
+Spark shares (recursive CTE, grouping sets, USING) through and
+translates the rest (QUALIFY, DISTINCT ON, batteries of DuckDB
+functions). An entry's ``sql=`` is the gateway text when it differs
+from the oracle: the batteries' oracles restate the same values
+version-portably (see the _B32_ORACLE_SQL and _B40S_* notes), so the
+DuckDB idiom stays in the served text.
+
+The rest are code: a row_number zip where Spark lacks the operator
+entirely (DuckDB POSITIONAL JOIN), DataFrame forms (INTERSECT/EXCEPT
+ALL, salted and planned joins), and the multi-statement prepared
+statement lifecycle.
 """
 
 from __future__ import annotations
@@ -14,25 +23,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..rewrite import SqlRewriter
-from .registry import load_tables, register
-
-_REWRITERS: dict[int, SqlRewriter] = {}
+from .registry import gateway_sql, load_tables, register, register_sql
 
 
-def _rewritten_sql(spark: SparkSession, sql: str) -> DataFrame:
-    """Run gateway-dialect SQL through the pre-Catalyst rewriter — the same
-    path an HTTP client's query takes (proves dialect translation, not just
-    hand-ported Spark SQL)."""
-    rw = _REWRITERS.setdefault(id(spark), SqlRewriter(spark))
-    return spark.sql(rw.rewrite(sql))
-
-
-@register(
+register_sql(
     "len_slice_map_edge_battery",
     tags=("dialect", "battery"),
-    doc="Round-3 dialect edges: polymorphic len(), negative slice ends, "
-    "subscripted non-literal-key MAP literals, * REPLACE over them.",
+    doc="""Round-3 dialect edges: polymorphic len(), negative slice ends,
+    subscripted non-literal-key MAP literals, * REPLACE over them.
+    Through the rewriter (NOTES §1 round-3 closures): len() resolves per
+    argument type via a LIMIT-0 probe; slice bounds accept negative ends
+    (count from the last element) and clamp inverted ranges to []; MAP
+    literals with computed keys admit subscripts of any key type and
+    return DuckDB's single-element list (so the [2][1] unwrap chain is
+    the IDENTICAL SQL on both engines); * REPLACE swaps an expression
+    over the probed column list.""",
     oracle="""
 SELECT doc_id,
        len(text)                                        AS text_chars,
@@ -46,19 +51,7 @@ FROM documents
 WHERE doc_id <= 200
 ORDER BY doc_id
 """,
-)
-def len_slice_map_edge_battery(spark: SparkSession, sf: str) -> DataFrame:
-    """Dialect edges through the rewriter (NOTES §1 round-3 closures):
-    len() resolves per argument type via a LIMIT-0 probe; slice bounds
-    accept negative ends (count from the last element) and clamp inverted
-    ranges to []; MAP literals with computed keys admit subscripts of any
-    key type and return DuckDB's single-element list (so the [2][1]
-    unwrap chain is the IDENTICAL SQL on both engines); * REPLACE swaps
-    an expression over the probed column list."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        """
+    sql="""
 SELECT * REPLACE (round(hecto_chars, 1) AS hecto_chars)
 FROM (
   SELECT doc_id,
@@ -74,12 +67,15 @@ FROM (
 )
 ORDER BY doc_id
 """,
-    )
+)
 
 
-@register(
+register_sql(
     "qualify_top_orders_per_cust",
     tags=("window", "qualify", "dialect"),
+    doc="""DuckDB QUALIFY through the SqlRewriter (Spark has no QUALIFY: it
+    becomes a filtered subquery; reference admits it via the dialect
+    pass-through). Top-2 orders per customer by price.""",
     oracle="""
 SELECT o_custkey, o_orderkey, o_totalprice
 FROM orders
@@ -87,46 +83,20 @@ QUALIFY row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_
 ORDER BY o_custkey, o_orderkey
 """,
 )
-def qualify_top_orders_per_cust(spark: SparkSession, sf: str) -> DataFrame:
-    """DuckDB QUALIFY through the SqlRewriter (Spark has no QUALIFY: it
-    becomes a filtered subquery; reference admits it via the dialect
-    pass-through). Top-2 orders per customer by price."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        """
-SELECT o_custkey, o_orderkey, o_totalprice
-FROM orders
-QUALIFY row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) <= 2
-ORDER BY o_custkey, o_orderkey
-""",
-    )
 
 
-@register(
+register_sql(
     "lateral_top_order_per_customer",
     tags=("join", "lateral", "dialect"),
-    oracle="""
-SELECT c_custkey, l.o_orderkey, l.o_totalprice
-FROM customer c, LATERAL (
-  SELECT o_orderkey, o_totalprice FROM orders o
-  WHERE o.o_custkey = c.c_custkey
-  ORDER BY o_totalprice DESC, o_orderkey LIMIT 1
-) l
-ORDER BY c_custkey
-""",
-)
-def lateral_top_order_per_customer(spark: SparkSession, sf: str) -> DataFrame:
-    """Correlated LATERAL subquery (top-1 order per customer) — native
-    Spark SQL lateral; Catalyst decorrelates it into a window plan rather
-    than executing per-row.
+    doc="""Correlated LATERAL subquery (top-1 order per customer). The
+    rewriter passes the LATERAL through (it only spells out DuckDB's
+    NULLS LAST ordering default); Catalyst decorrelates it into a window
+    plan rather than executing per-row.
 
     Scale: post-decorrelation this is one shuffle on o_custkey — no
     nested-loop re-execution per customer row.
-    """
-    load_tables(spark, sf)
-    return spark.sql(
-        """
+    """,
+    oracle="""
 SELECT c_custkey, l.o_orderkey, l.o_totalprice
 FROM customer c, LATERAL (
   SELECT o_orderkey, o_totalprice FROM orders o
@@ -134,13 +104,17 @@ FROM customer c, LATERAL (
   ORDER BY o_totalprice DESC, o_orderkey LIMIT 1
 ) l
 ORDER BY c_custkey
-"""
-    )
+""",
+)
 
 
-@register(
+register_sql(
     "grouping_sets_revenue",
     tags=("agg", "grouping-sets", "dialect"),
+    doc="""Explicit GROUPING SETS with grouping() indicators, passed through
+    the rewriter unchanged apart from the NULLS LAST ordering default —
+    one shuffle produces all three aggregation granularities (Spark
+    expands sets map-side, same as DuckDB).""",
     oracle="""
 SELECT l_returnflag, l_linestatus,
        grouping(l_returnflag)  AS g_rf,
@@ -152,28 +126,15 @@ GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
 ORDER BY g_rf, g_ls, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
 """,
 )
-def grouping_sets_revenue(spark: SparkSession, sf: str) -> DataFrame:
-    """Explicit GROUPING SETS with grouping() indicators — one shuffle
-    produces all three aggregation granularities (Spark expands sets
-    map-side, same as DuckDB)."""
-    load_tables(spark, sf)
-    return spark.sql(
-        """
-SELECT l_returnflag, l_linestatus,
-       grouping(l_returnflag)  AS g_rf,
-       grouping(l_linestatus)  AS g_ls,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-       count(*) AS n_items
-FROM lineitem
-GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-ORDER BY g_rf, g_ls, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
-"""
-    )
 
 
-@register(
+register_sql(
     "recursive_cte_monthly_orders",
     tags=("cte", "recursive", "dialect"),
+    doc="""WITH RECURSIVE month generator left-joined to orders. The
+    rewriter passes the UNION ALL recursion through; Spark 4 runs it
+    natively (UnionLoop iterates on the driver plan; the per-iteration
+    work is distributed).""",
     oracle="""
 WITH RECURSIVE m(n) AS (SELECT 1 UNION ALL SELECT n + 1 FROM m WHERE n < 12)
 SELECT n AS mon, count(o_orderkey) AS n_orders
@@ -182,25 +143,14 @@ GROUP BY n
 ORDER BY n
 """,
 )
-def recursive_cte_monthly_orders(spark: SparkSession, sf: str) -> DataFrame:
-    """WITH RECURSIVE month generator left-joined to orders — native in
-    Spark 4 (UnionLoop iterates on the driver plan; the per-iteration work
-    is distributed)."""
-    load_tables(spark, sf)
-    return spark.sql(
-        """
-WITH RECURSIVE m(n) AS (SELECT 1 UNION ALL SELECT n + 1 FROM m WHERE n < 12)
-SELECT n AS mon, count(o_orderkey) AS n_orders
-FROM m LEFT JOIN orders ON month(o_orderdate) = n
-GROUP BY n
-ORDER BY n
-"""
-    )
 
 
-@register(
+register_sql(
     "using_join_nation_region",
     tags=("join", "using", "dialect"),
+    doc="""JOIN ... USING (col) — the shared column is emitted once; Spark and
+    DuckDB agree on USING semantics (coalesced key, no duplicate column),
+    so the rewriter passes the join through.""",
     oracle="""
 SELECT n_name, r_name
 FROM (SELECT n_name, n_regionkey AS regionkey FROM nation)
@@ -208,18 +158,6 @@ JOIN (SELECT r_regionkey AS regionkey, r_name FROM region) USING (regionkey)
 ORDER BY n_name
 """,
 )
-def using_join_nation_region(spark: SparkSession, sf: str) -> DataFrame:
-    """JOIN ... USING (col) — the shared column is emitted once; Spark and
-    DuckDB agree on USING semantics (coalesced key, no duplicate column)."""
-    load_tables(spark, sf)
-    return spark.sql(
-        """
-SELECT n_name, r_name
-FROM (SELECT n_name, n_regionkey AS regionkey FROM nation)
-JOIN (SELECT r_regionkey AS regionkey, r_name FROM region) USING (regionkey)
-ORDER BY n_name
-"""
-    )
 
 
 @register(
@@ -347,48 +285,33 @@ def salted_join_order_counts(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "distinct_on_latest_order",
     tags=("dialect", "distinct-on"),
+    doc="""DuckDB/Postgres DISTINCT ON → row_number window via the rewriter
+    (rewrite.py::_rewrite_distinct_on); the oracle runs the identical SQL.
+    Deterministic because the ORDER BY is a total order per key.""",
     oracle="""
 SELECT DISTINCT ON (o_custkey) o_custkey, o_orderkey, o_orderdate
 FROM orders WHERE o_custkey <= 300
 ORDER BY o_custkey, o_orderdate DESC, o_orderkey
 """,
 )
-def distinct_on_latest_order(spark: SparkSession, sf: str) -> DataFrame:
-    """DuckDB/Postgres DISTINCT ON → row_number window via the rewriter
-    (rewrite.py::_rewrite_distinct_on); the oracle runs the identical SQL.
-    Deterministic because the ORDER BY is a total order per key."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT DISTINCT ON (o_custkey) o_custkey, o_orderkey, o_orderdate "
-        "FROM orders WHERE o_custkey <= 300 "
-        "ORDER BY o_custkey, o_orderdate DESC, o_orderkey",
-    )
 
 
-@register(
+register_sql(
     "int_div_price_buckets",
     tags=("dialect", "int-div"),
+    doc="""DuckDB `//` (truncating int division) → Spark `div` via the
+    rewriter. floor-then-cast on both sides because bare CAST(double AS
+    BIGINT) ROUNDS in DuckDB but TRUNCATES in Spark — a documented
+    deviation this query deliberately sidesteps.""",
     oracle="""
 SELECT CAST(floor(o_totalprice) AS BIGINT) // 10000 AS bucket,
        count(*) AS n
 FROM orders GROUP BY 1 ORDER BY 1
 """,
 )
-def int_div_price_buckets(spark: SparkSession, sf: str) -> DataFrame:
-    """DuckDB `//` (truncating int division) → Spark `div` via the
-    rewriter. floor-then-cast on both sides because bare CAST(double AS
-    BIGINT) ROUNDS in DuckDB but TRUNCATES in Spark — a documented
-    deviation this query deliberately sidesteps."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT CAST(floor(o_totalprice) AS BIGINT) // 10000 AS bucket, "
-        "count(*) AS n FROM orders GROUP BY 1 ORDER BY 1",
-    )
 
 
 @register(
@@ -489,30 +412,26 @@ def planned_join_segment_revenue(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "sample_rows_count",
     tags=("dialect", "sample"),
+    doc="""DuckDB USING SAMPLE n ROWS → Spark TABLESAMPLE (n ROWS) via the
+    rewriter. The sampled row SET differs between engines (different
+    reservoirs), so the oracle checks the deterministic properties: exact
+    row count and distinctness of the sampled keys.""",
     oracle="""
 SELECT count(*) AS n, count(DISTINCT o_orderkey) AS n_distinct
 FROM (SELECT * FROM orders USING SAMPLE 500 ROWS) t
 """,
 )
-def sample_rows_count(spark: SparkSession, sf: str) -> DataFrame:
-    """DuckDB USING SAMPLE n ROWS → Spark TABLESAMPLE (n ROWS) via the
-    rewriter. The sampled row SET differs between engines (different
-    reservoirs), so the oracle checks the deterministic properties: exact
-    row count and distinctness of the sampled keys."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT count(*) AS n, count(DISTINCT o_orderkey) AS n_distinct "
-        "FROM (SELECT * FROM orders USING SAMPLE 500 ROWS) t",
-    )
 
 
-@register(
+register_sql(
     "select_exclude_group_by_all",
     tags=("dialect", "sugar"),
+    doc="""DuckDB query-sugar trio in one statement: * EXCLUDE (rewritten to
+    Spark's * EXCEPT), GROUP BY ALL and ORDER BY ALL (native in both
+    engines). Same SQL text runs on both sides via the rewriter.""",
     oracle="""
 SELECT * EXCLUDE (o_orderstatus)
 FROM (
@@ -525,18 +444,6 @@ FROM (
 ORDER BY ALL
 """,
 )
-def select_exclude_group_by_all(spark: SparkSession, sf: str) -> DataFrame:
-    """DuckDB query-sugar trio in one statement: * EXCLUDE (rewritten to
-    Spark's * EXCEPT), GROUP BY ALL and ORDER BY ALL (native in both
-    engines). Same SQL text runs on both sides via the rewriter."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT * EXCLUDE (o_orderstatus) FROM ("
-        "SELECT o_orderstatus, o_orderpriority, count(*) AS n, "
-        "round(sum(o_totalprice), 2) AS total "
-        "FROM orders WHERE o_orderstatus = 'F' GROUP BY ALL) ORDER BY ALL",
-    )
 
 
 @register(
@@ -578,9 +485,17 @@ def ignore_nulls_window_battery(spark: SparkSession, sf: str) -> DataFrame:
     ).orderBy("o_orderkey")
 
 
-@register(
+register_sql(
     "bracket_syntax_battery",
     tags=("dialect", "list", "edge"),
+    doc="""DuckDB bracket syntax end-to-end through the rewriter
+    (rewrite.py::_rewrite_bracket_syntax): list literals → array(),
+    1-based indexing → get/element_at, inclusive slicing → slice, list
+    comprehension with IF → transform(filter(...)). Identical SQL text
+    runs verbatim on the DuckDB oracle. Array outputs are serialized via
+    array_to_string (→ array_join) — registry convention: no array-typed
+    result columns (both sublists are non-empty by construction: 30/40
+    always survive the x > 10 filter).""",
     oracle="""
 SELECT p_partkey,
        l[2]                            AS second,
@@ -592,29 +507,20 @@ FROM (SELECT p_partkey, [p_partkey, CAST(p_size AS BIGINT), 30, 40] AS l
 ORDER BY p_partkey
 """,
 )
-def bracket_syntax_battery(spark: SparkSession, sf: str) -> DataFrame:
-    """DuckDB bracket syntax end-to-end through the rewriter
-    (rewrite.py::_rewrite_bracket_syntax): list literals → array(),
-    1-based indexing → get/element_at, inclusive slicing → slice, list
-    comprehension with IF → transform(filter(...)). Identical SQL text
-    runs verbatim on the DuckDB oracle. Array outputs are serialized via
-    array_to_string (→ array_join) — registry convention: no array-typed
-    result columns (both sublists are non-empty by construction: 30/40
-    always survive the x > 10 filter)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT p_partkey, l[2] AS second, l[-1] AS last_elem, "
-        "array_to_string(l[2:3], ',') AS mid, "
-        "array_to_string([x * 2 FOR x IN l IF x > 10], ',') AS big_doubled "
-        "FROM (SELECT p_partkey, [p_partkey, CAST(p_size AS BIGINT), 30, 40] AS l "
-        "FROM part WHERE p_partkey <= 200) ORDER BY p_partkey",
-    )
 
 
-@register(
+register_sql(
     "function_rename_battery",
     tags=("dialect", "functions"),
+    doc="""DuckDB function names through the rename layer
+    (rewrite.py::_rewrite_function_names): list_* → transform/filter/
+    array_*, string_split → split with the literal separator regex-
+    escaped, array_to_string → array_join, regexp_matches → regexp_like
+    (both partial-match), list_position → array_position (both return 0
+    when missing). list_distinct is UNORDERED in DuckDB but order-
+    preserving in Spark — the battery sorts after distinct. List outputs
+    are serialized via array_to_string (registry convention: no
+    array-typed result columns). Identical SQL runs verbatim on DuckDB.""",
     oracle="""
 SELECT p_partkey,
        array_to_string(list_sort(list_distinct(list_transform(string_split(p_name, ' '), w -> upper(w)))), '|') AS words_up,
@@ -627,33 +533,19 @@ FROM part WHERE p_partkey <= 200
 ORDER BY p_partkey
 """,
 )
-def function_rename_battery(spark: SparkSession, sf: str) -> DataFrame:
-    """DuckDB function names through the rename layer
-    (rewrite.py::_rewrite_function_names): list_* → transform/filter/
-    array_*, string_split → split with the literal separator regex-
-    escaped, array_to_string → array_join, regexp_matches → regexp_like
-    (both partial-match), list_position → array_position (both return 0
-    when missing). list_distinct is UNORDERED in DuckDB but order-
-    preserving in Spark — the battery sorts after distinct. List outputs
-    are serialized via array_to_string (registry convention: no
-    array-typed result columns). Identical SQL runs verbatim on DuckDB."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT p_partkey, "
-        "array_to_string(list_sort(list_distinct(list_transform(string_split(p_name, ' '), w -> upper(w)))), '|') AS words_up, "
-        "list_contains(string_split(p_name, ' '), 'red') AS has_red, "
-        "array_to_string(list_sort(string_split(p_name, ' ')), '|') AS sorted_words, "
-        "array_to_string(string_split(p_name, ' '), '_') AS joined, "
-        "list_position(string_split(p_name, ' '), 'widget') AS widget_pos, "
-        "regexp_matches(p_name, 'red|blue') AS colored "
-        "FROM part WHERE p_partkey <= 200 ORDER BY p_partkey",
-    )
 
 
-@register(
+register_sql(
     "series_struct_pack_battery",
     tags=("dialect", "functions", "generator"),
+    doc="""Sequence generation + struct construction through the rewriter:
+    FROM-position generate_series (table function, one row per value) →
+    exploded sequence subquery; scalar generate_series → sequence()
+    (inclusive bounds in both engines); struct_pack(k := v) →
+    named_struct (fields projected scalar — corpus convention keeps
+    whole structs out of result schemas; the sequence column is
+    serialized via array_to_string for the same reason). Identical SQL
+    runs verbatim on DuckDB.""",
     oracle="""
 SELECT n,
        info.sq  AS sq,
@@ -665,28 +557,20 @@ FROM (SELECT g AS n,
 ORDER BY n
 """,
 )
-def series_struct_pack_battery(spark: SparkSession, sf: str) -> DataFrame:
-    """Sequence generation + struct construction through the rewriter:
-    FROM-position generate_series (table function, one row per value) →
-    exploded sequence subquery; scalar generate_series → sequence()
-    (inclusive bounds in both engines); struct_pack(k := v) →
-    named_struct (fields projected scalar — corpus convention keeps
-    whole structs out of result schemas; the sequence column is
-    serialized via array_to_string for the same reason). Identical SQL
-    runs verbatim on DuckDB."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT n, info.sq AS sq, info.lbl AS lbl, "
-        "array_to_string(generate_series(1, n), ',') AS upto "
-        "FROM (SELECT g AS n, struct_pack(sq := g * g, lbl := 'n' || CAST(g AS STRING)) AS info "
-        "FROM (SELECT generate_series AS g FROM generate_series(1, 20))) ORDER BY n",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery",
     tags=("dialect", "functions", "edge"),
+    doc="""Round-5 dialect gap-hunt closures, end-to-end through the
+    rewriter: list_aggregate (sum/avg/count), list_reduce (first-element
+    fold), list_slice (inclusive bounds), scalar range (EXCLUSIVE stop —
+    vs generate_series's inclusive), fmt-brace format() →
+    format_string, 3-arg date_diff with DuckDB's boundary-crossing
+    semantics (month AND day units over a spread of dates), and bare
+    struct literals → named_struct with scalar field projection.
+    Identical SQL runs verbatim on DuckDB; array outputs serialized per
+    registry convention.""",
     oracle="""
 SELECT p_partkey,
        CAST(list_aggregate(l, 'sum') AS BIGINT)   AS l_sum,
@@ -706,38 +590,9 @@ FROM (SELECT p_partkey, p_size,
 ORDER BY p_partkey
 """,
 )
-def dialect_gap_battery(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-5 dialect gap-hunt closures, end-to-end through the
-    rewriter: list_aggregate (sum/avg/count), list_reduce (first-element
-    fold), list_slice (inclusive bounds), scalar range (EXCLUSIVE stop —
-    vs generate_series's inclusive), fmt-brace format() →
-    format_string, 3-arg date_diff with DuckDB's boundary-crossing
-    semantics (month AND day units over a spread of dates), and bare
-    struct literals → named_struct with scalar field projection.
-    Identical SQL runs verbatim on DuckDB; array outputs serialized per
-    registry convention."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT p_partkey, "
-        "CAST(list_aggregate(l, 'sum') AS BIGINT) AS l_sum, "
-        "round(list_aggregate(l, 'avg'), 4) AS l_avg, "
-        "list_aggregate(l, 'count') AS l_cnt, "
-        "list_reduce(l, (a, b) -> a + b) AS l_fold, "
-        "array_to_string(list_slice(l, 2, 3), ',') AS l_mid, "
-        "array_to_string(range(0, p_size % 5 + 2), ',') AS upto, "
-        "format('{}#{}', p_partkey, p_size) AS tag, "
-        "date_diff('month', DATE '1995-01-15', d) AS months_since, "
-        "date_diff('day', DATE '1995-01-15', d) AS days_since, "
-        "{'pk': p_partkey, 'sz': p_size}.pk AS s_pk "
-        "FROM (SELECT p_partkey, p_size, "
-        "[p_partkey, CAST(p_size AS BIGINT), 30] AS l, "
-        "DATE '1995-01-15' + CAST(p_partkey % 900 AS INT) AS d "
-        "FROM part WHERE p_partkey <= 200) ORDER BY p_partkey",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery2",
     tags=("dialect", "functions", "aggregate", "datetime"),
     # Round-13 version-skew sweep: the oracle no longer calls
@@ -748,6 +603,13 @@ def dialect_gap_battery(spark: SparkSession, sf: str) -> DataFrame:
     # the value at rank max(1, ceil(q·n)) — selection only, stays
     # DECIMAL-exact. dayname/editdist3/epoch_ms/time_bucket stay:
     # calendar arithmetic and definition-exact distances.
+    doc="""Sweep batch 2 through the rewriter: arg_max/arg_min → max_by/
+    min_by, quantile_cont/disc → ordered-set percentiles, product →
+    sign/zero-aware log-space fold (rounded — ~1e-15 relative error),
+    epoch_ms → unix_millis, time_bucket → epoch-aligned floor, dayname
+    → full-name date_format (Spark's own returns 'Mon'), editdist3 →
+    levenshtein, bare VARCHAR casts → STRING. Identical SQL verbatim on
+    DuckDB.""",
     oracle="""
 WITH r1 AS (
   SELECT o_orderpriority, o_orderkey, o_totalprice, o_orderdate,
@@ -775,36 +637,31 @@ FROM r1
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
 """,
+    sql="SELECT o_orderpriority, "
+    "arg_max(o_orderkey, o_totalprice) AS priciest_order, "
+    "arg_min(o_orderkey, o_totalprice) AS cheapest_order, "
+    "round(quantile_cont(o_totalprice, 0.5), 2) AS med_cont, "
+    "quantile_disc(o_totalprice, 0.25) AS q25_disc, "
+    "round(product(CASE WHEN o_orderkey % 997 = 0 THEN 2.0 ELSE 1.0 END), 2) AS pow2_997s, "
+    "CAST(min(epoch_ms(CAST(o_orderdate AS TIMESTAMP))) AS BIGINT) AS first_ms, "
+    "min(time_bucket(INTERVAL 6 HOUR, CAST(o_orderdate AS TIMESTAMP))) AS first_bucket, "
+    "min(dayname(o_orderdate)) AS first_dayname, "
+    "min(editdist3(o_orderpriority, 'URGENT')) AS min_edit, "
+    "CAST(max(o_orderkey) AS VARCHAR) AS max_key_str "
+    "FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority",
 )
-def dialect_gap_battery2(spark: SparkSession, sf: str) -> DataFrame:
-    """Sweep batch 2 through the rewriter: arg_max/arg_min → max_by/
-    min_by, quantile_cont/disc → ordered-set percentiles, product →
-    sign/zero-aware log-space fold (rounded — ~1e-15 relative error),
-    epoch_ms → unix_millis, time_bucket → epoch-aligned floor, dayname
-    → full-name date_format (Spark's own returns 'Mon'), editdist3 →
-    levenshtein, bare VARCHAR casts → STRING. Identical SQL verbatim on
-    DuckDB."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT o_orderpriority, "
-        "arg_max(o_orderkey, o_totalprice) AS priciest_order, "
-        "arg_min(o_orderkey, o_totalprice) AS cheapest_order, "
-        "round(quantile_cont(o_totalprice, 0.5), 2) AS med_cont, "
-        "quantile_disc(o_totalprice, 0.25) AS q25_disc, "
-        "round(product(CASE WHEN o_orderkey % 997 = 0 THEN 2.0 ELSE 1.0 END), 2) AS pow2_997s, "
-        "CAST(min(epoch_ms(CAST(o_orderdate AS TIMESTAMP))) AS BIGINT) AS first_ms, "
-        "min(time_bucket(INTERVAL 6 HOUR, CAST(o_orderdate AS TIMESTAMP))) AS first_bucket, "
-        "min(dayname(o_orderdate)) AS first_dayname, "
-        "min(editdist3(o_orderpriority, 'URGENT')) AS min_edit, "
-        "CAST(max(o_orderkey) AS VARCHAR) AS max_key_str "
-        "FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery3",
     tags=("dialect", "json", "datetime"),
+    doc="""Sweep batch 4 through the rewriter: json_extract → to_json ∘
+    variant_get ∘ parse_json (EXACT DuckDB semantics incl. JSON string
+    quoting), json_extract_string / ->> → get_json_object, json_valid →
+    try_parse_json, ISO-week family (isodow Mon=1..Sun=7, yearweek on
+    the ISO year, century), to_hours interval constructor →
+    make_interval. Identical SQL verbatim on DuckDB over the events
+    props JSON column.""",
     oracle="""
 SELECT event_id,
        json_extract(props, '$.plan')              AS plan_json,
@@ -820,33 +677,20 @@ WHERE event_id <= 300
 ORDER BY event_id
 """,
 )
-def dialect_gap_battery3(spark: SparkSession, sf: str) -> DataFrame:
-    """Sweep batch 4 through the rewriter: json_extract → to_json ∘
-    variant_get ∘ parse_json (EXACT DuckDB semantics incl. JSON string
-    quoting), json_extract_string / ->> → get_json_object, json_valid →
-    try_parse_json, ISO-week family (isodow Mon=1..Sun=7, yearweek on
-    the ISO year, century), to_hours interval constructor →
-    make_interval. Identical SQL verbatim on DuckDB over the events
-    props JSON column."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT event_id, "
-        "json_extract(props, '$.plan') AS plan_json, "
-        "json_extract_string(props, '$.plan') AS plan_text, "
-        "props->>'plan' AS plan_arrow, "
-        "json_valid(props) AS is_valid, "
-        "isodow(CAST(ts AS DATE)) AS iso_dow, "
-        "yearweek(CAST(ts AS DATE)) AS yw, "
-        "century(CAST(ts AS DATE)) AS cen, "
-        "CAST(ts AS TIMESTAMP) + to_hours(2) AS shifted "
-        "FROM events WHERE event_id <= 300 ORDER BY event_id",
-    )
 
 
-@register(
+register_sql(
     "asof_join_sql_form",
     tags=("dialect", "asof", "join"),
+    doc="""The literal DuckDB ``ASOF JOIN`` SQL syntax through the gateway
+    (rewrite.py::_rewrite_asof_join): earliest shipment at/after each
+    order's date — forward-direction as-of, one equality key. The
+    rewriter emits the same union + windowed first-non-null shape as
+    operators/asof.py (struct-per-right-row matching, tie ordering by
+    strictness). Projection keeps only tie-invariant columns
+    (l_shipdate is identical across tied lineitems, so arbitrary tie
+    winners can't flip the hash); IDENTICAL SQL runs verbatim on
+    DuckDB's native ASOF JOIN.""",
     oracle="""
 SELECT o_orderkey, o_orderdate, l_shipdate AS first_ship
 FROM orders ASOF JOIN lineitem
@@ -855,29 +699,21 @@ WHERE o_orderkey <= 2000
 ORDER BY o_orderkey
 """,
 )
-def asof_join_sql_form(spark: SparkSession, sf: str) -> DataFrame:
-    """The literal DuckDB ``ASOF JOIN`` SQL syntax through the gateway
-    (rewrite.py::_rewrite_asof_join): earliest shipment at/after each
-    order's date — forward-direction as-of, one equality key. The
-    rewriter emits the same union + windowed first-non-null shape as
-    operators/asof.py (struct-per-right-row matching, tie ordering by
-    strictness). Projection keeps only tie-invariant columns
-    (l_shipdate is identical across tied lineitems, so arbitrary tie
-    winners can't flip the hash); IDENTICAL SQL runs verbatim on
-    DuckDB's native ASOF JOIN."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT o_orderkey, o_orderdate, l_shipdate AS first_ship "
-        "FROM orders ASOF JOIN lineitem "
-        "ON o_orderkey = l_orderkey AND o_orderdate <= l_shipdate "
-        "WHERE o_orderkey <= 2000 ORDER BY o_orderkey",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery4",
     tags=("dialect", "battery", "window"),
+    doc="""Sweep batch 7, window corners (r5 verdict item #1): frame
+    EXCLUDE CURRENT ROW for sum/avg/count/count(*) (→ frame aggregate
+    minus the current row's contribution, NULL on an empty exclusion
+    frame), EXCLUDE NO OTHERS (→ stripped, the default), the
+    named-window EXTENSION form ``OVER (w ORDER BY …)`` (→ spec
+    inlined; Spark rejects it natively), and — the silent-wrong-answer
+    find of this batch — ORDER BY null placement: Spark's ASC default
+    is NULLS FIRST, DuckDB's is NULLS LAST, so every ASC key gets an
+    explicit NULLS LAST (first_p pins it via the NULL-bearing p
+    column). IDENTICAL SQL verbatim on DuckDB.""",
     oracle="""
 SELECT o_orderkey,
        round(sum(p) OVER (PARTITION BY cust ORDER BY o_orderkey
@@ -900,45 +736,21 @@ WINDOW w AS (PARTITION BY cust)
 ORDER BY o_orderkey
 """,
 )
-def dialect_gap_battery4(spark: SparkSession, sf: str) -> DataFrame:
-    """Sweep batch 7, window corners (r5 verdict item #1): frame
-    EXCLUDE CURRENT ROW for sum/avg/count/count(*) (→ frame aggregate
-    minus the current row's contribution, NULL on an empty exclusion
-    frame), EXCLUDE NO OTHERS (→ stripped, the default), the
-    named-window EXTENSION form ``OVER (w ORDER BY …)`` (→ spec
-    inlined; Spark rejects it natively), and — the silent-wrong-answer
-    find of this batch — ORDER BY null placement: Spark's ASC default
-    is NULLS FIRST, DuckDB's is NULLS LAST, so every ASC key gets an
-    explicit NULLS LAST (first_p pins it via the NULL-bearing p
-    column). IDENTICAL SQL verbatim on DuckDB."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT o_orderkey, "
-        "round(sum(p) OVER (PARTITION BY cust ORDER BY o_orderkey "
-        "ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING EXCLUDE CURRENT ROW), 2) AS peer_sum, "
-        "round(avg(p) OVER (PARTITION BY cust ORDER BY o_orderkey "
-        "ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING EXCLUDE CURRENT ROW), 4) AS peer_avg, "
-        "count(p) OVER (PARTITION BY cust ORDER BY o_orderkey "
-        "ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING EXCLUDE CURRENT ROW) AS peer_cnt, "
-        "count(*) OVER (PARTITION BY cust ORDER BY o_orderkey "
-        "ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING EXCLUDE CURRENT ROW) AS peer_rows, "
-        "round(sum(p) OVER (PARTITION BY cust ORDER BY o_orderkey "
-        "ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING EXCLUDE NO OTHERS), 2) AS incl_sum, "
-        "round(first_value(p) OVER (PARTITION BY cust ORDER BY p, o_orderkey), 2) AS first_p, "
-        "CAST(sum(o_orderkey) OVER (w ORDER BY o_orderkey) AS BIGINT) AS named_ext, "
-        "count(*) FILTER (p > 150000) OVER (PARTITION BY cust ORDER BY o_orderkey) AS big_so_far "
-        "FROM (SELECT o_orderkey, o_custkey % 10 AS cust, "
-        "CASE WHEN o_orderkey % 7 = 0 THEN NULL ELSE o_totalprice END AS p "
-        "FROM orders WHERE o_orderkey <= 2000) "
-        "WINDOW w AS (PARTITION BY cust) "
-        "ORDER BY o_orderkey",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery5",
     tags=("dialect", "battery"),
+    doc="""Sweep batch 7, function corners: list lambdas WITH index args
+    (DuckDB's i is 1-based, Spark's 0-based — substituted (i+1)),
+    hamming/mismatches (→ character zip_with; unequal lengths
+    raise_error like DuckDB), to_base (→ conv, zero-padded 3-arg form,
+    negative input raises), list-typed date_part (→ named_struct of
+    scalar parts), map_from_entries with bare tuple literals (→
+    struct(...) entries), and COLUMNS(c -> c LIKE …) lambda predicates
+    (→ anchored-regex form of the existing COLUMNS machinery; DuckDB
+    names fn(COLUMNS) outputs by the bare column name — matched).
+    IDENTICAL SQL verbatim on DuckDB.""",
     oracle="""
 SELECT doc_id,
        array_to_string(list_transform(string_split(text, ' ')[1:4],
@@ -957,38 +769,21 @@ GROUP BY ALL
 ORDER BY doc_id
 """,
 )
-def dialect_gap_battery5(spark: SparkSession, sf: str) -> DataFrame:
-    """Sweep batch 7, function corners: list lambdas WITH index args
-    (DuckDB's i is 1-based, Spark's 0-based — substituted (i+1)),
-    hamming/mismatches (→ character zip_with; unequal lengths
-    raise_error like DuckDB), to_base (→ conv, zero-padded 3-arg form,
-    negative input raises), list-typed date_part (→ named_struct of
-    scalar parts), map_from_entries with bare tuple literals (→
-    struct(...) entries), and COLUMNS(c -> c LIKE …) lambda predicates
-    (→ anchored-regex form of the existing COLUMNS machinery; DuckDB
-    names fn(COLUMNS) outputs by the bare column name — matched).
-    IDENTICAL SQL verbatim on DuckDB."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT doc_id, "
-        "array_to_string(list_transform(string_split(text, ' ')[1:4], "
-        "(w, i) -> concat(CAST(i AS VARCHAR), ':', substr(w, 1, 3))), '|') AS idx_words, "
-        "array_to_string(list_filter(string_split(text, ' ')[1:6], "
-        "(w, i) -> i % 2 = 1), '|') AS odd_words, "
-        "hamming(substr(md5(text), 1, 8), substr(md5(lang), 1, 8)) AS ham, "
-        "to_base(doc_id, 16) AS hexid, "
-        "to_base(doc_id, 2, 12) AS binid, "
-        "date_part(['year','month','day'], CAST('2024-01-01' AS DATE) + INTERVAL 1 DAY * (doc_id % 400)).month AS mth, "
-        "array_to_string(map_values(map_from_entries([('id', doc_id % 10), ('len', n_chars % 10)])), ',') AS mvals, "
-        "min(COLUMNS(c -> c LIKE 'n_%')) "
-        "FROM documents WHERE doc_id <= 300 GROUP BY ALL ORDER BY doc_id",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery6",
     tags=("dialect", "battery"),
+    doc="""Sweep batch 8 — scalar-function semantics, pinned verbatim on
+    both engines: concat skips NULLs and stringifies every argument
+    (→ concat_ws + CAST); one-arg log is LOG10 in DuckDB but ln in
+    Spark (→ log10 — a silent wrong answer for every bare log());
+    substring's character-window rule for 0/negative starts (→ clipped
+    window form; literal positive calls stay native); even (round away
+    to even); fmod/fdiv are FLOORED (divisor-sign) where Spark's % is
+    truncated (→ ((a%b)+b)%b); list_unique (distinct non-NULL count);
+    format_bytes (binary-unit CASE); strpos → instr;
+    array_to_string casts non-VARCHAR elements; isfinite arithmetic.""",
     oracle="""
 SELECT doc_id,
        concat(lang, NULL, '-', source, '-', doc_id % 10) AS tagged,
@@ -1009,39 +804,9 @@ WHERE doc_id <= 300
 ORDER BY doc_id
 """,
 )
-def dialect_gap_battery6(spark: SparkSession, sf: str) -> DataFrame:
-    """Sweep batch 8 — scalar-function semantics, pinned verbatim on
-    both engines: concat skips NULLs and stringifies every argument
-    (→ concat_ws + CAST); one-arg log is LOG10 in DuckDB but ln in
-    Spark (→ log10 — a silent wrong answer for every bare log());
-    substring's character-window rule for 0/negative starts (→ clipped
-    window form; literal positive calls stay native); even (round away
-    to even); fmod/fdiv are FLOORED (divisor-sign) where Spark's % is
-    truncated (→ ((a%b)+b)%b); list_unique (distinct non-NULL count);
-    format_bytes (binary-unit CASE); strpos → instr;
-    array_to_string casts non-VARCHAR elements; isfinite arithmetic."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT doc_id, "
-        "concat(lang, NULL, '-', source, '-', doc_id % 10) AS tagged, "
-        "round(log(n_chars), 4) AS log10_chars, "
-        "round(log(2, n_chars), 4) AS log2_chars, "
-        "substring(text, 0, 12) AS zero_start, "
-        "substring(text, -8, 12) AS tail_window, "
-        "even(n_chars / 7.0) AS even_bucket, "
-        "fmod(doc_id - 250, 7) AS floored_mod, "
-        "fdiv(doc_id - 250, 7) AS floored_div, "
-        "list_unique(string_split(text, ' ')) AS uniq_words, "
-        "format_bytes(n_chars * 1024) AS pretty_size, "
-        "strpos(text, 'data') AS data_pos, "
-        "array_to_string(string_split(text, ' ')[1:3], '|') AS head_words, "
-        "isfinite(n_chars * 1.0) AS finite "
-        "FROM documents WHERE doc_id <= 300 ORDER BY doc_id",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery7",
     tags=("dialect", "battery", "aggregate"),
     # Round-13 version-skew sweep: the oracle no longer calls skewness/
@@ -1053,6 +818,15 @@ def dialect_gap_battery6(spark: SparkSession, sf: str) -> DataFrame:
     # is semantics-pinned and more exact than any portable restatement
     # (a naive-sum oracle would drift ~1e-5 on a 1.2e8 total — inside
     # round(,2)'s tie band; Kahan is not).
+    doc="""Sweep batch 9 — aggregate semantics, pinned verbatim on both
+    engines: skewness/kurtosis are DuckDB's SAMPLE estimators (Spark's
+    population g1/g2 corrected by the standard G1/G2 factors — a
+    silent near-miss that round(4) only hides for large n);
+    favg/fsum (Kahan) → avg/sum over DOUBLE; geomean →
+    exp(avg(ln(x))); a no-op ORDER BY inside sum() is stripped;
+    aggregate FILTER without the WHERE keyword gains it; any_value
+    skips NULLs (echoed on the group key, where it is deterministic
+    on both engines).""",
     oracle="""
 WITH x AS (
   SELECT o_orderpriority, o_orderkey, o_totalprice,
@@ -1086,37 +860,33 @@ SELECT o_orderpriority,
        favg_p, fsum_p, geo_p, sum_ordered, n_big, prio_echo
 FROM g ORDER BY o_orderpriority
 """,
+    sql="SELECT o_orderpriority, "
+    "round(skewness(o_totalprice), 4) AS skew_p, "
+    "round(kurtosis(o_totalprice), 4) AS kurt_p, "
+    "round(favg(o_totalprice), 2) AS favg_p, "
+    "round(fsum(o_totalprice), 2) AS fsum_p, "
+    "round(geomean(o_totalprice), 2) AS geo_p, "
+    "CAST(sum(o_orderkey ORDER BY o_orderkey) AS BIGINT) AS sum_ordered, "
+    "count(*) FILTER (o_totalprice > 100000) AS n_big, "
+    "any_value(o_orderpriority) AS prio_echo "
+    "FROM orders WHERE o_orderkey <= 4000 "
+    "GROUP BY o_orderpriority ORDER BY o_orderpriority",
 )
-def dialect_gap_battery7(spark: SparkSession, sf: str) -> DataFrame:
-    """Sweep batch 9 — aggregate semantics, pinned verbatim on both
-    engines: skewness/kurtosis are DuckDB's SAMPLE estimators (Spark's
-    population g1/g2 corrected by the standard G1/G2 factors — a
-    silent near-miss that round(4) only hides for large n);
-    favg/fsum (Kahan) → avg/sum over DOUBLE; geomean →
-    exp(avg(ln(x))); a no-op ORDER BY inside sum() is stripped;
-    aggregate FILTER without the WHERE keyword gains it; any_value
-    skips NULLs (echoed on the group key, where it is deterministic
-    on both engines)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT o_orderpriority, "
-        "round(skewness(o_totalprice), 4) AS skew_p, "
-        "round(kurtosis(o_totalprice), 4) AS kurt_p, "
-        "round(favg(o_totalprice), 2) AS favg_p, "
-        "round(fsum(o_totalprice), 2) AS fsum_p, "
-        "round(geomean(o_totalprice), 2) AS geo_p, "
-        "CAST(sum(o_orderkey ORDER BY o_orderkey) AS BIGINT) AS sum_ordered, "
-        "count(*) FILTER (o_totalprice > 100000) AS n_big, "
-        "any_value(o_orderpriority) AS prio_echo "
-        "FROM orders WHERE o_orderkey <= 4000 "
-        "GROUP BY o_orderpriority ORDER BY o_orderpriority",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery8",
     tags=("dialect", "battery", "datetime"),
+    doc="""Sweep batch 10 — datetime corners, pinned verbatim on both
+    engines: EXTRACT of DuckDB-specific fields (dow/epoch/
+    milliseconds → function forms, then the epoch/ISO rewrites);
+    the Sunday-0 dow family (Spark dayofweek is Sunday-1, weekday is
+    Monday-0 — both silently wrong without the -1 mapping); julian
+    (civil-midnight epoch-days); epoch_ns; date_sub complete-unit
+    diffs with month-end clamping and toward-zero truncation
+    (months_between / exact microsecond div — a bare CAST would get
+    the DuckDB-cast ROUNDING treatment and be off by one on half the
+    rows).""",
     oracle="""
 SELECT event_id,
        EXTRACT(dow FROM CAST(ts AS DATE)) AS dw,
@@ -1133,37 +903,20 @@ WHERE event_id <= 300
 ORDER BY event_id
 """,
 )
-def dialect_gap_battery8(spark: SparkSession, sf: str) -> DataFrame:
-    """Sweep batch 10 — datetime corners, pinned verbatim on both
-    engines: EXTRACT of DuckDB-specific fields (dow/epoch/
-    milliseconds → function forms, then the epoch/ISO rewrites);
-    the Sunday-0 dow family (Spark dayofweek is Sunday-1, weekday is
-    Monday-0 — both silently wrong without the -1 mapping); julian
-    (civil-midnight epoch-days); epoch_ns; date_sub complete-unit
-    diffs with month-end clamping and toward-zero truncation
-    (months_between / exact microsecond div — a bare CAST would get
-    the DuckDB-cast ROUNDING treatment and be off by one on half the
-    rows)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT event_id, "
-        "EXTRACT(dow FROM CAST(ts AS DATE)) AS dw, "
-        "dayofweek(CAST(ts AS DATE)) AS dw_fn, "
-        "weekday(CAST(ts AS DATE)) AS wd, "
-        "EXTRACT(epoch FROM CAST(ts AS TIMESTAMP)) AS ep, "
-        "EXTRACT(milliseconds FROM CAST(ts AS TIMESTAMP)) AS ms, "
-        "round(julian(CAST(ts AS DATE)), 1) AS jd, "
-        "epoch_ns(CAST(ts AS TIMESTAMP)) AS ens, "
-        "date_sub('month', DATE '2024-01-31', CAST(ts AS DATE)) AS months_since, "
-        "date_sub('day', DATE '2024-01-01', CAST(ts AS DATE)) AS days_since "
-        "FROM events WHERE event_id <= 300 ORDER BY event_id",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery9",
     tags=("dialect", "battery", "string"),
+    doc="""Sweep batch 11 — string/list corners, pinned verbatim on both
+    engines: left/right with NEGATIVE n (drop |n| chars from the other
+    end — Spark returns ''), chr beyond codepoint 255 (Spark's char is
+    mod-256; the rewriter UTF-8-encodes 2/3/4-byte sequences by hand —
+    Greek and emoji planes covered), parse_filename, character-set
+    jaccard, anchored regexp_full_match, and like_escape with an
+    explicit escape character. Plus the 1-arg string_agg ','-default
+    and group_concat (unit-tested; order-dependent, so not in the
+    hash-compared battery).""",
     oracle="""
 SELECT doc_id,
        left(text, -400) AS head_neg,
@@ -1180,36 +933,20 @@ WHERE doc_id <= 300
 ORDER BY doc_id
 """,
 )
-def dialect_gap_battery9(spark: SparkSession, sf: str) -> DataFrame:
-    """Sweep batch 11 — string/list corners, pinned verbatim on both
-    engines: left/right with NEGATIVE n (drop |n| chars from the other
-    end — Spark returns ''), chr beyond codepoint 255 (Spark's char is
-    mod-256; the rewriter UTF-8-encodes 2/3/4-byte sequences by hand —
-    Greek and emoji planes covered), parse_filename, character-set
-    jaccard, anchored regexp_full_match, and like_escape with an
-    explicit escape character. Plus the 1-arg string_agg ','-default
-    and group_concat (unit-tested; order-dependent, so not in the
-    hash-compared battery)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT doc_id, "
-        "left(text, -400) AS head_neg, "
-        "right(text, -400) AS tail_neg, "
-        "chr(CAST(65 + doc_id % 26 AS INT)) AS latin_c, "
-        "chr(CAST(945 + doc_id % 24 AS INT)) AS greek_c, "
-        "chr(CAST(128512 + doc_id % 16 AS INT)) AS emoji_c, "
-        "parse_filename(concat('/corpus/', source, '/', doc_id, '.txt')) AS fname, "
-        "round(jaccard(lang, source), 4) AS lang_src_jac, "
-        "regexp_full_match(lang, '[a-z]+') AS lang_alpha, "
-        "like_escape(source, '%$_%', '$') AS has_underscore "
-        "FROM documents WHERE doc_id <= 300 ORDER BY doc_id",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery10",
     tags=("dialect", "battery", "operators"),
+    doc="""Sweep batch 12 — operator symbols, pinned verbatim on both
+    engines: ``^``/``**`` are POWER in DuckDB while Spark's ``^`` is
+    XOR — 2^3 is 8 vs 1, the nastiest silent class of the round
+    (operand-atomic extraction keeps DuckDB's precedence; the xor()
+    FUNCTION still emits a genuine XOR); the ``~`` operator family →
+    RLIKE/LIKE/ILIKE; ``<->``/``<=>`` array euclidean distance /
+    cosine similarity → the batch-11 list-metric arithmetic;
+    map_extract (single-element list, [] when missing), list_select,
+    list_grade_up (stable argsort via struct array_sort).""",
     oracle="""
 SELECT doc_id,
        round(n_chars ^ 0.5, 4) AS sqrt_chars,
@@ -1227,37 +964,19 @@ WHERE doc_id <= 300
 ORDER BY doc_id
 """,
 )
-def dialect_gap_battery10(spark: SparkSession, sf: str) -> DataFrame:
-    """Sweep batch 12 — operator symbols, pinned verbatim on both
-    engines: ``^``/``**`` are POWER in DuckDB while Spark's ``^`` is
-    XOR — 2^3 is 8 vs 1, the nastiest silent class of the round
-    (operand-atomic extraction keeps DuckDB's precedence; the xor()
-    FUNCTION still emits a genuine XOR); the ``~`` operator family →
-    RLIKE/LIKE/ILIKE; ``<->``/``<=>`` array euclidean distance /
-    cosine similarity → the batch-11 list-metric arithmetic;
-    map_extract (single-element list, [] when missing), list_select,
-    list_grade_up (stable argsort via struct array_sort)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT doc_id, "
-        "round(n_chars ^ 0.5, 4) AS sqrt_chars, "
-        "round(2 ** (doc_id % 10), 1) AS pow2, "
-        "lang ~ '^[a-z]+$' AS lang_alpha, "
-        "text ~~ '%data%' AS has_data, "
-        "source ~~* 'WEB%' AS web_src, "
-        "round([1.0, n_chars / 100.0] <-> [0.0, 0.0], 4) AS vec_norm, "
-        "round([1.0, doc_id % 7 * 1.0] <=> [1.0, 1.0], 4) AS vec_cos, "
-        "map_extract(MAP {'n': n_chars % 5}, 'n')[1] AS m_val, "
-        "array_to_string(list_grade_up([n_chars % 7, doc_id % 5, 3]), ',') AS grade, "
-        "array_to_string(list_select(string_split(text, ' '), [1, 3]), '|') AS pick "
-        "FROM documents WHERE doc_id <= 300 ORDER BY doc_id",
-    )
 
 
-@register(
+register_sql(
     "asof_join_using_subquery",
     tags=("dialect", "asof", "join"),
+    doc="""Round-6 ASOF extensions (r5 verdict item #3): the ``USING (k…, on)``
+    clause — last USING column is the ``>=`` backward ordering key, join
+    columns emitted once from the left side (DuckDB star shape) — and
+    parenthesised SUBQUERY relations on BOTH sides
+    (rewrite.py::_rewrite_asof_join, the backward/forward relation
+    parser). Latest order at/before each shipment of the same orderkey;
+    one order row per key makes the match tie-invariant. IDENTICAL SQL
+    runs verbatim on DuckDB's native ASOF JOIN.""",
     oracle="""
 SELECT k, d, l_linenumber, o_totalprice
 FROM (SELECT l_orderkey AS k, l_shipdate AS d, l_linenumber FROM lineitem WHERE l_orderkey <= 2000) li
@@ -1266,30 +985,20 @@ USING (k, d)
 ORDER BY k, d, l_linenumber
 """,
 )
-def asof_join_using_subquery(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-6 ASOF extensions (r5 verdict item #3): the ``USING (k…, on)``
-    clause — last USING column is the ``>=`` backward ordering key, join
-    columns emitted once from the left side (DuckDB star shape) — and
-    parenthesised SUBQUERY relations on BOTH sides
-    (rewrite.py::_rewrite_asof_join, the backward/forward relation
-    parser). Latest order at/before each shipment of the same orderkey;
-    one order row per key makes the match tie-invariant. IDENTICAL SQL
-    runs verbatim on DuckDB's native ASOF JOIN."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT k, d, l_linenumber, o_totalprice "
-        "FROM (SELECT l_orderkey AS k, l_shipdate AS d, l_linenumber "
-        "FROM lineitem WHERE l_orderkey <= 2000) li "
-        "ASOF LEFT JOIN (SELECT o_orderkey AS k, o_orderdate AS d, "
-        "o_totalprice FROM orders) od USING (k, d) "
-        "ORDER BY k, d, l_linenumber",
-    )
 
 
-@register(
+register_sql(
     "asof_join_null_keys",
     tags=("dialect", "asof", "join"),
+    doc="""ADVICE-r5 NULL-semantics fix pinned against DuckDB: right rows
+    whose ordering key is NULL (every linenumber-1 shipment here) must
+    never match — they are filtered out of the union's right branch
+    before the window (rewrite.py::_rewrite_asof_join r_where), so
+    ``first(...) IGNORE NULLS`` can't land on a NULL-keyed row that
+    sorts first under ASC. ship == sd on every matchable row keeps the
+    result tie-invariant. IDENTICAL SQL verbatim on both engines (left
+    ordering keys are non-NULL in TPC-H, so DuckDB 1.0.0's keyed
+    NULL-to-NULL quirk — documented deviation — is not in play).""",
     oracle="""
 SELECT o_orderkey, o_orderdate, ship AS matched_ship
 FROM orders ASOF LEFT JOIN
@@ -1302,32 +1011,18 @@ WHERE o_orderkey <= 2000
 ORDER BY o_orderkey
 """,
 )
-def asof_join_null_keys(spark: SparkSession, sf: str) -> DataFrame:
-    """ADVICE-r5 NULL-semantics fix pinned against DuckDB: right rows
-    whose ordering key is NULL (every linenumber-1 shipment here) must
-    never match — they are filtered out of the union's right branch
-    before the window (rewrite.py::_rewrite_asof_join r_where), so
-    ``first(...) IGNORE NULLS`` can't land on a NULL-keyed row that
-    sorts first under ASC. ship == sd on every matchable row keeps the
-    result tie-invariant. IDENTICAL SQL verbatim on both engines (left
-    ordering keys are non-NULL in TPC-H, so DuckDB 1.0.0's keyed
-    NULL-to-NULL quirk — documented deviation — is not in play)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT o_orderkey, o_orderdate, ship AS matched_ship "
-        "FROM orders ASOF LEFT JOIN "
-        "(SELECT l_orderkey, "
-        "CASE WHEN l_linenumber = 1 THEN NULL ELSE l_shipdate END AS sd, "
-        "l_shipdate AS ship FROM lineitem) s "
-        "ON o_orderkey = s.l_orderkey AND o_orderdate <= s.sd "
-        "WHERE o_orderkey <= 2000 ORDER BY o_orderkey",
-    )
 
 
-@register(
+register_sql(
     "map_literal_ordered_agg",
     tags=("dialect", "map", "aggregate"),
+    doc="""MAP literal syntax (→ map()) and DuckDB's in-args ORDER BY on
+    string_agg (→ listagg WITHIN GROUP) through the rewriter. Since
+    batch 23 the SQL runs VERBATIM on both engines: element_at is
+    DuckDB's MAP accessor returning a single-element LIST (batch-23
+    rename to the map_extract translation), unwrapped with [1] on both
+    sides (the r6 sweep closed the old deviation where Spark's native
+    element_at returned the bare value).""",
     oracle="""
 SELECT r_name,
        string_agg(n_name, ',' ORDER BY n_name DESC) AS nations_desc,
@@ -1337,67 +1032,36 @@ GROUP BY r_name
 ORDER BY r_name
 """,
 )
-def map_literal_ordered_agg(spark: SparkSession, sf: str) -> DataFrame:
-    """MAP literal syntax (→ map()) and DuckDB's in-args ORDER BY on
-    string_agg (→ listagg WITHIN GROUP) through the rewriter. Since
-    batch 23 the SQL runs VERBATIM on both engines: element_at is
-    DuckDB's MAP accessor returning a single-element LIST (batch-23
-    rename to the map_extract translation), unwrapped with [1] on both
-    sides (the r6 sweep closed the old deviation where Spark's native
-    element_at returned the bare value)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT r_name, string_agg(n_name, ',' ORDER BY n_name DESC) AS nations_desc, "
-        "element_at(MAP {'region': r_name}, 'region')[1] AS region_echo "
-        "FROM nation JOIN region ON n_regionkey = r_regionkey "
-        "GROUP BY r_name ORDER BY r_name",
-    )
 
 
-@register(
+register_sql(
     "star_replace_strftime",
     tags=("dialect", "sugar", "datetime"),
+    doc="""* REPLACE (LIMIT-0 schema probe expands the star with the named
+    column swapped) combined with strftime C-format translation
+    (%d/%m/%Y → dd/MM/yyyy, mapped code-by-code — unknown codes raise
+    rather than mistranslate). Identical SQL runs verbatim on DuckDB.""",
     oracle="""
 SELECT * REPLACE (strftime(o_orderdate, '%d/%m/%Y') AS o_orderdate)
 FROM (SELECT o_orderkey, o_orderdate FROM orders WHERE o_orderkey <= 200)
 ORDER BY o_orderkey
 """,
 )
-def star_replace_strftime(spark: SparkSession, sf: str) -> DataFrame:
-    """* REPLACE (LIMIT-0 schema probe expands the star with the named
-    column swapped) combined with strftime C-format translation
-    (%d/%m/%Y → dd/MM/yyyy, mapped code-by-code — unknown codes raise
-    rather than mistranslate). Identical SQL runs verbatim on DuckDB."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT * REPLACE (strftime(o_orderdate, '%d/%m/%Y') AS o_orderdate) "
-        "FROM (SELECT o_orderkey, o_orderdate FROM orders WHERE o_orderkey <= 200) "
-        "ORDER BY o_orderkey",
-    )
 
 
-@register(
+register_sql(
     "pivot_statement_status",
     tags=("dialect", "pivot"),
+    doc="""DuckDB's PIVOT STATEMENT form (auto-discovered pivot values) →
+    Spark PIVOT clause with the value list filled in by a DISTINCT probe
+    (rewrite.py::_rewrite_pivot_statement, bounded at 500 values).
+    Identical SQL runs verbatim on DuckDB; column naming matches (bare
+    value names for an unaliased aggregate).""",
     oracle="""
 PIVOT orders ON o_orderstatus USING count(*) GROUP BY o_orderpriority
 ORDER BY o_orderpriority
 """,
 )
-def pivot_statement_status(spark: SparkSession, sf: str) -> DataFrame:
-    """DuckDB's PIVOT STATEMENT form (auto-discovered pivot values) →
-    Spark PIVOT clause with the value list filled in by a DISTINCT probe
-    (rewrite.py::_rewrite_pivot_statement, bounded at 500 values).
-    Identical SQL runs verbatim on DuckDB; column naming matches (bare
-    value names for an unaliased aggregate)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "PIVOT orders ON o_orderstatus USING count(*) GROUP BY o_orderpriority "
-        "ORDER BY o_orderpriority",
-    )
 
 
 @register(
@@ -1418,9 +1082,9 @@ def unpivot_statement_measures(spark: SparkSession, sf: str) -> DataFrame:
     The Spark side runs the statement itself; DuckDB wraps it in a
     subquery for the rounding projection (statement-in-FROM nesting
     differs between engines)."""
-    load_tables(spark, sf)
-    df = _rewritten_sql(
+    df = gateway_sql(
         spark,
+        sf,
         "UNPIVOT (SELECT p_partkey, p_retailprice, CAST(p_size AS DOUBLE) AS p_size_d "
         "FROM part WHERE p_partkey <= 100) "
         "ON p_retailprice, p_size_d INTO NAME metric VALUE val",
@@ -1430,9 +1094,13 @@ def unpivot_statement_measures(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "union_by_name_priorities",
     tags=("dialect", "setops"),
+    doc="""UNION ALL BY NAME (rewrite.py::_rewrite_union_by_name): columns
+    align by NAME across differently-ordered select lists, missing
+    columns fill with typed NULLs from LIMIT-0 probes. Identical SQL
+    runs verbatim on DuckDB.""",
     oracle="""
 SELECT o_orderpriority, count(*) AS n_open
 FROM orders WHERE o_orderstatus = 'O' GROUP BY 1
@@ -1442,26 +1110,15 @@ FROM orders WHERE o_orderstatus = 'F' GROUP BY 2
 ORDER BY o_orderpriority, n_open NULLS FIRST
 """,
 )
-def union_by_name_priorities(spark: SparkSession, sf: str) -> DataFrame:
-    """UNION ALL BY NAME (rewrite.py::_rewrite_union_by_name): columns
-    align by NAME across differently-ordered select lists, missing
-    columns fill with typed NULLs from LIMIT-0 probes. Identical SQL
-    runs verbatim on DuckDB."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT o_orderpriority, count(*) AS n_open "
-        "FROM orders WHERE o_orderstatus = 'O' GROUP BY 1 "
-        "UNION ALL BY NAME "
-        "SELECT count(*) AS n_closed, o_orderpriority "
-        "FROM orders WHERE o_orderstatus = 'F' GROUP BY 2 "
-        "ORDER BY o_orderpriority, n_open NULLS FIRST",
-    )
 
 
-@register(
+register_sql(
     "from_first_syntax",
     tags=("dialect", "sugar"),
+    doc="""DuckDB FROM-first syntax (rewrite.py::_rewrite_from_first): the
+    post-SELECT WHERE/GROUP BY/ORDER BY clauses (DuckDB's accepted
+    order) re-attach after the FROM part in conventional clause order.
+    Identical SQL runs verbatim on DuckDB.""",
     oracle="""
 FROM orders
 SELECT o_orderpriority, count(*) AS n, round(sum(o_totalprice), 2) AS total
@@ -1470,24 +1127,18 @@ GROUP BY o_orderpriority
 ORDER BY o_orderpriority
 """,
 )
-def from_first_syntax(spark: SparkSession, sf: str) -> DataFrame:
-    """DuckDB FROM-first syntax (rewrite.py::_rewrite_from_first): the
-    post-SELECT WHERE/GROUP BY/ORDER BY clauses (DuckDB's accepted
-    order) re-attach after the FROM part in conventional clause order.
-    Identical SQL runs verbatim on DuckDB."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "FROM orders "
-        "SELECT o_orderpriority, count(*) AS n, round(sum(o_totalprice), 2) AS total "
-        "WHERE o_orderstatus = 'P' "
-        "GROUP BY o_orderpriority ORDER BY o_orderpriority",
-    )
 
 
-@register(
+register_sql(
     "columns_regex_battery",
     tags=("dialect", "sugar"),
+    doc="""DuckDB COLUMNS('regex') (rewrite.py::_rewrite_columns_expr):
+    matching columns expand from a LIMIT-0 probe — the pattern matches
+    ANYWHERE in the name like DuckDB; a wrapping aggregate applies per
+    column, aliased to the column name (max picks stored doubles, so the
+    digest compares exactly without rounding). Identical SQL runs
+    verbatim on DuckDB. Limitation: only a single wrapping function is
+    expanded per column — deeper expressions around COLUMNS are not.""",
     oracle="""
 SELECT c_mktsegment, max(COLUMNS('acctbal'))
 FROM customer
@@ -1495,20 +1146,6 @@ GROUP BY c_mktsegment
 ORDER BY c_mktsegment
 """,
 )
-def columns_regex_battery(spark: SparkSession, sf: str) -> DataFrame:
-    """DuckDB COLUMNS('regex') (rewrite.py::_rewrite_columns_expr):
-    matching columns expand from a LIMIT-0 probe — the pattern matches
-    ANYWHERE in the name like DuckDB; a wrapping aggregate applies per
-    column, aliased to the column name (max picks stored doubles, so the
-    digest compares exactly without rounding). Identical SQL runs
-    verbatim on DuckDB. Limitation: only a single wrapping function is
-    expanded per column — deeper expressions around COLUMNS are not."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT c_mktsegment, max(COLUMNS('acctbal')) "
-        "FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment",
-    )
 
 
 _REGEX_SORT_ESCAPE_SQL = r"""
@@ -1529,13 +1166,10 @@ ORDER BY p_partkey
 """
 
 
-@register(
+register_sql(
     "regex_sort_escape_battery",
     tags=("dialect", "battery", "regex"),
-    oracle=_REGEX_SORT_ESCAPE_SQL,
-)
-def regex_sort_escape_battery(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-3 argument-semantics closures, through the rewriter on the
+    doc="""Round-3 argument-semantics closures, through the rewriter on the
     IDENTICAL DuckDB SQL (rewrite.py::_normalize_literals,
     _rewrite_regexp_replace, _rewrite_regexp_extract, _rewrite_list_sort,
     _rewrite_array_to_string): escape-free literals survive Spark's
@@ -1545,9 +1179,9 @@ def regex_sort_escape_battery(spark: SparkSession, sf: str) -> DataFrame:
     syntax; 2-arg regexp_extract pins DuckDB's whole-match default;
     list_sort maps to the Spark sort with the same NULL placement and
     accepts direction strings; array_to_string of an empty slice is NULL.
-    Array results join to scalars per the corpus hashing convention."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _REGEX_SORT_ESCAPE_SQL)
+    Array results join to scalars per the corpus hashing convention.""",
+    oracle=_REGEX_SORT_ESCAPE_SQL,
+)
 
 
 _E_LITERAL_SQL = r"""
@@ -1564,24 +1198,36 @@ ORDER BY n_nationkey
 """
 
 
-@register(
+register_sql(
     "escape_literal_battery",
     tags=("dialect", "edge"),
-    oracle=_E_LITERAL_SQL,
-)
-def escape_literal_battery(spark: SparkSession, sf: str) -> DataFrame:
-    """PostgreSQL-style E'...' escape literals through the rewriter:
+    doc="""PostgreSQL-style E'...' escape literals through the rewriter:
     \\xHH hex, octal, \\uXXXX, '' doubling, and unknown-escape
     backslash-dropping are DECODED at rewrite time and re-emitted in
     Spark escape space — Spark's parser never sees an escape it would
-    mangle. The identical SQL runs verbatim on DuckDB."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _E_LITERAL_SQL)
+    mangle. The identical SQL runs verbatim on DuckDB.""",
+    oracle=_E_LITERAL_SQL,
+)
 
 
-@register(
+register_sql(
     "dialect_gap_battery11",
     tags=("dialect", "battery", "functions"),
+    doc="""Sweep batch 15 — the former raise-only scalars, pinned verbatim
+    on both engines: byte-based jaro/jaro-winkler/unrestricted
+    damerau_levenshtein, strip_accents (NFD→drop-marks→NFC),
+    nfc_normalize (combining acute recomposes), the parse_dir* path
+    family (trailing-separator rules), md5_number halves
+    (little-endian byte order; DECIMAL(20,0) → VARCHAR carries the
+    UBIGINT digits), gamma/lgamma/nextafter. The UDF-backed names
+    register lazily on the session at rewrite time
+    (functions/parity_udfs.py), so the driver's plain session needs no
+    engine setup. Round-13 version-skew sweep: the oracle no longer
+    calls gamma (closed-form half-integer values via sqrt(pi)) or
+    lgamma (integer domain, ln∘factorial identity — factorial is exact
+    in HUGEINT), so a libm change in the oracle binary cannot move an
+    expected value; jaro/damerau/md5/nextafter stay — their outputs
+    are definition-exact, not estimator-dependent.""",
     oracle="""
 SELECT doc_id,
        round(jaro_similarity(lang, source), 4) AS js,
@@ -1606,45 +1252,25 @@ FROM documents
 WHERE doc_id <= 300
 ORDER BY doc_id
 """,
+    sql="SELECT doc_id, "
+    "round(jaro_similarity(lang, source), 4) AS js, "
+    "round(jaro_winkler_similarity(source, lang), 4) AS jw, "
+    "damerau_levenshtein(lang, substr(source, 1, 4)) AS dl, "
+    "strip_accents('caf' || chr(233) || ' M' || chr(252) || 'ller') AS sa, "
+    "nfc_normalize('e' || chr(769)) AS nf, "
+    "parse_dirname('/corpus/' || source || '/' || doc_id || '.txt') AS dn, "
+    "parse_dirpath('corpus/' || source || '/' || doc_id || '.txt') AS dp, "
+    "array_to_string(parse_path(source || '/' || lang), ',') AS pp, "
+    "CAST(md5_number_lower(lang) AS VARCHAR) AS mlo, "
+    "CAST(md5_number_upper(source) AS VARCHAR) AS mhi, "
+    "round(gamma(1.0 + (doc_id % 5) / 2.0), 4) AS gm, "
+    "round(lgamma(n_chars % 30 + 2), 4) AS lg, "
+    "nextafter(doc_id * 1.0, 0.0) AS na "
+    "FROM documents WHERE doc_id <= 300 ORDER BY doc_id",
 )
-def dialect_gap_battery11(spark: SparkSession, sf: str) -> DataFrame:
-    """Sweep batch 15 — the former raise-only scalars, pinned verbatim
-    on both engines: byte-based jaro/jaro-winkler/unrestricted
-    damerau_levenshtein, strip_accents (NFD→drop-marks→NFC),
-    nfc_normalize (combining acute recomposes), the parse_dir* path
-    family (trailing-separator rules), md5_number halves
-    (little-endian byte order; DECIMAL(20,0) → VARCHAR carries the
-    UBIGINT digits), gamma/lgamma/nextafter. The UDF-backed names
-    register lazily on the session at rewrite time
-    (functions/parity_udfs.py), so the driver's plain session needs no
-    engine setup. Round-13 version-skew sweep: the oracle no longer
-    calls gamma (closed-form half-integer values via sqrt(pi)) or
-    lgamma (integer domain, ln∘factorial identity — factorial is exact
-    in HUGEINT), so a libm change in the oracle binary cannot move an
-    expected value; jaro/damerau/md5/nextafter stay — their outputs
-    are definition-exact, not estimator-dependent."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT doc_id, "
-        "round(jaro_similarity(lang, source), 4) AS js, "
-        "round(jaro_winkler_similarity(source, lang), 4) AS jw, "
-        "damerau_levenshtein(lang, substr(source, 1, 4)) AS dl, "
-        "strip_accents('caf' || chr(233) || ' M' || chr(252) || 'ller') AS sa, "
-        "nfc_normalize('e' || chr(769)) AS nf, "
-        "parse_dirname('/corpus/' || source || '/' || doc_id || '.txt') AS dn, "
-        "parse_dirpath('corpus/' || source || '/' || doc_id || '.txt') AS dp, "
-        "array_to_string(parse_path(source || '/' || lang), ',') AS pp, "
-        "CAST(md5_number_lower(lang) AS VARCHAR) AS mlo, "
-        "CAST(md5_number_upper(source) AS VARCHAR) AS mhi, "
-        "round(gamma(1.0 + (doc_id % 5) / 2.0), 4) AS gm, "
-        "round(lgamma(n_chars % 30 + 2), 4) AS lg, "
-        "nextafter(doc_id * 1.0, 0.0) AS na "
-        "FROM documents WHERE doc_id <= 300 ORDER BY doc_id",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery12",
     tags=("dialect", "battery", "aggregates"),
     # Round-13 version-skew sweep: the oracle no longer calls mad or
@@ -1657,6 +1283,15 @@ def dialect_gap_battery11(spark: SparkSession, sf: str) -> DataFrame:
     # normalizes the signed zero). histogram/era/struct_insert stay:
     # exact counts, calendar arithmetic, and struct layout have no
     # estimator to change.
+    doc="""Sweep batch 15 — nested-aggregate translations pinned verbatim:
+    mad (median-of-absolute-deviations as an expression tree over ONE
+    collect_list — Catalyst dedupes the repeated aggregate), entropy
+    (log2, empty→0.0, the +0 signed-zero guard), histogram (map keys
+    ascending, BIGINT counts — serialized to scalar key/value strings
+    for the hasher), EXTRACT(era) (CE=1), struct_insert (schema-probed
+    via FIELD_NOT_FOUND field enumeration), and top-level ORDER BY …
+    LIMIT 60% (floor(0.6·5 groups) = 3 rows via a count window over
+    the ordered body).""",
     oracle="""
 WITH r1 AS (
   SELECT o_orderpriority, CAST(o_totalprice AS DOUBLE) AS xd,
@@ -1704,35 +1339,27 @@ FROM agg JOIN madp USING (o_orderpriority) JOIN ent USING (o_orderpriority)
 ORDER BY o_orderpriority
 LIMIT 60%
 """,
+    sql="SELECT o_orderpriority, "
+    "round(mad(o_totalprice), 4) AS mad_price, "
+    "round(entropy(o_orderstatus), 4) AS ent_status, "
+    "array_to_string(map_keys(histogram(o_orderstatus)), ',') AS hist_keys, "
+    "array_to_string(map_values(histogram(o_orderstatus)), ',') AS hist_vals, "
+    "min(extract(era from o_orderdate)) AS min_era, "
+    "struct_insert({'pri': o_orderpriority}, tag := 'x').tag AS si_tag "
+    "FROM orders GROUP BY o_orderpriority "
+    "ORDER BY o_orderpriority LIMIT 60%",
 )
-def dialect_gap_battery12(spark: SparkSession, sf: str) -> DataFrame:
-    """Sweep batch 15 — nested-aggregate translations pinned verbatim:
-    mad (median-of-absolute-deviations as an expression tree over ONE
-    collect_list — Catalyst dedupes the repeated aggregate), entropy
-    (log2, empty→0.0, the +0 signed-zero guard), histogram (map keys
-    ascending, BIGINT counts — serialized to scalar key/value strings
-    for the hasher), EXTRACT(era) (CE=1), struct_insert (schema-probed
-    via FIELD_NOT_FOUND field enumeration), and top-level ORDER BY …
-    LIMIT 60% (floor(0.6·5 groups) = 3 rows via a count window over
-    the ordered body)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT o_orderpriority, "
-        "round(mad(o_totalprice), 4) AS mad_price, "
-        "round(entropy(o_orderstatus), 4) AS ent_status, "
-        "array_to_string(map_keys(histogram(o_orderstatus)), ',') AS hist_keys, "
-        "array_to_string(map_values(histogram(o_orderstatus)), ',') AS hist_vals, "
-        "min(extract(era from o_orderdate)) AS min_era, "
-        "struct_insert({'pri': o_orderpriority}, tag := 'x').tag AS si_tag "
-        "FROM orders GROUP BY o_orderpriority "
-        "ORDER BY o_orderpriority LIMIT 60%",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery13",
     tags=("dialect", "battery", "windows"),
+    doc="""Sweep batch 15 — DISTINCT aggregates over windows (Spark rejects
+    them outright) via collect_set expression trees: count → size,
+    sum → element-typed fold, avg → DOUBLE fold / size with try_divide,
+    min/max → DISTINCT dropped. The repeated collect_set window dedupes
+    to one physical window function. IDENTICAL SQL verbatim on DuckDB's
+    native DISTINCT window aggregates.""",
     oracle="""
 SELECT o_orderkey,
        o_orderpriority,
@@ -1745,28 +1372,18 @@ WHERE o_orderkey <= 2000
 ORDER BY o_orderkey
 """,
 )
-def dialect_gap_battery13(spark: SparkSession, sf: str) -> DataFrame:
-    """Sweep batch 15 — DISTINCT aggregates over windows (Spark rejects
-    them outright) via collect_set expression trees: count → size,
-    sum → element-typed fold, avg → DOUBLE fold / size with try_divide,
-    min/max → DISTINCT dropped. The repeated collect_set window dedupes
-    to one physical window function. IDENTICAL SQL verbatim on DuckDB's
-    native DISTINCT window aggregates."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT o_orderkey, o_orderpriority, "
-        "count(DISTINCT o_orderstatus) OVER (PARTITION BY o_orderpriority) AS cd_status, "
-        "round(sum(DISTINCT o_totalprice) OVER (PARTITION BY o_orderpriority) / 1000000, 4) AS sd_price_m, "
-        "round(avg(DISTINCT round(o_totalprice, -3)) OVER (PARTITION BY o_orderpriority), 4) AS ad_ktier, "
-        "min(DISTINCT o_orderstatus) OVER (PARTITION BY o_orderpriority) AS mn_status "
-        "FROM orders WHERE o_orderkey <= 2000 ORDER BY o_orderkey",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery14",
     tags=("dialect", "battery", "functions"),
+    doc="""Sweep batch 16 pinned verbatim on both engines: ordered
+    array_agg (comparator-lambda sort of (key…, value) structs — multi
+    key, DESC, DuckDB's NULLS-LAST-both-directions default), COLLATE
+    NOCASE → UTF8_LCASE, to_hex → hex, bit_count (native), and the
+    3-arg list_reduce lambda (i = 1-based iteration counter, zipped
+    tail). unnest-in-SELECT is pinned by the unit tests (generator
+    rows don't compose into one battery row).""",
     oracle="""
 SELECT o_orderpriority,
        array_to_string(array_agg(o_orderkey ORDER BY o_totalprice DESC, o_orderkey), ',') AS top_keys,
@@ -1781,32 +1398,16 @@ GROUP BY o_orderpriority
 ORDER BY o_orderpriority
 """,
 )
-def dialect_gap_battery14(spark: SparkSession, sf: str) -> DataFrame:
-    """Sweep batch 16 pinned verbatim on both engines: ordered
-    array_agg (comparator-lambda sort of (key…, value) structs — multi
-    key, DESC, DuckDB's NULLS-LAST-both-directions default), COLLATE
-    NOCASE → UTF8_LCASE, to_hex → hex, bit_count (native), and the
-    3-arg list_reduce lambda (i = 1-based iteration counter, zipped
-    tail). unnest-in-SELECT is pinned by the unit tests (generator
-    rows don't compose into one battery row)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT o_orderpriority, "
-        "array_to_string(array_agg(o_orderkey ORDER BY o_totalprice DESC, o_orderkey), ',') AS top_keys, "
-        "array_to_string(array_agg(o_orderstatus ORDER BY o_orderkey), ',') AS statuses, "
-        "max(CASE WHEN o_orderstatus COLLATE NOCASE = 'f' THEN o_orderkey END) AS max_f_key, "
-        "to_hex(max(o_orderkey)) AS hex_key, "
-        "bit_count(max(o_orderkey)) AS bits, "
-        "list_reduce(array_agg(o_orderkey ORDER BY o_orderkey), (a, b, i) -> a + b * (i % 3)) AS lr3 "
-        "FROM orders WHERE o_orderkey <= 500 "
-        "GROUP BY o_orderpriority ORDER BY o_orderpriority",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery15",
     tags=("dialect", "battery", "datetime"),
+    doc="""Sweep batch 17 pinned verbatim: decade/millennium extracts,
+    epoch_ms ROUND-TRIP (extraction then BIGINT-arg construction —
+    exercising the uq_poly probe dispatch both ways in one
+    expression), single-arg make_timestamp(µs), UDF-backed gcd/lcm,
+    signbit, 1-arg encode.""",
     oracle="""
 SELECT o_orderkey,
        extract(decade from o_orderdate) AS dec_ord,
@@ -1822,31 +1423,15 @@ WHERE o_orderkey <= 500
 ORDER BY o_orderkey
 """,
 )
-def dialect_gap_battery15(spark: SparkSession, sf: str) -> DataFrame:
-    """Sweep batch 17 pinned verbatim: decade/millennium extracts,
-    epoch_ms ROUND-TRIP (extraction then BIGINT-arg construction —
-    exercising the uq_poly probe dispatch both ways in one
-    expression), single-arg make_timestamp(µs), UDF-backed gcd/lcm,
-    signbit, 1-arg encode."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT o_orderkey, "
-        "extract(decade from o_orderdate) AS dec_ord, "
-        "extract(millennium from o_orderdate) AS mil_ord, "
-        "CAST(epoch_ms(epoch_ms(o_orderdate)) AS VARCHAR) AS ms_roundtrip, "
-        "CAST(make_timestamp(epoch_us(o_orderdate)) AS VARCHAR) AS us_roundtrip, "
-        "gcd(o_orderkey, o_custkey) AS g, "
-        "lcm(o_orderkey % 12, 8) AS l, "
-        "signbit(o_totalprice - 150000) AS below_150k, "
-        "octet_length(encode(o_orderpriority)) AS pri_bytes "
-        "FROM orders WHERE o_orderkey <= 500 ORDER BY o_orderkey",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery16",
     tags=("dialect", "battery", "strings"),
+    doc="""Sweep batch 18 pinned verbatim: standard TRIM-FROM syntax (the
+    quoted operand no longer reads as a path table), bare 2-arg trim
+    charset order, polymorphic length() over a list,
+    list_where, position(IN), try_strptime.""",
     oracle="""
 SELECT doc_id,
        trim(BOTH 'aeiou' FROM lang) AS lang_core,
@@ -1862,30 +1447,17 @@ WHERE doc_id <= 300
 ORDER BY doc_id
 """,
 )
-def dialect_gap_battery16(spark: SparkSession, sf: str) -> DataFrame:
-    """Sweep batch 18 pinned verbatim: standard TRIM-FROM syntax (the
-    quoted operand no longer reads as a path table), bare 2-arg trim
-    charset order, polymorphic length() over a list,
-    list_where, position(IN), try_strptime."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT doc_id, "
-        "trim(BOTH 'aeiou' FROM lang) AS lang_core, "
-        "trim(source, 'wb') AS src_trim, "
-        "length(string_split(text, ' ')) AS n_words, "
-        "trim(TRAILING 'ghn' FROM lang) AS lang_rtrim, "
-        "array_to_string(list_where([source, lang, 'x'], [true, false, true]), '|') AS src_mask, "
-        "position('a' IN lang) AS a_pos, "
-        "CAST(try_strptime('2024-' || lpad(CAST(doc_id % 12 + 1 AS VARCHAR), 2, '0') || '-15', "
-        "'%Y-%m-%d') AS VARCHAR) AS mid_month "
-        "FROM documents WHERE doc_id <= 300 ORDER BY doc_id",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery17",
     tags=("dialect", "battery", "lists"),
+    doc="""Sweep batch 19 pinned verbatim: step slices (positive stride and
+    negative reversed walk — the former 2-part parse silently dropped
+    the step), list_sum NULL-skip fold, interpolated list_median on
+    DOUBLE elements, list_first (NULL-keeping), list_any_value,
+    list_resize NULL-pad (DuckDB's own 3-arg fill form crashes on non-constant lists — std::bad_array_new_length — so the fill form is pinned on literals in the unit battery), exact QuoteMeta regexp_escape, array_pop_front.
+    string_split('') per-char split verified identical en route.""",
     oracle="""
 SELECT doc_id,
        array_to_string(string_split(text, ' ')[1:9:3], '|') AS stride3,
@@ -1902,33 +1474,19 @@ WHERE doc_id <= 300
 ORDER BY doc_id
 """,
 )
-def dialect_gap_battery17(spark: SparkSession, sf: str) -> DataFrame:
-    """Sweep batch 19 pinned verbatim: step slices (positive stride and
-    negative reversed walk — the former 2-part parse silently dropped
-    the step), list_sum NULL-skip fold, interpolated list_median on
-    DOUBLE elements, list_first (NULL-keeping), list_any_value,
-    list_resize NULL-pad (DuckDB's own 3-arg fill form crashes on non-constant lists — std::bad_array_new_length — so the fill form is pinned on literals in the unit battery), exact QuoteMeta regexp_escape, array_pop_front.
-    string_split('') per-char split verified identical en route."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT doc_id, "
-        "array_to_string(string_split(text, ' ')[1:9:3], '|') AS stride3, "
-        "array_to_string(string_split(text, ' ')[6:2:-2], '|') AS back2, "
-        "CAST(list_sum([doc_id % 7, n_chars % 5, NULL]) AS BIGINT) AS lsum, "
-        "list_median([CAST(doc_id % 11 AS DOUBLE), 4.0, 7.0, 1.0]) AS lmed, "
-        "list_first(string_split(text, ' ')) AS lfirst, "
-        "list_any_value([NULL, lang, source]) AS lany, "
-        "array_to_string(list_resize([lang, source], 4), '|') AS lresize, "
-        "regexp_escape(substr(source, 1, 3) || '.*') AS resc, "
-        "array_to_string(array_pop_front(string_split(source, '')), '') AS popf "
-        "FROM documents WHERE doc_id <= 300 ORDER BY doc_id",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery18",
     tags=("dialect", "battery", "lists"),
+    doc="""Sweep batch 20 pinned verbatim: bare split() is LITERAL-separator
+    in DuckDB (Spark's split is regex — 'a. ' would match as a pattern:
+    the silent-wrong find of the batch), flatten skips NULL SUBLISTS,
+    factorial beyond BIGINT (21!..29! — DuckDB HUGEINT vs our
+    DECIMAL(38,0), same digits via VARCHAR), postfix ``!``, 1-arg
+    numeric trunc (toward zero, negatives), list_contains FALSE on
+    null-bearing misses (Spark 3VL gives NULL natively), list_indexof,
+    from_hex.""",
     oracle="""
 SELECT doc_id,
        array_to_string(split(text, 'a. '), '~')     AS splt,
@@ -1946,36 +1504,19 @@ WHERE doc_id <= 300
 ORDER BY doc_id
 """,
 )
-def dialect_gap_battery18(spark: SparkSession, sf: str) -> DataFrame:
-    """Sweep batch 20 pinned verbatim: bare split() is LITERAL-separator
-    in DuckDB (Spark's split is regex — 'a. ' would match as a pattern:
-    the silent-wrong find of the batch), flatten skips NULL SUBLISTS,
-    factorial beyond BIGINT (21!..29! — DuckDB HUGEINT vs our
-    DECIMAL(38,0), same digits via VARCHAR), postfix ``!``, 1-arg
-    numeric trunc (toward zero, negatives), list_contains FALSE on
-    null-bearing misses (Spark 3VL gives NULL natively), list_indexof,
-    from_hex."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT doc_id, "
-        "array_to_string(split(text, 'a. '), '~') AS splt, "
-        "split(text, ' ')[2] AS splt2, "
-        "array_to_string(flatten([string_split(lang, ''), NULL, [source]]), '|') AS flat, "
-        "CAST(factorial(CAST(doc_id % 25 AS INTEGER) + 5) AS VARCHAR) AS factbig, "
-        "CAST((CAST(doc_id % 6 AS INTEGER))! AS BIGINT) AS bang, "
-        "CAST(trunc(n_chars / 7.0 - 50) AS BIGINT) AS trnc, "
-        "list_contains([lang, NULL], 'en') AS lc_hit, "
-        "list_contains([source, NULL], 'nope') AS lc_miss, "
-        "list_indexof(string_split(text, ' '), 'the') AS idx, "
-        "octet_length(from_hex('0a0b')) AS fhx "
-        "FROM documents WHERE doc_id <= 300 ORDER BY doc_id",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery19",
     tags=("dialect", "battery", "json"),
+    doc="""Sweep batch 21 pinned verbatim: the json-extension tail over
+    data-dependent inputs — constructors (NULL-key drop, 'null'
+    elements, quote asymmetry), minify, RFC-7386 merge with null-key
+    removal, structure skeletons (UBIGINT widening to DOUBLE), typed
+    path extraction, strict containment, and the group aggregates over
+    singleton groups (multi-element ordering pinned in the unit battery
+    on local[1] — input order is the shared caveat with 1-arg
+    string_agg on both engines).""",
     oracle="""
 SELECT doc_id,
        json_object('lang', lang, 'n', n_chars, NULL, 'x') AS jobj,
@@ -1994,37 +1535,18 @@ GROUP BY doc_id, lang, source, n_chars, text
 ORDER BY doc_id
 """,
 )
-def dialect_gap_battery19(spark: SparkSession, sf: str) -> DataFrame:
-    """Sweep batch 21 pinned verbatim: the json-extension tail over
-    data-dependent inputs — constructors (NULL-key drop, 'null'
-    elements, quote asymmetry), minify, RFC-7386 merge with null-key
-    removal, structure skeletons (UBIGINT widening to DOUBLE), typed
-    path extraction, strict containment, and the group aggregates over
-    singleton groups (multi-element ordering pinned in the unit battery
-    on local[1] — input order is the shared caveat with 1-arg
-    string_agg on both engines)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT doc_id, "
-        "json_object('lang', lang, 'n', n_chars, NULL, 'x') AS jobj, "
-        "json_array(doc_id, lang, NULL) AS jarr, "
-        "json_quote(substr(text, 1, 20)) AS jq, "
-        "json(concat('{\"a\": ', CAST(doc_id % 5 AS VARCHAR), ' ,  \"b\":\"', lang, '\"}')) AS jmin, "
-        "json_merge_patch(concat('{\"a\":', CAST(doc_id % 3 AS VARCHAR), '}'), '{\"b\":2,\"a\":null}') AS jmp, "
-        "json_structure(concat('[', CAST(doc_id % 7 AS VARCHAR), ', ', CAST(n_chars AS VARCHAR), '.5]')) AS jst, "
-        "json_type(concat('{\"k\":', CAST(doc_id AS VARCHAR), '}'), 'k') AS jt2, "
-        "json_contains(concat('[1,2,', CAST(doc_id % 9 AS VARCHAR), ']'), '7') AS jc, "
-        "json_group_array(lang) AS jga, "
-        "json_group_object(source, n_chars) AS jgo "
-        "FROM documents WHERE doc_id <= 300 "
-        "GROUP BY doc_id, lang, source, n_chars, text ORDER BY doc_id",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery20",
     tags=("dialect", "battery", "strings"),
+    doc="""Sweep batch 22 pinned verbatim: printf over mixed specs with
+    data-dependent args, grapheme substring/length with the negative/
+    zero start window rules, split_part (positive / negative / the
+    literal-0 empty case), list-form strptime (first format fails →
+    second matches), AT TIME ZONE through epoch (the instant survives
+    the display-form deviation), and INTERVAL-step generate_series
+    casting DATE bounds to TIMESTAMP elements.""",
     oracle="""
 SELECT doc_id,
        printf('%s #%05d: %7.3f / %x', lang, CAST(doc_id AS INTEGER), n_chars / 7.0, n_chars) AS pf,
@@ -2044,37 +1566,18 @@ WHERE doc_id <= 300
 ORDER BY doc_id
 """,
 )
-def dialect_gap_battery20(spark: SparkSession, sf: str) -> DataFrame:
-    """Sweep batch 22 pinned verbatim: printf over mixed specs with
-    data-dependent args, grapheme substring/length with the negative/
-    zero start window rules, split_part (positive / negative / the
-    literal-0 empty case), list-form strptime (first format fails →
-    second matches), AT TIME ZONE through epoch (the instant survives
-    the display-form deviation), and INTERVAL-step generate_series
-    casting DATE bounds to TIMESTAMP elements."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT doc_id, "
-        "printf('%s #%05d: %7.3f / %x', lang, CAST(doc_id AS INTEGER), n_chars / 7.0, n_chars) AS pf, "
-        "substring_grapheme(substr(text, 1, 30), CAST(doc_id % 10 AS INTEGER) - 3, 8) AS sg, "
-        "length_grapheme(substr(text, 1, 40)) AS lg, "
-        "split_part(text, ' ', 3) AS sp3, "
-        "split_part(text, ' ', -2) AS spm2, "
-        "split_part(text, ' ', 0) AS sp0, "
-        "CAST(strptime(concat('2024-', lpad(CAST(doc_id % 12 + 1 AS VARCHAR), 2, '0'), '-15'), "
-        "['%d/%m/%Y', '%Y-%m-%d']) AS TIMESTAMP) AS stp, "
-        "epoch(CAST(concat('2024-03-0', CAST(doc_id % 9 + 1 AS VARCHAR), ' 12:00:00') AS TIMESTAMP) "
-        "AT TIME ZONE 'America/New_York') AS tzep, "
-        "CAST(generate_series(DATE '2024-01-01', DATE '2024-01-01' + CAST(doc_id % 3 AS INTEGER), "
-        "INTERVAL 1 DAY) AS VARCHAR) AS gser "
-        "FROM documents WHERE doc_id <= 300 ORDER BY doc_id",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery21",
     tags=("dialect", "battery", "misc"),
+    doc="""Sweep batch 23 pinned verbatim: dollar-quoted literals, the
+    element_at MAP accessor (single-element list, empty on miss —
+    serialized per the scalar-column lint), exact bar() rendering over
+    data-dependent fractions, bitstring zero-pad, date_trunc's DATE
+    return for coarse units (string forms match), and timezone() via
+    epoch (instant-equality across the TIMESTAMPTZ display deviation).
+    me_miss unwraps the empty miss list to NULL on both sides ([1]).""",
     oracle="""
 SELECT o_orderkey,
        $$fixed $tag$ text$$                                  AS dq,
@@ -2090,33 +1593,17 @@ WHERE o_orderkey <= 800
 ORDER BY o_orderkey
 """,
 )
-def dialect_gap_battery21(spark: SparkSession, sf: str) -> DataFrame:
-    """Sweep batch 23 pinned verbatim: dollar-quoted literals, the
-    element_at MAP accessor (single-element list, empty on miss —
-    serialized per the scalar-column lint), exact bar() rendering over
-    data-dependent fractions, bitstring zero-pad, date_trunc's DATE
-    return for coarse units (string forms match), and timezone() via
-    epoch (instant-equality across the TIMESTAMPTZ display deviation).
-    me_miss unwraps the empty miss list to NULL on both sides ([1])."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT o_orderkey, "
-        "$$fixed $tag$ text$$ AS dq, "
-        "element_at(MAP {'p': o_orderpriority}, 'p')[1] AS me, "
-        "element_at(MAP {'p': o_orderpriority}, concat('x', o_orderstatus))[1] AS me_miss, "
-        "bar(o_totalprice % 97, 0, 100, 12) AS brr, "
-        "CAST(bitstring(CASE o_orderstatus WHEN 'F' THEN '10' ELSE '1' END, 6) AS VARCHAR) AS bits, "
-        "CAST(date_trunc('week', o_orderdate) AS VARCHAR) AS wk, "
-        "CAST(date_trunc('quarter', o_orderdate) AS VARCHAR) AS qtr, "
-        "epoch(timezone('America/New_York', CAST(o_orderdate AS TIMESTAMP))) AS tzep "
-        "FROM orders WHERE o_orderkey <= 800 ORDER BY o_orderkey",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery22",
     tags=("dialect", "battery", "misc"),
+    doc="""Sweep batch 24 pinned verbatim: typeof over scalar/list types
+    (DuckDB typename rendering), from_json/json_transform structure
+    translation with struct field access, array_slice with a negative
+    step and over a STRING (bracket-machinery polymorphism), and the
+    SQL-standard OFFSET n ROWS + FETCH NEXT n ROWS ONLY page clause
+    (order-swapped into Spark's LIMIT/OFFSET).""",
     oracle="""
 SELECT o_orderkey,
        typeof(o_totalprice)                                        AS tp,
@@ -2133,33 +1620,19 @@ ORDER BY o_orderkey
 OFFSET 5 ROWS FETCH NEXT 600 ROWS ONLY
 """,
 )
-def dialect_gap_battery22(spark: SparkSession, sf: str) -> DataFrame:
-    """Sweep batch 24 pinned verbatim: typeof over scalar/list types
-    (DuckDB typename rendering), from_json/json_transform structure
-    translation with struct field access, array_slice with a negative
-    step and over a STRING (bracket-machinery polymorphism), and the
-    SQL-standard OFFSET n ROWS + FETCH NEXT n ROWS ONLY page clause
-    (order-swapped into Spark's LIMIT/OFFSET)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT o_orderkey, "
-        "typeof(o_totalprice) AS tp, "
-        "typeof([o_orderstatus]) AS tl, "
-        "from_json(concat('{\"k\":', CAST(o_orderkey AS VARCHAR), ',\"s\":\"', o_orderstatus, '\"}'), "
-        "'{\"k\":\"BIGINT\",\"s\":\"VARCHAR\"}').k AS fjk, "
-        "json_transform(concat('{\"k\":', CAST(o_orderkey % 7 AS VARCHAR), '}'), "
-        "'{\"k\":\"VARCHAR\"}').k AS jtk, "
-        "array_to_string(array_slice(string_split(o_orderpriority, ''), 5, 1, -2), '') AS sl, "
-        "array_slice(o_orderpriority, 2, 12) AS sstr "
-        "FROM orders WHERE o_orderkey <= 800 ORDER BY o_orderkey "
-        "OFFSET 5 ROWS FETCH NEXT 600 ROWS ONLY",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery23",
     tags=("dialect", "battery", "misc"),
+    doc="""Sweep batch 25 pinned verbatim: dot-chained method calls over
+    columns (upper→substr chain, list_sum over a split), MAP literal
+    subscripts returning DuckDB's single-element LIST (+[1] unwrap),
+    STRUCT subscript field access, CAST AS JSON (VARCHAR text
+    preserved, numbers encoded), and the session identity literals.
+    The mp column stays a LIST on both engines — serialized via the
+    [1] unwrap columns for the scalar lint (mp itself is emitted as
+    array_to_string below).""",
     oracle="""
 SELECT p_partkey,
        p_name.upper().substr(3, 8)                       AS chained,
@@ -2176,35 +1649,18 @@ WHERE p_partkey <= 400
 ORDER BY p_partkey
 """,
 )
-def dialect_gap_battery23(spark: SparkSession, sf: str) -> DataFrame:
-    """Sweep batch 25 pinned verbatim: dot-chained method calls over
-    columns (upper→substr chain, list_sum over a split), MAP literal
-    subscripts returning DuckDB's single-element LIST (+[1] unwrap),
-    STRUCT subscript field access, CAST AS JSON (VARCHAR text
-    preserved, numbers encoded), and the session identity literals.
-    The mp column stays a LIST on both engines — serialized via the
-    [1] unwrap columns for the scalar lint (mp itself is emitted as
-    array_to_string below)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT p_partkey, "
-        "p_name.upper().substr(3, 8) AS chained, "
-        "CAST([p_size, p_partkey % 5].list_sum() AS BIGINT) AS chain_sum, "
-        "array_to_string(MAP {'brand': p_brand}['brand'], '|') AS mp, "
-        "MAP {'brand': p_brand}['brand'][1] AS mp1, "
-        "{'t': p_type}['t'] AS st, "
-        "CAST(concat('{\"k\": ', CAST(p_partkey % 9 AS VARCHAR), '}') AS JSON) AS jc, "
-        "CAST(p_size AS JSON) AS jn, "
-        "current_database() AS db, "
-        "current_user AS usr "
-        "FROM part WHERE p_partkey <= 400 ORDER BY p_partkey",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery24",
     tags=("dialect", "battery", "introspection"),
+    doc="""Batch 27 pinned verbatim: the information_schema introspection
+    surface over the nine date/scalar-typed driver tables (events'
+    TIMESTAMP_NS column is the excluded known width deviation — DuckDB
+    reports the parquet nanos type, our views read it as TIMESTAMP).
+    Both engines list the same views with the same DuckDB typenames
+    (INTEGER/BIGINT/VARCHAR/DOUBLE/DATE/FLOAT[]), joined across the
+    tables/columns relations.""",
     oracle="""
 SELECT c.table_name, c.column_name, c.ordinal_position, c.data_type,
        c.is_nullable, t.table_type
@@ -2215,30 +1671,16 @@ WHERE c.table_name IN ('region','nation','customer','supplier','part',
 ORDER BY c.table_name, c.ordinal_position
 """,
 )
-def dialect_gap_battery24(spark: SparkSession, sf: str) -> DataFrame:
-    """Batch 27 pinned verbatim: the information_schema introspection
-    surface over the nine date/scalar-typed driver tables (events'
-    TIMESTAMP_NS column is the excluded known width deviation — DuckDB
-    reports the parquet nanos type, our views read it as TIMESTAMP).
-    Both engines list the same views with the same DuckDB typenames
-    (INTEGER/BIGINT/VARCHAR/DOUBLE/DATE/FLOAT[]), joined across the
-    tables/columns relations."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT c.table_name, c.column_name, c.ordinal_position, c.data_type, "
-        "c.is_nullable, t.table_type "
-        "FROM information_schema.columns c "
-        "JOIN information_schema.tables t ON c.table_name = t.table_name "
-        "WHERE c.table_name IN ('region','nation','customer','supplier','part',"
-        "'orders','lineitem','documents','embeddings') "
-        "ORDER BY c.table_name, c.ordinal_position",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery25",
     tags=("dialect", "battery", "strings"),
+    doc="""Sweep batch 28 pinned verbatim: grapheme-aware reverse over
+    data, the format() spec mini-language (align/zero-pad/precision/
+    hex/grouping/binary) with data-dependent args, integer-keyed MAP
+    subscript list unwrap, named-group regexp_extract struct field,
+    comparable ::INTERVAL literals, timezone_hour.""",
     oracle="""
 SELECT p_partkey,
        reverse(substr(p_name, 1, 12))                     AS rev,
@@ -2255,32 +1697,16 @@ WHERE p_partkey <= 400
 ORDER BY p_partkey
 """,
 )
-def dialect_gap_battery25(spark: SparkSession, sf: str) -> DataFrame:
-    """Sweep batch 28 pinned verbatim: grapheme-aware reverse over
-    data, the format() spec mini-language (align/zero-pad/precision/
-    hex/grouping/binary) with data-dependent args, integer-keyed MAP
-    subscript list unwrap, named-group regexp_extract struct field,
-    comparable ::INTERVAL literals, timezone_hour."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT p_partkey, "
-        "reverse(substr(p_name, 1, 12)) AS rev, "
-        "format('{:>10}|{:05d}|{:.3f}|{:x}|{:,}', substr(p_brand, 1, 8), "
-        "CAST(p_partkey % 999 AS INTEGER), p_retailprice / 7, "
-        "CAST(p_size AS BIGINT), CAST(p_partkey AS BIGINT) * 1001) AS fmtd, "
-        "format('{:08b}', CAST(p_size AS BIGINT)) AS fbin, "
-        "MAP {1: p_brand}[1][1] AS mik, "
-        "regexp_extract(p_type, '(\\w+) (\\w+)', ['head', 'mid']).mid AS rx, "
-        "('2 days'::INTERVAL > '1 day'::INTERVAL) AS iv, "
-        "timezone_hour(CAST(DATE '2024-01-01' AS TIMESTAMP)) AS tzh "
-        "FROM part WHERE p_partkey <= 400 ORDER BY p_partkey",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery26",
     tags=("dialect", "battery", "unicode"),
+    doc="""Unicode parity pinned on data (batch 28): utf8proc SIMPLE case
+    mapping (ß→ẞ, İ→i, no final-sigma context) through the non-ASCII
+    UDF path AND the ASCII native fast path side by side; byte-based
+    levenshtein (é counts 2); byte-equal hamming; grapheme-aware
+    reverse over a combining-accent prefix.""",
     oracle="""
 SELECT doc_id,
        upper(concat('straße-', lang))                    AS up_simple,
@@ -2295,30 +1721,21 @@ WHERE doc_id <= 300
 ORDER BY doc_id
 """,
 )
-def dialect_gap_battery26(spark: SparkSession, sf: str) -> DataFrame:
-    """Unicode parity pinned on data (batch 28): utf8proc SIMPLE case
-    mapping (ß→ẞ, İ→i, no final-sigma context) through the non-ASCII
-    UDF path AND the ASCII native fast path side by side; byte-based
-    levenshtein (é counts 2); byte-equal hamming; grapheme-aware
-    reverse over a combining-accent prefix."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT doc_id, "
-        "upper(concat('straße-', lang)) AS up_simple, "
-        "lower(concat('İΣTANBULΣ-', source)) AS low_simple, "
-        "upper(substr(text, 1, 20)) AS up_ascii, "
-        "levenshtein(concat('é', lang), concat('e', lang)) AS lev_bytes, "
-        "levenshtein(substr(text, 1, 10), lang) AS lev_ascii, "
-        "hamming(concat('é', source), concat('é', source)) AS ham_eq, "
-        "reverse(concat('é', substr(text, 1, 8))) AS rev_g "
-        "FROM documents WHERE doc_id <= 300 ORDER BY doc_id",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery27",
     tags=("dialect", "battery", "arithmetic"),
+    doc="""Round-7 ÷0 parity pinned on data (VERDICT r6 #2 / NOTES
+    'ANSI-mode follow-up'): DuckDB returns NULL for x/0, x%0 and x//0
+    in EVERY numeric type (DOUBLE included — NOT Infinity) where
+    Spark's ANSI mode raises; the nullif-divisor wrap
+    (`rewrite.py _rewrite_div_by_zero`) must make zero-hitting data
+    divisors (modulo cycles, always-zero columns, CASE-selected
+    zeros, literal 0.0) agree row-for-row — and DuckDB's `/` is
+    always DOUBLE, so the decimal-operand division must come back
+    DOUBLE, not Spark's DECIMAL. Fuzz companion: the `div` axis in
+    tools/dialect_fuzz.py (1440 cases, two seeds, clean).""",
     oracle="""
 SELECT p_partkey,
        p_retailprice / (p_partkey % 5) AS d1,
@@ -2333,37 +1750,21 @@ SELECT p_partkey,
 FROM part WHERE p_partkey <= 300 ORDER BY p_partkey
 """,
 )
-def dialect_gap_battery27(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-7 ÷0 parity pinned on data (VERDICT r6 #2 / NOTES
-    'ANSI-mode follow-up'): DuckDB returns NULL for x/0, x%0 and x//0
-    in EVERY numeric type (DOUBLE included — NOT Infinity) where
-    Spark's ANSI mode raises; the nullif-divisor wrap
-    (`rewrite.py _rewrite_div_by_zero`) must make zero-hitting data
-    divisors (modulo cycles, always-zero columns, CASE-selected
-    zeros, literal 0.0) agree row-for-row — and DuckDB's `/` is
-    always DOUBLE, so the decimal-operand division must come back
-    DOUBLE, not Spark's DECIMAL. Fuzz companion: the `div` axis in
-    tools/dialect_fuzz.py (1440 cases, two seeds, clean)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT p_partkey, "
-        "p_retailprice / (p_partkey % 5) AS d1, "
-        "p_partkey % (p_size - p_size) AS m0, "
-        "CAST(p_partkey // (p_partkey % 3) AS BIGINT) AS idiv, "
-        "round(p_retailprice / nullif(p_size, 0), 3) AS safe, "
-        "CAST(1.50 AS DECIMAL(10,2)) / 2 AS decdiv, "
-        "p_retailprice / 0.0 AS dz, "
-        "(p_partkey * 3) / (p_partkey % 4) * 2 AS chain, "
-        "p_partkey / CASE WHEN p_size > 25 THEN 0 ELSE p_size END AS cdiv, "
-        "p_retailprice % (p_partkey % 7) AS m1 "
-        "FROM part WHERE p_partkey <= 300 ORDER BY p_partkey",
-    )
 
 
-@register(
+register_sql(
     "dialect_gap_battery28",
     tags=("dialect", "battery", "subquery"),
+    doc="""Round-7 close of the last documented SILENT value deviation
+    (NOTES batch 28 / VERDICT r6 #6): projected ``x [NOT] IN (SELECT
+    …)`` over a NULL-bearing, non-matching subquery is NULL in DuckDB
+    but FALSE on Spark's single-ExistenceJoin plan. The
+    `_rewrite_in_subquery_null` pass turns SELECT-position IN into a
+    three-valued CASE (match → TRUE; NULL element forces NULL; else
+    Spark's own IN) while WHERE/HAVING/ON positions — value-identical,
+    NULL filters like FALSE — keep the fast semi-join plan. Pinned
+    here on data: 94 of 201 rows land in the NULL-forced class, plus
+    the clean-set and empty-set (FALSE even for NULL probe) corners.""",
     oracle="""
 SELECT p_partkey,
        p_size IN (SELECT CASE WHEN o_orderkey % 3 = 0 THEN NULL
@@ -2379,33 +1780,6 @@ SELECT p_partkey,
 FROM part WHERE p_partkey <= 200 ORDER BY p_partkey
 """,
 )
-def dialect_gap_battery28(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-7 close of the last documented SILENT value deviation
-    (NOTES batch 28 / VERDICT r6 #6): projected ``x [NOT] IN (SELECT
-    …)`` over a NULL-bearing, non-matching subquery is NULL in DuckDB
-    but FALSE on Spark's single-ExistenceJoin plan. The
-    `_rewrite_in_subquery_null` pass turns SELECT-position IN into a
-    three-valued CASE (match → TRUE; NULL element forces NULL; else
-    Spark's own IN) while WHERE/HAVING/ON positions — value-identical,
-    NULL filters like FALSE — keep the fast semi-join plan. Pinned
-    here on data: 94 of 201 rows land in the NULL-forced class, plus
-    the clean-set and empty-set (FALSE even for NULL probe) corners."""
-    load_tables(spark, sf)
-    return _rewritten_sql(
-        spark,
-        "SELECT p_partkey, "
-        "p_size IN (SELECT CASE WHEN o_orderkey % 3 = 0 THEN NULL "
-        "ELSE o_orderkey % 40 END FROM orders WHERE o_orderkey <= 50) "
-        "AS in_nullset, "
-        "p_size NOT IN (SELECT CASE WHEN o_orderkey % 3 = 0 THEN NULL "
-        "ELSE o_orderkey % 40 END FROM orders WHERE o_orderkey <= 50) "
-        "AS notin_nullset, "
-        "p_size IN (SELECT o_orderkey % 40 FROM orders WHERE o_orderkey <= 50) "
-        "AS in_clean, "
-        "p_size IN (SELECT o_orderkey FROM orders WHERE o_orderkey < 0) "
-        "AS in_empty "
-        "FROM part WHERE p_partkey <= 200 ORDER BY p_partkey",
-    )
 
 
 _B29_SQL = """
@@ -2441,13 +1815,10 @@ FROM (
 """
 
 
-@register(
+register_sql(
     "dialect_gap_battery29",
     tags=("dialect", "battery", "aggregate"),
-    oracle=_B29_SQL,
-)
-def dialect_gap_battery29(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-8 close of the list()/array_agg NULL-element drop — the
+    doc="""Round-8 close of the list()/array_agg NULL-element drop — the
     last known silent wrong-value class (VERDICT r7 'What's wrong' #1 /
     NOTES item 11): DuckDB's list()/array_agg KEEP NULL elements and
     return NULL (never []) when no rows aggregate; Spark's
@@ -2458,9 +1829,9 @@ def dialect_gap_battery29(spark: SparkSession, sf: str) -> DataFrame:
     ordered pass gained the same FILTER fold + empty guard. Pinned on
     data: NULL-forced elements in ordered/unordered/DISTINCT/FILTER
     forms plus the FILTER(FALSE) empty→NULL corner, canonicalized
-    with list_sort (unordered element order is engine-unspecified)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B29_SQL)
+    with list_sort (unordered element order is engine-unspecified).""",
+    oracle=_B29_SQL,
+)
 
 
 _B30_SQL = """
@@ -2485,22 +1856,19 @@ FROM (
 """
 
 
-@register(
+register_sql(
     "dialect_gap_battery30",
     tags=("dialect", "battery", "window"),
-    oracle=_B30_SQL,
-)
-def dialect_gap_battery30(spark: SparkSession, sf: str) -> DataFrame:
-    """Windowed companion to battery29: list() OVER running frames
+    doc="""Windowed companion to battery29: list() OVER running frames
     keeps NULL elements (collect_list over structs rides the window
     spec), DISTINCT-over-window via array_distinct outside the unwrap,
     and FILTER-over-window CASE-folds into the struct so excluded rows
     vanish without the old NULL-drop shortcut (which would now
     silently delete the NULL elements this pass exists to keep).
     Running frames are deterministic; the partition-wide DISTINCT
-    array is canonicalized with list_sort."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B30_SQL)
+    array is canonicalized with list_sort.""",
+    oracle=_B30_SQL,
+)
 
 
 _B31_SQL = """
@@ -2525,20 +1893,17 @@ ORDER BY o_orderkey
 """
 
 
-@register(
+register_sql(
     "dialect_gap_battery31",
     tags=("dialect", "battery", "window"),
-    oracle=_B31_SQL,
-)
-def dialect_gap_battery31(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-8 raise-tail shrink pinned on data: window-frame EXCLUDE
+    doc="""Round-8 raise-tail shrink pinned on data: window-frame EXCLUDE
     GROUP / TIES for the invertible aggregates (r7 verdict item 5) —
     frame aggregate minus the peer group's second-window contribution,
     TIES adding the current row back; RANGE frames only. The
     o_orderdate keys are non-unique within partitions, so real peer
-    groups (and the NULL-on-empty-exclusion guard) are exercised."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B31_SQL)
+    groups (and the NULL-on-empty-exclusion guard) are exercised.""",
+    oracle=_B31_SQL,
+)
 
 
 _B32_SQL = """
@@ -2626,21 +1991,19 @@ ORDER BY grp
 """
 
 
-@register(
+register_sql(
     "dialect_gap_battery32",
     tags=("dialect", "battery", "aggregate"),
-    oracle=_B32_ORACLE_SQL,
-)
-def dialect_gap_battery32(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-8 nested-aggregate FILTER + DISTINCT forms pinned on data
+    doc="""Round-8 nested-aggregate FILTER + DISTINCT forms pinned on data
     (r7 verdict item 5): mad/entropy with FILTER (CASE-folded into the
     argument — all three nested aggs skip NULLs, so the fold is exact)
     and the DISTINCT closed forms (entropy = log2(n_distinct); mad
     dedupes via collect_set with a percentile(DISTINCT) median).
     Round-13: oracle rebuilt version-portable (_B32_ORACLE_SQL note —
-    explicit order statistics and entropy sums, no mad/entropy call)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B32_SQL)
+    explicit order statistics and entropy sums, no mad/entropy call).""",
+    oracle=_B32_ORACLE_SQL,
+    sql=_B32_SQL,
+)
 
 
 _B33_SQL = """
@@ -2664,13 +2027,10 @@ ORDER BY event_id
 """
 
 
-@register(
+register_sql(
     "dialect_gap_battery33",
     tags=("dialect", "battery", "time"),
-    oracle=_B33_SQL,
-)
-def dialect_gap_battery33(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-8 TIME graduation pinned on data: Spark 4.1's TIME type
+    doc="""Round-8 TIME graduation pinned on data: Spark 4.1's TIME type
     (behind spark.sql.timeType.enabled, set by the session factory,
     load_tables AND the rewriter) covers literals, VARCHAR<->TIME
     round-trips, comparisons, greatest, hour/minute extraction and
@@ -2683,9 +2043,9 @@ def dialect_gap_battery33(spark: SparkSession, sf: str) -> DataFrame:
     TIMESTAMP and INTERVAL extracts too (DIV 1 wrap, toward-zero like
     DuckDB). The one deviation this battery left open — TIME + INTERVAL
     raising DATETIME_OVERFLOW instead of wrapping — closed in round 9
-    (battery34)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B33_SQL)
+    (battery34).""",
+    oracle=_B33_SQL,
+)
 
 
 _B34_SQL = """
@@ -2748,13 +2108,10 @@ ORDER BY event_id
 """
 
 
-@register(
+register_sql(
     "dialect_gap_battery34",
     tags=("dialect", "battery", "time"),
-    oracle=_B34_ORACLE_SQL,
-)
-def dialect_gap_battery34(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-9 raise-tail close (r8 verdict item 5a, NOTES 21g): TIME ±
+    doc="""Round-9 raise-tail close (r8 verdict item 5a, NOTES 21g): TIME ±
     INTERVAL wraps past midnight in DuckDB (mod 24 h) where Spark's
     native TIME arithmetic raises DATETIME_OVERFLOW. The rewriter's
     two-level uq_poly dispatch (rewrite.py _time_wrap_marker) keeps
@@ -2764,9 +2121,10 @@ def dialect_gap_battery34(spark: SparkSession, sf: str) -> DataFrame:
     fractional-second intervals, and the commuted INTERVAL + TIME form
     all hash-match DuckDB here. Also pins round 9's other
     raise-tail close: mad(DISTINCT) OVER a window (aggregate()-as-LET
-    translation, test_round9_mad_distinct_over)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B34_SQL)
+    translation, test_round9_mad_distinct_over).""",
+    oracle=_B34_ORACLE_SQL,
+    sql=_B34_SQL,
+)
 
 
 _B35_SQL = """
@@ -2794,13 +2152,10 @@ FROM src ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_battery35",
     tags=("dialect", "battery", "subscript"),
-    oracle=_B35_SQL,
-)
-def dialect_gap_battery35(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-10 NOTES-1 burndown (r9 verdict item 8): map/struct/list
+    doc="""Round-10 NOTES-1 burndown (r9 verdict item 8): map/struct/list
     COLUMN subscripts pinned on data. The NOTES deviation 'map COLUMN
     subscripts stay scalar' is STALE — the uq_polymap/uq_polymapi
     LIMIT-0 probes resolve map-vs-struct-vs-list per site, so string
@@ -2812,9 +2167,9 @@ def dialect_gap_battery35(spark: SparkSession, sf: str) -> DataFrame:
     hash-table artifact (reverse-first-occurrence only below ~14
     distinct values), irreproducible by construction — so the battery
     pins the sound order-free form (list_sort o list_distinct), which
-    also pins NULL removal."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B35_SQL)
+    also pins NULL removal.""",
+    oracle=_B35_SQL,
+)
 
 
 
@@ -2853,19 +2208,16 @@ FROM src ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b36_temporal",
     tags=("dialect", "battery", "functions"),
-    oracle=_B36_TEMPORAL_SQL,
-)
-def dialect_gap_b36_temporal(spark: SparkSession, sf: str) -> DataFrame:
-    """b36 split, temporal family: last_day/monthname/dayname/
+    doc="""b36 split, temporal family: last_day/monthname/dayname/
     weekofyear, strftime week-number codes %U/%W/%V/%G plus literal
     letters in formats, date-typed subtract(), epoch_ns. Probed
     version-STABLE: 1.0.0's %U/%W/%V/%G agree with C-standard strftime
-    (Python differential, 40 dates spanning ISO-year boundaries)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B36_TEMPORAL_SQL)
+    (Python differential, 40 dates spanning ISO-year boundaries).""",
+    oracle=_B36_TEMPORAL_SQL,
+)
 
 
 _B36_INTDIV_SQL = _B36_SRC + """
@@ -2881,20 +2233,17 @@ FROM src ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b36_intdiv",
     tags=("dialect", "battery", "functions"),
-    oracle=_B36_INTDIV_SQL,
-)
-def dialect_gap_b36_intdiv(spark: SparkSession, sf: str) -> DataFrame:
-    """b36 split, integral operator-alias family: divide()/`//` on
+    doc="""b36 split, integral operator-alias family: divide()/`//` on
     integral operands (truncating), ÷0 and mod-0 → NULL (probed on
     1.0.0; NULL-on-zero has been DuckDB behavior since 0.x),
     add/multiply/xor. Integral division semantics are stable across
     DuckDB versions — the version-suspect FRACTIONAL forms live in
-    dialect_gap_b36_fracdiv so a driver hash bit separates them."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B36_INTDIV_SQL)
+    dialect_gap_b36_fracdiv so a driver hash bit separates them.""",
+    oracle=_B36_INTDIV_SQL,
+)
 
 
 _B36_FRACDIV_SQL = _B36_SRC + """
@@ -2908,13 +2257,10 @@ FROM src ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b36_fracdiv",
     tags=("dialect", "battery", "functions"),
-    oracle=_B36_FRACDIV_SQL,
-)
-def dialect_gap_b36_fracdiv(spark: SparkSession, sf: str) -> DataFrame:
-    """b36 split, FRACTIONAL division family — deliberately isolated:
+    doc="""b36 split, FRACTIONAL division family — deliberately isolated:
     on DuckDB 1.0.0, `//` and divide() on fractional operands perform
     PLAIN division (probed: 42.7 // 5 = 8.54, CAST(9.7 AS DECIMAL) //
     2 = 4.85) while fdiv/fmod are floored (fdiv(9.7, 2) = 4.0). The
@@ -2924,9 +2270,9 @@ def dialect_gap_b36_fracdiv(spark: SparkSession, sf: str) -> DataFrame:
     marks THIS entry red while b36_intdiv stays green, the 1.5.2
     semantic is floored division on fractional operands and the
     divide/`//` dispatch in rewrite.py:_rewrite_divide_xor should
-    switch its double arm to floor()."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B36_FRACDIV_SQL)
+    switch its double arm to floor().""",
+    oracle=_B36_FRACDIV_SQL,
+)
 
 
 _B36_MAPLIST_SQL = _B36_SRC + """
@@ -2941,21 +2287,18 @@ FROM src ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b36_maplist",
     tags=("dialect", "battery", "functions"),
-    oracle=_B36_MAPLIST_SQL,
-)
-def dialect_gap_b36_maplist(spark: SparkSession, sf: str) -> DataFrame:
-    """b36 split, map/list family: map_entries (insertion-ordered
+    doc="""b36 split, map/list family: map_entries (insertion-ordered
     struct list), cardinality, map_concat + single-element-LIST map
     subscript, list_select / list_grade_up / list_reverse_sort.
     The map-subscript-returns-LIST shape is structural: were the
     driver's DuckDB to return the value directly, the oracle would
     ERROR (it records err, not a hash bit), so a red here is a value
-    divergence inside the list functions."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B36_MAPLIST_SQL)
+    divergence inside the list functions.""",
+    oracle=_B36_MAPLIST_SQL,
+)
 
 
 _B36_LISTUNIQ_SPARK_SQL = _B36_SRC + """
@@ -2988,13 +2331,10 @@ FROM src ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b36_listuniq",
     tags=("dialect", "battery", "functions"),
-    oracle=_B36_LISTUNIQ_ORACLE_SQL,
-)
-def dialect_gap_b36_listuniq(spark: SparkSession, sf: str) -> DataFrame:
-    """b36 split, list_unique/array_unique NULL counting — the
+    doc="""b36 split, list_unique/array_unique NULL counting — the
     CONFIRMED round-10 version divergence: DuckDB 1.0.0 (local binary)
     excludes NULL from the distinct count (probed: list_unique([1, 1,
     NULL, -3, -3, -3]) = 2) while ≥1.1 — including the reference's
@@ -3002,9 +2342,10 @@ def dialect_gap_b36_listuniq(spark: SparkSession, sf: str) -> DataFrame:
     3). The Spark side implements the 1.5.2 semantic (array_distinct
     keeps NULL); the oracle derives the same value portably so the
     entry is green on ANY oracle version (see
-    _B36_LISTUNIQ_ORACLE_SQL)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B36_LISTUNIQ_SPARK_SQL)
+    _B36_LISTUNIQ_ORACLE_SQL).""",
+    oracle=_B36_LISTUNIQ_ORACLE_SQL,
+    sql=_B36_LISTUNIQ_SPARK_SQL,
+)
 
 
 _B36_STRDIST_SQL = _B36_SRC + """
@@ -3020,18 +2361,15 @@ FROM src ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b36_strdist",
     tags=("dialect", "battery", "functions"),
-    oracle=_B36_STRDIST_SQL,
-)
-def dialect_gap_b36_strdist(spark: SparkSession, sf: str) -> DataFrame:
-    """b36 split, string-distance/position family: jaccard (character
+    doc="""b36 split, string-distance/position family: jaccard (character
     -set similarity; 1.0.0 matches the current docs example
     jaccard('duck', 'luck') = 0.6), mismatches/hamming, unicode∘chr,
-    strpos, standard position(x IN y), bit_length."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B36_STRDIST_SQL)
+    strpos, standard position(x IN y), bit_length.""",
+    oracle=_B36_STRDIST_SQL,
+)
 
 
 _B36_MATH_SQL = _B36_SRC + """
@@ -3060,18 +2398,16 @@ FROM src ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b36_math",
     tags=("dialect", "battery", "functions"),
-    oracle=_B36_MATH_ORACLE_SQL,
-)
-def dialect_gap_b36_math(spark: SparkSession, sf: str) -> DataFrame:
-    """b36 split, math family: gamma/lgamma/factorial, even (round
+    doc="""b36 split, math family: gamma/lgamma/factorial, even (round
     away from zero to the next even integer), cot — r12 re-derived to
     version-portable domains after the r11 driver hash-fail (see
-    _B36_MATH_ORACLE_SQL note and the dialect_gap_b36m_* bisection)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B36_MATH_SQL)
+    _B36_MATH_ORACLE_SQL note and the dialect_gap_b36m_* bisection).""",
+    oracle=_B36_MATH_ORACLE_SQL,
+    sql=_B36_MATH_SQL,
+)
 
 
 _B36_BASECONV_SQL = _B36_SRC + """
@@ -3083,17 +2419,14 @@ FROM src ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b36_baseconv",
     tags=("dialect", "battery", "functions"),
+    doc="""b36 split, base-conversion family: to_base (uppercase digits,
+    1.0.0 matches the current docs example to_base(42, 16) = '2A'),
+    hex (no leading-zero pair trim), bin.""",
     oracle=_B36_BASECONV_SQL,
 )
-def dialect_gap_b36_baseconv(spark: SparkSession, sf: str) -> DataFrame:
-    """b36 split, base-conversion family: to_base (uppercase digits,
-    1.0.0 matches the current docs example to_base(42, 16) = '2A'),
-    hex (no leading-zero pair trim), bin."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B36_BASECONV_SQL)
 
 
 _B37_SQL = """
@@ -3118,13 +2451,10 @@ FROM src ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b37_datelit_reflags",
     tags=("dialect", "battery", "functions"),
-    oracle=_B37_SQL,
-)
-def dialect_gap_b37_datelit_reflags(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-11 wave-6 battery (≤12 idioms per the standing rule): the
+    doc="""Round-11 wave-6 battery (≤12 idioms per the standing rule): the
     two gaps the wave-6 dual probe found — (1) pre-1000-year typed
     DATE/TIMESTAMP literals (Spark requires 4-digit years; DuckDB
     accepts '999-06-01' → the whole family was a loud error; the
@@ -3140,9 +2470,9 @@ def dialect_gap_b37_datelit_reflags(spark: SparkSession, sf: str) -> DataFrame:
     list_dot_product/list_inner_product/list_distance, to_base64,
     interval constructors to_centuries/to_decades/to_millennia through
     the interval-text serving path) — no action, pinned here only via
-    the probe log (NOTES round-11)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B37_SQL)
+    the probe log (NOTES round-11).""",
+    oracle=_B37_SQL,
+)
 
 
 @register(
@@ -3165,16 +2495,16 @@ def prepared_statement_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     the equivalent substituted SELECT (DuckDB can't run its own
     PREPARE+EXECUTE as one statement, so lifecycle corners are pinned
     in tests/test_rewrite.py::test_prepare_execute_deallocate)."""
-    load_tables(spark, sf)
-    rw = _REWRITERS.setdefault(id(spark), SqlRewriter(spark))
-    spark.sql(rw.rewrite(
+    gateway_sql(
+        spark,
+        sf,
         "PREPARE uq_psr AS SELECT o_orderkey AS k, o_totalprice AS p "
         "FROM orders WHERE o_orderkey % $1 = $2 AND o_totalprice > ? "
-        "ORDER BY k LIMIT 50"
-    ))
-    spark.sql(rw.rewrite("EXECUTE uq_psr(5, 1, 900.0)")).collect()
-    out = spark.sql(rw.rewrite("EXECUTE uq_psr(7, 3, 1000.0)"))
-    spark.sql(rw.rewrite("DEALLOCATE uq_psr"))
+        "ORDER BY k LIMIT 50",
+    )
+    gateway_sql(spark, sf, "EXECUTE uq_psr(5, 1, 900.0)").collect()
+    out = gateway_sql(spark, sf, "EXECUTE uq_psr(7, 3, 1000.0)")
+    gateway_sql(spark, sf, "DEALLOCATE uq_psr")
     return out
 
 
@@ -3312,13 +2642,10 @@ ORDER BY src.k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b38_winpct",
     tags=("dialect", "battery", "window"),
-    oracle=_B38_ORACLE_SQL,
-)
-def dialect_gap_b38_winpct(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-11 wave-7 battery (≤12 idioms): running window
+    doc="""Round-11 wave-7 battery (≤12 idioms): running window
     percentiles — median / quantile_cont / quantile (disc) / mad over
     ORDER BY and framed specs, incl. FILTER — which Spark's percentile
     family rejects outright (translated through one collect_list per
@@ -3329,9 +2656,10 @@ def dialect_gap_b38_winpct(spark: SparkSession, sf: str) -> DataFrame:
     DuckDB REJECTS the postfix form, so the two dialects are exactly
     opposite). Prices pre-cast to DOUBLE on both sides: DuckDB's
     DECIMAL median is discrete (documented deviation class), the
-    DOUBLE one interpolates like the translation."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B38_SQL)
+    DOUBLE one interpolates like the translation.""",
+    oracle=_B38_ORACLE_SQL,
+    sql=_B38_SQL,
+)
 
 
 _B39_SQL = """
@@ -3354,13 +2682,10 @@ FROM src ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b39_json",
     tags=("dialect", "battery", "json"),
-    oracle=_B39_SQL,
-)
-def dialect_gap_b39_json(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-11 wave-8 battery: from_json/json_transform string-scalar
+    doc="""Round-11 wave-8 battery: from_json/json_transform string-scalar
     COERCION (the old from_json emission silently yielded NULL where
     DuckDB coerces '"5"' → 5 — now try_variant_get per field, with
     DuckDB's fractional→integer ROUNDING via a DOUBLE detour),
@@ -3370,9 +2695,9 @@ def dialect_gap_b39_json(spark: SparkSession, sf: str) -> DataFrame:
     valid/quote/array/object/merge_patch, to_json list+struct,
     group_array/group_object); json_extract '[#-1]' from-end indexes
     and json_group_structure stay loud errors (documented — value-
-    dependent paths can't fold into Spark's static-path extraction)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B39_SQL)
+    dependent paths can't fold into Spark's static-path extraction).""",
+    oracle=_B39_SQL,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -3482,13 +2807,10 @@ FROM dv ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b40_liststats",
     tags=("dialect", "battery", "functions"),
-    oracle=_B40_ORACLE_SQL,
-)
-def dialect_gap_b40_liststats(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-11 wave-9 battery (≤12 idioms): the list_<aggregate>
+    doc="""Round-11 wave-9 battery (≤12 idioms): the list_<aggregate>
     statistics family — sem/stddev_samp/stddev_pop/var_samp/var_pop/
     variance (via list_aggregate spelling)/skewness/kurtosis (corrected
     sample estimators, mirroring the aggregate-level translations)/
@@ -3496,9 +2818,10 @@ def dialect_gap_b40_liststats(spark: SparkSession, sf: str) -> DataFrame:
     (CAST(xs AS DOUBLE[])). Round-13: oracle rebuilt version-portable
     (explicit moment arithmetic, never calls list_<stat> — see the
     _B40S_SRC block note); the four dialect_gap_b40s_* singles below
-    isolate the families."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B40_SQL)
+    isolate the families.""",
+    oracle=_B40_ORACLE_SQL,
+    sql=_B40_SQL,
+)
 
 
 _B40S_MOMENTS_SPARK_SQL = _B40S_SRC + """
@@ -3525,19 +2848,17 @@ FROM mm ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b40s_moments",
     tags=("dialect", "battery", "functions"),
-    oracle=_B40S_MOMENTS_ORACLE_SQL,
-)
-def dialect_gap_b40s_moments(spark: SparkSession, sf: str) -> DataFrame:
-    """b40 family single 1/4 — second-moment estimators (sem /
+    doc="""b40 family single 1/4 — second-moment estimators (sem /
     stddev_samp / stddev_pop / var_samp / var_pop / variance-via-
     list_aggregate). The oracle computes greatest(s2 - s1²/n, 0)/d
     explicitly from exact-integer raw moments; sqrt and / are IEEE-754
-    correctly rounded, so no oracle-binary change can move a value."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B40S_MOMENTS_SPARK_SQL)
+    correctly rounded, so no oracle-binary change can move a value.""",
+    oracle=_B40S_MOMENTS_ORACLE_SQL,
+    sql=_B40S_MOMENTS_SPARK_SQL,
+)
 
 
 _B40S_SHAPE_SPARK_SQL = _B40S_SRC + """
@@ -3566,19 +2887,17 @@ FROM sh ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b40s_shape",
     tags=("dialect", "battery", "functions"),
-    oracle=_B40S_SHAPE_ORACLE_SQL,
-)
-def dialect_gap_b40s_shape(spark: SparkSession, sf: str) -> DataFrame:
-    """b40 family single 2/4 — shape estimators (skewness G1, kurtosis
+    doc="""b40 family single 2/4 — shape estimators (skewness G1, kurtosis
     G2 with the sample corrections the aggregate-level translation
     encodes, rewrite.py:1193-1200). The oracle derives both from the
     exact central moments m2/m3/m4 with mirrored operation order; the
-    two pow() calls feed O(1) outputs where round(,6) absorbs ulp."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B40S_SHAPE_SPARK_SQL)
+    two pow() calls feed O(1) outputs where round(,6) absorbs ulp.""",
+    oracle=_B40S_SHAPE_ORACLE_SQL,
+    sql=_B40S_SHAPE_SPARK_SQL,
+)
 
 
 _B40S_MAD_SPARK_SQL = _B40S_SRC + """
@@ -3599,19 +2918,17 @@ FROM dv ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b40s_mad",
     tags=("dialect", "battery", "functions"),
-    oracle=_B40S_MAD_ORACLE_SQL,
-)
-def dialect_gap_b40s_mad(spark: SparkSession, sf: str) -> DataFrame:
-    """b40 family single 3/4 — median absolute deviation. The oracle
+    doc="""b40 family single 3/4 — median absolute deviation. The oracle
     sorts the four exact-integer elements, interpolates the even-n
     median as (srt[2]+srt[3])/2 (the translation's _median_of rule for
     n=4), and repeats on the absolute deviations — list_sort + exact
-    dyadic arithmetic only, no quantile/mad function anywhere."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B40S_MAD_SPARK_SQL)
+    dyadic arithmetic only, no quantile/mad function anywhere.""",
+    oracle=_B40S_MAD_ORACLE_SQL,
+    sql=_B40S_MAD_SPARK_SQL,
+)
 
 
 _B40S_MISC_SPARK_SQL = _B40S_SRC + """
@@ -3633,19 +2950,17 @@ FROM src ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b40s_misc",
     tags=("dialect", "battery", "functions"),
-    oracle=_B40S_MISC_ORACLE_SQL,
-)
-def dialect_gap_b40s_misc(spark: SparkSession, sf: str) -> DataFrame:
-    """b40 family single 4/4 — entropy / product / string_agg. The
+    doc="""b40 family single 4/4 — entropy / product / string_agg. The
     3-element entropy list [k%3, k%5, k%3] has exactly two count
     shapes ({3} or {2,1}), so the oracle states Shannon entropy in
     closed form; product's fold collapses to (k%5)·2·0.5 = k%5 exactly;
-    string_agg skips the NULL element per DuckDB."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B40S_MISC_SPARK_SQL)
+    string_agg skips the NULL element per DuckDB.""",
+    oracle=_B40S_MISC_ORACLE_SQL,
+    sql=_B40S_MISC_SPARK_SQL,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -3691,19 +3006,17 @@ FROM src ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b36m_gamma",
     tags=("dialect", "battery", "functions"),
-    oracle=_B36M_GAMMA_ORACLE_SQL,
-)
-def dialect_gap_b36m_gamma(spark: SparkSession, sf: str) -> DataFrame:
-    """b36_math bisection 1/5 — gamma on integer args (exact-in-double
+    doc="""b36_math bisection 1/5 — gamma on integer args (exact-in-double
     domain: gamma(n) = (n-1)!, n <= 12) and on half-integers via the
     duplication identity, rounded to 6. The oracle never calls gamma,
     so a libm/implementation change in the oracle binary cannot move
-    the expected value."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B36M_GAMMA_SPARK_SQL)
+    the expected value.""",
+    oracle=_B36M_GAMMA_ORACLE_SQL,
+    sql=_B36M_GAMMA_SPARK_SQL,
+)
 
 
 _B36M_LGAMMA_SPARK_SQL = _B36_SRC + """
@@ -3726,17 +3039,15 @@ FROM src ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b36m_lgamma",
     tags=("dialect", "battery", "functions"),
-    oracle=_B36M_LGAMMA_ORACLE_SQL,
-)
-def dialect_gap_b36m_lgamma(spark: SparkSession, sf: str) -> DataFrame:
-    """b36_math bisection 2/5 — lgamma over integer args 2..33, pinned
+    doc="""b36_math bisection 2/5 — lgamma over integer args 2..33, pinned
     against ln(factorial) computed in exact HUGEINT then one correctly
-    rounded double cast; plus the exact zeros lgamma(1) = lgamma(2) = 0."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B36M_LGAMMA_SPARK_SQL)
+    rounded double cast; plus the exact zeros lgamma(1) = lgamma(2) = 0.""",
+    oracle=_B36M_LGAMMA_ORACLE_SQL,
+    sql=_B36M_LGAMMA_SPARK_SQL,
+)
 
 
 _B36M_FACTORIAL_SPARK_SQL = _B36_SRC + """
@@ -3748,18 +3059,15 @@ FROM src ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b36m_factorial",
     tags=("dialect", "battery", "functions"),
-    oracle=_B36M_FACTORIAL_SPARK_SQL,
-)
-def dialect_gap_b36m_factorial(spark: SparkSession, sf: str) -> DataFrame:
-    """b36_math bisection 3/5 — factorial over 0..20 (20! is the last
+    doc="""b36_math bisection 3/5 — factorial over 0..20 (20! is the last
     value inside BIGINT), compared AS BIGINT on both sides so the
     1.0.0 HUGEINT return type vs any later width change cannot affect
-    the hash. Exact integers: no jitter surface at all."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B36M_FACTORIAL_SPARK_SQL)
+    the hash. Exact integers: no jitter surface at all.""",
+    oracle=_B36M_FACTORIAL_SPARK_SQL,
+)
 
 
 _B36M_EVEN_SPARK_SQL = _B36_SRC + """
@@ -3771,22 +3079,19 @@ FROM src ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b36m_even",
     tags=("dialect", "battery", "functions"),
-    oracle=_B36M_EVEN_SPARK_SQL,
-)
-def dialect_gap_b36m_even(spark: SparkSession, sf: str) -> DataFrame:
-    """b36_math bisection 4/5 — even() (round away from zero to the
+    doc="""b36_math bisection 4/5 — even() (round away from zero to the
     next even integer) over inputs that are EXACTLY representable in
     both decimal and binary (quarter and half offsets: x.25 / x.75 /
     x.5) and never sit ON an even-integer boundary, so the
     decimal-vs-double modulo divergence that reddened the combined
     entry (see the bisection note above) cannot occur: every oracle
     version computes the identical input and the docs semantics give
-    one answer."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B36M_EVEN_SPARK_SQL)
+    one answer.""",
+    oracle=_B36M_EVEN_SPARK_SQL,
+)
 
 
 _B36M_COT_SPARK_SQL = _B36_SRC + """
@@ -3809,17 +3114,15 @@ FROM src ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b36m_cot",
     tags=("dialect", "battery", "functions"),
-    oracle=_B36M_COT_ORACLE_SQL,
-)
-def dialect_gap_b36m_cot(spark: SparkSession, sf: str) -> DataFrame:
-    """b36_math bisection 5/5 — cot over integer radians ±1..8 and one
+    doc="""b36_math bisection 5/5 — cot over integer radians ±1..8 and one
     half, pinned against the cos/sin ratio the oracle's own libm
-    computes; round(., 9) absorbs implementation jitter."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B36M_COT_SPARK_SQL)
+    computes; round(., 9) absorbs implementation jitter.""",
+    oracle=_B36M_COT_ORACLE_SQL,
+    sql=_B36M_COT_SPARK_SQL,
+)
 
 
 _B41_SQL = """
@@ -3850,13 +3153,10 @@ ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b41_json_fe",
     tags=("dialect", "battery", "functions"),
-    oracle=_B41_SQL,
-)
-def dialect_gap_b41_json_fe(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-12 wave-10 battery: the two wave-8 leftovers that were
+    doc="""Round-12 wave-10 battery: the two wave-8 leftovers that were
     documented loud errors — (1) DuckDB's [#-n] from-end JSON path
     indexes (probed: [#-1] last, [#-0] FIRST — python-negative-index
     semantics — out-of-range and JSON null → NULL), exercised through
@@ -3874,9 +3174,9 @@ def dialect_gap_b41_json_fe(spark: SparkSession, sf: str) -> DataFrame:
     source row carries the SAME key sequence so the merged object's
     first-seen key order is deterministic on both engines (key-UNION
     order is implementation-defined in both — pinned order-insensitively
-    in the unit battery instead)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B41_SQL)
+    in the unit battery instead).""",
+    oracle=_B41_SQL,
+)
 
 
 _B42_SQL = """
@@ -3906,13 +3206,10 @@ FROM src ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b42_strftime_map",
     tags=("dialect", "battery", "functions"),
-    oracle=_B42_SQL,
-)
-def dialect_gap_b42_strftime_map(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-12 wave-11 battery (≤12 idioms): strftime %c/%x/%X ISO
+    doc="""Round-12 wave-11 battery (≤12 idioms): strftime %c/%x/%X ISO
     composites, %n 9-digit nanoseconds, %z/%Z on naive timestamps
     ('+00'/'' — the old 'xx' mapping printed '+0000', a silent diff),
     %u/%w unpadded day-of-week expression codes (all previously loud
@@ -3928,9 +3225,9 @@ def dialect_gap_b42_strftime_map(spark: SparkSession, sf: str) -> DataFrame:
     (verified natively identical). list_intersect element ORDER
     remains a documented deviation (implementation-defined in both
     engines, the list_distinct class). DuckDB probes in NOTES
-    round-12 log."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B42_SQL)
+    round-12 log.""",
+    oracle=_B42_SQL,
+)
 
 
 _B43_SPARK_SQL = """
@@ -3972,13 +3269,10 @@ FROM src GROUP BY g ORDER BY g
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b43_topn_aggs",
     tags=("dialect", "battery", "functions"),
-    oracle=_B43_ORACLE_SQL,
-)
-def dialect_gap_b43_topn_aggs(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-12 wave-12 battery: the DuckDB ≥1.1 top-n aggregate forms
+    doc="""Round-12 wave-12 battery: the DuckDB ≥1.1 top-n aggregate forms
     the reference's pinned 1.5.2 supports — max(arg, n) / min(arg, n)
     (LIST of the n largest/smallest, largest-first/smallest-first,
     NULLs skipped) and arg_max/arg_min(arg, val, n) (LIST of arg for
@@ -3986,9 +3280,10 @@ def dialect_gap_b43_topn_aggs(spark: SparkSession, sf: str) -> DataFrame:
     wrong-arity errors. n must be a positive integer constant, like
     DuckDB. Oracle derived via ordered list() slicing so it is green on
     the 1.0.0 local binary (which predates the forms) AND the driver's
-    newer one (the b36m portable-oracle technique)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B43_SPARK_SQL)
+    newer one (the b36m portable-oracle technique).""",
+    oracle=_B43_ORACLE_SQL,
+    sql=_B43_SPARK_SQL,
+)
 
 
 _B44_SPARK_SQL = """
@@ -4024,21 +3319,19 @@ FROM src ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b44_python_lambda",
     tags=("dialect", "battery", "functions"),
-    oracle=_B44_ORACLE_SQL,
-)
-def dialect_gap_b44_python_lambda(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-12 wave-12 battery: DuckDB ≥1.3's python-style lambda
+    doc="""Round-12 wave-12 battery: DuckDB ≥1.3's python-style lambda
     syntax (``lambda x, y: expr`` — the docs' NEW preferred form; the
     arrow form is deprecated there, and the reference pins 1.5.2) —
     normalized at the pipeline head to the arrow form, including
     nested lambdas and multi-parameter folds; 'lambda' inside string
     literals stays text (code-only scan). Oracle uses the arrow
-    spelling both oracle versions parse."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B44_SPARK_SQL)
+    spelling both oracle versions parse.""",
+    oracle=_B44_ORACLE_SQL,
+    sql=_B44_SPARK_SQL,
+)
 
 
 _B45_SPARK_SQL = """
@@ -4079,22 +3372,20 @@ FROM src ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b45_try_expr",
     tags=("dialect", "battery", "functions"),
-    oracle=_B45_ORACLE_SQL,
-)
-def dialect_gap_b45_try_expr(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-12 wave-12 battery: DuckDB ≥1.2 ``TRY(expr)`` (NULL
+    doc="""Round-12 wave-12 battery: DuckDB ≥1.2 ``TRY(expr)`` (NULL
     instead of an error) over the error classes it actually guards —
     conversion (CAST and ``::``), datetime parsing (strptime), and
     log/sqrt domain errors (Spark's ln is already NULL-lenient; sqrt
     needs a negative-domain CASE because Spark yields NaN). Division/
     modulo by zero are already NULL in DuckDB (probed), and every
     unsupported TRY form raises loudly — no silent divergence surface.
-    Oracle spelled in pre-1.2 SQL (try_cast/try_strptime/CASE)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B45_SPARK_SQL)
+    Oracle spelled in pre-1.2 SQL (try_cast/try_strptime/CASE).""",
+    oracle=_B45_ORACLE_SQL,
+    sql=_B45_SPARK_SQL,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -4131,13 +3422,10 @@ FROM src ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b46_strftime_dash",
     tags=("dialect", "battery", "datetime"),
-    oracle=_B46_SQL,
-)
-def dialect_gap_b46_strftime_dash(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-13 wave-14 battery: dash-modified (unpadded) strftime/
+    doc="""Round-13 wave-14 battery: dash-modified (unpadded) strftime/
     strptime codes %-d/%-m/%-y/%-j/%-H/%-I/%-M/%-S (previously loud
     'unsupported strftime code %-'; %-y has no Java pattern → year%100
     expression segment), the %j day-of-year and %g millisecond / %f
@@ -4145,9 +3433,9 @@ def dialect_gap_b46_strftime_dash(spark: SparkSession, sf: str) -> DataFrame:
     strptime with no year code lands on 1900-01-01 like DuckDB (Spark
     natively defaults 1970 — a silent wrong value until r13; shifted
     -70 years, %j maps consistently since both years are non-leap).
-    Round-trips pin both directions on data."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B46_SQL)
+    Round-trips pin both directions on data.""",
+    oracle=_B46_SQL,
+)
 
 
 _B47_SQL = """
@@ -4176,13 +3464,10 @@ FROM src ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b47_list_composites",
     tags=("dialect", "battery", "functions"),
-    oracle=_B47_SQL,
-)
-def dialect_gap_b47_list_composites(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-13 wave-14 battery: APL-style list composites — the
+    doc="""Round-13 wave-14 battery: APL-style list composites — the
     sort-one-list-by-another idiom list_select∘list_grade_up,
     grade_up's NULLS-LAST placement (fixed this round: the zip-struct
     sort put NULL elements FIRST — silent wrong value; now an explicit
@@ -4197,9 +3482,9 @@ def dialect_gap_b47_list_composites(spark: SparkSession, sf: str) -> DataFrame:
     ERRORS on NULL elements in the selector/mask list
     (list_select([1,2,3],[1,NULL]), list_where(.., [true,NULL,..]))
     where our translation returns NULL-element / skip — Spark accepts
-    more, never answers differently on DuckDB-valid input."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B47_SQL)
+    more, never answers differently on DuckDB-valid input.""",
+    oracle=_B47_SQL,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -4269,13 +3554,10 @@ FROM src ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b48_slice_vector",
     tags=("dialect", "battery", "functions"),
-    oracle=_B48_ORACLE_SQL,
-)
-def dialect_gap_b48_slice_vector(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-13 wave-15 battery: 4-arg stepped list_slice (forward and
+    doc="""Round-13 wave-15 battery: 4-arg stepped list_slice (forward and
     negative step — previously a loud wrong-arity error; delegates to
     the bracket step form), list_histogram (MAP value→count, keys
     ascending, NULLs skipped, empty→NULL — was UNRESOLVED_ROUTINE),
@@ -4289,9 +3571,10 @@ def dialect_gap_b48_slice_vector(spark: SparkSession, sf: str) -> DataFrame:
     DuckDB's list_intersect emits its own internal order ([1,2,3]∩
     [2,3,4] → [3,2]) while the translation keeps first-list order
     ([2,3]) — same multiset, unspecified order on both engines'
-    docs."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B48_SPARK_SQL)
+    docs.""",
+    oracle=_B48_ORACLE_SQL,
+    sql=_B48_SPARK_SQL,
+)
 
 
 _B49_SQL = """
@@ -4312,13 +3595,10 @@ FROM src ORDER BY k
 """
 
 
-@register(
+register_sql(
     "dialect_gap_b49_interval_escape",
     tags=("dialect", "battery", "datetime"),
-    oracle=_B49_SQL,
-)
-def dialect_gap_b49_interval_escape(spark: SparkSession, sf: str) -> DataFrame:
-    """Round-13 wave-16 battery (probe batch B): MIXED year-month /
+    doc="""Round-13 wave-16 battery (probe batch B): MIXED year-month /
     day-time interval literals (valid DuckDB calendar intervals that
     Spark's parser rejected outright — now make_interval(), per-term
     signs and quarter folding included; DATE operands still widen to
@@ -4327,14 +3607,24 @@ def dialect_gap_b49_interval_escape(spark: SparkSession, sf: str) -> DataFrame:
     ESC_IN_THE_MIDDLE — literal patterns are now unescaped at rewrite
     time); and regexp_split_to_table → unnest∘split (keeps empty
     fields, probed). Self-oracled verbatim: calendar arithmetic and
-    string matching, no estimator (NOTES-38 stable class)."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, _B49_SQL)
+    string matching, no estimator (NOTES-38 stable class).""",
+    oracle=_B49_SQL,
+)
 
 
-@register(
+register_sql(
     "recursive_cte_union_reachability",
     tags=("cte", "recursive", "dialect"),
+    doc="""Recursive CTE in the UNION (DISTINCT) form — graph reachability
+    over the nation table's synthetic successor relation, the shape
+    whose termination depends on duplicate elimination (a cycle-safe
+    transitive closure that UNION ALL would loop on). Spark rejects
+    the form natively (UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE); the
+    rewriter evaluates it by driver-side SEMI-NAIVE iteration — step
+    applied to the previous DELTA only, new = step(delta) − total,
+    stop on empty delta, lineage cut per round
+    (rewrite.py::_rewrite_recursive_union; r13 shape probe). Verbatim
+    self-oracle: 1.0.0 runs the recursive UNION natively.""",
     oracle="""
 WITH RECURSIVE reach(k) AS (
   SELECT 0
@@ -4347,26 +3637,3 @@ SELECT CAST(count(*) AS BIGINT) AS n_reached,
 FROM reach
 """,
 )
-def recursive_cte_union_reachability(spark: SparkSession, sf: str) -> DataFrame:
-    """Recursive CTE in the UNION (DISTINCT) form — graph reachability
-    over the nation table's synthetic successor relation, the shape
-    whose termination depends on duplicate elimination (a cycle-safe
-    transitive closure that UNION ALL would loop on). Spark rejects
-    the form natively (UNION_NOT_SUPPORTED_IN_RECURSIVE_CTE); the
-    rewriter evaluates it by driver-side SEMI-NAIVE iteration — step
-    applied to the previous DELTA only, new = step(delta) − total,
-    stop on empty delta, lineage cut per round
-    (rewrite.py::_rewrite_recursive_union; r13 shape probe). Verbatim
-    self-oracle: 1.0.0 runs the recursive UNION natively."""
-    load_tables(spark, sf)
-    return _rewritten_sql(spark, """
-WITH RECURSIVE reach(k) AS (
-  SELECT 0
-  UNION
-  SELECT CAST((r.k * 2 + n.n_regionkey) % 25 AS INTEGER)
-  FROM reach r JOIN nation n ON n.n_nationkey = r.k
-)
-SELECT CAST(count(*) AS BIGINT) AS n_reached,
-       CAST(sum(k) AS BIGINT)   AS sum_k
-FROM reach
-""")

@@ -1,9 +1,21 @@
 """Query registry: name → (PySpark callable, DuckDB oracle SQL).
 
 This is the correctness backbone. Every operator claimed in SURVEY.md §2 gets
-one entry here; the driver runs the Spark callable and the oracle SQL
-side-by-side at sf=0.01 and compares row count + schema + order-insensitive
-value hash.
+one entry here; the oracle gate runs each entry's Spark callable and its
+oracle SQL on DuckDB side-by-side over the same parquet directory and
+compares row count + schema + order-insensitive value hash.
+
+An entry is one of two kinds:
+
+- **SQL text** (:func:`register_sql`): the entry is data. Its ``spark_fn``
+  is :func:`gateway_sql` bound to the entry's text, i.e. exactly the path
+  an HTTP client's query takes (``load_tables`` → the session's
+  ``SqlRewriter`` → ``spark.sql``). The text is the ``oracle`` itself, or
+  ``sql=`` when the gateway text deliberately differs from it — e.g. it
+  exercises a DuckDB idiom whose oracle is restated version-portably, or
+  it is an equivalent plan rewrite the oracle pins.
+- **Code** (:func:`register` as a decorator): DataFrame code, or SQL that
+  needs more than one statement or post-processing.
 
 Conventions (critical for hash-matching):
 - Alias EVERY computed/aggregate column identically in Spark and SQL.
@@ -16,11 +28,14 @@ Conventions (critical for hash-matching):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..rewrite import SqlRewriter
 
 TABLES = (
     "region",
@@ -56,9 +71,17 @@ class Query:
     # BENCH_r10 and no ratio gate fired because bench_fn entries had no
     # twin (r10 verdict #3).
     bench_oracle: str | None = None
+    # Gateway text served instead of ``oracle`` (SQL-text entries only).
+    sql: str | None = None
 
 
 REGISTRY: dict[str, Query] = {}
+
+
+def _add(query: Query) -> None:
+    if query.name in REGISTRY:
+        raise ValueError(f"duplicate query name: {query.name}")
+    REGISTRY[query.name] = query
 
 
 def register(
@@ -73,21 +96,36 @@ def register(
     """Decorator registering a query callable under ``name``."""
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        if name in REGISTRY:
-            raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = Query(
-            name,
-            fn,
-            oracle,
-            doc or (fn.__doc__ or ""),
-            bench,
-            tags,
-            bench_fn,
-            bench_oracle,
+        _add(
+            Query(
+                name,
+                fn,
+                oracle,
+                doc or (fn.__doc__ or ""),
+                bench,
+                tags,
+                bench_fn,
+                bench_oracle,
+            )
         )
         return fn
 
     return deco
+
+
+def register_sql(
+    name: str,
+    oracle: str,
+    doc: str = "",
+    bench: bool = False,
+    tags: tuple[str, ...] = (),
+    sql: str | None = None,
+) -> None:
+    """Register a SQL-text entry: it serves ``sql or oracle`` through
+    :func:`gateway_sql`. ``doc`` never falls back to the callable's
+    docstring (a ``functools.partial`` carries partial's own)."""
+    fn = functools.partial(gateway_sql, sql=sql or oracle)
+    _add(Query(name, fn, oracle, doc, bench, tags, sql=sql))
 
 
 # ---------------------------------------------------------------------------
@@ -152,6 +190,19 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         tables[name] = df
     _loaded[key] = tables
     return tables
+
+
+_rewriters: dict[int, SqlRewriter] = {}
+
+
+def gateway_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
+    """Run gateway-dialect SQL exactly as an HTTP client's query would:
+    ``load_tables`` → the session's single ``SqlRewriter`` → ``spark.sql``."""
+    load_tables(spark, sf_dir)
+    rw = _rewriters.get(id(spark))
+    if rw is None:
+        rw = _rewriters[id(spark)] = SqlRewriter(spark)
+    return spark.sql(rw.rewrite(sql))
 
 
 def _nanos_timestamp_cols(path: str) -> list[str]:

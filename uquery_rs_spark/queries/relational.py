@@ -1,8 +1,10 @@
 """Core relational-algebra query corpus (SURVEY.md §2.B.2-§2.B.6).
 
 TPC-H-shaped analytics adapted to the driver's synthetic star schema
-(TESTDATA.md). Each query exists twice: idiomatic PySpark DataFrame code
-(Catalyst plans it) and the DuckDB oracle SQL string. The reference engine
+(TESTDATA.md). Most queries exist twice: idiomatic PySpark DataFrame code
+(Catalyst plans it) and the DuckDB oracle SQL string. The correlated
+subquery shapes (q2, q22) are SQL-text entries: their oracle text is
+served through the gateway rewriter as a client's query would be. The reference engine
 delegates this entire surface to DuckDB wholesale (reference:
 src/core/duckdb.rs:87-88); here each form is expressed Spark-first.
 
@@ -16,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .registry import load_tables, register
+from .registry import load_tables, register, register_sql
 
 
 # ---------------------------------------------------------------------------
@@ -966,9 +968,15 @@ def values_inline_table(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # TPC-H Q2 shape: correlated scalar-min subquery (decorrelated by Catalyst).
 # ---------------------------------------------------------------------------
-@register(
+register_sql(
     "q2_min_balance_supplier",
     tags=("subquery", "join"),
+    doc="""Per-nation minimum via correlated scalar subquery (TPC-H Q2 shape),
+    served through the rewriter like a client's query.
+
+    Scale: Catalyst decorrelates into an aggregate + join on s_nationkey —
+    one shuffle, no per-row re-execution.
+    """,
     oracle="""
 SELECT s_suppkey, s_name, n_name, round(s_acctbal, 2) AS s_acctbal
 FROM supplier JOIN nation ON s_nationkey = n_nationkey
@@ -977,22 +985,6 @@ WHERE s_acctbal = (SELECT min(s2.s_acctbal) FROM supplier s2
 ORDER BY s_suppkey
 """,
 )
-def q2_min_balance_supplier(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-nation minimum via correlated scalar subquery (TPC-H Q2 shape).
-
-    Scale: Catalyst decorrelates into an aggregate + join on s_nationkey —
-    one shuffle, no per-row re-execution.
-    """
-    t = load_tables(spark, sf)
-    return spark.sql(
-        """
-SELECT s_suppkey, s_name, n_name, round(s_acctbal, 2) AS s_acctbal
-FROM supplier JOIN nation ON s_nationkey = n_nationkey
-WHERE s_acctbal = (SELECT min(s2.s_acctbal) FROM supplier s2
-                   WHERE s2.s_nationkey = supplier.s_nationkey)
-ORDER BY s_suppkey
-"""
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1120,9 +1112,12 @@ def q18_large_volume_orders(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # TPC-H Q22 shape: NOT EXISTS anti-join + scalar avg subquery.
 # ---------------------------------------------------------------------------
-@register(
+register_sql(
     "q22_idle_rich_customers",
     tags=("subquery", "anti-join", "agg"),
+    doc="""Above-average-balance customers with no 1998 orders (TPC-H Q22
+    shape): scalar subquery + NOT EXISTS → anti-join. Served through the
+    rewriter, which averages c_acctbal as DOUBLE like DuckDB.""",
     oracle="""
 SELECT c_mktsegment, count(*) AS numcust, round(sum(c_acctbal), 2) AS totacctbal
 FROM customer
@@ -1133,18 +1128,3 @@ GROUP BY c_mktsegment
 ORDER BY c_mktsegment
 """,
 )
-def q22_idle_rich_customers(spark: SparkSession, sf: str) -> DataFrame:
-    """Above-average-balance customers with no 1998 orders (TPC-H Q22
-    shape): scalar subquery + NOT EXISTS → anti-join."""
-    t = load_tables(spark, sf)
-    return spark.sql(
-        """
-SELECT c_mktsegment, count(*) AS numcust, round(sum(c_acctbal), 2) AS totacctbal
-FROM customer
-WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer WHERE c_acctbal > 0)
-  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-                  AND o_orderdate >= TIMESTAMP '1998-01-01 00:00:00')
-GROUP BY c_mktsegment
-ORDER BY c_mktsegment
-"""
-    )

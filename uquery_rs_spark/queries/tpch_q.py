@@ -1,11 +1,14 @@
 """TPC-H completion corpus: the 12 query shapes not already covered by
 relational.py (q1/q2/q3/q5/q6/q10/q14/q16/q18/q22 live there).
 
-Each runs the SAME SQL text through the gateway rewriter on Spark and
-verbatim on the DuckDB oracle — the dialect-neutral TPC-H subset is the
-strongest end-to-end proof that Catalyst's plans (join reordering,
-decorrelation, partial aggregation) reproduce the reference's delegated
-semantics (reference pass-through: src/core/duckdb.rs:87-88).
+Each is a SQL-text entry (registry.register_sql): the SAME SQL text runs
+through the gateway rewriter on Spark and verbatim on the DuckDB oracle.
+The one exception is q21, whose ``sql=`` is an equivalent single-
+aggregation plan that its EXISTS-form oracle pins. The dialect-neutral
+TPC-H subset is the strongest end-to-end proof that Catalyst's plans
+(join reordering, decorrelation, partial aggregation) reproduce the
+reference's delegated semantics (reference pass-through:
+src/core/duckdb.rs:87-88).
 
 The driver testdata is TPC-H-ISH (TESTDATA.md): no partsupp table, and
 lineitem/orders/part carry a reduced column set (no commitdate/
@@ -23,34 +26,16 @@ in DuckDB), keeping the comparison timezone-free.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from .registry import register_sql
 
-from ..rewrite import SqlRewriter
-from .registry import load_tables, register
+_TAGS = ("tpch", "relational")
 
-_REWRITERS: dict[int, SqlRewriter] = {}
-
-
-def _gateway(spark: SparkSession, sf: str, sql: str) -> DataFrame:
-    """Run gateway-dialect SQL exactly as an HTTP client's query would."""
-    load_tables(spark, sf)
-    rw = _REWRITERS.setdefault(id(spark), SqlRewriter(spark))
-    return spark.sql(rw.rewrite(sql))
-
-
-def _tpch(name: str, sql: str, doc: str, bench: bool = False):
-    @register(name, tags=("tpch", "relational"), oracle=sql, bench=bench)
-    def run(spark: SparkSession, sf: str, _sql: str = sql) -> DataFrame:
-        return _gateway(spark, sf, _sql)
-
-    run.__name__ = name
-    run.__doc__ = doc
-    return run
-
-
-_tpch(
+register_sql(
     "q4_order_priority",
-    """
+    tags=_TAGS,
+    doc="TPC-H Q4-shaped (late-line test -> discount>tax: no commit/receipt "
+    "dates in testdata): correlated EXISTS -> Catalyst left-semi join.",
+    oracle="""
 SELECT o_orderpriority, count(*) AS order_count
 FROM orders
 WHERE o_orderdate >= '1996-01-01' AND o_orderdate < '1996-04-01'
@@ -59,13 +44,13 @@ WHERE o_orderdate >= '1996-01-01' AND o_orderdate < '1996-04-01'
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
 """,
-    "TPC-H Q4-shaped (late-line test -> discount>tax: no commit/receipt "
-    "dates in testdata): correlated EXISTS -> Catalyst left-semi join.",
 )
 
-_tpch(
+register_sql(
     "q7_volume_shipping",
-    """
+    tags=_TAGS,
+    doc="TPC-H Q7: 6-way join with OR'd nation-pair filter; broadcast dims.",
+    oracle="""
 SELECT supp_nation, cust_nation, l_year, round(sum(volume), 2) AS revenue
 FROM (
   SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
@@ -83,12 +68,13 @@ FROM (
 GROUP BY supp_nation, cust_nation, l_year
 ORDER BY supp_nation, cust_nation, l_year
 """,
-    "TPC-H Q7: 6-way join with OR'd nation-pair filter; broadcast dims.",
 )
 
-_tpch(
+register_sql(
     "q8_market_share",
-    """
+    tags=_TAGS,
+    doc="TPC-H Q8: national market share — 8-way join, conditional agg ratio.",
+    oracle="""
 SELECT o_year,
        round(sum(CASE WHEN nation = 'NATION_3' THEN volume ELSE 0 END)
              / sum(volume), 4) AS mkt_share
@@ -110,13 +96,15 @@ FROM (
 GROUP BY o_year
 ORDER BY o_year
 """,
-    "TPC-H Q8: national market share — 8-way join, conditional agg ratio.",
     bench=True,
 )
 
-_tpch(
+register_sql(
     "q9_product_type_profit",
-    """
+    tags=_TAGS,
+    doc="TPC-H Q9-shaped (no partsupp: supplycost -> 0.8*p_retailprice): "
+    "profit by nation/year over a 5-way join.",
+    oracle="""
 SELECT nation, o_year, round(sum(amount), 2) AS sum_profit
 FROM (
   SELECT n_name AS nation, year(o_orderdate) AS o_year,
@@ -130,13 +118,14 @@ FROM (
 GROUP BY nation, o_year
 ORDER BY nation, o_year DESC
 """,
-    "TPC-H Q9-shaped (no partsupp: supplycost -> 0.8*p_retailprice): "
-    "profit by nation/year over a 5-way join.",
 )
 
-_tpch(
+register_sql(
     "q11_important_stock",
-    """
+    tags=_TAGS,
+    doc="TPC-H Q11-shaped (no partsupp: stock value -> lineitem value): "
+    "HAVING against an uncorrelated scalar-subquery fraction of total.",
+    oracle="""
 SELECT l_partkey, round(sum(l_extendedprice * l_quantity), 2) AS value
 FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
      JOIN nation ON s_nationkey = n_nationkey
@@ -149,13 +138,14 @@ HAVING sum(l_extendedprice * l_quantity) > (
   WHERE n_name = 'NATION_7')
 ORDER BY value DESC, l_partkey
 """,
-    "TPC-H Q11-shaped (no partsupp: stock value -> lineitem value): "
-    "HAVING against an uncorrelated scalar-subquery fraction of total.",
 )
 
-_tpch(
+register_sql(
     "q12_shipmode_priority",
-    """
+    tags=_TAGS,
+    doc="TPC-H Q12-shaped (shipmode -> returnflag; late test -> shipped after "
+    "order date): conditional counts over a date-bracketed join.",
+    oracle="""
 SELECT l_returnflag,
        CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END)
             AS BIGINT) AS high_line_count,
@@ -168,13 +158,14 @@ WHERE l_returnflag IN ('R', 'A')
 GROUP BY l_returnflag
 ORDER BY l_returnflag
 """,
-    "TPC-H Q12-shaped (shipmode -> returnflag; late test -> shipped after "
-    "order date): conditional counts over a date-bracketed join.",
 )
 
-_tpch(
+register_sql(
     "q13_customer_distribution",
-    """
+    tags=_TAGS,
+    doc="TPC-H Q13-shaped (comment filter -> priority filter): left join with "
+    "join-condition filter, double aggregation.",
+    oracle="""
 SELECT c_count, count(*) AS custdist
 FROM (
   SELECT c_custkey, count(o_orderkey) AS c_count
@@ -185,13 +176,13 @@ FROM (
 GROUP BY c_count
 ORDER BY custdist DESC, c_count DESC
 """,
-    "TPC-H Q13-shaped (comment filter -> priority filter): left join with "
-    "join-condition filter, double aggregation.",
 )
 
-_tpch(
+register_sql(
     "q15_top_supplier",
-    """
+    tags=_TAGS,
+    doc="TPC-H Q15: CTE reused in join + scalar-subquery max.",
+    oracle="""
 WITH revenue AS (
   SELECT l_suppkey AS supplier_no,
          sum(l_extendedprice * (1 - l_discount)) AS total_revenue
@@ -204,26 +195,29 @@ FROM supplier JOIN revenue ON s_suppkey = supplier_no
 WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
 ORDER BY s_suppkey
 """,
-    "TPC-H Q15: CTE reused in join + scalar-subquery max.",
 )
 
-_tpch(
+register_sql(
     "q17_small_quantity_revenue",
-    """
+    tags=_TAGS,
+    doc="TPC-H Q17-shaped (container -> type; 0.2 -> 0.5 so the synthetic "
+    "uniform quantities qualify): correlated scalar average per part — "
+    "Catalyst decorrelates.",
+    oracle="""
 SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
 FROM lineitem JOIN part ON p_partkey = l_partkey
 WHERE p_brand = 'Brand#12' AND p_type = 'MEDIUM'
   AND l_quantity < (SELECT 0.5 * avg(l_quantity)
                     FROM lineitem WHERE l_partkey = p_partkey)
 """,
-    "TPC-H Q17-shaped (container -> type; 0.2 -> 0.5 so the synthetic "
-    "uniform quantities qualify): correlated scalar average per part — "
-    "Catalyst decorrelates.",
 )
 
-_tpch(
+register_sql(
     "q19_discounted_revenue",
-    """
+    tags=_TAGS,
+    doc="TPC-H Q19-shaped (container/shipmode brackets -> size/discount "
+    "brackets): OR-of-AND predicates evaluated inside one join.",
+    oracle="""
 SELECT round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
 FROM lineitem JOIN part ON p_partkey = l_partkey
 WHERE (p_brand = 'Brand#12' AND l_quantity >= 1 AND l_quantity <= 11
@@ -233,13 +227,14 @@ WHERE (p_brand = 'Brand#12' AND l_quantity >= 1 AND l_quantity <= 11
    OR (p_brand = 'Brand#34' AND l_quantity >= 20 AND l_quantity <= 30
        AND p_size BETWEEN 1 AND 15 AND l_discount >= 0.06)
 """,
-    "TPC-H Q19-shaped (container/shipmode brackets -> size/discount "
-    "brackets): OR-of-AND predicates evaluated inside one join.",
 )
 
-_tpch(
+register_sql(
     "q20_potential_promotion",
-    """
+    tags=_TAGS,
+    doc="TPC-H Q20-shaped (no partsupp: availqty gate -> shipped-quantity "
+    "HAVING): nested IN chains with a scalar-subquery threshold.",
+    oracle="""
 SELECT s_suppkey, s_name
 FROM supplier JOIN nation ON s_nationkey = n_nationkey
 WHERE n_name = 'NATION_4'
@@ -253,8 +248,6 @@ WHERE n_name = 'NATION_4'
   )
 ORDER BY s_suppkey
 """,
-    "TPC-H Q20-shaped (no partsupp: availqty gate -> shipped-quantity "
-    "HAVING): nested IN chains with a scalar-subquery threshold.",
 )
 
 # q21: the Spark side runs a single-aggregation rewrite — one
@@ -313,14 +306,13 @@ ORDER BY numwait DESC, s_name
 """
 
 
-@register(
+register_sql(
     "q21_suppliers_kept_waiting",
-    tags=("tpch", "relational"),
+    tags=_TAGS,
+    doc="""TPC-H Q21-shaped (late test -> discount>tax). Spark runs the
+    single-aggregation rewrite (_Q21_SPARK_SQL note); the oracle keeps
+    the EXISTS + NOT EXISTS self-correlations, pinning equivalence.""",
     oracle=_Q21_ORACLE_SQL,
+    sql=_Q21_SPARK_SQL,
     bench=True,
 )
-def q21_suppliers_kept_waiting(spark: SparkSession, sf: str) -> DataFrame:
-    """TPC-H Q21-shaped (late test -> discount>tax). Spark runs the
-    single-aggregation rewrite (_Q21_SPARK_SQL note); the oracle keeps
-    the EXISTS + NOT EXISTS self-correlations, pinning equivalence."""
-    return _gateway(spark, sf, _Q21_SPARK_SQL)

@@ -4766,6 +4766,7 @@ class SqlRewriter:
             pos = m.start() + len(repl)
 
     _SIGNBIT_RE = re.compile(r"(?i)\bsignbit\s*\(")
+    _SIGN_RE = re.compile(r"(?i)\bsign\s*\(")
     _ENCODE_RE = re.compile(r"(?i)\bencode\s*\(")
     _MAKE_TS_RE = re.compile(r"(?i)\bmake_timestamp\s*\(")
 
@@ -4814,6 +4815,8 @@ class SqlRewriter:
     def _rewrite_b17_scalars(self, sql: str) -> str:
         """Batch-17 scalar corners: ``signbit(x)`` → (x < 0) —
         DuckDB's own signbit(-0.0) is false, so the sign test is exact;
+        ``sign(x)`` → CAST(sign(x) AS TINYINT) — DuckDB's sign returns
+        TINYINT for every numeric input, Spark's returns DOUBLE;
         1-arg ``encode(s)`` (UTF-8 BLOB) → Spark's 2-arg
         encode(s, 'UTF-8'); 1-arg ``make_timestamp(µs)`` →
         timestamp_micros (the 6-arg form is natively identical and
@@ -4826,6 +4829,17 @@ class SqlRewriter:
             if len(args) != 1:
                 raise UQueryError.sql_error("signbit expects 1 arg")
             sql = sql[: m.start()] + f"(({args[0]}) < 0)" + sql[close + 1 :]
+        pos = 0
+        while True:
+            hit = self._call_args(self._SIGN_RE, sql, pos)
+            if not hit:
+                break
+            m, close, _args = hit
+            repl = f"CAST({sql[m.start() : close + 1]} AS TINYINT)"
+            sql = sql[: m.start()] + repl + sql[close + 1 :]
+            # resume inside the call: a nested sign() in its argument
+            # still needs its own cast
+            pos = m.end() + len("CAST(")
         pos = 0
         while True:
             hit = self._call_args(self._ENCODE_RE, sql, pos)
