@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 import re
+import threading
 
 import pytest
 
@@ -146,7 +147,15 @@ def test_excel_path_table_scans_natively(spark, rw, tmp_path):
 
 
 def test_int_div_rewrite(spark, rw):
+    import duckdb
+
     assert spark.sql(rw.rewrite("SELECT 7 // 2 AS q, -7 // 2 AS nq")).collect()[0][:] == (3, -3)
+    # a divisor the ÷0 pass cannot scan as an atom (unary minus then a
+    # space, bitwise NOT) reaches the int_div pass: a plain Spark `div`
+    for sql in ["SELECT 7 // - 2 AS v", "SELECT -7 // ~2 AS v"]:
+        out = rw.rewrite(sql)
+        assert " div " in out and "nullif" not in out, out
+        assert spark.sql(out).collect()[0].v == duckdb.sql(sql).fetchall()[0][0], sql
 
 
 def test_int_div_skips_string_literals(rw):
@@ -4099,3 +4108,110 @@ def test_probe_memo_scoped_to_one_rewrite(spark, rw):
     finally:
         RW.SqlRewriter._probe_analyzes_uncached = orig
     assert len(calls) == len(set(calls))  # no duplicate probe issued
+
+
+def test_several_unnests_zip_like_duckdb(spark, rw):
+    """DuckDB unnests several lists in one SELECT list side by side: row
+    k holds each list's k-th element, and a shorter, empty or NULL list
+    pads with NULL. Two Spark explodes would form the cross product.
+    generate_subscripts zips the same way, and alone it yields no row
+    for an empty or NULL list."""
+    import duckdb
+
+    for sql in [
+        "SELECT unnest([1, 2, 3]) AS a, unnest(['x', 'y', 'z']) AS b",
+        "SELECT unnest([1, 2, 3]) AS a, unnest(['x', 'y']) AS b",
+        "SELECT unnest([1, 2]) AS a, unnest(CAST([] AS VARCHAR[])) AS b",
+        "SELECT unnest([1, 2]) AS a, unnest(CAST(NULL AS VARCHAR[])) AS b",
+        "SELECT k, generate_subscripts(l, 1) AS i, unnest(l) AS v "
+        "FROM (VALUES (1, ['p', 'q', 'r']), (2, []), (3, NULL), (4, ['s'])) t(k, l)",
+        "SELECT k, generate_subscripts(l, 1) AS i "
+        "FROM (VALUES (1, ['p', 'q']), (2, []), (3, NULL)) t(k, l)",
+    ]:
+        got = sorted((tuple(r) for r in spark.sql(rw.rewrite(sql)).collect()), key=str)
+        assert got == sorted(duckdb.sql(sql).fetchall(), key=str), sql
+    # forms the zip cannot express raise instead of serving a cross product
+    for bad in [
+        "SELECT unnest([1, 2]) AS a, 5 AS k, unnest([3]) AS b",
+        "SELECT unnest([1, 2]) + 1 AS a, unnest([3]) AS b",
+    ]:
+        with pytest.raises(UQueryError):
+            rw.rewrite(bad)
+
+
+def _run_paused(rw, monkeypatch, method, sql):
+    """Start ``rw.rewrite(sql)`` on a thread that stops inside
+    ``rw.<method>`` until released. Returns (release, finish): finish
+    joins the thread and returns its result or raises its error."""
+    entered, go, out = threading.Event(), threading.Event(), {}
+    orig = getattr(rw, method)
+    worker = None
+
+    def paused(*args):
+        if threading.current_thread() is not worker:
+            return orig(*args)
+        result = orig(*args)
+        entered.set()
+        assert go.wait(30)
+        return result
+
+    monkeypatch.setattr(rw, method, paused)
+
+    def run():
+        try:
+            out["sql"] = rw.rewrite(sql)
+        except Exception as e:  # noqa: BLE001 - handed to finish()
+            out["error"] = e
+        finally:
+            entered.set()
+
+    worker = threading.Thread(target=run)
+    worker.start()
+    assert entered.wait(30)
+
+    def finish():
+        worker.join(30)
+        if "error" in out:
+            raise out["error"]
+        return out["sql"]
+
+    return go.set, finish
+
+
+def test_overlapping_executes_leave_no_depth_behind(spark, rw, monkeypatch):
+    """One rewriter serves every handler thread. When two EXECUTEs
+    overlap (A enters, B enters, A exits, B exits), neither may leave
+    its nesting depth behind: 16 leaked levels would make every later
+    EXECUTE fail with the recursion-limit error."""
+    rw.rewrite("PREPARE uq_overlap AS SELECT $1 AS x")
+    for _ in range(17):
+        release_a, finish_a = _run_paused(
+            rw, monkeypatch, "_substitute_prepared_params", "EXECUTE uq_overlap(1)"
+        )
+        monkeypatch.undo()
+        release_b, finish_b = _run_paused(
+            rw, monkeypatch, "_substitute_prepared_params", "EXECUTE uq_overlap(2)"
+        )
+        monkeypatch.undo()
+        release_a()
+        assert finish_a() == "SELECT (1) AS x"
+        release_b()
+        assert finish_b() == "SELECT (2) AS x"
+    assert rw.rewrite("EXECUTE uq_overlap(3)") == "SELECT (3) AS x"
+
+
+def test_concurrent_rewrite_keeps_pivot_column_names(spark, rw, monkeypatch):
+    """A pivot column name that is not a plain identifier travels as a
+    placeholder token until the end of its rewrite. Another request
+    finishing its own rewrite meanwhile must not drop that token, or
+    the pivot serves a column named ``uq_pvn_N``."""
+    release, finish = _run_paused(
+        rw, monkeypatch, "_pivot_name_token",
+        "PIVOT (SELECT * FROM (VALUES ('a b', 1.0), ('c', 2.0)) t(a, x)) "
+        "ON a USING sum(x)",
+    )
+    monkeypatch.undo()
+    rw.rewrite("SELECT 1 AS other_request")
+    release()
+    df = spark.sql(finish())
+    assert df.columns == ["a b", "c"]

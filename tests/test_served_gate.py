@@ -5,12 +5,18 @@ A client sends DuckDB SQL text; the server runs it through
 gate sends each entry's oracle text down that path at sf0.001 and compares
 the result with DuckDB running the same text, through ``compare_query``.
 
-The oracle gate (test_oracle_gate.py) already serves the oracle text of
-every SQL-text entry without ``sql=``, so this gate covers the rest:
+Every entry is gated here, whatever its ``spark_fn``:
 
-- code entries, whose ``spark_fn`` is DataFrame code or more than one
-  statement;
-- ``sql=`` entries, whose served gateway text differs from their oracle.
+- code entries: bench kernels, plan-pinned DataFrame queries, entries
+  built on the operator library, entries that run more than one
+  statement or post-process, and entries whose oracle text the gateway
+  cannot serve yet (registry module docstring);
+- ``sql=`` entries, whose served gateway text differs from their oracle;
+- SQL-text entries without ``sql=``, whose case here runs the same query
+  as their oracle-gate case (test_oracle_gate.py).
+
+A code entry that passes here and has none of the other reasons to stay
+code is a DataFrame copy of its oracle: it belongs in ``register_sql``.
 
 An entry whose oracle text the gateway cannot serve yet is listed in
 :data:`EXCLUDED` with the DuckDB feature or defect it needs. Those run as
@@ -55,12 +61,10 @@ EXCLUDED: dict[str, str] = {
     "dialect_edge_cases": (
         "HUGEINT arithmetic: HUGEINT maps to BIGINT, whose multiply overflows under ANSI"
     ),
-    "emb_dim_variance": _CORRELATED,
     "emb_diversity_sample": _CORRELATED,
     "multimodal_resize": _HEX_CAST,
     "positional_join_rank_zip": "POSITIONAL JOIN: the rewriter does not translate it (parse error)",
     "streaming_interval_join": "epoch(ts - ts): the rewrite casts the INTERVAL's text to TIMESTAMP",
-    "text_boilerplate_removal": "wrong answer: same 500 rows, different value digest",
     "text_bpe_apply_ids": "rewritten text leaves column `doc_id` unresolved",
     "unpivot_part_measures": "UNPIVOT statement in a FROM subquery: left unrewritten, parse error",
     "unpivot_statement_measures": (
@@ -69,14 +73,7 @@ EXCLUDED: dict[str, str] = {
 }
 
 
-def _serves_own_oracle(q: Query) -> bool:
-    fn = q.spark_fn
-    return isinstance(fn, partial) and fn.func is gateway_sql and q.sql is None
-
-
-GATED = sorted(
-    n for n, q in Q.REGISTRY.items() if q.oracle is not None and not _serves_own_oracle(q)
-)
+GATED = sorted(n for n, q in Q.REGISTRY.items() if q.oracle is not None)
 
 
 def _param(name: str):
@@ -94,10 +91,9 @@ def test_served_oracle_text_matches_duckdb(name, spark, oracle_con):
 
 
 def test_gate_covers_code_and_reshaped_entries():
-    """Every entry is covered by exactly one path: its oracle text is
-    served here, or by the oracle gate through its own ``spark_fn``."""
-    sql_entries = [q for q in Q.REGISTRY.values() if _serves_own_oracle(q)]
-    assert len(sql_entries) + len(GATED) == len(Q.REGISTRY)
+    """Every entry's oracle text is served here, code and ``sql=``
+    entries included."""
+    assert GATED == sorted(Q.REGISTRY)
     assert set(EXCLUDED) <= set(GATED)
     # a SQL-text entry's doc is its own, never functools.partial's
     assert all(q.doc != partial.__doc__ for q in Q.REGISTRY.values())

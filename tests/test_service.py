@@ -372,10 +372,42 @@ def test_sigterm_stops_server():
         watchdog.cancel()
         assert proc.poll() is None, "server exited before it started"
         proc.send_signal(signal.SIGTERM)
-        proc.communicate(timeout=60)
-        assert proc.returncode == 0
+        out, _ = proc.communicate(timeout=60)
+        assert proc.returncode == 0, out[-2000:]
     finally:
         watchdog.cancel()
+        try:  # whatever is left of the session, the JVM included
+            os.killpg(proc.pid, signal.SIGKILL)
+        except ProcessLookupError:
+            pass
+        proc.wait()
+
+
+def test_sigterm_right_after_start_line_stops_server():
+    """The signal lands the moment the start line is written, before the
+    server has returned from printing it: it still stops cleanly."""
+    root = os.path.dirname(TESTS_DIR)
+    env = dict(os.environ, PYTHONPATH=root, UQ_DRIVER_MEMORY="1g")
+    code = (
+        "import builtins, os, signal, sys\n"
+        "from uquery_rs_spark.web.__main__ import main\n"
+        "_print = builtins.print\n"
+        "def print_then_signal(*args, **kwargs):\n"
+        "    _print(*args, **kwargs)\n"
+        "    if args and 'started' in str(args[0]):\n"
+        "        os.kill(os.getpid(), signal.SIGTERM)\n"
+        "builtins.print = print_then_signal\n"
+        "sys.exit(main(['--port', '0', '--addr', '127.0.0.1', '--cpus', '1']))\n"
+    )
+    proc = subprocess.Popen(
+        [sys.executable, "-u", "-c", code], cwd=root, env=env,
+        stdout=subprocess.PIPE, stderr=subprocess.STDOUT, text=True, start_new_session=True,
+    )
+    try:
+        out, _ = proc.communicate(timeout=300)
+        assert proc.returncode == 0, out[-2000:]
+        assert "shutting down" in out
+    finally:
         try:  # whatever is left of the session, the JVM included
             os.killpg(proc.pid, signal.SIGKILL)
         except ProcessLookupError:

@@ -13,9 +13,9 @@ version-portably (see the _B32_ORACLE_SQL and _B40S_* notes), so the
 DuckDB idiom stays in the served text.
 
 The rest are code: a row_number zip where Spark lacks the operator
-entirely (DuckDB POSITIONAL JOIN), DataFrame forms (INTERSECT/EXCEPT
-ALL, salted and planned joins), and the multi-statement prepared
-statement lifecycle.
+entirely (DuckDB POSITIONAL JOIN), DataFrame forms (salted and planned
+joins), the multi-statement prepared statement lifecycle, and entries
+whose oracle text the gateway cannot serve yet.
 """
 
 from __future__ import annotations
@@ -206,46 +206,30 @@ def positional_join_rank_zip(spark: SparkSession, sf: str) -> DataFrame:
     return a.join(F.broadcast(b), "pos").select("rich_customer", "rich_supplier")
 
 
-@register(
+register_sql(
     "intersect_all_priorities",
     tags=("setops", "bag", "dialect"),
+    doc="""Bag-semantics INTERSECT ALL (multiplicity = min of the two sides) —
+    native in both engines.""",
     oracle="""
 SELECT o_orderpriority FROM orders WHERE o_orderstatus = 'F'
 INTERSECT ALL
 SELECT o_orderpriority FROM orders WHERE o_orderstatus = 'O'
 """,
 )
-def intersect_all_priorities(spark: SparkSession, sf: str) -> DataFrame:
-    """Bag-semantics INTERSECT ALL (multiplicity = min of the two sides) —
-    native in both engines."""
-    t = load_tables(spark, sf)
-    o = t["orders"]
-    return (
-        o.filter(F.col("o_orderstatus") == "F")
-        .select("o_orderpriority")
-        .intersectAll(o.filter(F.col("o_orderstatus") == "O").select("o_orderpriority"))
-    )
 
 
-@register(
+register_sql(
     "except_all_priorities",
     tags=("setops", "bag", "dialect"),
+    doc="""Bag-semantics EXCEPT ALL (multiplicity = left minus right, floored
+    at zero) — native in both engines.""",
     oracle="""
 SELECT o_orderpriority FROM orders WHERE o_orderstatus = 'F'
 EXCEPT ALL
 SELECT o_orderpriority FROM orders WHERE o_orderstatus = 'P'
 """,
 )
-def except_all_priorities(spark: SparkSession, sf: str) -> DataFrame:
-    """Bag-semantics EXCEPT ALL (multiplicity = left minus right, floored
-    at zero) — native in both engines."""
-    t = load_tables(spark, sf)
-    o = t["orders"]
-    return (
-        o.filter(F.col("o_orderstatus") == "F")
-        .select("o_orderpriority")
-        .exceptAll(o.filter(F.col("o_orderstatus") == "P").select("o_orderpriority"))
-    )
 
 
 @register(
@@ -446,9 +430,14 @@ ORDER BY ALL
 )
 
 
-@register(
+register_sql(
     "ignore_nulls_window_battery",
     tags=("window", "dialect"),
+    doc="""IGNORE NULLS analytic functions (gap-fill primitives — the same
+    machinery as the AS-OF join's last-non-null): forward-fill via
+    last_value over a trailing frame, backward peek via first_value over a
+    leading frame, previous-non-null via lag, over a named WINDOW
+    clause.""",
     oracle="""
 SELECT o_orderkey,
        last_value(hi_price IGNORE NULLS) OVER w  AS last_hi,
@@ -464,25 +453,6 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderkey
 ORDER BY o_orderkey
 """,
 )
-def ignore_nulls_window_battery(spark: SparkSession, sf: str) -> DataFrame:
-    """IGNORE NULLS analytic functions (gap-fill primitives — the same
-    machinery as the AS-OF join's last-non-null): forward-fill via
-    last_value over a trailing frame, backward peek via first_value over a
-    leading frame, previous-non-null via lag. Named WINDOW clause on the
-    oracle side; Spark side uses explicit frames."""
-    o = load_tables(spark, sf)["orders"].filter(F.col("o_custkey") <= 200)
-    hi = F.when(F.col("o_totalprice") > 150000, F.round("o_totalprice", 2))
-    base = o.select("o_orderkey", "o_custkey", hi.alias("hi_price"))
-    back = W.partitionBy("o_custkey").orderBy("o_orderkey").rowsBetween(W.unboundedPreceding, W.currentRow)
-    fwd = W.partitionBy("o_custkey").orderBy("o_orderkey").rowsBetween(W.currentRow, W.unboundedFollowing)
-    plain = W.partitionBy("o_custkey").orderBy("o_orderkey")
-    return base.select(
-        "o_orderkey",
-        F.last("hi_price", ignorenulls=True).over(back).alias("last_hi"),
-        F.first("hi_price", ignorenulls=True).over(fwd).alias("next_hi"),
-        # PySpark's F.lag lacks an ignorenulls flag — SQL expression form
-        F.expr("lag(hi_price) IGNORE NULLS").over(plain).alias("prev_hi"),
-    ).orderBy("o_orderkey")
 
 
 register_sql(

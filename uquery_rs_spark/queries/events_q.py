@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..operators.asof import asof_join
-from .registry import load_tables, register
+from .registry import load_tables, register, register_sql
 
 
 @register(
@@ -47,9 +47,13 @@ def tumbling_window_events(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "tumbling_window_approx",
     tags=("events", "window-agg", "approx"),
+    doc="""tumbling_window_events in the hash-checkable approx shape
+    (within_bound registry convention, like the ANN recall shapes): the
+    exact per-window values plus a ``within_bound`` column that the
+    oracle pins TRUE.""",
     oracle="""
 SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
        event_type,
@@ -61,70 +65,14 @@ GROUP BY 1, 2
 ORDER BY 1, 2
 """,
 )
-def tumbling_window_approx(spark: SparkSession, sf: str) -> DataFrame:
-    """The documented 100 TB plan for tumbling_window_events (NOTES
-    entry 22): count(DISTINCT user_id) forces Spark's distinct-expand
-    shuffle of every (window, event_type, user_id) triple — the named
-    per-row shuffle bound — while an HLL sketch aggregate folds into
-    the ordinary partial-aggregate path: one map-side combine, sketches
-    merged on the reduce side, shuffle volume ∝ groups, not rows. This
-    entry makes the recommended at-scale plan itself
-    correctness-checked (within_bound registry convention, like the
-    ANN recall shapes): checked columns are the exact values both
-    engines compute identically plus the claim that the Datasketches
-    HLL estimate (lgConfigK=14 ≈ 0.4% rse since r14 — ADVICE #1's
-    margin fix) lands within max(1, 5%) of the exact count per
-    window."""
-    ev = load_tables(spark, sf)["events"]
-    # The exact and approx counts are computed in SEPARATE aggregations
-    # and joined on the ~|windows| group keys: putting
-    # approx_count_distinct in the same agg as countDistinct drags the
-    # sketch through the distinct-expand path — Catalyst groups by
-    # (window, event_type, user_id) first, so the partial aggregate
-    # builds and shuffles a ~1640-long HLL buffer (rsd 0.01 ⇒ 2^14
-    # registers ≈ 13 KB) PER DISTINCT TRIPLE instead of per window
-    # (measured 24-44 s at sf0.01 vs ~1 s split). Split, the sketch side
-    # folds into the ordinary partial-aggregate path — shuffle ∝ groups ×
-    # sketch size — which is exactly the at-scale design this entry
-    # exists to pin.
-    win = F.window("ts", "1 hour").alias("w")
-    exact = ev.groupBy(win, "event_type").agg(
-        F.count("*").alias("n_events"),
-        F.countDistinct("user_id").alias("n_users"),
-    )
-    # Datasketches HLL instead of approx_count_distinct(rsd=0.01):
-    # Spark's HLL++ at rsd 0.01 needs a 2^14-register buffer flattened
-    # into ~1640 aggregation-buffer columns, which blows past the
-    # ~100-field whole-stage-codegen limit and drops the whole aggregate
-    # to interpreted row mode (measured 16-20 s vs 0.3 s at sf0.01). The
-    # Datasketches buffer is ONE binary column through
-    # ObjectHashAggregate. lgConfigK=14 (~0.4% RSE; r13 ADVICE #1):
-    # the 5% within_bound contract sits ~12σ out instead of ~3σ at
-    # lgK=12, removing the per-group tail-flake risk at scale for a
-    # still-KB-sized buffer. (events_hll_sketch_rollup keeps lgK=12 —
-    # its bound covers union-rollup composition, a different margin.)
-    approx = ev.groupBy(win, "event_type").agg(
-        F.expr("hll_sketch_estimate(hll_sketch_agg(user_id, 14))").alias("_apx")
-    )
-    bound = F.abs(
-        F.col("_apx").cast("double") - F.col("n_users").cast("double")
-    ) <= F.greatest(F.lit(1.0), F.col("n_users").cast("double") * F.lit(0.05))
-    return (
-        exact.join(approx, ["w", "event_type"])
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "n_users",
-            bound.alias("within_bound"),
-        )
-        .orderBy("window_start", "event_type")
-    )
 
 
-@register(
+register_sql(
     "sliding_window_events",
     tags=("events", "window-agg"),
+    doc="""Sliding windows (2h size, 1h slide): every event lands in two
+    windows. Oracle models the same by exploding each row into its two
+    containing window starts.""",
     oracle="""
 WITH slid AS (
   SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP)                   AS ws, * FROM events
@@ -137,20 +85,9 @@ GROUP BY ws
 ORDER BY ws
 """,
 )
-def sliding_window_events(spark: SparkSession, sf: str) -> DataFrame:
-    """Sliding windows (2h size, 1h slide): every event lands in two
-    windows. Oracle models the same by exploding each row into its two
-    containing window starts."""
-    ev = load_tables(spark, sf)["events"]
-    return (
-        ev.groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(F.col("w.start").alias("window_start"), "n_events", "total_value")
-        .orderBy("window_start")
-    )
 
 
-@register(
+register_sql(
     "daily_user_activity",
     tags=("events", "window-agg"),
     oracle="""
@@ -162,20 +99,6 @@ FROM events
 GROUP BY 1 ORDER BY 1
 """,
 )
-def daily_user_activity(spark: SparkSession, sf: str) -> DataFrame:
-    ev = load_tables(spark, sf)["events"]
-    return (
-        ev.groupBy(F.window("ts", "1 day").alias("w"))
-        .agg(
-            F.countDistinct("user_id").alias("dau"),
-            F.count("*").alias("n_events"),
-            F.round(
-                F.sum(F.when(F.col("event_type") == "purchase", F.col("value"))), 2
-            ).alias("purchase_value"),
-        )
-        .select(F.col("w.start").alias("day"), "dau", "n_events", "purchase_value")
-        .orderBy("day")
-    )
 
 
 @register(
@@ -313,9 +236,13 @@ def asof_direction_battery(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "time_range_window_events",
     tags=("events", "window-frame", "time-series"),
+    doc="""Time-based RANGE frame (sliding 1-hour lookback per event):
+    inclusive bounds on both engines, and duplicate timestamps all fall
+    inside the frame (RANGE, not ROWS). One shuffle on user_id shared by
+    both window aggregates.""",
     oracle="""
 SELECT event_id, user_id,
        count(*) OVER (PARTITION BY user_id ORDER BY ts
@@ -328,31 +255,14 @@ FROM events WHERE user_id <= 50
 ORDER BY event_id
 """,
 )
-def time_range_window_events(spark: SparkSession, sf: str) -> DataFrame:
-    """Time-based RANGE frame (sliding 1-hour lookback per event): Spark's
-    rangeBetween needs a numeric ordering, so the frame orders on tz-free
-    seconds (timestampdiff from a fixed naive epoch — ts is timestamp_ntz,
-    which cannot cast to long and must not detour through the session tz)
-    with offsets [-3600, 0] — inclusive bounds on both engines, and
-    duplicate timestamps all fall inside the frame (RANGE, not ROWS).
-    One shuffle on user_id shared by both window aggregates."""
-    ev = load_tables(spark, sf)["events"].filter(F.col("user_id") <= 50)
-    w = (
-        W.partitionBy("user_id")
-        .orderBy(F.expr("timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)"))
-        .rangeBetween(-3600, 0)
-    )
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.count("*").over(w).alias("n_last_hour"),
-        F.round(F.sum("value").over(w), 2).alias("value_last_hour"),
-    ).orderBy("event_id")
 
 
-@register(
+register_sql(
     "funnel_view_click_purchase",
     tags=("events", "funnel"),
+    doc="""Ordered conversion funnel (view → click → purchase): per user, the
+    first view, the first click AFTER that view, the first purchase AFTER
+    that click; output is users surviving each stage.""",
     oracle="""
 WITH v AS (
   SELECT user_id, min(ts) AS t1 FROM events WHERE event_type = 'view' GROUP BY user_id
@@ -375,45 +285,13 @@ SELECT stage, n_users FROM (
 ORDER BY stage
 """,
 )
-def funnel_view_click_purchase(spark: SparkSession, sf: str) -> DataFrame:
-    """Ordered conversion funnel (view → click → purchase): per user, the
-    first view, the first click AFTER that view, the first purchase AFTER
-    that click; output is users surviving each stage.
-
-    Scale shape: ONE events scan, ONE user_id shuffle. The three stage
-    timestamps are layered conditional-min windows over the same
-    partitioning (each layer references the previous column, so Spark
-    plans three Window ops back-to-back with no re-exchange), then a
-    singleton aggregate. The join-per-stage formulation (the oracle's
-    shape) replans the events subtree per stage — 6 scans at plan time,
-    measured — which at 100 TB pays the corpus read six times."""
-    ev = load_tables(spark, sf)["events"]
-    w = W.partitionBy("user_id")
-    is_ = lambda t: F.col("event_type") == t  # noqa: E731
-    stages = (
-        ev.withColumn("t1", F.min(F.when(is_("view"), F.col("ts"))).over(w))
-        .withColumn(
-            "t2",
-            F.min(F.when(is_("click") & (F.col("ts") > F.col("t1")), F.col("ts"))).over(w),
-        )
-        .withColumn(
-            "t3",
-            F.min(F.when(is_("purchase") & (F.col("ts") > F.col("t2")), F.col("ts"))).over(w),
-        )
-    )
-    counts = stages.agg(
-        F.countDistinct(F.when(F.col("t1").isNotNull(), F.col("user_id"))).alias("v"),
-        F.countDistinct(F.when(F.col("t2").isNotNull(), F.col("user_id"))).alias("c"),
-        F.countDistinct(F.when(F.col("t3").isNotNull(), F.col("user_id"))).alias("p"),
-    )
-    return counts.selectExpr(
-        "stack(3, '1_view', v, '2_click', c, '3_purchase', p) AS (stage, n_users)"
-    ).orderBy("stage")
 
 
-@register(
+register_sql(
     "cohort_retention_daily",
     tags=("events", "cohort"),
+    doc="""Cohort retention triangle: users grouped by first-seen day, counted
+    on each later active day.""",
     oracle="""
 WITH activity AS (
   SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day FROM events
@@ -426,28 +304,16 @@ GROUP BY 1, 2
 ORDER BY 1, 2
 """,
 )
-def cohort_retention_daily(spark: SparkSession, sf: str) -> DataFrame:
-    """Cohort retention triangle: users grouped by first-seen day, counted
-    on each later active day. One user_id shuffle for the distinct-day +
-    cohort window (same partitioning, no re-exchange), then a tiny
-    (cohort, offset)-key aggregate — the layout that keeps 100 TB of raw
-    events out of every shuffle after the first."""
-    ev = load_tables(spark, sf)["events"]
-    activity = ev.select(
-        "user_id", F.date_trunc("day", "ts").cast("timestamp_ntz").alias("day")
-    ).distinct()
-    w = W.partitionBy("user_id")
-    cohorts = activity.withColumn("cohort_day", F.min("day").over(w))
-    return (
-        cohorts.groupBy("cohort_day", F.datediff("day", "cohort_day").alias("day_offset"))
-        .agg(F.count("*").alias("n_users"))
-        .orderBy("cohort_day", "day_offset")
-    )
 
 
-@register(
+register_sql(
     "events_anomaly_zscore",
     tags=("events", "anomaly"),
+    doc="""Traffic-anomaly detection: hours where an event type's volume runs
+    >= 2 sigma above its own hourly mean. One (type, hour) aggregate
+    (map-side combined) then a per-type window over the ALREADY tiny
+    hourly table — the raw event stream is shuffled once, the z-score
+    math touches only hours x types rows.""",
     oracle="""
 WITH hourly AS (
   SELECT event_type, CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour,
@@ -468,31 +334,17 @@ WHERE sigma > 0 AND (n_events - mu) / sigma >= 2.0
 ORDER BY event_type, hour
 """,
 )
-def events_anomaly_zscore(spark: SparkSession, sf: str) -> DataFrame:
-    """Traffic-anomaly detection: hours where an event type's volume runs
-    >= 2 sigma above its own hourly mean. One (type, hour) aggregate
-    (map-side combined) then a per-type window over the ALREADY tiny
-    hourly table — the raw event stream is shuffled once, the z-score
-    math touches only hours x types rows."""
-    ev = load_tables(spark, sf)["events"]
-    hourly = (
-        ev.groupBy("event_type", F.date_trunc("hour", "ts").alias("hour"))
-        .agg(F.count("*").alias("n_events"))
-    )
-    w = W.partitionBy("event_type")
-    z = (F.col("n_events") - F.avg("n_events").over(w)) / F.stddev("n_events").over(w)
-    return (
-        hourly.withColumn("sigma", F.stddev("n_events").over(w))
-        .withColumn("z_raw", z)
-        .filter((F.col("sigma") > 0) & (F.col("z_raw") >= 2.0))
-        .select("event_type", "hour", "n_events", F.round("z_raw", 2).alias("z"))
-        .orderBy("event_type", "hour")
-    )
 
 
-@register(
+register_sql(
     "events_resample_gapfill",
     tags=("events", "time-series", "resample"),
+    doc="""Time-series resampling with gap fill: each user's activity
+    re-gridded to 6-hour slots anchored at their own first active hour,
+    empty slots ZERO-FILLED (the step plain groupBy can't do — absent
+    groups produce no rows). Grid generation unnests a per-user
+    generate_series off a tiny span aggregate; counts join the grid on
+    (user, slot).""",
     oracle="""
 WITH spans AS (
   SELECT user_id,
@@ -518,54 +370,15 @@ FROM grid g LEFT JOIN actual a ON g.user_id = a.user_id AND g.slot = a.slot
 ORDER BY g.user_id, slot
 """,
 )
-def events_resample_gapfill(spark: SparkSession, sf: str) -> DataFrame:
-    """Time-series resampling with gap fill: each user's activity
-    re-gridded to 6-hour slots anchored at their own first active hour,
-    empty slots ZERO-FILLED (the step plain groupBy can't do — absent
-    groups produce no rows). Grid generation is a per-user sequence
-    explode off a tiny span aggregate (broadcast back); counts join the
-    grid on (user, slot index) — nothing corpus-sized is ever
-    regenerated or re-shuffled beyond the one user_id aggregate."""
-    ev = load_tables(spark, sf)["events"].filter(F.col("user_id") <= 20)
-    spans = ev.groupBy("user_id").agg(
-        F.date_trunc("hour", F.min("ts")).alias("t0"),
-        F.date_trunc("hour", F.max("ts")).alias("t1"),
-    )
-    n_slots = F.floor(F.expr("timestampdiff(HOUR, t0, t1)") / 6).cast("int")
-    grid = spans.select(
-        "user_id",
-        "t0",
-        F.explode(F.sequence(F.lit(0), n_slots)).alias("k"),
-    ).select(
-        "user_id",
-        F.expr("timestampadd(HOUR, 6 * k, t0)").alias("slot"),
-        "k",
-    )
-    actual = (
-        ev.join(F.broadcast(spans), "user_id")
-        .withColumn(
-            "k",
-            F.floor(
-                F.expr("timestampdiff(HOUR, t0, date_trunc('hour', ts))") / 6
-            ).cast("int"),
-        )
-        .groupBy("user_id", "k")
-        .agg(F.count("*").alias("n"))
-    )
-    return (
-        grid.join(actual, ["user_id", "k"], "left")
-        .select(
-            "user_id",
-            F.col("slot").cast("timestamp_ntz").alias("slot"),
-            F.coalesce("n", F.lit(0)).alias("n_events"),
-        )
-        .orderBy("user_id", "slot")
-    )
 
 
-@register(
+register_sql(
     "events_markov_transitions",
     tags=("events", "sequence"),
+    doc="""First-order behavior model: the event-type transition matrix
+    P(next | current) across per-user event sequences — lead() over the
+    one user_id sort-shuffle, then a tiny (type, type) aggregate and a
+    partition-total window on the ALREADY aggregated 5x5 table.""",
     oracle="""
 WITH seq AS (
   SELECT user_id, event_type,
@@ -581,24 +394,6 @@ GROUP BY event_type, next_type
 ORDER BY event_type, next_type
 """,
 )
-def events_markov_transitions(spark: SparkSession, sf: str) -> DataFrame:
-    """First-order behavior model: the event-type transition matrix
-    P(next | current) across per-user event sequences — lead() over the
-    one user_id sort-shuffle, then a tiny (type, type) aggregate and a
-    partition-total window on the ALREADY aggregated 5x5 table."""
-    ev = load_tables(spark, sf)["events"]
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        "event_type", F.lead("event_type").over(w).alias("next_type")
-    ).filter(F.col("next_type").isNotNull())
-    counts = seq.groupBy("event_type", "next_type").agg(F.count("*").alias("n"))
-    tot = W.partitionBy("event_type")
-    return counts.select(
-        "event_type",
-        "next_type",
-        "n",
-        F.round(F.col("n") / F.sum("n").over(tot), 4).alias("p_next"),
-    ).orderBy("event_type", "next_type")
 
 
 @register(

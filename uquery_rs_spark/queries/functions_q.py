@@ -13,12 +13,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import macros as M
-from .registry import load_tables, register
+from .registry import load_tables, register, register_sql
 
 
-@register(
+register_sql(
     "string_functions_battery",
     tags=("functions", "string"),
+    doc="""lower/upper/length/substr/replace/trim/concat/||/pad/reverse/…""",
     oracle="""
 SELECT c_custkey,
        lower(c_name)                         AS lname,
@@ -40,31 +41,13 @@ WHERE c_custkey <= 500
 ORDER BY c_custkey
 """,
 )
-def string_functions_battery(spark: SparkSession, sf: str) -> DataFrame:
-    """lower/upper/length/substr/replace/trim/concat/||/pad/reverse/…"""
-    cust = load_tables(spark, sf)["customer"].filter(F.col("c_custkey") <= 500)
-    return cust.select(
-        "c_custkey",
-        F.lower("c_name").alias("lname"),
-        F.upper("c_mktsegment").alias("useg"),
-        F.length("c_name").alias("name_len"),
-        F.substring("c_name", 1, 8).alias("prefix"),
-        F.replace(F.col("c_name"), F.lit("#"), F.lit("-")).alias("dashed"),
-        F.trim(F.concat(F.lit("  "), F.col("c_name"), F.lit(" "))).alias("trimmed"),
-        F.concat("c_name", F.lit("/"), "c_mktsegment").alias("joined"),
-        F.left(F.col("c_mktsegment"), F.lit(4)).alias("seg4"),
-        F.right(F.col("c_name"), F.lit(3)).alias("last3"),
-        F.lpad(F.col("c_custkey").cast("string"), 8, "0").alias("padded"),
-        F.reverse("c_mktsegment").alias("rev"),
-        F.contains("c_name", F.lit("1")).alias("has_one"),
-        F.startswith("c_mktsegment", F.lit("BUI")).alias("is_bui"),
-        F.position(F.lit("0"), "c_name").alias("pos0"),
-    ).orderBy("c_custkey")
 
 
-@register(
+register_sql(
     "regex_functions",
     tags=("functions", "regex"),
+    doc="""regexp_extract/replace/match + split — patterns chosen inside the
+    RE2∩Java-regex common subset (SURVEY.md §7 dialect-fidelity note).""",
     oracle="""
 SELECT p_partkey,
        p_type,
@@ -78,24 +61,12 @@ WHERE p_partkey <= 300
 ORDER BY p_partkey
 """,
 )
-def regex_functions(spark: SparkSession, sf: str) -> DataFrame:
-    """regexp_extract/replace/match + split — patterns chosen inside the
-    RE2∩Java-regex common subset (SURVEY.md §7 dialect-fidelity note)."""
-    part = load_tables(spark, sf)["part"].filter(F.col("p_partkey") <= 300)
-    return part.select(
-        "p_partkey",
-        "p_type",
-        F.regexp_extract("p_type", r"^(\w+)", 1).alias("first_word"),
-        F.regexp_replace("p_type", "[aeiou]", "_").alias("devoweled"),
-        F.col("p_type").rlike("BRUSHED|POLISHED").alias("is_finished"),
-        F.split_part(F.col("p_type"), F.lit(" "), F.lit(1)).alias("tok1"),
-        F.size(F.split("p_type", " ")).cast("long").alias("n_tokens"),
-    ).orderBy("p_partkey")
 
 
-@register(
+register_sql(
     "datetime_functions",
     tags=("functions", "datetime"),
+    doc="""date_trunc/extract/interval/strftime/epoch/datediff/last_day.""",
     oracle="""
 SELECT o_orderkey,
        CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month_start,
@@ -113,32 +84,17 @@ WHERE o_orderkey <= 1000
 ORDER BY o_orderkey
 """,
 )
-def datetime_functions(spark: SparkSession, sf: str) -> DataFrame:
-    """date_trunc/extract/interval/strftime/epoch/datediff/last_day.
-
-    DuckDB dow: Sunday=0 — Spark dayofweek is Sunday=1, so subtract 1.
-    """
-    orders = load_tables(spark, sf)["orders"].filter(F.col("o_orderkey") <= 1000)
-    return orders.select(
-        "o_orderkey",
-        F.date_trunc("month", "o_orderdate").cast("timestamp_ntz").alias("month_start"),
-        F.year("o_orderdate").cast("long").alias("yr"),
-        F.month("o_orderdate").cast("long").alias("mo"),
-        F.dayofmonth("o_orderdate").cast("long").alias("dy"),
-        (F.dayofweek("o_orderdate") - 1).cast("long").alias("dow"),
-        (F.col("o_orderdate") + F.expr("INTERVAL 30 DAY")).alias("due_date"),
-        F.date_format("o_orderdate", "yyyy-MM").alias("ym"),
-        F.col("o_orderdate").cast("timestamp").cast("long").alias("epoch_s"),
-        F.datediff(
-            F.col("o_orderdate").cast("date"), F.lit("1997-01-01").cast("date")
-        ).cast("long").alias("days_since_97"),
-        F.last_day(F.col("o_orderdate").cast("date")).alias("month_end"),
-    ).orderBy("o_orderkey")
 
 
-@register(
+register_sql(
     "math_functions",
     tags=("functions", "math"),
+    doc="""abs/ceil/floor/ln/log10/exp/sqrt/pow/%/sign/greatest/least/pi.
+
+    Transcendentals rounded to 6 dp — libm results agree well past that.
+    DuckDB ceil/floor(double) return DOUBLE; Spark returns BIGINT — the
+    oracle casts to BIGINT (documented dialect deviation, values equal).
+    """,
     oracle="""
 SELECT p_partkey,
        abs(p_retailprice - 1000)                    AS dist_1k,
@@ -159,36 +115,12 @@ WHERE p_partkey <= 300
 ORDER BY p_partkey
 """,
 )
-def math_functions(spark: SparkSession, sf: str) -> DataFrame:
-    """abs/ceil/floor/ln/log10/exp/sqrt/pow/%/sign/greatest/least/pi.
-
-    Transcendentals rounded to 6 dp — libm results agree well past that.
-    DuckDB sign() returns int; Spark signum() double — cast to long both.
-    DuckDB ceil/floor(double) return DOUBLE; Spark returns BIGINT — the
-    oracle casts to BIGINT (documented dialect deviation, values equal).
-    """
-    part = load_tables(spark, sf)["part"].filter(F.col("p_partkey") <= 300)
-    return part.select(
-        "p_partkey",
-        F.abs(F.col("p_retailprice") - 1000).alias("dist_1k"),
-        F.ceil("p_retailprice").alias("c"),
-        F.floor("p_retailprice").alias("f"),
-        F.round(F.ln("p_retailprice"), 6).alias("log_price"),
-        F.round(F.log10("p_retailprice"), 6).alias("log10_price"),
-        F.round(F.exp(F.col("p_size") / 25.0), 6).alias("e_size"),
-        F.round(F.sqrt("p_retailprice"), 6).alias("root"),
-        F.round(F.pow("p_size", F.lit(2)), 1).alias("size_sq"),
-        (F.col("p_size") % 7).alias("m7"),
-        F.signum(F.col("p_retailprice") - 1200).cast("long").alias("sgn"),
-        F.greatest("p_size", F.lit(25)).alias("hi"),
-        F.least("p_size", F.lit(25)).alias("lo"),
-        F.round(F.lit(3.14159265358979), 6).alias("pi_val"),
-    ).orderBy("p_partkey")
 
 
-@register(
+register_sql(
     "array_functions",
     tags=("functions", "array", "higher-order"),
+    doc="""Array ops incl. higher-order lambdas: transform / filter / aggregate.""",
     oracle="""
 SELECT doc_id,
        len(toks)                                             AS n_toks,
@@ -203,59 +135,26 @@ FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents WHERE doc_id
 ORDER BY doc_id
 """,
 )
-def array_functions(spark: SparkSession, sf: str) -> DataFrame:
-    """Array ops incl. higher-order lambdas: transform / filter / aggregate.
-
-    1-based indexing: DuckDB `toks[1]` ≡ Spark element_at(col, 1) —
-    both 1-based (SURVEY.md §2.B.7).
-    """
-    docs = load_tables(spark, sf)["documents"].filter(F.col("doc_id") <= 100)
-    toks = F.split("text", " ")
-    return (
-        docs.select("doc_id", toks.alias("toks"))
-        .select(
-            "doc_id",
-            F.size("toks").cast("long").alias("n_toks"),
-            F.element_at("toks", 1).alias("first_tok"),
-            F.element_at("toks", -1).alias("last_tok"),
-            F.array_contains("toks", "spark").alias("has_spark"),
-            F.concat_ws(",", F.sort_array(F.array_distinct("toks"))).alias("uniq_sorted"),
-            F.element_at(F.transform("toks", lambda t: F.upper(t)), 1).alias("first_upper"),
-            F.size(F.filter("toks", lambda t: F.length(t) > 4)).cast("long").alias("n_long"),
-            F.aggregate(
-                F.transform("toks", lambda t: F.length(t).cast("long")),
-                F.lit(0).cast("long"),
-                lambda a, b: a + b,
-            ).alias("total_chars"),
-        )
-        .orderBy("doc_id")
-    )
 
 
-@register(
+register_sql(
     "explode_unnest_series",
     tags=("functions", "unnest", "generator"),
+    doc="""unnest(generate_series(…)) cross-joined against a table
+    (unnest evidence: docs/docs/response-formats.md:37).""",
     oracle="""
 SELECT n.n, r_name, n * r_regionkey AS product
 FROM region, (SELECT unnest(generate_series(1, 3)) AS n) n
 ORDER BY r_name, n.n
 """,
 )
-def explode_unnest_series(spark: SparkSession, sf: str) -> DataFrame:
-    """generate_series → sequence+explode, cross-joined against a table
-    (unnest evidence: docs/docs/response-formats.md:37)."""
-    region = load_tables(spark, sf)["region"]
-    series = spark.range(1).select(F.explode(F.sequence(F.lit(1), F.lit(3))).alias("n"))
-    return (
-        region.crossJoin(series)
-        .select("n", "r_name", (F.col("n") * F.col("r_regionkey")).alias("product"))
-        .orderBy("r_name", "n")
-    )
 
 
-@register(
+register_sql(
     "struct_map_access",
     tags=("functions", "struct", "map"),
+    doc="""struct_pack / MAP construction + field access, flattened output
+    (flat scalars compare engine-agnostically).""",
     oracle="""
 SELECT o_orderkey,
        struct_pack(k := o_orderkey, p := o_totalprice).k         AS sk,
@@ -265,26 +164,13 @@ SELECT o_orderkey,
 FROM orders WHERE o_orderkey <= 500 ORDER BY o_orderkey
 """,
 )
-def struct_map_access(spark: SparkSession, sf: str) -> DataFrame:
-    """struct_pack / MAP construction + field access, flattened output
-    (flat scalars compare engine-agnostically)."""
-    orders = load_tables(spark, sf)["orders"].filter(F.col("o_orderkey") <= 500)
-    st = F.struct(F.col("o_orderkey").alias("k"), F.col("o_totalprice").alias("p"))
-    mp = F.create_map(
-        F.lit("status"), F.col("o_orderstatus"), F.lit("prio"), F.col("o_orderpriority")
-    )
-    return orders.select(
-        "o_orderkey",
-        st.getField("k").alias("sk"),
-        F.round(st.getField("p"), 2).alias("sp"),
-        F.element_at(mp, "status").alias("m_status"),
-        F.element_at(mp, "prio").alias("m_prio"),
-    ).orderBy("o_orderkey")
 
 
-@register(
+register_sql(
     "json_extract_props",
     tags=("functions", "json"),
+    doc="""JSON path extraction over the events.props VARCHAR column
+    (DuckDB `->>` ≡ Spark get_json_object; SURVEY.md §2.B.7).""",
     oracle="""
 SELECT event_type,
        count(*)                                                    AS n,
@@ -295,20 +181,6 @@ GROUP BY event_type
 ORDER BY event_type
 """,
 )
-def json_extract_props(spark: SparkSession, sf: str) -> DataFrame:
-    """JSON path extraction over the events.props VARCHAR column
-    (DuckDB `->>` ≡ Spark get_json_object; SURVEY.md §2.B.7)."""
-    events = load_tables(spark, sf)["events"]
-    k = F.get_json_object("props", "$.k")
-    return (
-        events.groupBy("event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.avg(k.cast("double")), 4).alias("avg_k"),
-            F.max(k.cast("long")).alias("max_k"),
-        )
-        .orderBy("event_type")
-    )
 
 
 @register(
@@ -343,9 +215,17 @@ def macros_battery(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "regex_pattern_battery",
     tags=("functions", "regex", "dialect", "edge"),
+    doc="""RE2-vs-Java adversarial subset, aligned where semantics diverge:
+    backreferences are \\1 in DuckDB but $1 in Spark; DuckDB regexp_replace without 'g' replaces the FIRST
+    match while Spark always replaces all, so unflagged replaces use
+    anchored single-match patterns; SIMILAR TO is a fully-anchored regex;
+    GLOB maps to LIKE wildcards.
+    ``toks`` is serialized with array_to_string/array_join — registry
+    convention: no array-typed result columns (the driver canonicalizer
+    hashes scalar cells only; enforced by tests/test_oracle_gate.py).""",
     oracle=r"""
 SELECT p_partkey,
        regexp_replace(p_type, '(\w+)$', '[\1]', 'g')   AS bracketed_last,
@@ -359,32 +239,17 @@ FROM part WHERE p_partkey <= 300
 ORDER BY p_partkey
 """,
 )
-def regex_pattern_battery(spark: SparkSession, sf: str) -> DataFrame:
-    """RE2-vs-Java adversarial subset, aligned where semantics diverge:
-    backreferences are \\1 in DuckDB but $1 in Spark (each side written in
-    its own syntax); DuckDB regexp_replace without 'g' replaces the FIRST
-    match while Spark always replaces all, so unflagged replaces use
-    anchored single-match patterns; SIMILAR TO is a fully-anchored regex
-    (Spark: rlike wrapped in ^(...)$); GLOB maps to LIKE wildcards.
-    ``toks`` is serialized with array_to_string/array_join — registry
-    convention: no array-typed result columns (the driver canonicalizer
-    hashes scalar cells only; enforced by tests/test_oracle_gate.py)."""
-    part = load_tables(spark, sf)["part"].filter(F.col("p_partkey") <= 300)
-    return part.select(
-        "p_partkey",
-        F.regexp_replace("p_type", r"(\w+)$", "[$1]").alias("bracketed_last"),
-        F.regexp_replace("p_type", r"^\w+", "T").alias("head_replaced"),
-        F.regexp_extract("p_type", r"^(.+?) ", 1).alias("nongreedy_first"),
-        F.col("p_type").ilike("%brushed%").alias("has_brushed_ci"),
-        F.col("p_type").rlike(r"^(.*(STEEL|BRASS))$").alias("sim_metal"),
-        F.col("p_type").like("%STEEL").alias("glob_steel"),
-        F.array_join(F.split("p_type", r"\s+"), "|").alias("toks"),
-    ).orderBy("p_partkey")
 
 
-@register(
+register_sql(
     "datetime_edge_battery",
     tags=("functions", "datetime", "dialect", "edge"),
+    doc="""Date-arithmetic edges, tz-free by construction: date+int,
+    boundary-crossing month diff expressed as y*12+m arithmetic
+    on BOTH sides (DuckDB date_diff('month') counts boundary crossings;
+    Spark's months_between is fractional — deliberately avoided), epoch
+    millis via day arithmetic (no session-timezone dependency), and
+    trunc() (returns DATE) rather than date_trunc (TIMESTAMP in Spark).""",
     oracle="""
 SELECT o_orderkey,
        last_day(d)                                             AS month_end,
@@ -399,33 +264,20 @@ FROM (SELECT o_orderkey, CAST(o_orderdate AS DATE) AS d FROM orders WHERE o_orde
 ORDER BY o_orderkey
 """,
 )
-def datetime_edge_battery(spark: SparkSession, sf: str) -> DataFrame:
-    """Date-arithmetic edges, tz-free by construction: date+int (Spark
-    date_add), boundary-crossing month diff expressed as y*12+m arithmetic
-    on BOTH sides (DuckDB date_diff('month') counts boundary crossings;
-    Spark's months_between is fractional — deliberately avoided), epoch
-    millis via day arithmetic (no session-timezone dependency), and
-    trunc() (returns DATE) rather than date_trunc (TIMESTAMP in Spark)."""
-    orders = load_tables(spark, sf)["orders"].filter(F.col("o_orderkey") <= 500)
-    d = F.col("o_orderdate").cast("date")
-    ref = F.lit("2030-06-15").cast("date")
-    return orders.select(
-        "o_orderkey",
-        F.last_day(d).alias("month_end"),
-        F.date_add(d, 7).alias("week_later"),
-        F.datediff(F.lit("2030-01-01").cast("date"), d).alias("days_to_2030"),
-        (F.datediff(d, F.lit("1970-01-01").cast("date")).cast("long") * 86400000)
-        .alias("epoch_millis"),
-        F.make_date(F.year(d), F.lit(1), F.lit(1)).alias("year_start"),
-        F.trunc(d, "quarter").alias("quarter_start"),
-        ((F.year(ref) * 12 + F.month(ref)) - (F.year(d) * 12 + F.month(d)))
-        .alias("month_boundaries"),
-    ).orderBy("o_orderkey")
 
 
-@register(
+register_sql(
     "percentile_battery",
     tags=("functions", "aggregate", "ordered-set"),
+    doc="""Exact ordered-set aggregates (percentile_cont; median ==
+    percentile_cont(0.5)), computed in double — DECIMAL inputs would
+    quantize differently in DuckDB.
+    Round-13 version-skew sweep: the oracle no longer calls median /
+    percentile_cont — each quantile is explicit order statistics at
+    rank q·(n−1) with a + (b−a)·frac interpolation over DOUBLE casts,
+    so DuckDB's decimal-quantile quantization (1.0.0 truncates to
+    input scale; newer binaries may interpolate) can never move an
+    expected value.""",
     oracle="""
 WITH r1 AS (
   SELECT l_returnflag,
@@ -475,28 +327,6 @@ GROUP BY l_returnflag
 ORDER BY l_returnflag
 """,
 )
-def percentile_battery(spark: SparkSession, sf: str) -> DataFrame:
-    """Exact ordered-set aggregates: DuckDB's percentile_cont WITHIN GROUP
-    maps to Spark's exact `percentile` aggregate (same linear
-    interpolation; both sides compute in double — DECIMAL inputs would
-    quantize differently in DuckDB). median == percentile_cont(0.5).
-    Round-13 version-skew sweep: the oracle no longer calls median /
-    percentile_cont — each quantile is explicit order statistics at
-    rank q·(n−1) with a + (b−a)·frac interpolation over DOUBLE casts,
-    so DuckDB's decimal-quantile quantization (1.0.0 truncates to
-    input scale; newer binaries may interpolate) can never move an
-    expected value."""
-    li = load_tables(spark, sf)["lineitem"]
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.round(F.percentile("l_quantity", F.lit(0.5)), 2).alias("med_qty"),
-            F.round(F.percentile("l_extendedprice", F.lit(0.25)), 2).alias("p25_price"),
-            F.round(F.percentile("l_extendedprice", F.lit(0.75)), 2).alias("p75_price"),
-            F.round(F.percentile("l_quantity", F.lit(0.9)), 2).alias("p90_qty"),
-        )
-        .orderBy("l_returnflag")
-    )
 
 
 @register(
@@ -529,9 +359,12 @@ def unpivot_part_measures(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "approx_percentile_prices",
     tags=("agg", "approx"),
+    doc="""Price quartiles in the hash-checkable approx shape, like
+    approx_distinct_parts: the EXACT interpolated percentiles plus a
+    ``within_bound`` column that the oracle pins TRUE.""",
     oracle="""
 WITH r1 AS (
   SELECT CAST(l_extendedprice AS DOUBLE) AS ep,
@@ -567,24 +400,3 @@ SELECT round(CASE WHEN max(i25) = floor(max(i25))
 FROM p
 """,
 )
-def approx_percentile_prices(spark: SparkSession, sf: str) -> DataFrame:
-    """approx_percentile (Greenwald-Khanna sketch) reshaped into a
-    hash-checkable claim, like approx_distinct_parts: sketch outputs are
-    engine-specific, so the checked columns are the EXACT interpolated
-    percentiles (Spark percentile == DuckDB quantile_cont) plus the
-    boolean that the sketch lands within 1% relative error of each."""
-    li = load_tables(spark, sf)["lineitem"]
-    exact = lambda q: F.expr(f"percentile(l_extendedprice, {q})")  # noqa: E731
-    approx = lambda q: F.expr(  # noqa: E731
-        f"approx_percentile(l_extendedprice, {q}, 10000)"
-    ).cast("double")
-    bound = None
-    for q in (0.25, 0.50, 0.95):
-        b = F.abs(approx(q) - exact(q)) / exact(q) <= F.lit(0.01)
-        bound = b if bound is None else (bound & b)
-    return li.agg(
-        F.round(exact(0.25), 2).alias("p25"),
-        F.round(exact(0.50), 2).alias("p50"),
-        F.round(exact(0.95), 2).alias("p95"),
-        bound.alias("within_bound"),
-    )

@@ -14,8 +14,20 @@ An entry is one of two kinds:
   ``sql=`` when the gateway text deliberately differs from it — e.g. it
   exercises a DuckDB idiom whose oracle is restated version-portably, or
   it is an equivalent plan rewrite the oracle pins.
-- **Code** (:func:`register` as a decorator): DataFrame code, or SQL that
-  needs more than one statement or post-processing.
+- **Code** (:func:`register` as a decorator): a Python function. An
+  entry stays code only for one of these reasons:
+
+  - it is a ``bench`` entry: bench.py times its DataFrame kernel;
+  - a test reads its ``spark_fn`` (tests/test_plans.py pins DataFrame
+    plans);
+  - it calls the operator library (``operators/``, ``functions/``,
+    ``streaming/``, ``sources/``), and is that library's gate coverage;
+  - it runs more than one statement, or post-processes the result;
+  - the gateway cannot serve its oracle text yet (the served gate's
+    ``EXCLUDED``).
+
+  Any other query is SQL text: a DataFrame copy of a query the gateway
+  already serves correctly is a second path to the same answer.
 
 Conventions (critical for hash-matching):
 - Alias EVERY computed/aggregate column identically in Spark and SQL.

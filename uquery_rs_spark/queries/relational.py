@@ -1,12 +1,12 @@
 """Core relational-algebra query corpus (SURVEY.md §2.B.2-§2.B.6).
 
 TPC-H-shaped analytics adapted to the driver's synthetic star schema
-(TESTDATA.md). Most queries exist twice: idiomatic PySpark DataFrame code
-(Catalyst plans it) and the DuckDB oracle SQL string. The correlated
-subquery shapes (q2, q22) are SQL-text entries: their oracle text is
-served through the gateway rewriter as a client's query would be. The reference engine
-delegates this entire surface to DuckDB wholesale (reference:
-src/core/duckdb.rs:87-88); here each form is expressed Spark-first.
+(TESTDATA.md). Most entries are SQL text: the DuckDB oracle text itself is
+served through the gateway rewriter, exactly as a client's query would be.
+The reference engine delegates this entire surface to DuckDB wholesale
+(reference: src/core/duckdb.rs:87-88). Five entries stay PySpark DataFrame
+code because tests/test_plans.py pins their physical plans: the bench
+queries q1/q3/q5/q10 and q14.
 
 Determinism rules: see registry module docstring. ORDER BY only matters for
 LIMIT queries (hash is order-insensitive) — those always carry a unique-key
@@ -15,7 +15,7 @@ tiebreaker on both sides.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import load_tables, register, register_sql
@@ -180,9 +180,10 @@ def q5_local_supplier_volume(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Pure filter + scalar aggregate (TPC-H Q6 shape).
 # ---------------------------------------------------------------------------
-@register(
+register_sql(
     "q6_forecast_revenue",
     tags=("filter", "agg"),
+    doc="""Tight conjunctive predicate, fully pushed to parquet row groups.""",
     oracle="""
 SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue,
        count(*) AS n_lines
@@ -193,18 +194,6 @@ WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
   AND l_quantity < 24
 """,
 )
-def q6_forecast_revenue(spark: SparkSession, sf: str) -> DataFrame:
-    """Tight conjunctive predicate, fully pushed to parquet row groups."""
-    li = load_tables(spark, sf)["lineitem"]
-    return li.filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp_ntz"))
-        & (F.col("l_shipdate") < F.lit("1997-01-01 00:00:00").cast("timestamp_ntz"))
-        & F.col("l_discount").between(0.05, 0.07)
-        & (F.col("l_quantity") < 24)
-    ).agg(
-        F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias("revenue"),
-        F.count("*").alias("n_lines"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -265,9 +254,14 @@ def q10_returned_items(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Window functions: ranking, top-k per group.
 # ---------------------------------------------------------------------------
-@register(
+register_sql(
     "topk_parts_per_brand",
     tags=("window", "topk"),
+    doc="""Top-3 priciest parts per brand — window row_number + filter.
+
+    Scale: one shuffle on p_brand; Spark's WindowGroupLimit pushes the
+    rank-filter below the sort so each partition keeps only 3 rows.
+    """,
     oracle="""
 SELECT p_brand, p_partkey, p_name, p_retailprice, rk
 FROM (
@@ -280,25 +274,16 @@ WHERE rk <= 3
 ORDER BY p_brand, rk
 """,
 )
-def topk_parts_per_brand(spark: SparkSession, sf: str) -> DataFrame:
-    """Top-3 priciest parts per brand — window row_number + filter.
-
-    Scale: one shuffle on p_brand; Spark's WindowGroupLimit pushes the
-    rank-filter below the sort so each partition keeps only 3 rows.
-    """
-    part = load_tables(spark, sf)["part"]
-    w = W.partitionBy("p_brand").orderBy(F.col("p_retailprice").desc(), F.col("p_partkey"))
-    return (
-        part.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("p_brand", "p_partkey", "p_name", "p_retailprice", "rk")
-        .orderBy("p_brand", "rk")
-    )
 
 
-@register(
+register_sql(
     "window_analytics_orders",
     tags=("window",),
+    doc="""The full analytic-window battery over per-customer order history.
+
+    ntile/cume_dist/rank use deterministic orderings (unique tiebreak, or
+    rounded values) so both engines agree on ties.
+    """,
     oracle="""
 SELECT o_orderkey, o_custkey, o_totalprice,
        row_number()   OVER w                                           AS rn,
@@ -316,39 +301,15 @@ FROM orders
 WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 """,
 )
-def window_analytics_orders(spark: SparkSession, sf: str) -> DataFrame:
-    """The full analytic-window battery over per-customer order history.
-
-    ntile/cume_dist/rank use deterministic orderings (unique tiebreak, or
-    rounded values) so both engines agree on ties.
-    """
-    orders = load_tables(spark, sf)["orders"]
-    w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    wv = W.partitionBy("o_custkey").orderBy(F.round("o_totalprice", 2))
-    run = w.rowsBetween(W.unboundedPreceding, W.currentRow)
-    mov = w.rowsBetween(-2, W.currentRow)
-    return orders.select(
-        "o_orderkey",
-        "o_custkey",
-        "o_totalprice",
-        F.row_number().over(w).alias("rn"),
-        F.rank().over(wv).alias("rnk"),
-        F.dense_rank().over(wv).alias("drnk"),
-        F.ntile(4).over(w).alias("quartile"),
-        F.round(F.lag("o_totalprice").over(w), 2).alias("prev_price"),
-        F.round(F.lead("o_totalprice").over(w), 2).alias("next_price"),
-        F.round(F.sum("o_totalprice").over(run), 2).alias("running_spend"),
-        F.round(F.avg("o_totalprice").over(mov), 3).alias("moving_avg3"),
-        F.round(F.cume_dist().over(w), 4).alias("cd"),
-    )
 
 
 # ---------------------------------------------------------------------------
 # Semi / anti joins (EXISTS / NOT EXISTS).
 # ---------------------------------------------------------------------------
-@register(
+register_sql(
     "semi_join_active_customers",
     tags=("join",),
+    doc="""Left-semi join (EXISTS): customers with a >100k order, by nation.""",
     oracle="""
 SELECT n_name, count(*) AS n_customers, round(sum(c_acctbal), 2) AS total_acctbal
 FROM customer
@@ -358,26 +319,12 @@ GROUP BY n_name
 ORDER BY n_name
 """,
 )
-def semi_join_active_customers(spark: SparkSession, sf: str) -> DataFrame:
-    """Left-semi join (EXISTS): customers with a >100k order, by nation."""
-    t = load_tables(spark, sf)
-    big_orders = t["orders"].filter(F.col("o_totalprice") > 100000)
-    return (
-        t["customer"]
-        .join(big_orders, F.col("c_custkey") == F.col("o_custkey"), "left_semi")
-        .join(F.broadcast(t["nation"]), F.col("c_nationkey") == F.col("n_nationkey"))
-        .groupBy("n_name")
-        .agg(
-            F.count("*").alias("n_customers"),
-            F.round(F.sum("c_acctbal"), 2).alias("total_acctbal"),
-        )
-        .orderBy("n_name")
-    )
 
 
-@register(
+register_sql(
     "anti_join_idle_customers",
     tags=("join",),
+    doc="""Left-anti join (NOT EXISTS): customers with no orders at all.""",
     oracle="""
 SELECT c_mktsegment, count(*) AS n_idle
 FROM customer
@@ -386,24 +333,15 @@ GROUP BY c_mktsegment
 ORDER BY c_mktsegment
 """,
 )
-def anti_join_idle_customers(spark: SparkSession, sf: str) -> DataFrame:
-    """Left-anti join (NOT EXISTS): customers with no orders at all."""
-    t = load_tables(spark, sf)
-    return (
-        t["customer"]
-        .join(t["orders"], F.col("c_custkey") == F.col("o_custkey"), "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("n_idle"))
-        .orderBy("c_mktsegment")
-    )
 
 
 # ---------------------------------------------------------------------------
 # Outer joins.
 # ---------------------------------------------------------------------------
-@register(
+register_sql(
     "left_join_customer_order_counts",
     tags=("join", "agg"),
+    doc="""Left outer join preserving order-less customers (count=0, spend=0).""",
     oracle="""
 SELECT c_custkey,
        count(o_orderkey)                      AS n_orders,
@@ -414,24 +352,12 @@ GROUP BY c_custkey
 ORDER BY c_custkey
 """,
 )
-def left_join_customer_order_counts(spark: SparkSession, sf: str) -> DataFrame:
-    """Left outer join preserving order-less customers (count=0, spend=0)."""
-    t = load_tables(spark, sf)
-    return (
-        t["customer"]
-        .join(t["orders"], F.col("c_custkey") == F.col("o_custkey"), "left")
-        .groupBy("c_custkey")
-        .agg(
-            F.count("o_orderkey").alias("n_orders"),
-            F.round(F.coalesce(F.sum("o_totalprice"), F.lit(0.0)), 2).alias("spend"),
-        )
-        .orderBy("c_custkey")
-    )
 
 
-@register(
+register_sql(
     "full_outer_nation_presence",
     tags=("join",),
+    doc="""Full outer join of per-nation customer and supplier counts.""",
     oracle="""
 WITH cust_n AS (SELECT c_nationkey AS nk, count(*) AS n_cust FROM customer GROUP BY 1),
      supp_n AS (SELECT s_nationkey AS nk, count(*) AS n_supp FROM supplier GROUP BY 1)
@@ -442,44 +368,31 @@ FROM cust_n FULL OUTER JOIN supp_n ON cust_n.nk = supp_n.nk
 ORDER BY nationkey
 """,
 )
-def full_outer_nation_presence(spark: SparkSession, sf: str) -> DataFrame:
-    """Full outer join of per-nation customer and supplier counts."""
-    t = load_tables(spark, sf)
-    cust_n = t["customer"].groupBy(F.col("c_nationkey").alias("nk")).agg(F.count("*").alias("n_cust"))
-    supp_n = t["supplier"].groupBy(F.col("s_nationkey").alias("nk2")).agg(F.count("*").alias("n_supp"))
-    return (
-        cust_n.join(supp_n, cust_n.nk == supp_n.nk2, "full_outer")
-        .select(
-            F.coalesce("nk", "nk2").alias("nationkey"),
-            F.coalesce("n_cust", F.lit(0)).alias("n_cust"),
-            F.coalesce("n_supp", F.lit(0)).alias("n_supp"),
-        )
-        .orderBy("nationkey")
-    )
 
 
-@register(
+register_sql(
     "cross_join_region_status",
     tags=("join",),
+    doc="""Cartesian product of two tiny inputs (broadcast nested loop).""",
     oracle="""
 SELECT r_name, s.o_orderstatus AS orderstatus
 FROM region CROSS JOIN (SELECT DISTINCT o_orderstatus FROM orders) s
 ORDER BY r_name, orderstatus
 """,
 )
-def cross_join_region_status(spark: SparkSession, sf: str) -> DataFrame:
-    """Cartesian product of two tiny inputs (broadcast nested loop)."""
-    t = load_tables(spark, sf)
-    statuses = t["orders"].select(F.col("o_orderstatus").alias("orderstatus")).distinct()
-    return t["region"].select("r_name").crossJoin(statuses).orderBy("r_name", "orderstatus")
 
 
 # ---------------------------------------------------------------------------
 # Non-equi (range) join.
 # ---------------------------------------------------------------------------
-@register(
+register_sql(
     "range_join_size_buckets",
     tags=("join", "non-equi"),
+    doc="""Theta-join against an inline VALUES bucket table (BETWEEN predicate).
+
+    Scale: the bucket side is tiny → broadcast nested-loop join; the fact
+    side streams through without a shuffle.
+    """,
     oracle="""
 SELECT b.bucket, count(*) AS n_parts, round(avg(p_retailprice), 2) AS avg_price
 FROM part p
@@ -490,31 +403,15 @@ GROUP BY b.bucket
 ORDER BY b.bucket
 """,
 )
-def range_join_size_buckets(spark: SparkSession, sf: str) -> DataFrame:
-    """Theta-join against an inline VALUES bucket table (BETWEEN predicate).
-
-    Scale: the bucket side is tiny → broadcast nested-loop join; the fact
-    side streams through without a shuffle.
-    """
-    part = load_tables(spark, sf)["part"]
-    buckets = spark.createDataFrame(
-        [("small", 0, 16), ("medium", 17, 33), ("large", 34, 50)],
-        "bucket string, lo int, hi int",
-    )
-    return (
-        part.join(F.broadcast(buckets), part.p_size.between(F.col("lo"), F.col("hi")))
-        .groupBy("bucket")
-        .agg(F.count("*").alias("n_parts"), F.round(F.avg("p_retailprice"), 2).alias("avg_price"))
-        .orderBy("bucket")
-    )
 
 
 # ---------------------------------------------------------------------------
 # Subqueries: scalar, correlated.
 # ---------------------------------------------------------------------------
-@register(
+register_sql(
     "scalar_subquery_above_avg_balance",
     tags=("subquery",),
+    doc="""Uncorrelated scalar subquery in a predicate (cross-join of one value).""",
     oracle="""
 SELECT c_custkey, c_name, round(c_acctbal, 2) AS acctbal
 FROM customer
@@ -522,22 +419,12 @@ WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer)
 ORDER BY c_custkey
 """,
 )
-def scalar_subquery_above_avg_balance(spark: SparkSession, sf: str) -> DataFrame:
-    """Uncorrelated scalar subquery in a predicate (cross-join of one value)."""
-    t = load_tables(spark, sf)
-    avg_bal = t["customer"].agg(F.avg("c_acctbal").alias("avg_bal"))
-    return (
-        t["customer"]
-        .join(F.broadcast(avg_bal))
-        .filter(F.col("c_acctbal") > F.col("avg_bal"))
-        .select("c_custkey", "c_name", F.round("c_acctbal", 2).alias("acctbal"))
-        .orderBy("c_custkey")
-    )
 
 
-@register(
+register_sql(
     "correlated_subquery_above_cust_avg",
     tags=("subquery",),
+    doc="""Correlated scalar subquery, decorrelated to an agg + equi-join.""",
     oracle="""
 SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS totalprice
 FROM orders o
@@ -546,29 +433,15 @@ WHERE o_totalprice > 1.5 * (SELECT avg(o2.o_totalprice)
 ORDER BY o_orderkey
 """,
 )
-def correlated_subquery_above_cust_avg(spark: SparkSession, sf: str) -> DataFrame:
-    """Correlated scalar subquery, decorrelated to an agg + equi-join.
-
-    Expressed Spark-first as the decorrelated plan itself (what Catalyst's
-    RewriteCorrelatedScalarSubquery would produce): per-customer avg then
-    join back on the correlation key.
-    """
-    orders = load_tables(spark, sf)["orders"]
-    per_cust = orders.groupBy(F.col("o_custkey").alias("ck")).agg(F.avg("o_totalprice").alias("cust_avg"))
-    return (
-        orders.join(per_cust, orders.o_custkey == per_cust.ck)
-        .filter(F.col("o_totalprice") > 1.5 * F.col("cust_avg"))
-        .select("o_orderkey", "o_custkey", F.round("o_totalprice", 2).alias("totalprice"))
-        .orderBy("o_orderkey")
-    )
 
 
 # ---------------------------------------------------------------------------
 # CTE (TPC-H Q15 shape: argmax via CTE reuse).
 # ---------------------------------------------------------------------------
-@register(
+register_sql(
     "cte_top_supplier_revenue",
     tags=("cte", "subquery"),
+    doc="""CTE referenced twice (once for max) — argmax-by-join pattern.""",
     oracle="""
 WITH revenue AS (
   SELECT l_suppkey AS supplier_no,
@@ -584,33 +457,15 @@ WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
 ORDER BY s_suppkey
 """,
 )
-def cte_top_supplier_revenue(spark: SparkSession, sf: str) -> DataFrame:
-    """CTE referenced twice (once for max) — argmax-by-join pattern."""
-    t = load_tables(spark, sf)
-    li = t["lineitem"].filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp_ntz"))
-        & (F.col("l_shipdate") < F.lit("1996-04-01 00:00:00").cast("timestamp_ntz"))
-    )
-    revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("total_revenue")
-    )
-    max_rev = revenue.agg(F.max("total_revenue").alias("max_rev"))
-    return (
-        t["supplier"]
-        .join(revenue, F.col("s_suppkey") == F.col("supplier_no"))
-        .join(F.broadcast(max_rev))
-        .filter(F.col("total_revenue") == F.col("max_rev"))
-        .select("s_suppkey", "s_name", F.round("total_revenue", 2).alias("total_revenue"))
-        .orderBy("s_suppkey")
-    )
 
 
 # ---------------------------------------------------------------------------
 # Set operations.
 # ---------------------------------------------------------------------------
-@register(
+register_sql(
     "set_ops_nation_membership",
     tags=("setops",),
+    doc="""INTERSECT / EXCEPT / UNION ALL composition over nation keys.""",
     oracle="""
 SELECT 'both' AS which, nk FROM (
   SELECT c_nationkey AS nk FROM customer
@@ -626,17 +481,9 @@ SELECT 'customer_only' AS which, nk FROM (
 ORDER BY which, nk
 """,
 )
-def set_ops_nation_membership(spark: SparkSession, sf: str) -> DataFrame:
-    """INTERSECT / EXCEPT / UNION ALL composition over nation keys."""
-    t = load_tables(spark, sf)
-    cust = t["customer"].select(F.col("c_nationkey").alias("nk"))
-    supp = t["supplier"].select(F.col("s_nationkey").alias("nk"))
-    both = cust.intersect(supp).select(F.lit("both").alias("which"), "nk")
-    conly = cust.distinct().subtract(supp.distinct()).select(F.lit("customer_only").alias("which"), "nk")
-    return both.unionAll(conly).orderBy("which", "nk")
 
 
-@register(
+register_sql(
     "union_all_price_tiers",
     tags=("setops",),
     oracle="""
@@ -649,50 +496,35 @@ SELECT tier, count(*) AS n FROM (
 ) GROUP BY tier ORDER BY tier
 """,
 )
-def union_all_price_tiers(spark: SparkSession, sf: str) -> DataFrame:
-    orders = load_tables(spark, sf)["orders"]
-    high = orders.filter(F.col("o_totalprice") >= 200000).select(F.lit("high").alias("tier"))
-    mid = orders.filter((F.col("o_totalprice") >= 50000) & (F.col("o_totalprice") < 200000)).select(
-        F.lit("mid").alias("tier")
-    )
-    low = orders.filter(F.col("o_totalprice") < 50000).select(F.lit("low").alias("tier"))
-    return high.unionAll(mid).unionAll(low).groupBy("tier").agg(F.count("*").alias("n")).orderBy("tier")
 
 
 # ---------------------------------------------------------------------------
 # DISTINCT / LIMIT / OFFSET.
 # ---------------------------------------------------------------------------
-@register(
+register_sql(
     "distinct_order_priorities",
     tags=("distinct",),
     oracle="SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders ORDER BY o_orderstatus, o_orderpriority",
 )
-def distinct_order_priorities(spark: SparkSession, sf: str) -> DataFrame:
-    orders = load_tables(spark, sf)["orders"]
-    return orders.select("o_orderstatus", "o_orderpriority").distinct().orderBy(
-        "o_orderstatus", "o_orderpriority"
-    )
 
 
-@register(
+register_sql(
     "limit_offset_pagination",
     tags=("sort", "limit"),
+    doc="""ORDER BY + LIMIT/OFFSET pagination (Spark 3.4+ native offset).""",
     oracle="""
 SELECT c_custkey, c_name FROM customer ORDER BY c_custkey LIMIT 10 OFFSET 20
 """,
 )
-def limit_offset_pagination(spark: SparkSession, sf: str) -> DataFrame:
-    """ORDER BY + LIMIT/OFFSET pagination (Spark 3.4+ native offset)."""
-    cust = load_tables(spark, sf)["customer"]
-    return cust.select("c_custkey", "c_name").orderBy("c_custkey").offset(20).limit(10)
 
 
 # ---------------------------------------------------------------------------
 # GROUPING SETS / ROLLUP / CUBE.
 # ---------------------------------------------------------------------------
-@register(
+register_sql(
     "rollup_order_status_priority",
     tags=("agg", "rollup"),
+    doc="""ROLLUP hierarchy with grouping() indicator columns.""",
     oracle="""
 SELECT o_orderstatus, o_orderpriority,
        grouping(o_orderstatus)   AS g_status,
@@ -704,32 +536,9 @@ GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
 ORDER BY g_status, g_priority, o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST
 """,
 )
-def rollup_order_status_priority(spark: SparkSession, sf: str) -> DataFrame:
-    """ROLLUP hierarchy with grouping() indicator columns.
-
-    DuckDB's grouping() returns BIGINT while Spark returns INT/BYTE —
-    cast to long on the Spark side for schema agreement.
-    """
-    orders = load_tables(spark, sf)["orders"]
-    return (
-        orders.rollup("o_orderstatus", "o_orderpriority")
-        .agg(
-            F.grouping("o_orderstatus").cast("long").alias("g_status"),
-            F.grouping("o_orderpriority").cast("long").alias("g_priority"),
-            F.count("*").alias("n"),
-            F.round(F.sum("o_totalprice"), 2).alias("total"),
-        )
-        .select("o_orderstatus", "o_orderpriority", "g_status", "g_priority", "n", "total")
-        .orderBy(
-            "g_status",
-            "g_priority",
-            F.col("o_orderstatus").asc_nulls_first(),
-            F.col("o_orderpriority").asc_nulls_first(),
-        )
-    )
 
 
-@register(
+register_sql(
     "cube_returnflag_linestatus",
     tags=("agg", "cube"),
     oracle="""
@@ -741,32 +550,16 @@ GROUP BY CUBE (l_returnflag, l_linestatus)
 ORDER BY g_rf, g_ls, l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
 """,
 )
-def cube_returnflag_linestatus(spark: SparkSession, sf: str) -> DataFrame:
-    li = load_tables(spark, sf)["lineitem"]
-    return (
-        li.cube("l_returnflag", "l_linestatus")
-        .agg(
-            F.grouping("l_returnflag").cast("long").alias("g_rf"),
-            F.grouping("l_linestatus").cast("long").alias("g_ls"),
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.count("*").alias("n"),
-        )
-        .select("l_returnflag", "l_linestatus", "g_rf", "g_ls", "sum_qty", "n")
-        .orderBy(
-            "g_rf",
-            "g_ls",
-            F.col("l_returnflag").asc_nulls_first(),
-            F.col("l_linestatus").asc_nulls_first(),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
 # PIVOT (conditional aggregation).
 # ---------------------------------------------------------------------------
-@register(
+register_sql(
     "pivot_status_by_priority",
     tags=("agg", "pivot"),
+    doc="""Status × priority pivot as FILTER'd aggregates — the relational
+    meaning of PIVOT — so column names line up exactly.""",
     oracle="""
 SELECT o_orderpriority,
        count(*) FILTER (WHERE o_orderstatus = 'O') AS status_O,
@@ -775,30 +568,12 @@ SELECT o_orderpriority,
 FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
 """,
 )
-def pivot_status_by_priority(spark: SparkSession, sf: str) -> DataFrame:
-    """df.pivot with an explicit value list (no extra pass to discover keys).
-
-    Oracle expressed as FILTER'd aggregates — the relational meaning of
-    PIVOT — so column names line up exactly.
-    """
-    orders = load_tables(spark, sf)["orders"]
-    piv = (
-        orders.groupBy("o_orderpriority")
-        .pivot("o_orderstatus", ["O", "F", "P"])
-        .agg(F.count(F.lit(1)))
-    )
-    return piv.select(
-        "o_orderpriority",
-        F.coalesce("O", F.lit(0)).alias("status_O"),
-        F.coalesce("F", F.lit(0)).alias("status_F"),
-        F.coalesce("P", F.lit(0)).alias("status_P"),
-    ).orderBy("o_orderpriority")
 
 
 # ---------------------------------------------------------------------------
 # FILTER-clause aggregates + conditional expressions.
 # ---------------------------------------------------------------------------
-@register(
+register_sql(
     "filtered_aggregates",
     tags=("agg",),
     oracle="""
@@ -810,28 +585,25 @@ SELECT l_returnflag,
 FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag
 """,
 )
-def filtered_aggregates(spark: SparkSession, sf: str) -> DataFrame:
-    li = load_tables(spark, sf)["lineitem"]
-    return (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.count("*").alias("n_all"),
-            F.count(F.when(F.col("l_discount") > 0.05, 1)).alias("n_discounted"),
-            F.round(F.sum(F.when(F.col("l_tax") > 0.04, F.col("l_quantity"))), 2).alias("taxed_qty"),
-            F.round(F.avg(F.when(F.col("l_quantity") > 25, F.col("l_extendedprice"))), 2).alias(
-                "avg_bulk_price"
-            ),
-        )
-        .orderBy("l_returnflag")
-    )
 
 
 # ---------------------------------------------------------------------------
 # Statistical aggregates.
 # ---------------------------------------------------------------------------
-@register(
+register_sql(
     "stats_aggregates_prices",
     tags=("agg", "stats"),
+    doc="""stddev/variance/median/min/max + COUNT DISTINCT per group.
+
+    Round-13 version-skew sweep: the oracle computes the median by
+    explicit DOUBLE-space order statistics ((lower-half max +
+    upper-half min)/2) instead of calling median() — DuckDB 1.0.0's
+    DECIMAL median truncates the interpolated value to the input
+    scale (probed), newer binaries may not, and the explicit form
+    matches Spark's exact-percentile path on any oracle version.
+    stddev_samp/var_samp stay: the sample estimators are
+    standard-defined and the inputs keep ~12 digits of headroom
+    inside the rounding.""",
     oracle="""
 WITH r1 AS (
   SELECT o_orderstatus, o_totalprice, o_custkey,
@@ -852,68 +624,29 @@ SELECT o_orderstatus,
 FROM r1 GROUP BY o_orderstatus ORDER BY o_orderstatus
 """,
 )
-def stats_aggregates_prices(spark: SparkSession, sf: str) -> DataFrame:
-    """stddev/variance/median/min/max + COUNT DISTINCT per group.
-
-    Round-13 version-skew sweep: the oracle computes the median by
-    explicit DOUBLE-space order statistics ((lower-half max +
-    upper-half min)/2) instead of calling median() — DuckDB 1.0.0's
-    DECIMAL median truncates the interpolated value to the input
-    scale (probed), newer binaries may not, and the explicit form
-    matches Spark's exact-percentile path on any oracle version.
-    stddev_samp/var_samp stay: the sample estimators are
-    standard-defined and the inputs keep ~12 digits of headroom
-    inside the rounding."""
-    orders = load_tables(spark, sf)["orders"]
-    return (
-        orders.groupBy("o_orderstatus")
-        .agg(
-            F.round(F.stddev_samp("o_totalprice"), 2).alias("sd_price"),
-            F.round(F.var_samp("o_totalprice"), 0).alias("var_price"),
-            F.round(F.median("o_totalprice"), 2).alias("median_price"),
-            F.round(F.min("o_totalprice"), 2).alias("min_price"),
-            F.round(F.max("o_totalprice"), 2).alias("max_price"),
-            F.countDistinct("o_custkey").alias("n_customers"),
-        )
-        .orderBy("o_orderstatus")
-    )
 
 
-@register(
+register_sql(
     "approx_distinct_parts",
     tags=("agg", "approx"),
+    doc="""Distinct-part count in the hash-checkable approx shape: the exact
+    count(DISTINCT) plus a ``within_bound`` column that the oracle pins
+    TRUE.""",
     oracle="""
 SELECT count(DISTINCT l_partkey) AS exact_parts,
        TRUE                      AS within_bound
 FROM lineitem
 """,
 )
-def approx_distinct_parts(spark: SparkSession, sf: str) -> DataFrame:
-    """approx_count_distinct (HyperLogLog++) reshaped into a
-    hash-checkable claim: sketch estimates are engine-specific, so the
-    checked output is the exact count plus the boolean
-    |approx - exact| / exact <= 0.05 (HLL++ default rsd is 5%) — the
-    oracle computes exact count(DISTINCT) and asserts the bound holds."""
-    li = load_tables(spark, sf)["lineitem"]
-    return li.agg(
-        F.countDistinct("l_partkey").alias("exact_parts"),
-        (
-            F.abs(
-                F.approx_count_distinct("l_partkey").cast("double")
-                - F.countDistinct("l_partkey")
-            )
-            / F.countDistinct("l_partkey")
-            <= F.lit(0.05)
-        ).alias("within_bound"),
-    )
 
 
 # ---------------------------------------------------------------------------
 # Ordered list aggregation (string_agg / array_agg).
 # ---------------------------------------------------------------------------
-@register(
+register_sql(
     "listagg_nations_per_region",
     tags=("agg", "list"),
+    doc="""Ordered string_agg of nation names per region.""",
     oracle="""
 SELECT r_name,
        string_agg(n_name, ',' ORDER BY n_name) AS nations,
@@ -922,27 +655,16 @@ FROM region JOIN nation ON n_regionkey = r_regionkey
 GROUP BY r_name ORDER BY r_name
 """,
 )
-def listagg_nations_per_region(spark: SparkSession, sf: str) -> DataFrame:
-    """Ordered string_agg ≡ sort_array(collect_list) + concat_ws."""
-    t = load_tables(spark, sf)
-    return (
-        t["region"]
-        .join(t["nation"], F.col("n_regionkey") == F.col("r_regionkey"))
-        .groupBy("r_name")
-        .agg(
-            F.concat_ws(",", F.sort_array(F.collect_list("n_name"))).alias("nations"),
-            F.count("*").alias("n_nations"),
-        )
-        .orderBy("r_name")
-    )
 
 
 # ---------------------------------------------------------------------------
 # Inline VALUES + expression evaluation (CASE / CAST / COALESCE).
 # ---------------------------------------------------------------------------
-@register(
+register_sql(
     "values_inline_table",
     tags=("values", "expr"),
+    doc="""Inline VALUES table + CASE/CAST/COALESCE expression battery
+    (reference exercises VALUES at src/main.rs:152).""",
     oracle="""
 SELECT x, y,
        CASE WHEN x % 2 = 0 THEN 'even' ELSE 'odd' END AS parity,
@@ -952,17 +674,6 @@ FROM (VALUES (1, 'a'), (2, NULL), (3, 'c'), (4, 'd')) t(x, y)
 ORDER BY x
 """,
 )
-def values_inline_table(spark: SparkSession, sf: str) -> DataFrame:
-    """Inline VALUES table + CASE/CAST/COALESCE expression battery
-    (reference exercises VALUES at src/main.rs:152)."""
-    df = spark.createDataFrame([(1, "a"), (2, None), (3, "c"), (4, "d")], "x int, y string")
-    return df.select(
-        "x",
-        "y",
-        F.when(F.col("x") % 2 == 0, "even").otherwise("odd").alias("parity"),
-        (F.col("x").cast("double") / 2).alias("half"),
-        F.coalesce("y", F.lit("missing")).alias("y_filled"),
-    ).orderBy("x")
 
 
 # ---------------------------------------------------------------------------
@@ -1031,9 +742,11 @@ def q14_promo_revenue_ratio(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # TPC-H Q16 shape: distinct agg + NOT IN.
 # ---------------------------------------------------------------------------
-@register(
+register_sql(
     "q16_supplier_count_by_part",
     tags=("agg", "distinct", "not-in"),
+    doc="""Distinct-supplier counts per brand/size with NOT IN exclusion
+    (TPC-H Q16 shape).""",
     oracle="""
 SELECT p_brand, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
 FROM part JOIN lineitem ON p_partkey = l_partkey
@@ -1042,30 +755,20 @@ GROUP BY p_brand, p_size
 ORDER BY supplier_cnt DESC, p_brand, p_size
 """,
 )
-def q16_supplier_count_by_part(spark: SparkSession, sf: str) -> DataFrame:
-    """Distinct-supplier counts per brand/size with NOT IN exclusion
-    (TPC-H Q16 shape)."""
-    t = load_tables(spark, sf)
-    return (
-        F.broadcast(
-            t["part"].filter(
-                ~F.col("p_brand").isin("Brand#1", "Brand#2")
-                & F.col("p_size").isin(1, 2, 3, 4, 5)
-            )
-        )
-        .join(t["lineitem"], F.col("p_partkey") == F.col("l_partkey"))
-        .groupBy("p_brand", "p_size")
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-        .orderBy(F.col("supplier_cnt").desc(), "p_brand", "p_size")
-    )
 
 
 # ---------------------------------------------------------------------------
 # TPC-H Q18 shape: HAVING over a join + IN-subquery.
 # ---------------------------------------------------------------------------
-@register(
+register_sql(
     "q18_large_volume_orders",
     tags=("agg", "having", "subquery"),
+    doc="""Orders whose total quantity exceeds 150 (TPC-H Q18 shape):
+    IN-subquery → left-semi join, then enrich + re-aggregate.
+
+    Scale: the HAVING aggregate runs once over lineitem (map-side partial),
+    and its small output semi-joins back — no correlated re-scan.
+    """,
     oracle="""
 SELECT c_name, o_orderkey, round(o_totalprice, 2) AS o_totalprice,
        round(sum(l_quantity), 2) AS total_qty
@@ -1077,36 +780,6 @@ GROUP BY c_name, o_orderkey, o_totalprice
 ORDER BY o_totalprice DESC, o_orderkey
 """,
 )
-def q18_large_volume_orders(spark: SparkSession, sf: str) -> DataFrame:
-    """Orders whose total quantity exceeds 150 (TPC-H Q18 shape):
-    IN-subquery → left-semi join, then enrich + re-aggregate.
-
-    Scale: the HAVING aggregate runs once over lineitem (map-side partial),
-    and its small output semi-joins back — no correlated re-scan.
-    """
-    t = load_tables(spark, sf)
-    big = (
-        t["lineitem"]
-        .groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("q"))
-        .filter(F.col("q") > 150)
-        .select("l_orderkey")
-    )
-    return (
-        t["orders"]
-        .join(F.broadcast(big), F.col("o_orderkey") == big["l_orderkey"], "left_semi")
-        .join(t["customer"], F.col("c_custkey") == F.col("o_custkey"))
-        .join(t["lineitem"], F.col("o_orderkey") == t["lineitem"]["l_orderkey"])
-        .groupBy("c_name", "o_orderkey", "o_totalprice")
-        .agg(F.round(F.sum("l_quantity"), 2).alias("total_qty"))
-        .select(
-            "c_name",
-            "o_orderkey",
-            F.round("o_totalprice", 2).alias("o_totalprice"),
-            "total_qty",
-        )
-        .orderBy(F.col("o_totalprice").desc(), "o_orderkey")
-    )
 
 
 # ---------------------------------------------------------------------------

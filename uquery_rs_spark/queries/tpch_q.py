@@ -1,5 +1,7 @@
 """TPC-H completion corpus: the 12 query shapes not already covered by
-relational.py (q1/q2/q3/q5/q6/q10/q14/q16/q18/q22 live there).
+relational.py, which holds q1/q2/q3/q5/q6/q10/q14/q16/q18/q22 (q2, q6,
+q16, q18 and q22 as SQL text; q1/q3/q5/q10/q14 as plan-pinned DataFrame
+code).
 
 Each is a SQL-text entry (registry.register_sql): the SAME SQL text runs
 through the gateway rewriter on Spark and verbatim on the DuckDB oracle.

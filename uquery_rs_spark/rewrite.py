@@ -173,14 +173,6 @@ class SqlRewriter:
         # rewriter) to pick up NEW pivot columns — same bind-time flavor
         # as DuckDB's own PIVOT, which fixes the column set per prepare.
         self._pivot_vals: dict[tuple[str, str], list] = {}
-        # pivot column names that read like SQL (empty-string pivot
-        # values → DuckDB expression-text names): token → literal text,
-        # substituted at the rewrite() tail, popped on use. Token names
-        # use a monotonic counter (round-10 ADVICE: len()-derived names
-        # could collide with a stale key after pops) and the dict is
-        # cleared unconditionally at the rewrite() tail.
-        self._pivot_name_subs: dict[str, str] = {}
-        self._pivot_name_seq = 0
         # PREPARE name AS <stmt> texts, keyed lowercase (round 11)
         self._prepared: dict[str, str] = {}
 
@@ -3415,9 +3407,6 @@ class SqlRewriter:
             sql = sql[: m.start()] + repl + sql[m.end() :]
             pos = m.start() + len(repl)
 
-    # Spark typename → DuckDB typename (uq_duck_typename UDF input)
-    _TYPEOF_RE = re.compile(r"(?i)\btypeof\s*\(")
-
     _DUCK_TO_SPARK_TYPE = {
         "VARCHAR": "STRING", "BIGINT": "BIGINT", "UBIGINT": "BIGINT",
         "INTEGER": "INT", "UINTEGER": "BIGINT", "SMALLINT": "SMALLINT",
@@ -4388,8 +4377,8 @@ class SqlRewriter:
         - list_mode → argmax by (count, then SMALLEST value) — tie
           order is engine-unspecified in DuckDB (like mode());
         - array_pop_back/front → guarded slices;
-        - generate_subscripts(a, 1) → explode(sequence(1, size)) —
-          dim >= 2 raises in DuckDB itself;
+        - generate_subscripts(a, 1) → explode of 1..size (empty for an
+          empty or NULL list) — dim >= 2 raises in DuckDB itself;
         - regexp_escape → RE2-QuoteMeta-style class escape (ASCII
           non-word chars; astral-plane chars additionally escaped —
           harmless width of the Java regex class, documented);
@@ -4433,7 +4422,7 @@ class SqlRewriter:
                         "generate_subscripts: only dimension 1 is supported "
                         "(DuckDB raises beyond it too)"
                     )
-                repl = f"explode(sequence(1, size(({a0}))))"
+                repl = f"explode({self._subscripts(a0)})"
             elif fn == "list_resize":
                 if len(args) not in (2, 3):
                     raise UQueryError.sql_error(
@@ -4483,17 +4472,28 @@ class SqlRewriter:
 
     _UNNEST_FROM_RE = re.compile(r"(?i)\b(from|join)\s+unnest\s*\(")
     _UNNEST_RE = re.compile(r"(?i)\bunnest\s*\(")
+    _SELECT_KW_RE = re.compile(r"(?i)\bselect\b")
+    _GENERATOR_RE = re.compile(r"(?i)\b(unnest|generate_subscripts)\s*\(")
+    _GENERATOR_ITEM_RE = re.compile(
+        r"(?is)^\s*(unnest|generate_subscripts)\s*\((.*)\)\s*"
+        r"(?:(?:as\s+)?([A-Za-z_]\w*|`[^`]+`))?\s*$"
+    )
+    _SELECT_LIST_END = frozenset(
+        {"from", "where", "group", "having", "qualify", "window", "order",
+         "limit", "union", "except", "intersect"}
+    )
     _COLLATE_RE = re.compile(r"(?i)\bcollate\s+(\w+)")
 
     def _rewrite_unnest(self, sql: str) -> str:
         """Batch-16 sweep: ``unnest(arr)`` in SELECT position is DuckDB's
-        one-row-per-element generator → Spark explode (a bare rename —
-        Spark then enforces its own generator placement rules, so
-        expression-wrapped forms like ``unnest(a) + 1`` fail LOUDLY
-        rather than mistranslate). ``FROM unnest(arr)`` (table-function
-        position) → an exploded subquery with column ``unnest``
-        (DuckDB auto-names the column after the expression text — not
-        portable either way; alias it). ``recursive := true`` raises."""
+        one-row-per-element generator → Spark explode (a bare rename;
+        Spark then enforces its own generator placement rules). Several
+        generators in one SELECT list zip (:meth:`_zip_select_generators`)
+        instead of forming Spark's cross product. ``FROM unnest(arr)``
+        (table-function position) → an exploded subquery with column
+        ``unnest`` (DuckDB auto-names the column after the expression
+        text — not portable either way; alias it). ``recursive := true``
+        raises."""
         while True:
             m = self._search_code(self._UNNEST_FROM_RE, sql)
             if not m:
@@ -4511,6 +4511,7 @@ class SqlRewriter:
                 + f"{m.group(1)} (SELECT explode({inner}) AS unnest)"
                 + sql[close + 1 :]
             )
+        sql = self._zip_select_generators(sql)
         if self._search_code(self._UNNEST_RE, sql):
             out, pos = [], 0
             while True:
@@ -4528,6 +4529,124 @@ class SqlRewriter:
             out.append(sql[pos:])
             sql = "".join(out)
         return sql
+
+    @staticmethod
+    def _subscripts(arr: str) -> str:
+        """DuckDB ``generate_subscripts(arr, 1)`` as an array: 1..size,
+        and empty for an empty or NULL list (``sequence(1, 0)`` would
+        count down)."""
+        return (
+            f"CASE WHEN size(coalesce(({arr}), array())) = 0 THEN array() "
+            f"ELSE sequence(1, size(({arr}))) END"
+        )
+
+    def _select_item_spans(self, sql: str, start: int) -> list[tuple[int, int]]:
+        """[start, end) of each top-level item of the SELECT list that
+        begins at ``sql[start]``; the list ends at the first clause
+        keyword (not the FROM of ``IS DISTINCT FROM``) or at the ``)``
+        closing its subquery."""
+        spans, depth, item, i, n = [], 0, start, start, len(sql)
+        prev = ""
+        while i < n:
+            c = sql[i]
+            if c == "'":
+                j = sql.find("'", i + 1)
+                i = n if j == -1 else j
+            elif c in "([{":
+                depth += 1
+            elif c in ")]}":
+                depth -= 1
+                if depth < 0:
+                    break
+            elif depth == 0 and c == ",":
+                spans.append((item, i))
+                item = i + 1
+            elif depth == 0 and (c.isalpha() or c == "_") and not (
+                sql[i - 1].isalnum() or sql[i - 1] in "_.`"
+            ):
+                j = i
+                while j < n and (sql[j].isalnum() or sql[j] == "_"):
+                    j += 1
+                word = sql[i:j].lower()
+                if word in self._SELECT_LIST_END and not (
+                    word == "from" and prev == "distinct"
+                ):
+                    break
+                prev, i = word, j - 1
+            i += 1
+        spans.append((item, i))
+        return spans
+
+    def _zip_select_generators(self, sql: str) -> str:
+        """DuckDB evaluates several ``unnest`` / ``generate_subscripts``
+        calls in one SELECT list side by side: row k holds each list's
+        k-th element, and a shorter, empty or NULL list pads with NULL.
+        Spark would emit the cross product of two ``explode``s, so
+        adjacent whole-item generators become one
+        ``inline(arrays_zip(...)) AS (alias, ...)``. Any other form with
+        two or more generators in one list raises rather than serve a
+        cross product."""
+        if len(self._GENERATOR_RE.findall(sql)) < 2:
+            return sql
+        pos = 0
+        while True:
+            m = self._search_code(self._SELECT_KW_RE, sql, pos)
+            if not m:
+                return sql
+            pos = m.end()
+            spans = self._select_item_spans(sql, m.end())
+            dm = re.match(r"(?i)\s*(?:distinct|all)\b", sql[spans[0][0] : spans[0][1]])
+            if dm:
+                spans[0] = (spans[0][0] + dm.end(), spans[0][1])
+            gens = [
+                k
+                for k, (a, b) in enumerate(spans)
+                if self._search_code(self._GENERATOR_RE, sql[a:b])
+                and not self._search_code(self._SELECT_KW_RE, sql[a:b])
+            ]
+            if len(gens) < 2:
+                continue
+            if gens != list(range(gens[0], gens[-1] + 1)):
+                raise UQueryError.sql_error(
+                    "several unnest()/generate_subscripts() in one SELECT list "
+                    "are supported only as adjacent select items"
+                )
+            arrays, aliases = [], []
+            for k in gens:
+                a, b = spans[k]
+                text = sql[a:b]
+                im = self._GENERATOR_ITEM_RE.match(text)
+                if (
+                    not im
+                    or self._find_close(text, text.index("(")) != text.rindex(")")
+                    or self._search_code(self._GENERATOR_RE, im.group(2))
+                ):
+                    raise UQueryError.sql_error(
+                        "several unnest()/generate_subscripts() in one SELECT list "
+                        f"are supported only as whole select items: {text.strip()}"
+                    )
+                fn, inner = im.group(1).lower(), im.group(2)
+                if fn == "unnest":
+                    if ":=" in inner:
+                        raise UQueryError.sql_error(
+                            "unnest: the recursive := form is not supported"
+                        )
+                    arrays.append(f"coalesce(({inner}), array())")
+                else:
+                    args = self._split_top(inner, ",")
+                    if len(args) != 2 or args[1].strip() != "1":
+                        raise UQueryError.sql_error(
+                            "generate_subscripts: only dimension 1 is supported "
+                            "(DuckDB raises beyond it too)"
+                        )
+                    arrays.append(self._subscripts(args[0]))
+                # unaliased: DuckDB names the column after the call text,
+                # which is not portable; keep the function name
+                aliases.append(im.group(3) or f"`{fn}`")
+            a, b = spans[gens[0]][0], spans[gens[-1]][1]
+            lead = sql[a : b - len(sql[a:b].lstrip())]
+            repl = f"{lead}inline(arrays_zip({', '.join(arrays)})) AS ({', '.join(aliases)}) "
+            sql = sql[:a] + repl + sql[b:]
 
     def _rewrite_collate(self, sql: str) -> str:
         """Batch-16 sweep: ``COLLATE NOCASE`` → Spark's UTF8_LCASE
@@ -7790,7 +7909,9 @@ class SqlRewriter:
     def _rewrite_int_div(sql: str) -> str:
         """DuckDB ``a // b`` (truncating integer division — same semantics
         as Spark's ``div``, verified incl. negatives) → ``a div b``.
-        String literals are skipped so ``'https://…'`` survives."""
+        Reached by the ``//`` the ÷0 pass leaves: a divisor it cannot
+        scan as an atom, such as ``- 2`` or ``~2``. String literals are
+        skipped so ``'https://…'`` survives."""
         out, i, n = [], 0, len(sql)
         while i < n:
             c = sql[i]
@@ -8457,10 +8578,12 @@ class SqlRewriter:
         ``len(subs)``-derived names collided with stale keys after
         pops); backticks escaped HERE, the single point where a data
         value enters a quoted identifier (round-10 ADVICE: the multi
-        path stored names unescaped → unparsable generated SQL)."""
-        tok = f"uq_pvn_{self._pivot_name_seq}"
-        self._pivot_name_seq += 1
-        self._pivot_name_subs[tok] = name.replace("`", "``")
+        path stored names unescaped → unparsable generated SQL). The
+        map lives in the current rewrite() call's state, never on the
+        shared rewriter, and only grows, so its size is the counter."""
+        names = _PROBE_TLS.pivot_names
+        tok = f"uq_pvn_{len(names)}"
+        names[tok] = name.replace("`", "``")
         return tok
 
     @staticmethod
@@ -9453,7 +9576,6 @@ class SqlRewriter:
             return ty
         return self._TYPE_RENAMES.get(base, ty)
 
-    _UQ_POLY_RE = re.compile(r"\buq_poly\s*\(")
     _UQ_POLY_ANY_RE = re.compile(r"\buq_poly(mapi?)?\s*\(")
 
     def _neutralize_markers(
@@ -10573,16 +10695,22 @@ class SqlRewriter:
         return self.rewrite(f"WITH RECURSIVE {name} AS (SELECT * FROM {uid}){rest}")
 
     def rewrite(self, sql: str) -> str:
-        # Open a probe-result memo for the duration of this TOP-LEVEL
-        # rewrite (thread-local; nested rewrite() calls — EXECUTE,
-        # macro/CTE recursion — share the outer one, which is sound:
-        # session state cannot change mid-rewrite).
+        # Open the per-call state for the duration of this TOP-LEVEL
+        # rewrite. It is thread-local because one rewriter serves every
+        # handler thread; nested rewrite() calls (EXECUTE, macro/CTE
+        # recursion) share the outer one:
+        # - memo: probe results (sound: session state cannot change
+        #   mid-rewrite);
+        # - pivot_names: pivot-name token → column name
+        #   (_pivot_name_token);
+        # - execute_depth: EXECUTE nesting, bounded below.
         if getattr(_PROBE_TLS, "memo", None) is None:
-            _PROBE_TLS.memo = {}
+            _PROBE_TLS.memo, _PROBE_TLS.pivot_names = {}, {}
+            _PROBE_TLS.execute_depth = 0
             try:
                 return self._rewrite_inner(sql)
             finally:
-                _PROBE_TLS.memo = None
+                _PROBE_TLS.memo = _PROBE_TLS.pivot_names = None
         return self._rewrite_inner(sql)
 
     def _rewrite_inner(self, sql: str) -> str:
@@ -10617,19 +10745,19 @@ class SqlRewriter:
             # recurses until an uncaught RecursionError — bound it like
             # the macro fixpoint's loop and raise the 400-contract
             # error instead.
-            depth = getattr(self, "_execute_depth", 0)
+            depth = _PROBE_TLS.execute_depth
             if depth >= 16:
                 raise UQueryError.sql_error(
                     f'EXECUTE recursion limit exceeded expanding "{m.group(1)}" '
                     "(self-referential prepared statement?)"
                 )
-            self._execute_depth = depth + 1
+            _PROBE_TLS.execute_depth = depth + 1
             try:
                 return self.rewrite(
                     self._substitute_prepared_params(stmts[name], args)
                 )
             finally:
-                self._execute_depth = depth
+                _PROBE_TLS.execute_depth = depth
         m = _DEALLOCATE_RE.match(sql)
         if m:
             getattr(self, "_prepared", {}).pop(m.group(1).lower(), None)
@@ -11039,17 +11167,13 @@ class SqlRewriter:
             raise UQueryError.sql_error(
                 "named function arguments (name := value) are not supported"
             )
-        # getattr: pure-rewrite property tests run on __new__ instances.
-        # The dict clears unconditionally — a token that never survived
-        # to the tail would otherwise linger as a stale entry (round-10
-        # ADVICE; token names are a monotonic counter so even stale
-        # entries could never collide, the clear just bounds memory)
-        subs = getattr(self, "_pivot_name_subs", None)
-        if subs:
-            if "uq_pvn_" in sql:
-                for tok in [t for t in subs if f"`{t}`" in sql]:
-                    sql = sql.replace(f"`{tok}`", f"`{subs[tok]}`")
-            subs.clear()
+        # getattr: pure-rewrite property tests call passes without
+        # rewrite(). The map is dropped with the call state, so a token
+        # from another request can never be seen or cleared here.
+        names = getattr(_PROBE_TLS, "pivot_names", None)
+        if names and "uq_pvn_" in sql:
+            for tok in [t for t in names if f"`{t}`" in sql]:
+                sql = sql.replace(f"`{tok}`", f"`{names[tok]}`")
         return sql
 
 

@@ -131,8 +131,8 @@ def main(argv: list[str] | None = None) -> int:
     signal.signal(signal.SIGINT, signal.default_int_handler)
     signal.signal(signal.SIGTERM, signal.default_int_handler)
     port = server.server_address[1]
-    print(f"uQuery-spark server started in {time.time() - t0:.2f}s on {args.addr}:{port}")
-    try:
+    try:  # a client may signal as soon as it reads the start line
+        print(f"uQuery-spark server started in {time.time() - t0:.2f}s on {args.addr}:{port}")
         server.serve_forever()
     except KeyboardInterrupt:
         print("shutting down")
