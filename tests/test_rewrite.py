@@ -4215,3 +4215,80 @@ def test_concurrent_rewrite_keeps_pivot_column_names(spark, rw, monkeypatch):
     release()
     df = spark.sql(finish())
     assert df.columns == ["a b", "c"]
+
+
+def test_more_than_100_polymorphic_markers_resolve(spark, rw):
+    """Each epoch() call leaves one polymorphic marker for the late
+    probe pass. A select list with more markers than any fixed lap
+    budget must still resolve every one: a marker left behind reaches
+    Spark as an unresolvable routine."""
+    import duckdb
+
+    con = duckdb.connect()
+    cols = [f"epoch(TIMESTAMP '2024-01-01 00:00:{i % 60:02d}') AS c{i}" for i in range(101)]
+    sql = f"SELECT {', '.join(cols)}"
+    out = rw.rewrite(sql)
+    assert "uq_poly" not in out
+    assert tuple(spark.sql(out).collect()[0]) == con.sql(sql).fetchall()[0]
+
+
+@pytest.mark.parametrize("call", ["sha256('a')", "list_sort([3, 1, 2])"])
+def test_a_thousand_calls_in_one_select_match_duckdb(spark, rw, call):
+    """Sibling calls are walked with a loop: one statement holding a
+    thousand calls of one translated function rewrites without growing
+    the stack per call, and serves DuckDB's values."""
+    import duckdb
+
+    con = duckdb.connect()
+    sql = "SELECT " + ", ".join(f"{call} AS c{i}" for i in range(1000))
+    want = con.sql(sql).fetchall()[0]
+    got = spark.sql(rw.rewrite(sql)).collect()[0]
+    assert [list(v) if isinstance(v, list) else v for v in got] == list(want)
+
+
+def test_probe_transport_failure_propagates(spark, rw, monkeypatch):
+    """A LIMIT-0 probe answers "does not analyze" only for an analysis
+    or parse failure. A dead gateway is a transport failure: it must
+    fail the rewrite, not silently pick the fallback form."""
+    from py4j.protocol import Py4JNetworkError
+
+    class DeadGateway:
+        def send_command(self, command):
+            raise Py4JNetworkError("Answer from Java side is empty")
+
+    class SqlMember:
+        command_header, target_id, name = "", "o0", "sql"
+        gateway_client = DeadGateway()
+
+        def _build_args(self, *args):
+            return "", []
+
+    class DeadGatewaySpark:
+        _jsparkSession = type("JSession", (), {"sql": SqlMember()})()
+
+        def __getattr__(self, name):
+            return getattr(spark, name)
+
+    monkeypatch.setattr(rw, "spark", DeadGatewaySpark())
+    with pytest.raises(Py4JNetworkError):
+        rw.rewrite("SELECT len('abc') AS n")
+
+
+def test_nested_case_mapping_calls_match_duckdb(spark, rw):
+    """upper() inside upper() gets DuckDB's simple case mapping too, not
+    Spark's full mapping ('ß' → 'SS'): the parity pass walks the
+    arguments of a call it translates."""
+    import duckdb
+
+    con = duckdb.connect()
+    sql = "SELECT upper(upper('straße')) AS a, ucase(ucase('ǆ')) AS b"
+    assert tuple(spark.sql(rw.rewrite(sql)).collect()[0]) == con.sql(sql).fetchall()[0]
+
+
+def test_map_literal_text_inside_a_string_is_kept(spark, rw):
+    """``MAP {…}`` inside a string literal is text, not a map literal."""
+    import duckdb
+
+    con = duckdb.connect()
+    sql = "SELECT 'MAP {1: 2}' AS s, MAP {1: 2}[1] AS v"
+    assert tuple(spark.sql(rw.rewrite(sql)).collect()[0]) == con.sql(sql).fetchall()[0]

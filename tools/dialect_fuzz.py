@@ -297,6 +297,11 @@ WFRAMES = ["", " ROWS BETWEEN 1 PRECEDING AND CURRENT ROW",
            " RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"]
 
 
+ALL_AXES = ["expr", "agg", "window", "rel", "temporal", "nested", "pattern",
+            "div", "subq", "timemix", "multirel", "pivotfz", "saggfz",
+            "macrofz", "psfz", "jsonfz"]
+
+
 def run_axis(axis, batches, rnd, spark, rw, con):
     g = Gen(rnd)
     checked = mismatch = 0
@@ -884,10 +889,7 @@ def main():
     )
     rw = SqlRewriter(spark)
     con = duckdb.connect()
-    axes = (["expr", "agg", "window", "rel", "temporal", "nested", "pattern",
-             "div", "subq", "timemix", "multirel", "pivotfz", "saggfz",
-             "macrofz", "psfz", "jsonfz"]
-            if axis == "all" else [axis])
+    axes = ALL_AXES if axis == "all" else [axis]
     total_mm = 0
     for ax in axes:
         checked, mm, fails = run_axis(ax, batches, random.Random(seed), spark, rw, con)

@@ -1,0 +1,124 @@
+"""Rewrite corpus: what ``SqlRewriter`` makes of a fixed set of inputs.
+
+Prints one JSON line per input: its name, then either the rewritten text
+(``sql``) or the error (``error`` class and ``message``). The inputs are
+
+- every registry entry's ``oracle`` text and ``sql=`` text, each through
+  a fresh rewriter over the tables at ``sf_dir`` (the gates use sf0.001);
+- every top-level statement ``tools/dialect_fuzz.py`` sends for
+  ``all 30`` at seeds 42 and 7, recorded by the rewriter handed to
+  ``run_axis`` (one rewriter per seed, as the fuzzer's ``main`` uses).
+
+Temp-view and spill-path uuids are normalised, so two runs of the same
+code print the same lines. The fuzzer's per-axis checked/mismatch counts
+go to stderr. A rewriter change that should not alter
+behaviour diffs clean against its parent:
+
+    python tools/rewrite_corpus.py SF_DIR > new.jsonl   # then the same on the parent
+    diff old.jsonl new.jsonl
+
+Usage:  python tools/rewrite_corpus.py sf_dir
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import random
+import re
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "tools"))
+os.chdir(ROOT)  # the rewriter's file sandbox defaults to the cwd
+
+import duckdb  # noqa: E402
+
+import dialect_fuzz  # noqa: E402
+from uquery_rs_spark import queries as Q  # noqa: E402
+from uquery_rs_spark.queries.registry import load_tables  # noqa: E402
+from uquery_rs_spark.rewrite import SqlRewriter  # noqa: E402
+from uquery_rs_spark.session import get_spark  # noqa: E402
+
+FUZZ_SEEDS = (42, 7)
+FUZZ_BATCHES = 30
+
+_VOLATILE = [
+    (re.compile(r"uq_rec_[0-9a-f]{12}"), "uq_rec_UUID"),
+    (re.compile(r"__uq_stage_[0-9a-f]{8}"), "__uq_stage_UUID"),
+    (re.compile(r"uq_cor_spill_[^/`'\s]+/(\w+?)_[0-9a-f]{8}"), r"uq_cor_spill_DIR/\1_UUID"),
+]
+
+
+def _norm(text: str) -> str:
+    for pat, repl in _VOLATILE:
+        text = pat.sub(repl, text)
+    return text
+
+
+def _error(name: str, e: Exception) -> dict:
+    msg = str(e).strip().split("\n")[0]
+    return {"name": name, "error": type(e).__name__, "message": _norm(msg)}
+
+
+def _outcome(name: str, fn) -> dict:
+    try:
+        return {"name": name, "sql": _norm(fn())}
+    except Exception as e:  # noqa: BLE001 - the error is the outcome
+        return _error(name, e)
+
+
+class RecordingRewriter(SqlRewriter):
+    """Records the outcome of each top-level ``rewrite`` it serves."""
+
+    def __init__(self, spark, tag: str):
+        super().__init__(spark)
+        self.tag, self.records, self._depth = tag, [], 0
+
+    def rewrite(self, sql: str) -> str:
+        if self._depth:
+            return super().rewrite(sql)
+        name = f"{self.tag}:{len(self.records)}"
+        self._depth += 1
+        try:
+            out = super().rewrite(sql)
+        except Exception as e:
+            self.records.append({**_error(name, e), "input": sql})
+            raise
+        finally:
+            self._depth -= 1
+        self.records.append({"name": name, "sql": _norm(out), "input": sql})
+        return out
+
+
+def main() -> int:
+    if len(sys.argv) != 2:
+        raise SystemExit(__doc__)
+    sf = sys.argv[1]
+    os.environ.setdefault("UQ_DRIVER_MEMORY", "4g")
+    spark = get_spark("rewrite-corpus", cpus=4)
+    Q.load_all()
+    load_tables(spark, sf)
+    for name in sorted(Q.REGISTRY):
+        q = Q.REGISTRY[name]
+        for kind, text in (("oracle", q.oracle), ("sql", q.sql)):
+            if text is not None:
+                rec = _outcome(f"{name}:{kind}", lambda: SqlRewriter(spark).rewrite(text))
+                print(json.dumps(rec), flush=True)
+    con = duckdb.connect()
+    for seed in FUZZ_SEEDS:
+        rw = RecordingRewriter(spark, f"fuzz{seed}")
+        for axis in dialect_fuzz.ALL_AXES:
+            rw.tag, rw.records = f"fuzz{seed}:{axis}", []
+            checked, mismatch, _fails = dialect_fuzz.run_axis(
+                axis, FUZZ_BATCHES, random.Random(seed), spark, rw, con
+            )
+            print(f"seed {seed} {axis}: checked={checked} mismatch={mismatch}", file=sys.stderr)
+            for rec in rw.records:
+                print(json.dumps(rec), flush=True)
+    return 0
+
+
+if __name__ == "__main__":
+    raise SystemExit(main())

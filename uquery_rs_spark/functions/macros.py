@@ -1,51 +1,14 @@
-"""The reference's macro catalog (tests/test.db) as Spark expressions.
+"""The reference's macro catalog (tests/test.db) on the served path.
 
-DuckDB macros are textual SQL expansions; the Spark-native equivalent is a
-Column-expression builder (DataFrame path) plus a SQL-text expansion used by
-the rewrite layer (service path). Definitions mirror the macro bodies the
-reference's attached database carries (SURVEY.md §2.B.4/§2.B.7):
-geomean, count_if, fmod, fdiv, list_has_all, list_append, array_to_string.
+DuckDB macros are textual SQL expansions. Here ``fmod`` and ``fdiv``
+register as session SQL functions; ``geomean`` (an aggregate) and the
+dialect's list helpers expand in the rewrite layer, and ``count_if`` is
+a Spark built-in (SURVEY.md §2.B.4/§2.B.7).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import SparkSession
-
-
-def geomean(col: Column | str) -> Column:
-    """exp(avg(ln(x))) — aggregate macro."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.exp(F.avg(F.ln(c)))
-
-
-def count_if(cond: Column) -> Column:
-    """count_if(p) ≡ sum(CASE WHEN p THEN 1 ELSE 0 END)."""
-    return F.sum(F.when(cond, 1).otherwise(0))
-
-
-def fmod(x: Column, y: Column) -> Column:
-    """C-style remainder: x - y * trunc(x / y); sign follows x."""
-    return x - y * (x / y).cast("long").cast("double")
-
-
-def fdiv(x: Column, y: Column) -> Column:
-    """Floored integer quotient of a true division."""
-    return F.floor(x / y)
-
-
-def list_has_all(haystack: Column, needles: Column) -> Column:
-    """Every element of `needles` present in `haystack`."""
-    return F.forall(needles, lambda n: F.array_contains(haystack, n))
-
-
-def list_append(lst: Column, elem: Column) -> Column:
-    return F.concat(lst, F.array(elem))
-
-
-def array_to_string(lst: Column, sep: str) -> Column:
-    return F.concat_ws(sep, lst)
 
 
 # SQL-text expansions for the rewrite layer (service path). Spark 4 also
@@ -53,8 +16,6 @@ def array_to_string(lst: Column, sep: str) -> Column:
 # these CREATE statements register the same macros session-wide so raw SQL
 # arriving over HTTP can call them like the reference's attached-db macros.
 MACRO_SQL: tuple[str, ...] = (
-    "CREATE OR REPLACE TEMPORARY FUNCTION count_if(p BOOLEAN) RETURNS BIGINT "
-    "RETURN sum(CASE WHEN p THEN 1 ELSE 0 END)",
     "CREATE OR REPLACE TEMPORARY FUNCTION fmod(x DOUBLE, y DOUBLE) RETURNS DOUBLE "
     "RETURN x - y * cast(cast(x / y AS BIGINT) AS DOUBLE)",
     "CREATE OR REPLACE TEMPORARY FUNCTION fdiv(x DOUBLE, y DOUBLE) RETURNS BIGINT "

@@ -1,9 +1,9 @@
 """Physical-plan inspection — the scale feedback loop.
 
 `bench.py` measures wall-clock; these helpers check the *shape* of the plan:
-did the filter reach the parquet scan, did the dimension join go broadcast,
-how many shuffles. Used by tests to pin plan properties so regressions that
-would only hurt at 100 TB are caught at sf0.001.
+did the filter reach the parquet scan, did the dimension join go broadcast.
+Used by tests to pin plan properties so regressions that would only hurt
+at 100 TB are caught at sf0.001.
 """
 
 from __future__ import annotations
@@ -17,11 +17,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def executed_plan(df: DataFrame) -> str:
-    """Final (post-AQE) plan string; call after an action for AQE results."""
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def pushed_filters(df: DataFrame) -> str:
     """The PushedFilters section(s) of the formatted plan."""
     plan = formatted_plan(df)
@@ -30,7 +25,3 @@ def pushed_filters(df: DataFrame) -> str:
 
 def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df) or "BroadcastNestedLoopJoin" in formatted_plan(df)
-
-
-def count_shuffles(df: DataFrame) -> int:
-    return formatted_plan(df).count("Exchange")

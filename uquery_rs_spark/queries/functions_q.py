@@ -12,7 +12,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import macros as M
 from .registry import load_tables, register, register_sql
 
 
@@ -183,9 +182,12 @@ ORDER BY event_type
 )
 
 
-@register(
+register_sql(
     "macros_battery",
     tags=("functions", "macros"),
+    doc="""The reference's macro catalog (geomean / count_if / fmod / fdiv from
+    tests/test.db, SURVEY.md §2.B.4) applied per market segment, served
+    by calling the macros through the gateway.""",
     oracle="""
 SELECT c_mktsegment,
        round(exp(avg(ln(c_acctbal))), 2)                  AS geomean_bal,
@@ -197,22 +199,18 @@ WHERE c_acctbal > 0
 GROUP BY c_mktsegment
 ORDER BY c_mktsegment
 """,
+    sql="""
+SELECT c_mktsegment,
+       round(geomean(c_acctbal), 2)                       AS geomean_bal,
+       count_if(c_acctbal > 5000)                         AS n_rich,
+       round(sum(fmod(c_acctbal, 1000)), 2)               AS fmod_total,
+       CAST(sum(fdiv(c_acctbal, 1000)) AS BIGINT)         AS fdiv_total
+FROM customer
+WHERE c_acctbal > 0
+GROUP BY c_mktsegment
+ORDER BY c_mktsegment
+""",
 )
-def macros_battery(spark: SparkSession, sf: str) -> DataFrame:
-    """The reference's macro catalog (geomean / count_if / fmod / fdiv from
-    tests/test.db, SURVEY.md §2.B.4) applied per market segment."""
-    cust = load_tables(spark, sf)["customer"].filter(F.col("c_acctbal") > 0)
-    bal = F.col("c_acctbal")
-    return (
-        cust.groupBy("c_mktsegment")
-        .agg(
-            F.round(M.geomean(bal), 2).alias("geomean_bal"),
-            M.count_if(bal > 5000).alias("n_rich"),
-            F.round(F.sum(M.fmod(bal, F.lit(1000.0))), 2).alias("fmod_total"),
-            F.sum(M.fdiv(bal, F.lit(1000.0))).alias("fdiv_total"),
-        )
-        .orderBy("c_mktsegment")
-    )
 
 
 register_sql(

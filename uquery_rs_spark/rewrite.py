@@ -46,6 +46,11 @@ Query sugar & dialect
 9. macros: scalar + parameterized table macros from attached .db files
    inline at rewrite time (DuckDB bind-time semantics); aggregate macro
    geomean(x) → exp(avg(ln(x)))
+
+Passes that translate function calls share one walker, ``_map_calls``:
+outside string literals and left to right, a call's arguments are
+walked before the call itself; a call its pass declines keeps its walked
+arguments; the walk resumes after the spliced text.
 """
 
 from __future__ import annotations
@@ -333,15 +338,15 @@ class SqlRewriter:
         # list_distinct/array_distinct moved to _rewrite_list_distinct
         # (nested-fuzzer catch r7: DuckDB REMOVES NULLs — [5,NULL,7,NULL]
         # → [7,5] — where Spark's array_distinct keeps one)
-        # list_contains/array_contains moved to _rewrite_b20_fns (DuckDB
+        # list_contains/array_contains moved to _rewrite_flatten_factorial_contains (DuckDB
         # returns false on null-bearing misses where Spark 3VL gives NULL)
         "list_min": "array_min",
         "list_max": "array_max",
-        # list_append/list_prepend moved to _rewrite_b20_fns (nested
+        # list_append/list_prepend moved to _rewrite_flatten_factorial_contains (nested
         # fuzzer catch: Spark's array functions are width-strict where
         # DuckDB coerces numeric element/value types)
         # list_position/list_indexof/array_indexof moved to
-        # _rewrite_b20_fns (fuzzer catch: Spark's array_position is
+        # _rewrite_flatten_factorial_contains (fuzzer catch: Spark's array_position is
         # width-strict where DuckDB coerces numeric types)
         "from_hex": "unhex",
         # list_zip/array_zip moved to _rewrite_list_zip (round-12
@@ -351,7 +356,7 @@ class SqlRewriter:
         "regexp_matches": "regexp_like",
         "strlen": "length",
         # round-5 sweep batch 2 (1:1 semantics verified against DuckDB)
-        # arg_max/arg_min/max_by/min_by moved to _rewrite_b28_aggs
+        # arg_max/arg_min/max_by/min_by moved to _rewrite_arg_max_avg_corr
         # (agg-fuzzer catch: DuckDB skips NULL-VALUE rows, Spark's
         # max_by can return one)
         "editdist3": "levenshtein",
@@ -415,7 +420,7 @@ class SqlRewriter:
     def _rewrite_map_literal(self, sql: str) -> str:
         """DuckDB ``MAP {'k': v, …}`` → Spark ``map('k', v, …)``
         (balanced-brace scan; keys/values pass through recursively)."""
-        m = self._MAP_LITERAL_RE.search(sql)
+        m = self._search_code(self._MAP_LITERAL_RE, sql)
         while m:
             depth, i, n = 1, m.end(), len(sql)
             while i < n and depth:
@@ -429,7 +434,7 @@ class SqlRewriter:
                 k, _, v = entry.partition(":")
                 flat.append(f"{k.strip()}, {v.strip()}")
             sql = sql[: m.start()] + f"map({', '.join(flat)})" + sql[i:]
-            m = self._MAP_LITERAL_RE.search(sql)
+            m = self._search_code(self._MAP_LITERAL_RE, sql)
         return sql
 
     _DISTINCT_IN_AGG_RE = re.compile(r"(?i)\(\s*distinct\b")
@@ -449,30 +454,21 @@ class SqlRewriter:
         equivalent comparator-sorted collect_list fold instead of
         listagg (overtriggering is safe — the fold is semantically
         identical and fuzz-validated)."""
-        m = self._STRING_AGG_RE.search(sql)
-        pos = 0
-        while m:
-            close = self._find_close(sql, m.end() - 1)
-            if close == -1:
-                break
-            inner = sql[m.end() : close]
+
+        def translate(m, inner):
             split = re.split(r"(?i)\border\s+by\b", inner, maxsplit=1)
-            if len(split) == 2:
-                args, order = split[0].rstrip().rstrip(","), split[1].strip()
-                rest = sql[: m.start()] + sql[close + 1 :]
-                over_follows = re.match(r"\s*over\b", sql[close + 1 :], re.I)
-                fold = None
-                if self._DISTINCT_IN_AGG_RE.search(rest) and not over_follows:
-                    fold = self._string_agg_sorted_fold(args.strip(), order)
-                repl = fold or (
-                    f"listagg({args.strip()}) WITHIN GROUP (ORDER BY {order})"
-                )
-                sql = sql[: m.start()] + repl + sql[close + 1 :]
-                pos = m.start() + len(repl)
-            else:
-                pos = m.end()
-            m = self._STRING_AGG_RE.search(sql, pos)
-        return sql
+            if len(split) != 2:
+                return None
+            args, order = split[0].rstrip().rstrip(","), split[1].strip()
+            whole, close = m.string, self._close_of(m)
+            rest = whole[: m.start()] + whole[close + 1 :]
+            over_follows = re.match(r"\s*over\b", whole[close + 1 :], re.I)
+            fold = None
+            if self._DISTINCT_IN_AGG_RE.search(rest) and not over_follows:
+                fold = self._string_agg_sorted_fold(args.strip(), order)
+            return fold or f"listagg({args.strip()}) WITHIN GROUP (ORDER BY {order})"
+
+        return self._map_calls(self._STRING_AGG_RE, translate, sql, raw=True)
 
     def _string_agg_sorted_fold(self, args: str, order: str) -> str | None:
         """Equivalent of ``listagg(x, sep) WITHIN GROUP (ORDER BY …)``
@@ -530,19 +526,15 @@ class SqlRewriter:
         """DuckDB ``struct_pack(k := v, …)`` → Spark
         ``named_struct('k', v, …)`` (balanced arg split; nested calls
         recurse)."""
-        m = self._STRUCT_PACK_RE.search(sql)
-        while m:
-            close = self._find_close(sql, m.end() - 1)
-            if close == -1:
-                return sql
-            args = self._split_top(sql[m.end() : close], ",")
+
+        def translate(m, args):
             pairs = []
             for a in args:
                 k, _, v = a.partition(":=")
-                pairs.append(f"'{k.strip()}', {self._rewrite_struct_pack(v.strip())}")
-            sql = sql[: m.start()] + f"named_struct({', '.join(pairs)})" + sql[close + 1 :]
-            m = self._STRUCT_PACK_RE.search(sql)
-        return sql
+                pairs.append(f"'{k.strip()}', {v.strip()}")
+            return f"named_struct({', '.join(pairs)})"
+
+        return self._map_calls(self._STRUCT_PACK_RE, translate, sql)
 
     def _rewrite_generate_series(self, sql: str) -> str:
         """``FROM/JOIN generate_series(a, b[, s])`` (table function, one
@@ -550,40 +542,31 @@ class SqlRewriter:
         exploded subquery; scalar ``generate_series(...)`` (returns a
         LIST, inclusive bounds — exactly Spark's sequence()) is handled
         by a plain rename."""
-        m = self._SERIES_FROM_RE.search(sql)
-        while m:
-            close = self._find_close(sql, m.end() - 1)
-            if close == -1:
-                break
-            args = sql[m.end() : close]
-            sql = (
-                sql[: m.start()]
-                + f"{m.group(1)} (SELECT explode(sequence({args})) AS generate_series)"
-                + sql[close + 1 :]
-            )
-            m = self._SERIES_FROM_RE.search(sql)
+        sql = self._map_calls(
+            self._SERIES_FROM_RE,
+            lambda m, inner: (
+                f"{m.group(1)} (SELECT explode(sequence({inner})) AS generate_series)"
+            ),
+            sql,
+            raw=True,
+        )
         sql = re.sub(r"(?i)\bgenerate_series\s*\(", "sequence(", sql)
         # batch 22: an INTERVAL step makes DuckDB's result TIMESTAMP even
         # for DATE bounds; Spark's sequence keeps DATE elements — cast
         # the bounds so the element type (and its string form) matches
-        hit = self._call_args(re.compile(r"(?i)\bsequence\s*\("), sql)
-        pos = 0
-        while hit:
-            m, close, args = hit
+
+        def translate(m, args):
             if len(args) == 3 and re.match(
                 r"(?i)^\s*(interval\b|make_interval|make_dt_interval|make_ym_interval)",
                 args[2],
             ):
-                repl = (
+                return (
                     f"sequence(CAST(({args[0]}) AS TIMESTAMP), "
                     f"CAST(({args[1]}) AS TIMESTAMP), {args[2]})"
                 )
-                sql = sql[: m.start()] + repl + sql[close + 1 :]
-                pos = m.start() + len(repl)
-            else:
-                pos = m.end()
-            hit = self._call_args(re.compile(r"(?i)\bsequence\s*\("), sql, pos)
-        return sql
+            return None
+
+        return self._map_calls(re.compile(r"(?i)\bsequence\s*\("), translate, sql)
 
     def _rewrite_function_names(self, sql: str) -> str:
         """Rename DuckDB functions to their Spark equivalents, skipping
@@ -788,21 +771,23 @@ class SqlRewriter:
         return sql.count("'", 0, idx) % 2 == 1
 
     @classmethod
-    def _search_code(cls, pattern: "re.Pattern[str]", sql: str, pos: int = 0):
+    def _search_code(cls, pattern: "re.Pattern[str]", sql: str, pos: int = 0, end=None):
         """pattern.search skipping matches inside string literals."""
-        m = pattern.search(sql, pos)
+        end = len(sql) if end is None else end
+        m = pattern.search(sql, pos, end)
         while m and cls._in_literal(sql, m.start()):
-            m = pattern.search(sql, m.end())
+            m = pattern.search(sql, m.end(), end)
         return m
 
     @classmethod
-    def _sub_code(cls, pattern: "re.Pattern[str]", repl: str, sql: str) -> str:
-        """Plain-text substitution skipping string literals."""
+    def _sub_code_fn(cls, pattern, fn, sql: str) -> str:
+        """Callable substitution skipping string literals."""
         pos = 0
         while True:
             m = cls._search_code(pattern, sql, pos)
             if not m:
                 return sql
+            repl = fn(m)
             sql = sql[: m.start()] + repl + sql[m.end() :]
             pos = m.start() + len(repl)
 
@@ -892,80 +877,57 @@ class SqlRewriter:
         otherwise inline (?i)/(?s) prefixes. Murky newline options
         m/n/p and non-literal flag strings stay untranslated (loud
         arity error, never a silent wrong value)."""
-        pos = 0
-        while True:
-            hit = self._call_args(self._REGEXP_MATCHES_RE, sql, pos)
-            if not hit:
-                return sql
-            m, close, args = hit
+
+        def translate(m, args):
             if len(args) != 3:
-                pos = m.end()
-                continue
+                return None
             f = self._lit_parse(args[2])
             if f is None:
-                pos = m.end()
-                continue
+                return None
             if "g" in f:
                 raise UQueryError.sql_error(
                     "Option 'g' (global replace) is only valid for regexp_replace"
                 )
             if not set(f) <= set("cisl"):
-                pos = m.end()
-                continue
+                return None
             s, pat = args[0], args[1]
             ci = next((ch for ch in reversed(f) if ch in "ci"), "c") == "i"
             if "l" in f:
                 if ci:
-                    repl = f"contains(lower(({s})), lower(({pat})))"
-                else:
-                    repl = f"contains(({s}), ({pat}))"
+                    return f"contains(lower(({s})), lower(({pat})))"
+                return f"contains(({s}), ({pat}))"
+            prefix = ("(?i)" if ci else "") + ("(?s)" if "s" in f else "")
+            p_lit = self._lit_parse(pat)
+            if not prefix:
+                pat_expr = pat
+            elif p_lit is not None:
+                pat_expr = self._lit_emit(prefix + p_lit)
             else:
-                prefix = ("(?i)" if ci else "") + ("(?s)" if "s" in f else "")
-                p_lit = self._lit_parse(pat)
-                if not prefix:
-                    pat_expr = pat
-                elif p_lit is not None:
-                    pat_expr = self._lit_emit(prefix + p_lit)
-                else:
-                    pat_expr = f"concat('{prefix}', {pat})"
-                repl = f"regexp_like(({s}), {pat_expr})"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
+                pat_expr = f"concat('{prefix}', {pat})"
+            return f"regexp_like(({s}), {pat_expr})"
+
+        return self._map_calls(self._REGEXP_MATCHES_RE, translate, sql)
 
     def _rewrite_regexp_replace(self, sql: str) -> str:
         """DuckDB regexp_replace(s, pat, repl[, flags]) → Spark (see
-        _translate_regexp_replace). Recurses into arguments and the tail
-        so nested calls translate exactly once."""
-        m = self._search_code(self._REGEXP_REPLACE_RE, sql)
-        if not m:
-            return sql
-        close = self._find_close(sql, m.end() - 1)
-        if close == -1:
-            return sql
-        args = [
-            self._rewrite_regexp_replace(a.strip())
-            for a in self._split_top(sql[m.end() : close], ",")
-        ]
-        tail = self._rewrite_regexp_replace(sql[close + 1 :])
-        return sql[: m.start()] + self._translate_regexp_replace(args) + tail
+        _translate_regexp_replace)."""
+        return self._map_calls(
+            self._REGEXP_REPLACE_RE,
+            lambda m, args: self._translate_regexp_replace(args),
+            sql,
+        )
 
     def _rewrite_regexp_extract(self, sql: str) -> str:
         """Two-arg regexp_extract[_all](s, pat) returns the WHOLE match in
         DuckDB (group 0) but group 1 in Spark — pin the default with an
         explicit 0. Calls with an explicit group pass through (same
         numbering in both engines)."""
-        out: list[str] = []
-        pos = 0
-        m = self._search_code(self._REGEXP_EXTRACT_RE, sql, pos)
-        while m:
-            close = self._find_close(sql, m.end() - 1)
-            if close == -1:
-                break
-            inner = self._rewrite_regexp_extract(sql[m.end() : close])
+
+        def translate(m, inner):
             parts = self._split_top(inner, ",")
             if len(parts) == 2:
-                inner += ", 0"
-            elif (
+                return f"{m.group(0)}{inner}, 0)"
+            if (
                 len(parts) == 3
                 and not m.group(1)  # regexp_extract only (not _all)
                 and re.match(r"(?i)^\s*array\s*\(", parts[2].strip())
@@ -988,15 +950,10 @@ class SqlRewriter:
                     f"'{n}', regexp_extract({s_arg}, {p_arg}, {i + 1})"
                     for i, n in enumerate(names)
                 )
-                out.append(sql[pos : m.start()] + f"named_struct({fields})")
-                pos = close + 1
-                m = self._search_code(self._REGEXP_EXTRACT_RE, sql, pos)
-                continue
-            out.append(sql[pos : m.end()] + inner + ")")
-            pos = close + 1
-            m = self._search_code(self._REGEXP_EXTRACT_RE, sql, pos)
-        out.append(sql[pos:])
-        return "".join(out)
+                return f"named_struct({fields})"
+            return f"{m.group(0)}{inner})"
+
+        return self._map_calls(self._REGEXP_EXTRACT_RE, translate, sql, raw=True)
 
     # -- list_sort / array_to_string argument semantics -------------------
 
@@ -1011,58 +968,41 @@ class SqlRewriter:
         DESC→sort_array(l, false) (nulls last), DESC+NULLS FIRST→
         reverse(array_sort). The old plain rename to sort_array put NULLs
         first ascending and rejected the string direction argument."""
-        m = self._search_code(self._LIST_SORT_RE, sql)
-        if not m:
-            return sql
-        close = self._find_close(sql, m.end() - 1)
-        if close == -1:
-            return sql
-        args = [
-            self._rewrite_list_sort(a.strip())
-            for a in self._split_top(sql[m.end() : close], ",")
-        ]
-        tail = self._rewrite_list_sort(sql[close + 1 :])
-        l = args[0]
-        mods = [(self._lit_parse(a) or "").upper() for a in args[1:]]
-        if m.group(1):  # list_reverse_sort: direction fixed DESC
-            desc, nulls_first = True, "NULLS FIRST" in mods
-        else:
-            desc = "DESC" in mods
-            nulls_first = "NULLS FIRST" in mods
-        if desc:
-            call = f"reverse(array_sort({l}))" if nulls_first else f"sort_array({l}, false)"
-        else:
-            call = f"sort_array({l})" if nulls_first else f"array_sort({l})"
-        return sql[: m.start()] + call + tail
+
+        def translate(m, args):
+            l = args[0]
+            mods = [(self._lit_parse(a) or "").upper() for a in args[1:]]
+            if m.group(1):  # list_reverse_sort: direction fixed DESC
+                desc, nulls_first = True, "NULLS FIRST" in mods
+            else:
+                desc = "DESC" in mods
+                nulls_first = "NULLS FIRST" in mods
+            if desc:
+                return f"reverse(array_sort({l}))" if nulls_first else f"sort_array({l}, false)"
+            return f"sort_array({l})" if nulls_first else f"array_sort({l})"
+
+        return self._map_calls(self._LIST_SORT_RE, translate, sql)
 
     def _rewrite_array_to_string(self, sql: str) -> str:
         """array_to_string(l, sep) → array_join guarded for lists with
         no NON-NULL elements: DuckDB yields NULL for [] AND for [NULL]
         (verified batch 16), Spark's array_join yields ''. NULL
         elements are skipped by both when any non-null remains."""
-        m = self._search_code(self._ARRAY_TO_STRING_RE, sql)
-        if not m:
-            return sql
-        close = self._find_close(sql, m.end() - 1)
-        if close == -1:
-            return sql
-        args = [
-            self._rewrite_array_to_string(a.strip())
-            for a in self._split_top(sql[m.end() : close], ",")
-        ]
-        tail = self._rewrite_array_to_string(sql[close + 1 :])
-        if len(args) != 2:
-            return sql[: m.start()] + f"array_join({', '.join(args)})" + tail
-        l, sep = args
-        # cast elements to STRING: DuckDB stringifies non-VARCHAR lists
-        # (array_to_string([1,2], '-') = '1-2'); Spark's array_join
-        # rejects non-string arrays (batch-8 sweep)
-        le = f"transform(({l}), uq_a2s -> CAST(uq_a2s AS STRING))"
-        call = (
-            f"CASE WHEN size(filter(({l}), uq_ae -> uq_ae IS NOT NULL)) = 0 "
-            f"THEN NULL ELSE array_join({le}, {sep}) END"
-        )
-        return sql[: m.start()] + call + tail
+
+        def translate(m, args):
+            if len(args) != 2:
+                return f"array_join({', '.join(args)})"
+            l, sep = args
+            # cast elements to STRING: DuckDB stringifies non-VARCHAR lists
+            # (array_to_string([1,2], '-') = '1-2'); Spark's array_join
+            # rejects non-string arrays (batch-8 sweep)
+            le = f"transform(({l}), uq_a2s -> CAST(uq_a2s AS STRING))"
+            return (
+                f"CASE WHEN size(filter(({l}), uq_ae -> uq_ae IS NOT NULL)) = 0 "
+                f"THEN NULL ELSE array_join({le}, {sep}) END"
+            )
+
+        return self._map_calls(self._ARRAY_TO_STRING_RE, translate, sql)
 
     # -- round-5 dialect gap-hunt closures (list_aggregate / list_reduce /
     # list_slice / scalar range / format / 3-arg date_diff / bare struct
@@ -1089,6 +1029,63 @@ class SqlRewriter:
             return None
         return m, close, [a.strip() for a in self._split_top(sql[m.end() : close], ",")]
 
+    def _close_of(self, m) -> int:
+        """Index of the bracket closing the call ``m`` matched (``m``
+        ends at the call's opening bracket)."""
+        return self._find_close(m.string, m.end() - 1)
+
+    @staticmethod
+    def _one_arg(error: str, emit):
+        """A ``_map_calls`` translator for a one-argument call: any other
+        arity raises ``error``; else ``emit(m, arg)`` is the replacement."""
+
+        def translate(m, args):
+            if len(args) != 1:
+                raise UQueryError.sql_error(error)
+            return emit(m, args[0])
+
+        return translate
+
+    def _map_calls(self, regex, translate, sql: str, raw: bool = False) -> str:
+        """Rewrite every call ``regex`` matches outside string literals
+        (the match must end at the call's opening bracket), left to right.
+
+        Each call's arguments are walked first; then ``translate(m,
+        args)`` gets the match (``m.string`` is the whole input, so
+        context checks see the original text) and the walked, stripped,
+        top-level arguments (with ``raw``, the walked argument text as
+        written). Its return replaces the call; ``None`` keeps the call
+        with its walked arguments; ``(text, end)`` replaces the source
+        through index ``end`` (a trailing FILTER/OVER clause). The walk
+        resumes after the replaced text, and siblings loop, so the stack
+        grows with nesting depth only. An unclosed call ends the walk."""
+        if not self._search_code(regex, sql):
+            return sql
+
+        def walk(lo: int, hi: int) -> str:
+            out, pos = [], lo
+            while True:
+                m = self._search_code(regex, sql, pos, hi)
+                if not m:
+                    break
+                close = self._find_close(sql, m.end() - 1)
+                if close == -1:
+                    break
+                inner = walk(m.end(), close)
+                repl = translate(
+                    m, inner if raw else [a.strip() for a in self._split_top(inner, ",")]
+                )
+                if repl is None:
+                    repl = sql[m.start() : m.end()] + inner + sql[close]
+                elif isinstance(repl, tuple):
+                    repl, close = repl
+                out += (sql[pos : m.start()], repl)
+                pos = close + 1
+            out.append(sql[pos:hi])
+            return "".join(out)
+
+        return walk(0, len(sql))
+
     _LIST_AGG_ALIAS_RE = re.compile(
         r"(?i)\blist_(sem|entropy|stddev_samp|stddev_pop|var_samp|var_pop|"
         r"product|skewness|kurtosis|string_agg|mad)\s*\("
@@ -1099,21 +1096,13 @@ class SqlRewriter:
         list_sem/list_product/… were loud UNRESOLVED_ROUTINE) →
         the ``list_aggregate(x, '<fn>')`` spelling the pass below
         translates. Both spellings are DuckDB-equivalent (probed)."""
-        pos = 0
-        while True:
-            hit = self._call_args(self._LIST_AGG_ALIAS_RE, sql, pos)
-            if not hit:
-                return sql
-            m, close, args = hit
-            if len(args) != 1:
-                # advance past the NAME only, not the whole call —
-                # nested rewritable occurrences inside the unmatched
-                # call's arguments must still be scanned (ADVICE r12)
-                pos = m.end()
-                continue
-            repl = f"list_aggregate({args[0]}, '{m.group(1).lower()}')"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
+        return self._map_calls(
+            self._LIST_AGG_ALIAS_RE,
+            lambda m, args: (
+                f"list_aggregate({args[0]}, '{m.group(1).lower()}')" if len(args) == 1 else None
+            ),
+            sql,
+        )
 
     def _rewrite_list_aggregate(self, sql: str) -> str:
         """list_aggregate/list_aggr(l, 'fname') for the common fnames:
@@ -1122,14 +1111,12 @@ class SqlRewriter:
         so the accumulator keeps the ELEMENT type; avg → sum/count in
         DOUBLE. NULL elements are skipped like DuckDB. Unsupported
         fnames raise rather than mistranslate."""
-        hit = self._call_args(self._LIST_AGG_RE, sql)
-        if not hit:
-            return sql
-        m, close, args = hit
-        tail = self._rewrite_list_aggregate(sql[close + 1 :])
+        return self._map_calls(self._LIST_AGG_RE, self._translate_list_aggregate, sql)
+
+    def _translate_list_aggregate(self, m, args: list[str]) -> str:
         if len(args) != 2:
             raise UQueryError.sql_error("list_aggregate expects (list, 'function')")
-        l = self._rewrite_list_aggregate(args[0])
+        l = args[0]
         fname = (self._lit_parse(args[1]) or "").lower()
         nn = f"filter(({l}), x -> x IS NOT NULL)"
         # element-typed fold; DECIMAL elements widen per step which
@@ -1246,7 +1233,7 @@ class SqlRewriter:
                 f"list_aggregate: unsupported function '{fname}' "
                 f"(supported: {sorted(exprs)})"
             )
-        return sql[: m.start()] + exprs[fname] + tail
+        return exprs[fname]
 
     _LAM3_RE = re.compile(
         r"^\(\s*(\w+)\s*,\s*(\w+)\s*,\s*(\w+)\s*\)\s*->\s*(.*)$", re.S
@@ -1266,46 +1253,32 @@ class SqlRewriter:
         outer names, so whole-word substitution outside literals is
         exact). Single-element lists skip the fold (zip_with pads with
         NULLs otherwise)."""
-        hit = self._call_args(self._LIST_REDUCE_RE, sql)
-        if not hit:
-            return sql
-        m, close, args = hit
-        tail = self._rewrite_list_reduce(sql[close + 1 :])
+        return self._map_calls(self._LIST_REDUCE_RE, self._translate_list_reduce, sql)
+
+    def _translate_list_reduce(self, m, args: list[str]) -> str:
         if len(args) != 2:
             raise UQueryError.sql_error("list_reduce expects (list, lambda)")
-        l = self._rewrite_list_reduce(args[0])
-        lam = args[1]
+        l, lam = args
         m3 = self._LAM3_RE.match(lam)
         if m3:
             acc, elem, idx, body = m3.groups()
             for name, repl_f in ((elem, "uq_zs.uq_ze"), (idx, "uq_zs.uq_zi")):
                 word = re.compile(rf"\b{re.escape(name)}\b")
-                out, pos2 = [], 0
-                while True:
-                    wm = self._search_code(word, body, pos2)
-                    if not wm:
-                        break
-                    out.append(body[pos2 : wm.start()])
-                    out.append(repl_f)
-                    pos2 = wm.end()
-                out.append(body[pos2:])
-                body = "".join(out)
+                body = self._sub_code_fn(word, lambda _m, r=repl_f: r, body)
             zipped = (
                 f"zip_with(slice(({l}), 2, size(({l})) - 1), "
                 f"sequence(1, size(({l})) - 1), "
                 f"(uq_ze, uq_zi) -> struct(uq_ze AS uq_ze, uq_zi AS uq_zi))"
             )
-            repl = (
+            return (
                 f"(CASE WHEN size(({l})) <= 1 THEN try_element_at(({l}), 1) "
                 f"ELSE aggregate({zipped}, try_element_at(({l}), 1), "
                 f"({acc}, uq_zs) -> ({body})) END)"
             )
-        else:
-            repl = (
-                f"reduce(slice(({l}), 2, greatest(size(({l})) - 1, 0)), "
-                f"try_element_at(({l}), 1), {lam})"
-            )
-        return sql[: m.start()] + repl + tail
+        return (
+            f"reduce(slice(({l}), 2, greatest(size(({l})) - 1, 0)), "
+            f"try_element_at(({l}), 1), {lam})"
+        )
 
     def _rewrite_list_slice(self, sql: str) -> str:
         """list_slice(l, a, b) — 1-based INCLUSIVE bounds → slice(l, a,
@@ -1317,21 +1290,16 @@ class SqlRewriter:
         negative-step and index handling; DuckDB itself rejects
         string+step, so the string-polymorphic path there is
         permissive-only."""
-        hit = self._call_args(self._LIST_SLICE_RE, sql)
-        if not hit:
-            return sql
-        m, close, args = hit
-        tail = self._rewrite_list_slice(sql[close + 1 :])
-        if len(args) != 3:
-            raise UQueryError.sql_error(
-                "list_slice expects (list, begin, end[, step])"
-            )
-        l, a, b = (self._rewrite_list_slice(x) for x in args)
-        return (
-            sql[: m.start()]
-            + f"slice(({l}), ({a}), ({b}) - ({a}) + 1)"
-            + tail
-        )
+
+        def translate(m, args):
+            if len(args) != 3:
+                raise UQueryError.sql_error(
+                    "list_slice expects (list, begin, end[, step])"
+                )
+            l, a, b = args
+            return f"slice(({l}), ({a}), ({b}) - ({a}) + 1)"
+
+        return self._map_calls(self._LIST_SLICE_RE, translate, sql)
 
     @staticmethod
     def _range_seq_sql(a: str, b: str, s: str) -> str:
@@ -1351,12 +1319,8 @@ class SqlRewriter:
         """Scalar/FROM-position range(…) → guarded sequence() (exclusive
         stop, direction-checked step). FROM range(n) exposes the DuckDB
         column name ``range``."""
-        pos = 0
-        while True:
-            hit = self._call_args(self._RANGE_CALL_RE, sql, pos)
-            if not hit:
-                return sql
-            m, close, args = hit
+
+        def translate(m, args):
             # window frames (`RANGE BETWEEN …`) have no '(' right after
             # RANGE, so any match here is the function form.
             if len(args) == 1:
@@ -1366,8 +1330,7 @@ class SqlRewriter:
             elif len(args) == 3:
                 a, b, s = args
             else:
-                pos = m.end()
-                continue
+                return None
             if re.search(r"(?i)\binterval\b", s):
                 # temporal range (batch-13): DuckDB's stop stays EXCLUSIVE
                 # and the result is TIMESTAMP even for DATE bounds;
@@ -1380,13 +1343,11 @@ class SqlRewriter:
                 )
             else:
                 seq = self._range_seq_sql(a, b, s)
-            head = sql[: m.start()]
-            if re.search(r"(?is)\b(from|join)\s*$", head):
-                repl = f"(SELECT explode({seq}) AS range)"
-            else:
-                repl = seq
-            sql = head + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
+            if re.search(r"(?is)\b(from|join)\s*$", m.string[: m.start()]):
+                return f"(SELECT explode({seq}) AS range)"
+            return seq
+
+        return self._map_calls(self._RANGE_CALL_RE, translate, sql)
 
     _FMT_SPEC_RE = re.compile(
         r"^(?:(?P<fill>.)?(?P<align>[<>^]))?(?P<sign>[+ ]?)(?P<alt>#?)"
@@ -1464,17 +1425,13 @@ class SqlRewriter:
         ({:.2f}, {:>6}, {:06.1f}, {:x}, {:,}, {:+.1f}, {:o}, {:e},
         {:b} via conv) with spec-driven argument casts. Only literal
         format strings translate; fmt/Java disagreements raise."""
-        hit = self._call_args(self._FORMAT_RE, sql)
-        if not hit:
-            return sql
-        m, close, args = hit
-        tail = self._rewrite_format(sql[close + 1 :])
-        fmt = self._lit_parse(args[0]) if args else None
+        return self._map_calls(self._FORMAT_RE, self._translate_format, sql)
+
+    def _translate_format(self, m, args: list[str]) -> str:
+        fmt = self._lit_parse(args[0])
         if fmt is None:
             raise UQueryError.sql_error("format() requires a literal format string")
-        # recurse into value args: a NESTED format() stayed untranslated
-        # (round-10 self-nesting sweep — same class as list_distinct)
-        vals = [self._rewrite_format(a) for a in args[1:]]
+        vals = args[1:]
         casts: dict[int, str] = {}
         wraps: dict[int, str] = {}
 
@@ -1597,7 +1554,7 @@ class SqlRewriter:
             else:
                 final_args.append(v)
         rest = "".join(f", {a}" for a in final_args)
-        return sql[: m.start()] + f"format_string({lit}{rest})" + tail
+        return f"format_string({lit}{rest})"
 
     _DATE_DIFF_UNITS = {
         "day": "CAST(datediff(CAST(({b}) AS DATE), CAST(({a}) AS DATE)) AS BIGINT)",
@@ -1632,23 +1589,21 @@ class SqlRewriter:
         unit maps to explicit truncate-then-diff arithmetic. 2-arg
         Spark-style datediff has no leading string literal and is left
         untouched."""
-        hit = self._call_args(self._DATE_DIFF3_RE, sql)
-        if not hit:
-            return sql
-        m, close, args = hit
-        tail = self._rewrite_date_diff(sql[close + 1 :])
-        if len(args) != 3:
-            raise UQueryError.sql_error("date_diff('unit', start, end) expects 3 args")
-        unit = (self._lit_parse(args[0]) or "").lower().rstrip("s")
-        unit = {"min": "minute", "sec": "second", "mon": "month", "yr": "year"}.get(unit, unit)
-        template = self._DATE_DIFF_UNITS.get(unit)
-        if template is None:
-            raise UQueryError.sql_error(
-                f"date_diff: unsupported unit '{unit}' "
-                f"(supported: {sorted(self._DATE_DIFF_UNITS)})"
-            )
-        a, b = self._rewrite_date_diff(args[1]), self._rewrite_date_diff(args[2])
-        return sql[: m.start()] + template.format(a=a, b=b) + tail
+
+        def translate(m, args):
+            if len(args) != 3:
+                raise UQueryError.sql_error("date_diff('unit', start, end) expects 3 args")
+            unit = (self._lit_parse(args[0]) or "").lower().rstrip("s")
+            unit = {"min": "minute", "sec": "second", "mon": "month", "yr": "year"}.get(unit, unit)
+            template = self._DATE_DIFF_UNITS.get(unit)
+            if template is None:
+                raise UQueryError.sql_error(
+                    f"date_diff: unsupported unit '{unit}' "
+                    f"(supported: {sorted(self._DATE_DIFF_UNITS)})"
+                )
+            return template.format(a=args[1], b=args[2])
+
+        return self._map_calls(self._DATE_DIFF3_RE, translate, sql)
 
     def _rewrite_struct_literal(self, sql: str) -> str:
         """Bare DuckDB struct literal ``{'k': v, …}`` → named_struct
@@ -1694,14 +1649,13 @@ class SqlRewriter:
     def _rewrite_dayname(self, sql: str) -> str:
         """dayname/monthname → date_format full names (Spark's own
         dayname() returns the ABBREVIATED name — 'Mon' vs 'Monday')."""
-        hit = self._call_args(self._DAYNAME_RE, sql)
-        if not hit:
-            return sql
-        m, close, args = hit
-        tail = self._rewrite_dayname(sql[close + 1 :])
-        fmt = "EEEE" if m.group(1).lower() == "day" else "MMMM"
-        inner = self._rewrite_dayname(args[0]) if args else ""
-        return sql[: m.start()] + f"date_format(({inner}), '{fmt}')" + tail
+        return self._map_calls(
+            self._DAYNAME_RE,
+            lambda m, args: (
+                f"date_format(({args[0]}), '{'EEEE' if m.group(1).lower() == 'day' else 'MMMM'}')"
+            ),
+            sql,
+        )
 
     def _rewrite_epoch(self, sql: str) -> str:
         """epoch(ts) → fractional seconds as DOUBLE (DuckDB keeps the
@@ -1716,12 +1670,10 @@ class SqlRewriter:
         the argument is integral (Spark's timestamp_millis rejects
         STRING and TIMESTAMP outright, so the dispatch is unambiguous),
         else the extraction form."""
-        hit = self._call_args(self._EPOCH_RE, sql)
-        if not hit:
-            return sql
-        m, close, args = hit
-        tail = self._rewrite_epoch(sql[close + 1 :])
-        x = self._rewrite_epoch(args[0]) if args else ""
+        return self._map_calls(self._EPOCH_RE, self._translate_epoch, sql)
+
+    def _translate_epoch(self, m, args: list[str]) -> str:
+        x = args[0]
         ts = f"CAST(({x}) AS TIMESTAMP)"
         suffix = (m.group(1) or "").lower()
         # round 8: epoch(TIME) = seconds since midnight — the TIME type
@@ -1731,7 +1683,7 @@ class SqlRewriter:
         t_ts = (
             f"CAST(CONCAT('1970-01-01 ', CAST(({x}) AS STRING)) AS TIMESTAMP)"
         )
-        repl = {
+        return {
             # marker semantics: uq_poly(fallback, preferred) — the
             # SECOND arm wins when it analyzes, so the native timestamp
             # form sits second and the TIME detour first
@@ -1743,7 +1695,6 @@ class SqlRewriter:
             "_us": f"unix_micros({ts})",
             "_ns": f"(unix_micros({ts}) * 1000)",
         }[suffix]
-        return sql[: m.start()] + repl + tail
 
     _IGN_NULLS_FN_RE = re.compile(
         r"(?i)\b(first_value|last_value|nth_value|lead|lag|any_value)\s*\("
@@ -1757,28 +1708,15 @@ class SqlRewriter:
         the opposite (round-11 wave-7 probe: every arg-internal form
         was a loud parse error). Relocate the keyword outside the
         closing paren; argument text is otherwise untouched."""
-        pos = 0
-        while True:
-            hit = self._call_args(self._IGN_NULLS_FN_RE, sql, pos)
-            if not hit:
-                return sql
-            m, close, args = hit
+
+        def translate(m, args):
             tm = self._IGN_NULLS_TAIL_RE.search(args[-1])
             if not tm:
-                # advance past the name, not the call: an arg-internal
-                # IGNORE NULLS nested inside another candidate call
-                # (lead(coalesce(v, first_value(x IGNORE NULLS))))
-                # must still be found (ADVICE r12)
-                pos = m.end()
-                continue
+                return None
             args[-1] = args[-1][: tm.start()].rstrip()
-            repl = (
-                m.group(0)
-                + ", ".join(args)
-                + f") {tm.group(1).upper()} NULLS"
-            )
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
+            return m.group(0) + ", ".join(args) + f") {tm.group(1).upper()} NULLS"
+
+        return self._map_calls(self._IGN_NULLS_FN_RE, translate, sql)
 
     @staticmethod
     def _ordered_spec(over: str | None) -> bool:
@@ -1814,80 +1752,75 @@ class SqlRewriter:
             (self._MEDIAN_RE, "median"),
             (self._QUANTILE_RE, "quantile"),
         ):
-            pos = 0
-            while True:
-                hit = self._call_args(regex, sql, pos)
-                if not hit:
-                    break
-                m, close, args = hit
-                filt, over, endpos = self._nested_agg_over(sql, close, kind)
-                if not self._ordered_spec(over):
-                    pos = m.end()
-                    continue
-                if re.match(r"(?i)^\s*distinct\b", args[0]):
-                    raise UQueryError.sql_error(
-                        "quantile/median with DISTINCT is not supported"
-                    )
-                x = args[0]
-                if filt is not None:
-                    x = f"CASE WHEN {filt} THEN ({x}) END"
-                if kind == "median":
-                    if len(args) != 1:
-                        raise UQueryError.sql_error("median expects 1 argument")
-                    q = None
-                else:
-                    if len(args) != 2:
-                        raise UQueryError.sql_error(
-                            "quantile*: only the (expr, scalar_quantile) form is supported"
-                        )
-                    q = args[1]
-                cl = (
-                    f"array_sort(collect_list(CAST((({x}) * 1.0) AS DOUBLE)) "
-                    f"OVER {over})"
-                )
-                if kind == "median":
-                    body = self._median_of("uq_qw")
-                elif (m.group(1) or "_disc").lower() == "_cont":
-                    idx = f"(({q}) * (size(uq_qw) - 1))"
-                    lo = f"CAST(floor({idx}) AS INT)"
-                    body = (
-                        f"CASE WHEN {idx} = floor({idx}) "
-                        f"THEN try_element_at(uq_qw, {lo} + 1) "
-                        f"ELSE try_element_at(uq_qw, {lo} + 1) "
-                        f"+ (try_element_at(uq_qw, {lo} + 2) "
-                        f"- try_element_at(uq_qw, {lo} + 1)) "
-                        f"* ({idx} - floor({idx})) END"
-                    )
-                else:
-                    # disc rule: smallest index i with i/n >= q, i.e.
-                    # max(1, ceil(q*n)) — probed on seven (n, q) pairs
-                    # incl. the n=3, q=0.75 case that falsified a
-                    # floor(q*(n-1))+1 draft
-                    body = (
-                        f"try_element_at(uq_qw, greatest(1, "
-                        f"CAST(ceil(({q}) * size(uq_qw)) AS INT)))"
-                    )
-                # LET-bind the sorted list once (the r7 lambda-invariant
-                # lesson): zero and finish lambdas each evaluate once.
-                repl = (
-                    f"(aggregate(array(0), {cl}, (uq_qa, uq_qi) -> uq_qa, "
-                    f"uq_qw -> CASE WHEN size(uq_qw) = 0 THEN NULL "
-                    f"ELSE ({body}) END))"
-                )
-                sql = sql[: m.start()] + repl + sql[endpos + 1 :]
-                pos = m.start() + len(repl)
+            sql = self._map_calls(
+                regex, lambda m, a, k=kind: self._translate_window_percentile(m, a, k), sql
+            )
         return sql
+
+    def _translate_window_percentile(self, m, args: list[str], kind: str):
+        filt, over, endpos = self._nested_agg_over(m.string, self._close_of(m), kind)
+        if not self._ordered_spec(over):
+            return None
+        if re.match(r"(?i)^\s*distinct\b", args[0]):
+            raise UQueryError.sql_error(
+                "quantile/median with DISTINCT is not supported"
+            )
+        x = args[0]
+        if filt is not None:
+            x = f"CASE WHEN {filt} THEN ({x}) END"
+        if kind == "median":
+            if len(args) != 1:
+                raise UQueryError.sql_error("median expects 1 argument")
+            q = None
+        else:
+            if len(args) != 2:
+                raise UQueryError.sql_error(
+                    "quantile*: only the (expr, scalar_quantile) form is supported"
+                )
+            q = args[1]
+        cl = (
+            f"array_sort(collect_list(CAST((({x}) * 1.0) AS DOUBLE)) "
+            f"OVER {over})"
+        )
+        if kind == "median":
+            body = self._median_of("uq_qw")
+        elif (m.group(1) or "_disc").lower() == "_cont":
+            idx = f"(({q}) * (size(uq_qw) - 1))"
+            lo = f"CAST(floor({idx}) AS INT)"
+            body = (
+                f"CASE WHEN {idx} = floor({idx}) "
+                f"THEN try_element_at(uq_qw, {lo} + 1) "
+                f"ELSE try_element_at(uq_qw, {lo} + 1) "
+                f"+ (try_element_at(uq_qw, {lo} + 2) "
+                f"- try_element_at(uq_qw, {lo} + 1)) "
+                f"* ({idx} - floor({idx})) END"
+            )
+        else:
+            # disc rule: smallest index i with i/n >= q, i.e.
+            # max(1, ceil(q*n)) — probed on seven (n, q) pairs
+            # incl. the n=3, q=0.75 case that falsified a
+            # floor(q*(n-1))+1 draft
+            body = (
+                f"try_element_at(uq_qw, greatest(1, "
+                f"CAST(ceil(({q}) * size(uq_qw)) AS INT)))"
+            )
+        # LET-bind the sorted list once (the r7 lambda-invariant
+        # lesson): zero and finish lambdas each evaluate once.
+        repl = (
+            f"(aggregate(array(0), {cl}, (uq_qa, uq_qi) -> uq_qa, "
+            f"uq_qw -> CASE WHEN size(uq_qw) = 0 THEN NULL "
+            f"ELSE ({body}) END))"
+        )
+        return repl, endpos
 
     def _rewrite_quantile(self, sql: str) -> str:
         """quantile_cont/quantile_disc/quantile(x, q) → Spark's ordered-
         set percentile_cont/percentile_disc (bare quantile is DISC in
         DuckDB). List-of-quantiles forms are not translated (array
         result would violate the scalar-column convention anyway)."""
-        hit = self._call_args(self._QUANTILE_RE, sql)
-        if not hit:
-            return sql
-        m, close, args = hit
-        tail = self._rewrite_quantile(sql[close + 1 :])
+        return self._map_calls(self._QUANTILE_RE, self._translate_quantile, sql)
+
+    def _translate_quantile(self, m, args: list[str]) -> str:
         if len(args) != 2:
             raise UQueryError.sql_error(
                 "quantile*: only the (expr, scalar_quantile) form is supported"
@@ -1902,13 +1835,8 @@ class SqlRewriter:
             raise UQueryError.sql_error(
                 "quantile/median with DISTINCT is not supported"
             )
-        x = self._rewrite_quantile(args[0])
         fn = "percentile_cont" if kind == "_cont" else "percentile_disc"
-        return (
-            sql[: m.start()]
-            + f"{fn}({args[1]}) WITHIN GROUP (ORDER BY ({x}))"
-            + tail
-        )
+        return f"{fn}({args[1]}) WITHIN GROUP (ORDER BY ({args[0]}))"
 
     def _rewrite_product(self, sql: str) -> str:
         """product(x) aggregate → sequential double fold over ONE
@@ -1934,47 +1862,44 @@ class SqlRewriter:
         products are deterministic run-to-run (collection order varies
         with partitioning; the sign and integer-exact results are
         order-independent, so sorting cannot change them)."""
-        hit = self._call_args(self._PRODUCT_RE, sql)
-        if not hit:
-            return sql
-        m, close, args = hit
-        filt, over, endpos = self._nested_agg_over(sql, close, "product")
-        osuf = f" OVER {over}" if over else ""
-        tail = self._rewrite_product(sql[endpos + 1 :])
-        x = self._rewrite_product(args[0]) if args else ""
-        if filt is not None:
-            x = f"CASE WHEN {filt} THEN ({x}) END"
-        cl = f"array_sort(collect_list(CAST(({x}) AS DOUBLE)){osuf})"
-        repl = (
-            f"(CASE WHEN size({cl}) = 0 THEN CAST(NULL AS DOUBLE) "
-            f"ELSE aggregate({cl}, CAST(1 AS DOUBLE), "
-            f"(uq_pa, uq_px) -> uq_pa * uq_px) END)"
-        )
-        return sql[: m.start()] + repl + tail
+
+        def translate(m, args):
+            filt, over, endpos = self._nested_agg_over(m.string, self._close_of(m), "product")
+            osuf = f" OVER {over}" if over else ""
+            x = args[0]
+            if filt is not None:
+                x = f"CASE WHEN {filt} THEN ({x}) END"
+            cl = f"array_sort(collect_list(CAST(({x}) AS DOUBLE)){osuf})"
+            repl = (
+                f"(CASE WHEN size({cl}) = 0 THEN CAST(NULL AS DOUBLE) "
+                f"ELSE aggregate({cl}, CAST(1 AS DOUBLE), "
+                f"(uq_pa, uq_px) -> uq_pa * uq_px) END)"
+            )
+            return repl, endpos
+
+        return self._map_calls(self._PRODUCT_RE, translate, sql)
 
     def _rewrite_time_bucket(self, sql: str) -> str:
         """time_bucket(INTERVAL n unit, ts) → epoch-aligned floor
         (timestamp_millis of unix_millis div width). Sub-week units only:
         they are origin-independent, while DuckDB aligns week+ buckets to
         2000-01-03 — raise rather than mis-bucket those."""
-        hit = self._call_args(self._TIME_BUCKET_RE, sql)
-        if not hit:
-            return sql
-        m, close, args = hit
-        tail = self._rewrite_time_bucket(sql[close + 1 :])
-        if len(args) != 2:
-            raise UQueryError.sql_error("time_bucket expects (INTERVAL, ts)")
-        im = self._INTERVAL_LIT_RE.match(args[0])
-        unit_ms = im and self._BUCKET_MS.get(im.group(2).lower())
-        if not unit_ms:
-            raise UQueryError.sql_error(
-                f"time_bucket: unsupported width '{args[0]}' "
-                "(literal INTERVAL n second/minute/hour/day only)"
-            )
-        w = int(im.group(1)) * unit_ms
-        ts = f"CAST(({self._rewrite_time_bucket(args[1])}) AS TIMESTAMP)"
-        repl = f"timestamp_millis((unix_millis({ts}) div {w}) * {w})"
-        return sql[: m.start()] + repl + tail
+
+        def translate(m, args):
+            if len(args) != 2:
+                raise UQueryError.sql_error("time_bucket expects (INTERVAL, ts)")
+            im = self._INTERVAL_LIT_RE.match(args[0])
+            unit_ms = im and self._BUCKET_MS.get(im.group(2).lower())
+            if not unit_ms:
+                raise UQueryError.sql_error(
+                    f"time_bucket: unsupported width '{args[0]}' "
+                    "(literal INTERVAL n second/minute/hour/day only)"
+                )
+            w = int(im.group(1)) * unit_ms
+            ts = f"CAST(({args[1]}) AS TIMESTAMP)"
+            return f"timestamp_millis((unix_millis({ts}) div {w}) * {w})"
+
+        return self._map_calls(self._TIME_BUCKET_RE, translate, sql)
 
     # -- sweep batch 4: JSON extraction, ISO-week datetimes, interval
     # constructors --------------------------------------------------------
@@ -1999,15 +1924,12 @@ class SqlRewriter:
         strings, bare 7 for numbers); json_extract_string /
         json_extract_path_text → get_json_object (raw text). A literal
         JSONPointer path ('/a/b') converts to $-path."""
-        hit = self._call_args(self._JSON_EXTRACT_RE, sql)
-        if not hit:
-            return sql
-        m, close, args = hit
-        tail = self._rewrite_json_extract(sql[close + 1 :])
+        return self._map_calls(self._JSON_EXTRACT_RE, self._translate_json_extract, sql)
+
+    def _translate_json_extract(self, m, args: list[str]) -> str:
         if len(args) != 2:
             raise UQueryError.sql_error("json_extract expects (json, path)")
-        j = self._rewrite_json_extract(args[0])
-        p = args[1]
+        j, p = args
         # round 11 (wave-8): a LIST of paths returns a LIST of
         # extractions ([$.a, $.b] → ['1', '2'] — DuckDB-probed). The
         # bracket pass has usually rewritten the literal to array(…)
@@ -2037,7 +1959,7 @@ class SqlRewriter:
                 for e in elems
                 if e.strip()
             )
-            return sql[: m.start()] + f"array({parts})" + tail
+            return f"array({parts})"
         lit = self._lit_parse(p)
         if lit is not None and lit.startswith("/"):
             # JSONPointer '/a/b' → JSONPath '$.a.b' (object keys only)
@@ -2047,16 +1969,14 @@ class SqlRewriter:
             # loud error): Spark's path engines reject it → exact-
             # semantics UDF walk (uq_json_extract_fe; probed: [#-0] is
             # the FIRST element, out-of-range and JSON null → NULL)
-            repl = f"{fe_udf}(CAST(({j}) AS STRING), {p})"
-        elif m.group(1):  # _string / _path_text: raw text extraction
-            repl = f"get_json_object(({j}), {p})"
-        else:
-            # nullif: a JSON null VALUE extracts to SQL NULL like DuckDB
-            # (probed IS NULL = true; round 12 — the bare to_json
-            # rendered 'null' text, a silent wrong value; a JSON STRING
-            # "null" renders quoted, so it is untouched)
-            repl = f"nullif(to_json(variant_get(parse_json(({j})), {p})), 'null')"
-        return sql[: m.start()] + repl + tail
+            return f"{fe_udf}(CAST(({j}) AS STRING), {p})"
+        if m.group(1):  # _string / _path_text: raw text extraction
+            return f"get_json_object(({j}), {p})"
+        # nullif: a JSON null VALUE extracts to SQL NULL like DuckDB
+        # (probed IS NULL = true; round 12 — the bare to_json
+        # rendered 'null' text, a silent wrong value; a JSON STRING
+        # "null" renders quoted, so it is untouched)
+        return f"nullif(to_json(variant_get(parse_json(({j})), {p})), 'null')"
 
     _JSON_ARR_LEN_RE = re.compile(r"(?i)\bjson_array_length\s*\(")
 
@@ -2069,20 +1989,11 @@ class SqlRewriter:
         and a missing/json-null path stay NULL. 2-arg counts the array
         AT the path (round-11 wave-8); a [#-n] from-end path routes
         through the UDF walk like json_extract."""
-        pos = 0
-        while True:
-            hit = self._call_args(self._JSON_ARR_LEN_RE, sql, pos)
-            if not hit:
-                return sql
-            m, close, args = hit
+
+        def translate(m, args):
             if len(args) not in (1, 2) or not args[0].strip():
-                pos = m.end()
-                continue
-            # recurse into the argument FIRST — the replacement embeds
-            # the arg text verbatim and the scan skips past it, so a
-            # nested json_array_length inside would otherwise survive
-            # untranslated (the round-12 skip-path class, other side)
-            j = self._rewrite_json_array_length(args[0])
+                return None
+            j = args[0]
             # NB: `parse_json(j) IS NULL` would NOT restore the loud
             # malformed error — parse_json is null-intolerant, so the
             # optimizer collapses the IsNull to `j IS NULL` without
@@ -2090,49 +2001,40 @@ class SqlRewriter:
             # optimization and forces the parse (raising like DuckDB).
             parse_0 = f"IF(length(to_json(parse_json(({j})))) >= 0, 0, 0)"
             if len(args) == 1:
-                repl = (
+                return (
                     f"(CASE WHEN ({j}) IS NULL THEN CAST(NULL AS INT) "
                     f"ELSE coalesce(json_array_length(({j})), {parse_0}) END)"
                 )
-            else:
-                plit = self._lit_parse(args[1].strip())
-                if plit is not None and "[#-" in plit:
-                    from .functions.parity_udfs import register_parity_udfs
+            plit = self._lit_parse(args[1].strip())
+            if plit is not None and "[#-" in plit:
+                from .functions.parity_udfs import register_parity_udfs
 
-                    register_parity_udfs(self.spark)
-                    inner = f"uq_json_extract_fe(CAST(({j}) AS STRING), {args[1]})"
-                else:
-                    inner = f"get_json_object(({j}), {args[1]})"
-                repl = (
-                    f"(CASE WHEN ({j}) IS NULL THEN CAST(NULL AS INT) "
-                    f"WHEN ({inner}) IS NULL THEN nullif({parse_0}, 0) "
-                    f"ELSE coalesce(json_array_length({inner}), {parse_0}) END)"
-                )
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
+                register_parity_udfs(self.spark)
+                inner = f"uq_json_extract_fe(CAST(({j}) AS STRING), {args[1]})"
+            else:
+                inner = f"get_json_object(({j}), {args[1]})"
+            return (
+                f"(CASE WHEN ({j}) IS NULL THEN CAST(NULL AS INT) "
+                f"WHEN ({inner}) IS NULL THEN nullif({parse_0}, 0) "
+                f"ELSE coalesce(json_array_length({inner}), {parse_0}) END)"
+            )
+
+        return self._map_calls(self._JSON_ARR_LEN_RE, translate, sql)
 
     def _rewrite_json_valid(self, sql: str) -> str:
-        hit = self._call_args(self._JSON_VALID_RE, sql)
-        if not hit:
-            return sql
-        m, close, args = hit
-        tail = self._rewrite_json_valid(sql[close + 1 :])
-        j = self._rewrite_json_valid(args[0]) if args else ""
-        return sql[: m.start()] + f"(try_parse_json(({j})) IS NOT NULL)" + tail
+        return self._map_calls(
+            self._JSON_VALID_RE, lambda m, args: f"(try_parse_json(({args[0]})) IS NOT NULL)", sql
+        )
 
     def _rewrite_iso_datetime(self, sql: str) -> str:
         """ISO-week family: isodow (Mon=1..Sun=7), week (ISO week),
         yearweek (ISO year*100 + week), century — each as explicit
         arithmetic over Spark's dayofweek/weekofyear/YEAROFWEEK."""
-        hit = self._call_args(self._ISO_DT_RE, sql)
-        if not hit:
-            return sql
-        m, close, args = hit
-        tail = self._rewrite_iso_datetime(sql[close + 1 :])
-        x = self._rewrite_iso_datetime(args[0]) if args else ""
-        d = f"CAST(({x}) AS DATE)"
-        fn = m.group(1).lower()
-        repl = {
+        return self._map_calls(self._ISO_DT_RE, self._translate_iso_datetime, sql)
+
+    def _translate_iso_datetime(self, m, args: list[str]) -> str:
+        d = f"CAST(({args[0]}) AS DATE)"
+        return {
             "isodow": f"CAST(pmod(dayofweek({d}) + 5, 7) + 1 AS BIGINT)",
             "week": f"CAST(weekofyear({d}) AS BIGINT)",
             "yearweek": (
@@ -2143,20 +2045,17 @@ class SqlRewriter:
             # century (1994 -> 2, 2000 -> 2, 2001 -> 3 — verified)
             "decade": f"CAST(floor(year({d}) / 10.0) AS BIGINT)",
             "millennium": f"CAST(ceil(year({d}) / 1000.0) AS BIGINT)",
-        }[fn]
-        return sql[: m.start()] + repl + tail
+        }[m.group(1).lower()]
 
     def _rewrite_to_interval(self, sql: str) -> str:
         """to_days/to_hours/… interval constructors → make_interval with
         the value in the matching slot; sub-second units scale into the
         seconds slot, multi-unit ones (decades/centuries/millennia/
         quarters) into years/months (round-10 wave-4 close)."""
-        hit = self._call_args(self._TO_INTERVAL_RE, sql)
-        if not hit:
-            return sql
-        m, close, args = hit
-        tail = self._rewrite_to_interval(sql[close + 1 :])
-        n = self._rewrite_to_interval(args[0]) if args else "0"
+        return self._map_calls(self._TO_INTERVAL_RE, self._translate_to_interval, sql)
+
+    def _translate_to_interval(self, m, args: list[str]) -> str:
+        n = args[0]
         unit = m.group(1).lower()
         scaled = {
             "milliseconds": ("seconds", f"({n}) / 1000.0"),
@@ -2169,7 +2068,7 @@ class SqlRewriter:
         unit, val = scaled.get(unit, (unit, f"({n})"))
         slots = ["0"] * 7
         slots[self._MAKE_INTERVAL_SLOT[unit]] = f"({val})"
-        return sql[: m.start()] + f"make_interval({', '.join(slots)})" + tail
+        return f"make_interval({', '.join(slots)})"
 
     # -- sweep batch 5: sha256, char-set trims ----------------------------
 
@@ -2177,13 +2076,7 @@ class SqlRewriter:
     _TRIM2_RE = re.compile(r"(?i)\b([lr]?)trim\s*\(")
 
     def _rewrite_sha256(self, sql: str) -> str:
-        hit = self._call_args(self._SHA256_RE, sql)
-        if not hit:
-            return sql
-        m, close, args = hit
-        tail = self._rewrite_sha256(sql[close + 1 :])
-        x = self._rewrite_sha256(args[0]) if args else ""
-        return sql[: m.start()] + f"sha2(({x}), 256)" + tail
+        return self._map_calls(self._SHA256_RE, lambda m, args: f"sha2(({args[0]}), 256)", sql)
 
     def _rewrite_trim_chars(self, sql: str) -> str:
         """2-arg ltrim/rtrim/trim(string, charset) → TRIM(LEADING/
@@ -2191,21 +2084,14 @@ class SqlRewriter:
         the arguments in the OPPOSITE order (trimStr first), which
         silently trims the wrong operand — bare 2-arg trim() included
         (batch-18 find). 1-arg forms are identical and left alone."""
-        pos = 0
-        while True:
-            hit = self._call_args(self._TRIM2_RE, sql, pos)
-            if not hit:
-                return sql
-            m, close, args = hit
+
+        def translate(m, args):
             if len(args) != 2:
-                pos = m.end()
-                continue
+                return None
             side = {"l": "LEADING", "r": "TRAILING", "": "BOTH"}[m.group(1).lower()]
-            s = self._rewrite_trim_chars(args[0])
-            c = self._rewrite_trim_chars(args[1])
-            repl = f"TRIM({side} {c} FROM ({s}))"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
+            return f"TRIM({side} {args[1]} FROM ({args[0]}))"
+
+        return self._map_calls(self._TRIM2_RE, translate, sql)
 
     # -- sweep batch 6: quantified comparisons, ordered first/last,
     # struct_extract, list_has_all, divide/xor ----------------------------
@@ -2237,32 +2123,24 @@ class SqlRewriter:
         ALL(arr)`` → forall(...). Subquery operands map to IN / NOT IN
         where semantics allow (= ANY, <>/!= ALL); other op+subquery
         combinations raise. Simple-identifier left operands only."""
-        pos = 0
-        while True:
-            m = self._search_code(self._QUANT_CMP_RE, sql, pos)
-            if not m:
-                return sql
-            close = self._find_close(sql, m.end() - 1)
-            if close == -1:
-                return sql
-            inner = sql[m.end() : close].strip()
+
+        def translate(m, inner):
+            inner = inner.strip()
             lhs, op, q = m.group("lhs"), m.group("op"), m.group("q").upper()
             if op == "!=":
                 op = "<>"
             if re.match(r"(?is)^select\b", inner):
                 if op == "=" and q in ("ANY", "SOME"):
-                    repl = f"{lhs} IN ({inner})"
-                elif op == "<>" and q == "ALL":
-                    repl = f"{lhs} NOT IN ({inner})"
-                else:
-                    raise UQueryError.sql_error(
-                        f"{op} {q}(subquery) is not supported (only = ANY / <> ALL)"
-                    )
-            else:
-                fn = "forall" if q == "ALL" else "exists"
-                repl = f"{fn}(({inner}), uq_qe -> {lhs} {op} uq_qe)"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
+                    return f"{lhs} IN ({inner})"
+                if op == "<>" and q == "ALL":
+                    return f"{lhs} NOT IN ({inner})"
+                raise UQueryError.sql_error(
+                    f"{op} {q}(subquery) is not supported (only = ANY / <> ALL)"
+                )
+            fn = "forall" if q == "ALL" else "exists"
+            return f"{fn}(({inner}), uq_qe -> {lhs} {op} uq_qe)"
+
+        return self._map_calls(self._QUANT_CMP_RE, translate, sql, raw=True)
 
     _B28_AGG_RE = re.compile(
         r"(?i)\b(arg_max|arg_min|argmax|argmin|max_by|min_by|avg|mean|corr)\s*\("
@@ -2280,15 +2158,10 @@ class SqlRewriter:
         emission buffers each group's values (collect_list) where
         DuckDB keeps a bounded heap — fine for the grouped-top-n shapes
         it serves; a corpus-wide top-n belongs to TakeOrdered queries."""
-        pos = 0
-        while True:
-            hit = self._call_args(self._TOPN_MINMAX_RE, sql, pos)
-            if not hit:
-                return sql
-            m, close, args = hit
+
+        def translate(m, args):
             if len(args) != 2 or not re.fullmatch(r"\+?\d+", args[1].strip()):
-                pos = m.end()
-                continue
+                return None
             x, n = args[0], args[1].strip()
             if int(n) < 1:
                 raise UQueryError.sql_error(
@@ -2297,11 +2170,11 @@ class SqlRewriter:
             body = f"array_sort(collect_list(({x})))"
             if m.group(1).lower() == "max":
                 body = f"reverse({body})"
-            repl = f"slice({body}, 1, {n})"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
+            return f"slice({body}, 1, {n})"
 
-    def _rewrite_b28_aggs(self, sql: str) -> str:
+        return self._map_calls(self._TOPN_MINMAX_RE, translate, sql)
+
+    def _rewrite_arg_max_avg_corr(self, sql: str) -> str:
         """Agg-fuzzer catches (batch 28, DuckDB-verified):
 
         - arg_max/arg_min (and their max_by/min_by spellings) SKIP rows
@@ -2316,75 +2189,71 @@ class SqlRewriter:
           DIVIDE_BY_ZERO error under Spark's ANSI mode → pairwise-
           complete covar_pop / (σx·σy) with try_divide.
         """
-        pos = 0
-        while True:
-            hit = self._call_args(self._B28_AGG_RE, sql, pos)
-            if not hit:
-                return sql
-            m, close, args = hit
-            fn = m.group(1).lower()
-            if fn in ("avg", "mean"):
-                if len(args) != 1:
-                    pos = m.end()
-                    continue
-                a = args[0].strip()
-                dm = re.match(r"(?i)^distinct\s+", a)
-                prefix, a = ("DISTINCT ", a[dm.end() :]) if dm else ("", a)
-                repl = f"avg({prefix}CAST(({a}) AS DOUBLE))"
-                # avg over INTERVAL is native in both engines and the
-                # DOUBLE cast fails analysis — poly-probe the cast form,
-                # native avg as fallback. Skipped when a call clause
-                # (OVER/FILTER/WITHIN) follows: the poly resolver
-                # parenthesizes its pick, which breaks `agg() OVER`
-                # syntax (interval window-avg stays a loud error).
-                if not re.match(r"(?i)\s*(over|filter|within)\b", sql[close + 1 :]):
-                    repl = f"uq_poly(avg({prefix}({a})), {repl})"
-            elif fn == "corr":
-                if len(args) != 2:
-                    pos = m.end()
-                    continue
-                x, y = args
-                repl = (
-                    f"try_divide(covar_pop(({x}), ({y})), "
-                    f"stddev_pop(IF(({y}) IS NULL, NULL, ({x}))) * "
-                    f"stddev_pop(IF(({x}) IS NULL, NULL, ({y}))))"
-                )
-            else:
-                desc = fn in ("arg_max", "argmax", "max_by")
-                if len(args) == 3:
-                    # DuckDB ≥1.1 top-n form (the reference pins 1.5.2):
-                    # arg_max(arg, val, n) = LIST of arg for the top-n
-                    # rows by val (val-descending; rows where EITHER arg
-                    # or val is NULL skip — DuckDB probe: arg_max(x, y)
-                    # over (NULL,30),(3,20),(5,10) returns 3, skipping
-                    # the NULL-arg row with the max val; the null struct
-                    # vanishes from collect_list, mirroring the 2-arg
-                    # emission's IF guard — ADVICE r12). n must be a
-                    # positive integer literal, like DuckDB's constant-n
-                    # requirement. Tie order among equal vals is
-                    # unspecified in DuckDB; here ties break by arg
-                    # (struct sort), deterministic.
-                    x, k, n = (a.strip() for a in args)
-                    if not re.fullmatch(r"\+?\d+", n) or int(n) < 1:
-                        raise UQueryError.sql_error(
-                            f"{fn}: n must be a positive integer constant"
-                        )
-                    pairs = (
-                        f"array_sort(collect_list(CASE WHEN ({k}) IS NULL "
-                        f"OR ({x}) IS NULL "
-                        f"THEN NULL ELSE struct(({k}) AS uq_k, ({x}) AS uq_v) END))"
+        return self._map_calls(self._B28_AGG_RE, self._translate_arg_max_avg_corr, sql)
+
+    def _translate_arg_max_avg_corr(self, m, args: list[str]) -> str | None:
+        fn = m.group(1).lower()
+        if fn in ("avg", "mean"):
+            if len(args) != 1:
+                return None
+            a = args[0].strip()
+            dm = re.match(r"(?i)^distinct\s+", a)
+            prefix, a = ("DISTINCT ", a[dm.end() :]) if dm else ("", a)
+            repl = f"avg({prefix}CAST(({a}) AS DOUBLE))"
+            # avg over INTERVAL is native in both engines and the
+            # DOUBLE cast fails analysis — poly-probe the cast form,
+            # native avg as fallback. Skipped when a call clause
+            # (OVER/FILTER/WITHIN) follows: the poly resolver
+            # parenthesizes its pick, which breaks `agg() OVER`
+            # syntax (interval window-avg stays a loud error).
+            if not re.match(
+                r"(?i)\s*(over|filter|within)\b", m.string[self._close_of(m) + 1 :]
+            ):
+                repl = f"uq_poly(avg({prefix}({a})), {repl})"
+        elif fn == "corr":
+            if len(args) != 2:
+                return None
+            x, y = args
+            repl = (
+                f"try_divide(covar_pop(({x}), ({y})), "
+                f"stddev_pop(IF(({y}) IS NULL, NULL, ({x}))) * "
+                f"stddev_pop(IF(({x}) IS NULL, NULL, ({y}))))"
+            )
+        else:
+            desc = fn in ("arg_max", "argmax", "max_by")
+            if len(args) == 3:
+                # DuckDB ≥1.1 top-n form (the reference pins 1.5.2):
+                # arg_max(arg, val, n) = LIST of arg for the top-n
+                # rows by val (val-descending; rows where EITHER arg
+                # or val is NULL skip — DuckDB probe: arg_max(x, y)
+                # over (NULL,30),(3,20),(5,10) returns 3, skipping
+                # the NULL-arg row with the max val; the null struct
+                # vanishes from collect_list, mirroring the 2-arg
+                # emission's IF guard — ADVICE r12). n must be a
+                # positive integer literal, like DuckDB's constant-n
+                # requirement. Tie order among equal vals is
+                # unspecified in DuckDB; here ties break by arg
+                # (struct sort), deterministic.
+                x, k, n = (a.strip() for a in args)
+                if not re.fullmatch(r"\+?\d+", n) or int(n) < 1:
+                    raise UQueryError.sql_error(
+                        f"{fn}: n must be a positive integer constant"
                     )
-                    if desc:
-                        pairs = f"reverse({pairs})"
-                    repl = f"slice(transform({pairs}, uq_s -> uq_s.uq_v), 1, {n})"
-                elif len(args) == 2:
-                    x, k = args
-                    out = "max_by" if desc else "min_by"
-                    repl = f"{out}(({x}), IF(({x}) IS NULL, NULL, ({k})))"
-                else:
-                    raise UQueryError.sql_error(f"{fn} expects (value, key[, n])")
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
+                pairs = (
+                    f"array_sort(collect_list(CASE WHEN ({k}) IS NULL "
+                    f"OR ({x}) IS NULL "
+                    f"THEN NULL ELSE struct(({k}) AS uq_k, ({x}) AS uq_v) END))"
+                )
+                if desc:
+                    pairs = f"reverse({pairs})"
+                repl = f"slice(transform({pairs}, uq_s -> uq_s.uq_v), 1, {n})"
+            elif len(args) == 2:
+                x, k = args
+                out = "max_by" if desc else "min_by"
+                repl = f"{out}(({x}), IF(({x}) IS NULL, NULL, ({k})))"
+            else:
+                raise UQueryError.sql_error(f"{fn} expects (value, key[, n])")
+        return repl
 
     def _rewrite_first_last_order(self, sql: str) -> str:
         """DuckDB ``first/last(x ORDER BY y [DESC])`` → min_by/max_by
@@ -2394,77 +2263,64 @@ class SqlRewriter:
         CASE WHEN x IS NOT NULL so min_by/max_by ignore NULL-x rows
         (they skip NULL ordering keys), reproducing first-NON-NULL-in-
         order exactly."""
-        pos = 0
-        while True:
-            hit = self._call_args(self._FIRST_LAST_RE, sql, pos)
-            if not hit:
-                return sql
-            m, close, args = hit
-            inner = sql[m.end() : close]
-            split = re.split(r"(?i)\border\s+by\b", inner, maxsplit=1)
-            if len(split) != 2 or len(args) != 1:
-                pos = m.end()
-                continue
-            x, order = split[0].strip().rstrip(","), split[1].strip()
-            nf = re.search(r"(?i)\bnulls\s+(first|last)\s*$", order)
-            nulls_last = True  # DuckDB default, both directions
-            if nf:
-                nulls_last = nf.group(1).lower() == "last"
-                order = order[: nf.start()].strip()
-            desc = bool(re.search(r"(?i)\bdesc\s*$", order))
-            key = re.sub(r"(?i)\s+(asc|desc)\s*$", "", order)
-            fname = m.group(1).lower()
-            take_min = (fname != "last") != desc
-            fn = "min_by" if take_min else "max_by"
-            # batch 28 (agg-fuzzer catch): first/last KEEP NULL values —
-            # a NULL-key row at the ordering's end IS the `last` pick
-            # (the old bare min_by/max_by skipped NULL keys). The
-            # composite (null-rank, key) struct encodes the placement;
-            # any_value keeps its skip-NULL-x semantics via the CASE.
-            null_wins = (not nulls_last) if fname != "last" else nulls_last
-            # fn=min_by: null wins ⇔ flag -1; fn=max_by: null wins ⇔ +1
-            flag_null = -1 if (null_wins == (fn == "min_by")) else 1
-            composite = (
-                f"struct(IF(({key}) IS NULL, {flag_null}, 0) AS uq_nr, "
-                f"({key}) AS uq_k)"
-            )
-            if fname == "any_value":
-                key_expr = f"CASE WHEN ({x}) IS NOT NULL THEN {composite} END"
-            else:
-                key_expr = composite
-            repl = f"{fn}({x}, {key_expr})"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
+        return self._map_calls(self._FIRST_LAST_RE, self._translate_first_last, sql, raw=True)
+
+    def _translate_first_last(self, m, inner: str) -> str | None:
+        split = re.split(r"(?i)\border\s+by\b", inner, maxsplit=1)
+        if len(split) != 2 or len(self._split_top(inner, ",")) != 1:
+            return None
+        x, order = split[0].strip().rstrip(","), split[1].strip()
+        nf = re.search(r"(?i)\bnulls\s+(first|last)\s*$", order)
+        nulls_last = True  # DuckDB default, both directions
+        if nf:
+            nulls_last = nf.group(1).lower() == "last"
+            order = order[: nf.start()].strip()
+        desc = bool(re.search(r"(?i)\bdesc\s*$", order))
+        key = re.sub(r"(?i)\s+(asc|desc)\s*$", "", order)
+        fname = m.group(1).lower()
+        take_min = (fname != "last") != desc
+        fn = "min_by" if take_min else "max_by"
+        # batch 28 (agg-fuzzer catch): first/last KEEP NULL values —
+        # a NULL-key row at the ordering's end IS the `last` pick
+        # (the old bare min_by/max_by skipped NULL keys). The
+        # composite (null-rank, key) struct encodes the placement;
+        # any_value keeps its skip-NULL-x semantics via the CASE.
+        null_wins = (not nulls_last) if fname != "last" else nulls_last
+        # fn=min_by: null wins ⇔ flag -1; fn=max_by: null wins ⇔ +1
+        flag_null = -1 if (null_wins == (fn == "min_by")) else 1
+        composite = (
+            f"struct(IF(({key}) IS NULL, {flag_null}, 0) AS uq_nr, "
+            f"({key}) AS uq_k)"
+        )
+        if fname == "any_value":
+            key_expr = f"CASE WHEN ({x}) IS NOT NULL THEN {composite} END"
+        else:
+            key_expr = composite
+        return f"{fn}({x}, {key_expr})"
 
     def _rewrite_struct_extract(self, sql: str) -> str:
         """struct_extract(s, 'k') → (s).k (literal keys only)."""
-        hit = self._call_args(self._STRUCT_EXTRACT_RE, sql)
-        if not hit:
-            return sql
-        m, close, args = hit
-        tail = self._rewrite_struct_extract(sql[close + 1 :])
-        if len(args) != 2:
-            raise UQueryError.sql_error("struct_extract expects (struct, 'key')")
-        key = self._lit_parse(args[1])
-        if key is None or not re.fullmatch(r"\w+", key):
-            raise UQueryError.sql_error(
-                "struct_extract: only literal identifier keys are supported"
-            )
-        s = self._rewrite_struct_extract(args[0])
-        return sql[: m.start()] + f"(({s}).{key})" + tail
+
+        def translate(m, args):
+            if len(args) != 2:
+                raise UQueryError.sql_error("struct_extract expects (struct, 'key')")
+            key = self._lit_parse(args[1])
+            if key is None or not re.fullmatch(r"\w+", key):
+                raise UQueryError.sql_error(
+                    "struct_extract: only literal identifier keys are supported"
+                )
+            return f"(({args[0]}).{key})"
+
+        return self._map_calls(self._STRUCT_EXTRACT_RE, translate, sql)
 
     def _rewrite_list_has_all(self, sql: str) -> str:
-        hit = self._call_args(self._LIST_HAS_ALL_RE, sql)
-        if not hit:
-            return sql
-        m, close, args = hit
-        tail = self._rewrite_list_has_all(sql[close + 1 :])
-        if len(args) != 2:
-            raise UQueryError.sql_error("list_has_all expects (list, sublist)")
-        a = self._rewrite_list_has_all(args[0])
-        b = self._rewrite_list_has_all(args[1])
-        repl = f"forall(({b}), uq_he -> array_contains(({a}), uq_he))"
-        return sql[: m.start()] + repl + tail
+        def translate(m, args):
+            if len(args) != 2:
+                raise UQueryError.sql_error("list_has_all expects (list, sublist)")
+            a, b = args
+            return f"forall(({b}), uq_he -> array_contains(({a}), uq_he))"
+
+        return self._map_calls(self._LIST_HAS_ALL_RE, translate, sql)
 
     # -- sweep batch 7: explicit raises for untranslatable idioms ---------
 
@@ -2557,11 +2413,8 @@ class SqlRewriter:
         conv(hex, 16, 10) on Spark's own md5(), CAST to DECIMAL(20,0)
         because the unsigned values exceed BIGINT (width deviation:
         UBIGINT → DECIMAL(20,0), same digits)."""
-        while True:
-            hit = self._call_args(self._MD5_HALF_RE, sql)
-            if not hit:
-                break
-            m, close, args = hit
+
+        def md5_half(m, args):
             if len(args) != 1:
                 raise UQueryError.sql_error("md5_number_*: expects 1 argument")
             # hex chars of byte i (1-based) are (2i-1, 2i); little-endian
@@ -2572,27 +2425,22 @@ class SqlRewriter:
             pairs = ", ".join(
                 f"substr(md5(({args[0]})), {2 * b - 1}, 2)" for b in byte_range
             )
-            repl = f"CAST(conv(concat({pairs}), 16, 10) AS DECIMAL(20, 0))"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-        m = self._search_code(self._PARITY_FN_RE, sql)
-        if not m:
+            return f"CAST(conv(concat({pairs}), 16, 10) AS DECIMAL(20, 0))"
+
+        sql = self._map_calls(self._MD5_HALF_RE, md5_half, sql)
+        if not self._search_code(self._PARITY_FN_RE, sql):
             return sql
         from .functions.parity_udfs import register_parity_udfs
 
         register_parity_udfs(self.spark)
-        out, pos = [], 0
-        while m:
-            out.append(sql[pos : m.start()])
-            out.append(self._PARITY_FN_MAP[m.group(1).lower()] + "(")
-            pos = m.end()
-            m = self._search_code(self._PARITY_FN_RE, sql, pos)
-        out.append(sql[pos:])
-        return "".join(out)
+        return self._sub_code_fn(
+            self._PARITY_FN_RE, lambda m: self._PARITY_FN_MAP[m.group(1).lower()] + "(", sql
+        )
 
     # -- sweep batch 18 -----------------------------------------------------
 
     _TRIM_STD_RE = re.compile(
-        r"(?i)\btrim\s*\(\s*(both|leading|trailing)\b"
+        r"(?i)\btrim\s*\((?=\s*(both|leading|trailing)\b)"
     )
 
     def _rewrite_trim_std(self, sql: str) -> str:
@@ -2603,52 +2451,43 @@ class SqlRewriter:
         found by the sweep). Runs BEFORE _rewrite_path_tables and emits
         the DuckDB FUNCTION forms (trim/ltrim/rtrim(s[, chars])) so the
         batch-5 charset-order pass translates them uniformly."""
-        while True:
-            m = self._search_code(self._TRIM_STD_RE, sql)
-            if not m:
-                return sql
-            open_i = sql.index("(", m.start())
-            close = self._find_close(sql, open_i)
-            if close == -1:
-                return sql
-            inner = sql[open_i + 1 : close]
-            kw = m.group(1).lower()
-            rest = inner[re.search(r"(?i)\b" + kw, inner).end() :]
-            split = None
-            for s, e, _w in self._scan_top_level(rest, {"from"}):
-                split = (s, e)
-                break
-            if split is None:
-                raise UQueryError.sql_error(
-                    "TRIM: expected FROM in the standard form"
-                )
-            chars = rest[: split[0]].strip()
-            src = rest[split[1] :].strip()
-            fn = {"both": "trim", "leading": "ltrim", "trailing": "rtrim"}[kw]
-            # DuckDB-convention 2-arg order (string, chars) — the
-            # batch-5/18 charset pass reorders for Spark downstream
-            repl = f"{fn}(({src}), ({chars}))" if chars else f"{fn}(({src}))"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
+        return self._map_calls(self._TRIM_STD_RE, self._translate_trim_std, sql, raw=True)
+
+    def _translate_trim_std(self, m, inner: str) -> str:
+        kw = m.group(1).lower()
+        rest = inner[re.search(r"(?i)\b" + kw, inner).end() :]
+        split = None
+        for s, e, _w in self._scan_top_level(rest, {"from"}):
+            split = (s, e)
+            break
+        if split is None:
+            raise UQueryError.sql_error(
+                "TRIM: expected FROM in the standard form"
+            )
+        chars = rest[: split[0]].strip()
+        src = rest[split[1] :].strip()
+        fn = {"both": "trim", "leading": "ltrim", "trailing": "rtrim"}[kw]
+        # DuckDB-convention 2-arg order (string, chars) — the
+        # batch-5/18 charset pass reorders for Spark downstream
+        return f"{fn}(({src}), ({chars}))" if chars else f"{fn}(({src}))"
 
     _LIST_WHERE_RE = re.compile(r"(?i)\blist_where\s*\(")
 
     def _rewrite_list_where(self, sql: str) -> str:
         """Batch-18: ``list_where(l, mask)`` → mask-select via zipped
         structs (NULL mask entries drop the element, like DuckDB)."""
-        while True:
-            hit = self._call_args(self._LIST_WHERE_RE, sql)
-            if not hit:
-                return sql
-            m, close, args = hit
+
+        def translate(m, args):
             if len(args) != 2:
                 raise UQueryError.sql_error("list_where expects (list, mask)")
             l, mask = args
-            repl = (
+            return (
                 f"transform(filter(zip_with(({l}), ({mask}), "
                 f"(uq_we, uq_wm) -> struct(uq_we AS e, uq_wm AS m)), "
                 f"uq_ws -> uq_ws.m), uq_ws -> uq_ws.e)"
             )
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
+
+        return self._map_calls(self._LIST_WHERE_RE, translate, sql)
 
     # -- sweep batch 27: information_schema ---------------------------------
 
@@ -2770,18 +2609,16 @@ class SqlRewriter:
             "intersect", "using", "having", "qualify", "offset", "fetch",
             "asof", "positional", "semi", "anti",
         }
-        pos = 0
-        while True:
-            m = self._search_code(self._INFO_SCHEMA_RE, sql, pos)
-            if not m:
-                return sql
+
+        def translate(m):
             repl = emit(m.group(1).lower())
             # a user alias right after the reference replaces ours
-            nxt = re.match(r"\s+(as\s+)?([A-Za-z_]\w*)", sql[m.end() :])
+            nxt = re.match(r"\s+(as\s+)?([A-Za-z_]\w*)", m.string[m.end() :])
             if nxt and nxt.group(2).lower() not in stop_words:
                 repl = repl.rsplit(" AS ", 1)[0]
-            sql = sql[: m.start()] + repl + sql[m.end() :]
-            pos = m.start() + len(repl)
+            return repl
+
+        return self._sub_code_fn(self._INFO_SCHEMA_RE, translate, sql)
 
     # -- sweep batch 26: session DDL ----------------------------------------
 
@@ -3054,27 +2891,22 @@ class SqlRewriter:
         json writer. The input's type is dispatched per ROW-CONSTANT
         typeof() (the uq_duck_typename UDF), so one translation serves
         any operand type."""
-        pos = 0
-        while True:
-            hit = self._call_args(self._JSON_CAST_RE, sql, pos)
-            if not hit:
-                return sql
-            m, close, args = hit
-            parts = self._split_top(sql[m.end() : close], "as")
+
+        def translate(m, inner):
+            parts = self._split_top(inner, "as")
             if len(parts) != 2 or parts[1].strip().lower() != "json":
-                pos = m.end()
-                continue
+                return None
             x = parts[0].strip()
             from .functions.parity_udfs import register_parity_udfs
 
             register_parity_udfs(self.spark)
-            repl = (
+            return (
                 f"(CASE WHEN ({x}) IS NULL THEN CAST(NULL AS STRING) "
                 f"ELSE uq_json_cast(uq_duck_typename(typeof(({x}))), "
                 f"{self._jenc(x)}) END)"
             )
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
+
+        return self._map_calls(self._JSON_CAST_RE, translate, sql, raw=True)
 
     def _rewrite_interval_cast(self, sql: str) -> str:
         """``'1 day 2 hours'::INTERVAL`` / CAST(literal AS INTERVAL)
@@ -3085,23 +2917,17 @@ class SqlRewriter:
         literals error loudly in Spark's parser (DuckDB's calendar
         intervals admit them — documented). Non-literal operands stay
         native."""
-        pos = 0
-        while True:
-            hit = self._call_args(self._JSON_CAST_RE, sql, pos)
-            if not hit:
-                return sql
-            m, close, args = hit
-            parts = self._split_top(sql[m.end() : close], "as")
+
+        def translate(m, inner):
+            parts = self._split_top(inner, "as")
             if len(parts) != 2 or parts[1].strip().lower() != "interval":
-                pos = m.end()
-                continue
+                return None
             lit = self._lit_parse(parts[0].strip())
             if lit is None:
-                pos = m.end()
-                continue
-            repl = "INTERVAL '" + lit.replace("'", "''") + "'"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
+                return None
+            return "INTERVAL '" + lit.replace("'", "''") + "'"
+
+        return self._map_calls(self._JSON_CAST_RE, translate, sql, raw=True)
 
     # no lookahead needed to exclude INTERVAL '1' DAY — its quoted text
     # has no unit words, so the term parser below rejects it anyway
@@ -3124,50 +2950,45 @@ class SqlRewriter:
         anything the term parser doesn't fully consume (Spark then
         raises loudly). Quarters fold to 3 months; DuckDB's per-term
         sign convention ('-1 month 3 days') carries through."""
-        pos = 0
-        while True:
-            m = self._search_code(self._MIXED_IVL_RE, sql, pos)
-            if not m:
-                return sql
-            text = m.group(1)
-            slots = {"y": 0, "mo": 0, "w": 0, "d": 0, "h": 0, "mi": 0, "s": 0.0}
-            unit_of = {
-                "year": "y", "month": "mo", "mon": "mo", "quarter": "mo",
-                "week": "w", "day": "d", "hour": "h", "hr": "h",
-                "minute": "mi", "min": "mi", "second": "s", "sec": "s",
-                "millisecond": "s", "microsecond": "s",
-            }
-            rest, ok, ym, dt = text, True, False, False
-            while rest.strip():
-                t = self._IVL_TERM_RE.match(rest)
-                if not t:
-                    ok = False
-                    break
-                num, unit = float(t.group(1)), t.group(2).lower().rstrip("s")
-                if unit not in unit_of:
-                    ok = False
-                    break
-                slot = unit_of[unit]
-                if unit == "quarter":
-                    num *= 3
-                elif unit == "millisecond":
-                    num /= 1e3
-                elif unit == "microsecond":
-                    num /= 1e6
-                slots[slot] = slots[slot] + num
-                ym |= slot in ("y", "mo")
-                dt |= slot in ("w", "d", "h", "mi", "s")
-                rest = rest[t.end():]
-            if not ok or not (ym and dt):
-                pos = m.end()
-                continue
-            args = ", ".join(
-                str(int(slots[k])) if k != "s" else repr(slots["s"])
-                for k in ("y", "mo", "w", "d", "h", "mi", "s")
-            )
-            repl = f"make_interval({args})"
-            sql = sql[: m.start()] + repl + sql[m.end():]
-            pos = m.start() + len(repl)
+        return self._sub_code_fn(self._MIXED_IVL_RE, self._translate_mixed_interval, sql)
+
+    def _translate_mixed_interval(self, m) -> str:
+        text = m.group(1)
+        slots = {"y": 0, "mo": 0, "w": 0, "d": 0, "h": 0, "mi": 0, "s": 0.0}
+        unit_of = {
+            "year": "y", "month": "mo", "mon": "mo", "quarter": "mo",
+            "week": "w", "day": "d", "hour": "h", "hr": "h",
+            "minute": "mi", "min": "mi", "second": "s", "sec": "s",
+            "millisecond": "s", "microsecond": "s",
+        }
+        rest, ok, ym, dt = text, True, False, False
+        while rest.strip():
+            t = self._IVL_TERM_RE.match(rest)
+            if not t:
+                ok = False
+                break
+            num, unit = float(t.group(1)), t.group(2).lower().rstrip("s")
+            if unit not in unit_of:
+                ok = False
+                break
+            slot = unit_of[unit]
+            if unit == "quarter":
+                num *= 3
+            elif unit == "millisecond":
+                num /= 1e3
+            elif unit == "microsecond":
+                num /= 1e6
+            slots[slot] = slots[slot] + num
+            ym |= slot in ("y", "mo")
+            dt |= slot in ("w", "d", "h", "mi", "s")
+            rest = rest[t.end():]
+        if not ok or not (ym and dt):
+            return m.group(0)
+        args = ", ".join(
+            str(int(slots[k])) if k != "s" else repr(slots["s"])
+            for k in ("y", "mo", "w", "d", "h", "mi", "s")
+        )
+        return f"make_interval({args})"
 
     _PM_INTERVAL_RE = re.compile(r"([+\-])\s*(?=INTERVAL\b)", re.I)
 
@@ -3299,49 +3120,45 @@ class SqlRewriter:
         matched paths (column ``file``, sorted — DuckDB's listing
         order). Driver-side resolution rides the same sandbox as every
         read_* path."""
-        while True:
-            hit = self._call_args(self._GLOB_TVF_RE, sql)
-            if not hit:
-                return sql
-            m, close, args = hit
-            if len(args) != 1:
-                raise UQueryError.sql_error("glob expects one pattern")
-            pat = self._lit_parse(args[0].strip())
-            if pat is None:
-                raise UQueryError.sql_error("glob: pattern must be a literal")
-            self.check_path(pat)
-            import glob as _glob
+        return self._map_calls(self._GLOB_TVF_RE, self._translate_glob_tvf, sql)
 
-            files = sorted(_glob.glob(pat))
-            # a user alias after the call (`FROM glob('p') g` / `g(file)`,
-            # both DuckDB-accepted) replaces the synthetic one — a double
-            # alias is a Spark parse error. Same stop-word scan as
-            # _rewrite_information_schema.
-            stop_words = {
-                "on", "where", "group", "order", "limit", "join", "inner",
-                "left", "right", "full", "cross", "union", "except",
-                "intersect", "using", "having", "qualify", "offset",
-                "fetch", "asof", "positional", "semi", "anti",
-            }
-            nxt = re.match(r"\s+(?:as\s+)?([A-Za-z_]\w*)", sql[close + 1 :])
-            user_alias = bool(nxt) and nxt.group(1).lower() not in stop_words
-            if files:
-                rows = ", ".join(
-                    "('" + f.replace("'", "''") + "')" for f in files
-                )
-                body = f"(VALUES {rows}) AS uq_glob(file)"
-            else:
-                body = (
-                    "(SELECT CAST(NULL AS STRING) AS file WHERE false) "
-                    "AS uq_glob"
-                )
-            if user_alias:
-                # keep the column named `file` inside, let the user alias
-                # bind to the derived table
-                repl = f"{m.group(1)} (SELECT file FROM {body})"
-            else:
-                repl = f"{m.group(1)} {body}"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
+    def _translate_glob_tvf(self, m, args: list[str]) -> str:
+        if len(args) != 1:
+            raise UQueryError.sql_error("glob expects one pattern")
+        pat = self._lit_parse(args[0].strip())
+        if pat is None:
+            raise UQueryError.sql_error("glob: pattern must be a literal")
+        self.check_path(pat)
+        import glob as _glob
+
+        files = sorted(_glob.glob(pat))
+        # a user alias after the call (`FROM glob('p') g` / `g(file)`,
+        # both DuckDB-accepted) replaces the synthetic one — a double
+        # alias is a Spark parse error. Same stop-word scan as
+        # _rewrite_information_schema.
+        stop_words = {
+            "on", "where", "group", "order", "limit", "join", "inner",
+            "left", "right", "full", "cross", "union", "except",
+            "intersect", "using", "having", "qualify", "offset",
+            "fetch", "asof", "positional", "semi", "anti",
+        }
+        nxt = re.match(r"\s+(?:as\s+)?([A-Za-z_]\w*)", m.string[self._close_of(m) + 1 :])
+        user_alias = bool(nxt) and nxt.group(1).lower() not in stop_words
+        if files:
+            rows = ", ".join(
+                "('" + f.replace("'", "''") + "')" for f in files
+            )
+            body = f"(VALUES {rows}) AS uq_glob(file)"
+        else:
+            body = (
+                "(SELECT CAST(NULL AS STRING) AS file WHERE false) "
+                "AS uq_glob"
+            )
+        if user_alias:
+            # keep the column named `file` inside, let the user alias
+            # bind to the derived table
+            return f"{m.group(1)} (SELECT file FROM {body})"
+        return f"{m.group(1)} {body}"
 
     # -- sweep batch 24: FETCH FIRST / typeof / from_json / array_slice -----
 
@@ -3360,23 +3177,17 @@ class SqlRewriter:
         4-arg STEP form of list_slice (r13 wave-15 — previously a loud
         wrong-arity error); 3-arg list_slice stays with its own later
         pass (positive-inclusive slice(), no probe round-trip)."""
-        pos = 0
-        while True:
-            hit = self._call_args(self._ARRAY_SLICE_RE, sql, pos)
-            if not hit:
-                return sql
-            m, close, args = hit
+
+        def translate(m, args):
             if m.group(1).lower() == "list_slice" and len(args) != 4:
-                pos = m.end()
-                continue
+                return None
             if len(args) not in (3, 4):
                 raise UQueryError.sql_error(
                     "array_slice expects (list, begin, end[, step])"
                 )
-            parts = ":".join(a.strip() for a in args[1:])
-            repl = f"(({args[0]}))[{parts}]"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
+            return f"(({args[0]}))[{':'.join(args[1:])}]"
+
+        return self._map_calls(self._ARRAY_SLICE_RE, translate, sql)
 
     def _rewrite_fetch_first(self, sql: str) -> str:
         """SQL-standard ``FETCH FIRST/NEXT [n] ROWS ONLY`` → LIMIT, and
@@ -3394,18 +3205,6 @@ class SqlRewriter:
         return self._sub_code_fn(
             self._OFFSET_ROWS_RE, lambda m: f"OFFSET {m.group(1)}", sql
         )
-
-    @classmethod
-    def _sub_code_fn(cls, pattern, fn, sql: str) -> str:
-        """Callable substitution skipping string literals."""
-        pos = 0
-        while True:
-            m = cls._search_code(pattern, sql, pos)
-            if not m:
-                return sql
-            repl = fn(m)
-            sql = sql[: m.start()] + repl + sql[m.end() :]
-            pos = m.start() + len(repl)
 
     _DUCK_TO_SPARK_TYPE = {
         "VARCHAR": "STRING", "BIGINT": "BIGINT", "UBIGINT": "BIGINT",
@@ -3459,84 +3258,79 @@ class SqlRewriter:
         casting truncates); the same fractional corner nested inside
         containers still truncates (documented). Non-literal
         structures raise."""
-        pos = 0
-        while True:
-            hit = self._call_args(self._FROM_JSON_RE, sql, pos)
-            if not hit:
-                return sql
-            m, close, args = hit
-            if len(args) != 2:
-                raise UQueryError.sql_error(
-                    f"{m.group(1)} expects (json, structure)"
-                )
-            struct_lit = self._lit_parse(args[1].strip())
-            if struct_lit is None:
-                raise UQueryError.sql_error(
-                    f"{m.group(1)}: structure must be a string literal"
-                )
-            import json as _json
+        return self._map_calls(self._FROM_JSON_RE, self._translate_from_json, sql)
 
-            try:
-                schema = self._spark_schema_of(_json.loads(struct_lit))
-            except UQueryError:
-                raise
-            except Exception as exc:
-                raise UQueryError.sql_error(
-                    f"{m.group(1)}: invalid structure: {exc}"
-                ) from exc
-            j = args[0]
-            # Round 11 (wave-8 catch): Spark's from_json does NOT
-            # coerce string-encoded scalars ('{"a":"5"}' with a BIGINT
-            # → null — a SILENT wrong value; DuckDB yields 5), but
-            # try_variant_get does, with DuckDB's exact lenient rules
-            # (probed: "5"→5, "abc"→NULL, true→1, 7→'7', per-element
-            # inside arrays). Top-level struct fields extract
-            # per-field; integer targets detour via DOUBLE + round()
-            # because DuckDB ROUNDS fractional→integer (5.9→6) where
-            # variant casting truncates. Deviation (documented):
-            # fractional→integer coercion nested INSIDE containers
-            # still truncates (no per-element rounding hook).
-            structure = _json.loads(struct_lit)
-            var = f"parse_json(({j}))"
-            int_types = {
-                "TINYINT", "SMALLINT", "INTEGER", "INT", "BIGINT",
-                "UTINYINT", "USMALLINT", "UINTEGER", "UBIGINT", "HUGEINT",
-            }
-            if isinstance(structure, dict):
-                parts = []
-                for k, tspec in structure.items():
-                    path = "$." + k
-                    fddl = self._spark_schema_of(tspec)
-                    if isinstance(tspec, str) and tspec.strip().upper() in int_types:
-                        # Detour via DOUBLE + round ONLY for fractional
-                        # values (DuckDB rounds 5.9→6 where variant
-                        # casting truncates); exact integers take the
-                        # lossless bigint path — round(double) would
-                        # silently lose precision above 2^53 (ADVICE
-                        # r12: '{"a":9007199254740993}' with a BIGINT
-                        # target). A non-numeric value makes the CASE
-                        # condition NULL → falls to the bigint arm,
-                        # which yields NULL like DuckDB.
-                        vd = f"try_variant_get({var}, '{path}', 'double')"
-                        fx = (
-                            f"(CASE WHEN {vd} != floor({vd}) "
-                            f"THEN CAST(round({vd}) AS {fddl}) "
-                            f"ELSE CAST(try_variant_get({var}, '{path}', "
-                            f"'bigint') AS {fddl}) END)"
-                        )
-                    else:
-                        fx = f"try_variant_get({var}, '{path}', '{fddl}')"
-                    parts.append(f"'{k}', {fx}")
-                body = f"named_struct({', '.join(parts)})"
-            else:
-                body = f"try_variant_get({var}, '$', '{schema}')"
-            repl = (
-                f"(CASE WHEN ({j}) IS NULL OR trim(({j})) = 'null' "
-                f"THEN CAST(NULL AS {schema}) "
-                f"ELSE {body} END)"
+    def _translate_from_json(self, m, args: list[str]) -> str:
+        if len(args) != 2:
+            raise UQueryError.sql_error(
+                f"{m.group(1)} expects (json, structure)"
             )
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
+        struct_lit = self._lit_parse(args[1].strip())
+        if struct_lit is None:
+            raise UQueryError.sql_error(
+                f"{m.group(1)}: structure must be a string literal"
+            )
+        import json as _json
+
+        try:
+            schema = self._spark_schema_of(_json.loads(struct_lit))
+        except UQueryError:
+            raise
+        except Exception as exc:
+            raise UQueryError.sql_error(
+                f"{m.group(1)}: invalid structure: {exc}"
+            ) from exc
+        j = args[0]
+        # Round 11 (wave-8 catch): Spark's from_json does NOT
+        # coerce string-encoded scalars ('{"a":"5"}' with a BIGINT
+        # → null — a SILENT wrong value; DuckDB yields 5), but
+        # try_variant_get does, with DuckDB's exact lenient rules
+        # (probed: "5"→5, "abc"→NULL, true→1, 7→'7', per-element
+        # inside arrays). Top-level struct fields extract
+        # per-field; integer targets detour via DOUBLE + round()
+        # because DuckDB ROUNDS fractional→integer (5.9→6) where
+        # variant casting truncates. Deviation (documented):
+        # fractional→integer coercion nested INSIDE containers
+        # still truncates (no per-element rounding hook).
+        structure = _json.loads(struct_lit)
+        var = f"parse_json(({j}))"
+        int_types = {
+            "TINYINT", "SMALLINT", "INTEGER", "INT", "BIGINT",
+            "UTINYINT", "USMALLINT", "UINTEGER", "UBIGINT", "HUGEINT",
+        }
+        if isinstance(structure, dict):
+            parts = []
+            for k, tspec in structure.items():
+                path = "$." + k
+                fddl = self._spark_schema_of(tspec)
+                if isinstance(tspec, str) and tspec.strip().upper() in int_types:
+                    # Detour via DOUBLE + round ONLY for fractional
+                    # values (DuckDB rounds 5.9→6 where variant
+                    # casting truncates); exact integers take the
+                    # lossless bigint path — round(double) would
+                    # silently lose precision above 2^53 (ADVICE
+                    # r12: '{"a":9007199254740993}' with a BIGINT
+                    # target). A non-numeric value makes the CASE
+                    # condition NULL → falls to the bigint arm,
+                    # which yields NULL like DuckDB.
+                    vd = f"try_variant_get({var}, '{path}', 'double')"
+                    fx = (
+                        f"(CASE WHEN {vd} != floor({vd}) "
+                        f"THEN CAST(round({vd}) AS {fddl}) "
+                        f"ELSE CAST(try_variant_get({var}, '{path}', "
+                        f"'bigint') AS {fddl}) END)"
+                    )
+                else:
+                    fx = f"try_variant_get({var}, '{path}', '{fddl}')"
+                parts.append(f"'{k}', {fx}")
+            body = f"named_struct({', '.join(parts)})"
+        else:
+            body = f"try_variant_get({var}, '$', '{schema}')"
+        return (
+            f"(CASE WHEN ({j}) IS NULL OR trim(({j})) = 'null' "
+            f"THEN CAST(NULL AS {schema}) "
+            f"ELSE {body} END)"
+        )
 
     # -- sweep batch 22: printf / graphemes / AT TIME ZONE ------------------
 
@@ -3552,7 +3346,7 @@ class SqlRewriter:
         "milliseconds", "microseconds",
     }
 
-    def _rewrite_b23_fns(self, sql: str) -> str:
+    def _rewrite_timezone_bar_date_trunc(self, sql: str) -> str:
         """Batch-23 sweep:
 
         - timezone(zone, ts) IS ``ts AT TIME ZONE zone`` → the same
@@ -3567,124 +3361,113 @@ class SqlRewriter:
           TIMESTAMP — the string forms silently diverge otherwise);
           decade/century/millennium/isoyear/era raise (no Spark unit).
         """
-        pos = 0
-        while True:
-            hit = self._call_args(self._B23_FN_RE, sql, pos)
-            if not hit:
-                return sql
-            m, close, args = hit
-            fn = m.group(1).lower()
-            # nested batch-23 calls inside args translate first
-            args = [self._rewrite_b23_fns(a) for a in args]
-            if fn == "age":
-                # batch 28: DuckDB/postgres calendar decomposition as
-                # its DISPLAY STRING (DuckDB's mixed calendar INTERVAL
-                # has no Spark type — string compare/display match,
-                # interval arithmetic on the result fails loudly;
-                # documented width deviation). 1-arg = vs current_date.
-                if len(args) not in (1, 2):
-                    raise UQueryError.sql_error("age expects 1 or 2 args")
-                from .functions.parity_udfs import register_parity_udfs
+        return self._map_calls(self._B23_FN_RE, self._translate_timezone_bar_date_trunc, sql)
 
-                register_parity_udfs(self.spark)
-                a0 = (
-                    f"CAST(({args[0]}) AS TIMESTAMP)"
-                    if len(args) == 2
-                    else "CAST(current_date AS TIMESTAMP)"
-                )
-                a1 = f"CAST(({args[-1]}) AS TIMESTAMP)"
-                repl = f"uq_age({a0}, {a1})"
-                sql = sql[: m.start()] + repl + sql[close + 1 :]
-                pos = m.start() + len(repl)
-                continue
-            if fn == "typeof":
-                # batch 24: Spark typenames → DuckDB ('int' → INTEGER,
-                # 'array<int>' → INTEGER[], struct/map recursively)
-                if len(args) != 1:
-                    raise UQueryError.sql_error("typeof expects 1 arg")
-                from .functions.parity_udfs import register_parity_udfs
+    def _translate_timezone_bar_date_trunc(self, m, args: list[str]) -> str:
+        fn = m.group(1).lower()
+        if fn == "age":
+            # batch 28: DuckDB/postgres calendar decomposition as
+            # its DISPLAY STRING (DuckDB's mixed calendar INTERVAL
+            # has no Spark type — string compare/display match,
+            # interval arithmetic on the result fails loudly;
+            # documented width deviation). 1-arg = vs current_date.
+            if len(args) not in (1, 2):
+                raise UQueryError.sql_error("age expects 1 or 2 args")
+            from .functions.parity_udfs import register_parity_udfs
 
-                register_parity_udfs(self.spark)
-                repl = f"uq_duck_typename(typeof(({args[0]})))"
-                sql = sql[: m.start()] + repl + sql[close + 1 :]
-                pos = m.start() + len(repl)
-                continue
-            if fn == "timezone":
-                if len(args) == 1:
-                    # round 7: 1-arg timezone(ts) is the UTC-offset in
-                    # SECONDS of the session zone — 0 in the UTC session
-                    # this gateway pins (same shape as timezone_hour;
-                    # NULL-propagating; DuckDB-probed). A string LITERAL
-                    # arg is a binder error in DuckDB (timezone('UTC') —
-                    # no VARCHAR overload): raise like it does.
-                    if self._lit_parse(args[0].strip()) is not None:
-                        raise UQueryError.sql_error(
-                            "timezone(): no overload for a VARCHAR "
-                            "argument (DuckDB binder error reproduced)"
-                        )
-                    repl = (
-                        f"(CASE WHEN CAST(({args[0]}) AS TIMESTAMP) IS NULL "
-                        f"THEN CAST(NULL AS BIGINT) ELSE 0 END)"
-                    )
-                    sql = sql[: m.start()] + repl + sql[close + 1 :]
-                    pos = m.start() + len(repl)
-                    continue
-                if len(args) != 2:
+            register_parity_udfs(self.spark)
+            a0 = (
+                f"CAST(({args[0]}) AS TIMESTAMP)"
+                if len(args) == 2
+                else "CAST(current_date AS TIMESTAMP)"
+            )
+            a1 = f"CAST(({args[-1]}) AS TIMESTAMP)"
+            repl = f"uq_age({a0}, {a1})"
+            return repl
+        if fn == "typeof":
+            # batch 24: Spark typenames → DuckDB ('int' → INTEGER,
+            # 'array<int>' → INTEGER[], struct/map recursively)
+            if len(args) != 1:
+                raise UQueryError.sql_error("typeof expects 1 arg")
+            from .functions.parity_udfs import register_parity_udfs
+
+            register_parity_udfs(self.spark)
+            repl = f"uq_duck_typename(typeof(({args[0]})))"
+            return repl
+        if fn == "timezone":
+            if len(args) == 1:
+                # round 7: 1-arg timezone(ts) is the UTC-offset in
+                # SECONDS of the session zone — 0 in the UTC session
+                # this gateway pins (same shape as timezone_hour;
+                # NULL-propagating; DuckDB-probed). A string LITERAL
+                # arg is a binder error in DuckDB (timezone('UTC') —
+                # no VARCHAR overload): raise like it does.
+                if self._lit_parse(args[0].strip()) is not None:
                     raise UQueryError.sql_error(
-                        "timezone() is only supported as timezone(zone, ts)"
+                        "timezone(): no overload for a VARCHAR "
+                        "argument (DuckDB binder error reproduced)"
                     )
-                z, x = args
-                tfn = (
-                    "from_utc_timestamp"
-                    if re.match(r"(?i)^\(*\s*to_utc_timestamp\s*\(", x)
-                    else "to_utc_timestamp"
-                )
-                repl = f"{tfn}(({x}), ({z}))"
-            elif fn == "bar":
-                if len(args) not in (3, 4):
-                    raise UQueryError.sql_error(
-                        "bar expects (x, min, max[, width])"
-                    )
-                w = args[3] if len(args) == 4 else "80"
-                from .functions.parity_udfs import register_parity_udfs
-
-                register_parity_udfs(self.spark)
                 repl = (
-                    f"uq_bar(CAST(({args[0]}) AS DOUBLE), "
-                    f"CAST(({args[1]}) AS DOUBLE), "
-                    f"CAST(({args[2]}) AS DOUBLE), CAST(({w}) AS DOUBLE))"
+                    f"(CASE WHEN CAST(({args[0]}) AS TIMESTAMP) IS NULL "
+                    f"THEN CAST(NULL AS BIGINT) ELSE 0 END)"
                 )
-            elif fn == "bitstring":
-                if len(args) != 2:
-                    raise UQueryError.sql_error("bitstring expects (string, length)")
-                s, n = args
-                repl = (
-                    f"(CASE WHEN length(({s})) > ({n}) THEN "
-                    f"CAST(raise_error('bitstring: Length must be equal or "
-                    f"larger than input string') AS STRING) "
-                    f"ELSE lpad(({s}), CAST(({n}) AS INT), '0') END)"
+                return repl
+            if len(args) != 2:
+                raise UQueryError.sql_error(
+                    "timezone() is only supported as timezone(zone, ts)"
                 )
-            else:  # date_trunc / datetrunc
-                unit = (self._lit_parse(args[0].strip()) or "").lower() if args else ""
-                if len(args) != 2 or not unit:
-                    # non-literal unit: native pass-through (datetrunc renamed)
-                    repl = f"date_trunc({', '.join(args)})"
-                elif unit in self._TRUNC_DATE_UNITS:
-                    repl = f"CAST(date_trunc('{unit}', ({args[1]})) AS DATE)"
-                elif unit in self._TRUNC_TS_UNITS:
-                    repl = f"date_trunc('{unit}', ({args[1]}))"
-                else:
-                    raise UQueryError.sql_error(
-                        f"date_trunc: unit '{unit}' has no Spark equivalent"
-                    )
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
+            z, x = args
+            tfn = (
+                "from_utc_timestamp"
+                if re.match(r"(?i)^\(*\s*to_utc_timestamp\s*\(", x)
+                else "to_utc_timestamp"
+            )
+            repl = f"{tfn}(({x}), ({z}))"
+        elif fn == "bar":
+            if len(args) not in (3, 4):
+                raise UQueryError.sql_error(
+                    "bar expects (x, min, max[, width])"
+                )
+            w = args[3] if len(args) == 4 else "80"
+            from .functions.parity_udfs import register_parity_udfs
+
+            register_parity_udfs(self.spark)
+            repl = (
+                f"uq_bar(CAST(({args[0]}) AS DOUBLE), "
+                f"CAST(({args[1]}) AS DOUBLE), "
+                f"CAST(({args[2]}) AS DOUBLE), CAST(({w}) AS DOUBLE))"
+            )
+        elif fn == "bitstring":
+            if len(args) != 2:
+                raise UQueryError.sql_error("bitstring expects (string, length)")
+            s, n = args
+            repl = (
+                f"(CASE WHEN length(({s})) > ({n}) THEN "
+                f"CAST(raise_error('bitstring: Length must be equal or "
+                f"larger than input string') AS STRING) "
+                f"ELSE lpad(({s}), CAST(({n}) AS INT), '0') END)"
+            )
+        else:  # date_trunc / datetrunc
+            unit = (self._lit_parse(args[0].strip()) or "").lower() if args else ""
+            if len(args) != 2 or not unit:
+                # non-literal unit: native pass-through (datetrunc renamed)
+                repl = f"date_trunc({', '.join(args)})"
+            elif unit in self._TRUNC_DATE_UNITS:
+                repl = f"CAST(date_trunc('{unit}', ({args[1]})) AS DATE)"
+            elif unit in self._TRUNC_TS_UNITS:
+                repl = f"date_trunc('{unit}', ({args[1]}))"
+            else:
+                raise UQueryError.sql_error(
+                    f"date_trunc: unit '{unit}' has no Spark equivalent"
+                )
+        return repl
+
     _PRINTF_SPEC_RE = re.compile(r"%(?:(\d+)\$)?[-+ #0]*\d*(?:\.\d+)?([a-zA-Z%])")
     _SUBSTR_G_RE = re.compile(r"(?i)\bsubstring_grapheme\s*\(")
     _SPLIT_PART_RE = re.compile(r"(?i)\bsplit_part\s*\(")
     _AT_TZ_RE = re.compile(r"(?i)\bat\s+time\s+zone\s+('(?:[^']|'')*')")
 
-    def _rewrite_b22_fns(self, sql: str) -> str:
+    def _rewrite_printf_graphemes_at_time_zone(self, sql: str) -> str:
         """Batch-22 sweep:
 
         - printf → format_string with spec-driven argument casts
@@ -3708,72 +3491,9 @@ class SqlRewriter:
           DuckDB renders the single-application TIMESTAMPTZ result with
           a '+00' suffix in a UTC session — compare via epoch or CAST.
         """
-        while True:
-            hit = self._call_args(self._PRINTF_RE, sql)
-            if not hit:
-                break
-            m, close, args = hit
-            if not args or not (args[0].startswith("'") and args[0].endswith("'")):
-                raise UQueryError.sql_error(
-                    "printf: only literal format strings are supported"
-                )
-            fmt = args[0][1:-1]
-            casts = []
-            g_spans = []  # (start, end, full_spec) of %g/%G occurrences
-            for sm in self._PRINTF_SPEC_RE.finditer(fmt):
-                conv = sm.group(2)
-                if conv == "%":
-                    continue
-                if sm.group(1):
-                    raise UQueryError.sql_error(
-                        "printf: positional specifiers are not supported"
-                    )
-                if conv in ("g", "G"):
-                    # round 7: %g graduates from raise — rendered by
-                    # uq_fmt_g (Python %-format IS C printf: strips
-                    # trailing zeros where Java's %g keeps them); the
-                    # spec becomes %s in the Java format string and the
-                    # full C spec travels to the UDF verbatim
-                    casts.append("UQ_G:" + sm.group(0))
-                    g_spans.append((sm.start(), sm.end()))
-                    continue
-                if conv not in "dioxXbeEfFsc":
-                    raise UQueryError.sql_error(f"printf: unsupported %{conv}")
-                casts.append(
-                    {
-                        "d": "BIGINT", "i": "BIGINT", "o": "BIGINT",
-                        "x": "BIGINT", "X": "BIGINT", "b": "BIGINT",
-                        "e": "DOUBLE", "E": "DOUBLE", "f": "DOUBLE",
-                        "F": "DOUBLE", "c": "INT", "s": None,
-                    }[conv]
-                )
-            for start, end in reversed(g_spans):
-                fmt = fmt[:start] + "%s" + fmt[end:]
-            fmt = re.sub(r"%([-+ #0]*\d*(?:\.\d+)?)i", r"%\1d", fmt)
-            vals = args[1:]
-            if len(vals) != len(casts):
-                raise UQueryError.sql_error(
-                    f"printf: format has {len(casts)} specifier(s) but "
-                    f"{len(vals)} argument(s) were passed"
-                )
-            if g_spans:
-                from .functions.parity_udfs import register_parity_udfs
+        sql = self._map_calls(self._PRINTF_RE, self._translate_printf, sql)
 
-                register_parity_udfs(self.spark)
-
-            def _arg(v, c):
-                if isinstance(c, str) and c.startswith("UQ_G:"):
-                    spec = c[5:].replace("'", "''")
-                    return f"uq_fmt_g(CAST(({v}) AS DOUBLE), '{spec}')"
-                return f"CAST(({v}) AS {c})" if c else f"({v})"
-
-            out = [f"'{fmt}'"] + [_arg(v, c) for v, c in zip(vals, casts)]
-            sql = sql[: m.start()] + f"format_string({', '.join(out)})" + sql[close + 1 :]
-        while True:
-            hit = self._call_args(self._SUBSTR_G_RE, sql)
-            if not hit:
-                break
-            m, close, args = hit
+        def substr_grapheme(m, args):
             if len(args) == 2:
                 repl = f"uq_substr_grapheme2(({args[0]}), CAST(({args[1]}) AS INT))"
             elif len(args) == 3:
@@ -3788,23 +3508,20 @@ class SqlRewriter:
             from .functions.parity_udfs import register_parity_udfs
 
             register_parity_udfs(self.spark)
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-        pos = 0
-        while True:
-            hit = self._call_args(self._SPLIT_PART_RE, sql, pos)
-            if not hit:
-                break
-            m, close, args = hit
-            if len(args) == 3 and args[2].strip() == "0":
-                sql = sql[: m.start()] + "''" + sql[close + 1 :]
-                pos = m.start()
-            else:
-                pos = m.end()
+            return repl
+
+        sql = self._map_calls(self._SUBSTR_G_RE, substr_grapheme, sql)
+        sql = self._map_calls(
+            self._SPLIT_PART_RE,
+            lambda m, args: "''" if len(args) == 3 and args[2] == "0" else None,
+            sql,
+        )
         while True:
             m = self._search_code(self._AT_TZ_RE, sql)
             if not m:
                 return sql
             zone = m.group(1)
+
             end = m.start()
             while end > 0 and sql[end - 1].isspace():
                 end -= 1
@@ -3850,6 +3567,64 @@ class SqlRewriter:
             )
             sql = sql[:i] + f"{fn}({operand}, {zone})" + sql[m.end() :]
 
+    def _translate_printf(self, m, args: list[str]) -> str:
+        if not (args[0].startswith("'") and args[0].endswith("'")):
+            raise UQueryError.sql_error(
+                "printf: only literal format strings are supported"
+            )
+        fmt = args[0][1:-1]
+        casts = []
+        g_spans = []  # (start, end, full_spec) of %g/%G occurrences
+        for sm in self._PRINTF_SPEC_RE.finditer(fmt):
+            conv = sm.group(2)
+            if conv == "%":
+                continue
+            if sm.group(1):
+                raise UQueryError.sql_error(
+                    "printf: positional specifiers are not supported"
+                )
+            if conv in ("g", "G"):
+                # round 7: %g graduates from raise — rendered by
+                # uq_fmt_g (Python %-format IS C printf: strips
+                # trailing zeros where Java's %g keeps them); the
+                # spec becomes %s in the Java format string and the
+                # full C spec travels to the UDF verbatim
+                casts.append("UQ_G:" + sm.group(0))
+                g_spans.append((sm.start(), sm.end()))
+                continue
+            if conv not in "dioxXbeEfFsc":
+                raise UQueryError.sql_error(f"printf: unsupported %{conv}")
+            casts.append(
+                {
+                    "d": "BIGINT", "i": "BIGINT", "o": "BIGINT",
+                    "x": "BIGINT", "X": "BIGINT", "b": "BIGINT",
+                    "e": "DOUBLE", "E": "DOUBLE", "f": "DOUBLE",
+                    "F": "DOUBLE", "c": "INT", "s": None,
+                }[conv]
+            )
+        for start, end in reversed(g_spans):
+            fmt = fmt[:start] + "%s" + fmt[end:]
+        fmt = re.sub(r"%([-+ #0]*\d*(?:\.\d+)?)i", r"%\1d", fmt)
+        vals = args[1:]
+        if len(vals) != len(casts):
+            raise UQueryError.sql_error(
+                f"printf: format has {len(casts)} specifier(s) but "
+                f"{len(vals)} argument(s) were passed"
+            )
+        if g_spans:
+            from .functions.parity_udfs import register_parity_udfs
+
+            register_parity_udfs(self.spark)
+
+        def _arg(v, c):
+            if isinstance(c, str) and c.startswith("UQ_G:"):
+                spec = c[5:].replace("'", "''")
+                return f"uq_fmt_g(CAST(({v}) AS DOUBLE), '{spec}')"
+            return f"CAST(({v}) AS {c})" if c else f"({v})"
+
+        out = [f"'{fmt}'"] + [_arg(v, c) for v, c in zip(vals, casts)]
+        return f"format_string({', '.join(out)})"
+
     # -- sweep batch 21: the JSON tail --------------------------------------
 
     # NB: longer names that share prefixes (json_array_length, json_keys,
@@ -3891,7 +3666,7 @@ class SqlRewriter:
             return f"coalesce(({translated}), 'null')"
         return self._jenc(translated)
 
-    def _rewrite_b21_json(self, sql: str) -> str:
+    def _rewrite_json_functions(self, sql: str) -> str:
         """Batch-21 sweep — DuckDB's json extension tail (semantics
         probed on DuckDB 1.0, pinned in tests/test_parity_udfs.py):
 
@@ -3919,120 +3694,117 @@ class SqlRewriter:
           caveat as 1-arg string_agg);
         - json_array_length: rename (both count top-level elements).
         """
-        hit = self._call_args(self._B21_JSON_RE, sql)
-        if not hit:
+        if not self._call_args(self._B21_JSON_RE, sql):
             return sql
         from .functions.parity_udfs import register_parity_udfs
 
         register_parity_udfs(self.spark)
-        while hit:
-            m, close, raw_args = hit
-            fn = m.group(1).lower()
-            raw_args = [a for a in raw_args if a]
-            # nested batch-21 calls inside args translate first (the
-            # outer scan skips past the emitted replacement text)
-            args = [self._rewrite_b21_json(a) for a in raw_args]
-            if fn == "json_object":
-                if len(args) % 2:
-                    raise UQueryError.sql_error(
-                        "json_object expects an even number of arguments"
-                    )
-                pairs = [
-                    f"CASE WHEN ({k}) IS NULL THEN NULL ELSE "
-                    f"concat({self._jenc(f'CAST(({k}) AS STRING)')}, ':', "
-                    f"{self._jenc_val(rv, v)}) END"
-                    for (k, v, rv) in zip(args[::2], args[1::2], raw_args[1::2])
-                ]
-                body = f"concat_ws(',', {', '.join(pairs)})" if pairs else "''"
-                repl = f"concat('{{', {body}, '}}')"
-            elif fn == "json_array":
-                body = (
-                    "concat_ws(',', "
-                    + ", ".join(
-                        self._jenc_val(r, a) for r, a in zip(raw_args, args)
-                    )
-                    + ")"
-                    if args
-                    else "''"
+        return self._map_calls(self._B21_JSON_RE, self._translate_json_function, sql)
+
+    def _translate_json_function(self, m, args: list[str]) -> str:
+        fn = m.group(1).lower()
+        raw = m.string[m.end() : self._close_of(m)]
+        raw_args = [a.strip() for a in self._split_top(raw, ",") if a.strip()]
+        args = [a for a in args if a]
+        if fn == "json_object":
+            if len(args) % 2:
+                raise UQueryError.sql_error(
+                    "json_object expects an even number of arguments"
                 )
-                repl = f"concat('[', {body}, ']')"
-            elif fn in ("json_quote", "row_to_json"):
-                if len(args) != 1:
-                    raise UQueryError.sql_error(f"{fn} expects 1 arg")
-                repl = (
-                    f"(CASE WHEN ({args[0]}) IS NULL THEN CAST(NULL AS STRING) "
-                    f"ELSE {self._jenc(args[0])} END)"
+            pairs = [
+                f"CASE WHEN ({k}) IS NULL THEN NULL ELSE "
+                f"concat({self._jenc(f'CAST(({k}) AS STRING)')}, ':', "
+                f"{self._jenc_val(rv, v)}) END"
+                for (k, v, rv) in zip(args[::2], args[1::2], raw_args[1::2])
+            ]
+            body = f"concat_ws(',', {', '.join(pairs)})" if pairs else "''"
+            repl = f"concat('{{', {body}, '}}')"
+        elif fn == "json_array":
+            body = (
+                "concat_ws(',', "
+                + ", ".join(
+                    self._jenc_val(r, a) for r, a in zip(raw_args, args)
                 )
-            elif fn == "json":
-                if len(args) != 1:
-                    raise UQueryError.sql_error("json expects 1 arg")
-                repl = f"uq_json_minify(({args[0]}))"
-            elif fn == "json_merge_patch":
-                if len(args) < 2:
-                    raise UQueryError.sql_error(
-                        "json_merge_patch expects at least 2 args"
-                    )
-                repl = f"({args[0]})"
-                for a in args[1:]:
-                    repl = f"uq_json_merge_patch({repl}, ({a}))"
-            elif fn == "json_structure":
-                repl = f"uq_json_structure(({args[0]}))"
-            elif fn == "json_type":
-                if len(args) == 1:
-                    repl = f"uq_json_type1(({args[0]}))"
-                elif len(args) == 2:
-                    repl = f"uq_json_type2(({args[0]}), ({args[1]}))"
-                else:
-                    raise UQueryError.sql_error("json_type expects 1 or 2 args")
-            elif fn == "json_contains":
-                if len(args) != 2:
-                    raise UQueryError.sql_error(
-                        "json_contains expects (haystack, needle)"
-                    )
-                repl = f"uq_json_contains(({args[0]}), ({args[1]}))"
-            elif fn == "json_group_structure":
-                if len(args) != 1:
-                    raise UQueryError.sql_error(
-                        "json_group_structure expects 1 arg"
-                    )
-                # Per-row structure extraction runs map-side; only
-                # DISTINCT structure strings (bounded by schema
-                # complexity, not rows — merge is commutative/
-                # associative/idempotent, so collect_set is sound)
-                # reach the final fold. Parse semantics — consistent
-                # with json_structure and an explicit ::JSON cast;
-                # DuckDB 1.0.0's bare-VARCHAR aggregate wraps the text
-                # as a JSON string scalar instead (probed '"VARCHAR"'),
-                # inconsistent with its own scalar function — the
-                # oracle entry pins through ::JSON where all versions
-                # parse. Empty/all-NULL group → NULL like DuckDB.
-                repl = (
-                    f"uq_json_structs_merge(collect_set("
-                    f"uq_json_structure(CAST(({args[0]}) AS STRING))))"
+                + ")"
+                if args
+                else "''"
+            )
+            repl = f"concat('[', {body}, ']')"
+        elif fn in ("json_quote", "row_to_json"):
+            if len(args) != 1:
+                raise UQueryError.sql_error(f"{fn} expects 1 arg")
+            repl = (
+                f"(CASE WHEN ({args[0]}) IS NULL THEN CAST(NULL AS STRING) "
+                f"ELSE {self._jenc(args[0])} END)"
+            )
+        elif fn == "json":
+            if len(args) != 1:
+                raise UQueryError.sql_error("json expects 1 arg")
+            repl = f"uq_json_minify(({args[0]}))"
+        elif fn == "json_merge_patch":
+            if len(args) < 2:
+                raise UQueryError.sql_error(
+                    "json_merge_patch expects at least 2 args"
                 )
-            elif fn == "json_group_array":
-                if len(args) != 1:
-                    raise UQueryError.sql_error("json_group_array expects 1 arg")
-                # empty group → NULL (DuckDB's macro is string_agg-based)
-                cl = f"collect_list({self._jenc_val(raw_args[0], args[0])})"
-                repl = (
-                    f"IF(size({cl}) = 0, CAST(NULL AS STRING), "
-                    f"concat('[', concat_ws(',', {cl}), ']'))"
+            repl = f"({args[0]})"
+            for a in args[1:]:
+                repl = f"uq_json_merge_patch({repl}, ({a}))"
+        elif fn == "json_structure":
+            repl = f"uq_json_structure(({args[0]}))"
+        elif fn == "json_type":
+            if len(args) == 1:
+                repl = f"uq_json_type1(({args[0]}))"
+            elif len(args) == 2:
+                repl = f"uq_json_type2(({args[0]}), ({args[1]}))"
+            else:
+                raise UQueryError.sql_error("json_type expects 1 or 2 args")
+        elif fn == "json_contains":
+            if len(args) != 2:
+                raise UQueryError.sql_error(
+                    "json_contains expects (haystack, needle)"
                 )
-            else:  # json_group_object
-                if len(args) != 2:
-                    raise UQueryError.sql_error(
-                        "json_group_object expects (key, value)"
-                    )
-                k, v = args
-                cl = f"collect_list(struct(CAST(({k}) AS STRING) AS k, ({v}) AS v))"
-                repl = (
-                    f"IF(size({cl}) = 0, CAST(NULL AS STRING), "
-                    f"to_json(map_from_entries({cl}), {self._JSON_OPTS}))"
+            repl = f"uq_json_contains(({args[0]}), ({args[1]}))"
+        elif fn == "json_group_structure":
+            if len(args) != 1:
+                raise UQueryError.sql_error(
+                    "json_group_structure expects 1 arg"
                 )
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            hit = self._call_args(self._B21_JSON_RE, sql, m.start() + len(repl))
-        return sql
+            # Per-row structure extraction runs map-side; only
+            # DISTINCT structure strings (bounded by schema
+            # complexity, not rows — merge is commutative/
+            # associative/idempotent, so collect_set is sound)
+            # reach the final fold. Parse semantics — consistent
+            # with json_structure and an explicit ::JSON cast;
+            # DuckDB 1.0.0's bare-VARCHAR aggregate wraps the text
+            # as a JSON string scalar instead (probed '"VARCHAR"'),
+            # inconsistent with its own scalar function — the
+            # oracle entry pins through ::JSON where all versions
+            # parse. Empty/all-NULL group → NULL like DuckDB.
+            repl = (
+                f"uq_json_structs_merge(collect_set("
+                f"uq_json_structure(CAST(({args[0]}) AS STRING))))"
+            )
+        elif fn == "json_group_array":
+            if len(args) != 1:
+                raise UQueryError.sql_error("json_group_array expects 1 arg")
+            # empty group → NULL (DuckDB's macro is string_agg-based)
+            cl = f"collect_list({self._jenc_val(raw_args[0], args[0])})"
+            repl = (
+                f"IF(size({cl}) = 0, CAST(NULL AS STRING), "
+                f"concat('[', concat_ws(',', {cl}), ']'))"
+            )
+        else:  # json_group_object
+            if len(args) != 2:
+                raise UQueryError.sql_error(
+                    "json_group_object expects (key, value)"
+                )
+            k, v = args
+            cl = f"collect_list(struct(CAST(({k}) AS STRING) AS k, ({v}) AS v))"
+            repl = (
+                f"IF(size({cl}) = 0, CAST(NULL AS STRING), "
+                f"to_json(map_from_entries({cl}), {self._JSON_OPTS}))"
+            )
+        return repl
 
     # -- sweep batch 20 -----------------------------------------------------
 
@@ -4052,26 +3824,13 @@ class SqlRewriter:
         was probed per-function and must stay untouched). Element
         order remains a documented deviation (both engines:
         implementation-defined)."""
-        pos = 0
-        while True:
-            hit = self._call_args(self._LIST_DISTINCT_RE, sql, pos)
-            if not hit:
-                return sql
-            m, close, args = hit
+
+        def translate(m, args):
             if len(args) != 1:
                 raise UQueryError.sql_error("list_distinct expects 1 arg")
-            # recurse into the argument FIRST: the scan skips past the
-            # whole replacement, so a NESTED list_distinct inside it
-            # stayed untranslated (round-10 nested-fuzzer catch, seed
-            # 660002: list_distinct(list_sort(list_distinct(..))) —
-            # loud UNRESOLVED_ROUTINE on the inner call)
-            inner = self._rewrite_list_distinct(args[0])
-            repl = (
-                f"array_distinct(filter(({inner}), "
-                f"uq_ld -> uq_ld IS NOT NULL))"
-            )
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
+            return f"array_distinct(filter(({args[0]}), uq_ld -> uq_ld IS NOT NULL))"
+
+        return self._map_calls(self._LIST_DISTINCT_RE, translate, sql)
 
     _LIST_ZIP_RE = re.compile(r"(?i)\b(?:list|array)_zip\s*\(")
 
@@ -4091,53 +3850,47 @@ class SqlRewriter:
         element type DuckDB's binder would infer. Values match DuckDB
         exactly (all NULL); only the field's declared type diverges
         for non-string sibling lists (ADVICE r13)."""
-        pos = 0
-        while True:
-            hit = self._call_args(self._LIST_ZIP_RE, sql, pos)
-            if not hit:
-                return sql
-            m, close, args = hit
-            if not args or not args[0].strip():
-                raise UQueryError.sql_error("list_zip expects at least 1 list")
-            args = [self._rewrite_list_zip(a) for a in args]
-            agg, trunc = "greatest", False
-            last = args[-1].strip().lower()
-            if last in ("true", "false"):
-                trunc = last == "true"
-                args = args[:-1]
-                if trunc:
-                    agg = "least"
-                if not args:
-                    raise UQueryError.sql_error(
-                        "list_zip expects at least 1 list"
-                    )
-            def _is_null_lit(a: str) -> bool:
-                return a.strip().upper() == "NULL"
+        return self._map_calls(self._LIST_ZIP_RE, self._translate_list_zip, sql)
 
-            # a literal NULL list contributes NULLs but no length
-            # (DuckDB-probed: list_zip([1,2], NULL) → 2 null-padded
-            # entries); its bare NULL is VOID-typed in Spark, which
-            # size()/element_at() reject at analysis
-            size_terms = [
-                "0" if _is_null_lit(a) else f"coalesce(size(({a})), 0)"
-                for a in args
-            ]
-            n = f"{agg}({', '.join(size_terms)})" if len(args) > 1 else size_terms[0]
-            fields = ", ".join(
-                f"'list_{i + 1}', "
-                + (
-                    "CAST(NULL AS STRING)"
-                    if _is_null_lit(a)
-                    else f"try_element_at(({a}), uq_zi)"
+    def _translate_list_zip(self, m, args: list[str]) -> str:
+        if not args[0]:
+            raise UQueryError.sql_error("list_zip expects at least 1 list")
+        agg, trunc = "greatest", False
+        last = args[-1].strip().lower()
+        if last in ("true", "false"):
+            trunc = last == "true"
+            args = args[:-1]
+            if trunc:
+                agg = "least"
+            if not args:
+                raise UQueryError.sql_error(
+                    "list_zip expects at least 1 list"
                 )
-                for i, a in enumerate(args)
+        def _is_null_lit(a: str) -> bool:
+            return a.strip().upper() == "NULL"
+
+        # a literal NULL list contributes NULLs but no length
+        # (DuckDB-probed: list_zip([1,2], NULL) → 2 null-padded
+        # entries); its bare NULL is VOID-typed in Spark, which
+        # size()/element_at() reject at analysis
+        size_terms = [
+            "0" if _is_null_lit(a) else f"coalesce(size(({a})), 0)"
+            for a in args
+        ]
+        n = f"{agg}({', '.join(size_terms)})" if len(args) > 1 else size_terms[0]
+        fields = ", ".join(
+            f"'list_{i + 1}', "
+            + (
+                "CAST(NULL AS STRING)"
+                if _is_null_lit(a)
+                else f"try_element_at(({a}), uq_zi)"
             )
-            repl = (
-                f"slice(transform(sequence(1, greatest(1, {n})), "
-                f"uq_zi -> named_struct({fields})), 1, {n})"
-            )
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
+            for i, a in enumerate(args)
+        )
+        return (
+            f"slice(transform(sequence(1, greatest(1, {n})), "
+            f"uq_zi -> named_struct({fields})), 1, {n})"
+        )
 
     _MAP_CONCAT_RE = re.compile(r"(?i)\bmap_concat\s*\(")
 
@@ -4153,16 +3906,10 @@ class SqlRewriter:
         re-positioned colliding keys at the right map's slot, a
         rendered-key-order divergence). Single-arg calls pass through;
         repeated operand references collapse under Catalyst CSE."""
-        pos = 0
-        while True:
-            hit = self._call_args(self._MAP_CONCAT_RE, sql, pos)
-            if not hit:
-                return sql
-            m, close, args = hit
+
+        def translate(m, args):
             if len(args) < 2:
-                pos = m.end()
-                continue
-            args = [self._rewrite_map_concat(a) for a in args]
+                return None
             repl = args[0]
             for b in args[1:]:
                 repl = (
@@ -4172,8 +3919,9 @@ class SqlRewriter:
                     f"map_filter(({b}), (uq_mk, uq_mv) -> "
                     f"NOT array_contains(map_keys(({repl})), uq_mk)))"
                 )
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
+            return repl
+
+        return self._map_calls(self._MAP_CONCAT_RE, translate, sql)
 
     _B20_FN_RE = re.compile(
         r"(?i)\b(flatten|factorial|trunc|list_contains|array_contains|"
@@ -4195,7 +3943,7 @@ class SqlRewriter:
             f"ELSE element_at(array({lut}), CAST(({n}) AS INT) - 1) END)"
         )
 
-    def _rewrite_b20_postfix_bang(self, sql: str) -> str:
+    def _rewrite_postfix_factorial(self, sql: str) -> str:
         """DuckDB postfix ``n!`` = factorial (5! = 120). Runs after the
         operator-symbols pass so ``!~`` is already consumed; ``!=`` is
         excluded by lookahead. The operand is the preceding atom
@@ -4236,7 +3984,7 @@ class SqlRewriter:
                 )
             sql = sql[:i] + f"factorial({operand})" + sql[m.end() :]
 
-    def _rewrite_b20_fns(self, sql: str) -> str:
+    def _rewrite_flatten_factorial_contains(self, sql: str) -> str:
         """Batch-20 sweep:
 
         - flatten: DuckDB SKIPS NULL sublists (flatten([[1],NULL,[2]]) =
@@ -4260,91 +4008,82 @@ class SqlRewriter:
           engine-specific — seeding cannot carry across engines);
         - current_setting raises (engine-specific configuration keys).
         """
-        sql = self._rewrite_b20_postfix_bang(sql)
-        pos = 0
-        while True:
-            hit = self._call_args(self._B20_FN_RE, sql, pos)
-            if not hit:
-                return sql
-            m, close, args = hit
-            fn = m.group(1).lower()
-            # nested batch-20 calls inside the args translate first; the
-            # scan then skips past the emitted text (which re-uses
-            # flatten/array_contains names)
-            args = [self._rewrite_b20_fns(a) for a in args]
-            a0 = args[0] if args else ""
-            if fn == "current_setting":
-                raise UQueryError.sql_error(
-                    "current_setting() is engine-specific and not supported"
-                )
-            if fn == "flatten":
-                if len(args) != 1:
-                    raise UQueryError.sql_error("flatten expects 1 arg")
-                repl = f"flatten(filter(({a0}), uq_fl -> uq_fl IS NOT NULL))"
-            elif fn == "factorial":
-                if len(args) != 1:
-                    raise UQueryError.sql_error("factorial expects 1 arg")
-                repl = self._factorial_case(a0)
-            elif fn == "trunc":
-                if len(args) != 1:
-                    pos = m.end()  # Spark's own date trunc(date, fmt)
-                    continue
-                repl = (
-                    f"(CASE WHEN ({a0}) >= 0 THEN floor(({a0})) "
-                    f"ELSE ceil(({a0})) END)"
-                )
-            elif fn in ("list_position", "list_indexof", "array_indexof"):
-                if len(args) != 2:
-                    raise UQueryError.sql_error(f"{fn} expects (list, value)")
-                a, x = a0, args[1]
-                # DuckDB coerces the needle's numeric width; Spark's
-                # array_position is type-strict (fuzzer catch, batch
-                # 28). The native form probes first; mismatched widths
-                # fall back to the both-sides-widened form.
-                # DOUBLE on both sides: Spark demands EXACT type match
-                # down to decimal precision; arithmetic re-unification
-                # still disagreed (probed) — the double cast is the
-                # only stable meeting point for mixed numerics
-                widened = (
-                    f"array_position("
-                    f"transform(({a}), uq_pe -> CAST(uq_pe AS DOUBLE)), "
-                    f"CAST(({x}) AS DOUBLE))"
-                )
-                repl = f"uq_poly({widened}, array_position(({a}), ({x})))"
-            elif fn in ("list_append", "list_prepend"):
-                if len(args) != 2:
-                    raise UQueryError.sql_error(f"{fn} expects 2 args")
-                # DuckDB coerces numeric widths; Spark's array_append/
-                # prepend are type-strict (nested-fuzzer catch) —
-                # native probes first, mixed widths fall back to
-                # both-sides-DOUBLE
-                if fn == "list_append":
-                    a, x, out = a0, args[1], "array_append"
-                else:
-                    x, a, out = a0, args[1], "array_prepend"
-                widened = (
-                    f"{out}(transform(({a}), uq_pe -> CAST(uq_pe AS DOUBLE)), "
-                    f"CAST(({x}) AS DOUBLE))"
-                )
-                repl = f"uq_poly({widened}, {out}(({a}), ({x})))"
-            elif fn == "setseed":
-                repl = "CAST(NULL AS DOUBLE)"
-            else:  # list_contains / array_contains
-                if len(args) != 2:
-                    raise UQueryError.sql_error(f"{fn} expects (list, value)")
-                a, x = a0, args[1]
-                # the ifnull wrappers only TYPE untyped NULL literals
-                # (either side) — the CASE short-circuits before they
-                # could change a value
-                ta = f"ifnull(({a}), array(({x})))"
-                repl = (
-                    f"(CASE WHEN ({x}) IS NULL OR ({a}) IS NULL "
-                    f"THEN CAST(NULL AS BOOLEAN) "
-                    f"ELSE coalesce(array_contains({ta}, "
-                    f"ifnull(({x}), try_element_at({ta}, 1))), false) END)"
-                )
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
+        sql = self._rewrite_postfix_factorial(sql)
+        return self._map_calls(self._B20_FN_RE, self._translate_flatten_factorial_contains, sql)
+
+    def _translate_flatten_factorial_contains(self, m, args: list[str]) -> str | None:
+        fn = m.group(1).lower()
+        a0 = args[0]
+        if fn == "current_setting":
+            raise UQueryError.sql_error(
+                "current_setting() is engine-specific and not supported"
+            )
+        if fn == "flatten":
+            if len(args) != 1:
+                raise UQueryError.sql_error("flatten expects 1 arg")
+            repl = f"flatten(filter(({a0}), uq_fl -> uq_fl IS NOT NULL))"
+        elif fn == "factorial":
+            if len(args) != 1:
+                raise UQueryError.sql_error("factorial expects 1 arg")
+            repl = self._factorial_case(a0)
+        elif fn == "trunc":
+            if len(args) != 1:
+                return None  # Spark's own date trunc(date, fmt)
+            repl = (
+                f"(CASE WHEN ({a0}) >= 0 THEN floor(({a0})) "
+                f"ELSE ceil(({a0})) END)"
+            )
+        elif fn in ("list_position", "list_indexof", "array_indexof"):
+            if len(args) != 2:
+                raise UQueryError.sql_error(f"{fn} expects (list, value)")
+            a, x = a0, args[1]
+            # DuckDB coerces the needle's numeric width; Spark's
+            # array_position is type-strict (fuzzer catch, batch
+            # 28). The native form probes first; mismatched widths
+            # fall back to the both-sides-widened form.
+            # DOUBLE on both sides: Spark demands EXACT type match
+            # down to decimal precision; arithmetic re-unification
+            # still disagreed (probed) — the double cast is the
+            # only stable meeting point for mixed numerics
+            widened = (
+                f"array_position("
+                f"transform(({a}), uq_pe -> CAST(uq_pe AS DOUBLE)), "
+                f"CAST(({x}) AS DOUBLE))"
+            )
+            repl = f"uq_poly({widened}, array_position(({a}), ({x})))"
+        elif fn in ("list_append", "list_prepend"):
+            if len(args) != 2:
+                raise UQueryError.sql_error(f"{fn} expects 2 args")
+            # DuckDB coerces numeric widths; Spark's array_append/
+            # prepend are type-strict (nested-fuzzer catch) —
+            # native probes first, mixed widths fall back to
+            # both-sides-DOUBLE
+            if fn == "list_append":
+                a, x, out = a0, args[1], "array_append"
+            else:
+                x, a, out = a0, args[1], "array_prepend"
+            widened = (
+                f"{out}(transform(({a}), uq_pe -> CAST(uq_pe AS DOUBLE)), "
+                f"CAST(({x}) AS DOUBLE))"
+            )
+            repl = f"uq_poly({widened}, {out}(({a}), ({x})))"
+        elif fn == "setseed":
+            repl = "CAST(NULL AS DOUBLE)"
+        else:  # list_contains / array_contains
+            if len(args) != 2:
+                raise UQueryError.sql_error(f"{fn} expects (list, value)")
+            a, x = a0, args[1]
+            # the ifnull wrappers only TYPE untyped NULL literals
+            # (either side) — the CASE short-circuits before they
+            # could change a value
+            ta = f"ifnull(({a}), array(({x})))"
+            repl = (
+                f"(CASE WHEN ({x}) IS NULL OR ({a}) IS NULL "
+                f"THEN CAST(NULL AS BOOLEAN) "
+                f"ELSE coalesce(array_contains({ta}, "
+                f"ifnull(({x}), try_element_at({ta}, 1))), false) END)"
+            )
+        return repl
 
     # -- sweep batch 19 -----------------------------------------------------
 
@@ -4360,7 +4099,7 @@ class SqlRewriter:
     )
     _DATE_ADD_RE = re.compile(r"(?i)\bdate_add\s*\(")
 
-    def _rewrite_b19_fns(self, sql: str) -> str:
+    def _rewrite_list_family(self, sql: str) -> str:
         """Batch-19 sweep — list-function family + friends:
 
         - list_sum/avg/count → the list_aggregate machinery (same
@@ -4385,88 +4124,79 @@ class SqlRewriter:
         - date_add(x, INTERVAL …) → timestamp + interval (DuckDB
           returns TIMESTAMP; the int-days form stays native).
         """
-        pos = 0
-        while True:
-            hit = self._call_args(self._B19_LIST_ALIAS_RE, sql, pos)
-            if not hit:
-                break
-            m, close, args = hit
+
+        def list_alias(m, args):
             if len(args) != 1:
                 raise UQueryError.sql_error(f"{m.group(1)} expects 1 arg")
             agg = self._B19_LIST_AGG_ALIAS[m.group(1).lower()]
-            repl = f"list_aggregate(({args[0]}), '{agg}')"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start()
-        pos = 0
-        while True:
-            hit = self._call_args(self._DATE_ADD_RE, sql, pos)
-            if not hit:
-                break
-            m, close, args = hit
-            if len(args) != 2 or not re.match(r"(?i)^interval\b", args[1]):
-                pos = m.end()  # Spark's own (date, int) form — native
-                continue
-            repl = f"(CAST(({args[0]}) AS TIMESTAMP) + {args[1]})"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
-        while True:
-            hit = self._call_args(self._B19_FN_RE, sql)
-            if not hit:
-                return sql
-            m, close, args = hit
-            fn = m.group(1).lower()
-            a0 = args[0]
-            if fn == "generate_subscripts":
-                if len(args) != 2 or args[1].strip() != "1":
-                    raise UQueryError.sql_error(
-                        "generate_subscripts: only dimension 1 is supported "
-                        "(DuckDB raises beyond it too)"
-                    )
-                repl = f"explode({self._subscripts(a0)})"
-            elif fn == "list_resize":
-                if len(args) not in (2, 3):
-                    raise UQueryError.sql_error(
-                        "list_resize expects (list, size[, fill])"
-                    )
-                n = f"CAST(({args[1]}) AS INT)"
-                fill = (
-                    f"({args[2]})"
-                    if len(args) == 3
-                    else f"(CASE WHEN false THEN try_element_at(({a0}), 1) END)"
+            return f"list_aggregate(({args[0]}), '{agg}')"
+
+        sql = self._map_calls(self._B19_LIST_ALIAS_RE, list_alias, sql)
+        sql = self._map_calls(
+            self._DATE_ADD_RE,
+            lambda m, args: (
+                f"(CAST(({args[0]}) AS TIMESTAMP) + {args[1]})"
+                if len(args) == 2 and re.match(r"(?i)^interval\b", args[1])
+                else None  # Spark's own (date, int) form — native
+            ),
+            sql,
+        )
+        return self._map_calls(self._B19_FN_RE, self._translate_list_family, sql)
+
+    def _translate_list_family(self, m, args: list[str]) -> str:
+        fn = m.group(1).lower()
+        a0 = args[0]
+        if fn == "generate_subscripts":
+            if len(args) != 2 or args[1].strip() != "1":
+                raise UQueryError.sql_error(
+                    "generate_subscripts: only dimension 1 is supported "
+                    "(DuckDB raises beyond it too)"
                 )
-                # list_concat, not concat: the batch-8 concat pass
-                # downstream stringifies bare concat() calls
-                repl = (
-                    f"list_concat(slice(({a0}), 1, least({n}, size(({a0})))), "
-                    f"array_repeat({fill}, greatest({n} - size(({a0})), 0)))"
+            repl = f"explode({self._subscripts(a0)})"
+        elif fn == "list_resize":
+            if len(args) not in (2, 3):
+                raise UQueryError.sql_error(
+                    "list_resize expects (list, size[, fill])"
                 )
-            elif fn == "list_any_value":
-                repl = f"try_element_at(filter(({a0}), uq_le -> uq_le IS NOT NULL), 1)"
-            elif fn == "list_first":
-                repl = f"try_element_at(({a0}), 1)"
-            elif fn == "list_last":
-                repl = f"try_element_at(({a0}), greatest(size(({a0})), 1))"
-            elif fn == "list_median":
-                arr = (
-                    f"array_sort(transform(filter(({a0}), "
-                    f"uq_le -> uq_le IS NOT NULL), uq_mv -> CAST(uq_mv AS DOUBLE)))"
-                )
-                repl = (
-                    f"(CASE WHEN size({arr}) = 0 THEN NULL "
-                    f"ELSE ({self._median_of(arr)}) END)"
-                )
-            elif fn == "list_mode":
-                nn = f"filter(({a0}), uq_le -> uq_le IS NOT NULL)"
-                repl = (
-                    f"try_element_at(array_sort(transform(array_distinct({nn}), "
-                    f"uq_v -> struct(0 - size(filter({nn}, uq_e2 -> uq_e2 = uq_v)) AS c, "
-                    f"uq_v AS v))), 1).v"
-                )
-            elif fn == "array_pop_back":
-                repl = f"slice(({a0}), 1, greatest(size(({a0})) - 1, 0))"
-            else:  # array_pop_front
-                repl = f"slice(({a0}), 2, greatest(size(({a0})) - 1, 0))"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
+            n = f"CAST(({args[1]}) AS INT)"
+            fill = (
+                f"({args[2]})"
+                if len(args) == 3
+                else f"(CASE WHEN false THEN try_element_at(({a0}), 1) END)"
+            )
+            # list_concat, not concat: the batch-8 concat pass
+            # downstream stringifies bare concat() calls
+            repl = (
+                f"list_concat(slice(({a0}), 1, least({n}, size(({a0})))), "
+                f"array_repeat({fill}, greatest({n} - size(({a0})), 0)))"
+            )
+        elif fn == "list_any_value":
+            repl = f"try_element_at(filter(({a0}), uq_le -> uq_le IS NOT NULL), 1)"
+        elif fn == "list_first":
+            repl = f"try_element_at(({a0}), 1)"
+        elif fn == "list_last":
+            repl = f"try_element_at(({a0}), greatest(size(({a0})), 1))"
+        elif fn == "list_median":
+            arr = (
+                f"array_sort(transform(filter(({a0}), "
+                f"uq_le -> uq_le IS NOT NULL), uq_mv -> CAST(uq_mv AS DOUBLE)))"
+            )
+            repl = (
+                f"(CASE WHEN size({arr}) = 0 THEN NULL "
+                f"ELSE ({self._median_of(arr)}) END)"
+            )
+        elif fn == "list_mode":
+            nn = f"filter(({a0}), uq_le -> uq_le IS NOT NULL)"
+            repl = (
+                f"try_element_at(array_sort(transform(array_distinct({nn}), "
+                f"uq_v -> struct(0 - size(filter({nn}, uq_e2 -> uq_e2 = uq_v)) AS c, "
+                f"uq_v AS v))), 1).v"
+            )
+        elif fn == "array_pop_back":
+            repl = f"slice(({a0}), 1, greatest(size(({a0})) - 1, 0))"
+        else:  # array_pop_front
+            repl = f"slice(({a0}), 2, greatest(size(({a0})) - 1, 0))"
+        return repl
 
     # -- sweep batch 16 -----------------------------------------------------
 
@@ -4494,41 +4224,26 @@ class SqlRewriter:
         ``unnest`` (DuckDB auto-names the column after the expression
         text — not portable either way; alias it). ``recursive := true``
         raises."""
-        while True:
-            m = self._search_code(self._UNNEST_FROM_RE, sql)
-            if not m:
-                break
-            close = self._find_close(sql, m.end() - 1)
-            if close == -1:
-                break
-            inner = sql[m.end() : close]
+
+        def no_recursive(inner: str) -> None:
             if ":=" in inner:
                 raise UQueryError.sql_error(
                     "unnest: the recursive := form is not supported"
                 )
-            sql = (
-                sql[: m.start()]
-                + f"{m.group(1)} (SELECT explode({inner}) AS unnest)"
-                + sql[close + 1 :]
-            )
+
+        def from_unnest(m, inner):
+            no_recursive(inner)
+            return f"{m.group(1)} (SELECT explode({inner}) AS unnest)"
+
+        def rename(m):
+            close = self._close_of(m)
+            if close != -1:
+                no_recursive(m.string[m.end() : close])
+            return "explode("
+
+        sql = self._map_calls(self._UNNEST_FROM_RE, from_unnest, sql, raw=True)
         sql = self._zip_select_generators(sql)
-        if self._search_code(self._UNNEST_RE, sql):
-            out, pos = [], 0
-            while True:
-                m = self._search_code(self._UNNEST_RE, sql, pos)
-                if not m:
-                    break
-                close = self._find_close(sql, m.end() - 1)
-                if close != -1 and ":=" in sql[m.end() : close]:
-                    raise UQueryError.sql_error(
-                        "unnest: the recursive := form is not supported"
-                    )
-                out.append(sql[pos : m.start()])
-                out.append("explode(")
-                pos = m.end()
-            out.append(sql[pos:])
-            sql = "".join(out)
-        return sql
+        return self._sub_code_fn(self._UNNEST_RE, rename, sql)
 
     @staticmethod
     def _subscripts(arr: str) -> str:
@@ -4654,21 +4369,18 @@ class SqlRewriter:
         'ß' <> 'SS' — both engines use simple case folding, not full
         folding). Other DuckDB collations (NOACCENT, NFC, ICU locales)
         have no Spark equivalent and raise."""
-        pos = 0
-        while True:
-            m = self._search_code(self._COLLATE_RE, sql, pos)
-            if not m:
-                return sql
+
+        def translate(m):
             name = m.group(1).lower()
             if name == "nocase":
-                sql = sql[: m.start()] + "COLLATE UTF8_LCASE" + sql[m.end() :]
-                pos = m.start() + len("COLLATE UTF8_LCASE")
-            elif name in ("utf8_binary", "utf8_lcase", "unicode", "unicode_ci"):
-                pos = m.end()  # already a Spark collation name
-            else:
-                raise UQueryError.sql_error(
-                    f"COLLATE {m.group(1)} is not supported (only NOCASE)"
-                )
+                return "COLLATE UTF8_LCASE"
+            if name in ("utf8_binary", "utf8_lcase", "unicode", "unicode_ci"):
+                return m.group(0)  # already a Spark collation name
+            raise UQueryError.sql_error(
+                f"COLLATE {m.group(1)} is not supported (only NOCASE)"
+            )
+
+        return self._sub_code_fn(self._COLLATE_RE, translate, sql)
 
     _ARRAY_AGG_RE = re.compile(r"(?i)\barray_agg\s*\(")
 
@@ -4685,122 +4397,113 @@ class SqlRewriter:
         added the trailing-FILTER fold and the empty→NULL guard, and
         `_rewrite_array_agg_nulls` gives the remaining UNORDERED forms
         the same NULL-keeping treatment (deviation fully closed)."""
-        pos = 0
-        while True:
-            hit = self._call_args(self._ARRAY_AGG_RE, sql, pos)
-            if not hit:
-                return sql
-            m, close, args = hit
-            inner = sql[m.end() : close]
-            ob = next(
-                (s for s, _e, _w in self._scan_top_level(inner, {"order"})),
-                None,
+        return self._map_calls(self._ARRAY_AGG_RE, self._translate_array_agg_order, sql, raw=True)
+
+    def _translate_array_agg_order(self, m, inner: str):
+        sql, close = m.string, self._close_of(m)
+        ob = next(
+            (s for s, _e, _w in self._scan_top_level(inner, {"order"})),
+            None,
+        )
+        if ob is None or not re.match(r"(?i)order\s+by\b", inner[ob:]):
+            return None
+        expr = inner[:ob].strip()
+        distinct = False
+        if re.match(r"(?i)^distinct\b", expr):
+            distinct = True
+            expr = re.sub(r"(?i)^distinct\s*", "", expr)
+        # optional trailing FILTER — folded into the struct (NULL
+        # structs don't collect, exactly FILTER semantics; runs
+        # before the batch-9 WHERE-keyword insertion, so accept
+        # both FILTER (WHERE c) and DuckDB's bare FILTER (c))
+        suffix_end = close + 1
+        filt = None
+        fm = re.match(r"(?i)\s*filter\s*\(", sql[suffix_end:])
+        if fm:
+            fclose = self._find_close(sql, suffix_end + fm.end() - 1)
+            if fclose == -1:
+                raise UQueryError.sql_error("FILTER: unbalanced parentheses")
+            filt = re.sub(
+                r"(?i)^\s*where\b", "", sql[suffix_end + fm.end() : fclose]
+            ).strip()
+            suffix_end = fclose + 1
+        if re.match(r"(?i)\s*over\b", sql[suffix_end:]):
+            raise UQueryError.sql_error(
+                "array_agg ORDER BY over a window is not supported"
             )
-            if ob is None or not re.match(r"(?i)order\s+by\b", inner[ob:]):
-                pos = m.end()
-                continue
-            expr = inner[:ob].strip()
-            distinct = False
-            if re.match(r"(?i)^distinct\b", expr):
-                distinct = True
-                expr = re.sub(r"(?i)^distinct\s*", "", expr)
-            # optional trailing FILTER — folded into the struct (NULL
-            # structs don't collect, exactly FILTER semantics; runs
-            # before the batch-9 WHERE-keyword insertion, so accept
-            # both FILTER (WHERE c) and DuckDB's bare FILTER (c))
-            suffix_end = close + 1
-            filt = None
-            fm = re.match(r"(?i)\s*filter\s*\(", sql[suffix_end:])
-            if fm:
-                fclose = self._find_close(sql, suffix_end + fm.end() - 1)
-                if fclose == -1:
-                    raise UQueryError.sql_error("FILTER: unbalanced parentheses")
-                filt = re.sub(
-                    r"(?i)^\s*where\b", "", sql[suffix_end + fm.end() : fclose]
-                ).strip()
-                suffix_end = fclose + 1
-            if re.match(r"(?i)\s*over\b", sql[suffix_end:]):
+        keys = []
+        for k in self._split_top(
+            re.sub(r"(?i)^order\s+by\s*", "", inner[ob:]).strip(), ","
+        ):
+            k = k.strip()
+            nm = re.search(r"(?i)\s+nulls\s+(first|last)\s*$", k)
+            nulls_first = bool(nm and nm.group(1).lower() == "first")
+            k = k[: nm.start()] if nm else k
+            dm = re.search(r"(?i)\s+(asc|desc)\s*$", k)
+            desc = bool(dm and dm.group(1).lower() == "desc")
+            k = (k[: dm.start()] if dm else k).strip()
+            keys.append((k, desc, nulls_first))
+        fields = ", ".join(
+            [f"({k}) AS uq_k{n}" for n, (k, _d, _nf) in enumerate(keys)]
+            + [f"({expr}) AS uq_av"]
+        )
+        cmp_body = "0"
+        for n in range(len(keys) - 1, -1, -1):
+            _k, desc, nulls_first = keys[n]
+            lt, gt = ("1", "-1") if desc else ("-1", "1")
+            n_l, n_r = ("-1", "1") if nulls_first else ("1", "-1")
+            f = f"uq_k{n}"
+            cmp_body = (
+                f"CASE WHEN uq_l.{f} IS NULL AND uq_r.{f} IS NULL THEN {cmp_body} "
+                f"WHEN uq_l.{f} IS NULL THEN {n_l} "
+                f"WHEN uq_r.{f} IS NULL THEN {n_r} "
+                f"WHEN uq_l.{f} < uq_r.{f} THEN {lt} "
+                f"WHEN uq_l.{f} > uq_r.{f} THEN {gt} "
+                f"ELSE {cmp_body} END"
+            )
+        if distinct:
+            # DuckDB admits DISTINCT + ORDER BY only when the sort
+            # key IS the aggregated expression (Postgres rule);
+            # dedupe the values then sort them directly (round 8).
+            norm = lambda t: re.sub(r"\s+", "", t).lower()  # noqa: E731
+            if len(keys) != 1 or norm(keys[0][0]) != norm(expr):
                 raise UQueryError.sql_error(
-                    "array_agg ORDER BY over a window is not supported"
+                    "array_agg DISTINCT with ORDER BY requires "
+                    "ordering by the aggregated expression"
                 )
-            keys = []
-            for k in self._split_top(
-                re.sub(r"(?i)^order\s+by\s*", "", inner[ob:]).strip(), ","
-            ):
-                k = k.strip()
-                nm = re.search(r"(?i)\s+nulls\s+(first|last)\s*$", k)
-                nulls_first = bool(nm and nm.group(1).lower() == "first")
-                k = k[: nm.start()] if nm else k
-                dm = re.search(r"(?i)\s+(asc|desc)\s*$", k)
-                desc = bool(dm and dm.group(1).lower() == "desc")
-                k = (k[: dm.start()] if dm else k).strip()
-                keys.append((k, desc, nulls_first))
-            fields = ", ".join(
-                [f"({k}) AS uq_k{n}" for n, (k, _d, _nf) in enumerate(keys)]
-                + [f"({expr}) AS uq_av"]
+            _k, desc, nulls_first = keys[0]
+            lt, gt = ("1", "-1") if desc else ("-1", "1")
+            n_l, n_r = ("-1", "1") if nulls_first else ("1", "-1")
+            # sort STRUCTS, not bare values: Spark's comparator
+            # array_sort silently drops NULL elements, structs are
+            # never NULL (same trick as the multi-key path)
+            vcmp = (
+                f"CASE WHEN uq_l.uq_av IS NULL AND uq_r.uq_av IS NULL "
+                f"THEN 0 "
+                f"WHEN uq_l.uq_av IS NULL THEN {n_l} "
+                f"WHEN uq_r.uq_av IS NULL THEN {n_r} "
+                f"WHEN uq_l.uq_av < uq_r.uq_av THEN {lt} "
+                f"WHEN uq_l.uq_av > uq_r.uq_av THEN {gt} ELSE 0 END"
             )
-            cmp_body = "0"
-            for n in range(len(keys) - 1, -1, -1):
-                _k, desc, nulls_first = keys[n]
-                lt, gt = ("1", "-1") if desc else ("-1", "1")
-                n_l, n_r = ("-1", "1") if nulls_first else ("1", "-1")
-                f = f"uq_k{n}"
-                cmp_body = (
-                    f"CASE WHEN uq_l.{f} IS NULL AND uq_r.{f} IS NULL THEN {cmp_body} "
-                    f"WHEN uq_l.{f} IS NULL THEN {n_l} "
-                    f"WHEN uq_r.{f} IS NULL THEN {n_r} "
-                    f"WHEN uq_l.{f} < uq_r.{f} THEN {lt} "
-                    f"WHEN uq_l.{f} > uq_r.{f} THEN {gt} "
-                    f"ELSE {cmp_body} END"
-                )
-            if distinct:
-                # DuckDB admits DISTINCT + ORDER BY only when the sort
-                # key IS the aggregated expression (Postgres rule);
-                # dedupe the values then sort them directly (round 8).
-                norm = lambda t: re.sub(r"\s+", "", t).lower()  # noqa: E731
-                if len(keys) != 1 or norm(keys[0][0]) != norm(expr):
-                    raise UQueryError.sql_error(
-                        "array_agg DISTINCT with ORDER BY requires "
-                        "ordering by the aggregated expression"
-                    )
-                _k, desc, nulls_first = keys[0]
-                lt, gt = ("1", "-1") if desc else ("-1", "1")
-                n_l, n_r = ("-1", "1") if nulls_first else ("1", "-1")
-                # sort STRUCTS, not bare values: Spark's comparator
-                # array_sort silently drops NULL elements, structs are
-                # never NULL (same trick as the multi-key path)
-                vcmp = (
-                    f"CASE WHEN uq_l.uq_av IS NULL AND uq_r.uq_av IS NULL "
-                    f"THEN 0 "
-                    f"WHEN uq_l.uq_av IS NULL THEN {n_l} "
-                    f"WHEN uq_r.uq_av IS NULL THEN {n_r} "
-                    f"WHEN uq_l.uq_av < uq_r.uq_av THEN {lt} "
-                    f"WHEN uq_l.uq_av > uq_r.uq_av THEN {gt} ELSE 0 END"
-                )
-                elem = f"struct(({expr}) AS uq_av)"
-                if filt is not None:
-                    elem = f"CASE WHEN {filt} THEN {elem} END"
-                arr = (
-                    f"transform(array_sort(array_distinct("
-                    f"collect_list({elem})), "
-                    f"(uq_l, uq_r) -> {vcmp}), uq_s -> uq_s.uq_av)"
-                )
-                repl = f"(CASE WHEN size({arr}) = 0 THEN NULL ELSE {arr} END)"
-                sql = sql[: m.start()] + repl + sql[suffix_end:]
-                pos = m.start() + len(repl)
-                continue
-            elem = f"struct({fields})"
+            elem = f"struct(({expr}) AS uq_av)"
             if filt is not None:
                 elem = f"CASE WHEN {filt} THEN {elem} END"
             arr = (
-                f"transform(array_sort(collect_list({elem}), "
-                f"(uq_l, uq_r) -> {cmp_body}), uq_s -> uq_s.uq_av)"
+                f"transform(array_sort(array_distinct("
+                f"collect_list({elem})), "
+                f"(uq_l, uq_r) -> {vcmp}), uq_s -> uq_s.uq_av)"
             )
-            # DuckDB returns NULL (not []) when no rows aggregate —
-            # the duplicated aggregate dedupes in Catalyst
-            repl = f"(CASE WHEN size({arr}) = 0 THEN NULL ELSE {arr} END)"
-            sql = sql[: m.start()] + repl + sql[suffix_end:]
-            pos = m.start() + len(repl)
+            return f"(CASE WHEN size({arr}) = 0 THEN NULL ELSE {arr} END)", suffix_end - 1
+        elem = f"struct({fields})"
+        if filt is not None:
+            elem = f"CASE WHEN {filt} THEN {elem} END"
+        arr = (
+            f"transform(array_sort(collect_list({elem}), "
+            f"(uq_l, uq_r) -> {cmp_body}), uq_s -> uq_s.uq_av)"
+        )
+        # DuckDB returns NULL (not []) when no rows aggregate —
+        # the duplicated aggregate dedupes in Catalyst
+        return f"(CASE WHEN size({arr}) = 0 THEN NULL ELSE {arr} END)", suffix_end - 1
 
     def _rewrite_array_agg_nulls(self, sql: str) -> str:
         """Unordered ``list()``/``array_agg`` NULL parity (closes NOTES
@@ -4828,61 +4531,57 @@ class SqlRewriter:
         DuckDB-1.x-probed: NULL-keep, single-NULL DISTINCT, empty→NULL,
         FILTER exclusion, windowed running frames.
         """
-        pos = 0
-        while True:
-            hit = self._call_args(self._ARRAY_AGG_RE, sql, pos)
-            if not hit:
-                return sql
-            m, close, args = hit
-            inner = sql[m.end() : close].strip()
-            distinct = False
-            if re.match(r"(?i)^distinct\b", inner):
-                distinct = True
-                inner = re.sub(r"(?i)^distinct\s*", "", inner)
-            if len(self._split_top(inner, ",")) != 1 or not inner:
-                raise UQueryError.sql_error("array_agg expects exactly 1 argument")
-            # optional FILTER (WHERE c) and OVER (spec)|OVER name suffixes
-            suffix_end = close + 1
-            filt = None
-            fm = re.match(r"(?i)\s*filter\s*\(", sql[suffix_end:])
-            if fm:
-                fclose = self._find_close(sql, suffix_end + fm.end() - 1)
-                if fclose == -1:
-                    raise UQueryError.sql_error("FILTER: unbalanced parentheses")
-                filt = re.sub(
-                    r"(?i)^\s*where\b", "", sql[suffix_end + fm.end() : fclose]
-                ).strip()
-                suffix_end = fclose + 1
-            over_txt = None
-            om = re.match(r"(?i)\s*over\s*", sql[suffix_end:])
-            if om:
-                rest = sql[suffix_end + om.end() :]
-                if rest.startswith("("):
-                    oclose = self._find_close(sql, suffix_end + om.end())
-                    if oclose == -1:
-                        raise UQueryError.sql_error("OVER: unbalanced parentheses")
-                    over_txt = sql[suffix_end + om.end() : oclose + 1]
-                    suffix_end = oclose + 1
-                else:
-                    wm = re.match(r"\w+", rest)
-                    if not wm:
-                        raise UQueryError.sql_error("OVER: expected window")
-                    over_txt = wm.group(0)
-                    suffix_end = suffix_end + om.end() + wm.end()
-            elem = f"struct(({inner}) AS uq_av)"
-            if filt is not None:
-                elem = f"CASE WHEN {filt} THEN {elem} END"
-            core = f"collect_list({elem})"
-            if over_txt is not None:
-                core = f"{core} OVER {over_txt}"
-            arr = f"transform({core}, uq_s -> uq_s.uq_av)"
-            if distinct:
-                arr = f"array_distinct({arr})"
-            # DuckDB: zero rows aggregated → NULL, never [] (probed);
-            # the duplicated aggregate dedupes in Catalyst
-            repl = f"(CASE WHEN size({arr}) = 0 THEN NULL ELSE {arr} END)"
-            sql = sql[: m.start()] + repl + sql[suffix_end:]
-            pos = m.start() + len(repl)
+        return self._map_calls(self._ARRAY_AGG_RE, self._translate_array_agg_nulls, sql, raw=True)
+
+    def _translate_array_agg_nulls(self, m, inner: str):
+        sql, close = m.string, self._close_of(m)
+        inner = inner.strip()
+        distinct = False
+        if re.match(r"(?i)^distinct\b", inner):
+            distinct = True
+            inner = re.sub(r"(?i)^distinct\s*", "", inner)
+        if len(self._split_top(inner, ",")) != 1 or not inner:
+            raise UQueryError.sql_error("array_agg expects exactly 1 argument")
+        # optional FILTER (WHERE c) and OVER (spec)|OVER name suffixes
+        suffix_end = close + 1
+        filt = None
+        fm = re.match(r"(?i)\s*filter\s*\(", sql[suffix_end:])
+        if fm:
+            fclose = self._find_close(sql, suffix_end + fm.end() - 1)
+            if fclose == -1:
+                raise UQueryError.sql_error("FILTER: unbalanced parentheses")
+            filt = re.sub(
+                r"(?i)^\s*where\b", "", sql[suffix_end + fm.end() : fclose]
+            ).strip()
+            suffix_end = fclose + 1
+        over_txt = None
+        om = re.match(r"(?i)\s*over\s*", sql[suffix_end:])
+        if om:
+            rest = sql[suffix_end + om.end() :]
+            if rest.startswith("("):
+                oclose = self._find_close(sql, suffix_end + om.end())
+                if oclose == -1:
+                    raise UQueryError.sql_error("OVER: unbalanced parentheses")
+                over_txt = sql[suffix_end + om.end() : oclose + 1]
+                suffix_end = oclose + 1
+            else:
+                wm = re.match(r"\w+", rest)
+                if not wm:
+                    raise UQueryError.sql_error("OVER: expected window")
+                over_txt = wm.group(0)
+                suffix_end = suffix_end + om.end() + wm.end()
+        elem = f"struct(({inner}) AS uq_av)"
+        if filt is not None:
+            elem = f"CASE WHEN {filt} THEN {elem} END"
+        core = f"collect_list({elem})"
+        if over_txt is not None:
+            core = f"{core} OVER {over_txt}"
+        arr = f"transform({core}, uq_s -> uq_s.uq_av)"
+        if distinct:
+            arr = f"array_distinct({arr})"
+        # DuckDB: zero rows aggregated → NULL, never [] (probed);
+        # the duplicated aggregate dedupes in Catalyst
+        return f"(CASE WHEN size({arr}) = 0 THEN NULL ELSE {arr} END)", suffix_end - 1
 
     _SIGNBIT_RE = re.compile(r"(?i)\bsignbit\s*\(")
     _SIGN_RE = re.compile(r"(?i)\bsign\s*\(")
@@ -4891,7 +4590,7 @@ class SqlRewriter:
 
     _ARRAY_LENGTH2_RE = re.compile(r"(?i)\barray_length\s*\(")
 
-    def _rewrite_b29_fns(self, sql: str) -> str:
+    def _rewrite_regr_avg_array_length(self, sql: str) -> str:
         """Round-8 gap-probe scalars: 2-arg ``array_length(x, 1)`` →
         the 1-arg form (dimension 1 is the only one Spark's size() can
         answer; deeper dims raise). (The [not_][i]like_escape family
@@ -4903,35 +4602,24 @@ class SqlRewriter:
         # must ride INSIDE the CAST — wrapping the bare call produced
         # `CAST(f(x) AS DOUBLE) OVER (...)`, a ParseException for
         # previously-working windowed/filtered forms.
-        pos = 0
-        ravg_re = re.compile(r"(?i)\bregr_avg[xy]\s*\(")
-        while True:
-            hit = self._call_args(ravg_re, sql, pos)
-            if not hit:
-                break
-            m, close, args = hit
-            _f, _o, endpos = self._nested_agg_over(sql, close, "regr_avg")
-            repl = f"CAST({sql[m.start() : endpos + 1]} AS DOUBLE)"
-            sql = sql[: m.start()] + repl + sql[endpos + 1 :]
-            pos = m.start() + len(repl)
-        pos = 0
-        while True:
-            hit = self._call_args(self._ARRAY_LENGTH2_RE, sql, pos)
-            if not hit:
-                return sql
-            m, close, args = hit
+        def regr_avg(m, inner):
+            close = self._close_of(m)
+            _f, _o, endpos = self._nested_agg_over(m.string, close, "regr_avg")
+            return f"CAST({m.group(0)}{inner}{m.string[close : endpos + 1]} AS DOUBLE)", endpos
+
+        def array_length2(m, args):
             if len(args) != 2:
-                pos = m.end()
-                continue
-            if args[1].strip() != "1":
+                return None
+            if args[1] != "1":
                 raise UQueryError.sql_error(
                     "array_length: only dimension 1 is supported"
                 )
-            repl = f"array_length({args[0]})"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
+            return f"array_length({args[0]})"
 
-    def _rewrite_b17_scalars(self, sql: str) -> str:
+        sql = self._map_calls(re.compile(r"(?i)\bregr_avg[xy]\s*\("), regr_avg, sql, raw=True)
+        return self._map_calls(self._ARRAY_LENGTH2_RE, array_length2, sql)
+
+    def _rewrite_sign_encode_make_timestamp(self, sql: str) -> str:
         """Batch-17 scalar corners: ``signbit(x)`` → (x < 0) —
         DuckDB's own signbit(-0.0) is false, so the sign test is exact;
         ``sign(x)`` → CAST(sign(x) AS TINYINT) — DuckDB's sign returns
@@ -4940,50 +4628,28 @@ class SqlRewriter:
         encode(s, 'UTF-8'); 1-arg ``make_timestamp(µs)`` →
         timestamp_micros (the 6-arg form is natively identical and
         stays untouched)."""
-        while True:
-            hit = self._call_args(self._SIGNBIT_RE, sql)
-            if not hit:
-                break
-            m, close, args = hit
+
+        def signbit(m, args):
             if len(args) != 1:
                 raise UQueryError.sql_error("signbit expects 1 arg")
-            sql = sql[: m.start()] + f"(({args[0]}) < 0)" + sql[close + 1 :]
-        pos = 0
-        while True:
-            hit = self._call_args(self._SIGN_RE, sql, pos)
-            if not hit:
-                break
-            m, close, _args = hit
-            repl = f"CAST({sql[m.start() : close + 1]} AS TINYINT)"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            # resume inside the call: a nested sign() in its argument
-            # still needs its own cast
-            pos = m.end() + len("CAST(")
-        pos = 0
-        while True:
-            hit = self._call_args(self._ENCODE_RE, sql, pos)
-            if not hit:
-                break
-            m, close, args = hit
-            if len(args) != 1:
-                pos = m.end()  # Spark's own 2-arg encode — leave native
-                continue
-            repl = f"encode(({args[0]}), 'UTF-8')"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
-        pos = 0
-        while True:
-            hit = self._call_args(self._MAKE_TS_RE, sql, pos)
-            if not hit:
-                break
-            m, close, args = hit
-            if len(args) != 1:
-                pos = m.end()  # 6-arg civil form — natively identical
-                continue
-            repl = f"timestamp_micros(({args[0]}))"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
-        return sql
+            return f"(({args[0]}) < 0)"
+
+        sql = self._map_calls(self._SIGNBIT_RE, signbit, sql)
+        sql = self._map_calls(
+            self._SIGN_RE, lambda m, inner: f"CAST({m.group(0)}{inner}) AS TINYINT)", sql, raw=True
+        )
+        sql = self._map_calls(
+            self._ENCODE_RE,
+            # 2-arg encode is Spark's own — left native
+            lambda m, args: f"encode(({args[0]}), 'UTF-8')" if len(args) == 1 else None,
+            sql,
+        )
+        return self._map_calls(
+            self._MAKE_TS_RE,
+            # the 6-arg civil form is natively identical
+            lambda m, args: f"timestamp_micros(({args[0]}))" if len(args) == 1 else None,
+            sql,
+        )
 
     _MAD_RE = re.compile(r"(?i)\bmad\s*\(")
     _ENTROPY_RE = re.compile(r"(?i)\bentropy\s*\(")
@@ -5079,156 +4745,156 @@ class SqlRewriter:
             (self._ENTROPY_RE, "entropy"),
             (self._HISTOGRAM_RE, "histogram"),
         ):
-            while True:
-                hit = self._call_args(regex, sql)
-                if not hit:
-                    break
-                m, close, args = hit
-                filt, over, endpos = self._nested_agg_over(sql, close, kind)
-                osuf = f" OVER {over}" if over else ""
-                if len(args) != 1:
-                    raise UQueryError.sql_error(f"{kind} expects 1 argument")
-                x = args[0]
-                distinct = False
-                if re.match(r"(?i)^distinct\b", x):
-                    # round 8: DISTINCT forms — entropy/histogram have
-                    # closed forms over the distinct set (every
-                    # frequency is 1); mad dedupes via collect_set and
-                    # takes the median of the distinct values
-                    distinct = True
-                    x = re.sub(r"(?i)^distinct\s*", "", x)
-                if filt is not None:
-                    # FILTER folds into the argument: all three
-                    # aggregates skip NULLs, so excluded rows vanish
-                    # (applied BEFORE the DISTINCT dedup, like SQL)
-                    x = f"CASE WHEN {filt} THEN ({x}) END"
-                if distinct and kind == "mad" and over:
-                    # round 9 (last raise-tail member of this family):
-                    # no percentile(DISTINCT) exists over a window, and
-                    # inlining the median into the transform lambda is
-                    # the r7 O(n² log n) trap (lambda-invariant
-                    # subexpressions re-evaluate per element). LET-bind
-                    # instead: aggregate(array(0), v, (a,i)->a, body)
-                    # evaluates v ONCE (zero) and body ONCE (finish), so
-                    # sorted set, median, and deviations are each
-                    # computed once and referenced as bound lambda vars.
-                    cs = f"collect_set(CAST(({x}) AS DOUBLE)){osuf}"
-                    med_s = self._median_of("uq_ls")
-                    devs = (
-                        "array_sort(transform(uq_ls, "
-                        "uq_mv -> abs(uq_mv - uq_lm)))"
-                    )
-                    fin = self._median_of("uq_ld")
-                    repl = (
-                        f"(aggregate(array(0), array_sort({cs}), "
-                        f"(uq_a1, uq_i1) -> uq_a1, "
-                        f"uq_ls -> aggregate(array(0), ({med_s}), "
-                        f"(uq_a2, uq_i2) -> uq_a2, "
-                        f"uq_lm -> aggregate(array(0), {devs}, "
-                        f"(uq_a3, uq_i3) -> uq_a3, "
-                        f"uq_ld -> ({fin})))))"
-                    )
-                elif distinct and kind == "mad":
-                    # collect_set = the distinct multiset; the median of
-                    # distinct values comes from percentile(DISTINCT) —
-                    # a plain aggregate attribute, loop-invariant in the
-                    # lambda (the r7 O(n^2 log n) lesson)
-                    cs = f"collect_set(CAST(({x}) AS DOUBLE))"
-                    med = f"percentile(DISTINCT CAST(({x}) AS DOUBLE), 0.5)"
-                    devs = (
-                        f"array_sort(transform({cs}, "
-                        f"uq_mv -> abs(uq_mv - {med})))"
-                    )
-                    repl = (
-                        f"(CASE WHEN size({cs}) = 0 THEN NULL "
-                        f"ELSE ({self._median_of(devs)}) END)"
-                    )
-                elif distinct and kind == "entropy":
-                    cl = f"collect_list({x}){osuf}"
-                    nd = f"CAST(size(array_distinct({cl})) AS DOUBLE)"
-                    # every distinct value has frequency 1 -> log2(n)
-                    repl = (
-                        f"(CASE WHEN size({cl}) = 0 THEN CAST(0 AS DOUBLE) "
-                        f"ELSE log2({nd}) END + 0)"
-                    )
-                elif distinct and kind == "histogram":
-                    cl = f"collect_list({x}){osuf}"
-                    entries = (
-                        f"transform(array_sort(array_distinct({cl})), uq_hv -> "
-                        f"struct(uq_hv AS key, CAST(1 AS BIGINT) AS value))"
-                    )
-                    repl = (
-                        f"(CASE WHEN size({cl}) = 0 THEN NULL "
-                        f"ELSE map_from_entries({entries}) END)"
-                    )
-                elif kind == "mad" and self._ordered_spec(over):
-                    # round 11 (wave-7): an ORDER BY / framed window —
-                    # Spark's percentile window rejects the spec, so
-                    # the running median comes from the collected list
-                    # itself, LET-bound once like the DISTINCT-over
-                    # branch (running mads DuckDB-probed: [0.0, 5.5,
-                    # 4.5] over ROWS BETWEEN 1 PRECEDING AND CURRENT
-                    # ROW on (10, 21, 30)).
-                    cs = f"collect_list(CAST(({x}) AS DOUBLE)){osuf}"
-                    med_s = self._median_of("uq_ls")
-                    devs = (
-                        "array_sort(transform(uq_ls, "
-                        "uq_mv -> abs(uq_mv - uq_lm)))"
-                    )
-                    fin = self._median_of("uq_ld")
-                    repl = (
-                        f"(aggregate(array(0), array_sort({cs}), "
-                        f"(uq_a1, uq_i1) -> uq_a1, "
-                        f"uq_ls -> CASE WHEN size(uq_ls) = 0 THEN NULL "
-                        f"ELSE aggregate(array(0), ({med_s}), "
-                        f"(uq_a2, uq_i2) -> uq_a2, "
-                        f"uq_lm -> aggregate(array(0), {devs}, "
-                        f"(uq_a3, uq_i3) -> uq_a3, "
-                        f"uq_ld -> ({fin}))) END))"
-                    )
-                elif kind == "mad":
-                    # the group median comes from Spark's native exact
-                    # interpolated percentile AGGREGATE — as a plain
-                    # post-aggregation attribute it is loop-invariant in
-                    # the lambda below. (The first draft inlined the
-                    # median as an element_at-over-array_sort expression
-                    # INSIDE the transform lambda; Spark re-evaluates the
-                    # sort per element — O(n² log n) per group, measured
-                    # hanging the sf0.01 gate on a 3000-row group.)
-                    cl = f"collect_list(CAST(({x}) AS DOUBLE)){osuf}"
-                    med = f"percentile(CAST(({x}) AS DOUBLE), 0.5){osuf}"
-                    devs = (
-                        f"array_sort(transform({cl}, "
-                        f"uq_mv -> abs(uq_mv - {med})))"
-                    )
-                    repl = (
-                        f"(CASE WHEN size({cl}) = 0 THEN NULL "
-                        f"ELSE ({self._median_of(devs)}) END)"
-                    )
-                elif kind == "entropy":
-                    cl = f"collect_list({x}){osuf}"
-                    n = f"CAST(size({cl}) AS DOUBLE)"
-                    freqs = (
-                        f"transform(array_distinct({cl}), uq_ev -> "
-                        f"CAST(size(filter({cl}, uq_e -> uq_e = uq_ev)) AS DOUBLE))"
-                    )
-                    repl = (
-                        f"((0 - aggregate({freqs}, CAST(0 AS DOUBLE), "
-                        f"(uq_a, uq_c) -> uq_a + (uq_c / {n}) * log2(uq_c / {n}))) + 0)"
-                    )
-                else:
-                    cl = f"collect_list({x}){osuf}"
-                    entries = (
-                        f"transform(array_sort(array_distinct({cl})), uq_hv -> "
-                        f"struct(uq_hv AS key, "
-                        f"CAST(size(filter({cl}, uq_e -> uq_e = uq_hv)) AS BIGINT) AS value))"
-                    )
-                    repl = (
-                        f"(CASE WHEN size({cl}) = 0 THEN NULL "
-                        f"ELSE map_from_entries({entries}) END)"
-                    )
-                sql = sql[: m.start()] + repl + sql[endpos + 1 :]
+            sql = self._map_calls(
+                regex, lambda m, a, k=kind: self._translate_nested_agg(m, a, k), sql
+            )
         return sql
+
+    def _translate_nested_agg(self, m, args: list[str], kind: str):
+        filt, over, endpos = self._nested_agg_over(m.string, self._close_of(m), kind)
+        osuf = f" OVER {over}" if over else ""
+        if len(args) != 1:
+            raise UQueryError.sql_error(f"{kind} expects 1 argument")
+        x = args[0]
+        distinct = False
+        if re.match(r"(?i)^distinct\b", x):
+            # round 8: DISTINCT forms — entropy/histogram have
+            # closed forms over the distinct set (every
+            # frequency is 1); mad dedupes via collect_set and
+            # takes the median of the distinct values
+            distinct = True
+            x = re.sub(r"(?i)^distinct\s*", "", x)
+        if filt is not None:
+            # FILTER folds into the argument: all three
+            # aggregates skip NULLs, so excluded rows vanish
+            # (applied BEFORE the DISTINCT dedup, like SQL)
+            x = f"CASE WHEN {filt} THEN ({x}) END"
+        if distinct and kind == "mad" and over:
+            # round 9 (last raise-tail member of this family):
+            # no percentile(DISTINCT) exists over a window, and
+            # inlining the median into the transform lambda is
+            # the r7 O(n² log n) trap (lambda-invariant
+            # subexpressions re-evaluate per element). LET-bind
+            # instead: aggregate(array(0), v, (a,i)->a, body)
+            # evaluates v ONCE (zero) and body ONCE (finish), so
+            # sorted set, median, and deviations are each
+            # computed once and referenced as bound lambda vars.
+            cs = f"collect_set(CAST(({x}) AS DOUBLE)){osuf}"
+            med_s = self._median_of("uq_ls")
+            devs = (
+                "array_sort(transform(uq_ls, "
+                "uq_mv -> abs(uq_mv - uq_lm)))"
+            )
+            fin = self._median_of("uq_ld")
+            repl = (
+                f"(aggregate(array(0), array_sort({cs}), "
+                f"(uq_a1, uq_i1) -> uq_a1, "
+                f"uq_ls -> aggregate(array(0), ({med_s}), "
+                f"(uq_a2, uq_i2) -> uq_a2, "
+                f"uq_lm -> aggregate(array(0), {devs}, "
+                f"(uq_a3, uq_i3) -> uq_a3, "
+                f"uq_ld -> ({fin})))))"
+            )
+        elif distinct and kind == "mad":
+            # collect_set = the distinct multiset; the median of
+            # distinct values comes from percentile(DISTINCT) —
+            # a plain aggregate attribute, loop-invariant in the
+            # lambda (the r7 O(n^2 log n) lesson)
+            cs = f"collect_set(CAST(({x}) AS DOUBLE))"
+            med = f"percentile(DISTINCT CAST(({x}) AS DOUBLE), 0.5)"
+            devs = (
+                f"array_sort(transform({cs}, "
+                f"uq_mv -> abs(uq_mv - {med})))"
+            )
+            repl = (
+                f"(CASE WHEN size({cs}) = 0 THEN NULL "
+                f"ELSE ({self._median_of(devs)}) END)"
+            )
+        elif distinct and kind == "entropy":
+            cl = f"collect_list({x}){osuf}"
+            nd = f"CAST(size(array_distinct({cl})) AS DOUBLE)"
+            # every distinct value has frequency 1 -> log2(n)
+            repl = (
+                f"(CASE WHEN size({cl}) = 0 THEN CAST(0 AS DOUBLE) "
+                f"ELSE log2({nd}) END + 0)"
+            )
+        elif distinct and kind == "histogram":
+            cl = f"collect_list({x}){osuf}"
+            entries = (
+                f"transform(array_sort(array_distinct({cl})), uq_hv -> "
+                f"struct(uq_hv AS key, CAST(1 AS BIGINT) AS value))"
+            )
+            repl = (
+                f"(CASE WHEN size({cl}) = 0 THEN NULL "
+                f"ELSE map_from_entries({entries}) END)"
+            )
+        elif kind == "mad" and self._ordered_spec(over):
+            # round 11 (wave-7): an ORDER BY / framed window —
+            # Spark's percentile window rejects the spec, so
+            # the running median comes from the collected list
+            # itself, LET-bound once like the DISTINCT-over
+            # branch (running mads DuckDB-probed: [0.0, 5.5,
+            # 4.5] over ROWS BETWEEN 1 PRECEDING AND CURRENT
+            # ROW on (10, 21, 30)).
+            cs = f"collect_list(CAST(({x}) AS DOUBLE)){osuf}"
+            med_s = self._median_of("uq_ls")
+            devs = (
+                "array_sort(transform(uq_ls, "
+                "uq_mv -> abs(uq_mv - uq_lm)))"
+            )
+            fin = self._median_of("uq_ld")
+            repl = (
+                f"(aggregate(array(0), array_sort({cs}), "
+                f"(uq_a1, uq_i1) -> uq_a1, "
+                f"uq_ls -> CASE WHEN size(uq_ls) = 0 THEN NULL "
+                f"ELSE aggregate(array(0), ({med_s}), "
+                f"(uq_a2, uq_i2) -> uq_a2, "
+                f"uq_lm -> aggregate(array(0), {devs}, "
+                f"(uq_a3, uq_i3) -> uq_a3, "
+                f"uq_ld -> ({fin}))) END))"
+            )
+        elif kind == "mad":
+            # the group median comes from Spark's native exact
+            # interpolated percentile AGGREGATE — as a plain
+            # post-aggregation attribute it is loop-invariant in
+            # the lambda below. (The first draft inlined the
+            # median as an element_at-over-array_sort expression
+            # INSIDE the transform lambda; Spark re-evaluates the
+            # sort per element — O(n² log n) per group, measured
+            # hanging the sf0.01 gate on a 3000-row group.)
+            cl = f"collect_list(CAST(({x}) AS DOUBLE)){osuf}"
+            med = f"percentile(CAST(({x}) AS DOUBLE), 0.5){osuf}"
+            devs = (
+                f"array_sort(transform({cl}, "
+                f"uq_mv -> abs(uq_mv - {med})))"
+            )
+            repl = (
+                f"(CASE WHEN size({cl}) = 0 THEN NULL "
+                f"ELSE ({self._median_of(devs)}) END)"
+            )
+        elif kind == "entropy":
+            cl = f"collect_list({x}){osuf}"
+            n = f"CAST(size({cl}) AS DOUBLE)"
+            freqs = (
+                f"transform(array_distinct({cl}), uq_ev -> "
+                f"CAST(size(filter({cl}, uq_e -> uq_e = uq_ev)) AS DOUBLE))"
+            )
+            repl = (
+                f"((0 - aggregate({freqs}, CAST(0 AS DOUBLE), "
+                f"(uq_a, uq_c) -> uq_a + (uq_c / {n}) * log2(uq_c / {n}))) + 0)"
+            )
+        else:
+            cl = f"collect_list({x}){osuf}"
+            entries = (
+                f"transform(array_sort(array_distinct({cl})), uq_hv -> "
+                f"struct(uq_hv AS key, "
+                f"CAST(size(filter({cl}, uq_e -> uq_e = uq_hv)) AS BIGINT) AS value))"
+            )
+            repl = (
+                f"(CASE WHEN size({cl}) = 0 THEN NULL "
+                f"ELSE map_from_entries({entries}) END)"
+            )
+        return repl, endpos
 
     _STRUCT_INSERT_RE = re.compile(r"(?i)\bstruct_insert\s*\(")
     _SI_FIELDS_RE = re.compile(r"No such struct field `[^`]*` in (.+)")
@@ -5665,58 +5331,17 @@ class SqlRewriter:
           gateway serves DuckDB-dialect clients).
         """
         # concat: must split args to cast each
-        while True:
-            hit = self._call_args(self._CONCAT_RE, sql)
-            if not hit:
-                break
-            m, close, args = hit
-            inner = ", ".join(f"CAST(({a}) AS STRING)" for a in args)
-            sql = sql[: m.start()] + f"concat_ws('', {inner})" + sql[close + 1 :]
+        sql = self._map_calls(
+            self._CONCAT_RE,
+            lambda m, args: f"concat_ws('', {', '.join(f'CAST(({a}) AS STRING)' for a in args)})",
+            sql,
+        )
         # one-arg log
-        pos = 0
-        while True:
-            hit = self._call_args(self._LOG_RE, sql, pos)
-            if not hit:
-                break
-            m, close, args = hit
-            if len(args) == 1:
-                sql = sql[: m.start()] + f"log10({args[0]})" + sql[close + 1 :]
-                pos = m.start()
-            else:
-                pos = m.end()
+        sql = self._map_calls(
+            self._LOG_RE, lambda m, args: f"log10({args[0]})" if len(args) == 1 else None, sql
+        )
         # 3-arg substring window rule
-        pos = 0
-        while True:
-            hit = self._call_args(self._SUBSTRING_RE, sql, pos)
-            if not hit:
-                break
-            m, close, args = hit
-            if len(args) != 3 or (
-                self._POS_INT_RE.match(args[1])
-                and int(args[1]) >= 1
-                and self._POS_INT_RE.match(args[2])
-            ):
-                # scan INSIDE the skipped native call — a nested substr
-                # with 0/negative args must still translate (fuzzer
-                # catch, batch 28 — the left/right class)
-                pos = m.end()
-                continue
-            # nested substr in the args translates first (the repl
-            # embeds s many times; skipping past hid inner windows)
-            s, st, ln = (self._rewrite_scalar_semantics(a) for a in args)
-            b = (
-                f"(CASE WHEN ({st}) > 0 THEN ({st}) WHEN ({st}) = 0 THEN 0 "
-                f"ELSE length(({s})) + ({st}) + 1 END)"
-            )
-            lo = f"GREATEST(LEAST({b}, {b} + ({ln})), 1)"
-            hi = f"LEAST(GREATEST({b}, {b} + ({ln})), length(({s})) + 1)"
-            repl = (
-                f"(CASE WHEN ({s}) IS NULL OR ({st}) IS NULL OR ({ln}) IS NULL "
-                f"THEN NULL WHEN {hi} > {lo} "
-                f"THEN substring(({s}), {lo}, {hi} - {lo}) ELSE '' END)"
-            )
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
+        sql = self._map_calls(self._SUBSTRING_RE, self._translate_substring, sql)
         # simple 1-2 arg templates
         for regex, n_args, tmpl in (
             (
@@ -5743,40 +5368,30 @@ class SqlRewriter:
                 "size(array_distinct(({a})))",
             ),
         ):
-            while True:
-                hit = self._call_args(regex, sql)
-                if not hit:
-                    break
-                m, close, args = hit
+
+            def template(m, args, n_args=n_args, tmpl=tmpl):
                 if len(args) != n_args:
                     raise UQueryError.sql_error(
                         f"{m.group(0).strip('( ')} expects {n_args} arg(s)"
                     )
-                repl = tmpl.format(a=args[0], b=args[-1])
-                sql = sql[: m.start()] + repl + sql[close + 1 :]
+                return tmpl.format(a=args[0], b=args[-1])
+
+            sql = self._map_calls(regex, template, sql)
+
         # isfinite / isinf
-        while True:
-            hit = self._call_args(self._ISFIN_RE, sql)
-            if not hit:
-                break
-            m, close, args = hit
+        def isfinite(m, args):
             if len(args) != 1:
                 raise UQueryError.sql_error("isfinite/isinf expect 1 arg")
             a = args[0]
             if m.group(1).lower() == "inf":
-                repl = f"(abs(CAST(({a}) AS DOUBLE)) = CAST('Infinity' AS DOUBLE))"
-            else:
-                repl = (
-                    f"(NOT isnan(CAST(({a}) AS DOUBLE)) AND "
-                    f"abs(CAST(({a}) AS DOUBLE)) <> CAST('Infinity' AS DOUBLE))"
-                )
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
+                return f"(abs(CAST(({a}) AS DOUBLE)) = CAST('Infinity' AS DOUBLE))"
+            return (
+                f"(NOT isnan(CAST(({a}) AS DOUBLE)) AND "
+                f"abs(CAST(({a}) AS DOUBLE)) <> CAST('Infinity' AS DOUBLE))"
+            )
+
         # format_bytes
-        while True:
-            hit = self._call_args(self._FORMAT_BYTES_RE, sql)
-            if not hit:
-                break
-            m, close, args = hit
+        def format_bytes(m, args):
             if len(args) != 1:
                 raise UQueryError.sql_error("format_bytes expects 1 arg")
             a = args[0]
@@ -5793,13 +5408,35 @@ class SqlRewriter:
                 f"CAST(CAST(({a}) AS BIGINT) * 10 DIV {size} AS DOUBLE) / 10)"
                 for u, size in units
             )
-            repl = (
+            return (
                 f"(CASE {branches} ELSE concat_ws('', CAST(({a}) AS STRING), "
                 f"' bytes') END)"
             )
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
+
+        sql = self._map_calls(self._ISFIN_RE, isfinite, sql)
+        sql = self._map_calls(self._FORMAT_BYTES_RE, format_bytes, sql)
         sql = self._CURRENT_SCHEMA_RE.sub("'main'", sql)
         return sql
+
+    def _translate_substring(self, m, args: list[str]) -> str | None:
+        if len(args) != 3 or (
+            self._POS_INT_RE.match(args[1])
+            and int(args[1]) >= 1
+            and self._POS_INT_RE.match(args[2])
+        ):
+            return None
+        s, st, ln = args
+        b = (
+            f"(CASE WHEN ({st}) > 0 THEN ({st}) WHEN ({st}) = 0 THEN 0 "
+            f"ELSE length(({s})) + ({st}) + 1 END)"
+        )
+        lo = f"GREATEST(LEAST({b}, {b} + ({ln})), 1)"
+        hi = f"LEAST(GREATEST({b}, {b} + ({ln})), length(({s})) + 1)"
+        return (
+            f"(CASE WHEN ({s}) IS NULL OR ({st}) IS NULL OR ({ln}) IS NULL "
+            f"THEN NULL WHEN {hi} > {lo} "
+            f"THEN substring(({s}), {lo}, {hi} - {lo}) ELSE '' END)"
+        )
 
     # -- sweep batch 9: aggregate-function semantics ------------------------
 
@@ -5836,16 +5473,9 @@ class SqlRewriter:
         - aggregate ``FILTER (cond)`` without the WHERE keyword gains
           it (Spark requires FILTER (WHERE …)).
         """
-        pos = 0
-        while True:
-            m = self._search_code(self._SKEW_KURT_RE, sql, pos)
-            if not m:
-                break
-            close = self._find_close(sql, sql.index("(", m.end() - 1))
-            if close == -1:
-                break
-            a = sql[m.end() : close]
-            if re.match(r"(?i)over\b", sql[close + 1 :].lstrip()):
+
+        def skew_kurt(m, a):
+            if re.match(r"(?i)over\b", m.string[self._close_of(m) + 1 :].lstrip()):
                 raise UQueryError.sql_error(
                     "skewness/kurtosis OVER windows are not supported "
                     "(sample-estimator correction needs a framed count)"
@@ -5858,29 +5488,38 @@ class SqlRewriter:
             # try_divide: n <= 2 (skew) / n <= 3 (kurt) hit a zero divisor
             # and must yield NULL like DuckDB — ANSI mode would throw
             if m.group(1).lower() == "kurtosis":
-                repl = (
+                return (
                     f"(try_divide({n} - 1, ({n} - 2) * ({n} - 3)) * "
                     f"(({n} + 1) * kurtosis(({a})) + 6))"
                 )
-            else:
-                repl = (
-                    f"try_divide(skewness(({a})) * sqrt({n} * ({n} - 1)), {n} - 2)"
-                )
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
-        pos = 0
-        while True:
-            hit = self._call_args(self._ANY_VALUE_RE, sql, pos)
-            if not hit:
-                break
-            m, close, args = hit
-            if len(args) != 1:
-                pos = m.end()  # already 2-arg (our own output) — leave
-                continue
-            if re.search(r"(?i)\border\s+by\b", args[0]):
-                pos = m.end()  # ordered form — batch-18 pass below
-                continue
-            sql = sql[: m.start()] + f"any_value(({args[0]}), true)" + sql[close + 1 :]
+            return f"try_divide(skewness(({a})) * sqrt({n} * ({n} - 1)), {n} - 2)"
+
+        def any_value(m, args):
+            # 2-arg is our own output; the ordered form is the batch-18
+            # pass below
+            if len(args) != 1 or re.search(r"(?i)\border\s+by\b", args[0]):
+                return None
+            return f"any_value(({args[0]}), true)"
+
+        def arg_null(m, args):
+            if len(args) != 2:
+                raise UQueryError.sql_error("arg_min_null/arg_max_null expect 2 args")
+            fn = "min_by" if m.group(1).lower() == "min" else "max_by"
+            # struct-wrap the value: Spark 4.1's min_by/max_by SKIP
+            # rows whose value is NULL, but arg_*_null exists precisely
+            # to keep them — a struct is non-NULL even when its field is
+            return f"({fn}(named_struct('v', ({args[0]})), ({args[1]})).v)"
+
+        def strip_order(m, inner):
+            ob = next(
+                (s for s, _e, _w in self._scan_top_level(inner, {"order"})), None
+            )
+            if ob is not None and re.match(r"(?i)order\s+by\b", inner[ob:]):
+                return m.group(0) + inner[:ob].rstrip() + ")"
+            return None
+
+        sql = self._map_calls(self._SKEW_KURT_RE, skew_kurt, sql, raw=True)
+        sql = self._map_calls(self._ANY_VALUE_RE, any_value, sql)
         # wave-5 closes (round 10): kurtosis_pop is Spark's NATIVE
         # kurtosis (population excess g2 — DuckDB-verified numerically);
         # it must map AFTER the sample-correction loop above, which
@@ -5888,88 +5527,41 @@ class SqlRewriter:
         # stddev_pop / sqrt(n) (probed: sem of one value is 0.0, so the
         # POPULATION deviation, not samp); arg_min_null/arg_max_null
         # keep NULL-valued rows → Spark's bare min_by/max_by (the skip
-        # wrap in _rewrite_b28_aggs exists precisely because the bare
+        # wrap in _rewrite_arg_max_avg_corr exists precisely because the bare
         # forms DON'T skip).
-        while True:
-            hit = self._call_args(self._KURT_POP_RE, sql)
-            if not hit:
-                break
-            m, close, args = hit
-            if len(args) != 1:
-                raise UQueryError.sql_error("kurtosis_pop expects 1 arg")
-            sql = sql[: m.start()] + f"kurtosis(({args[0]}))" + sql[close + 1 :]
-        while True:
-            hit = self._call_args(self._SEM_RE, sql)
-            if not hit:
-                break
-            m, close, args = hit
-            if len(args) != 1:
-                raise UQueryError.sql_error("sem expects 1 arg")
-            a = args[0]
-            sql = (
-                sql[: m.start()]
-                + f"try_divide(stddev_pop(CAST(({a}) AS DOUBLE)), sqrt(count(({a}))))"
-                + sql[close + 1 :]
-            )
-        while True:
-            hit = self._call_args(self._ARG_NULL_RE, sql)
-            if not hit:
-                break
-            m, close, args = hit
-            if len(args) != 2:
-                raise UQueryError.sql_error("arg_min_null/arg_max_null expect 2 args")
-            fn = "min_by" if m.group(1).lower() == "min" else "max_by"
-            # struct-wrap the value: Spark 4.1's min_by/max_by SKIP
-            # rows whose value is NULL, but arg_*_null exists precisely
-            # to keep them — a struct is non-NULL even when its field is
-            sql = (
-                sql[: m.start()]
-                + f"({fn}(named_struct('v', ({args[0]})), ({args[1]})).v)"
-                + sql[close + 1 :]
-            )
-        while True:
-            hit = self._call_args(self._FAVG_RE, sql)
-            if not hit:
-                break
-            m, close, args = hit
-            if len(args) != 1:
-                raise UQueryError.sql_error("favg/fsum/kahan_sum expect 1 arg")
-            fn = "avg" if m.group(1).lower() == "favg" else "sum"
-            sql = (
-                sql[: m.start()]
-                + f"{fn}(CAST(({args[0]}) AS DOUBLE))"
-                + sql[close + 1 :]
-            )
-        while True:
-            hit = self._call_args(self._GEOMEAN_RE, sql)
-            if not hit:
-                break
-            m, close, args = hit
-            if len(args) != 1:
-                raise UQueryError.sql_error("geomean expects 1 arg")
-            sql = (
-                sql[: m.start()]
-                + f"exp(avg(ln(CAST(({args[0]}) AS DOUBLE))))"
-                + sql[close + 1 :]
-            )
+        sql = self._map_calls(
+            self._KURT_POP_RE,
+            self._one_arg("kurtosis_pop expects 1 arg", lambda m, a: f"kurtosis(({a}))"),
+            sql,
+        )
+        sql = self._map_calls(
+            self._SEM_RE,
+            self._one_arg(
+                "sem expects 1 arg",
+                lambda m, a: f"try_divide(stddev_pop(CAST(({a}) AS DOUBLE)), sqrt(count(({a}))))",
+            ),
+            sql,
+        )
+        sql = self._map_calls(self._ARG_NULL_RE, arg_null, sql)
+        sql = self._map_calls(
+            self._FAVG_RE,
+            self._one_arg(
+                "favg/fsum/kahan_sum expect 1 arg",
+                lambda m, a: (
+                    f"{'avg' if m.group(1).lower() == 'favg' else 'sum'}(CAST(({a}) AS DOUBLE))"
+                ),
+            ),
+            sql,
+        )
+        sql = self._map_calls(
+            self._GEOMEAN_RE,
+            self._one_arg(
+                "geomean expects 1 arg", lambda m, a: f"exp(avg(ln(CAST(({a}) AS DOUBLE))))"
+            ),
+            sql,
+        )
         # strip no-op ORDER BY inside order-insensitive aggregates
-        pos = 0
-        while True:
-            m = self._search_code(self._AGG_ORDER_RE, sql, pos)
-            if not m:
-                break
-            close = self._find_close(sql, sql.index("(", m.end() - 1))
-            if close == -1:
-                break
-            inner = sql[m.end() : close]
-            ob = next(
-                (s for s, _e, _w in self._scan_top_level(inner, {"order"})), None
-            )
-            if ob is not None and re.match(r"(?i)order\s+by\b", inner[ob:]):
-                sql = sql[: m.end()] + inner[:ob].rstrip() + sql[close:]
-                pos = m.start()
-            else:
-                pos = m.end()
+        sql = self._map_calls(self._AGG_ORDER_RE, strip_order, sql, raw=True)
         sql = self._FILTER_NO_WHERE_RE.sub(lambda mm: mm.group(1) + "WHERE ", sql)
         # arbitrary = first row's value, NULL included — Spark any_value's
         # DEFAULT. Renamed here (not _FN_RENAMES) so the any_value loop
@@ -5980,10 +5572,11 @@ class SqlRewriter:
     # -- sweep batch 10: datetime corners -----------------------------------
 
     _EXTRACT_SPECIAL_RE = re.compile(
-        r"(?i)\bextract\s*\(\s*(dow|dayofweek|weekday|epoch|microseconds|"
+        r"(?i)\bextract\s*\((?=\s*(dow|dayofweek|weekday|epoch|microseconds|"
         r"milliseconds|isodow|yearweek|century|isoyear|week|era|decade|"
-        r"millennium)\s+from\b"
+        r"millennium)\s+from\b)"
     )
+    _EXTRACT_FIELD_RE = re.compile(r"(?is)^\s*\w+\s+from\b")
     _ERA_FN_RE = re.compile(r"(?i)\bera\s*\(")
     _DOW_FAMILY_RE = re.compile(r"(?i)\b(dow|dayofweek|weekday)\s*\(")
     _SUBSECOND_RE = re.compile(r"(?i)\b(microseconds|milliseconds)\s*\(")
@@ -6021,25 +5614,17 @@ class SqlRewriter:
         # engine-numbered part string bypassed the conversions below
         # (datepart('dow', x) reached Spark's Sunday-1 date_part) —
         # route it to the same function forms EXTRACT uses
-        pos28 = 0
         dp_re = re.compile(
-            r"(?i)\b(?:date_part|datepart)\s*\(\s*'(dow|dayofweek|weekday|"
+            r"(?i)\b(?:date_part|datepart)\s*\((?=\s*'(dow|dayofweek|weekday|"
             r"isodow|epoch|microseconds|milliseconds|week|yearweek|century|"
-            r"decade|millennium|julian|era)'\s*,"
+            r"decade|millennium|julian|era)'\s*,)"
         )
-        while True:
-            m = self._search_code(dp_re, sql, pos28)
-            if not m:
-                break
-            open_i = sql.index("(", m.start())
-            close = self._find_close(sql, open_i)
-            if close == -1:
-                break
-            fld = m.group(1).lower()
-            e = sql[m.end() : close]
-            repl = f"{fld}({e})"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos28 = m.start()
+        sql = self._map_calls(
+            dp_re,
+            lambda m, inner: f"{m.group(1).lower()}({inner[inner.index(',') + 1 :]})",
+            sql,
+            raw=True,
+        )
         # round 8 (TIME-graduation probe catch, applies to TIMESTAMP and
         # INTERVAL too): DuckDB's EXTRACT(SECOND ...) is a truncated
         # BIGINT (…45.5 → 45) where Spark returns DECIMAL(8,6) 45.5 —
@@ -6047,134 +5632,102 @@ class SqlRewriter:
         # (covers time/timestamp/interval; toward-zero truncation
         # matches for negative intervals).
         sec_re = re.compile(
-            r"(?i)\bextract\s*\(\s*(?:second|seconds|secs|sec)\s+from\b"
+            r"(?i)\bextract\s*\((?=\s*(?:second|seconds|secs|sec)\s+from\b)"
         )
         dpsec_re = re.compile(
-            r"(?i)\b(?:date_part|datepart)\s*\(\s*"
-            r"'(?:second|seconds|secs|sec|s)'\s*,"
+            r"(?i)\b(?:date_part|datepart)\s*\((?=\s*"
+            r"'(?:second|seconds|secs|sec|s)'\s*,)"
         )
-        possec = 0
-        while True:
-            m = self._search_code(sec_re, sql, possec)
-            if not m:
-                break
-            open_i = sql.index("(", m.start())
-            close = self._find_close(sql, open_i)
-            if close == -1:
-                break
-            # DIV 1, not CAST: Spark's decimal->integral cast ROUNDS
-            # (45.5 -> 46) where DuckDB truncates toward zero
-            repl = f"CAST(({sql[m.start() : close + 1]}) DIV 1 AS BIGINT)"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            possec = m.start() + len(repl)
-        possec = 0
-        while True:
-            m = self._search_code(dpsec_re, sql, possec)
-            if not m:
-                break
-            open_i = sql.index("(", m.start())
-            close = self._find_close(sql, open_i)
-            if close == -1:
-                break
-            e = sql[m.end() : close]
-            repl = f"CAST((EXTRACT(SECOND FROM {e})) DIV 1 AS BIGINT)"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            possec = m.start() + len(repl)
-        while True:
-            m = self._search_code(self._EXTRACT_SPECIAL_RE, sql)
-            if not m:
-                break
-            open_i = sql.index("(", m.start())
-            close = self._find_close(sql, open_i)
-            if close == -1:
-                break
-            fld = m.group(1).lower()
-            e = sql[m.end() : close]
-            sql = sql[: m.start()] + f"{fld}({e})" + sql[close + 1 :]
-        # era: CE = 1, BC = 0 (batch 15; DuckDB-verified — year <= 0 is
-        # BC in the proleptic calendar). Both EXTRACT (converted above)
-        # and the function form.
-        while True:
-            hit = self._call_args(self._ERA_FN_RE, sql)
-            if not hit:
-                break
-            m, close, args = hit
-            if len(args) != 1:
-                raise UQueryError.sql_error("era expects 1 arg")
-            repl = f"(CASE WHEN year(({args[0]})) >= 1 THEN 1 ELSE 0 END)"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-        pos = 0
-        while True:
-            hit = self._call_args(self._DOW_FAMILY_RE, sql, pos)
-            if not hit:
-                break
-            m, close, args = hit
-            if len(args) != 1:
-                raise UQueryError.sql_error("dow/dayofweek/weekday expect 1 arg")
-            repl = f"(dayofweek(({args[0]})) - 1)"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
-        while True:
-            hit = self._call_args(self._SUBSECOND_RE, sql)
-            if not hit:
-                break
-            m, close, args = hit
-            if len(args) != 1:
-                raise UQueryError.sql_error("microseconds/milliseconds expect 1 arg")
+
+        def subsecond(m, a):
             scale = 1_000_000 if m.group(1).lower() == "microseconds" else 1000
             # floor BEFORE the cast: DuckDB milliseconds TRUNCATES the
             # microsecond remainder, and a bare fractional CAST would get
             # the DuckDB-cast rounding treatment from _rewrite_cast
-            repl = (
-                f"CAST(floor(CAST(date_format(CAST(({args[0]}) AS TIMESTAMP), "
+            return (
+                f"CAST(floor(CAST(date_format(CAST(({a}) AS TIMESTAMP), "
                 f"'ss.SSSSSS') AS DECIMAL(9,6)) * {scale}) AS BIGINT)"
             )
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-        while True:
-            hit = self._call_args(self._JULIAN_RE, sql)
-            if not hit:
-                break
-            m, close, args = hit
-            if len(args) != 1:
-                raise UQueryError.sql_error("julian expects 1 arg")
-            repl = (
-                f"(2440588.0 + CAST(unix_micros(CAST(({args[0]}) AS TIMESTAMP)) "
-                f"AS DOUBLE) / 86400000000.0)"
+
+        # DIV 1, not CAST: Spark's decimal->integral cast ROUNDS
+        # (45.5 -> 46) where DuckDB truncates toward zero
+        sql = self._map_calls(
+            sec_re, lambda m, inner: f"CAST(({m.group(0)}{inner})) DIV 1 AS BIGINT)", sql, raw=True
+        )
+        sql = self._map_calls(
+            dpsec_re,
+            lambda m, inner: (
+                f"CAST((EXTRACT(SECOND FROM {inner[inner.index(',') + 1 :]})) DIV 1 AS BIGINT)"
+            ),
+            sql,
+            raw=True,
+        )
+        sql = self._map_calls(
+            self._EXTRACT_SPECIAL_RE,
+            lambda m, inner: (
+                f"{m.group(1).lower()}({inner[self._EXTRACT_FIELD_RE.match(inner).end() :]})"
+            ),
+            sql,
+            raw=True,
+        )
+        # era: CE = 1, BC = 0 (batch 15; DuckDB-verified — year <= 0 is
+        # BC in the proleptic calendar). Both EXTRACT (converted above)
+        # and the function form.
+        sql = self._map_calls(
+            self._ERA_FN_RE,
+            self._one_arg(
+                "era expects 1 arg", lambda m, a: f"(CASE WHEN year(({a})) >= 1 THEN 1 ELSE 0 END)"
+            ),
+            sql,
+        )
+        sql = self._map_calls(
+            self._DOW_FAMILY_RE,
+            self._one_arg(
+                "dow/dayofweek/weekday expect 1 arg", lambda m, a: f"(dayofweek(({a})) - 1)"
+            ),
+            sql,
+        )
+        sql = self._map_calls(
+            self._SUBSECOND_RE,
+            self._one_arg("microseconds/milliseconds expect 1 arg", subsecond),
+            sql,
+        )
+        sql = self._map_calls(
+            self._JULIAN_RE,
+            self._one_arg(
+                "julian expects 1 arg",
+                lambda m, a: (
+                    f"(2440588.0 + CAST(unix_micros(CAST(({a}) AS TIMESTAMP)) "
+                    f"AS DOUBLE) / 86400000000.0)"
+                ),
+            ),
+            sql,
+        )
+        return self._map_calls(self._DATE_SUB_RE, self._translate_date_sub, sql)
+
+    def _translate_date_sub(self, m, args: list[str]) -> str | None:
+        if len(args) != 3:
+            return None  # Spark's own 2-arg date_sub — leave native
+        unit = (self._lit_parse(args[0]) or "").lower().rstrip("s")
+        unit = {"mon": "month", "yr": "year", "min": "minute", "sec": "second"}.get(unit, unit)
+        a = f"CAST(({args[1]}) AS TIMESTAMP)"
+        b = f"CAST(({args[2]}) AS TIMESTAMP)"
+        if unit in ("year", "quarter", "month"):
+            div = {"year": 12, "quarter": 3, "month": 1}[unit]
+            mb = f"months_between({b}, {a})"
+            # truncate toward zero explicitly — a bare CAST here would
+            # get the DuckDB-cast ROUNDING treatment from
+            # _rewrite_cast downstream (floor/ceil return BIGINT)
+            return (
+                f"(CASE WHEN {mb} >= 0 THEN floor({mb} / {div}) "
+                f"ELSE ceil({mb} / {div}) END)"
             )
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-        pos = 0
-        while True:
-            hit = self._call_args(self._DATE_SUB_RE, sql, pos)
-            if not hit:
-                break
-            m, close, args = hit
-            if len(args) != 3:
-                pos = m.end()  # Spark's own 2-arg date_sub — leave native
-                continue
-            unit = (self._lit_parse(args[0]) or "").lower().rstrip("s")
-            unit = {"mon": "month", "yr": "year", "min": "minute", "sec": "second"}.get(unit, unit)
-            a = f"CAST(({args[1]}) AS TIMESTAMP)"
-            b = f"CAST(({args[2]}) AS TIMESTAMP)"
-            if unit in ("year", "quarter", "month"):
-                div = {"year": 12, "quarter": 3, "month": 1}[unit]
-                mb = f"months_between({b}, {a})"
-                # truncate toward zero explicitly — a bare CAST here would
-                # get the DuckDB-cast ROUNDING treatment from
-                # _rewrite_cast downstream (floor/ceil return BIGINT)
-                repl = (
-                    f"(CASE WHEN {mb} >= 0 THEN floor({mb} / {div}) "
-                    f"ELSE ceil({mb} / {div}) END)"
-                )
-            elif unit in self._DATE_SUB_US:
-                us = self._DATE_SUB_US[unit]
-                repl = f"((unix_micros({b}) - unix_micros({a})) div {us})"
-            else:
-                raise UQueryError.sql_error(
-                    f"date_sub: unsupported unit '{unit}'"
-                )
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
-        return sql
+        if unit in self._DATE_SUB_US:
+            us = self._DATE_SUB_US[unit]
+            return f"((unix_micros({b}) - unix_micros({a})) div {us})"
+        raise UQueryError.sql_error(
+            f"date_sub: unsupported unit '{unit}'"
+        )
 
     # -- sweep batch 11: string/list function corners -----------------------
 
@@ -6211,35 +5764,23 @@ class SqlRewriter:
         ``hash()`` stays native and engine-specific (documented — like
         random(), its VALUES are not portable, only its distribution).
         """
-        pos = 0
-        while True:
-            hit = self._call_args(self._LEFT_RIGHT_RE, sql, pos)
-            if not hit:
-                break
-            m, close, args = hit
+
+        def left_right(m, args):
             if len(args) != 2 or (
                 self._POS_INT_RE.match(args[1]) and int(args[1]) >= 0
             ):
-                # scan INSIDE the skipped call — right(right(s, -1), 1)
-                # has a negative inner call (fuzzer catch, batch 28)
-                pos = m.end()
-                continue
+                return None
             fn = m.group(1).lower()
-            # nested left/right in the args translate first (the repl
-            # embeds s twice; skipping past it hid inner negatives)
-            s, n = (self._rewrite_string_list_corners(a) for a in args)
+            s, n = args
             repl = (
                 f"{fn}(({s}), CASE WHEN ({n}) < 0 "
                 f"THEN GREATEST(length(({s})) + ({n}), 0) ELSE ({n}) END)"
             )
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
-        pos = 0
-        while True:
-            hit = self._call_args(self._STRING_AGG1_RE, sql, pos)
-            if not hit:
-                break
-            m, close, args = hit
+            return repl
+
+        sql = self._map_calls(self._LEFT_RIGHT_RE, left_right, sql)
+
+        def string_agg1(m, args):
             is_gc = "group_concat" in m.group(0).lower()
             if len(args) == 1:
                 a = args[0]
@@ -6255,15 +5796,12 @@ class SqlRewriter:
             elif is_gc and len(args) == 2:
                 repl = f"string_agg({args[0]}, {args[1]})"
             else:
-                pos = m.end()
-                continue
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
-        while True:
-            hit = self._call_args(self._CHR_RE, sql)
-            if not hit:
-                break
-            m, close, args = hit
+                return None
+            return repl
+
+        sql = self._map_calls(self._STRING_AGG1_RE, string_agg1, sql)
+
+        def chr_(m, args):
             if len(args) != 1:
                 raise UQueryError.sql_error("chr expects 1 arg")
             c = f"({args[0]})"
@@ -6284,21 +5822,19 @@ class SqlRewriter:
                 f"WHEN {c} < 65536 THEN decode(unhex({three}), 'UTF-8') "
                 f"ELSE decode(unhex({four}), 'UTF-8') END)"
             )
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-        while True:
-            hit = self._call_args(self._PARSE_FILENAME_RE, sql)
-            if not hit:
-                break
-            m, close, args = hit
+            return repl
+
+        sql = self._map_calls(self._CHR_RE, chr_, sql)
+
+        def parse_filename(m, args):
             if len(args) != 1:
                 raise UQueryError.sql_error("parse_filename expects 1 arg (path)")
             repl = f"regexp_extract(({args[0]}), '([^/\\\\\\\\]*)$', 1)"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-        while True:
-            hit = self._call_args(self._LIST_METRIC_RE, sql)
-            if not hit:
-                break
-            m, close, args = hit
+            return repl
+
+        sql = self._map_calls(self._PARSE_FILENAME_RE, parse_filename, sql)
+
+        def list_metric(m, args):
             if len(args) != 2:
                 raise UQueryError.sql_error("list metric functions expect 2 args")
             a = f"transform(({args[0]}), uq_lm -> CAST(uq_lm AS DOUBLE))"
@@ -6333,7 +5869,9 @@ class SqlRewriter:
                     f"0D, (uq_acc, uq_v) -> uq_acc + uq_v))"
                 )
                 repl = f"(({dot}) / ({norm(a)} * {norm(b)}))"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
+            return repl
+
+        sql = self._map_calls(self._LIST_METRIC_RE, list_metric, sql)
         # batch-12 additions: remaining map/list functions
         for regex, n_args, tmpl in (
             (
@@ -6394,22 +5932,17 @@ class SqlRewriter:
                 "ELSE IF(uq_l.i < uq_r.i, -1, 1) END), uq_s -> uq_s.i)",
             ),
         ):
-            while True:
-                hit = self._call_args(regex, sql)
-                if not hit:
-                    break
-                m, close, args = hit
+            def template(m, args):
                 if len(args) != n_args:
                     raise UQueryError.sql_error(
                         f"{m.group(0).strip('( ')} expects {n_args} arg(s)"
                     )
                 repl = tmpl.format(a=args[0], b=args[-1])
-                sql = sql[: m.start()] + repl + sql[close + 1 :]
-        while True:
-            hit = self._call_args(self._JACCARD_RE, sql)
-            if not hit:
-                break
-            m, close, args = hit
+                return repl
+
+            sql = self._map_calls(regex, template, sql)
+
+        def jaccard(m, args):
             if len(args) != 2:
                 raise UQueryError.sql_error("jaccard expects 2 args")
             sa = f"array_distinct(split(({args[0]}), ''))"
@@ -6418,12 +5951,11 @@ class SqlRewriter:
                 f"(CAST(size(array_intersect({sa}, {sb})) AS DOUBLE) / "
                 f"size(array_union({sa}, {sb})))"
             )
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-        while True:
-            hit = self._call_args(self._REGEXP_FULL_RE, sql)
-            if not hit:
-                break
-            m, close, args = hit
+            return repl
+
+        sql = self._map_calls(self._JACCARD_RE, jaccard, sql)
+
+        def regexp_full(m, args):
             if len(args) != 2:
                 raise UQueryError.sql_error("regexp_full_match expects 2 args")
             pat = self._lit_parse(args[1])
@@ -6432,12 +5964,11 @@ class SqlRewriter:
                     "regexp_full_match: literal patterns only"
                 )
             repl = f"(({args[0]}) RLIKE '^(?:{pat})$')"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-        while True:
-            hit = self._call_args(self._LIKE_ESCAPE_RE, sql)
-            if not hit:
-                break
-            m, close, args = hit
+            return repl
+
+        sql = self._map_calls(self._REGEXP_FULL_RE, regexp_full, sql)
+
+        def like_escape(m, args):
             if len(args) != 3:
                 raise UQueryError.sql_error("like_escape expects (string, pattern, escape)")
             esc = self._lit_parse(args[2])
@@ -6470,7 +6001,9 @@ class SqlRewriter:
                     i += 1
                 pat_arg = "'" + "".join(out).replace("'", "''") + "'"
             repl = f"(({args[0]}) {neg}{op} ({pat_arg}) ESCAPE '{esc}')"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
+            return repl
+
+        sql = self._map_calls(self._LIKE_ESCAPE_RE, like_escape, sql)
         return sql
 
     # -- sweep batch 7: hamming / to_base -----------------------------------
@@ -6484,11 +6017,8 @@ class SqlRewriter:
         same failure DuckDB produces. to_base(n, b[, min_len]) →
         conv(n, 10, b) zero-padded; negative n raises like DuckDB
         (conv would silently wrap to unsigned)."""
-        while True:
-            hit = self._call_args(self._HAMMING_RE, sql)
-            if not hit:
-                break
-            m, close, args = hit
+
+        def hamming(m, args):
             if len(args) != 2:
                 raise UQueryError.sql_error("hamming expects exactly 2 args")
             a, b = args
@@ -6498,12 +6028,11 @@ class SqlRewriter:
 
             register_parity_udfs(self.spark)
             repl = f"uq_hamming_bytes(({a}), ({b}))"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-        while True:
-            hit = self._call_args(self._TO_BASE_RE, sql)
-            if not hit:
-                break
-            m, close, args = hit
+            return repl
+
+        sql = self._map_calls(self._HAMMING_RE, hamming, sql)
+
+        def to_base(m, args):
             if len(args) not in (2, 3):
                 raise UQueryError.sql_error("to_base expects (number, radix[, min_length])")
             a, b = args[0], args[1]
@@ -6515,7 +6044,9 @@ class SqlRewriter:
                 f"THEN raise_error('to_base: number must be >= 0') "
                 f"ELSE {core} END)"
             )
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
+            return repl
+
+        sql = self._map_calls(self._TO_BASE_RE, to_base, sql)
         return sql
 
     # -- sweep batch 7: list-typed date_part, map_from_entries tuples ------
@@ -6530,11 +6061,9 @@ class SqlRewriter:
         """DuckDB ``date_part(['year','month'], e)`` returns a STRUCT of
         the named parts → named_struct over Spark's scalar date_part.
         Runs before the bracket pass (the list must still be [...])."""
-        hit = self._call_args(self._DATE_PART_LIST_RE, sql)
-        if not hit:
-            return sql
-        m, close, args = hit
-        tail = self._rewrite_date_part_list(sql[close + 1 :])
+        return self._map_calls(self._DATE_PART_LIST_RE, self._translate_date_part_list, sql)
+
+    def _translate_date_part_list(self, m, args: list[str]) -> str:
         if len(args) != 2:
             raise UQueryError.sql_error("date_part([...], expr) expects 2 args")
         lst = args[0].strip()
@@ -6553,7 +6082,7 @@ class SqlRewriter:
         fields = ", ".join(
             f"'{p}', date_part('{p.upper()}', ({e}))" for p in parts
         )
-        return sql[: m.start()] + f"named_struct({fields})" + tail
+        return f"named_struct({fields})"
 
     _MAP_ENTRIES_RE = re.compile(r"(?i)\bmap_from_entries\s*\(")
 
@@ -6562,11 +6091,9 @@ class SqlRewriter:
         (``[('a', 1), …]``) — each top-level parenthesised tuple becomes
         struct(...). Runs before the bracket pass; struct-literal
         entries ({'k':…}) are handled by the struct-literal pass."""
-        hit = self._call_args(self._MAP_ENTRIES_RE, sql)
-        if not hit:
-            return sql
-        m, close, args = hit
-        tail = self._rewrite_map_entries_tuples(sql[close + 1 :])
+        return self._map_calls(self._MAP_ENTRIES_RE, self._translate_map_entries, sql)
+
+    def _translate_map_entries(self, m, args: list[str]) -> str:
         if len(args) == 1:
             lst = args[0].strip()
             if lst.startswith("[") and lst.endswith("]"):
@@ -6582,8 +6109,7 @@ class SqlRewriter:
                     else:
                         out.append(el)
                 args = ["[" + ", ".join(out) + "]"]
-        inner = ", ".join(args)
-        return sql[: m.start()] + f"map_from_entries({inner})" + tail
+        return f"map_from_entries({', '.join(args)})"
 
     # -- sweep batch 7: lambda index args (DuckDB 1-based → Spark 0-based) --
 
@@ -6599,15 +6125,8 @@ class SqlRewriter:
         Runs right after the function renames (list_transform/list_filter
         are already transform/filter) and before any pass that emits its
         own — always single-arg — lambdas."""
-        pos = 0
-        while True:
-            hit = self._call_args(self._LAMBDA_FN_RE, sql, pos)
-            if not hit:
-                break
-            m, close, args = hit
-            # recurse into the args FIRST so nested transform/filter
-            # calls are shifted exactly once, then skip the whole span
-            args = [self._rewrite_lambda_index(a) for a in args]
+
+        def shift_index(m, args):
             if len(args) == 2:
                 lm = self._LAMBDA2_RE.match(args[1])
                 if lm:
@@ -6617,8 +6136,9 @@ class SqlRewriter:
                     )
                     args[1] = f"({lm.group('x')}, {idx}) -> {body}"
             repl = f"{m.group(1)}({', '.join(a.strip() for a in args)})"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
+            return repl
+
+        sql = self._map_calls(self._LAMBDA_FN_RE, shift_index, sql)
         return sql
 
     def _rewrite_list_index(self, sql: str) -> str:
@@ -6628,11 +6148,8 @@ class SqlRewriter:
         ANSI element_at ERRORS on out-of-bounds and even try_element_at
         errors on 0 (batch-11 ANSI follow-up). Nonzero literal indices
         skip the guard."""
-        while True:
-            hit = self._call_args(self._LIST_INDEX_RE, sql)
-            if not hit:
-                break
-            m, close, args = hit
+
+        def list_index(m, args):
             if len(args) != 2:
                 raise UQueryError.sql_error("list_element/list_extract expect 2 args")
             a, i = args
@@ -6654,7 +6171,9 @@ class SqlRewriter:
             # uq_poly(fallback=string form, preferred=array form); the
             # LIMIT-0 probe picks whichever analyzes.
             repl = f"uq_poly({s_form}, {arr})"
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
+            return repl
+
+        sql = self._map_calls(self._LIST_INDEX_RE, list_index, sql)
         return sql
 
     def _rewrite_list_nulls(self, sql: str) -> str:
@@ -6687,17 +6206,15 @@ class SqlRewriter:
                 "coalesce(({b}), ({a}))), false) END)",
             ),
         ):
-            while True:
-                hit = self._call_args(regex, sql)
-                if not hit:
-                    break
-                m, close, args = hit
+            def template(m, args):
                 if len(args) != 2:
                     raise UQueryError.sql_error(
                         "list_concat/list_has_any expect exactly 2 args"
                     )
                 repl = tmpl.format(a=args[0], b=args[1])
-                sql = sql[: m.start()] + repl + sql[close + 1 :]
+                return repl
+
+            sql = self._map_calls(regex, template, sql)
         return sql
 
     # -- sweep batch 7: ORDER BY null placement, named-window extension,
@@ -6791,23 +6308,17 @@ class SqlRewriter:
                 name, open_i = more.group(1), close + more.end()
         if not defs:
             return sql
-        pos = 0
-        while True:
-            m = self._search_code(self._OVER_NAMED_RE, sql, pos)
-            if not m:
-                return sql
-            name = m.group(1).lower()
-            if name not in defs:
-                pos = m.end()
-                continue
-            # inline: OVER (w <rest>) → OVER (<spec> <rest>)
-            word_start = m.start(1)
-            repl = defs[name]
-            sql = sql[:word_start] + repl + sql[m.end(1) :]
-            pos = word_start + len(repl)
+        # inline: OVER (w <rest>) → OVER (<spec> <rest>)
+        return self._sub_code_fn(
+            self._OVER_NAMED_RE,
+            lambda m: (
+                m.group(0)[: m.start(1) - m.start()] + defs.get(m.group(1).lower(), m.group(1))
+            ),
+            sql,
+        )
 
     _WINDOW_FILTER_RE = re.compile(r"(?i)\)\s*filter\s*\(\s*where\b")
-    _DISTINCT_AGG_RE = re.compile(r"(?i)\b(\w+)\s*\(\s*distinct\b")
+    _DISTINCT_AGG_RE = re.compile(r"(?i)\b(\w+)\s*\((?=\s*distinct\b)")
 
     def _rewrite_distinct_over(self, sql: str) -> str:
         """Batch-15: DISTINCT aggregates over windows (running distinct
@@ -6818,60 +6329,51 @@ class SqlRewriter:
         DuckDB), min/max → DISTINCT dropped (no-op). Other aggregates
         raise. The repeated collect_set is one physical window function
         (identical expressions dedupe)."""
-        pos = 0
-        while True:
-            m = self._search_code(self._DISTINCT_AGG_RE, sql, pos)
-            if not m:
-                return sql
-            open_i = sql.index("(", m.end(1))
-            close = self._find_close(sql, open_i)
-            if close == -1:
-                return sql
-            after = sql[close + 1 :]
-            om = re.match(r"(?i)\s*over\s*", after)
-            if not om:
-                pos = open_i + 1  # plain DISTINCT aggregate — native
-                continue
-            rest = after[om.end() :]
-            if rest.startswith("("):
-                wclose = self._find_close(after, om.end())
-                if wclose == -1:
-                    return sql
-                win = after[om.end() : wclose + 1]
-                end = close + 1 + wclose + 1
-            else:
-                wm = re.match(r"\w+", rest)
-                if not wm:
-                    raise UQueryError.sql_error("OVER: expected window")
-                win = wm.group(0)
-                end = close + 1 + om.end() + wm.end()
-            fn = m.group(1).lower()
-            arg = re.sub(
-                r"(?i)^\s*distinct\b", "", sql[open_i + 1 : close]
-            ).strip()
-            cs = f"collect_set({arg}) OVER {win}"
-            if fn == "count":
-                repl = f"CAST(size({cs}) AS BIGINT)"
-            elif fn == "sum":
-                repl = (
-                    f"aggregate({cs}, try_element_at({cs}, 1) * 0, "
-                    f"(uq_a, uq_x) -> uq_a + uq_x)"
-                )
-            elif fn in ("avg", "mean"):
-                repl = (
-                    f"try_divide(aggregate({cs}, "
-                    f"CAST(try_element_at({cs}, 1) * 0 AS DOUBLE), "
-                    f"(uq_a, uq_x) -> uq_a + uq_x), CAST(size({cs}) AS DOUBLE))"
-                )
-            elif fn in ("min", "max"):
-                repl = f"{fn}({arg}) OVER {win}"
-            else:
-                raise UQueryError.sql_error(
-                    f"DISTINCT {fn}() over a window is not supported "
-                    "(count/sum/avg/min/max only)"
-                )
-            sql = sql[: m.start()] + repl + sql[end:]
-            pos = m.start() + len(repl)
+        return self._map_calls(self._DISTINCT_AGG_RE, self._translate_distinct_over, sql, raw=True)
+
+    def _translate_distinct_over(self, m, inner: str):
+        sql, close = m.string, self._close_of(m)
+        after = sql[close + 1 :]
+        om = re.match(r"(?i)\s*over\s*", after)
+        if not om:
+            return None  # plain DISTINCT aggregate — native
+        rest = after[om.end() :]
+        if rest.startswith("("):
+            wclose = self._find_close(after, om.end())
+            if wclose == -1:
+                return None
+            win = after[om.end() : wclose + 1]
+            end = close + 1 + wclose + 1
+        else:
+            wm = re.match(r"\w+", rest)
+            if not wm:
+                raise UQueryError.sql_error("OVER: expected window")
+            win = wm.group(0)
+            end = close + 1 + om.end() + wm.end()
+        fn = m.group(1).lower()
+        arg = re.sub(r"(?i)^\s*distinct\b", "", inner).strip()
+        cs = f"collect_set({arg}) OVER {win}"
+        if fn == "count":
+            repl = f"CAST(size({cs}) AS BIGINT)"
+        elif fn == "sum":
+            repl = (
+                f"aggregate({cs}, try_element_at({cs}, 1) * 0, "
+                f"(uq_a, uq_x) -> uq_a + uq_x)"
+            )
+        elif fn in ("avg", "mean"):
+            repl = (
+                f"try_divide(aggregate({cs}, "
+                f"CAST(try_element_at({cs}, 1) * 0 AS DOUBLE), "
+                f"(uq_a, uq_x) -> uq_a + uq_x), CAST(size({cs}) AS DOUBLE))"
+            )
+        elif fn in ("min", "max"):
+            repl = f"{fn}({arg}) OVER {win}"
+        else:
+            raise UQueryError.sql_error(
+                f"DISTINCT {fn}() over a window is not supported "
+                "(count/sum/avg/min/max only)"
+            )
+        return repl, end - 1
 
     def _rewrite_window_filter(self, sql: str) -> str:
         """Batch-13 sweep: aggregate ``FILTER`` over a WINDOW — DuckDB
@@ -7157,17 +6659,15 @@ class SqlRewriter:
             (self._MULTIPLY_RE, "(({a}) * ({b}))"),
             (self._MOD_FN_RE, "(({a}) % nullif(({b}), 0))"),
         ):
-            while True:
-                hit = self._call_args(regex, sql)
-                if not hit:
-                    break
-                m, close, args = hit
+            def template(m, args):
                 if len(args) != 2:
                     raise UQueryError.sql_error(
                         f"{m.group(0).rstrip('( ').strip()} expects exactly 2 args"
                     )
                 repl = tmpl.format(a=args[0], b=args[1])
-                sql = sql[: m.start()] + repl + sql[close + 1 :]
+                return repl
+
+            sql = self._map_calls(regex, template, sql)
         return sql
 
     # -- ASOF JOIN SQL form ------------------------------------------------
@@ -9267,12 +8767,7 @@ class SqlRewriter:
             ]
             return f"concat({', '.join(segs)})" if len(segs) > 1 else segs[0]
 
-        m = self._STRF_RE.search(sql)
-        while m:
-            close = self._find_close(sql, m.end() - 1)
-            if close == -1:
-                break
-            args = self._split_top(sql[m.end() : close], ",")
+        def translate(m, args):
             fn = {
                 "strftime": "date_format",
                 "strptime": "to_timestamp",
@@ -9316,9 +8811,7 @@ class SqlRewriter:
                         f"ELSE CAST(raise_error('strptime: no format matched') "
                         f"AS TIMESTAMP) END)"
                     )
-                sql = sql[: m.start()] + body + sql[close + 1 :]
-                m = self._STRF_RE.search(sql, m.start() + len(body))
-                continue
+                return body
             if len(args) == 2 and args[1].strip().startswith("'"):
                 fmt = args[1].strip()[1:-1]
                 a0 = args[0].strip()
@@ -9345,9 +8838,10 @@ class SqlRewriter:
                                 f"ELSE CAST(raise_error('strptime: input did not match format') "
                                 f"AS TIMESTAMP) END)"
                             )
-                sql = sql[: m.start()] + body + sql[close + 1 :]
-            m = self._STRF_RE.search(sql, m.start() + len(fn))
-        return sql
+                return body
+            return None
+
+        return self._map_calls(self._STRF_RE, translate, sql)
 
     # DuckDB len() is polymorphic (chars of a string / elements of a
     # list); Spark splits it into length() and size().
@@ -9500,15 +8994,10 @@ class SqlRewriter:
                 return h[2]
             return None
 
-        pos = 0
-        while True:
-            hit = self._call_args(self._TRY_RE, sql, pos)
-            if not hit:
-                return sql
-            m, close, args = hit
+        def translate(m, args):
             if len(args) != 1:
                 raise UQueryError.sql_error("TRY expects exactly 1 expression")
-            inner = self._rewrite_try_expr(args[0]).strip()
+            inner = args[0]
             sqrt_args = _whole(r"(?i)^sqrt\s*\(", inner)
             if _whole(r"(?i)^cast\s*\(", inner) is not None:
                 # a cast CHAIN (nested colon-casts have folded to
@@ -9550,8 +9039,9 @@ class SqlRewriter:
                     "ln/log/log2/log10, sqrt; division and modulo "
                     "by zero are already NULL)"
                 )
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
+            return repl
+
+        return self._map_calls(self._TRY_RE, translate, sql)
 
     def _rewrite_colon_cast(self, sql: str) -> str:
         """DuckDB ``expr::TYPE`` → ``CAST(expr AS TYPE)`` so the CAST pass
@@ -9599,14 +9089,10 @@ class SqlRewriter:
         fallback). probe_ok tries all three (batch-28 temporal-fuzzer
         catch first showed a NULLed sibling silently vetoing the
         date-widening arm)."""
-        while True:
-            h = self._call_args(self._UQ_POLY_ANY_RE, text)
-            if not h:
-                return text
-            hm, hclose, hargs = h
-            span = text[hm.start() : hclose + 1]
+
+        def neutralize(hm, hargs):
             kind = hm.group(1)
-            if token in span and len(hargs) in (2, 3):
+            if any(token in a for a in hargs) and len(hargs) in (2, 3):
                 inner = next((a for a in hargs if token in a), hargs[0])
             elif mode == "null":
                 inner = "NULL"
@@ -9621,7 +9107,9 @@ class SqlRewriter:
                 inner = f"element_at(({hargs[0]}), {hargs[1]})"
             else:
                 inner = hargs[0]
-            text = text[: hm.start()] + f"({inner})" + text[hclose + 1 :]
+            return f"({inner})"
+
+        return self._map_calls(self._UQ_POLY_ANY_RE, neutralize, text)
 
     _TIME_CAST_RE = re.compile(r"(?i)\b(try_)?cast\s*\(")
 
@@ -9880,13 +9368,18 @@ class SqlRewriter:
         return ok
 
     def _probe_analyzes_uncached(self, probe_sql: str) -> bool:
+        """True iff ``probe_sql`` analyzes. Only an analysis or parse
+        failure means "no": a transport failure (a dead gateway)
+        propagates rather than silently picking a fallback form."""
         jsession = getattr(self.spark, "_jsparkSession", None)
         if jsession is None:
+            from pyspark.errors import AnalysisException, ParseException
+
             try:
                 with _probe_quiet():
                     self.spark.sql(probe_sql)
                 return True
-            except Exception:
+            except (AnalysisException, ParseException):
                 return False
         from py4j import protocol as _p4jp
 
@@ -9910,7 +9403,7 @@ class SqlRewriter:
                     for temp_arg in temp_args:
                         if hasattr(temp_arg, "_detach"):
                             temp_arg._detach()
-            except Exception:
+            except _p4jp.Py4JJavaError:
                 return False
 
     def _time_wrap_probe(self, candidate_sql: str) -> bool:
@@ -10080,31 +9573,20 @@ class SqlRewriter:
         dispatches per occurrence with proper sibling neutralization —
         a compose-style probe breaks when one query holds several TIME
         casts (each slot's neutral form is itself unanalyzable)."""
-        pos = 0
-        while True:
-            hit = self._call_args(self._TIME_CAST_RE, sql, pos)
-            if not hit:
-                return sql
-            m, close, args = hit
-            parts = self._split_top(sql[m.end() : close], "as")
+
+        def translate(m, inner):
+            parts = self._split_top(inner, "as")
             if len(parts) != 2 or parts[1].strip().lower() != "time":
-                # advance past the opening only — a non-TIME cast may
-                # hold a TIME cast in its operand (CAST(CAST(ts AS
-                # TIME) AS VARCHAR))
-                pos = m.end()
-                continue
+                return None
             kw = (m.group(1) or "").upper()
-            # recurse into the operand FIRST: a nested TIME cast copied
-            # verbatim into both arms would otherwise never be marked
-            # (the linear scan skips past the replacement)
-            expr = self._rewrite_time_cast(parts[0].strip())
-            repl = (
+            expr = parts[0].strip()
+            return (
                 f"uq_poly({kw}CAST(date_format(({expr}), "
                 f"'HH:mm:ss.SSSSSS') AS TIME), "
                 f"{kw}CAST(({expr}) AS TIME))"
             )
-            sql = sql[: m.start()] + repl + sql[close + 1 :]
-            pos = m.start() + len(repl)
+
+        return self._map_calls(self._TIME_CAST_RE, translate, sql, raw=True)
 
     def _rewrite_poly_subscript(self, sql: str) -> str:
         """Resolve ``uq_poly(list_form, string_form)`` markers emitted by
@@ -10116,11 +9598,17 @@ class SqlRewriter:
         the operand is a string AND the string result fits the
         surrounding expression. Any probe failure falls back to the list
         form (the pre-round-6 behavior). Innermost markers resolve
-        first so nested subscripts compose."""
+        first so nested subscripts compose.
+
+        Each lap resolves one marker, so the marker count bounds the
+        laps; a marker left after that is an internal error (a 400),
+        never text naming ``uq_poly`` handed to Spark. The resolver
+        keeps its own scan: it picks one marker among all of them, and
+        each probe analyzes the whole statement as resolved so far."""
         if "uq_poly" not in sql:
             return sql
         TOKEN = "/*uq_probe_target*/"
-        for _ in range(100):  # bounded: one marker resolved per lap
+        for _ in range(len(self._UQ_POLY_ANY_RE.findall(sql))):
             hits = []
             pos = 0
             while True:
@@ -10223,6 +9711,8 @@ class SqlRewriter:
                 lst, st = args
                 chosen = st if probe_ok(st) else lst
             sql = sql[: m.start()] + f"({chosen})" + sql[close + 1 :]
+        if self._call_args(self._UQ_POLY_ANY_RE, sql):
+            raise UQueryError.sql_error("internal: polymorphic markers left unresolved")
         return sql
 
     def _rewrite_cast(self, sql: str) -> str:
@@ -10854,8 +10344,8 @@ class SqlRewriter:
         # single-element LIST, [] when missing) — exactly map_extract.
         # Must run before the bracket pass, whose step-slice output emits
         # Spark's own element_at().
-        sql = self._sub_code(
-            re.compile(r"(?i)\belement_at\s*\("), "map_extract(", sql
+        sql = self._sub_code_fn(
+            re.compile(r"(?i)\belement_at\s*\("), lambda _m: "map_extract(", sql
         )
         # bare struct literals AFTER map literals: `MAP {…}` must be
         # consumed first or the lookbehind would read it as a struct.
@@ -10880,14 +10370,14 @@ class SqlRewriter:
             from .functions.parity_udfs import register_parity_udfs
 
             register_parity_udfs(self.spark)
-            sql = self._sub_code(
+            sql = self._sub_code_fn(
                 re.compile(r"(?i)(?<![\w.])reverse\s*\("),
-                "uq_reverse_graphemes(",
+                lambda _m: "uq_reverse_graphemes(",
                 sql,
             )
         # restore the bracket pass's sentinel (list reversal is native)
-        sql = self._sub_code(
-            re.compile(r"\buq_native_reverse\s*\("), "reverse(", sql
+        sql = self._sub_code_fn(
+            re.compile(r"\buq_native_reverse\s*\("), lambda _m: "reverse(", sql
         )
         # batch-28 unicode matrix: DuckDB cases via utf8proc's SIMPLE
         # 1:1 mapping (upper('straße')='STRAẞE', no full/context maps)
@@ -10902,16 +10392,10 @@ class SqlRewriter:
             ("levenshtein", "levenshtein", "uq_lev_bytes", 2),
             ("editdist3", "levenshtein", "uq_lev_bytes", 2),
         ):
-            pat = re.compile(rf"(?i)(?<![\w.]){name}\s*\(")
-            pos2 = 0
-            while True:
-                hit = self._call_args(pat, sql, pos2)
-                if not hit:
-                    break
-                m2, close2, args2 = hit
+
+            def unicode_parity(m2, args2, native=native, udf=udf, nargs=nargs):
                 if len(args2) != nargs:
-                    pos2 = close2 + 1
-                    continue
+                    return None
                 from .functions.parity_udfs import register_parity_udfs
 
                 register_parity_udfs(self.spark)
@@ -10927,29 +10411,27 @@ class SqlRewriter:
                 # lambda — there the probe falls back to the native JVM
                 # form (residual deviation: non-ASCII casing INSIDE
                 # lambdas keeps full-map semantics; documented)
-                repl = f"uq_poly({native}({argtext}), {hybrid})"
-                sql = sql[: m2.start()] + repl + sql[close2 + 1 :]
-                pos2 = m2.start() + len(repl)
+                return f"uq_poly({native}({argtext}), {hybrid})"
+
+            sql = self._map_calls(
+                re.compile(rf"(?i)(?<![\w.]){name}\s*\("), unicode_parity, sql
+            )
         # batch-28: timezone_hour/minute are 0 for naive timestamps
         # (UTC session — DuckDB-verified), NULL-propagating
         for tzfn in ("timezone_hour", "timezone_minute"):
-            while True:
-                hit = self._call_args(
-                    re.compile(rf"(?i)\b{tzfn}\s*\("), sql
-                )
-                if not hit:
-                    break
-                m, close, args = hit
+
+            def tz_offset(m, args, tzfn=tzfn):
                 if len(args) != 1:
                     raise UQueryError.sql_error(f"{tzfn} expects 1 arg")
-                repl = (
+                return (
                     f"(CASE WHEN CAST(({args[0]}) AS TIMESTAMP) IS NULL "
                     f"THEN CAST(NULL AS BIGINT) ELSE 0 END)"
                 )
-                sql = sql[: m.start()] + repl + sql[close + 1 :]
+
+            sql = self._map_calls(re.compile(rf"(?i)\b{tzfn}\s*\("), tz_offset, sql)
         # round-8 gap scalars BEFORE the rename (2-arg array_length
         # collapses to the 1-arg form the rename maps to size)
-        sql = self._rewrite_b29_fns(sql)
+        sql = self._rewrite_regr_avg_array_length(sql)
         # 3-arg regexp_matches BEFORE the rename (the 1:1 rename to
         # regexp_like only fits the 2-arg form)
         sql = self._rewrite_regexp_matches_flags(sql)
@@ -10963,22 +10445,17 @@ class SqlRewriter:
         # regexp_split_to_table(s, re) is unnest∘regexp-split (r13
         # probe batch B — was UNRESOLVED_ROUTINE); rewritten BEFORE the
         # unnest pass so generator placement rules apply unchanged
-        while True:
-            hit = self._call_args(
-                re.compile(r"(?i)\bregexp_split_to_table\s*\("), sql
-            )
-            if not hit:
-                break
-            m, close, rst_args = hit
-            if len(rst_args) != 2:
+
+        def split_to_table(m, args):
+            if len(args) != 2:
                 raise UQueryError.sql_error(
                     "regexp_split_to_table expects (string, regex)"
                 )
-            sql = (
-                sql[: m.start()]
-                + f"unnest(split({rst_args[0]}, {rst_args[1]}, -1))"
-                + sql[close + 1 :]
-            )
+            return f"unnest(split({args[0]}, {args[1]}, -1))"
+
+        sql = self._map_calls(
+            re.compile(r"(?i)\bregexp_split_to_table\s*\("), split_to_table, sql
+        )
         sql = self._rewrite_unnest(sql)
         sql = self._rewrite_collate(sql)
         # list_distinct NULL removal BEFORE b17/scalar passes that emit
@@ -10986,20 +10463,20 @@ class SqlRewriter:
         sql = self._rewrite_list_distinct(sql)
         sql = self._rewrite_map_concat(sql)
         sql = self._rewrite_list_zip(sql)
-        sql = self._rewrite_b17_scalars(sql)
+        sql = self._rewrite_sign_encode_make_timestamp(sql)
         # batch-19 list family BEFORE list_aggregate (list_sum/avg/count
         # expand to list_aggregate text)
-        sql = self._rewrite_b19_fns(sql)
+        sql = self._rewrite_list_family(sql)
         sql = self._rewrite_lambda_index(sql)
         # batch-12 operator symbols BEFORE divide_xor (whose xor() output
         # emits a genuine XOR ^) and before the list-metric translations
         sql = self._rewrite_operator_symbols(sql)
         # batch-20 AFTER operator symbols (postfix ! must not see !~)
-        sql = self._rewrite_b20_fns(sql)
+        sql = self._rewrite_flatten_factorial_contains(sql)
         # batch-22: printf/graphemes/AT TIME ZONE/split_part(…, 0)
-        sql = self._rewrite_b22_fns(sql)
+        sql = self._rewrite_printf_graphemes_at_time_zone(sql)
         # batch-23: timezone()/bar()/bitstring()/date_trunc DATE units
-        sql = self._rewrite_b23_fns(sql)
+        sql = self._rewrite_timezone_bar_date_trunc(sql)
         # batch-8 scalar semantics BEFORE list_nulls (that pass emits
         # array concat() calls that must stay un-stringified)
         sql = self._rewrite_scalar_semantics(sql)
@@ -11007,7 +10484,7 @@ class SqlRewriter:
         # batch-28 agg fixes AFTER agg_semantics (ORDER BY stripping,
         # favg emission) and BEFORE first_last (its min_by/max_by
         # emissions keep NULL values by design)
-        sql = self._rewrite_b28_aggs(sql)
+        sql = self._rewrite_arg_max_avg_corr(sql)
         sql = self._rewrite_topn_minmax(sql)
         # unordered array_agg NULL parity AFTER agg_semantics (FILTER
         # gains its WHERE keyword there) and BEFORE the window passes
@@ -11042,7 +10519,7 @@ class SqlRewriter:
         sql = self._rewrite_json_valid(sql)
         # batch-21 JSON tail AFTER scalar_semantics (emits concat()
         # calls that must stay un-stringified) and after json_extract
-        sql = self._rewrite_b21_json(sql)
+        sql = self._rewrite_json_functions(sql)
         # batch-24: from_json/json_transform structure translation
         sql = self._rewrite_from_json(sql)
         sql = self._rewrite_iso_datetime(sql)

@@ -123,8 +123,3 @@ def get_spark(app_name: str = "uquery_rs_spark", cpus: int | None = None) -> Spa
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def tune_for_oracle(spark: SparkSession) -> None:
-    """Settings that matter for bit-faithful comparison with DuckDB."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
