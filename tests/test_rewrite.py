@@ -4292,3 +4292,84 @@ def test_map_literal_text_inside_a_string_is_kept(spark, rw):
     con = duckdb.connect()
     sql = "SELECT 'MAP {1: 2}' AS s, MAP {1: 2}[1] AS v"
     assert tuple(spark.sql(rw.rewrite(sql)).collect()[0]) == con.sql(sql).fetchall()[0]
+
+
+_LEXICAL_CASES = {
+    # a comment ends no ORDER BY key: NULLS LAST goes after the key
+    "order_by_trailing_comment": (
+        "SELECT x FROM (VALUES (1), (NULL), (2)) v(x) ORDER BY x -- done"
+    ),
+    "line_comment_quote": "SELECT 'a' AS s -- don't\n, list_sort([3, 1, 2]) AS l",
+    "block_comment_quote": "SELECT /* it's */ list_sort([3, 1, 2]) AS l",
+    "comment_paren_in_call": "SELECT list_sort([3, 1, 2] -- (\n) AS l",
+    "comment_comma_in_call": "SELECT list_sort([3, 1, 2] -- a, b\n) AS l",
+    "comment_before_summarize": "-- c\nSUMMARIZE lex_t",
+    "comment_before_pivot": "/* c */ PIVOT lex_t ON k USING sum(x)",
+    "nested_block_comment": "SELECT /* a /* b */ it's */ list_sort([3, 1, 2]) AS l",
+    "quoted_identifier_quote": "SELECT 1 AS \"it's\", list_sort([3, 1, 2]) AS l",
+    "quoted_identifier_brackets": "SELECT \"a[0]\" + 1 AS v FROM lex_q",
+    "quoted_identifier_operand": "SELECT \"a[0]\" ^ 2 AS v FROM lex_q",
+    "quoted_macro_parameter": "SELECT lex_add1(41) AS v",
+    # a qualified name with "…" parts is one operand
+    "quoted_qualified_divisor": 'SELECT a / "t"."c" AS v FROM lex_n t',
+    "quoted_qualified_modulo": 'SELECT a % "t".c AS v FROM lex_n t',
+    "quoted_qualified_power": 'SELECT "t"."c" ^ 2 AS v FROM lex_n t',
+    "quoted_qualified_in_subquery": 'SELECT "t"."c" IN (SELECT 2) AS v FROM lex_n t',
+    "quoted_qualified_chain": 'SELECT "t"."s".upper() AS v FROM lex_n t',
+    "quoted_qualified_factorial": 'SELECT "t"."c"! AS v FROM lex_n t',
+    "literal_arbitrary": "SELECT 'arbitrary(x)' AS s",
+    "literal_generate_series": "SELECT 'generate_series(1, 2)' AS s",
+    "literal_columns": "SELECT 'COLUMNS(*)' AS s",
+    "literal_using_sample": "SELECT 'orders USING SAMPLE 10' AS s",
+    "literal_filter": "SELECT 'sum(x) FILTER (x > 1)' AS s",
+    "literal_current_schema": "SELECT 'current_schema()' AS s",
+    "literal_read_csv": "SELECT 'read_csv(''/etc/x.csv'')' AS s",
+}
+
+
+@pytest.mark.parametrize("case", sorted(_LEXICAL_CASES))
+def test_comments_identifiers_and_literals_are_not_code(spark, rw, case):
+    """DuckDB's lexer decides what is code: comments are whitespace, the
+    text of a 'string literal' is never rewritten, and a "quoted
+    identifier" is one token (never rewritten inside; an operand, or a
+    macro parameter, as a whole). Each statement is served through the
+    rewriter and compared with DuckDB."""
+    import duckdb
+
+    con = duckdb.connect()
+    for name, rows in {
+        "lex_t": "(VALUES ('a', 1), ('b', 2), ('a', 3)) v(k, x)",
+        "lex_q": '(SELECT 2 AS "a[0]")',
+        "lex_n": "(VALUES (7, 2, 'abc')) v(a, c, s)",
+    }.items():
+        con.sql(f"CREATE TABLE {name} AS SELECT * FROM {rows}")
+        spark.sql(f"SELECT * FROM {rows}").createOrReplaceTempView(name)
+    macro = 'CREATE MACRO lex_add1(x) AS "x" + 1'
+    con.sql(macro)
+    rw.rewrite(macro)
+    sql = _LEXICAL_CASES[case]
+    want = con.sql(sql)
+    got = spark.sql(rw.rewrite(sql))
+    if "SUMMARIZE" in sql:  # the stats DuckDB and Spark compute alike
+        cols = ["column_name", "min", "max", "count"]
+        want = con.sql(f"SELECT {', '.join(cols)} FROM ({sql.split(chr(10))[1]})")
+        got = got.select(*cols)
+    assert [tuple(r) for r in got.collect()] == want.fetchall(), sql
+
+
+@pytest.mark.parametrize("sql", ["SELECT 'abc", 'SELECT "abc', "SELECT 1 /* abc"])
+def test_unterminated_quote_or_comment_is_a_400(rw, sql):
+    with pytest.raises(UQueryError) as ei:
+        rw.rewrite(sql)
+    assert ei.value.status == 400
+
+
+def test_failed_recursive_union_step_drops_its_delta_view(spark, rw):
+    """The UNION form of a recursive CTE binds each step's input as a
+    temp view; a step that fails must not leave that view behind, where
+    a client's SHOW TABLES would list it."""
+    sql = "WITH RECURSIVE t(n) AS (SELECT 1 UNION SELECT nope FROM t) SELECT n FROM t"
+    with pytest.raises(Exception):
+        spark.sql(rw.rewrite(sql)).collect()
+    views = [r.tableName for r in spark.sql("SHOW TABLES").collect()]
+    assert not [v for v in views if re.fullmatch(r"uq_rec_\w+_delta", v)]

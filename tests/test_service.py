@@ -190,6 +190,29 @@ def test_forbidden_statement_400(base_url):
     assert status == 400 and "locked" in json.loads(body)["detail"]
 
 
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "-- x\nSET spark.sql.ansi.enabled=false",
+        "/* c */ BEGIN SET spark.sql.ansi.enabled=false; END",
+    ],
+)
+def test_comment_does_not_unlock_configuration(spark, base_url, sql):
+    """A comment before a session-mutating statement is whitespace: the
+    statement is refused like its bare form, and the shared session
+    keeps ANSI on for the next request."""
+    try:
+        status, headers, body = post(base_url, sql)
+        assert status == 400, body
+        assert headers["Content-Type"] == "application/problem+json"
+        assert "locked" in json.loads(body)["detail"]
+        # with ANSI on, a bad cast fails (as in DuckDB) instead of NULL
+        status, _, body = post(base_url, "SELECT CAST('abc' AS INTEGER) AS v")
+        assert status == 400, body
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+
+
 def test_sandbox_violation_400(base_url):
     status, _, body = post(base_url, "SELECT * FROM '/etc/passwd.csv'")
     assert status == 400 and "allowed directories" in json.loads(body)["detail"]

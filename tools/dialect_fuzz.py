@@ -15,6 +15,7 @@ arg_max NULL-value skip, null-keeping first/last ordering, avg DECIMAL
 width, corr ANSI divide-by-zero, DATE±INTERVAL widening, age(),
 datepart('dow') off-by-one, width-coercing list_append/prepend.
 """
+import os
 import sys
 import random
 import decimal
@@ -22,8 +23,8 @@ import datetime
 
 sys.path.insert(0, ".")
 import duckdb  # noqa: E402
-from pyspark.sql import SparkSession  # noqa: E402
 from uquery_rs_spark.rewrite import SqlRewriter  # noqa: E402
+from uquery_rs_spark.session import get_spark  # noqa: E402
 
 STRS = ["'abc'", "'Héllo'", "'a,b,c'", "''", "'x y'", "'éx'", "'AbC dEf'",
         "'  pad  '", "'1234'", "'a.b'"]
@@ -881,12 +882,10 @@ def main():
     axis = sys.argv[1] if len(sys.argv) > 1 else "all"
     batches = int(sys.argv[2]) if len(sys.argv) > 2 else 30
     seed = int(sys.argv[3]) if len(sys.argv) > 3 else 42
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    # the engine's session recipe: with Spark's default 1g driver heap
+    # the `div` axis stalls in Catalyst for many minutes
+    os.environ.setdefault("UQ_DRIVER_MEMORY", "4g")
+    spark = get_spark("dialect-fuzz", cpus=4)
     rw = SqlRewriter(spark)
     con = duckdb.connect()
     axes = ALL_AXES if axis == "all" else [axis]

@@ -743,7 +743,6 @@ def _build_udfs() -> dict:
         # JSON tail (batch 21): null-propagating on SQL NULL inputs;
         # malformed JSON raises at runtime like DuckDB's json extension
         "uq_json_minify": pandas_udf(_map1(_json_minify), "string"),
-        "uq_json_validate": pandas_udf(_map1(_json_validate), "string"),
         "uq_json_cast": pandas_udf(
             lambda t, e: pd.Series(
                 [
