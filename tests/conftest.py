@@ -26,3 +26,23 @@ def oracle_con():
     con = oracle_connection(SF_SMALL)
     yield con
     con.close()
+
+
+def served(spark, sql: str, **tables):
+    """Rows of gateway SQL text run the way a client's query is
+    (``SqlRewriter`` → ``spark.sql``) over hand-made ``tables``, each
+    bound under the table name the text reads. Views those names already
+    held are put back afterwards."""
+    from uquery_rs_spark.rewrite import SqlRewriter
+
+    saved = {t: spark.table(t) for t in tables if spark.catalog.tableExists(t)}
+    try:
+        for t, df in tables.items():
+            df.createOrReplaceTempView(t)
+        return spark.sql(SqlRewriter(spark).rewrite(sql)).collect()
+    finally:
+        for t in tables:
+            if t in saved:
+                saved[t].createOrReplaceTempView(t)
+            else:
+                spark.catalog.dropTempView(t)

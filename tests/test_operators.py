@@ -1,16 +1,28 @@
-"""Unit tests for the custom operators (edge cases the corpus can't hit)."""
+"""Unit tests for the custom operators (edge cases the corpus can't hit).
+
+Where a registry query is SQL text, its served text is the one
+implementation, so its edge cases run that text over hand-made tables.
+"""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from uquery_rs_spark import queries as Q
 from uquery_rs_spark.operators import asof_join
 from uquery_rs_spark.operators import dedup as D
 from uquery_rs_spark.operators import multimodal as MM
 from uquery_rs_spark.operators import similarity as S
 from uquery_rs_spark.operators import text as TX
 
-from .conftest import SF_SMALL
+from .conftest import SF_SMALL, served
+
+Q.load_all()
+
+
+def _served_entry(spark, name, **tables):
+    """Rows of registry entry ``name``'s served text over hand-made tables."""
+    return served(spark, Q.REGISTRY[name].oracle, **tables)
 
 
 class TestAsofJoin:
@@ -49,8 +61,8 @@ class TestDedup:
         assert lsh == exact and len(exact) > 0
 
     def test_minhash_affine_binding_bit_identical(self, spark):
-        """The bound-coefficient kernel (_affine_min, r13) must emit
-        signatures bit-identical to the naive per-element affine form it
+        """The bound-coefficient kernel (_affine_min, r13) must emit band
+        keys bit-identical to the naive per-element affine form it
         replaced: same constants, same operand order, so LSH candidates
         (and every oracle hash downstream) are unchanged."""
         from uquery_rs_spark.operators.dedup import (
@@ -62,9 +74,10 @@ class TestDedup:
         docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
         sh = D.word_shingles(F.col("text"), 3)
         p = F.lit(_MINHASH_P).cast("long")
-        naive = F.transform(
-            F.sequence(F.lit(0), F.lit(15)),
-            lambda j: F.array_min(
+        bands, rows = 8, 2
+
+        def naive_min(j):
+            return F.array_min(
                 F.transform(
                     F.transform(sh, lambda s: F.pmod(F.xxhash64(s), p)),
                     lambda h: F.pmod(
@@ -73,11 +86,21 @@ class TestDedup:
                         p,
                     ),
                 )
+            )
+
+        naive = F.transform(
+            F.sequence(F.lit(0), F.lit(bands - 1)),
+            lambda b: F.hash(
+                F.transform(
+                    F.sequence(F.lit(0), F.lit(rows - 1)),
+                    lambda r: naive_min(b * rows + r),
+                ),
+                b,
             ),
         )
         mismatches = (
             docs.select(
-                D.minhash_signature(sh, 16).alias("opt"), naive.alias("ref")
+                D.minhash_band_keys(sh, bands, rows).alias("opt"), naive.alias("ref")
             )
             .filter(~F.expr("opt <=> ref"))
             .count()
@@ -89,8 +112,8 @@ class TestDedup:
             [(1, "a b c", "s"), (2, "a b c", "s"), (3, "x y z", "s")],
             "doc_id long, text string, source string",
         )
-        out = {r.doc_id: r.n_copies for r in D.exact_dedup(docs).collect()}
-        assert out == {1: 2, 3: 1}
+        out = _served_entry(spark, "dedup_exact_stats", documents=docs)
+        assert [tuple(r) for r in out] == [("s", 3, 2, 1)]
 
     def test_exact_substring_dedup_spans(self, spark):
         """ExactSubstr semantics pinned: a k-gram repeated across docs
@@ -126,8 +149,9 @@ class TestDedup:
         assert out[4] == (2, 0, "a b")
 
     def test_normalized_dedup_collapses_cosmetic_variants(self, spark):
-        """Case / punctuation / whitespace-only edits hash identically;
-        a real word change does not."""
+        """Case / punctuation / whitespace-only edits group together; a
+        real word change does not. The entry adds one mutated variant
+        per doc, so each group holds twice its docs."""
         docs = spark.createDataFrame(
             [
                 (1, "Hello, World!"),
@@ -137,37 +161,8 @@ class TestDedup:
             ],
             "doc_id long, text string",
         )
-        out = {r.doc_id: r.n_copies for r in D.normalized_dedup(docs).collect()}
-        assert out == {1: 3, 4: 1}
-
-    def test_containment_max_df_cap_is_subset(self, spark):
-        """df-cutoff degradation contract: capped pairs ⊆ uncapped pairs,
-        with inter/containment never larger; a pair supported ONLY by a
-        stop-shingle disappears under the cap."""
-        # "the of and" appears in EVERY doc (df=4 stop-shingle); docs 1+2
-        # additionally share two rarer shingles, docs 3+4 share only the
-        # stop-shingle.
-        docs = spark.createDataFrame(
-            [
-                (1, "the of and quick brown fox jumps"),
-                (2, "the of and quick brown fox sleeps"),
-                (3, "the of and red"),
-                (4, "the of and blue"),
-            ],
-            "doc_id long, text string",
-        )
-        uncapped = {
-            (r.x, r.y): r.inter
-            for r in D.containment_pairs_exact(docs, threshold=0.3).collect()
-        }
-        capped = {
-            (r.x, r.y): r.inter
-            for r in D.containment_pairs_exact(docs, threshold=0.3, max_df=3).collect()
-        }
-        assert set(capped) <= set(uncapped)
-        assert all(capped[p] <= uncapped[p] for p in capped)
-        assert (3, 4) in uncapped and (3, 4) not in capped  # stop-shingle-only pair
-        assert (1, 2) in capped  # rare-shingle support survives
+        out = {r.doc_id: r.n_copies for r in _served_entry(spark, "dedup_normalized", documents=docs)}
+        assert out == {1: 6, 4: 2}
 
     def test_simhash_identical_docs_zero_hamming(self, spark):
         docs = spark.createDataFrame(
@@ -224,24 +219,16 @@ class TestSimilarity:
         blocked = {(r.x, r.y, round(r.sim, 6)) for r in S.cosine_pairs_blocked(emb, 0.4, n_blocks=5).collect()}
         assert blocked == exact and len(exact) > 0
 
-    def test_lsh_pairs_recall_one_vs_exact(self, spark):
-        # verification is exact so lsh ⊆ exact; banding params must make
-        # the candidate step lossless on this corpus (recall 1.0).
-        emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-        exact = {(r.x, r.y) for r in S.cosine_pairs_threshold(emb, 0.4).collect()}
-        lsh = {(r.x, r.y) for r in S.cosine_pairs_lsh(emb, 0.4, dim=64).collect()}
-        assert lsh == exact and len(exact) > 0
-
     def test_lsh_empty_input_yields_empty_pairs(self, spark):
         emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").limit(0)
-        assert S.cosine_pairs_lsh(emb, 0.4).count() == 0
+        assert _served_entry(spark, "dedup_embedding_lsh", embeddings=emb) == []
 
 
 class TestText:
     def test_fingerprint_matches_python_reference(self, spark):
         text = "spark rolling hash check"
         df = spark.createDataFrame([(1, text)], "doc_id long, text string")
-        got = df.select(TX.fingerprint(F.col("text")).alias("fp")).collect()[0].fp
+        got = _served_entry(spark, "text_fingerprint", documents=df)[0].fp
         fp = 0
         for tok in text.split(" "):
             fp = (fp * 31 + ord(tok[0]) * 7 + len(tok)) % 1_000_000_007
@@ -252,7 +239,9 @@ class TestText:
             [(1, "the cat and the dog is in the house"), (2, "el gato y la casa es de un perro")],
             "doc_id long, text string",
         )
-        out = {r.doc_id: r.p for r in TX.with_tokens(df).select("doc_id", TX.predicted_language(F.col(TX.TOKS)).alias("p")).collect()}
+        scored = TX.with_language_struct(TX.with_tokens(df))
+        p = TX.language_struct_argmax(F.col(TX.LANG_ST)).alias("p")
+        out = {r.doc_id: r.p for r in scored.select("doc_id", p).collect()}
         assert out == {1: "en", 2: "es"}
 
 
@@ -264,7 +253,7 @@ class TestRelevance:
             [(1, "common rare"), (2, "common common common"), (3, "common other common")],
             "doc_id long, text string",
         )
-        out = TX.tfidf_top_terms(docs, k=2).collect()
+        out = _served_entry(spark, "text_tfidf_top_terms", documents=docs)
         by_doc = {}
         for r in out:
             by_doc.setdefault(r.doc_id, []).append((r.rank, r.term))
@@ -276,7 +265,8 @@ class TestRelevance:
     def test_bm25_orders_by_match_and_saturates(self, spark):
         """More matching terms → higher score; tf saturation keeps a
         keyword-stuffed doc from dominating a doc matching MORE query
-        terms; non-matching docs score 0."""
+        terms; non-matching docs score 0. The entry's query terms are
+        spark, vector and stream."""
         docs = spark.createDataFrame(
             [
                 (1, "spark stream join"),  # 2 query terms
@@ -286,7 +276,7 @@ class TestRelevance:
             ],
             "doc_id long, text string",
         )
-        out = {r.doc_id: r.bm25 for r in TX.bm25_scores(docs, ("spark", "stream")).collect()}
+        out = {r.doc_id: r.bm25 for r in _served_entry(spark, "text_bm25_search", documents=docs)}
         assert out[1] > out[2] > out[4] > out[3] == 0.0
 
 
@@ -318,47 +308,44 @@ class TestCorpusAudit:
             ],
             "doc_id long, text string, lang string",
         )
-        from uquery_rs_spark.operators.corpus import stats_card
-
-        r = stats_card(docs).collect()[0]
+        (r,) = _served_entry(spark, "corpus_stats_card", documents=docs)
         assert (r.n_docs, r.total_tokens, r.n_unique_texts) == (4, 12, 3)
         assert r.dup_rate == 0.25
         assert (r.n_langs, r.top_lang, r.top_lang_frac) == (2, "en", 0.75)
         assert r.p50_tokens == 3.0  # interpolated over [2,3,3,4]
 
     def test_version_diff_all_statuses(self, spark):
-        from uquery_rs_spark.operators.corpus import version_diff
-
-        old = spark.createDataFrame(
-            [(1, "a", "s1"), (2, "b", "s1"), (3, "c", "s2")],
+        """The entry derives the new snapshot from the old: doc_id % 7 = 0
+        is removed, % 5 = 0 gets ' v2' appended, and % 11 = 0 also gains a
+        shifted copy (an added doc)."""
+        docs = spark.createDataFrame(
+            [(1, "a", "s1"), (5, "b", "s1"), (7, "c", "s2"), (11, "d", "s2")],
             "doc_id long, text string, source string",
         )
-        new = spark.createDataFrame(
-            [(1, "a", "s1"), (2, "B2", "s1"), (4, "d", "s2")],  # 3 removed, 4 added
-            "doc_id long, text string, source string",
-        )
-        out = {(r.source, r.status): r.n_docs for r in version_diff(old, new).collect()}
+        out = {
+            (r.source, r.status): r.n_docs
+            for r in _served_entry(spark, "corpus_version_diff", documents=docs)
+        }
         assert out == {
             ("s1", "unchanged"): 1,
             ("s1", "modified"): 1,
             ("s2", "removed"): 1,
             ("s2", "added"): 1,
+            ("s2", "unchanged"): 1,
         }
 
     def test_version_diff_null_text_classified_by_presence(self, spark):
         """NULL-text docs present in both snapshots are unchanged (not
-        'added' — digest nullness must not masquerade as absence); a
-        NULL-to-value change is modified."""
-        from uquery_rs_spark.operators.corpus import version_diff
-
-        old = spark.createDataFrame(
-            [(1, None, "s"), (2, None, "s")], "doc_id long, text string, source string"
+        'added' — digest nullness must not masquerade as absence), even
+        where the derived snapshot's ' v2' edit touches them (doc 5)."""
+        docs = spark.createDataFrame(
+            [(1, None, "s"), (5, None, "s")], "doc_id long, text string, source string"
         )
-        new = spark.createDataFrame(
-            [(1, None, "s"), (2, "now set", "s")], "doc_id long, text string, source string"
-        )
-        out = {(r.source, r.status): r.n_docs for r in version_diff(old, new).collect()}
-        assert out == {("s", "unchanged"): 1, ("s", "modified"): 1}
+        out = {
+            (r.source, r.status): r.n_docs
+            for r in _served_entry(spark, "corpus_version_diff", documents=docs)
+        }
+        assert out == {("s", "unchanged"): 2}
 
     def test_dedup_funnel_stage_accounting(self, spark):
         """Each tier removes exactly its own duplication mode and the
@@ -382,26 +369,25 @@ class TestCorpusAudit:
             assert rows[a].n_out == rows[b].n_in
 
     def test_per_source_cap_deterministic_and_capped(self, spark):
-        from uquery_rs_spark.operators.corpus import per_source_cap
+        """The entry keeps the 15 docs of each source first in md5(key)
+        order, so the kept set does not depend on partitioning."""
+        import hashlib
 
         docs = spark.createDataFrame(
-            [(i, f"t{i}", "big" if i < 40 else "small") for i in range(50)],
+            [(i, f"t{i}", "big" if i < 40 else "small") for i in range(60)],
             "doc_id long, text string, source string",
         )
-        a = {r.doc_id for r in per_source_cap(docs, cap=5).collect()}
-        b = {r.doc_id for r in per_source_cap(docs.repartition(7), cap=5).collect()}
+        a = _served_entry(spark, "corpus_per_source_cap", documents=docs)
+        b = _served_entry(spark, "corpus_per_source_cap", documents=docs.repartition(7))
         assert a == b  # partitioning-invariant selection
-        by_src = {}
-        for r in per_source_cap(docs, cap=5).collect():
-            by_src.setdefault(r.source, set()).add(r.doc_id)
-        assert len(by_src["big"]) == 5
-        assert len(by_src["small"]) == 5  # capped even when |source| = 10
+        by_src = {r.source: (r.n_kept, r.n_even) for r in a}
+        for src, ids in (("big", range(40)), ("small", range(40, 60))):
+            kept = sorted(ids, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))[:15]
+            assert by_src[src] == (15, sum(i % 2 == 0 for i in kept))
 
     def test_centroid_outliers_flags_planted_vector(self, spark):
         """A vector pointing away from its tight cluster is the only
         flagged outlier; a clean cluster yields none."""
-        import math
-
         rows = []
         # label 0: 20 near-identical vectors + 1 inverted outlier
         for i in range(20):
@@ -411,22 +397,20 @@ class TestCorpusAudit:
         for i in range(10):
             rows.append((200 + i, [0.0, 1.0 + 0.001 * i], 1))
         emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
-        out = S.centroid_outliers(emb, z_thresh=-2.0).collect()
+        out = _served_entry(spark, "emb_outlier_zscore", embeddings=emb)
         assert [(r.label, r.vec_id) for r in out] == [(0, 99)]
         assert out[0].z <= -2.0 and out[0].cos < 0
 
 
 class TestMultimodal:
     def test_feature_histogram_matches_numpy(self, spark):
-        docs = spark.createDataFrame([(1, "abc", "s")], "doc_id long, text string, source string")
-        out = MM.extract_features(MM.synthesize_binary_docs(docs)).collect()[0]
         import numpy as np
 
-        expected = np.bincount(
-            np.frombuffer(b"abc", dtype=np.uint8) % MM.FEATURE_DIM, minlength=MM.FEATURE_DIM
-        )
-        assert out.features == expected.tolist()
-        assert out.n_bytes == 3 and out.feature_sum == 3
+        docs = spark.createDataFrame([(1, "abc", "s")], "doc_id long, text string, source string")
+        (out,) = _served_entry(spark, "multimodal_features", documents=docs)
+        expected = np.bincount(np.frombuffer(b"abc", dtype=np.uint8) % 16, minlength=16)
+        assert [out[f"f{i:02d}"] for i in range(16)] == expected.tolist()
+        assert out.n_bytes == 3
 
     def test_frame_sampling_offsets(self, spark):
         docs = spark.createDataFrame([(1, "x" * 200, "s")], "doc_id long, text string, source string")
@@ -704,18 +688,17 @@ class TestSimilarityEdges:
 
 class TestCorpusOps:
     def test_stratified_sample_deterministic_and_rated(self, spark):
-        from uquery_rs_spark.operators.corpus import stratified_sample
-
+        """The entry keeps src1 at 50% and any unlisted source at 5%."""
         docs = spark.range(10000).select(
             F.col("id").alias("doc_id"),
-            F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("source"),
+            F.when(F.col("id") % 2 == 0, "src1").otherwise("src9").alias("source"),
         )
-        kept = stratified_sample(docs, {"a": 0.5, "b": 0.0}, key_col="doc_id")
-        rows1 = sorted(r.doc_id for r in kept.collect())
-        rows2 = sorted(r.doc_id for r in kept.collect())
+        rows1 = _served_entry(spark, "corpus_stratified_mix", documents=docs)
+        rows2 = _served_entry(spark, "corpus_stratified_mix", documents=docs.repartition(7))
         assert rows1 == rows2  # deterministic
-        assert all(i % 2 == 0 for i in rows1)  # only stratum a
-        assert 0.4 < len(rows1) / 5000 < 0.6  # ~50% of stratum a
+        kept = {r.source: r.n_kept for r in rows1}
+        assert 0.4 < kept["src1"] / 5000 < 0.6  # ~50% of src1
+        assert 0.02 < kept["src9"] / 5000 < 0.08  # ~5% of the rest
 
     def test_dup_clusters_transitive(self, spark):
         from uquery_rs_spark.operators.dedup import dup_clusters
@@ -725,18 +708,16 @@ class TestCorpusOps:
         assert out == {1: 1, 2: 1, 3: 1, 7: 7, 9: 7}
 
     def test_pii_stats_and_redact(self, spark):
-        from uquery_rs_spark.operators import text as TX
-
+        # doc ids not divisible by 7: the entry leaves their text unsalted
         docs = spark.createDataFrame(
             [(1, "mail me at a.b@x.io or 555-123-4567"), (2, "clean text")],
             "doc_id long, text string",
         )
-        stats = {r.doc_id: r for r in TX.pii_stats(docs).collect()}
-        assert stats[1].n_email == 1 and stats[1].n_phone == 1 and stats[1].has_pii
-        assert stats[2].n_email == 0 and not stats[2].has_pii
-        red = {r.doc_id: r.redacted for r in TX.pii_redact(docs).collect()}
-        assert red[1] == "mail me at <EMAIL> or <PHONE>"
-        assert red[2] == "clean text"
+        out = {r.doc_id: r for r in _served_entry(spark, "text_pii_scan", documents=docs)}
+        assert out[1].n_email == 1 and out[1].n_phone == 1 and out[1].has_pii
+        assert out[2].n_email == 0 and not out[2].has_pii
+        assert out[1].redacted == "mail me at <EMAIL> or <PHONE>"
+        assert out[2].redacted == "clean text"
 
 
 class TestQuantization:
@@ -921,26 +902,22 @@ class TestShuffleOrderAndBuckets:
 
 class TestIncrementalDedup:
     def test_delta_flags_near_dups_vs_base(self, spark):
-        base = spark.createDataFrame(
-            [(1, "the quick brown fox jumps over the lazy dog today"),
-             (2, "completely different words about large scale engines here")],
-            "doc_id long, text string",
-        )
-        delta = spark.createDataFrame(
-            [(10, "the quick brown fox jumps over the lazy dog tonight"),  # near-dup of 1
-             (11, "entirely novel content never seen in the base corpus")],
-            "doc_id long, text string",
+        # the entry reads source 'src18' as the delta, every other source as base
+        docs = spark.createDataFrame(
+            [(1, "the quick brown fox jumps over the lazy dog today", "src0"),
+             (2, "completely different words about large scale engines here", "src0"),
+             (10, "the quick brown fox jumps over the lazy dog tonight", "src18"),  # near-dup of 1
+             (11, "entirely novel content never seen in the base corpus", "src18")],
+            "doc_id long, text string, source string",
         )
         out = {r.doc_id: (r.n_dup_partners, r.kept)
-               for r in D.incremental_near_dedup(base, delta, threshold=0.5).collect()}
-        assert out[10] == (1, False)
-        assert out[11] == (0, True)
+               for r in _served_entry(spark, "dedup_incremental_delta", documents=docs)}
+        assert out == {10: (1, False), 11: (0, True)}
 
     def test_delta_broadcast_side(self, spark):
-        base = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
-        delta = spark.createDataFrame([(2, "a b c e")], "doc_id long, text string")
-        plan = (D.incremental_near_dedup(base, delta)
-                ._jdf.queryExecution().executedPlan().toString())
+        df = Q.REGISTRY["dedup_incremental_delta"].spark_fn(spark, SF_SMALL)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan
 
 
@@ -993,7 +970,6 @@ class TestVideoFrameSample:
         # frame pixels differ across frames: lum depends on frame_idx
         lums7 = [r.mean_lum for r in sorted(all_f, key=lambda r: (r.doc_id, r.frame_idx)) if r.doc_id == 7]
         assert len(set(lums7)) > 1
-
 
     def test_truncated_header_raises_not_hangs(self):
         """A header cut off mid-token must raise, not scan past EOF (the
@@ -1217,7 +1193,6 @@ class TestBPE:
         # (measured 0.645 at 30 merges on sf0.001; no-merge ratio is 1.0)
         assert (out.n_bpe_tokens >= out.n_words).all()
 
-
     def test_apply_ids_hand_checked(self, spark):
         """bpe_apply (round 9): 'lowest low' under the Sennrich merges
         -> [low, e?, ...] ids. With merges [(e,s),(es,t),(l,o),(lo,w)]:
@@ -1307,8 +1282,8 @@ class TestHardenedPaths:
 
 class TestC4Quality:
     def test_line_and_page_rules(self, spark):
-        from uquery_rs_spark.operators.text import c4_quality_stats
-
+        # doc ids 1-5 take none of the entry's injected braces / lorem
+        # markers, and no text holds its ' table '/' line '/' spark ' cues
         rows = [
             # 3 good lines -> pass
             (1, "one two three four five.\nsix seven eight nine ten!\n"
@@ -1322,25 +1297,32 @@ class TestC4Quality:
             # line rules: no terminal punct / <5 words / javascript
             (4, "no punctuation here at all\nshort line.\n"
                 "enable javascript to view this page.\n"
-                "this perfectly fine line survives."),
+                "this perfectly fine row survives."),
             (5, ""),
         ]
-        df = spark.createDataFrame(rows, ["doc_id", "text"])
-        out = {r.doc_id: r for r in c4_quality_stats(df).collect()}
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        out = {r.doc_id: r for r in _served_entry(spark, "text_c4_quality", documents=df)}
         assert out[1].c4_pass and out[1].n_kept_lines == 3
         assert not out[2].c4_pass and out[2].has_brace
         # page 3: 'lorem ipsum dolor sit amet.' is ALSO a kept line
         # (5 words, terminal punct) — the page still rejects
         assert not out[3].c4_pass and out[3].has_lorem
         assert out[4].n_kept_lines == 1
-        assert out[4].cleaned_text == "this perfectly fine line survives."
+        assert out[4].cleaned_text == "this perfectly fine row survives."
         assert out[5].n_kept_lines == 0 and out[5].cleaned_text == ""
+
+
+def _served_urls(spark, name, urls):
+    """A web_* entry's served text with its synthesized URL expression
+    replaced by the ``url`` column of the hand-made ``urls`` table."""
+    from uquery_rs_spark.queries.llm_q import _URL_SYNTH_SQL
+
+    sql = Q.REGISTRY[name].oracle.replace(_URL_SYNTH_SQL, "url")
+    return served(spark, sql, documents=urls)
 
 
 class TestWebUrl:
     def test_canonicalize_parts(self, spark):
-        from uquery_rs_spark.operators import web as W
-
         df = spark.createDataFrame(
             [
                 (1, "HTTPS://WWW.Sub.Example.CO.UK:443/a/b/?utm_source=x&q=1&fbclid=z#f"),
@@ -1348,9 +1330,9 @@ class TestWebUrl:
                 (3, "http://example.com/path?ref=homepage"),
                 (4, "https://localhost/x"),
             ],
-            "id int, url string",
+            "doc_id long, url string",
         )
-        out = {r.id: r for r in W.canonicalize(df).collect()}
+        out = {r.doc_id: r for r in _served_urls(spark, "web_url_canonicalize", df)}
         r1 = out[1]
         assert r1.url_scheme == "https"
         assert r1.url_host == "sub.example.co.uk"  # www+port stripped, lowered
@@ -1361,19 +1343,21 @@ class TestWebUrl:
         r2 = out[2]
         assert r2.url_host == "example.com" and r2.url_path == "/"
         assert r2.url_canonical == "http://example.com/"
-        assert out[3].url_query == "" and out[3].url_canonical == "http://example.com/path"
+        # all parameters are tracking ones: no query (array_to_string of an
+        # empty list is NULL in DuckDB and in the served text)
+        assert out[3].url_query is None and out[3].url_canonical == "http://example.com/path"
         assert out[4].url_domain == "localhost"    # single-label host
 
     def test_blocklist_broadcast_anti(self, spark):
-        from uquery_rs_spark.operators import web as W
-
+        # src0corp.com is on the entry's blocklist
         docs = spark.createDataFrame(
-            [(1, "http://a.bad.com/x"), (2, "http://ok.org/y")], "id int, url string"
+            [(1, "http://a.src0corp.com/x"), (2, "http://ok.org/y")], "doc_id long, url string"
         )
-        bl = spark.createDataFrame([("bad.com",)], ["domain"])
-        kept = W.blocklist_filter(W.canonicalize(docs), bl)
-        assert [r.id for r in kept.collect()] == [2]
-        plan = kept._jdf.queryExecution().executedPlan().toString()
+        kept = _served_urls(spark, "web_domain_blocklist", docs)
+        assert [(r.url_domain, r.n_docs) for r in kept] == [("ok.org", 1)]
+        df = Q.REGISTRY["web_domain_blocklist"].spark_fn(spark, SF_SMALL)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
         # the corpus side must NOT reshuffle: broadcast left-anti join
         assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
 

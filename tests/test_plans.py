@@ -196,16 +196,13 @@ def test_bucketed_join_colocates_without_shuffle(spark):
 
 
 def test_tfidf_reuses_tf_exchange(spark):
-    # tfidf_top_terms joins tf against df-per-term derived FROM tf. The
-    # df aggregate keeps sum(tf) (surfaced as ttf) precisely so Catalyst
-    # cannot prune the branch into a DISTINCT with a non-matching
-    # subplan: with identical subplans AQE reuses the (doc, term)
-    # shuffle and the corpus is exploded ONCE. Executed-plan assertion —
-    # reuse is decided at runtime under AQE.
-    from uquery_rs_spark.operators.text import tfidf_top_terms
-
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    df = tfidf_top_terms(docs, k=3)
+    # The served tf-idf text joins tf against df-per-term derived FROM
+    # tf. The df aggregate keeps sum(tf) (surfaced as ttf) precisely so
+    # Catalyst cannot prune the branch into a DISTINCT with a
+    # non-matching subplan: with identical subplans AQE reuses the
+    # (doc, term) shuffle and the corpus is exploded ONCE.
+    # Executed-plan assertion — reuse is decided at runtime under AQE.
+    df = Q.REGISTRY["text_tfidf_top_terms"].spark_fn(spark, SF_SMALL)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in plan
@@ -214,10 +211,7 @@ def test_tfidf_reuses_tf_exchange(spark):
 def test_bm25_is_take_ordered(spark):
     # Global top-k must be TakeOrdered (per-partition heaps + driver
     # merge), never a full rangepartition sort of the corpus.
-    from uquery_rs_spark.operators.text import bm25_scores
-
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    plan = formatted_plan(bm25_scores(docs, ("spark", "vector")))
+    plan = formatted_plan(Q.REGISTRY["text_bm25_search"].spark_fn(spark, SF_SMALL))
     assert "TakeOrderedAndProject" in plan
     assert "rangepartitioning" not in plan
 
@@ -339,23 +333,6 @@ def test_hll_sketch_rollup_partial_aggregates(spark):
     body = plan.split("== Physical Plan ==")[-1].lower()
     assert "partial" in body, body[:400]
     assert "hll_sketch_agg" in body, body[:400]
-
-
-def test_heavy_hitters_candidates_bound_shuffle(spark):
-    """Round 12: the heavy-hitters exact pass must count only the
-    broadcast candidate tokens — a BroadcastHashJoin (semi-shape)
-    before the aggregate, never a full-vocabulary exchange as the
-    FIRST shuffle-producing step after the scan."""
-    from uquery_rs_spark.operators.text import heavy_hitters_mg
-
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    plan = formatted_plan(heavy_hitters_mg(docs, k=50))
-    body = plan.split("== Physical Plan ==")[-1]
-    assert "BroadcastHashJoin" in body, body[:600]
-    # the candidate filter sits between explode and the count aggregate
-    assert body.index("Generate") < body.index("BroadcastHashJoin") or (
-        "ArrowEvalPython" in body or "MapInPandas" in body
-    ), body[:600]
 
 
 def test_hll_sliding_window_runs_over_sketches(spark):

@@ -151,26 +151,33 @@ def test_winnowing_guarantee_shared_substring(spark, a, b, shared):
 
 
 @spark_settings
-@given(
-    lens=st.lists(st.integers(1, 40), min_size=1, max_size=25),
-    budget=st.sampled_from([8, 16, 32]),
-)
-def test_pack_sequences_accounting(spark, lens, budget):
-    """Conservation laws of concat-and-chop packing: every doc is FIRST
-    counted in exactly one window (sum of non-boundary memberships =
-    n_docs), windows are contiguous from 0, and total window-memberships
-    equal the sum of per-doc window spans."""
-    from uquery_rs_spark.operators.corpus import pack_sequences
+@given(lens=st.lists(st.integers(1, 300), min_size=1, max_size=25))
+def test_pack_sequences_accounting(spark, lens):
+    """Conservation laws of concat-and-chop packing, on the served
+    ``corpus_pack_sequences`` text (256-token windows): every doc is
+    FIRST counted in exactly one window (sum of non-boundary
+    memberships = n_docs), windows are contiguous from 0, and total
+    window-memberships equal the sum of per-doc window spans."""
+    from uquery_rs_spark import queries as Q
 
+    from .conftest import served
+
+    Q.load_all()
+    budget = 256
     docs = spark.createDataFrame(
         [(i, " ".join(["w"] * n)) for i, n in enumerate(lens)],
         "doc_id long, text string",
     )
-    out = pack_sequences(docs, context_tokens=budget).collect()
+    out = served(spark, Q.REGISTRY["corpus_pack_sequences"].oracle, documents=docs)
     assert sum(r.n_docs - r.n_boundary for r in out) == len(lens)
     wids = sorted(r.window_id for r in out)
     total_tokens = sum(lens)
     assert wids == list(range((total_tokens + budget - 1) // budget))
+    start, spans = 0, 0
+    for n in lens:
+        spans += (start + n - 1) // budget - start // budget + 1
+        start += n
+    assert sum(r.n_docs for r in out) == spans
 
 
 @spark_settings
@@ -182,10 +189,10 @@ def test_pack_sequences_emit_reconstructs_stream(spark, lens, budget):
     """The materialized packer's ground truth: concatenating every
     window's tokens in window order reproduces EXACTLY the token stream
     of all docs concatenated in key order; every window but the last is
-    exactly `budget` tokens; per-window doc counts match the stats
-    operator's. Distinct per-doc tokens make any fragment mis-ordering
-    or off-by-one slice visible."""
-    from uquery_rs_spark.operators.corpus import pack_sequences, pack_sequences_emit
+    exactly `budget` tokens; per-window doc counts match the windows
+    each doc's token span covers. Distinct per-doc tokens make any
+    fragment mis-ordering or off-by-one slice visible."""
+    from uquery_rs_spark.operators.corpus import pack_sequences_emit
 
     docs = spark.createDataFrame(
         [(i, " ".join(f"d{i}t{j}" for j in range(n))) for i, n in enumerate(lens)],
@@ -200,11 +207,12 @@ def test_pack_sequences_emit_reconstructs_stream(spark, lens, budget):
     assert got == stream
     assert all(r.n_tokens == len(r.tokens) for r in out)
     assert all(r.n_tokens == budget for r in out[:-1])
-    stats = {
-        r.window_id: r.n_docs
-        for r in pack_sequences(docs, context_tokens=budget).collect()
-    }
-    assert {r.window_id: r.n_docs for r in out} == stats
+    spanned, start = {}, 0
+    for n in lens:
+        for w in range(start // budget, (start + n - 1) // budget + 1):
+            spanned[w] = spanned.get(w, 0) + 1
+        start += n
+    assert {r.window_id: r.n_docs for r in out} == spanned
 
 
 @spark_settings
@@ -215,20 +223,20 @@ def test_pack_sequences_emit_reconstructs_stream(spark, lens, budget):
 def test_pack_sequences_key_sparsity_invariance(spark, lens, budget):
     """Packing must depend only on key ORDER, not key density: hashed /
     widely-shifted doc ids (sparse keys) yield the same windows as dense
-    0..n ids, with first_doc/last_doc mapped through the key transform —
-    and the range-width bucketing keeps the driver-side per-bucket
-    collect bounded instead of O(n_docs) (the `key div bucket_docs`
-    regression this test pins)."""
-    from uquery_rs_spark.operators.corpus import pack_sequences
+    0..n ids — and the range-width bucketing keeps the driver-side
+    per-bucket collect bounded instead of O(n_docs) (the `key div
+    bucket_docs` regression this test pins). Per-doc tokens name the doc
+    by position, so a window's tokens show which docs it holds."""
+    from uquery_rs_spark.operators.corpus import pack_sequences_emit
 
     def run(key_of):
         docs = spark.createDataFrame(
-            [(key_of(i), " ".join(["w"] * n)) for i, n in enumerate(lens)],
+            [(key_of(i), " ".join([f"d{i}"] * n)) for i, n in enumerate(lens)],
             "doc_id long, text string",
         )
         return {
-            r.window_id: (r.n_docs, r.n_boundary, r.first_doc, r.last_doc)
-            for r in pack_sequences(docs, context_tokens=budget).collect()
+            r.window_id: (r.n_docs, r.n_tokens, list(r.tokens))
+            for r in pack_sequences_emit(docs, context_tokens=budget).collect()
         }
 
     sparse = lambda i: i * 1_000_003_571 + 12_345  # monotone, ~1e9-spaced
@@ -237,10 +245,7 @@ def test_pack_sequences_key_sparsity_invariance(spark, lens, budget):
     extreme = lambda i: (i - len(lens) // 2) * ((1 << 62) // max(len(lens), 1))
     dense_out = run(lambda i: i)
     for key_of in (sparse, extreme):
-        other = run(key_of)
-        assert set(dense_out) == set(other)
-        for w, (nd, nb, fd, ld) in dense_out.items():
-            assert other[w] == (nd, nb, key_of(fd), key_of(ld))
+        assert run(key_of) == dense_out
 
 
 @spark_settings

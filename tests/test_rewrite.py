@@ -4373,3 +4373,19 @@ def test_failed_recursive_union_step_drops_its_delta_view(spark, rw):
         spark.sql(rw.rewrite(sql)).collect()
     views = [r.tableName for r in spark.sql("SHOW TABLES").collect()]
     assert not [v for v in views if re.fullmatch(r"uq_rec_\w+_delta", v)]
+
+
+def test_empty_map_literal_like_duckdb(spark, rw):
+    """``MAP {}`` is DuckDB's empty map: it rewrites to ``map()``, not to
+    an unparsable ``map(, )``, alone and next to a non-empty map in a
+    list."""
+    import duckdb
+
+    for sql in [
+        "SELECT cardinality(MAP {}) AS v",
+        "SELECT cardinality(MAP {  }) AS v",
+        "SELECT len([MAP {}, MAP {'a': 1}]) AS v",
+        "SELECT cardinality([MAP {}, MAP {'a': 1}][2]) AS v",
+    ]:
+        got = spark.sql(rw.rewrite(sql)).collect()[0].v
+        assert got == duckdb.sql(sql).fetchall()[0][0], sql

@@ -8,15 +8,18 @@ the result with DuckDB running the same text, through ``compare_query``.
 Every entry is gated here, whatever its ``spark_fn``:
 
 - code entries: bench kernels, plan-pinned DataFrame queries, entries
-  built on the operator library, entries that run more than one
-  statement or post-process, and entries whose oracle text the gateway
-  cannot serve yet (registry module docstring);
+  that run more than one statement or post-process, entries whose
+  oracle hard-codes what the code computes, and entries whose oracle
+  text the gateway cannot serve yet (registry module docstring);
 - ``sql=`` entries, whose served gateway text differs from their oracle;
 - SQL-text entries without ``sql=``, whose case here runs the same query
   as their oracle-gate case (test_oracle_gate.py).
 
 A code entry that passes here and has none of the other reasons to stay
 code is a DataFrame copy of its oracle: it belongs in ``register_sql``.
+:data:`KEPT_AS_CODE` names the reason for every code entry that is not a
+bench kernel, plan-pinned or excluded, and
+``test_code_entries_have_a_reason`` keeps that list complete.
 
 An entry whose oracle text the gateway cannot serve yet is listed in
 :data:`EXCLUDED` with the DuckDB feature or defect it needs. Those run as
@@ -26,6 +29,7 @@ strict xfails, so a fix fails the gate (XPASS) until its entry is removed.
 from __future__ import annotations
 
 from functools import partial
+from pathlib import Path
 
 import pytest
 
@@ -72,6 +76,49 @@ EXCLUDED: dict[str, str] = {
     ),
 }
 
+_CONSTANT_CHECKS = (
+    "the oracle asserts its check columns as constant TRUE; the code computes them"
+)
+_CLOSED_FORM = (
+    "the code encodes and decodes a synthesized binary; the oracle only evaluates "
+    "the synthesizer's doc_id formula"
+)
+_STREAMING = "runs a Structured Streaming query: start, drain, stop"
+
+# Code entries that are neither bench kernels, EXCLUDED, nor read by
+# tests/test_plans.py, each with the reason its oracle text cannot stand
+# in for it (registry module docstring).
+KEPT_AS_CODE: dict[str, str] = {
+    "ann_cosine_topk_int8": _CONSTANT_CHECKS,
+    "ann_cosine_topk_pq": _CONSTANT_CHECKS,
+    "ann_ivf_persistent": _CONSTANT_CHECKS,
+    "dedup_bloom_membership": _CONSTANT_CHECKS,
+    "dedup_semantic": _CONSTANT_CHECKS,
+    "emb_pca_project": _CONSTANT_CHECKS,
+    "events_qsummary_sliding_quantiles": _CONSTANT_CHECKS,
+    "text_bpe_tokenize": _CONSTANT_CHECKS,
+    "text_compression_ratio": _CONSTANT_CHECKS,
+    "multimodal_audio_rms": _CLOSED_FORM,
+    "multimodal_audio_stats": _CLOSED_FORM,
+    "multimodal_decode_stats": _CLOSED_FORM,
+    "multimodal_frame_sample": _CLOSED_FORM,
+    "multimodal_gif_decode": _CLOSED_FORM,
+    "multimodal_jpeg_decode": _CLOSED_FORM,
+    "multimodal_jpeg_progressive": _CLOSED_FORM,
+    "multimodal_pixel_dedup": _CLOSED_FORM,
+    "planned_join_segment_revenue": (
+        "runs a key-sampling job before the join (operators/skew.py::plan_join); "
+        "the oracle runs the plain join"
+    ),
+    "prepared_statement_roundtrip": "runs PREPARE, EXECUTE and DEALLOCATE as separate statements",
+    "streaming_dedup": _STREAMING,
+    "streaming_enrich_join": _STREAMING,
+    "streaming_rollup_parquet": _STREAMING,
+    "streaming_sliding_window": _STREAMING,
+    "streaming_stateful_counter": _STREAMING,
+    "streaming_tumbling_window": _STREAMING,
+}
+
 
 GATED = sorted(n for n, q in Q.REGISTRY.items() if q.oracle is not None)
 
@@ -97,3 +144,24 @@ def test_gate_covers_code_and_reshaped_entries():
     assert set(EXCLUDED) <= set(GATED)
     # a SQL-text entry's doc is its own, never functools.partial's
     assert all(q.doc != partial.__doc__ for q in Q.REGISTRY.values())
+
+
+def test_code_entries_have_a_reason():
+    """A code entry is a bench kernel, in EXCLUDED, read by
+    tests/test_plans.py, or named in KEPT_AS_CODE with its reason.
+    Anything else is a DataFrame copy of a query the gateway serves and
+    belongs in ``register_sql``; a KEPT_AS_CODE name that is SQL text
+    (or gone) is stale."""
+    plans = (Path(__file__).parent / "test_plans.py").read_text()
+    code = {n for n, q in Q.REGISTRY.items() if getattr(q.spark_fn, "func", None) is not gateway_sql}
+    unexplained = {
+        n
+        for n in code
+        if not Q.REGISTRY[n].bench
+        and n not in EXCLUDED
+        and f'"{n}"' not in plans
+        and n not in KEPT_AS_CODE
+    }
+    assert not unexplained, sorted(unexplained)
+    assert set(KEPT_AS_CODE) <= code, sorted(set(KEPT_AS_CODE) - code)
+    assert all(KEPT_AS_CODE.values())

@@ -20,10 +20,12 @@ capability Spark-first:
 - ``web``       — the HTTP service contract: POST / + GET /health, content
                   negotiation, problem+json errors, first-batch timeout
                   (reference: src/web/routers.rs).
-- ``operators`` — Spark-scale operators beyond the reference's surface:
-                  dedup (exact / MinHash-LSH / SimHash / n-gram Jaccard),
-                  similarity search over embeddings, text analysis,
-                  as-of join, multimodal column plumbing.
+- ``operators`` — DataFrame kernels beyond the reference's surface, used
+                  by the registry's code entries and bench.py (the
+                  served path does not import them): dedup (n-gram
+                  Jaccard / MinHash-LSH / SimHash / winnowing), embedding
+                  similarity search, text analysis, as-of join,
+                  multimodal codecs.
 - ``queries``   — the oracle-checked query corpus (one entry per operator
                   in SURVEY.md §2), exported through ``__spark_entry__``.
 """

@@ -1,50 +1,16 @@
 """Corpus-composition operators for training-data pipelines.
 
-Mixing a pretraining corpus means sampling each source at its own rate
-(web 10%, books 100%, …). `stratified_sample` does it DETERMINISTICALLY:
-membership is a pure function of the document key via an affine hash over
-the Mersenne prime 2^31-1 (exact int64, same arithmetic as the minhash
-permutations in dedup.py) — so the sample is reproducible across runs,
-engines, and partitionings, needs no shuffling or state, and composes
-with incremental ingestion (a re-run keeps the same documents). That
-determinism is also what makes it oracle-checkable row-for-row, unlike
-rand()-based sampling.
+Splitting, ordering, sampling and packing a pretraining corpus. Every
+choice here is a pure function of the document key (a hash of it, or its
+order), never rand(): the result is reproducible across runs, engines
+and partitionings, composes with incremental ingestion (a re-run keeps
+the same documents), and is oracle-checkable row-for-row.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-_P = 2_147_483_647
-_A = 2_654_435_761
-
-
-def sample_bucket(key: Column, buckets: int = 10_000) -> Column:
-    """Deterministic per-key bucket in [0, buckets): (A*key mod p) mod
-    buckets. Exact int64 (products < 2^62 for key < 2^31)."""
-    return F.pmod(F.pmod(key * F.lit(_A), F.lit(_P)), F.lit(buckets))
-
-
-def stratified_sample(
-    docs: DataFrame,
-    rates: dict[str, float],
-    strata_col: str = "source",
-    key_col: str = "doc_id",
-    default_rate: float = 0.0,
-    buckets: int = 10_000,
-) -> DataFrame:
-    """Keep each row iff its key's bucket falls under its stratum's rate.
-
-    No shuffle, no state: a narrow filter whose pass-set is fixed by the
-    key hash — the property that makes corpus mixes reproducible and
-    unions of increments consistent.
-    """
-    b = sample_bucket(F.col(key_col).cast("long"), buckets)
-    thresh = F.lit(int(default_rate * buckets))
-    for s, r in rates.items():
-        thresh = F.when(F.col(strata_col) == s, F.lit(int(r * buckets))).otherwise(thresh)
-    return docs.filter(b < thresh)
 
 
 def hash_split(
@@ -193,97 +159,6 @@ def importance_sample(
     return docs.filter(h < p * 65536)
 
 
-def pack_sequences(
-    docs: DataFrame,
-    context_tokens: int = 256,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    bucket_docs: int = 1000,
-) -> DataFrame:
-    """GPT-style sequence packing: concatenate documents in key order and
-    chop the token stream into fixed ``context_tokens`` windows, then
-    report per-window packing stats (how many docs land in each context,
-    how many straddle its left boundary, the covered doc range).
-
-    The packing assignment is pure prefix-sum arithmetic over token
-    counts, so it never materializes the concatenated stream. A bare
-    ``sum() OVER (ORDER BY key)`` would drag the corpus into ONE
-    partition; instead the prefix sum is two-phase like shuffle_order:
-    bucket monotonically in key, collect per-bucket token totals
-    (#buckets rows), broadcast their running offsets, and window-rank
-    only WITHIN each bucket — every corpus-sized step stays distributed.
-
-    Buckets are equal-width slices of the OBSERVED key range (min/max/
-    count — one 3-scalar pre-pass), targeting ~``bucket_docs`` docs per
-    bucket but hard-capped at 65536 buckets. A plain ``key div
-    bucket_docs`` (earlier revision) silently assumed dense keys: with
-    hashed or widely-shifted doc ids nearly every doc got its own bucket
-    and the per-bucket collect degenerated to O(n_docs). Range-width
-    bucketing keeps the collect bounded for ANY key distribution; the
-    OUTPUT is invariant to the bucketing (offsets + within-bucket ranks
-    reconstruct the exact global prefix sum for every monotone
-    bucketing), so only bucket-size balance — not correctness — degrades
-    on value-skewed keys (worst case: one big sort task, never a wrong
-    window).
-    """
-    from pyspark.sql import Window as W
-
-    n_tok = F.size(F.split(F.col(text_col), " ")).cast("long")
-    base = docs.select(F.col(key_col).alias("_k"), n_tok.alias("_n"))
-    st = base.agg(
-        F.min("_k").alias("mn"), F.max("_k").alias("mx"), F.count("*").alias("n")
-    ).first()
-    if st["n"] == 0:
-        schema = "window_id long, n_docs long, n_boundary long, first_doc long, last_doc long"
-        return docs.sparkSession.createDataFrame([], schema)
-    n_buckets = min(max(1, -(-int(st["n"]) // bucket_docs)), 65536)
-    # Width math in Python ints (arbitrary precision): a span across the
-    # full signed-64 range overflows long subtraction. The bucket id is
-    # then just `_k div width` — NO (_k - mn) subtraction on the Spark
-    # side (which overflows for mn ≈ -2^62, _k ≈ +2^62; review catch).
-    # Truncating `div` is weakly monotone in _k for width > 0, which is
-    # all the two-phase prefix sum needs; bucket ids need not start at 0
-    # (offsets are keyed by value) and the count stays <= n_buckets + 1.
-    # Cap keeps the literal inside long range when span/n_buckets would
-    # exceed 2^62 (n_buckets=1 with extreme keys); the bucket count then
-    # lands at <= 4 — still bounded, still monotone.
-    width = min(
-        max(1, -(-(int(st["mx"]) - int(st["mn"]) + 1) // n_buckets)), 1 << 62
-    )
-    bucketed = base.withColumn("_b", F.expr(f"_k div {width}L"))
-    per_bucket = {
-        r["_b"]: r["tok"]
-        for r in bucketed.groupBy("_b").agg(F.sum("_n").alias("tok")).collect()
-    }
-    # non-empty: the n == 0 case returned above, so per_bucket has rows.
-    offsets, acc = {}, 0
-    for b in sorted(per_bucket):
-        offsets[b] = acc
-        acc += per_bucket[b]
-    mapping = F.create_map(*[F.lit(x) for b_off in offsets.items() for x in b_off])
-    w = W.partitionBy("_b").orderBy("_k")
-    cum = (F.sum("_n").over(w) + mapping[F.col("_b")]).alias("_cum")
-    spans = bucketed.select("_k", "_n", cum).select(
-        "_k",
-        F.floor((F.col("_cum") - F.col("_n")) / context_tokens).alias("_w0"),
-        F.floor((F.col("_cum") - 1) / context_tokens).alias("_w1"),
-    )
-    return (
-        spans.select(
-            "_k",
-            "_w0",
-            F.explode(F.sequence("_w0", "_w1")).alias("window_id"),
-        )
-        .groupBy("window_id")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum((F.col("_w0") < F.col("window_id")).cast("long")).alias("n_boundary"),
-            F.min("_k").alias("first_doc"),
-            F.max("_k").alias("last_doc"),
-        )
-    )
-
-
 def pack_sequences_emit(
     docs: DataFrame,
     context_tokens: int = 256,
@@ -295,13 +170,14 @@ def pack_sequences_emit(
     in key order, chop the token stream into fixed ``context_tokens``
     windows, and emit each packed window's actual token sequence — the
     last-mile step that turns a curated corpus into training examples
-    (:func:`pack_sequences` reports the same windows as stats only).
+    (the ``corpus_pack_sequences`` query reports the same windows as
+    stats only).
 
     Columns: window_id, n_docs, n_tokens, tokens (array<string>; the
     final window may be short).
 
-    Scale shape: the same two-phase prefix sum as :func:`pack_sequences`
-    (bucketed offsets, no global window), then each document emits one
+    Scale shape: a two-phase prefix sum (per-bucket token totals over
+    equal key-range buckets, collected as offsets; no global window), then each document emits one
     ARRAY-SLICE fragment per window it spans (fan-out = spanned windows,
     ~1 + n_tokens/context — never token-level rows), and one groupBy on
     window_id flattens fragments in offset order. Token arrays shuffle
@@ -390,156 +266,6 @@ def pack_sequences_emit(
             "n_docs",
             F.size("tokens").cast("long").alias("n_tokens"),
             "tokens",
-        )
-    )
-
-
-def stats_card(
-    docs: DataFrame, text_col: str = "text", lang_col: str = "lang"
-) -> DataFrame:
-    """One-row corpus summary card — the "datasheet" a pipeline prints
-    before training: volume, duplication, language mix, length profile.
-
-    Columns: n_docs, total_tokens, avg_tokens, p50_tokens, p90_tokens,
-    n_unique_texts, dup_rate, n_langs, top_lang, top_lang_frac.
-
-    Scale shape: two aggregation passes over the corpus — one global agg
-    (counts, token percentiles, sha256-distinct) and one tiny groupBy on
-    the language column to pick the modal language (cnt DESC, lang
-    tie-break) — crossJoined as 1-row broadcast frames. No windows, no
-    corpus-sized shuffles (the distinct ships 32-byte digests).
-    """
-    n_tok = F.size(F.split(F.col(text_col), " ")).cast("long")
-    base = docs.select(
-        F.sha2(F.col(text_col), 256).alias("h"), n_tok.alias("n_tok"), F.col(lang_col)
-    )
-    overall = base.agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tok").alias("total_tokens"),
-        F.round(F.avg("n_tok"), 2).alias("avg_tokens"),
-        F.round(F.expr("percentile(n_tok, 0.5)"), 2).alias("p50_tokens"),
-        F.round(F.expr("percentile(n_tok, 0.9)"), 2).alias("p90_tokens"),
-        F.countDistinct("h").alias("n_unique_texts"),
-        F.countDistinct(lang_col).alias("n_langs"),
-    )
-    top = (
-        base.groupBy(lang_col)
-        .agg(F.count("*").alias("cnt"))
-        .orderBy(F.col("cnt").desc(), F.col(lang_col))
-        .limit(1)
-        .select(F.col(lang_col).alias("top_lang"), F.col("cnt").alias("top_cnt"))
-    )
-    return overall.crossJoin(F.broadcast(top)).select(
-        "n_docs",
-        "total_tokens",
-        "avg_tokens",
-        "p50_tokens",
-        "p90_tokens",
-        "n_unique_texts",
-        F.round(1.0 - F.col("n_unique_texts") / F.col("n_docs"), 4).alias("dup_rate"),
-        "n_langs",
-        "top_lang",
-        F.round(F.col("top_cnt") / F.col("n_docs"), 4).alias("top_lang_frac"),
-    )
-
-
-def per_source_cap(
-    docs: DataFrame,
-    cap: int,
-    strata_col: str = "source",
-    key_col: str = "doc_id",
-) -> DataFrame:
-    """Keep at most ``cap`` documents per source — the domain-dominance
-    guard of web-corpus mixing (one crawl host must not swamp the mix).
-
-    Selection is DETERMINISTIC: rank within each source by the md5 of
-    the key (a uniform, reproducible order — the same hash-order trick
-    as hash_split/shuffle_order) and keep rank <= cap, so the sample is
-    stable across runs/engines and composes with incremental ingestion.
-    One shuffle on the strata column; per-strata ranking is a window,
-    so a pathologically large single source serializes through one task
-    — at that scale, cap the source upstream with stratified_sample
-    (rate = cap/|source|) instead.
-    """
-    from pyspark.sql import Window as W
-
-    h = F.md5(F.col(key_col).cast("string"))
-    w = W.partitionBy(strata_col).orderBy(h, key_col)
-    return (
-        docs.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") <= cap)
-        .drop("__rk")
-    )
-
-
-def version_diff(
-    old: DataFrame,
-    new: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    strata_col: str = "source",
-) -> DataFrame:
-    """Corpus-version audit: per-source added / removed / modified /
-    unchanged counts between two corpus snapshots — the release gate a
-    versioned training-data pipeline runs before promoting a refresh.
-
-    Scale shape: each side projects (key, sha256, source) at scan speed,
-    then ONE full-outer key join carries 32-byte digests, never document
-    bodies; the result aggregate is (sources x 4) rows. Content equality
-    via digest comparison keeps the join row width constant no matter
-    how large documents get.
-    """
-    o = old.select(
-        F.col(key_col).alias("k"),
-        F.sha2(F.col(text_col), 256).alias("h_old"),
-        F.col(strata_col).alias("src_old"),
-        F.lit(True).alias("in_old"),
-    )
-    n = new.select(
-        F.col(key_col).alias("k"),
-        F.sha2(F.col(text_col), 256).alias("h_new"),
-        F.col(strata_col).alias("src_new"),
-        F.lit(True).alias("in_new"),
-    )
-    # Presence decides added/removed — NOT digest nullness: sha2(NULL
-    # text) is NULL on a PRESENT row, which would misread a NULL-text doc
-    # as added/removed (review catch). Modification uses null-safe
-    # inequality so NULL-text-vs-value counts as modified and
-    # NULL-vs-NULL as unchanged.
-    status = (
-        F.when(F.col("in_old").isNull(), F.lit("added"))
-        .when(F.col("in_new").isNull(), F.lit("removed"))
-        .when(~(F.col("h_old").eqNullSafe(F.col("h_new"))), F.lit("modified"))
-        .otherwise(F.lit("unchanged"))
-    )
-    return (
-        o.join(n, "k", "full_outer")
-        .select(
-            F.coalesce("src_new", "src_old").alias(strata_col),
-            status.alias("status"),
-        )
-        .groupBy(strata_col, "status")
-        .agg(F.count("*").alias("n_docs"))
-    )
-
-
-def length_buckets(
-    docs: DataFrame, text_col: str = "text", bucket_tokens: int = 32
-) -> DataFrame:
-    """Length-bucketed batching stats: bucket = floor(n_tokens / width).
-
-    Grouping similar-length documents before batch assembly minimizes
-    padding waste in training; the bucket id is a narrow per-row
-    expression, and the aggregate is one small-key shuffle.
-    """
-    n = F.size(F.split(F.col(text_col), " "))
-    return (
-        docs.withColumn("len_bucket", F.floor(n / bucket_tokens).cast("long"))
-        .groupBy("len_bucket")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.min(n).cast("long").alias("min_tokens"),
-            F.max(n).cast("long").alias("max_tokens"),
         )
     )
 

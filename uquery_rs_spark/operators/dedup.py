@@ -173,7 +173,7 @@ def _bucket_pairs(buckets: DataFrame, *key_cols: str) -> DataFrame:
     bucket-key projection runs ONCE (a self-join recomputes it for both
     sides) and the only shuffle is the groupBy on the bucket key. Bucket
     membership lists stay small by LSH construction; exact-duplicate
-    clusters are the exception — dedupe those first (exact_dedup) at scale.
+    clusters are the exception — dedupe those first (sha256 grouping) at scale.
     """
     return (
         buckets.groupBy(*key_cols)
@@ -182,28 +182,6 @@ def _bucket_pairs(buckets: DataFrame, *key_cols: str) -> DataFrame:
         .select(F.explode(_pairs_in_bucket(F.col("ids"), memo_name="ids")).alias("p"))
         .select(F.col("p.x").alias("x"), F.col("p.y").alias("y"))
         .distinct()
-    )
-
-
-def exact_dedup_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-source exact-duplicate statistics via sha256 grouping."""
-    return (
-        docs.withColumn("h", F.sha2(F.col(text_col), 256))
-        .groupBy("source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.countDistinct("h").alias("n_unique"),
-            (F.count("*") - F.countDistinct("h")).alias("n_dup"),
-        )
-    )
-
-
-def exact_dedup(docs: DataFrame, text_col: str = "text", key_col: str = "doc_id") -> DataFrame:
-    """Keep the lowest-key document per distinct text (hash-grouped)."""
-    return (
-        docs.withColumn("h", F.sha2(F.col(text_col), 256))
-        .groupBy("h")
-        .agg(F.min(key_col).alias(key_col), F.count("*").alias("n_copies"))
     )
 
 
@@ -216,28 +194,7 @@ def normalize_text(text: Column) -> Column:
     return F.trim(F.regexp_replace(cleaned, " +", " "))
 
 
-def normalized_dedup(
-    docs: DataFrame, text_col: str = "text", key_col: str = "doc_id"
-) -> DataFrame:
-    """Exact dedup AFTER text normalization: catches the re-crawl /
-    re-encode near-identicals that byte-exact hashing misses (case
-    changes, punctuation or whitespace-only edits — the most common
-    duplication mode in web corpora after byte-exact copies).
-
-    Same hash-groupBy shape and cost as exact_dedup: the shuffle moves
-    32-byte digests + keys, never document bodies; normalization is a
-    per-row projection at scan speed.
-    """
-    return (
-        docs.withColumn("h", F.sha2(normalize_text(F.col(text_col)), 256))
-        .groupBy("h")
-        .agg(F.min(key_col).alias(key_col), F.count("*").alias("n_copies"))
-    )
-
-
-def _shingle_intersections(
-    docs: DataFrame, n: int, text_col: str, key_col: str, max_df: int | None = None
-) -> DataFrame:
+def _shingle_intersections(docs: DataFrame, n: int, text_col: str, key_col: str) -> DataFrame:
     """Inverted-index pair intersections: x, y (x<y), nx, ny, inter.
 
     Explode postings (set size riding alongside the id), group by
@@ -245,13 +202,6 @@ def _shingle_intersections(
     |intersection|. The shingle projection runs ONCE and there are no
     size-lookup joins (a size join would recompute it; a shingle
     self-join would recompute it twice).
-
-    ``max_df`` drops shingles whose posting list exceeds it BEFORE pair
-    expansion, bounding the dominant O(df²) blow-up per shingle (stop-
-    shingle postings are exactly the ones that go quadratic). Recall
-    caveat: pairs whose overlap lives only in dropped high-df shingles
-    report a smaller ``inter`` and may fall below a downstream threshold
-    — capped results are a subset of uncapped (asserted in tests).
     """
     sh = _spread(docs).select(
         F.col(key_col).alias("id"), _shingles_cached(text_col, n).alias("s")
@@ -270,13 +220,10 @@ def _shingle_intersections(
         F.explode_outer("s").alias("g"),
     ).filter(F.col("g").isNotNull())
     pairs_in = _pairs_in_bucket(F.col("ms"), memo_name="ms")
-    keep = (
-        F.size("ms").between(2, max_df) if max_df is not None else F.size("ms") > 1
-    )
     return (
         post.groupBy("g")
         .agg(F.sort_array(F.collect_list("m")).alias("ms"))
-        .filter(keep)
+        .filter(F.size("ms") > 1)
         .select(F.explode(pairs_in).alias("p"))
         .groupBy(
             F.col("p.x.id").alias("x"),
@@ -305,61 +252,6 @@ def jaccard_pairs_exact(
         )
         .filter(F.col("jaccard") >= threshold)
         .select("x", "y", "inter", "nx", "ny", F.round("jaccard", 4).alias("jaccard"))
-    )
-
-
-def containment_pairs_exact(
-    docs: DataFrame,
-    threshold: float,
-    n: int = 3,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    max_df: int | None = None,
-) -> DataFrame:
-    """Pairs where the SMALLER document's shingle set is >= threshold
-    contained in the other: containment = inter / min(nx, ny).
-
-    Catches doc-in-doc duplication — a quoted article, boilerplate-
-    wrapped re-crawl, or page+comments superset — that symmetric Jaccard
-    misses entirely: a snippet fully inside a long page scores Jaccard
-    ~|snippet|/|page| (tiny) but containment 1.0. Same inverted-index
-    plan and cost as jaccard_pairs_exact; jaccard rides along so
-    consumers can see WHICH regime flagged the pair. Columns: x, y,
-    inter, nx, ny, containment, jaccard.
-
-    Scale note (measured 1x vs 8x sf0.1 docs, round 4: e = 1.32 at 8x):
-    like jaccard_pairs_exact this is the EXACT baseline, O(sum df²) in
-    posting frequencies, superlinear by construction. MinHash-LSH is NOT
-    the scale fix here — its candidates recall high-Jaccard pairs, and
-    high-containment/low-Jaccard pairs are precisely the ones it misses.
-    The sub-quadratic scale path for passage overlap is
-    winnowing_pairs (e = 0.83 measured): shared substrings guarantee
-    shared fingerprints at ~1/8 the index size, independent of the
-    documents' size ratio.
-
-    ``max_df`` (document-frequency cutoff) makes the exact operator
-    degrade GRACEFULLY instead of superlinearly when run at scale:
-    shingles appearing in more than ``max_df`` docs are dropped before
-    pair expansion, so per-shingle cost is bounded by max_df². Dropped
-    shingles can only shrink ``inter`` — capped output pairs are a
-    subset of the uncapped ones (recall, not precision, is what's
-    traded; see _shingle_intersections).
-    """
-    inter = _shingle_intersections(docs, n, text_col, key_col, max_df=max_df)
-    return (
-        inter.withColumn("containment", F.col("inter") / F.least("nx", "ny"))
-        .filter(F.col("containment") >= threshold)
-        .select(
-            "x",
-            "y",
-            "inter",
-            "nx",
-            "ny",
-            F.round("containment", 4).alias("containment"),
-            F.round(
-                F.col("inter") / (F.col("nx") + F.col("ny") - F.col("inter")), 4
-            ).alias("jaccard"),
-        )
     )
 
 
@@ -431,23 +323,6 @@ def dedup_funnel(
     )
 
 
-def minhash_signature(shingles: Column, num_perm: int) -> Column:
-    """Array of `num_perm` minhash values computed as one projection.
-
-    base(x) = xxhash64(x) mod p; h_j(x) = (a_j * base + b_j) mod p with
-    a_j, b_j derived from j, p = 2^31-1. signature[j] = min over shingles.
-    No row explosion: nested higher-order transforms, all JVM-side.
-    """
-    p = F.lit(_MINHASH_P).cast("long")
-    return bind(
-        F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), p)),
-        lambda base: F.transform(
-            F.sequence(F.lit(0), F.lit(num_perm - 1)),
-            lambda j: _affine_min(base, j, p),
-        ),
-    )
-
-
 def _affine_min(base: Column, j: Column, p: Column) -> Column:
     """min over `base` of the j-th affine permutation (a_j*h + b_j) mod p.
 
@@ -473,8 +348,9 @@ def _affine_min(base: Column, j: Column, p: Column) -> Column:
 def minhash_band_keys(shingles: Column, bands: int, rows_per_band: int) -> Column:
     """Array of `bands` LSH bucket keys, one projection, each perm hashed once.
 
-    Equivalent to hashing rows_per_band-sized slices of
-    minhash_signature(), but built as a single nested expression in which
+    Equivalent to hashing rows_per_band-sized slices of the full minhash
+    signature (one min per permutation), but built as a single nested
+    expression in which
     every permutation j appears exactly once. Materializing the signature
     in a separate select() and slicing it per band looks equivalent but is
     48x slower: Catalyst's CollapseProject inlines the full signature
@@ -724,62 +600,6 @@ def contamination_hits(
         corpus_grams.join(F.broadcast(bench_grams), "g")
         .groupBy(id_col)
         .agg(F.countDistinct("g").alias("n_hit"))
-    )
-
-
-def incremental_near_dedup(
-    base: DataFrame,
-    delta: DataFrame,
-    threshold: float = 0.5,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Incremental ingestion near-dedup: flag delta (new-batch) documents
-    whose word-``n``-gram Jaccard against ANY base-corpus document
-    reaches ``threshold``. Columns: id, n_dup_partners, kept.
-
-    The asymmetry IS the scale design: a daily delta is orders of
-    magnitude smaller than the accumulated corpus, so the delta's
-    exploded shingle index is broadcast and the 100 TB base streams
-    through a map-side join — nothing resembling base×base all-pairs
-    runs, and base never re-shuffles. Within-delta duplicates are the
-    symmetric small problem (run jaccard_pairs_exact on the delta).
-    """
-    grams = _shingles_cached(text_col, n)
-    # explode_outer + null filter (see _shingle_intersections): a plain
-    # explode's inferred size(s) > 0 filter recomputes the shingle
-    # expression a second time per row at the scan.
-    d = (
-        delta.select(F.col(id_col).alias("did"), grams.alias("s"))
-        .select("did", F.size("s").alias("nd"), F.explode_outer("s").alias("g"))
-        .filter(F.col("g").isNotNull())
-    )
-    b = (
-        base.select(F.col(id_col).alias("bid"), grams.alias("s"))
-        .select("bid", F.size("s").alias("nb"), F.explode_outer("s").alias("g"))
-        .filter(F.col("g").isNotNull())
-    )
-    inter = (
-        b.join(F.broadcast(d), "g")
-        .groupBy("did", "bid", "nd", "nb")
-        .agg(F.count("*").alias("i"))
-    )
-    partners = (
-        inter.filter(
-            F.col("i") / (F.col("nd") + F.col("nb") - F.col("i")) >= threshold
-        )
-        .groupBy("did")
-        .agg(F.count("*").alias("n_dup_partners"))
-    )
-    return (
-        delta.select(id_col)
-        .join(partners, F.col(id_col) == F.col("did"), "left")
-        .select(
-            id_col,
-            F.coalesce("n_dup_partners", F.lit(0)).alias("n_dup_partners"),
-            F.col("n_dup_partners").isNull().alias("kept"),
-        )
     )
 
 

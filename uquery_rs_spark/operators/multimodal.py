@@ -1,8 +1,8 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Beyond-reference surface (driver north star). Real pipelines carry
-image/audio/video as `binary` columns with a metadata struct; decode /
-feature-extraction runs as Arrow-batched pandas iterators (mapInPandas).
+image/audio/video as `binary` columns with a metadata struct; decode
+runs as Arrow-batched pandas iterators (mapInPandas).
 
 Decode support (round 3): every raster format parses natively — netpbm
 P5/P6 and BMP (BI_RGB 8/24/32-bit) with numpy, 8-bit PNG with stdlib
@@ -10,11 +10,9 @@ zlib plus a full unfilter (None/Sub/Up/Average/Paeth; gray/RGB/palette/
 alpha color types), and JFIF JPEG — baseline SOF0 and progressive SOF2
 — via the pure-numpy codec in jpeg.py (Huffman + DCT both directions,
 round 4 adds spectral-selection/successive-approximation progressive
-scans both directions) — so featurize/resize are
+scans both directions) — so resize and the decode statistics are
 genuinely pixel-dependent, with re-encode to PPM. Only video remains
-codec-gated (NotImplementedError); unknown payloads fall back to the
-deterministic byte-histogram fake so metadata-only pipelines stay
-runnable.
+codec-gated (NotImplementedError).
 
 Scale design: mapInPandas streams Arrow batches through Python once, with
 no row-wise serde; metadata-only operations (sizes, magic-byte sniffing)
@@ -31,12 +29,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-FEATURE_DIM = 16
-
-# all raster decode natively (stdlib zlib + numpy, incl. the baseline
-# JPEG codec in jpeg.py); only video remains codec-gated
-REAL_DECODERS_AVAILABLE = ("ppm", "pgm", "bmp", "png", "jpeg")
 
 
 def synthesize_binary_docs(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -483,53 +475,6 @@ def resize_nearest(img: np.ndarray, max_dim: int) -> np.ndarray:
     yi = (np.arange(nh) * h // nh).astype(np.int64)
     xi = (np.arange(nw) * w // nw).astype(np.int64)
     return img[yi][:, xi]
-
-
-def _fake_features(payload: bytes) -> np.ndarray:
-    """Deterministic stand-in for non-decodable payloads: a 16-bin
-    histogram of byte values — stable across engines/platforms and cheap."""
-    arr = np.frombuffer(payload, dtype=np.uint8)
-    return np.bincount(arr % FEATURE_DIM, minlength=FEATURE_DIM).astype(np.int64)
-
-
-def _features(payload: bytes) -> np.ndarray:
-    """Pixel features when the payload decodes (16-bin integer luminance
-    histogram — deterministic: (299R+587G+114B)//1000), else the byte
-    histogram fallback."""
-    try:
-        img = decode_image(bytes(payload))
-    except (NotImplementedError, ValueError):
-        return _fake_features(payload)
-    px = img.astype(np.int64)
-    lum = (299 * px[:, :, 0] + 587 * px[:, :, 1] + 114 * px[:, :, 2]) // 1000
-    return np.bincount((lum * FEATURE_DIM // 256).ravel(), minlength=FEATURE_DIM).astype(
-        np.int64
-    )
-
-
-def extract_features(binary_docs: DataFrame) -> DataFrame:
-    """payload → FEATURE_DIM histogram features via mapInPandas.
-
-    Decodable payloads (P5/P6/BMP) get real luminance histograms; opaque
-    ones fall back to the byte histogram. Output: doc_id, n_bytes,
-    features array<bigint>, feature_sum.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = [_features(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "n_bytes": [len(p) for p in pdf["payload"]],
-                    "features": [f.tolist() for f in feats],
-                    "feature_sum": [int(f.sum()) for f in feats],
-                }
-            )
-
-    return binary_docs.mapInPandas(
-        batches, schema="doc_id long, n_bytes long, features array<long>, feature_sum long"
-    )
 
 
 def resize_images(binary_docs: DataFrame, max_dim: int = 256) -> DataFrame:

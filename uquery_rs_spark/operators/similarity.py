@@ -10,9 +10,8 @@ Implementation split:
   fold per pair (~50x at 64 dims). The small side is collected once and
   broadcast as a numpy matrix, mirroring what Catalyst's broadcast join
   would ship anyway.
-- Row-wise dot products on already-joined pairs use a vectorized
-  pandas_udf (`pd_dot`); the interpreted `dot()` HOF remains for tiny
-  inputs and as the no-Python fallback.
+- The interpreted `dot()` HOF serves tiny per-row inputs (one
+  vector against a broadcast constant) where no Python stage pays off.
 
 Scale design:
 - brute force: O(|Q|*|C|*d) compute but only |C| rows ever move — each
@@ -22,9 +21,8 @@ Scale design:
   broadcast join side.
 - threshold pairs (near-dup): the corpus matrix is broadcast; each
   partition emits only pairs over threshold. Broadcastable-corpus is the
-  exact-baseline regime; beyond it the candidate step swaps for LSH
-  bucketing (random hyperplanes, the minhash banding machinery) with the
-  same verification kernel.
+  exact-baseline regime; beyond it cosine_pairs_blocked distributes the
+  same exact compute over block pairs without broadcasting the corpus.
 - IVF: centroids and per-query probe sets are tiny and computed once on
   the driver (TakeOrderedAndProject + one small matmul); the corpus then
   makes ONE narrow pass that assigns each row's cell and scores it
@@ -39,9 +37,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
 
-from ..functions.expr import bind, spread
+from ..functions.expr import spread
 
 
 def _as_double(v: Column) -> Column:
@@ -49,40 +46,11 @@ def _as_double(v: Column) -> Column:
 
 
 def dot(a: Column, b: Column) -> Column:
-    """Interpreted JVM-side dot product (zip_with fold). Prefer `pd_dot`
-    on hot paths; keep this for tiny inputs / no-Python contexts."""
+    """Interpreted JVM-side dot product (zip_with fold), for tiny inputs
+    and no-Python contexts; hot paths use the numpy kernels above."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
-
-
-# DoubleType() instance (not a DDL string) so the decorator doesn't need
-# an active SparkSession at import time.
-@F.pandas_udf(DoubleType())
-def pd_dot(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Vectorized row-wise dot product over two array columns: one
-    einsum per Arrow batch instead of an interpreted fold per row."""
-    A = np.stack([np.asarray(v, dtype="float64") for v in a])
-    B = np.stack([np.asarray(v, dtype="float64") for v in b])
-    return pd.Series(np.einsum("ij,ij->i", A, B))
-
-
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-
-
-def with_unit_vector(df: DataFrame, vec_col: str, out_col: str = "unit") -> DataFrame:
-    """Pre-normalize once so cosine becomes a plain dot product.
-
-    Both the cast vector and its norm are bound once per row
-    (functions.expr.bind); naively referencing the norm inside the
-    division lambda would re-run the whole norm aggregate per element.
-    """
-    unit = bind(
-        _as_double(F.col(vec_col)),
-        lambda v: bind(l2_norm(v), lambda n: F.transform(v, lambda x: x / n)),
-    )
-    return df.withColumn(out_col, unit)
 
 
 def _collect_unit_matrix(df: DataFrame, id_col: str, vec_col: str) -> tuple[np.ndarray, np.ndarray]:
@@ -172,44 +140,6 @@ def _global_topk(part: DataFrame, k: int) -> DataFrame:
         part.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank")
-    )
-
-
-def quantization_error_stats(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
-    """Per-label reconstruction error of symmetric int8 quantization.
-
-    Pure expression-level (no Python): scale = max|x|/127 per vector,
-    l2_err = ||x - round(x/scale)*scale||₂, averaged per label. This is
-    the audit query a pipeline runs before committing to int8 storage —
-    narrow projections, one shuffle on the (tiny) label key.
-    """
-    v = _as_double(F.col(vec_col))
-    scale_raw = F.array_max(F.transform(v, F.abs)) / F.lit(127.0)
-    df = (
-        emb.withColumn("v", v)
-        .withColumn(
-            "scale",
-            bind(scale_raw, lambda s: F.when(s == 0.0, F.lit(1.0)).otherwise(s)),
-        )
-        .withColumn(
-            "l2_err",
-            F.sqrt(
-                F.aggregate(
-                    F.col("v"),
-                    F.lit(0.0),
-                    lambda acc, x: acc
-                    + F.pow(x - F.round(x / F.col("scale")) * F.col("scale"), 2),
-                )
-            ),
-        )
-    )
-    return df.groupBy(label_col).agg(
-        F.round(F.avg("l2_err"), 4).alias("avg_l2_err"),
-        F.count("*").alias("n_vecs"),
     )
 
 
@@ -304,8 +234,8 @@ def cosine_pairs_threshold(
 
     The corpus matrix is broadcast once; each partition computes one
     matmul and emits only over-threshold pairs, so output stays sparse.
-    Beyond broadcastable corpora, swap the candidate step for hyperplane
-    LSH and reuse this as the per-bucket verifier.
+    Beyond broadcastable corpora, cosine_pairs_blocked computes the same
+    pairs fully distributed (the reference its tests compare against).
     """
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast(_collect_unit_matrix(df, id_col, vec_col))
@@ -335,8 +265,7 @@ def cosine_pairs_blocked(
 
     The scale path for low/moderate thresholds where LSH cannot prune
     (sign-bit collision odds at s=0.4 vs s=0 differ only 0.63 vs 0.5 per
-    plane — candidates degenerate to all pairs; measured, see
-    cosine_pairs_lsh). Exact all-pairs is then the honest design, and the
+    plane — candidates degenerate to all pairs; measured). Exact all-pairs is then the honest design, and the
     job is distributing O(n^2) compute WITHOUT collecting or broadcasting
     the corpus:
 
@@ -445,107 +374,12 @@ def _spherical_kmeans(X: np.ndarray, k: int, iters: int = 3) -> np.ndarray:
     return C
 
 
-def _hyperplane_matrix(dim: int, n_planes: int, seed: int) -> np.ndarray:
-    """Deterministic random hyperplane normals, (dim, n_planes) float64."""
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal((dim, n_planes))
-
-
-def hyperplane_band_keys(
-    vec_col: str, dim: int, bands: int, rows_per_band: int, seed: int = 0x5EED
-):
-    """Pandas UDF: array<float> -> array<bigint> of `bands` LSH bucket keys.
-
-    Sign-random-projection (SRP) LSH: bit j of a key is sign(v · h_j) for
-    a fixed Gaussian hyperplane h_j; a band key packs `rows_per_band`
-    sign bits plus the band index (so keys never collide across bands).
-    Signs are scale-invariant, so raw (non-normalized) vectors are fine.
-    One (batch × dim) @ (dim × bands*rows_per_band) BLAS matmul per Arrow
-    batch — the same kernel shape as the verify step.
-
-    Collision probability per bit for cosine s: p = 1 - arccos(s)/pi.
-    Recall at threshold t is 1 - (1 - p(t)^rows_per_band)^bands — pick
-    rows_per_band small for low thresholds (high recall) and large (e.g.
-    16) for production near-dup thresholds >= 0.9 where buckets must stay
-    sparse at corpus scale.
-    """
-    H = _hyperplane_matrix(dim, bands * rows_per_band, seed)
-    weights = (1 << np.arange(rows_per_band, dtype="int64"))
-
-    from pyspark.sql.types import ArrayType, LongType
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def band_keys(v: pd.Series) -> pd.Series:
-        V = np.stack([np.asarray(x, dtype="float64") for x in v])
-        bits = (V @ H) > 0  # (n, bands*rows_per_band)
-        keys = bits.reshape(len(V), bands, rows_per_band) @ weights  # (n, bands)
-        keys += np.arange(bands, dtype="int64") << rows_per_band
-        return pd.Series(list(keys))
-
-    return band_keys(F.col(vec_col))
-
-
-def cosine_pairs_lsh(
-    df: DataFrame,
-    threshold: float,
-    bands: int = 48,
-    rows_per_band: int = 4,
-    seed: int = 0x5EED,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """All-pairs cosine >= threshold via hyperplane-LSH candidates + exact
-    verification. Columns: x, y (x < y), sim (raw double).
-
-    Scale shape (cf. cosine_pairs_threshold, the broadcast-everything
-    exact baseline): no driver collect and no full-corpus broadcast —
-    candidates come from banded sign-bucket collisions (the minhash-LSH
-    `_bucket_pairs` machinery), and only candidate pairs pay a dot
-    product. Shuffles: one groupBy on (band, key) whose volume is
-    n*bands smallish rows, then two id-equi-joins of the candidate list
-    against the unit vectors (Catalyst broadcasts a small side / sorts
-    at scale — its call, not a hand-rolled sc.broadcast).
-
-    Verification is exact, so output ⊆ the exact result; with the default
-    r=4/b=48 the per-pair miss probability at s=0.4 is (1-p^4)^48 ≈ 2e-4
-    and falls steeply above it — recall 1.0 on the test corpora is
-    asserted against the exact kernel (tests/test_operators.py).
-    """
-    from .dedup import _bucket_pairs
-
-    if dim is None:
-        # Bounded one-row probe, still a job at plan-build time — callers
-        # should pass dim (llm_q does, from the parquet schema).
-        probe = df.select(vec_col).filter(F.size(vec_col) > 0).limit(1).collect()
-        if not probe:
-            spark = df.sparkSession
-            return spark.createDataFrame([], "x long, y long, sim double")
-        dim = len(probe[0][0])
-    vecs = with_unit_vector(spread(df.select(id_col, vec_col)), vec_col, "v").select(
-        F.col(id_col).alias("id"), "v",
-        hyperplane_band_keys(vec_col, dim, bands, rows_per_band, seed).alias("keys"),
-    )
-    buckets = vecs.select("id", F.explode("keys").alias("bkey"))
-    candidates = _bucket_pairs(buckets, "bkey")
-    ux = vecs.select(F.col("id").alias("x"), F.col("v").alias("vx"))
-    uy = vecs.select(F.col("id").alias("y"), F.col("v").alias("vy"))
-    return (
-        candidates.join(ux, "x")
-        .join(uy, "y")
-        .withColumn("sim", pd_dot("vx", "vy"))
-        .filter(F.col("sim") >= threshold)
-        .select("x", "y", "sim")
-    )
-
-
 # (cache_key, fingerprint, n_cells) -> trained centroid matrix. Training
 # is deterministic (sorted lowest-id sample, seed-free init), so caching
 # is pure memoization; keyed by caller-supplied corpus identity (e.g. the
 # sf dir), NOT the DataFrame object. The fingerprint (parquet mtime+size
 # when the key resolves to a local file) invalidates stale centroids if
-# the corpus at a path is regenerated within one process; call
-# clear_centroid_cache() for corpora the fingerprint can't see.
+# the corpus at a path is regenerated within one process.
 _centroid_cache: dict[tuple[str, object, int], np.ndarray] = {}
 
 
@@ -560,10 +394,6 @@ def _corpus_fingerprint(cache_key: str) -> object:
         except OSError:
             continue
     return None
-
-
-def clear_centroid_cache() -> None:
-    _centroid_cache.clear()
 
 
 def ivf_topk(
@@ -730,111 +560,6 @@ def ivf_probe_index(
         probe, "query_id long, neighbor_id long, sim double"
     )
     return _global_topk(part, k)
-
-
-def _centroid_cos_per_row(
-    emb: DataFrame,
-    label_col: str,
-    vec_col: str,
-    id_col: str | None = None,
-) -> DataFrame:
-    """Per-row cosine of each vector to its label's mean vector.
-
-    Scale shape shared by the cohesion and outlier audits: centroids come
-    from ONE map-side-combined posexplode aggregate whose result is
-    (n_labels x dim) rows — tiny, collected and broadcast like any
-    dimension table — then the corpus makes a single Arrow-batched pass
-    computing cosines against the broadcast matrix. No join of the corpus
-    against itself, no per-dimension shuffle of the second pass.
-    """
-    spark = emb.sparkSession
-    dims = emb.select(label_col, F.posexplode(_as_double(F.col(vec_col))).alias("dim", "x"))
-    cent_rows = dims.groupBy(label_col, "dim").agg(F.avg("x").alias("c")).collect()
-    cents: dict[int, dict[int, float]] = {}
-    for r in cent_rows:
-        cents.setdefault(r[label_col], {})[r["dim"]] = r["c"]
-    cmat = {
-        lab: np.array([d[i] for i in sorted(d)], dtype="float64")
-        for lab, d in cents.items()
-    }
-    bc = spark.sparkContext.broadcast(cmat)
-    id_cols = [id_col] if id_col else []
-
-    def cos_pass(batches):
-        cmat = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            V = np.stack([np.asarray(v, dtype="float64") for v in pdf[vec_col]])
-            C = np.stack([cmat[int(l)] for l in pdf[label_col]])
-            num = np.einsum("ij,ij->i", V, C)
-            den = np.linalg.norm(V, axis=1) * np.linalg.norm(C, axis=1)
-            out = {c: pdf[c] for c in id_cols}
-            out["label"] = pdf[label_col]
-            out["cos"] = num / den
-            yield pd.DataFrame(out)
-
-    schema = (f"{id_col} long, " if id_col else "") + "label int, cos double"
-    return emb.select(*id_cols, label_col, vec_col).mapInPandas(cos_pass, schema)
-
-
-def label_centroid_cohesion(
-    emb: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-label centroid cohesion: mean cosine of each vector to its
-    label's mean vector. Columns: label, n_vecs, avg_cos_to_centroid.
-    The clustering-quality audit a labeled/clustered corpus runs after
-    assignment (scale shape: _centroid_cos_per_row)."""
-    per_row = _centroid_cos_per_row(emb, label_col, vec_col)
-    return per_row.groupBy("label").agg(
-        F.count("*").alias("n_vecs"),
-        F.round(F.avg("cos"), 4).alias("avg_cos_to_centroid"),
-    )
-
-
-def centroid_outliers(
-    emb: DataFrame,
-    z_thresh: float = -2.0,
-    label_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-label cosine-to-centroid outliers: vectors whose similarity to
-    their label centroid sits ``z_thresh`` sample standard deviations or
-    more BELOW the label mean — mislabeled / corrupted / off-cluster
-    embeddings, the triage list an embedding-corpus audit acts on.
-
-    The z-score is computed from the ROUNDED (4 dp) cosine on both the
-    Spark and oracle sides so the statistics see bit-identical inputs
-    regardless of summation order; the filter compares the 2-dp-rounded
-    z, keeping the cut deterministic across engines.
-
-    Scale shape: _centroid_cos_per_row (broadcast centroid matrix, one
-    Arrow pass) + a label-keyed stats aggregate (n_labels rows) joined
-    back — AQE broadcasts it. No windows over whole labels, so a
-    billion-row label never serializes through one task.
-    """
-    per_row = _centroid_cos_per_row(emb, label_col, vec_col, id_col=id_col).withColumn(
-        "cos_r", F.round("cos", 4)
-    )
-    stats = per_row.groupBy("label").agg(
-        F.avg("cos_r").alias("mu"), F.stddev_samp("cos_r").alias("sigma")
-    )
-    # sigma == 0 (constant-cosine label, incl. singleton labels) → no
-    # outliers by definition; guarded on both engines (ANSI Spark raises
-    # DIVIDE_BY_ZERO, DuckDB yields inf — neither is the semantics).
-    z = F.round(
-        F.when(F.col("sigma") > 0, (F.col("cos_r") - F.col("mu")) / F.col("sigma")), 2
-    )
-    return (
-        per_row.join(stats, "label")
-        .withColumn("z", z)
-        .filter(F.col("z") <= z_thresh)
-        .select("label", id_col, F.col("cos_r").alias("cos"), "z")
-        .orderBy("label", id_col)
-    )
 
 
 def _trained_centroids(

@@ -1,5 +1,6 @@
-"""Text-analysis operators: language ID, quality scoring, token stats,
-document fingerprinting.
+"""Text-analysis operators: language ID, quality scoring, repetition
+and compression-ratio signals, BPE training and encoding, substring and
+within-document dedup, n-gram top-k and bigram language-model scoring.
 
 Beyond-reference surface (driver north star). Every formula is a pure
 SQL-expressible function of the text so the DuckDB oracle can replicate it
@@ -18,7 +19,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.expr import bind
 
 # Tiny per-language stopword lists (public common-word sets); the language
 # score is the fraction of tokens found in each list — a classic n-gram/
@@ -47,28 +47,19 @@ def stopword_ratio(toks: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(wl, t))) / F.size(toks)
 
 
-def language_scores(toks: Column) -> list[Column]:
-    """One `<lang>_score` column per language (rounded 4). `toks` should be
-    a projected column (with_tokens), not a raw split expression."""
-    return [
-        F.round(stopword_ratio(toks, words), 4).alias(f"{lang}_score")
-        for lang, words in STOPWORDS.items()
-    ]
-
-
 LANG_ST = "uq_lang_st"  # conventional name for the projected score struct
 
 
 def with_language_struct(docs: DataFrame, toks_col: str = TOKS) -> DataFrame:
     """Project ALL four stopword ratios once as a struct column.
 
-    Selecting language_scores(toks) AND predicted_language(toks) in one
-    projection evaluates every ratio twice (the argmax's bind() shares
-    work inside itself, but not with the score columns) — 8 interpreted
-    filter passes over the token array per row. A struct column referenced
-    by several downstream field extractions is protected from
-    CollapseProject inlining (same rule with_tokens relies on), so the 4
-    ratios run exactly once per row and scores + argmax read the fields.
+    Per-language score columns next to an argmax over the same ratios,
+    each computed inline, would evaluate every ratio twice — 8
+    interpreted filter passes over the token array per row. A struct
+    column referenced by several downstream field extractions is protected
+    from CollapseProject inlining (same rule with_tokens relies on), so
+    the 4 ratios run exactly once per row and language_struct_scores +
+    language_struct_argmax read the fields.
     """
     from ..functions.expr import cached_expr
 
@@ -99,27 +90,6 @@ def language_struct_argmax(st: Column) -> Column:
     return F.when(best > 0, expr).otherwise(F.lit("und"))
 
 
-def predicted_language(toks: Column) -> Column:
-    """argmax over language scores; 'und' (undetermined) when all zero.
-
-    Ties resolve in STOPWORDS iteration order — the same CASE chain the
-    oracle uses. The four scores are bound once as a struct; the CASE
-    chain reads fields instead of re-running each ratio per comparison.
-    """
-
-    def chain(st: Column) -> Column:
-        best = F.greatest(*[st[lang] for lang in STOPWORDS])
-        expr = F.lit("und")
-        for lang in reversed(list(STOPWORDS)):
-            expr = F.when(st[lang] == best, F.lit(lang)).otherwise(expr)
-        return F.when(best > 0, expr).otherwise(F.lit("und"))
-
-    return bind(
-        F.struct(*[stopword_ratio(toks, w).alias(lang) for lang, w in STOPWORDS.items()]),
-        chain,
-    )
-
-
 def quality_score(text: Column, toks: Column) -> Column:
     """Heuristic quality in [0,1]: length sweet-spot + short-token penalty
     + digit/punct penalty. Deterministic rational arithmetic, rounded 4."""
@@ -131,193 +101,6 @@ def quality_score(text: Column, toks: Column) -> Column:
     tok_component = F.least(avg_tok_len / F.lit(5.0), F.lit(1.0))
     return F.round(
         F.lit(0.5) * len_component + F.lit(0.4) * tok_component - F.lit(0.3) * digit_ratio, 4
-    )
-
-
-def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document token statistics (whitespace + BPE-ish subword count)."""
-    t = F.col(TOKS)
-    # BPE-ish proxy: ceil(len/4) subwords per token — a public rule-of-thumb
-    # for byte-pair vocabularies (~4 chars/token English average).
-    bpe = F.aggregate(
-        F.transform(t, lambda x: F.ceil(F.length(x) / 4).cast("long")),
-        F.lit(0).cast("long"),
-        lambda a, b: a + b,
-    )
-    return with_tokens(docs, text_col).select(
-        "doc_id",
-        F.length(text_col).alias("n_chars"),
-        F.size(t).cast("long").alias("n_tokens"),
-        F.size(F.array_distinct(t)).cast("long").alias("n_types"),
-        F.round(F.size(F.array_distinct(t)) / F.size(t), 4).alias("type_token_ratio"),
-        bpe.alias("n_bpe_subwords"),
-    )
-
-
-_FP_MOD = 1_000_000_007
-_FP_MUL = 31
-
-
-def fingerprint(text: Column) -> Column:
-    """Order-sensitive rolling document fingerprint.
-
-    fp = fold over tokens: (fp*31 + ascii(first char)*7 + len(token)) mod 1e9+7.
-    Stays < 2^35 so int64 arithmetic is exact in both engines.
-    """
-    t = tokens(text)
-    return F.aggregate(
-        t,
-        F.lit(0).cast("long"),
-        lambda acc, x: (acc * _FP_MUL + F.ascii(x) * 7 + F.length(x)) % _FP_MOD,
-    )
-
-
-def fingerprint_sql(text_expr: str) -> str:
-    """The DuckDB twin of :func:`fingerprint` (kept adjacent for parity)."""
-    return (
-        f"list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        f"list_transform(string_split({text_expr}, ' '), t -> CAST(unicode(t) * 7 + length(t) AS BIGINT))), "
-        f"(acc, x) -> (acc * {_FP_MUL} + x) % {_FP_MOD})"
-    )
-
-
-# PII patterns restricted to the RE2 ∩ Java-regex common subset (no
-# lookaround), so the DuckDB oracle runs the identical pattern.
-PII_PATTERNS: dict[str, str] = {
-    "email": r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}",
-    "phone": r"\b\d{3}[-.]\d{3}[-.]\d{4}\b",
-}
-
-
-def pii_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document PII match counts (one column per pattern) plus a
-    has_pii flag — the triage step before redaction; codegen'd
-    regexp_count, no UDF."""
-    counts = [
-        F.regexp_count(F.col(text_col), F.lit(pat)).alias(f"n_{name}")
-        for name, pat in PII_PATTERNS.items()
-    ]
-    out = docs.select("doc_id", *counts)
-    flag = None
-    for name in PII_PATTERNS:
-        c = F.col(f"n_{name}") > 0
-        flag = c if flag is None else (flag | c)
-    return out.withColumn("has_pii", flag)
-
-
-def pii_redact(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Replace each PII match with a typed placeholder (<EMAIL>, <PHONE>)
-    — the standard pretraining scrub. Global replace in both engines
-    (Spark always; DuckDB with the 'g' flag on its side)."""
-    redacted = F.col(text_col)
-    for name, pat in PII_PATTERNS.items():
-        redacted = F.regexp_replace(redacted, pat, f"<{name.upper()}>")
-    return docs.select("doc_id", redacted.alias("redacted"))
-
-
-def lm_perplexity(
-    docs: DataFrame,
-    text_col: str = "text",
-    ref_filter: Column | None = None,
-) -> DataFrame:
-    """CCNet-style LM quality scoring with a character-bigram model.
-
-    Train a char-bigram language model on a clean reference subset
-    (``ref_filter``, e.g. ``lang = 'en'``), then score EVERY document by
-    the mean negative log-probability of its bigrams (cross-entropy) and
-    its exponential (perplexity). Low perplexity ≈ looks like the
-    reference corpus; the classic pretraining quality signal (CCNet uses
-    a wiki-trained KenLM the same way).
-
-    Probabilities are Laplace-smoothed over the observed bigram alphabet:
-    p(g) = (c_g + 1) / (N + V); unseen bigrams get the c_g = 0 mass.
-
-    Scale shape (100 TB): the LM table is at most |alphabet|² rows —
-    KB-sized — so training explodes reference bigrams into a groupBy
-    whose map-side combine collapses each partition to |alphabet|² rows
-    before the (tiny) shuffle. Scoring never shuffles at all: the LM
-    ships to executors as a broadcast numpy table and each document is
-    scored in place by a vectorized codepoint-pair lookup
-    (utf-32 view → key = c1·2²¹ + c2 → searchsorted), one Arrow batch at
-    a time. Round 4 measured the pure-SQL alternative (explode every
-    corpus bigram into a broadcast join + per-doc re-aggregation) at 6x
-    this runtime on sf0.1 — the corpus-sized explode+shuffle is the
-    whole cost, and this formulation deletes it.
-    """
-    import numpy as np
-    import pandas as pd
-
-    base = docs.filter(F.length(text_col) >= 2)
-    ref = base.filter(ref_filter) if ref_filter is not None else base
-
-    # Bigrams are keyed as codepoint pairs: c1*2^21 + c2 is collision-free
-    # across all of Unicode and lets both training and scoring run as
-    # numpy array ops over each batch's concatenated utf-32 view.
-    def _pair_keys(texts: list[str]) -> tuple[np.ndarray, np.ndarray]:
-        """(keys of every in-doc adjacent pair incl. boundary junk,
-        doc start offsets); caller masks/segments as needed."""
-        lens = np.array([len(t) for t in texts], dtype="int64")
-        cp = np.frombuffer("".join(texts).encode("utf-32-le"), dtype="uint32").astype(
-            "int64"
-        )
-        return (cp[:-1] << 21) | cp[1:], np.cumsum(lens) - lens
-
-    def count_bigrams(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            k, starts = _pair_keys(list(pdf[text_col]))
-            valid = np.ones(len(k), dtype=bool)
-            valid[starts[1:] - 1] = False  # pairs straddling doc boundaries
-            u, c = np.unique(k[valid], return_counts=True)
-            yield pd.DataFrame({"k": u, "c": c})
-
-    lm_pdf = (
-        ref.select(text_col)
-        .mapInPandas(count_bigrams, "k long, c long")
-        .groupBy("k")
-        .agg(F.sum("c").alias("c"))
-        .toPandas()
-    )
-    keys = lm_pdf["k"].to_numpy().astype("int64")
-    counts = lm_pdf["c"].to_numpy().astype("float64")
-    order = np.argsort(keys)
-    keys, counts = keys[order], counts[order]
-    n, v = counts.sum(), float(len(counts))
-    if not len(counts):  # empty reference: degenerate uniform model
-        n, v = 0.0, 1.0
-    logp_tab = np.log((counts + 1.0) / (n + v))
-    logp_unseen = float(np.log(1.0 / (n + v)))
-    bc = docs.sparkSession.sparkContext.broadcast((keys, logp_tab, logp_unseen))
-
-    def score(batches):
-        keys, logp_tab, logp_unseen = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            texts = list(pdf[text_col])
-            lens = np.array([len(t) for t in texts], dtype="int64")
-            # One lookup for every adjacent pair in the batch, then
-            # per-doc segment sums via reduceat — minus the one pair
-            # that straddles each document boundary.
-            k, starts = _pair_keys(texts)
-            if len(keys):
-                pos = np.clip(np.searchsorted(keys, k), 0, len(keys) - 1)
-                lp = np.where(keys[pos] == k, logp_tab[pos], logp_unseen)
-            else:
-                lp = np.full(len(k), logp_unseen)
-            sums = np.add.reduceat(lp, starts)
-            if len(starts) > 1:
-                sums[:-1] -= lp[starts[1:] - 1]
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "ce": -(sums / (lens - 1))}
-            )
-
-    scored = base.select("doc_id", text_col).mapInPandas(score, "doc_id long, ce double")
-    return scored.select(
-        "doc_id",
-        F.round("ce", 4).alias("cross_entropy"),
-        F.round(F.exp("ce"), 2).alias("ppl"),
     )
 
 
@@ -390,128 +173,6 @@ def repetition_stats(
             ).alias("top_bigram_frac"),
         )
         .filter(F.col("top_bigram_frac").isNotNull())
-    )
-
-
-def tfidf_top_terms(
-    docs: DataFrame,
-    k: int = 3,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-) -> DataFrame:
-    """Per-document top-``k`` TF-IDF terms — the classic relevance /
-    keyword-extraction primitive behind corpus quality filters and
-    topic-balanced sampling.
-
-    idf = ln((N + 1) / (df + 1)) + 1 (smoothed, always positive);
-    score = tf * idf rounded to 4 (ordering uses the ROUNDED score +
-    term tie-break so cross-engine libm ulp differences in ln() cannot
-    reorder the top-k).
-
-    Scale shape: explode → per-(doc, term) counts [shuffle 1, map-side
-    combined], term document-frequencies [shuffle 2 over the VOCABULARY,
-    not the corpus], join back (AQE broadcasts the df side when the
-    vocabulary is small), top-k window per doc [shuffle 3 — with
-    Spark's WindowGroupLimit pruning to k rows per doc BEFORE the
-    exchange]. Corpus size N is a 1-row aggregate broadcast via
-    crossJoin — the same bounded pattern as every verdict-frame
-    broadcast in this repo.
-
-    The df aggregate deliberately also sums tf (surfaced as ``ttf``,
-    corpus-wide term frequency — a useful diagnostic in its own right):
-    without it Catalyst prunes the tf count out of the df branch,
-    turning it into a DISTINCT whose subplan no longer matches the tf
-    side, and ReuseExchange can't fire — the corpus would be exploded
-    and shuffled TWICE (observed in the r5 plan audit). With ttf kept,
-    both join branches share one exchange (ReusedExchange in the plan,
-    asserted in tests/test_plans.py).
-    """
-    from pyspark.sql import Window as W
-
-    tf = (
-        docs.select(F.col(key_col), F.explode(tokens(F.col(text_col))).alias("term"))
-        .groupBy(key_col, "term")
-        .agg(F.count("*").alias("tf"))
-    )
-    df_ = tf.groupBy("term").agg(
-        F.count("*").alias("df"), F.sum("tf").alias("ttf")
-    )
-    n = docs.agg(F.count("*").alias("n_docs"))
-    scored = (
-        tf.join(df_, "term")
-        .crossJoin(F.broadcast(n))
-        .withColumn(
-            "tfidf",
-            F.round(
-                F.col("tf")
-                * (F.log((F.col("n_docs") + 1.0) / (F.col("df") + 1.0)) + 1.0),
-                4,
-            ),
-        )
-    )
-    w = W.partitionBy(key_col).orderBy(F.col("tfidf").desc(), F.col("term"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(key_col, "rank", "term", "tf", "df", "ttf", "tfidf")
-    )
-
-
-def bm25_scores(
-    docs: DataFrame,
-    query_terms: tuple[str, ...],
-    k1: float = 1.2,
-    b: float = 0.75,
-    top: int = 20,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-) -> DataFrame:
-    """BM25 ranking of the corpus against a fixed query term set — the
-    retrieval scorer behind RAG candidate selection and targeted corpus
-    slicing ("find the docs about X").
-
-    idf_t = ln(1 + (N - df_t + 0.5) / (df_t + 0.5)); per-doc term
-    frequency saturates via tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl)).
-
-    Scale shape: ONE corpus-wide aggregate row (N, avgdl, and one df per
-    query term — |query| columns, computed with array_contains, no
-    explode) broadcast back; scoring is then a pure per-row expression
-    and the global top-``top`` is orderBy+limit = TakeOrdered (per-
-    partition heaps + driver merge of |parts| * top rows, never a full
-    sort shuffle). Entirely whole-stage-codegen, zero Python.
-    """
-    if not query_terms:
-        raise ValueError("bm25_scores requires at least one query term")
-    toked = with_tokens(docs, text_col).withColumn("dl", F.size(F.col(TOKS)))
-    stats = toked.agg(
-        F.count("*").alias("n_docs"),
-        F.avg("dl").alias("avgdl"),
-        *[
-            F.sum(F.array_contains(F.col(TOKS), t).cast("long")).alias(f"df_{i}")
-            for i, t in enumerate(query_terms)
-        ],
-    )
-    scored = toked.crossJoin(F.broadcast(stats))
-
-    def term_count(term: str) -> Column:
-        # factory, not a default-arg lambda: pyspark would read a second
-        # lambda parameter as the element INDEX of a 2-arg filter.
-        return F.size(F.filter(F.col(TOKS), lambda x: x == F.lit(term)))
-
-    parts = []
-    for i, t in enumerate(query_terms):
-        tf = term_count(t)
-        idf = F.log(
-            1.0
-            + (F.col("n_docs") - F.col(f"df_{i}") + 0.5) / (F.col(f"df_{i}") + 0.5)
-        )
-        denom = tf + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))
-        parts.append(idf * (tf * (k1 + 1.0)) / denom)
-    score = F.round(sum(parts[1:], parts[0]), 4)
-    return (
-        scored.select(key_col, F.col("dl").alias("doc_len"), score.alias("bm25"))
-        .orderBy(F.col("bm25").desc(), F.col(key_col))
-        .limit(top)
     )
 
 
@@ -670,114 +331,6 @@ def bpe_encode_counts(
     )
 
 
-# Gopher document-quality rules (Rae et al. 2021, "Scaling Language
-# Models: ... Gopher", App. A1.1 — public thresholds). The two
-# line-based rules (bullet-start / ellipsis-end fractions) need
-# multi-line text and are omitted on the single-line corpus; the
-# remaining five are the word-shape core of the filter.
-GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
-
-
-def gopher_quality_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document Gopher quality signals + the accept flag.
-
-    All pure JVM expression trees over ONE projected token split (no
-    UDF, no shuffle — evaluates at scan speed; at 100 TB this is a
-    narrow map the optimizer fuses into the scan stage):
-
-    - n_words in [50, 100_000]
-    - mean word length in [3, 10]
-    - symbol-to-word ratio ('#' or '...') <= 0.1
-    - fraction of words containing an alphabetic char >= 0.80
-    - at least 2 of the 8 Gopher stop words present
-    """
-    toks = F.col(TOKS)
-    n_words = F.size(toks)
-    # chars excluding the separators / words — Gopher's mean word length
-    mean_wl = F.length(F.regexp_replace(F.col(text_col), " ", "")) / n_words
-    n_hash = F.size(F.filter(toks, lambda t: t.contains("#")))
-    n_ell = F.size(F.filter(toks, lambda t: t.contains("...")))
-    sym_ratio = (n_hash + n_ell) / n_words
-    alpha_frac = F.size(F.filter(toks, lambda t: t.rlike("[a-zA-Z]"))) / n_words
-    stop_arr = F.array(*[F.lit(w) for w in GOPHER_STOPWORDS])
-    stop_hits = F.size(F.filter(stop_arr, lambda w: F.array_contains(toks, w)))
-    out = (
-        with_tokens(docs, text_col)
-        .select(
-            "doc_id",
-            n_words.alias("n_words"),
-            F.round(mean_wl, 4).alias("mean_word_len"),
-            F.round(sym_ratio, 4).alias("symbol_ratio"),
-            F.round(alpha_frac, 4).alias("alpha_word_frac"),
-            stop_hits.alias("stop_hits"),
-        )
-    )
-    passed = (
-        F.col("n_words").between(50, 100_000)
-        & F.col("mean_word_len").between(3, 10)
-        & (F.col("symbol_ratio") <= 0.1)
-        & (F.col("alpha_word_frac") >= 0.8)
-        & (F.col("stop_hits") >= 2)
-    )
-    return out.withColumn("gopher_pass", passed)
-
-
-def boilerplate_removal(
-    docs: DataFrame,
-    min_docs: int,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    sep: str = "\n",
-) -> DataFrame:
-    """Cross-document boilerplate unit removal (the CCNet/RefinedWeb
-    line-dedup step): split each document on ``sep``, count the DISTINCT
-    documents containing each exact unit, drop units appearing in >=
-    ``min_docs`` documents, and reconstruct the text in original order.
-
-    Columns: key, n_units, n_removed, cleaned_text.
-
-    Scale shape: posexplode (fan-out = units/doc), one shuffle on the
-    unit value for the distinct-doc count, a shuffle anti-join back, and
-    one shuffle on the key for ordered reconstruction — the standard
-    boilerplate-removal topology. The unit-frequency side is naturally
-    heavy-tailed; only (unit, count) pairs shuffle, never whole
-    documents, and the final aggregate carries (pos, unit) structs so
-    reconstruction needs no second sort. In production ``sep`` is a
-    newline; tests use the single-line corpus with ``sep=' '`` (word
-    granularity) to exercise the identical machinery.
-    """
-    units = docs.select(
-        key_col, F.posexplode(F.split(F.col(text_col), sep)).alias("pos", "unit")
-    )
-    common = (
-        units.groupBy("unit")
-        .agg(F.countDistinct(key_col).alias("nd"))
-        .filter(F.col("nd") >= min_docs)
-        .select("unit")
-    )
-    kept = units.join(common, "unit", "left_anti")
-    n_total = units.groupBy(key_col).agg(F.count("*").alias("n_units"))
-    recon = kept.groupBy(key_col).agg(
-        F.count("*").alias("n_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "unit"))),
-                lambda s: s["unit"],
-            ),
-            sep,
-        ).alias("cleaned_text"),
-    )
-    return (
-        n_total.join(recon, key_col, "left")
-        .select(
-            key_col,
-            "n_units",
-            (F.col("n_units") - F.coalesce(F.col("n_kept"), F.lit(0))).alias("n_removed"),
-            F.coalesce(F.col("cleaned_text"), F.lit("")).alias("cleaned_text"),
-        )
-    )
-
-
 def exact_substring_dedup(
     docs: DataFrame,
     k: int = 8,
@@ -819,8 +372,9 @@ def exact_substring_dedup(
     false merge a single spurious removal, not a correctness cliff).
     Unlike the paper's remove-all-but-one this removes EVERY covered
     occurrence (deterministic without a global canonical-copy order);
-    chain after :func:`boilerplate_removal`, which handles the
-    keep-one-line case at unit granularity.
+    chain after cross-document boilerplate removal (the
+    ``text_boilerplate_removal`` query), which handles the keep-one-line
+    case at unit granularity.
     """
     toks = F.split(F.col(text_col), " ")
     base = docs.select(F.col(key_col), toks.alias("w"))
@@ -912,116 +466,6 @@ def exact_substring_dedup(
     )
 
 
-def c4_quality_stats(
-    docs: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    sep: str = "\n",
-) -> DataFrame:
-    """C4 line + page filtering signals (Raffel et al. 2020 §2.2 —
-    public rules), as pure JVM expression trees over one line split
-    (scan-fused, no shuffle, no UDF — the same 100 TB shape as
-    gopher_quality_stats):
-
-    line rules (kept lines):
-    - ends in a terminal punctuation mark (. ! ? ") after rtrim
-    - at least 5 whitespace-separated words
-    - does not contain 'javascript' (case-insensitive)
-
-    page rules (c4_pass):
-    - at least 3 kept lines (C4's >=3-sentences proxy at line level)
-    - no 'lorem ipsum' (case-insensitive), no '{' anywhere
-
-    Columns: key, n_lines, n_kept_lines, has_lorem, has_brace,
-    cleaned_text (kept lines re-joined on `sep`), c4_pass. The
-    dirty-word blocklist step of the original is intentionally
-    omitted (no list shipped); callers chain their own blocklist
-    filter on cleaned_text.
-    """
-    import re as _re
-
-    lines = F.split(F.col(text_col), _re.escape(sep))
-
-    def _keep(line: Column) -> Column:
-        return (
-            F.rtrim(line).rlike('[.!?"]$')
-            & (F.size(F.split(F.trim(line), " +")) >= 5)
-            & ~F.lower(line).contains("javascript")
-        )
-
-    kept = F.filter(lines, _keep)
-    out = docs.select(
-        key_col,
-        F.size(lines).alias("n_lines"),
-        F.size(kept).alias("n_kept_lines"),
-        F.lower(F.col(text_col)).contains("lorem ipsum").alias("has_lorem"),
-        F.col(text_col).contains("{").alias("has_brace"),
-        F.array_join(kept, sep).alias("cleaned_text"),
-    )
-    passed = (
-        (F.col("n_kept_lines") >= 3)
-        & ~F.col("has_lorem")
-        & ~F.col("has_brace")
-    )
-    return out.withColumn("c4_pass", passed)
-
-
-def quality_classifier(
-    docs: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    n_buckets: int = 1048576,
-) -> DataFrame:
-    """Hashed-feature linear quality classifier — the fastText-filter
-    shape every modern data pipeline runs (DCLM/phi-style quality
-    filtering: hash word features into a fixed table, score with a
-    linear model, threshold).
-
-    The PLUMBING is the real thing and is what this operator
-    demonstrates at scale: per-token feature hashing (31-polynomial
-    rolling hash over codepoints, modulo ``n_buckets``), a weight
-    lookup per bucket, mean-pooled linear score, threshold label —
-    all pure JVM expression trees fused into the scan (no UDF, no
-    shuffle, no model broadcast needed at this size; a real weight
-    table would broadcast-join on the bucket id).
-
-    The WEIGHTS are a deterministic stand-in (no pretrained model ships
-    in this container): w(b) = ((b * 2654435761) % 1000003) / 1000003
-    * 2 - 1 — a Knuth-hash pseudo-random in [-1, 1), integer-exact on
-    any engine, which is what makes the operator oracle-checkable
-    end-to-end on DuckDB. Swap in a broadcast weight table trained
-    offline for production.
-
-    Returns key, n_tokens, quality_score (round 4), quality_label.
-    """
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda t: t != ""
-    )
-    bucket = lambda t: F.aggregate(  # noqa: E731
-        F.split(t, ""),
-        F.lit(0).cast("bigint"),
-        lambda a, c: (a * 31 + F.ascii(c)) % n_buckets,
-    )
-    weight = lambda b: (  # noqa: E731
-        ((b * 2654435761) % 1000003) / 1000003.0 * 2 - 1
-    )
-    total = F.aggregate(
-        toks, F.lit(0.0), lambda s, t: s + weight(bucket(t))
-    )
-    n = F.size(toks)
-    # + 0 normalizes IEEE -0.0 (a tiny negative sum rounding to zero) —
-    # the repo rule since the r6 emb_dim_variance sf0.1 catch: any
-    # round() of a possibly-tiny-negative aggregate needs it, or the
-    # value hasher distinguishes the -0.0/0.0 reprs across engines
-    score = F.round(total / F.greatest(n, F.lit(1)), 4) + F.lit(0.0)
-    return docs.select(
-        key_col,
-        n.cast("bigint").alias("n_tokens"),
-        score.alias("quality_score"),
-        (score > 0).alias("quality_label"),
-    )
-
-
 def intra_doc_dedup(
     docs: DataFrame,
     text_col: str = "text",
@@ -1030,8 +474,8 @@ def intra_doc_dedup(
 ) -> DataFrame:
     """WITHIN-document duplicate-unit removal (round 7): drop repeated
     lines/units inside each document, keeping the FIRST occurrence in
-    order — the page-local companion to the cross-document
-    :func:`boilerplate_removal` (navigation chrome and footer text
+    order — the page-local companion to cross-document boilerplate
+    removal (``text_boilerplate_removal``; navigation chrome and footer text
     typically repeat both within a page and across a site; training
     pipelines run both).
 
@@ -1183,62 +627,6 @@ def bpe_apply(
     )
 
 
-def heavy_hitters_mg(
-    docs: DataFrame,
-    k: int = 200,
-    text_col: str = "text",
-) -> DataFrame:
-    """Frequent tokens via per-partition Misra-Gries summaries + one
-    exact verification pass — the 100 TB alternative to a full-token
-    groupBy. Beyond-reference operator (training-data pipelines use
-    frequent-token tables for tokenizer vocab seeding and boilerplate
-    detection).
-
-    Scale shape: pass 1 streams each partition once through a
-    k-counter Misra-Gries fold (vectorized: pandas value_counts per
-    Arrow batch, summary-merge — combine, subtract the (k+1)-th
-    largest, drop ≤0 — the Agarwal et al. 'mergeable summaries'
-    construction, so any token with global frequency > N/(k+1) is
-    GUARANTEED to survive some partition summary); pass 2 broadcasts
-    the ≤ P·k candidate tokens and exact-counts only those (the
-    shuffle carries ≤ P·k distinct keys instead of the full vocabulary;
-    the heavy tail never shuffles). Result: EXACT counts for every
-    token above total/k — candidates ⊇ truth makes the output
-    deterministic, not approximate. Columns: tok, cnt.
-    """
-    toks = (
-        docs.select(
-            F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("tok")
-        )
-        .filter(F.col("tok") != "")
-    )
-
-    def mg_summaries(batches):
-        import pandas as pd
-
-        summary: pd.Series | None = None
-        for pdf in batches:
-            counts = pdf["tok"].value_counts()
-            summary = counts if summary is None else summary.add(counts, fill_value=0)
-            if len(summary) > k:
-                cut = summary.nlargest(k + 1).iloc[-1]
-                summary = (summary - cut)[lambda s: s > 0]
-        if summary is not None and len(summary):
-            yield pd.DataFrame({"tok": summary.index})
-
-    candidates = toks.mapInPandas(mg_summaries, "tok string").distinct()
-    total = toks.groupBy().agg(F.count("*").alias("n"))
-    return (
-        toks.join(F.broadcast(candidates), "tok")
-        .groupBy("tok")
-        .agg(F.count("*").alias("cnt"))
-        .crossJoin(F.broadcast(total))
-        .filter(F.col("cnt") > F.col("n") / F.lit(float(k)))
-        .select("tok", "cnt")
-        .orderBy(F.desc("cnt"), "tok")
-    )
-
-
 def kn_bigram_score(
     docs: DataFrame,
     ref_filter: Column,
@@ -1248,8 +636,8 @@ def kn_bigram_score(
     discount: float = 0.75,
 ) -> DataFrame:
     """Interpolated Kneser-Ney word-bigram LM: train on a reference
-    subset, score every document. The step up from lm_perplexity's
-    char-bigram MLE: word-level, a real smoothing estimator (absolute
+    subset, score every document. The step up from the char-bigram MLE of
+    ``text_lm_perplexity``: word-level, a real smoothing estimator (absolute
     discounting + continuation-probability backoff — the KenLM/SRILM
     formulation at order 2), closed-vocabulary OOV handling.
 

@@ -1,6 +1,16 @@
 """LLM-data-pipeline corpus: dedup, similarity search, text analysis,
 multimodal plumbing (driver north star, BASELINE.json; SURVEY.md §7.7).
 
+Most entries are SQL text: the DuckDB oracle is served through the
+gateway rewriter exactly as a client's query would be, and is the only
+implementation. An entry stays DataFrame code over ``operators/`` only
+for a reason the registry module docstring lists. Here that is a bench
+kernel, a plan pinned in tests/test_plans.py, an oracle the gateway
+cannot serve yet (the served gate's ``EXCLUDED``), or an oracle that
+hard-codes what the code computes: a constant check, or the closed form
+of a synthesized binary that the code really decodes. The served gate's
+``KEPT_AS_CODE`` names each entry of the last kind with its reason.
+
 Oracle strategy: every deterministic operator gets an exact DuckDB twin
 (shingle Jaccard, sha256 grouping, stopword language ID, fingerprints,
 cosine top-k in double precision). Probabilistic structures whose hashes
@@ -18,7 +28,7 @@ from ..operators import dedup as D
 from ..operators import multimodal as MM
 from ..operators import similarity as S
 from ..operators import text as TX
-from .registry import load_tables, register
+from .registry import load_tables, register, register_sql
 from ..functions.expr import spread
 
 # ---------------------------------------------------------------------------
@@ -26,9 +36,10 @@ from ..functions.expr import spread
 # ---------------------------------------------------------------------------
 
 
-@register(
+register_sql(
     "dedup_exact_stats",
     tags=("llm", "dedup"),
+    doc="""Exact dedup via sha256 grouping (32-byte shuffle keys, not bodies).""",
     oracle="""
 SELECT source,
        count(*)                          AS n_docs,
@@ -39,10 +50,6 @@ GROUP BY source
 ORDER BY source
 """,
 )
-def dedup_exact_stats(spark: SparkSession, sf: str) -> DataFrame:
-    """Exact dedup via sha256 grouping (32-byte shuffle keys, not bodies)."""
-    docs = load_tables(spark, sf)["documents"]
-    return D.exact_dedup_stats(docs).orderBy("source")
 
 
 @register(
@@ -77,9 +84,14 @@ def dedup_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     return D.jaccard_pairs_exact(docs, threshold=0.5).orderBy("x", "y")
 
 
-@register(
+register_sql(
     "dedup_ngram_containment",
     tags=("llm", "dedup"),
+    doc="""Asymmetric containment dedup: flags doc-in-doc duplication — quoted
+    articles, boilerplate-wrapped re-crawls — where the smaller shingle
+    set is >= 60% inside the other even though symmetric Jaccard is
+    tiny. Same shingle inverted-index join as dedup_ngram_jaccard;
+    jaccard rides along so a reader sees which regime flagged the pair.""",
     oracle="""
 WITH sh AS (
   SELECT doc_id AS id,
@@ -103,15 +115,6 @@ WHERE inter * 1.0 / least(sx.nx, sy.ny) >= 0.6
 ORDER BY x, y
 """,
 )
-def dedup_ngram_containment(spark: SparkSession, sf: str) -> DataFrame:
-    """Asymmetric containment dedup (operators/dedup.py::
-    containment_pairs_exact): flags doc-in-doc duplication — quoted
-    articles, boilerplate-wrapped re-crawls — where the smaller shingle
-    set is >= 60% inside the other even though symmetric Jaccard is
-    tiny. Same single-projection inverted-index plan as the Jaccard
-    op."""
-    docs = load_tables(spark, sf)["documents"]
-    return D.containment_pairs_exact(docs, threshold=0.6).orderBy("x", "y")
 
 
 @register(
@@ -252,9 +255,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf: str) -> DataFrame:
     collect, O(n^2) compute spread over B(B+1)/2 bounded tasks. Exact is
     the honest scale design at this threshold: the corpus is isotropic
     (mean cos 0) and sign-LSH collision odds at s=0.4 vs s=0 are 0.63 vs
-    0.5 per plane, so LSH candidates degenerate to all pairs (measured —
-    see cosine_pairs_lsh, which remains the high-threshold near-dup
-    path and is oracle-checked by dedup_embedding_lsh).
+    0.5 per plane, so LSH candidates degenerate to all pairs (measured).
+    dedup_embedding_lsh is the high-threshold (cos >= 0.5) query.
     """
     emb = load_tables(spark, sf)["embeddings"]
     return (
@@ -278,9 +280,14 @@ def _emb_blocks(sf: str) -> int | None:
         return None
 
 
-@register(
+register_sql(
     "dedup_embedding_lsh",
     tags=("llm", "dedup", "similarity"),
+    doc="""Embedding near-duplicate pairs at cosine >= 0.5: unit-normalize
+    each vector, then an exact dot-product self-join (x < y). This is
+    the verified output a hyperplane-LSH candidate step must reproduce
+    (LSH verification is exact, so its pairs equal these); at low
+    thresholds see dedup_embedding_cosine.""",
     oracle="""
 WITH unit AS (
   SELECT vec_id,
@@ -294,24 +301,6 @@ FROM unit a JOIN unit b
 ORDER BY x, y
 """,
 )
-def dedup_embedding_lsh(spark: SparkSession, sf: str) -> DataFrame:
-    """Hyperplane-LSH near-dup pairs: sign-random-projection band keys
-    through the minhash `_bucket_pairs` machinery, exact dot-product
-    verification per candidate (operators.similarity.cosine_pairs_lsh).
-
-    Verification is exact, so output ⊆ the exact all-pairs oracle;
-    banding recall at s >= 0.5 with r=4/b=48 is > 1-1e-5 per pair
-    (asserted recall 1.0 vs the exact kernel in tests/test_operators.py).
-    The LSH path earns its keep at production near-dup thresholds
-    (>= 0.9, r=16) where buckets stay sparse; at low thresholds use
-    cosine_pairs_blocked (see dedup_embedding_cosine).
-    """
-    emb = load_tables(spark, sf)["embeddings"]
-    return (
-        S.cosine_pairs_lsh(emb, threshold=0.5, dim=64)
-        .select("x", "y", F.round("sim", 4).alias("cos_sim"))
-        .orderBy("x", "y")
-    )
 
 
 @register(
@@ -560,9 +549,10 @@ def text_language_id(spark: SparkSession, sf: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-@register(
+register_sql(
     "text_quality_score",
     tags=("llm", "text"),
+    doc="""Length/token/digit-ratio quality heuristic (codegen'd, no UDF).""",
     oracle="""
 SELECT doc_id,
        round(0.5 * least(len(string_split(text, ' ')) / 50.0, 1.0)
@@ -573,18 +563,12 @@ FROM documents
 ORDER BY doc_id
 """,
 )
-def text_quality_score(spark: SparkSession, sf: str) -> DataFrame:
-    """Length/token/digit-ratio quality heuristic (codegen'd, no UDF)."""
-    docs = TX.with_tokens(load_tables(spark, sf)["documents"])
-    return docs.select(
-        "doc_id",
-        TX.quality_score(F.col("text"), F.col(TX.TOKS)).alias("quality"),
-    ).orderBy("doc_id")
 
 
-@register(
+register_sql(
     "text_token_stats",
     tags=("llm", "text"),
+    doc="""Whitespace + BPE-ish token counting, type/token ratio.""",
     oracle="""
 SELECT doc_id,
        length(text)                                    AS n_chars,
@@ -598,31 +582,29 @@ FROM documents
 ORDER BY doc_id
 """,
 )
-def text_token_stats(spark: SparkSession, sf: str) -> DataFrame:
-    """Whitespace + BPE-ish token counting, type/token ratio."""
-    docs = spread(load_tables(spark, sf)["documents"])
-    return TX.token_stats(docs).orderBy("doc_id")
 
 
-@register(
+register_sql(
     "text_fingerprint",
     tags=("llm", "text"),
-    oracle=f"""
-SELECT doc_id, {TX.fingerprint_sql('text')} AS fp
+    doc="""Order-sensitive rolling-hash fingerprint (exact int64 arithmetic —
+    identical in both engines).""",
+    oracle="""
+SELECT doc_id, list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(string_split(text, ' '), t -> CAST(unicode(t) * 7 + length(t) AS BIGINT))), (acc, x) -> (acc * 31 + x) % 1000000007) AS fp
 FROM documents
 ORDER BY doc_id
 """,
 )
-def text_fingerprint(spark: SparkSession, sf: str) -> DataFrame:
-    """Order-sensitive rolling-hash fingerprint (exact int64 arithmetic —
-    identical in both engines)."""
-    docs = load_tables(spark, sf)["documents"]
-    return docs.select("doc_id", TX.fingerprint(F.col("text")).alias("fp")).orderBy("doc_id")
 
 
-@register(
+register_sql(
     "text_tfidf_top_terms",
     tags=("llm", "text", "relevance"),
+    doc="""Per-doc top-3 TF-IDF terms: keyword extraction / relevance
+    weighting over the corpus. Ranking uses the ROUNDED score + term
+    tie-break so libm ulp differences in ln() cannot reorder the top-k;
+    df is derived from the same tf relation (its shuffle is reused) and
+    N is a one-row cross join.""",
     oracle="""
 WITH tf AS (
   SELECT doc_id, term, count(*) AS tf
@@ -644,14 +626,6 @@ SELECT doc_id, rank, term, tf, df, ttf, tfidf FROM (
 ORDER BY doc_id, rank
 """,
 )
-def text_tfidf_top_terms(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-doc top-3 TF-IDF terms (operators/text.py::tfidf_top_terms):
-    keyword extraction / relevance weighting over the corpus. Ranking
-    uses the ROUNDED score + term tie-break on both engines so libm ulp
-    differences in ln() cannot reorder the top-k; df shuffle is
-    vocabulary-sized, N is a 1-row broadcast."""
-    docs = load_tables(spark, sf)["documents"]
-    return TX.tfidf_top_terms(docs, k=3).orderBy("doc_id", "rank")
 
 
 _BM25_TERMS = ("spark", "vector", "stream")
@@ -687,25 +661,28 @@ LIMIT 20
 """
 
 
-@register(
+register_sql(
     "text_bm25_search",
     tags=("llm", "text", "relevance", "search"),
+    doc="""BM25 top-20 docs for a fixed query term set (spark, vector,
+    stream) — the RAG candidate-selection scorer. One corpus-wide
+    aggregate row (N, avgdl, per-term df via list_contains — no unnest)
+    crossed back; scoring is per row and the global top-k plans as
+    TakeOrdered, not a full sort. Rounded-score ordering with doc_id
+    tie-break keeps the cut deterministic across engines.""",
     oracle=_bm25_oracle(),
 )
-def text_bm25_search(spark: SparkSession, sf: str) -> DataFrame:
-    """BM25 top-20 docs for a fixed query term set (operators/text.py::
-    bm25_scores) — the RAG candidate-selection scorer. One corpus-wide
-    aggregate row (N, avgdl, per-term df via array_contains — no
-    explode) broadcast back; scoring is per-row codegen and the global
-    top-k is TakeOrdered, not a full sort. Rounded-score ordering with
-    doc_id tie-break keeps the cut deterministic across engines."""
-    docs = load_tables(spark, sf)["documents"]
-    return TX.bm25_scores(docs, _BM25_TERMS, top=20)
 
 
-@register(
+register_sql(
     "dedup_normalized",
     tags=("llm", "dedup", "normalize"),
+    doc="""Normalization-aware exact dedup: lowercase + punctuation-strip +
+    whitespace-collapse before grouping, catching case/punctuation-only
+    re-crawl duplicates that byte-exact sha256 misses. The entry UNIONS
+    each doc with a deterministically mutated variant (upper-cased,
+    doubled spaces, trailing '!!', shifted key) so every variant pair
+    must collapse to one group of n_copies=2.""",
     oracle="""
 WITH variants AS (
   SELECT doc_id, text FROM documents
@@ -723,26 +700,6 @@ FROM norm GROUP BY n
 ORDER BY doc_id
 """,
 )
-def dedup_normalized(spark: SparkSession, sf: str) -> DataFrame:
-    """Normalization-aware exact dedup (operators/dedup.py::
-    normalized_dedup): lowercase + punctuation-strip + whitespace-
-    collapse before hashing, catching case/punctuation-only re-crawl
-    duplicates that byte-exact sha256 misses. The entry UNIONS each doc
-    with a deterministically mutated variant (upper-cased, doubled
-    spaces, trailing '!!', shifted key) so the oracle hash-checks that
-    every variant pair collapses to one group of n_copies=2."""
-    docs = load_tables(spark, sf)["documents"].select("doc_id", "text")
-    variants = docs.unionByName(
-        docs.select(
-            (F.col("doc_id") + 1000000).alias("doc_id"),
-            F.concat(F.lit("  "), F.upper("text"), F.lit(" !!")).alias("text"),
-        )
-    )
-    return (
-        D.normalized_dedup(variants)
-        .select("doc_id", "n_copies")
-        .orderBy("doc_id")
-    )
 
 
 @register(
@@ -797,9 +754,12 @@ def text_compression_ratio(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "text_lm_perplexity",
     tags=("llm", "text", "quality"),
+    doc="""CCNet-style quality scoring: char-bigram LM trained on the English
+    reference subset (Laplace smoothing), every doc scored by
+    cross-entropy/perplexity under it.""",
     oracle="""
 WITH base AS (SELECT doc_id, text, lang FROM documents WHERE length(text) >= 2),
 bg AS (
@@ -821,13 +781,6 @@ GROUP BY bg.doc_id
 ORDER BY doc_id
 """,
 )
-def text_lm_perplexity(spark: SparkSession, sf: str) -> DataFrame:
-    """CCNet-style quality scoring: char-bigram LM trained on the English
-    reference subset, every doc scored by cross-entropy/perplexity under
-    it (operators/text.py::lm_perplexity — broadcast LM, Laplace
-    smoothing, no UDFs)."""
-    docs = load_tables(spark, sf)["documents"]
-    return TX.lm_perplexity(docs, ref_filter=F.col("lang") == "en").orderBy("doc_id")
 
 
 # Trained merge tables are deterministic per corpus (seed-free tie-break)
@@ -982,9 +935,14 @@ _FEATURE_BIN_COLS = ",\n       ".join(
     f"len(list_filter(cs, c -> c = {k})) AS f{k:02d}" for k in range(16)
 )
 
-@register(
+register_sql(
     "multimodal_features",
     tags=("llm", "multimodal"),
+    doc="""16-bin byte-histogram features of each document's payload,
+    pivoted to scalar columns f00..f15 (driver hashers choke on list
+    columns — scalars-only output is the registry convention). The
+    corpus text is pure ASCII, so the byte histogram equals a
+    per-character codepoint histogram, computed here in SQL.""",
     oracle=f"""
 WITH codes AS (
   SELECT doc_id, octet_length(encode(text)) AS n_bytes,
@@ -997,22 +955,6 @@ FROM codes
 ORDER BY doc_id
 """,
 )
-def multimodal_features(spark: SparkSession, sf: str) -> DataFrame:
-    """payload → 16-bin byte-histogram features via Arrow-batched
-    mapInPandas, pivoted to scalar columns f00..f15 (driver hashers choke
-    on list columns — scalars-only output is the registry convention).
-
-    The corpus text is pure ASCII, so the byte histogram equals a
-    per-character codepoint histogram and DuckDB can compute the exact
-    oracle in SQL — the whole mapInPandas feature path is hash-verified.
-    """
-    docs = load_tables(spark, sf)["documents"]
-    feats = MM.extract_features(MM.synthesize_binary_docs(docs))
-    return feats.select(
-        "doc_id",
-        "n_bytes",
-        *[F.col("features").getItem(k).alias(f"f{k:02d}") for k in range(16)],
-    ).orderBy("doc_id")
 
 
 @register(
@@ -1257,9 +1199,13 @@ def dedup_cluster_canonical(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
+register_sql(
     "corpus_stratified_mix",
     tags=("llm", "corpus", "sampling"),
+    doc="""Deterministic stratified corpus mixing: per-source keep rates
+    (100%/50%/10%, default 5%) via an exact-int64 affine key hash —
+    reproducible across runs/engines/partitionings and checkable
+    row-for-row, unlike rand() sampling.""",
     oracle="""
 SELECT source, count(*) AS n_kept
 FROM documents
@@ -1270,24 +1216,16 @@ GROUP BY source
 ORDER BY source
 """,
 )
-def corpus_stratified_mix(spark: SparkSession, sf: str) -> DataFrame:
-    """Deterministic stratified corpus mixing (operators/corpus.py):
-    per-source keep rates (100%/50%/10%, default 5%) via an exact-int64
-    affine key hash — reproducible across runs/engines/partitionings and
-    oracle-checkable row-for-row, unlike rand() sampling. The identical
-    arithmetic runs in the DuckDB oracle."""
-    from ..operators.corpus import stratified_sample
-
-    docs = load_tables(spark, sf)["documents"]
-    kept = stratified_sample(
-        docs, {"src0": 1.0, "src1": 0.5, "src2": 0.1}, default_rate=0.05
-    )
-    return kept.groupBy("source").agg(F.count("*").alias("n_kept")).orderBy("source")
 
 
-@register(
+register_sql(
     "text_pii_scan",
     tags=("llm", "text", "pii"),
+    doc="""PII detection + redaction: email/phone patterns from the RE2 ∩
+    Java-regex common subset (no lookaround) run identically in both
+    engines. The synthetic corpus has no PII, so every 7th doc is
+    deterministically salted with an email + phone before scanning —
+    exercising both the hit and miss paths.""",
     oracle=r"""
 SELECT doc_id,
        len(regexp_extract_all(pii_text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_email,
@@ -1306,29 +1244,6 @@ FROM (SELECT doc_id,
 ORDER BY doc_id
 """,
 )
-def text_pii_scan(spark: SparkSession, sf: str) -> DataFrame:
-    """PII detection + redaction (operators/text.py::pii_stats/pii_redact):
-    email/phone patterns from the RE2 ∩ Java common subset run identically
-    in both engines. The synthetic corpus has no PII, so every 7th doc is
-    deterministically salted with an email + phone before scanning —
-    exercising both the hit and miss paths."""
-    docs = spread(load_tables(spark, sf)["documents"])
-    salted = docs.select(
-        "doc_id",
-        F.when(
-            F.col("doc_id") % 7 == 0,
-            F.concat(
-                F.col("text"),
-                F.lit(" contact bob"),
-                F.col("doc_id").cast("string"),
-                F.lit("@mail.example or 555-010-"),
-                F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-            ),
-        ).otherwise(F.col("text")).alias("text"),
-    )
-    stats = TX.pii_stats(salted)
-    red = TX.pii_redact(salted)
-    return stats.join(red, "doc_id").orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1367,9 +1282,13 @@ def decontaminate_benchmark_overlap(spark: SparkSession, sf: str) -> DataFrame:
     return D.contamination_hits(docs, F.col("source") == "src0", n=8).orderBy("doc_id")
 
 
-@register(
+register_sql(
     "corpus_hash_split",
     tags=("llm", "corpus", "sampling"),
+    doc="""Deterministic train/val split: membership is md5(key) prefix <
+    'f3' (243/256 ≈ 94.9% train) — a pure row function, so the split is
+    reproducible across engines, runs and partitionings and composes
+    with incremental ingestion.""",
     oracle="""
 SELECT source,
        CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'f3'
@@ -1380,21 +1299,6 @@ GROUP BY source, split
 ORDER BY source, split
 """,
 )
-def corpus_hash_split(spark: SparkSession, sf: str) -> DataFrame:
-    """Deterministic train/val split (operators/corpus.py::hash_split):
-    membership is md5(key) prefix < 'f3' (243/256 ≈ 94.9% train) — a pure
-    row function, so the split is reproducible across engines, runs and
-    partitionings and composes with incremental ingestion. The identical
-    md5 expression runs in the DuckDB oracle."""
-    from ..operators.corpus import hash_split
-
-    docs = load_tables(spark, sf)["documents"]
-    return (
-        hash_split(docs)
-        .groupBy("source", "split")
-        .agg(F.count("*").alias("n_docs"))
-        .orderBy("source", "split")
-    )
 
 
 @register(
@@ -1456,9 +1360,12 @@ def corpus_leakage_safe_split(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "text_repetition_stats",
     tags=("llm", "text"),
+    doc="""Gopher-style repetition filter: docs whose single most frequent
+    word bigram exceeds 5% of all bigrams — the loop/boilerplate
+    signal.""",
     oracle="""
 WITH words AS (
   SELECT doc_id, string_split(text, ' ') AS w FROM documents
@@ -1476,18 +1383,14 @@ WHERE top_c / total > 0.05
 ORDER BY doc_id
 """,
 )
-def text_repetition_stats(spark: SparkSession, sf: str) -> DataFrame:
-    """Gopher-style repetition filter (operators/text.py::repetition_stats):
-    docs whose single most frequent word bigram exceeds 5% of all bigrams
-    — the loop/boilerplate signal. Spark side is a shuffle-free per-row
-    array expression; the oracle takes the equivalent unnest/group path."""
-    docs = spread(load_tables(spark, sf)["documents"])
-    return TX.repetition_stats(docs).orderBy("doc_id")
 
 
-@register(
+register_sql(
     "emb_quantize_int8_error",
     tags=("llm", "similarity", "quantized"),
+    doc="""Int8-quantization audit: per-label mean L2 reconstruction error
+    of symmetric per-vector int8 quantization — the go/no-go query
+    before storing a 100 TB embedding corpus at 1 byte/dim.""",
     oracle="""
 WITH q AS (
   SELECT label, embedding,
@@ -1507,14 +1410,6 @@ FROM err GROUP BY label
 ORDER BY label
 """,
 )
-def emb_quantize_int8_error(spark: SparkSession, sf: str) -> DataFrame:
-    """Int8-quantization audit (operators/similarity.py::
-    quantization_error_stats): per-label mean L2 reconstruction error of
-    symmetric per-vector int8 quantization — the go/no-go query before
-    storing a 100 TB embedding corpus at 1 byte/dim. Expression-level on
-    both engines (identical scale/round arithmetic in the oracle)."""
-    emb = load_tables(spark, sf)["embeddings"]
-    return S.quantization_error_stats(emb).orderBy("label")
 
 
 def _ann_recall_shape(
@@ -1575,9 +1470,15 @@ def ann_cosine_topk_int8(spark: SparkSession, sf: str) -> DataFrame:
     return _ann_recall_shape(approx, exact, k=5, min_hits=3, mean_bound=0.9)
 
 
-@register(
+register_sql(
     "emb_dim_variance",
     tags=("llm", "embedding", "audit"),
+    doc="""Embedding-health audit: per-DIMENSION mean/variance/range across
+    the corpus — the check that catches dead dimensions (variance ~ 0),
+    runaway dimensions (range blowups), and mean drift before they
+    poison similarity search. posexplode + groupBy(dim): map-side
+    partial aggregation collapses each partition to 64 rows before the
+    shuffle, so the audit costs one narrow pass at any corpus size.""",
     oracle="""
 WITH dims AS (
   SELECT t.i - 1 AS dim, CAST(t.x AS DOUBLE) AS x
@@ -1595,30 +1496,6 @@ GROUP BY dim
 ORDER BY dim
 """,
 )
-def emb_dim_variance(spark: SparkSession, sf: str) -> DataFrame:
-    """Embedding-health audit: per-DIMENSION mean/variance/range across
-    the corpus — the check that catches dead dimensions (variance ~ 0),
-    runaway dimensions (range blowups), and mean drift before they
-    poison similarity search. posexplode + groupBy(dim): map-side
-    partial aggregation collapses each partition to 64 rows before the
-    shuffle, so the audit costs one narrow pass at any corpus size."""
-    emb = load_tables(spark, sf)["embeddings"]
-    dims = emb.select(F.posexplode("embedding").alias("dim", "xf")).select(
-        "dim", F.col("xf").cast("double").alias("x")
-    )
-    return (
-        dims.groupBy("dim")
-        .agg(
-            # + 0 normalizes IEEE signed zero: round() of a tiny negative
-            # mean yields -0.0 in DuckDB but 0.0 in Spark, and the value
-            # hasher distinguishes the reprs (caught by the sf0.1 gate)
-            (F.round(F.avg("x"), 4) + F.lit(0)).alias("mean"),
-            (F.round(F.var_samp("x"), 4) + F.lit(0)).alias("variance"),
-            (F.round(F.min("x"), 4) + F.lit(0)).alias("lo"),
-            (F.round(F.max("x"), 4) + F.lit(0)).alias("hi"),
-        )
-        .orderBy("dim")
-    )
 
 
 @register(
@@ -1647,9 +1524,14 @@ def ann_cosine_topk_pq(spark: SparkSession, sf: str) -> DataFrame:
     return _ann_recall_shape(approx, exact, k=5, min_hits=3, mean_bound=0.9)
 
 
-@register(
+register_sql(
     "corpus_epoch_shuffle_battery",
     tags=("llm", "corpus", "sampling"),
+    doc="""Multi-epoch shuffling: each epoch's order is a different
+    reproducible permutation (md5 of the key salted with the epoch) —
+    both epochs' ranks per doc, plus a corpus-wide assertion that the
+    permutations actually differ (a dropped salt would leave every
+    epoch identical).""",
     oracle="""
 WITH e1 AS (
   SELECT doc_id,
@@ -1670,37 +1552,13 @@ FROM j
 ORDER BY doc_id
 """,
 )
-def corpus_epoch_shuffle_battery(spark: SparkSession, sf: str) -> DataFrame:
-    """Multi-epoch shuffling (operators/corpus.py::shuffle_order with the
-    epoch salt): each epoch's order is a different reproducible
-    permutation — both epochs' ranks per doc hash-checked exactly, plus
-    a corpus-wide assertion that the permutations actually differ (a
-    dropped salt would leave every epoch identical)."""
-    from ..operators.corpus import shuffle_order
-
-    docs = load_tables(spark, sf)["documents"]
-    e1 = shuffle_order(docs, epoch=1).select(
-        "doc_id", F.col("shuffle_rank").alias("rank_e1")
-    )
-    e2 = shuffle_order(docs, epoch=2).select(
-        "doc_id", F.col("shuffle_rank").alias("rank_e2")
-    )
-    j = e1.join(e2, "doc_id")
-    differ = j.agg(
-        (F.sum((F.col("rank_e1") != F.col("rank_e2")).cast("long")) > 0).alias(
-            "orders_differ"
-        )
-    )
-    return (
-        j.crossJoin(F.broadcast(differ))
-        .select("doc_id", "rank_e1", "rank_e2", "orders_differ")
-        .orderBy("doc_id")
-    )
 
 
-@register(
+register_sql(
     "corpus_shuffle_order",
     tags=("llm", "corpus", "sampling"),
+    doc="""Deterministic epoch-shuffle order: reproducible pseudo-random
+    global rank by md5(key), contiguous from 1.""",
     oracle="""
 SELECT doc_id,
        row_number() OVER (ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
@@ -1709,22 +1567,14 @@ FROM documents
 ORDER BY shuffle_rank
 """,
 )
-def corpus_shuffle_order(spark: SparkSession, sf: str) -> DataFrame:
-    """Deterministic epoch-shuffle order (operators/corpus.py::
-    shuffle_order): reproducible pseudo-random global rank by md5(key),
-    computed distributed (range partition + per-partition prefix-sum
-    offsets) instead of the single-partition window a naive global
-    row_number would plan. Oracle runs the naive form — identical
-    ranks, different physical strategy."""
-    from ..operators.corpus import shuffle_order
-
-    docs = load_tables(spark, sf)["documents"]
-    return shuffle_order(docs).select("doc_id", "shuffle_rank").orderBy("shuffle_rank")
 
 
-@register(
+register_sql(
     "corpus_stats_card",
     tags=("llm", "corpus", "audit"),
+    doc="""One-row corpus datasheet: volume, token length profile (exact
+    interpolated percentiles), sha256 duplication rate, language mix
+    with modal language.""",
     oracle="""
 WITH base AS (
   SELECT sha256(text) AS h, len(string_split(text, ' ')) AS n_tok, lang
@@ -1752,21 +1602,17 @@ SELECT n_docs, total_tokens, avg_tokens, p50_tokens, p90_tokens,
 FROM overall CROSS JOIN top
 """,
 )
-def corpus_stats_card(spark: SparkSession, sf: str) -> DataFrame:
-    """One-row corpus datasheet (operators/corpus.py::stats_card):
-    volume, token length profile (exact interpolated percentiles),
-    sha256 duplication rate, language mix with modal language. Two
-    aggregate passes, both ending in 1-row broadcast frames — nothing
-    corpus-sized crosses a shuffle except 32-byte digests."""
-    from ..operators.corpus import stats_card
-
-    docs = load_tables(spark, sf)["documents"]
-    return stats_card(docs)
 
 
-@register(
+register_sql(
     "emb_outlier_zscore",
     tags=("llm", "embedding", "audit"),
+    doc="""Per-label cosine-to-centroid outliers: embeddings >= 2 sample
+    stddevs below their label's mean centroid similarity — the
+    mislabeled/corrupted-vector triage list. Stats run over the
+    4-dp-rounded cosine so summation-order ulps cannot move the cut;
+    label stats are an n_labels-row aggregate joined back, never a
+    window over a whole label.""",
     oracle="""
 WITH dims AS (
   SELECT label, vec_id, i AS dim, CAST(embedding[i] AS DOUBLE) AS x
@@ -1792,16 +1638,6 @@ WHERE round(CASE WHEN s.sigma > 0 THEN (d.cos - s.mu) / s.sigma END, 2) <= -2.0
 ORDER BY d.label, d.vec_id
 """,
 )
-def emb_outlier_zscore(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-label cosine-to-centroid outliers (operators/similarity.py::
-    centroid_outliers): embeddings >=2 sample stddevs below their
-    label's mean centroid similarity — the mislabeled/corrupted-vector
-    triage list. Stats run over the 4-dp-rounded cosine on BOTH sides
-    so summation-order ulps cannot move the cut; label stats are an
-    n_labels-row aggregate joined back (AQE broadcast), never a window
-    over a whole label."""
-    emb = load_tables(spark, sf)["embeddings"]
-    return S.centroid_outliers(emb, z_thresh=-2.0)
 
 
 @register(
@@ -1879,9 +1715,13 @@ def dedup_funnel(spark: SparkSession, sf: str) -> DataFrame:
     return D.dedup_funnel(docs, threshold=0.5).orderBy("stage")
 
 
-@register(
+register_sql(
     "corpus_per_source_cap",
     tags=("llm", "corpus", "sampling"),
+    doc="""Domain-dominance cap: keep at most 15 docs per source, chosen by
+    deterministic md5-of-key order so the sample is reproducible; the
+    result is per-source kept counts plus a parity-of-keys fingerprint
+    of WHICH docs survived.""",
     oracle="""
 SELECT source, count(*) AS n_kept,
        CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT)
@@ -1897,30 +1737,17 @@ GROUP BY source
 ORDER BY source
 """,
 )
-def corpus_per_source_cap(spark: SparkSession, sf: str) -> DataFrame:
-    """Domain-dominance cap (operators/corpus.py::per_source_cap): keep
-    at most 15 docs per source, chosen by deterministic md5-of-key
-    order so the sample is reproducible and hash-checkable. The oracle
-    recomputes the identical ranking (DuckDB md5 = Spark md5 on the
-    same string) and verifies per-source kept counts plus a
-    parity-of-keys fingerprint of WHICH docs survived."""
-    from ..operators.corpus import per_source_cap
-
-    docs = load_tables(spark, sf)["documents"]
-    kept = per_source_cap(docs, cap=15)
-    return (
-        kept.groupBy("source")
-        .agg(
-            F.count("*").alias("n_kept"),
-            F.sum((F.col("doc_id") % 2 == 0).cast("long")).alias("n_even"),
-        )
-        .orderBy("source")
-    )
 
 
-@register(
+register_sql(
     "corpus_version_diff",
     tags=("llm", "corpus", "versioning"),
+    doc="""Corpus snapshot diff: per-source added/removed/modified/unchanged
+    counts between corpus versions — the promotion gate of a versioned
+    data pipeline. The entry derives the 'new' snapshot
+    deterministically (drop every 7th doc, append ' v2' to every 5th,
+    add shifted copies of every 11th) so all four status paths occur.
+    One full-outer key join comparing sha256 digests, never bodies.""",
     oracle="""
 WITH old AS (SELECT doc_id, text, source FROM documents),
 new AS (
@@ -1944,39 +1771,14 @@ FROM j GROUP BY source, status
 ORDER BY source, status
 """,
 )
-def corpus_version_diff(spark: SparkSession, sf: str) -> DataFrame:
-    """Corpus snapshot diff (operators/corpus.py::version_diff):
-    per-source added/removed/modified/unchanged counts between corpus
-    versions — the promotion gate of a versioned data pipeline. The
-    entry derives the 'new' snapshot deterministically (drop every 7th
-    doc, append ' v2' to every 5th, add shifted copies of every 11th)
-    so the oracle hash-checks all four status paths. One full-outer key
-    join carrying sha256 digests, never bodies."""
-    from ..operators.corpus import version_diff
-
-    docs = load_tables(spark, sf)["documents"]
-    old = docs.select("doc_id", "text", "source")
-    new = (
-        old.filter(F.col("doc_id") % 7 != 0)
-        .select(
-            "doc_id",
-            F.when(F.col("doc_id") % 5 == 0, F.concat("text", F.lit(" v2")))
-            .otherwise(F.col("text"))
-            .alias("text"),
-            "source",
-        )
-        .unionByName(
-            old.filter(F.col("doc_id") % 11 == 0).select(
-                (F.col("doc_id") + 1000000).alias("doc_id"), "text", "source"
-            )
-        )
-    )
-    return version_diff(old, new).orderBy("source", "status")
 
 
-@register(
+register_sql(
     "corpus_length_buckets",
     tags=("llm", "corpus", "batching"),
+    doc="""Length-bucketed batching stats: bucket docs by token count so
+    batch assembly packs similar lengths and minimizes padding waste —
+    a per-row bucket id and one tiny-key aggregate.""",
     oracle="""
 SELECT CAST(floor(len(string_split(text, ' ')) / 32) AS BIGINT) AS len_bucket,
        count(*) AS n_docs,
@@ -1987,15 +1789,6 @@ GROUP BY len_bucket
 ORDER BY len_bucket
 """,
 )
-def corpus_length_buckets(spark: SparkSession, sf: str) -> DataFrame:
-    """Length-bucketed batching stats (operators/corpus.py::
-    length_buckets): bucket docs by token count so batch assembly packs
-    similar lengths and minimizes padding waste — narrow per-row bucket
-    id, one tiny-key aggregate shuffle."""
-    from ..operators.corpus import length_buckets
-
-    docs = load_tables(spark, sf)["documents"]
-    return length_buckets(docs).orderBy("len_bucket")
 
 
 @register(
@@ -2034,9 +1827,15 @@ def corpus_quality_sample(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "corpus_chunk_documents",
     tags=("llm", "corpus", "rag"),
+    doc="""RAG-style overlapping chunking: 64-token windows every 48 tokens
+    (16-token overlap so retrieval never loses a boundary sentence).
+    Pure per-row array expressions — slice + join over the bound token
+    split, one explode, NO shuffle: chunking 100 TB streams at scan
+    speed. Output keys (doc_id, chunk_idx) are stable for incremental
+    re-chunking.""",
     oracle="""
 WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
 c AS (
@@ -2052,34 +1851,6 @@ FROM c
 ORDER BY doc_id, chunk_idx
 """,
 )
-def corpus_chunk_documents(spark: SparkSession, sf: str) -> DataFrame:
-    """RAG-style overlapping chunking: 64-token windows every 48 tokens
-    (16-token overlap so retrieval never loses a boundary sentence).
-    Pure per-row array expressions — slice + join over the bound token
-    split, one explode, NO shuffle: chunking 100 TB streams at scan
-    speed. Output keys (doc_id, chunk_idx) are stable for incremental
-    re-chunking."""
-    docs = TX.with_tokens(load_tables(spark, sf)["documents"])
-    toks = F.col(TX.TOKS)
-    stride, size = 48, 64
-    chunks = F.transform(
-        F.sequence(F.lit(1), F.size(toks), F.lit(stride)),
-        lambda s: F.struct(
-            s.cast("long").alias("start_tok"),
-            F.slice(toks, s, size).alias("ctoks"),
-        ),
-    )
-    return (
-        docs.select("doc_id", F.explode(chunks).alias("c"))
-        .select(
-            "doc_id",
-            ((F.col("c.start_tok") - 1) / stride + 1).cast("long").alias("chunk_idx"),
-            F.col("c.start_tok").alias("start_tok"),
-            F.size("c.ctoks").cast("long").alias("n_tokens"),
-            F.array_join("c.ctoks", " ").alias("chunk_text"),
-        )
-        .orderBy("doc_id", "chunk_idx")
-    )
 
 
 @register(
@@ -2131,9 +1902,12 @@ def corpus_token_budget_mix(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "corpus_pack_sequences",
     tags=("llm", "corpus", "batching"),
+    doc="""GPT-style context packing stats: concatenate docs in id order,
+    chop into 256-token windows, report per-window doc counts /
+    boundary straddles (corpus_pack_emit materializes the windows).""",
     oracle="""
 WITH toks AS (
   SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n FROM documents
@@ -2155,15 +1929,6 @@ SELECT window_id, count(*) AS n_docs,
 FROM x GROUP BY window_id ORDER BY window_id
 """,
 )
-def corpus_pack_sequences(spark: SparkSession, sf: str) -> DataFrame:
-    """GPT-style context packing (operators/corpus.py::pack_sequences):
-    concatenate docs in id order, chop into 256-token windows, report
-    per-window doc counts / boundary straddles. Prefix sums are two-phase
-    (bucketed) so nothing ever funnels into one partition."""
-    from ..operators.corpus import pack_sequences
-
-    docs = load_tables(spark, sf)["documents"]
-    return pack_sequences(docs, context_tokens=256).orderBy("window_id")
 
 
 @register(
@@ -2222,9 +1987,14 @@ def corpus_pack_emit(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "dedup_incremental_delta",
     tags=("llm", "dedup", "incremental"),
+    doc="""Incremental ingestion near-dedup: src18 plays the daily delta,
+    every other source the accumulated corpus; each delta doc counts
+    its base docs at 3-gram Jaccard >= 0.5 and is kept when it has
+    none. The delta side is small, so the shingle join broadcasts it
+    and the base is never reshuffled on ingestion.""",
     oracle="""
 WITH sh AS (
   SELECT doc_id, source,
@@ -2253,16 +2023,6 @@ WHERE source = 'src18'
 ORDER BY doc_id
 """,
 )
-def dedup_incremental_delta(spark: SparkSession, sf: str) -> DataFrame:
-    """Incremental ingestion near-dedup (operators/dedup.py::
-    incremental_near_dedup): src18 plays the daily delta, every other
-    source the accumulated corpus. The delta's shingle index is
-    broadcast; the base streams map-side — the shape that keeps a 100 TB
-    corpus from ever re-shuffling on ingestion."""
-    docs = load_tables(spark, sf)["documents"]
-    delta = docs.filter(F.col("source") == "src18")
-    base = docs.filter(F.col("source") != "src18")
-    return D.incremental_near_dedup(base, delta).orderBy("doc_id")
 
 
 @register(
@@ -2325,9 +2085,14 @@ def dedup_bloom_membership(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@register(
+register_sql(
     "corpus_filter_funnel",
     tags=("llm", "text", "corpus"),
+    doc="""Pretraining quality-filter funnel: per source, how many docs pass
+    each gate (length >= 20 tokens, top-bigram fraction <= 0.1,
+    type-token ratio >= 0.3) and all gates combined — the accept-rate
+    dashboard every corpus build runs before committing a mix. One
+    scan, per-row array expressions, one tiny-key aggregate.""",
     oracle="""
 WITH words AS (
   SELECT doc_id, source, string_split(text, ' ') AS w FROM documents
@@ -2356,60 +2121,6 @@ GROUP BY source
 ORDER BY source
 """,
 )
-def corpus_filter_funnel(spark: SparkSession, sf: str) -> DataFrame:
-    """Pretraining quality-filter funnel: per source, how many docs pass
-    each gate (length >= 20 tokens, top-bigram fraction <= 0.1,
-    type-token ratio >= 0.3) and all gates combined — the accept-rate
-    dashboard every corpus build runs before committing a mix. One
-    scan, per-row array expressions, one tiny-key aggregate."""
-    from ..functions.expr import bind
-
-    docs = load_tables(spark, sf)["documents"]
-    toks = F.split(F.col("text"), " ")
-
-    def top_frac(toks_c):
-        idx = F.sequence(F.lit(1), F.size(toks_c) - 1)
-        gram = lambda i: F.concat_ws(" ", F.element_at(toks_c, i), F.element_at(toks_c, i + 1))  # noqa: E731
-        grams = F.when(F.size(toks_c) >= 2, F.transform(idx, gram)).otherwise(
-            F.array().cast("array<string>")
-        )
-        return bind(
-            grams,
-            lambda g: F.when(F.size(g) == 0, F.lit(1.0)).otherwise(
-                F.array_max(
-                    F.transform(
-                        F.array_distinct(g),
-                        lambda d: F.size(F.filter(g, lambda x: x == d)),
-                    )
-                ).cast("double")
-                / F.size(g)
-            ),
-        )
-
-    checks = docs.select(
-        "source",
-        bind(
-            toks,
-            lambda t: F.struct(
-                (F.size(t) >= 20).alias("pass_len"),
-                (top_frac(t) <= 0.1).alias("pass_rep"),
-                (F.size(F.array_distinct(t)) / F.size(t) >= 0.3).alias("pass_ttr"),
-            ),
-        ).alias("c"),
-    ).select("source", "c.pass_len", "c.pass_rep", "c.pass_ttr")
-    return (
-        checks.groupBy("source")
-        .agg(
-            F.count("*").alias("n_total"),
-            F.count_if(F.col("pass_len")).alias("n_pass_len"),
-            F.count_if(F.col("pass_rep")).alias("n_pass_rep"),
-            F.count_if(F.col("pass_ttr")).alias("n_pass_ttr"),
-            F.count_if(
-                F.col("pass_len") & F.col("pass_rep") & F.col("pass_ttr")
-            ).alias("n_kept"),
-        )
-        .orderBy("source")
-    )
 
 
 @register(
@@ -2538,9 +2249,12 @@ def ann_ivf_persistent(spark: SparkSession, sf: str) -> DataFrame:
     return _ann_recall_shape(approx, exact, k=5, min_hits=2, mean_bound=0.85)
 
 
-@register(
+register_sql(
     "emb_label_cohesion",
     tags=("llm", "similarity", "clustering"),
+    doc="""Cluster-cohesion audit: per-label mean cosine of each vector to
+    its label centroid, with centroids averaged per (label, dimension)
+    and joined back on both.""",
     oracle="""
 WITH dims AS (
   SELECT label, vec_id, i AS dim, CAST(embedding[i] AS DOUBLE) AS x
@@ -2562,19 +2276,17 @@ FROM dots GROUP BY label
 ORDER BY label
 """,
 )
-def emb_label_cohesion(spark: SparkSession, sf: str) -> DataFrame:
-    """Cluster-cohesion audit (operators/similarity.py::
-    label_centroid_cohesion): mean cosine of each vector to its label
-    centroid. Centroids are one map-side-combined aggregate (tiny,
-    broadcast back); the corpus then makes a single vectorized pass —
-    the oracle takes the equivalent explode/join path in SQL."""
-    emb = load_tables(spark, sf)["embeddings"]
-    return S.label_centroid_cohesion(emb).orderBy("label")
 
 
-@register(
+register_sql(
     "text_gopher_quality",
     tags=("llm", "text", "quality"),
+    doc="""Gopher document-quality rules (Rae et al. 2021 App. A1.1 —
+    public thresholds): word count, mean word length, symbol-to-word
+    ratio, alphabetic-word fraction, stop-word hits, and the combined
+    accept flag. The two line-based rules need multi-line text and are
+    omitted on the single-line corpus. The flag uses the ROUNDED signal
+    columns so both engines compare identical values.""",
     oracle="""
 SELECT doc_id,
        len(string_split(text, ' ')) AS n_words,
@@ -2599,21 +2311,17 @@ FROM documents
 ORDER BY doc_id
 """,
 )
-def text_gopher_quality(spark: SparkSession, sf: str) -> DataFrame:
-    """Gopher document-quality rules (Rae et al. 2021 App. A1.1 —
-    public thresholds): word count, mean word length, symbol-to-word
-    ratio, alphabetic-word fraction, stop-word hits, and the combined
-    accept flag. Pure JVM expression trees over one projected token
-    split (operators/text.py::gopher_quality_stats) — fuses into the
-    scan stage, no shuffle, no UDF; the flag uses the ROUNDED signal
-    columns so both engines compare identical values."""
-    docs = spread(load_tables(spark, sf)["documents"])
-    return TX.gopher_quality_stats(docs).orderBy("doc_id")
 
 
-@register(
+register_sql(
     "text_boilerplate_removal",
     tags=("llm", "text", "dedup"),
+    doc="""Cross-document boilerplate removal (the CCNet/RefinedWeb
+    line-dedup step): units occurring in >= 80% of documents are
+    dropped and each text reconstructed in original order. Production
+    uses newline units; this corpus is single-line so the entry runs at
+    word granularity, and the removed units are exactly the
+    corpus-wide stopword-like tokens.""",
     oracle="""
 WITH units AS (
   SELECT doc_id, generate_subscripts(string_split(text, ' '), 1) AS pos,
@@ -2636,19 +2344,6 @@ FROM tot t LEFT JOIN rec r ON t.doc_id = r.doc_id
 ORDER BY t.doc_id
 """,
 )
-def text_boilerplate_removal(spark: SparkSession, sf: str) -> DataFrame:
-    """Cross-document boilerplate removal (the CCNet/RefinedWeb
-    line-dedup step): units occurring in >= 80% of documents are
-    dropped and each text reconstructed in original order
-    (operators/text.py::boilerplate_removal — posexplode, distinct-doc
-    count shuffle on the unit, anti-join back, ordered reconstruction
-    via (pos, unit) structs). Production uses newline units; this
-    corpus is single-line so the entry runs at word granularity —
-    identical machinery, and the removed units are exactly the
-    corpus-wide stopword-like tokens."""
-    docs = load_tables(spark, sf)["documents"]
-    min_docs = int(0.8 * docs.count())
-    return TX.boilerplate_removal(docs, min_docs, sep=" ").orderBy("doc_id")
 
 
 @register(
@@ -2687,9 +2382,17 @@ def dedup_exact_substring(spark: SparkSession, sf: str) -> DataFrame:
     return TX.exact_substring_dedup(docs, k=8, min_count=2).orderBy("doc_id")
 
 
-@register(
+register_sql(
     "text_c4_quality",
     tags=("llm", "text", "quality"),
+    doc="""C4 line + page filtering (Raffel et al. 2020 §2.2): keep lines
+    ending in terminal punctuation with >= 5 words and no
+    'javascript'; reject pages with < 3 kept lines, 'lorem ipsum', or
+    a curly brace. The single-line synthetic corpus gets a
+    deterministic line structure first (literal replaces turning
+    ' table '/' line ' into punctuated newlines, ' spark ' into
+    ' javascript ', plus injected braces and lorem-ipsum markers on
+    doc_id strides).""",
     oracle="""
 WITH synth AS (
   SELECT doc_id,
@@ -2719,42 +2422,16 @@ FROM base
 ORDER BY doc_id
 """,
 )
-def text_c4_quality(spark: SparkSession, sf: str) -> DataFrame:
-    """C4 line + page filtering (Raffel et al. 2020 §2.2): keep lines
-    ending in terminal punctuation with >= 5 words and no
-    'javascript'; reject pages with < 3 kept lines, 'lorem ipsum', or
-    a curly brace (operators/text.py::c4_quality_stats — pure
-    expression trees, scan-fused, no shuffle). The single-line
-    synthetic corpus gets a deterministic line structure first
-    (literal replaces turning ' table '/' line ' into punctuated
-    newlines, ' spark ' into ' javascript ', plus injected braces and
-    lorem-ipsum markers on doc_id strides) — identical construction in
-    the oracle."""
-    docs = spread(load_tables(spark, sf)["documents"])
-    synth = docs.withColumn(
-        "text",
-        F.concat(
-            F.expr(
-                "replace(replace(replace(text, ' table ', '.' || chr(10)), "
-                "' line ', '!' || chr(10)), ' spark ', ' javascript ')"
-            ),
-            F.when(F.col("doc_id") % 7 == 0, F.lit(" {")).otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 11 == 0, F.lit(" lorem ipsum.")).otherwise(
-                F.lit("")
-            ),
-        ),
-    )
-    return TX.c4_quality_stats(synth).orderBy("doc_id")
 
 
 _URL_SYNTH_SQL = (
     "concat('HTTPS://www.', source, 'corp.', "
     "CASE WHEN doc_id % 5 = 0 THEN 'co.uk' ELSE 'com' END, "
     "CASE WHEN doc_id % 4 = 0 THEN ':443' ELSE '' END, "
-    "'/Docs/', CAST(doc_id AS {t}), "
+    "'/Docs/', CAST(doc_id AS VARCHAR), "
     "CASE WHEN doc_id % 3 = 0 THEN '/' ELSE '' END, "
     "CASE WHEN doc_id % 2 = 0 THEN "
-    "concat('?utm_source=feed&id=', CAST(doc_id % 50 AS {t}), "
+    "concat('?utm_source=feed&id=', CAST(doc_id % 50 AS VARCHAR), "
     "'&fbclid=xyz&page=2') ELSE '?b=2&a=1' END, '#frag')"
 )
 
@@ -2794,11 +2471,19 @@ dom AS (
 """
 
 
-@register(
+register_sql(
     "web_url_canonicalize",
     tags=("llm", "web", "dedup"),
+    doc="""URL canonicalization: scheme/host normalization (lowercase,
+    www-strip, default-port strip), trailing-slash path rule,
+    tracking-parameter removal preserving parameter order, fragment
+    drop, PSL-approximate registered domain. The regex patterns avoid
+    lookarounds so they mean the same in both engines. URLs are
+    synthesized deterministically from doc fields (mixed-case scheme,
+    :443 ports, .co.uk second-level suffixes, utm/fbclid noise,
+    fragments).""",
     oracle="WITH "
-    + _URL_ORACLE_PARTS.format(url=_URL_SYNTH_SQL.format(t='VARCHAR'))
+    + _URL_ORACLE_PARTS.format(url=_URL_SYNTH_SQL)
     + """
 SELECT doc_id, url,
        scheme   AS url_scheme,
@@ -2813,28 +2498,18 @@ FROM dom
 ORDER BY doc_id
 """,
 )
-def web_url_canonicalize(spark: SparkSession, sf: str) -> DataFrame:
-    """URL canonicalization (operators/web.py::canonicalize): scheme/
-    host normalization (lowercase, www-strip, default-port strip),
-    trailing-slash path rule, tracking-parameter removal preserving
-    parameter order, fragment drop, PSL-approximate registered domain.
-    Pure scan-fused expression trees (no shuffle, no UDF) — the regex
-    patterns avoid lookarounds so the identical logic runs on DuckDB
-    as the oracle. URLs synthesized deterministically from doc fields
-    (mixed-case scheme, :443 ports, .co.uk second-level suffixes,
-    utm/fbclid noise, fragments)."""
-    from ..operators import web as W
-
-    docs = load_tables(spark, sf)["documents"]
-    synth = docs.select("doc_id", F.expr(_URL_SYNTH_SQL.format(t="STRING")).alias("url"))
-    return W.canonicalize(synth, "url").orderBy("doc_id")
 
 
-@register(
+register_sql(
     "web_domain_blocklist",
     tags=("llm", "web", "quality"),
+    doc="""Domain blocklist filtering: a UT1-style blocklist (three
+    synthesized domains, inline VALUES) as an ANTI join on the
+    registered domain — planned as a broadcast left-anti join, so the
+    corpus side never reshuffles — then per-domain doc counts, the
+    domain-mix report a crawl pipeline runs after filtering.""",
     oracle="WITH "
-    + _URL_ORACLE_PARTS.format(url=_URL_SYNTH_SQL.format(t='VARCHAR'))
+    + _URL_ORACLE_PARTS.format(url=_URL_SYNTH_SQL)
     + """
 SELECT domain AS url_domain, count(*) AS n_docs
 FROM dom
@@ -2844,32 +2519,17 @@ GROUP BY domain
 ORDER BY url_domain
 """,
 )
-def web_domain_blocklist(spark: SparkSession, sf: str) -> DataFrame:
-    """Domain blocklist filtering (operators/web.py::blocklist_filter):
-    UT1-style blocklist as a broadcast LEFT ANTI join on the registered
-    domain (the corpus side never reshuffles), then per-domain doc
-    counts — the domain-mix report a crawl pipeline runs after
-    filtering. Blocklist pinned to three synthesized domains."""
-    from ..operators import web as W
-
-    docs = load_tables(spark, sf)["documents"]
-    synth = docs.select("doc_id", F.expr(_URL_SYNTH_SQL.format(t="STRING")).alias("url"))
-    canon = W.canonicalize(synth, "url")
-    bl = spark.createDataFrame(
-        [("src0corp.com",), ("src2corp.co.uk",), ("src7corp.com",)],
-        ["domain"],
-    )
-    kept = W.blocklist_filter(canon, bl)
-    return (
-        kept.groupBy("url_domain")
-        .agg(F.count("*").alias("n_docs"))
-        .orderBy("url_domain")
-    )
 
 
-@register(
+register_sql(
     "text_quality_classifier",
     tags=("llm", "text", "quality"),
+    doc="""Hashed-feature linear quality classifier: per-token
+    31-polynomial codepoint hash into 2^20 buckets, Knuth-hash stand-in
+    weights in [-1,1), mean-pooled score + threshold — the
+    fastText-filter shape. Integer-exact hashing keeps the score
+    identical across engines (list_reduce seeded via list_prepend —
+    DuckDB's reduce has no init arg).""",
     oracle="""
 SELECT doc_id,
        CAST(len(toks) AS BIGINT) AS n_tokens,
@@ -2892,16 +2552,6 @@ FROM (
 ORDER BY doc_id
 """,
 )
-def text_quality_classifier(spark: SparkSession, sf: str) -> DataFrame:
-    """Hashed-feature linear quality classifier
-    (operators/text.py::quality_classifier): per-token 31-polynomial
-    codepoint hash into 2^20 buckets, Knuth-hash stand-in weights in
-    [-1,1), mean-pooled score + threshold — the fastText-filter shape,
-    scan-fused with zero shuffle. Integer-exact hashing makes the
-    whole model oracle-checkable on DuckDB (list_reduce seeded via
-    list_prepend — DuckDB's reduce has no init arg)."""
-    docs = spread(load_tables(spark, sf)["documents"])
-    return TX.quality_classifier(docs).orderBy("doc_id")
 
 
 @register(
@@ -3096,9 +2746,12 @@ def emb_pca_project(spark: SparkSession, sf: str) -> DataFrame:
     ).orderBy("vec_id")
 
 
-@register(
+register_sql(
     "text_heavy_hitters_mg",
     tags=("llm", "text", "stats", "scale"),
+    doc="""Frequent tokens: every lower-cased token whose count exceeds
+    1/200 of all tokens — the exact heavy-hitter set that a Misra-Gries
+    summary approximates.""",
     oracle="""
 WITH toks AS (
   SELECT unnest(string_split_regex(lower(text), '\\s+')) AS tok
@@ -3113,17 +2766,6 @@ HAVING count(*) > nn.n / 200.0
 ORDER BY cnt DESC, tok
 """,
 )
-def text_heavy_hitters_mg(spark: SparkSession, sf: str) -> DataFrame:
-    """Frequent tokens above total/k via per-partition Misra-Gries
-    summaries + one exact verification pass
-    (operators/text.py::heavy_hitters_mg). The mergeable-summaries
-    guarantee makes the candidate set ⊇ every true heavy hitter, so
-    the exact-count pass returns the DETERMINISTIC truth (hash-checked
-    against DuckDB's full groupBy) while shuffling only ≤ P·k candidate
-    keys instead of the whole vocabulary — the shape that matters when
-    the vocabulary is billions of long-tail tokens."""
-    docs = load_tables(spark, sf)["documents"]
-    return TX.heavy_hitters_mg(docs, k=200)
 
 
 @register(
@@ -3192,9 +2834,18 @@ def text_lm_kn_bigram(spark: SparkSession, sf: str) -> DataFrame:
     return TX.kn_bigram_score(docs, F.col("lang") == "en")
 
 
-@register(
+register_sql(
     "corpus_cross_source_dup_matrix",
     tags=("llm", "dedup", "corpus"),
+    doc="""Cross-source near-duplicate matrix — which sources copy which:
+    exact 3-gram Jaccard ≥ 0.5 pairs (the verified near-dup relation)
+    aggregated into an unordered source×source contingency table, the
+    table a corpus curator reads before deciding per-source dedup
+    priority. Scale shape: the pair relation is the inverted-index
+    join (never all-pairs); attaching sources is two broadcast-sized
+    joins against the (id, source) projection; the matrix itself is
+    |sources|² rows. Deterministic: the pair set is exact, the matrix
+    unordered via least/greatest.""",
     oracle="""
 WITH sh AS (
   SELECT doc_id AS id, source,
@@ -3225,31 +2876,3 @@ JOIN (SELECT id, source FROM sh) sb ON p.y = sb.id
 GROUP BY 1, 2 ORDER BY 1, 2
 """,
 )
-def corpus_cross_source_dup_matrix(spark: SparkSession, sf: str) -> DataFrame:
-    """Cross-source near-duplicate matrix — which sources copy which:
-    exact 3-gram Jaccard ≥ 0.5 pairs (the verified near-dup relation)
-    aggregated into an unordered source×source contingency table, the
-    table a corpus curator reads before deciding per-source dedup
-    priority. Scale shape: the pair relation is the inverted-index
-    join (never all-pairs); attaching sources is two broadcast-sized
-    joins against the (id, source) projection; the matrix itself is
-    |sources|² rows. Deterministic: the pair set is exact, the matrix
-    unordered via least/greatest."""
-    docs = load_tables(spark, sf)["documents"]
-    pairs = D.jaccard_pairs_exact(docs, threshold=0.5).select("x", "y")
-    src = docs.select(F.col("doc_id"), F.col("source"))
-    sa = src.withColumnRenamed("doc_id", "x").withColumnRenamed("source", "src_x")
-    sb = src.withColumnRenamed("doc_id", "y").withColumnRenamed("source", "src_y")
-    return (
-        pairs.join(F.broadcast(sa), "x")
-        .join(F.broadcast(sb), "y")
-        .groupBy(
-            F.least("src_x", "src_y").alias("src_a"),
-            F.greatest("src_x", "src_y").alias("src_b"),
-        )
-        .agg(
-            F.count("*").alias("n_pairs"),
-            F.countDistinct("x").alias("n_docs_x"),
-        )
-        .orderBy("src_a", "src_b")
-    )

@@ -20,11 +20,15 @@ An entry is one of two kinds:
   - it is a ``bench`` entry: bench.py times its DataFrame kernel;
   - a test reads its ``spark_fn`` (tests/test_plans.py pins DataFrame
     plans);
-  - it calls the operator library (``operators/``, ``functions/``,
-    ``streaming/``, ``sources/``), and is that library's gate coverage;
+  - its oracle hard-codes what the code computes (constant checks, the
+    closed form of a synthesized input), so the oracle text is not the
+    same query;
   - it runs more than one statement, or post-processes the result;
   - the gateway cannot serve its oracle text yet (the served gate's
     ``EXCLUDED``).
+
+  The served gate's ``KEPT_AS_CODE`` names the reason for each code
+  entry that is not a bench kernel, plan-pinned or excluded.
 
   Any other query is SQL text: a DataFrame copy of a query the gateway
   already serves correctly is a second path to the same answer.

@@ -423,7 +423,10 @@ class SqlRewriter:
     _STRING_AGG_RE = re.compile(r"(?i)\bstring_agg\s*\(")
 
     def _brace_entries(self, inner: str) -> str:
-        """``k: v, …`` (a brace literal's body) → ``k, v, …``."""
+        """``k: v, …`` (a brace literal's body) → ``k, v, …``; an empty
+        body stays empty (``MAP {}`` → ``map()``)."""
+        if not inner.strip():
+            return ""
         flat = []
         for entry in self._split_top(inner, ","):
             k = self._split_top(entry, ":")[0]
