@@ -10,9 +10,9 @@ Timing counts execution only (result materialization to driver-side
 Arrow included, JVM+session startup excluded) — matching BASELINE.md's
 "startup-excluded query latency" deviation note. BOTH engines
 materialize to Arrow (Spark df.toArrow(), DuckDB .arrow()): the serving
-path of this engine is Arrow-native end to end (engine.py mapInArrow →
-IPC stream), so Python Row-object construction is a cost the product
-never pays — and fetchall() vs collect() compared C-tuple building
+path of this engine is Arrow-native end to end (engine.py streams the
+JVM's Arrow batches), so Python Row-object construction is a cost the
+product never pays — and fetchall() vs collect() compared C-tuple building
 against Python Row building, charging Spark up to ~1 s/100k rows of
 pure client-binding overhead.
 

@@ -15,6 +15,7 @@ import socket
 import subprocess
 import sys
 import threading
+import time
 import urllib.error
 import urllib.request
 
@@ -502,12 +503,27 @@ def _reference_bytes(table: pa.Table, fmt: str) -> bytes:
     return b"[" + b",".join(rows) + b"]"
 
 
+def _decoded(body: bytes, fmt: str) -> list:
+    """The rows of a response body, in order."""
+    if fmt == "arrow":
+        return pa.ipc.open_stream(body).read_all().to_pylist()
+    if fmt == "csv":
+        import csv
+
+        return list(csv.reader(io.StringIO(body.decode())))
+    if fmt == "jsonl":
+        return [json.loads(line) for line in body.splitlines()]
+    return json.loads(body)
+
+
 def test_execute_bytes_match_reference_all_formats(spark):
-    """engine.execute() encodes each batch in the executors and the writer
-    only frames the payloads; the bytes must equal a reference built from
-    the collected result — across doubles, dates, timestamps, NULLs,
-    unicode, quotes, several partitions and 8192-row Arrow slices, plus
-    an empty and a duplicate-name result."""
+    """engine.execute() streams the JVM's Arrow batches to the writer,
+    which encodes them on the driver in 8192-row slices; the bytes must
+    equal a reference built from the collected result — across doubles,
+    dates, timestamps, NULLs, unicode, quotes, several partitions, one
+    partition of several JVM batches, nested and decimal types, plus an
+    empty and a duplicate-name result. An ORDER BY over 4 range
+    partitions is compared decoded, in row order."""
     from uquery_rs_spark.writers import writer_for_format
 
     eng = Engine(spark, pool_size=2)
@@ -520,6 +536,13 @@ def test_execute_bytes_match_reference_all_formats(spark):
         "FROM range(40000) DISTRIBUTE BY id % 4",
         "SELECT 1 AS x WHERE 1 = 0",
         "SELECT 1 AS x, 2 AS X",
+        # one partition, more rows than a JVM batch (65,536)
+        "SELECT id, CAST(id AS STRING) AS s FROM range(0, 70000, 1, 1)",
+        "SELECT TIMESTAMP_NTZ '2024-01-01 10:00:00' + make_interval(0,0,0,0,0,0,id) AS ntz, "
+        "TIMESTAMP '2024-01-01 10:00:00' + make_interval(0,0,0,0,0,0,id) AS ltz, "
+        "named_struct('a', id, 'b', IF(id % 3 = 0, NULL, CAST(id AS STRING))) AS st, "
+        "map('k', id, 'v', id * 2) AS m, CAST(id AS DECIMAL(20, 3)) / 7 AS dec "
+        "FROM range(0, 3000, 1, 2)",
     ]
     for sql in cases:
         table = spark.sql(sql).toArrow()
@@ -527,6 +550,78 @@ def test_execute_bytes_match_reference_all_formats(spark):
             sink = io.BytesIO()
             eng.prepare(sql).execute(writer_for_format(fmt, sink))
             assert sink.getvalue() == _reference_bytes(table, fmt), (sql, fmt)
+
+    ordered = "SELECT id, CAST(id AS STRING) AS s FROM range(0, 100000, 1, 3) ORDER BY id DESC"
+    confs = {
+        "spark.sql.shuffle.partitions": "4",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        assert spark.sql(ordered).rdd.getNumPartitions() == 4
+        table = spark.sql(ordered).toArrow()
+        assert table.column("id")[0].as_py() == 99999
+        for fmt in ("json", "jsonl", "csv", "arrow"):
+            sink = io.BytesIO()
+            eng.prepare(ordered).execute(writer_for_format(fmt, sink))
+            assert _decoded(sink.getvalue(), fmt) == _decoded(_reference_bytes(table, fmt), fmt), fmt
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def test_deadline_covers_the_permit_wait(spark):
+    """A request that finds the pool saturated answers 408 at its deadline
+    instead of waiting for a permit, and the pool serves again once the
+    holder lets go. The holder is an Arrow stream whose client reads
+    nothing, so it blocks on the full socket with the only permit."""
+    engine = Engine(spark, pool_size=1, rewriter=SqlRewriter(spark, allowed_dirs=[TESTS_DIR]))
+    holder, holder_url = _serve(spark, engine, query_timeout_secs=30)
+    short, short_url = _serve(spark, engine, query_timeout_secs=0.5)
+    sql = b"SELECT id, id * 2 AS x FROM range(0, 3000000, 1, 1)"
+    request = (
+        b"POST / HTTP/1.1\r\nHost: 127.0.0.1\r\nContent-Type: text/plain\r\n"
+        b"Accept: application/vnd.apache.arrow.stream\r\n"
+        b"Content-Length: %d\r\n\r\n%s" % (len(sql), sql)
+    )
+    stream = socket.create_connection(("127.0.0.1", holder.server_address[1]), timeout=60)
+    try:
+        stream.sendall(request)
+        assert stream.recv(1024).startswith(b"HTTP/1.1 200")  # the permit is held
+        t0 = time.monotonic()
+        status, _, body = post(short_url, "SELECT 1 AS n", timeout=10)
+        assert status == 408 and json.loads(body)["title"] == "Query Timeout"
+        assert time.monotonic() - t0 < 5
+        stream.close()
+        status, _, body = post(holder_url, "SELECT 1 AS n", timeout=30)
+        assert status == 200 and json.loads(body) == [{"n": 1}]
+    finally:
+        stream.close()
+        for server in (holder, short):
+            server.shutdown()
+            server.server_close()
+
+
+def test_recursive_cte_view_dropped_when_request_ends(spark, base_url):
+    """A recursive CTE in the UNION form is served from a fixpoint temp
+    view; the request drops it when it ends, so serving it leaves no
+    `uq_rec_` view behind. Rows match DuckDB."""
+    import duckdb
+
+    sql = "WITH RECURSIVE t(n) AS (SELECT 1 UNION SELECT n + 1 FROM t WHERE n < 3) SELECT n FROM t"
+
+    def rec_views():
+        return {r.tableName for r in spark.sql("SHOW TABLES").collect() if r.tableName.startswith("uq_rec_")}
+
+    before = rec_views()
+    want = sorted(r[0] for r in duckdb.sql(sql).fetchall())
+    for _ in range(2):
+        status, _, body = post(base_url, sql)
+        assert status == 200, body[:300]
+        assert sorted(r["n"] for r in json.loads(body)) == want == [1, 2, 3]
+    assert rec_views() <= before
 
 
 def test_task_failure_detail_names_root_cause(base_url):
@@ -584,11 +679,9 @@ def test_interval_results_render_duckdb_text(base_url):
 def test_interval_results_with_duplicate_column_names(base_url):
     """Round-11 (r10 ADVICE low, found broader): duplicate result-column
     names (legal SQL) 400'd through the WHOLE Arrow serving path — not
-    just the interval re-select the ADVICE flagged, because pyspark's
-    own mapInArrow re-selects every column by NAME (map_ops.py
-    self[col]). engine.execute() now ships duplicate-name results under
-    unique temp names and the serializers rename batches back to the
-    announced schema; the interval transform is positional (toDF)."""
+    just the interval re-select the ADVICE flagged. The JVM's Arrow
+    batches carry columns by position, so they stream as they are; the
+    interval transform is positional (toDF)."""
     # the pre-existing broader case: no intervals at all
     status, _, body = post(base_url, "SELECT 1 AS x, 2 AS x")
     assert status == 200, body[:300]

@@ -9,13 +9,13 @@ capability Spark-first:
 - ``session``   — SparkSession factory tuned for OLAP (AQE, Arrow, UTC).
 - ``engine``    — prepare/execute facade mirroring the reference's
                   ``UQueryEngine`` / ``RecordBatchConsumer`` contract
-                  (reference: src/core/engine.rs:4-19), except that the
-                  consumer supplies an encoder that runs in the executors.
+                  (reference: src/core/engine.rs:4-19): the JVM's Arrow
+                  batches stream to the driver in result order.
 - ``rewrite``   — pre-Catalyst SQL rewriting: path-as-table, read_* table
                   functions, macro expansion, dialect fixes, sandboxing
                   (reference: src/cli/options.rs, src/main.rs:327).
 - ``writers``   — streaming result writers: JSON array, JSON Lines, CSV,
-                  Arrow IPC; the driver only frames the encoded bytes
+                  Arrow IPC, each encoding batches on the driver
                   (reference: src/web/consumers.rs).
 - ``web``       — the HTTP service contract: POST / + GET /health, content
                   negotiation, problem+json errors, first-batch timeout

@@ -14,12 +14,13 @@ based connection release becomes a context-managed permit.
 
 Streaming: the reference pulls Arrow batches one at a time with bounded
 memory (duckdb.rs:91-93) and hands each to the consumer, which encodes it.
-Here the batches live in the executors, so the consumer's encoder goes to
-them: execute() runs one mapInArrow that conforms each executor-side Arrow
-batch to the announced schema and encodes it into one binary cell of
-response bytes, and toLocalIterator(prefetchPartitions=True) pulls those
-cells in partition order — the driver holds one partition's payloads at a
-time, never decodes a batch, and only forwards bytes to the consumer.
+Here execute() serves the JVM's own Arrow batches (Dataset.toArrowBatchRdd)
+through PythonRDD.toLocalIteratorAndServe: one Spark job per result
+partition, taken in partition order (so a range-partitioned ORDER BY
+stays sorted), with the next partition prefetched. The JVM driver holds
+the partition being served and the prefetched one; Python decodes one IPC
+frame at a time and passes the RecordBatch to the consumer. The stream
+starts no Python worker.
 Cancellation: every execution runs in a job group so a timeout or client
 disconnect can cancelJobGroup mid-scan.
 """
@@ -27,9 +28,11 @@ disconnect can cancelJobGroup mid-scan.
 from __future__ import annotations
 
 import threading
+import time
 import uuid
 from abc import ABC, abstractmethod
-from collections.abc import Callable
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, types
@@ -56,22 +59,14 @@ def _first_line(e: BaseException) -> str:
 
 class RecordBatchConsumer(ABC):
     """Sink interface — schema once, then batches, then finish
-    (reference: src/core/engine.rs:4-8).
-
-    Departs from the reference trait in one place: the batches never reach
-    the driver, so instead of `on_batch(RecordBatch)` the consumer supplies
-    a picklable encoder (`batch_bytes_serializer`) that runs where each
-    batch is, and receives the encoded bytes in `on_batch_bytes`."""
+    (reference: src/core/engine.rs:4-8). The batches arrive on the driver
+    in result order; the consumer encodes them there."""
 
     @abstractmethod
     def on_schema(self, schema: pa.Schema) -> None: ...
 
     @abstractmethod
-    def batch_bytes_serializer(self, schema: pa.Schema) -> Callable[[pa.RecordBatch], bytes]:
-        """A picklable function that encodes one batch of `schema`."""
-
-    @abstractmethod
-    def on_batch_bytes(self, payload: bytes) -> None: ...
+    def on_batch(self, batch: pa.RecordBatch) -> None: ...
 
     @abstractmethod
     def finish(self) -> None: ...
@@ -83,29 +78,27 @@ def _arrow_schema(df: DataFrame) -> pa.Schema:
     return to_arrow_schema(df.schema)
 
 
-def _encode_batches(schema: pa.Schema, encode: Callable[[pa.RecordBatch], bytes]):
-    """mapInArrow function: conform each non-empty executor-side batch to
-    the announced schema, then encode it as one `payload: binary` cell.
+def _arrow_batches(df: DataFrame, schema: pa.Schema) -> Iterator[pa.RecordBatch]:
+    """The result's non-empty Arrow batches as the JVM encoded them, one
+    partition at a time in partition order, each conformed to `schema`.
 
-    Duplicate-name results travel under unique temp names (execute()
-    renames them for mapInArrow) and get the real names back here; Spark's
-    worker-side Arrow schema can differ in timestamp tz / nullability
-    metadata, hence the cast. mapInArrow is a per-partition map, so
-    partition order and any ORDER BY range-partitioned sort survive."""
+    Every served frame is one IPC record-batch message without a schema,
+    so it is read with the schema the JVM wrote: the announced one, with
+    large string/binary offsets under arrowUseLargeVarTypes. LTZ
+    timestamps come tagged with the session time zone, but their values
+    are UTC instants either way, so they read as the announced UTC type."""
+    from pyspark.serializers import NoOpSerializer
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.util import _local_iterator_from_socket
 
-    def fn(iterator):
-        for batch in iterator:
-            if batch.num_rows == 0:
-                continue
-            if batch.schema.names != schema.names:
-                batch = batch.rename_columns(schema.names)
-            if batch.schema != schema:
-                batch = batch.cast(schema)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([encode(batch)], type=pa.binary())], names=["payload"]
-            )
-
-    return fn
+    session = df.sparkSession
+    wire = to_arrow_schema(df.schema, prefers_large_types=session._jconf.arrowUseLargeVarTypes())
+    jvm = session.sparkContext._jvm
+    sock = jvm.PythonRDD.toLocalIteratorAndServe(df._jdf.toArrowBatchRdd(), True)
+    for frame in _local_iterator_from_socket(sock, NoOpSerializer()):
+        batch = pa.ipc.read_record_batch(pa.py_buffer(frame), wire)
+        if batch.num_rows:
+            yield batch if wire.equals(schema) else batch.cast(schema)
 
 
 class PreparedQuery:
@@ -118,6 +111,7 @@ class PreparedQuery:
         self.job_group = f"uq-{uuid.uuid4().hex[:12]}"
         self._released = False
         self._cancelled = False
+        self._temp_views: list[str] = []
 
     def cancel(self) -> None:
         """Stop the query: its running jobs now, and any job it has not
@@ -126,9 +120,15 @@ class PreparedQuery:
         self._engine.spark.sparkContext.cancelJobGroup(self.job_group)
 
     def release(self) -> None:
+        """End the query: drop the temp views its rewrite registered, then
+        give the permit back."""
         if not self._released:
             self._released = True
-            self._engine._permits.release()
+            try:
+                for view in self._temp_views:
+                    self._engine.spark.catalog.dropTempView(view)
+            finally:
+                self._engine._permits.release()
 
     def dataframe(self) -> DataFrame:
         """Analyze the (rewritten) SQL into a DataFrame — Spark's 'prepare'.
@@ -140,7 +140,12 @@ class PreparedQuery:
         reference serves it; DayTime intervals convert but would
         serialize as raw durations where DuckDB prints '1 day 01:30:00'.
         Same text-rendering precedent as age() (rewrite.py batch 28)."""
-        sql = self._engine.rewrite(self._sql)
+        sql, rewriter = self._sql, self._engine._rewriter
+        if rewriter is not None:
+            try:
+                sql = rewriter.rewrite(sql)
+            finally:
+                self._temp_views += rewriter.temp_views()
         df = self._engine.spark.sql(sql)
         kinds = []
         for f in df.schema.fields:
@@ -176,44 +181,30 @@ class PreparedQuery:
         return df
 
     def execute(self, consumer: RecordBatchConsumer) -> None:
-        """Run the query, pushing the schema and then each batch's encoded
-        bytes into `consumer`.
+        """Run the query, pushing the schema and then each result batch
+        into `consumer`.
 
         Raises UQueryError(400 "SQL Error") on analysis/execution failure —
         the web layer converts errors-before-first-batch into HTTP 400
         (reference routers.rs:166-173).
         """
-        spark = self._engine.spark
-        sc = spark.sparkContext
+        sc = self._engine.spark.sparkContext
         try:
             try:
                 df = self.dataframe()
                 schema = _arrow_schema(df)
-                # Duplicate result-column names (legal SQL) break
-                # pyspark's OWN mapInArrow, which re-selects every
-                # column by name (map_ops.py: self[col]) — rename to
-                # unique temp names for the executor hop; the announced
-                # schema keeps the real names and _encode_batches
-                # renames batches back to it (round-11; broader than
-                # the interval-only case the r10 ADVICE flagged).
-                # casefolded: Spark's default resolution is
-                # case-insensitive, so SELECT 1 AS x, 2 AS X hits the
-                # same AMBIGUOUS_REFERENCE (ADVICE r12)
-                if len({c.lower() for c in df.columns}) != len(df.columns):
-                    df = df.toDF(*[f"uq_c_{i}" for i in range(len(df.columns))])
             except UQueryError:
                 raise
             except Exception as e:  # AnalysisException etc.
                 raise UQueryError.sql_error(_first_line(e)) from e
             consumer.on_schema(schema)
-            encode = _encode_batches(schema, consumer.batch_bytes_serializer(schema))
+            # set before toArrowBatchRdd: adaptive query stages run there
             sc.setJobGroup(self.job_group, f"uquery {self.job_group}", interruptOnCancel=True)
             try:
                 if self._cancelled:  # cancelled during rewrite/analysis
                     raise UQueryError.sql_error("query cancelled")
-                encoded = df.mapInArrow(encode, "payload binary")
-                for row in encoded.toLocalIterator(prefetchPartitions=True):
-                    consumer.on_batch_bytes(row.payload)
+                for batch in _arrow_batches(df, schema):
+                    consumer.on_batch(batch)
             except UQueryError:
                 raise
             except Exception as e:
@@ -238,13 +229,29 @@ class Engine:
         self.spark = spark
         self._permits = threading.Semaphore(pool_size)
         self._rewriter = rewriter
+        self._deadline = threading.local()
 
-    def rewrite(self, sql: str) -> str:
-        return self._rewriter.rewrite(sql) if self._rewriter is not None else sql
+    @contextmanager
+    def deadline(self, seconds: float | None):
+        """Within this block, prepare() on this thread waits for a permit
+        only until `seconds` after entry (None: as long as it takes).
+        Yields the deadline as a time.monotonic() value, or None."""
+        at = None if seconds is None else time.monotonic() + seconds
+        self._deadline.at, self._deadline.seconds = at, seconds
+        try:
+            yield at
+        finally:
+            self._deadline.at = None
 
     def prepare(self, sql: str) -> PreparedQuery:
         """Stage a query, blocking for a permit if the pool is exhausted
-        (reference: condvar wait in duckdb.rs:31-39). SQL parsing is
-        deferred to execute() — single prepare (routers.rs:115-116)."""
-        self._permits.acquire()
+        (reference: condvar wait in duckdb.rs:31-39). Past the deadline
+        this thread set with deadline(), raise 408 instead (SURVEY §3.1).
+        SQL parsing is deferred to execute() — single prepare
+        (routers.rs:115-116)."""
+        at = getattr(self._deadline, "at", None)
+        if at is None:
+            self._permits.acquire()
+        elif not self._permits.acquire(timeout=max(0.0, at - time.monotonic())):
+            raise UQueryError.query_timeout(self._deadline.seconds)
         return PreparedQuery(self, sql)

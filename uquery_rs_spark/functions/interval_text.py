@@ -1,6 +1,6 @@
 """DuckDB interval display text for interval-typed RESULT columns.
 
-The serving path is Arrow end-to-end (engine.py mapInArrow → IPC), and
+The serving path is Arrow end-to-end (engine.py Arrow batches → IPC), and
 Spark cannot convert CalendarIntervalType or YearMonthIntervalType to
 Arrow at all (UNSUPPORTED_DATA_TYPE_FOR_ARROW_CONVERSION) — so before
 round 10 any query whose RESULT included one of those types got a 400

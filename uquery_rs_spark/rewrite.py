@@ -8938,9 +8938,10 @@ class SqlRewriter:
         # Per-top-level-rewrite memo (thread-local, see rewrite()):
         # ~17% of a probe-heavy statement's probes repeat the exact
         # same text across dispatch sites/passes — the result cannot
-        # differ within one rewrite (same session state), so re-issuing
-        # the analysis is pure waste. Scoped to a single rewrite() call:
-        # no staleness across DDL/view changes is possible.
+        # differ while the session's views stay put, so re-issuing the
+        # analysis is pure waste. Scoped to a single rewrite() call, and
+        # cleared by _rewrite_recursive_union, which changes views
+        # mid-rewrite.
         memo = getattr(_PROBE_TLS, "memo", None)
         if memo is not None:
             hit = memo.get(probe_sql)
@@ -9655,7 +9656,9 @@ class SqlRewriter:
                 )
         finally:
             self.spark.catalog.dropTempView(f"{uid}_delta")
+            _PROBE_TLS.memo.clear()  # views changed: memoized probes may not hold
         total.createOrReplaceTempView(uid)
+        _PROBE_TLS.temp_views.append(uid)
         rest = sql[close + 1 :]
         return self.rewrite(f"WITH RECURSIVE {name} AS (SELECT * FROM {uid}){rest}")
 
@@ -9667,19 +9670,28 @@ class SqlRewriter:
         # rewrite. It is thread-local because one rewriter serves every
         # handler thread; nested rewrite() calls (EXECUTE, macro/CTE
         # recursion) share the outer one:
-        # - memo: probe results (sound: session state cannot change
-        #   mid-rewrite);
+        # - memo: probe results (sound while session views stay put;
+        #   _rewrite_recursive_union clears it when it changes them);
         # - pivot_names: pivot-name token → column name
         #   (_pivot_name_token);
-        # - execute_depth: EXECUTE nesting, bounded below.
+        # - execute_depth: EXECUTE nesting, bounded below;
+        # - temp_views: views the rewritten text reads, kept after the
+        #   call for temp_views().
         if getattr(_PROBE_TLS, "memo", None) is None:
             _PROBE_TLS.memo, _PROBE_TLS.pivot_names = {}, {}
             _PROBE_TLS.execute_depth = 0
+            _PROBE_TLS.temp_views = []
             try:
                 return self._rewrite_inner(sql)
             finally:
                 _PROBE_TLS.memo = _PROBE_TLS.pivot_names = None
         return self._rewrite_inner(sql)
+
+    def temp_views(self) -> list[str]:
+        """The temp views that the last top-level rewrite() on this thread
+        registered for its result text to read (a recursive CTE's
+        fixpoint). Whoever runs that text drops them when it is done."""
+        return list(getattr(_PROBE_TLS, "temp_views", ()))
 
     def _rewrite_inner(self, sql: str) -> str:
         if _FORBIDDEN_RE.match(sql):

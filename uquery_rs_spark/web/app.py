@@ -4,7 +4,8 @@ reference's axum router (src/web/routers.rs).
 Per-request pipeline (reference §3.1, re-expressed):
   parse body (≤256 KiB; JSON {"query"} or raw SQL)        request.rs:23-67
   → negotiate Accept (406 on no match)                    routers.rs:91-104
-  → engine.prepare (blocks on pool permit)                duckdb.rs:31-39
+  → engine.prepare (waits for a pool permit; 408 once
+    the request's deadline passes)                        duckdb.rs:31-39
   → execute on the handler thread into the format writer  routers.rs:114-148
   → the first write commits 200 chunked (gzip if requested) and streams
     straight to the socket; before it, a timer may answer 408 and an
@@ -15,6 +16,7 @@ from __future__ import annotations
 
 import json
 import threading
+import time
 import zlib
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -177,10 +179,13 @@ class UQueryHandler(BaseHTTPRequestHandler):
         cfg = self.config
         sink = _ResponseSink(self, content_type, "gzip" in self.headers.get("Accept-Encoding", ""))
         writer = writer_for_format(fmt_key, sink)
-        prepared = cfg.engine.prepare(sql)
+        # one deadline for the permit wait and the first batch
+        with cfg.engine.deadline(cfg.query_timeout) as deadline:
+            prepared = cfg.engine.prepare(sql)
         timer = None
-        if cfg.query_timeout:
-            timer = threading.Timer(cfg.query_timeout, self._time_out, (sink, prepared))
+        if deadline is not None:
+            left = max(0.0, deadline - time.monotonic())
+            timer = threading.Timer(left, self._time_out, (sink, prepared))
             timer.start()
         try:
             prepared.execute(writer)
@@ -198,7 +203,7 @@ class UQueryHandler(BaseHTTPRequestHandler):
                 timer.join()  # a 408 being sent finishes before the socket closes
 
     def _time_out(self, sink: _ResponseSink, prepared) -> None:
-        """Deadline for the first batch (routers.rs:153-164)."""
+        """The deadline passed before the first batch (routers.rs:153-164)."""
         if sink.claim():
             prepared.cancel()  # job-group interrupt replaces Drop-based release
             self._send_problem(UQueryError.query_timeout(self.config.query_timeout), close=True)

@@ -2,11 +2,11 @@
 
 Four formats, mirroring the reference's consumers (src/web/consumers.rs,
 src/web/routers.rs:137-148): JSON array, JSON Lines, CSV-with-header-once,
-Arrow IPC stream. Each implements RecordBatchConsumer: its encoder turns
-one Arrow batch into response bytes in the executors, and the writer
-frames those payloads into any `write(bytes)` sink — a socket, a gzip
-wrapper, a buffer — so server memory stays flat regardless of result size
-(reference docs/docs/response-formats.md:97-104).
+Arrow IPC stream. Each implements RecordBatchConsumer: it encodes the
+Arrow batches it is handed on the driver, a bounded slice at a time, into
+any `write(bytes)` sink — a socket, a gzip wrapper, a buffer — so server
+memory stays flat regardless of result size (reference
+docs/docs/response-formats.md:97-104).
 """
 
 from .consumers import (  # noqa: F401

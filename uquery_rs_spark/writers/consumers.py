@@ -1,10 +1,11 @@
 """RecordBatchConsumer implementations for the four response formats.
 
-Each writer pairs an encoder (module-level, picklable: one Arrow batch →
-bytes, run in the executors by engine.execute) with driver-side framing
-that only adds what sits between and around the payloads: the JSON
-array's brackets and commas, the CSV header, the Arrow schema message and
-end-of-stream marker."""
+Each writer encodes the batches engine.execute hands it on the driver,
+in slices of at most _ARROW_BATCH_ROWS rows so that the Python objects
+of one slice bound what JSON and CSV encoding hold at a time, and writes
+each slice to its sink with what sits between and around the rows: the
+JSON array's brackets and commas, the CSV header, the Arrow schema
+message and end-of-stream marker."""
 
 from __future__ import annotations
 
@@ -43,13 +44,9 @@ def _dump_row(row: dict) -> bytes:
     return json.dumps(row, separators=(",", ":"), default=_json_default).encode()
 
 
-def _json_encoder(sep: bytes):
-    """One batch → its rows as `sep`-joined compact JSON objects."""
-
-    def encode(batch: pa.RecordBatch) -> bytes:
-        return sep.join(map(_dump_row, batch.to_pylist()))
-
-    return encode
+def _json_rows(batch: pa.RecordBatch, sep: bytes) -> bytes:
+    """The batch's rows as `sep`-joined compact JSON objects."""
+    return sep.join(map(_dump_row, batch.to_pylist()))
 
 
 def _csv_text(rows) -> bytes:
@@ -72,109 +69,86 @@ def _csv_rows(batch: pa.RecordBatch) -> bytes:
     )
 
 
-# IPC record batches carry at most this many rows each
+# Writers encode at most this many rows at a time; IPC record batches
+# carry at most this many rows each
 _ARROW_BATCH_ROWS = 8192
 _ARROW_EOS = b"\xff\xff\xff\xff\x00\x00\x00\x00"
 
 
-def _arrow_messages(batch: pa.RecordBatch) -> bytes:
-    """One batch → the IPC stream messages of its _ARROW_BATCH_ROWS slices."""
-    return b"".join(
-        batch.slice(off, _ARROW_BATCH_ROWS).serialize()
-        for off in range(0, batch.num_rows, _ARROW_BATCH_ROWS)
-    )
+class _SlicedWriter(RecordBatchConsumer):
+    """Encodes each batch in slices of at most _ARROW_BATCH_ROWS rows with
+    the subclass's `encode(part) -> bytes`, one sink write per slice.
+    `head(schema)` rides on the first slice (or on finish, for an empty
+    result), so nothing is written before it; `sep` goes between slices
+    and `tail` at the end."""
+
+    sep = tail = b""
+
+    def __init__(self, sink):
+        self._sink = sink
+        self._head = b""
+        self._started = False
+
+    def head(self, schema: pa.Schema) -> bytes:
+        return b""
+
+    def on_schema(self, schema: pa.Schema) -> None:
+        self._head = self.head(schema)
+
+    def on_batch(self, batch: pa.RecordBatch) -> None:
+        for off in range(0, batch.num_rows, _ARROW_BATCH_ROWS):
+            before = self.sep if self._started else self._head
+            self._sink.write(before + self.encode(batch.slice(off, _ARROW_BATCH_ROWS)))
+            self._started = True
+
+    def finish(self) -> None:
+        self._sink.write((b"" if self._started else self._head) + self.tail)
 
 
-class JsonArrayWriter(RecordBatchConsumer):
+class JsonArrayWriter(_SlicedWriter):
     """`[{...},{...}]` — golden shape from reference src/main.rs:154-167
     (ArrayWriter semantics: one array, rows as objects, compact)."""
 
-    def __init__(self, sink):
-        self._sink = sink
-        self._first = True
+    sep, tail = b",", b"]"
 
-    def on_schema(self, schema: pa.Schema) -> None:
-        pass  # `[` goes out with the first row, so nothing is written before it
+    def head(self, schema: pa.Schema) -> bytes:
+        return b"["
 
-    def batch_bytes_serializer(self, schema: pa.Schema):
-        return _json_encoder(b",")
-
-    def on_batch_bytes(self, payload: bytes) -> None:
-        self._sink.write((b"[" if self._first else b",") + payload)
-        self._first = False
-
-    def finish(self) -> None:
-        self._sink.write(b"[]" if self._first else b"]")
+    def encode(self, part: pa.RecordBatch) -> bytes:
+        return _json_rows(part, b",")
 
 
-class JsonLinesWriter(RecordBatchConsumer):
+class JsonLinesWriter(_SlicedWriter):
     """NDJSON — one compact object per line (reference routers.rs:145-147)."""
 
-    def __init__(self, sink):
-        self._sink = sink
-
-    def on_schema(self, schema: pa.Schema) -> None:
-        pass
-
-    def batch_bytes_serializer(self, schema: pa.Schema):
-        return _json_encoder(b"\n")
-
-    def on_batch_bytes(self, payload: bytes) -> None:
-        self._sink.write(payload + b"\n")
-
-    def finish(self) -> None:
-        pass
+    def encode(self, part: pa.RecordBatch) -> bytes:
+        return _json_rows(part, b"\n") + b"\n"
 
 
-class CsvWriter(RecordBatchConsumer):
+class CsvWriter(_SlicedWriter):
     """CSV with a single header row (reference golden: src/main.rs:192
-    `Id,Name,Description\\n1,Rust,"Safe, concurrent, ..."\\n`).
+    `Id,Name,Description\\n1,Rust,"Safe, concurrent, ..."\\n`)."""
 
-    One sink write per batch; the header rides on the first one (or on
-    finish for an empty result), so nothing is written before it."""
+    def head(self, schema: pa.Schema) -> bytes:
+        return _csv_text([schema.names])
 
-    def __init__(self, sink):
-        self._sink = sink
-        self._header = b""
-
-    def on_schema(self, schema: pa.Schema) -> None:
-        self._header = _csv_text([schema.names])
-
-    def batch_bytes_serializer(self, schema: pa.Schema):
-        return _csv_rows
-
-    def on_batch_bytes(self, payload: bytes) -> None:
-        self._sink.write(self._header + payload)
-        self._header = b""
-
-    def finish(self) -> None:
-        if self._header:
-            self._sink.write(self._header)
+    def encode(self, part: pa.RecordBatch) -> bytes:
+        return _csv_rows(part)
 
 
-class ArrowIpcWriter(RecordBatchConsumer):
-    """Arrow IPC stream — the schema message rides on the first payload
-    (or on finish for an empty result), then the record batch messages,
-    then the end-of-stream marker; byte-compatible with any IPC reader
-    (reference src/web/consumers.rs:47-75, cross-library test
+class ArrowIpcWriter(_SlicedWriter):
+    """Arrow IPC stream — the schema message, then the record batch
+    messages, then the end-of-stream marker; byte-compatible with any IPC
+    reader (reference src/web/consumers.rs:47-75, cross-library test
     src/main.rs:196-213)."""
 
-    def __init__(self, sink):
-        self._sink = sink
-        self._header = b""
+    tail = _ARROW_EOS
 
-    def on_schema(self, schema: pa.Schema) -> None:
-        self._header = schema.serialize().to_pybytes()
+    def head(self, schema: pa.Schema) -> bytes:
+        return schema.serialize().to_pybytes()
 
-    def batch_bytes_serializer(self, schema: pa.Schema):
-        return _arrow_messages
-
-    def on_batch_bytes(self, payload: bytes) -> None:
-        self._sink.write(self._header + payload)
-        self._header = b""
-
-    def finish(self) -> None:
-        self._sink.write(self._header + _ARROW_EOS)
+    def encode(self, part: pa.RecordBatch) -> bytes:
+        return part.serialize()  # a pa.Buffer: `bytes + buffer` is bytes
 
 
 def writer_for_format(fmt: str, sink) -> RecordBatchConsumer:
