@@ -4389,3 +4389,71 @@ def test_empty_map_literal_like_duckdb(spark, rw):
     ]:
         got = spark.sql(rw.rewrite(sql)).collect()[0].v
         assert got == duckdb.sql(sql).fetchall()[0][0], sql
+
+
+_OPERAND_CASES = {
+    # postfix ! binds looser than every arithmetic operator
+    "factorial_after_plus": "SELECT 1 + 2! AS v",
+    "factorial_after_times": "SELECT 2 * 3! AS v",
+    "factorial_after_floordiv": "SELECT 7 // 2! AS v",
+    "factorial_of_negative": "SELECT -3! AS v",
+    # a unary sign binds tighter than power
+    "negative_base_power": "SELECT -2 ^ 2 AS v",
+    "negative_subscript_power": "SELECT -l[1] ^ 2 AS v FROM (SELECT [3] AS l)",
+    # // is left-associative at the level of * / %
+    "times_then_floordiv": "SELECT 2 * 7 // 2 AS v",
+    "times_negative_then_floordiv": "SELECT 2 * -7 // 2 AS v",
+    "divide_then_floordiv": "SELECT 7 / 2 // 2 AS v",
+    "case_floordiv": "SELECT CASE WHEN true THEN 7.5 END // 2 AS v",
+    "exponent_literal_floordiv": "SELECT 1e-5 // 2 AS v",
+    # .field access is part of the operand on either side
+    "field_power": "SELECT {'a': 2}.a ^ 2 AS v",
+    "field_starstar": "SELECT {'a': 2}.a ** 2 AS v",
+    "floordiv_by_field": "SELECT 7 // {'a': 2}.a AS v",
+    "modulo_by_field": "SELECT 10 % {'a': 3}.a AS v",
+    "divide_by_field": "SELECT 10 / {'a': 4}.a AS v",
+    "starstar_field": "SELECT 2 ** {'a': 3}.a AS v",
+    "field_in_subquery": "SELECT {'a': 2}.a IN (SELECT 2) AS v",
+    "field_list_distance": "SELECT {'a': [1,2,3]}.a <-> [1,2,4] AS v",
+    "subscript_field_power": "SELECT l[1].a ^ 2 AS v FROM (SELECT [{'a': 3}] AS l)",
+    "group_field_floordiv": "SELECT (x).a // 2 AS v FROM (SELECT {'a': 7.5} AS x)",
+    # a window or FILTER clause belongs to its call
+    "window_floordiv": "SELECT sum(x) OVER () // 2 AS v FROM (SELECT 7.5 AS x)",
+    "window_power": "SELECT sum(x) OVER () ^ 2 AS v FROM (SELECT 3 AS x)",
+    "power_of_window": "SELECT 2 ^ sum(x) OVER () AS v FROM (SELECT 3 AS x)",
+    "filter_floordiv": "SELECT count(*) FILTER (WHERE x > 1) // 2 AS v FROM (SELECT 7 AS x)",
+    # a typed literal is one operand; a keyword is none
+    "typed_literal_cast": "SELECT DATE '2024-01-31'::VARCHAR AS v",
+    "prefix_bitwise_not": "SELECT ~5 AS v",
+    # shapes that already held
+    "power_left_assoc": "SELECT 2 ^ 3 ^ 2 AS v",
+    "times_power": "SELECT 2 * 3 ^ 2 AS v",
+    "floordiv_then_times": "SELECT 7 // 2 * 2 AS v",
+    "fractional_floordiv": "SELECT 7.5 // 2 AS v",
+    "sum_in_subquery": "SELECT 1 + 2 IN (SELECT 3) AS v",
+}
+
+
+@pytest.mark.parametrize("case", sorted(_OPERAND_CASES))
+def test_operands_take_duckdb_precedence(spark, rw, case):
+    """Each operator finds its operands through one scanner with
+    DuckDB's precedence; every statement is served and compared with
+    DuckDB."""
+    import duckdb
+
+    sql = _OPERAND_CASES[case]
+    want = duckdb.sql(sql).fetchall()
+    assert [tuple(r) for r in spark.sql(rw.rewrite(sql)).collect()] == want, sql
+
+
+def test_floordiv_by_exists_is_an_error(spark, rw):
+    """``7 // EXISTS (…)`` is a binder error in DuckDB; a divisor that is
+    no operand stays native and Spark's analysis rejects it (a 400)."""
+    import duckdb
+    from pyspark.errors import AnalysisException
+
+    sql = "SELECT 7 // EXISTS (SELECT 1) AS v"
+    with pytest.raises(duckdb.BinderException):
+        duckdb.sql(sql)
+    with pytest.raises(AnalysisException):
+        spark.sql(rw.rewrite(sql))

@@ -11,8 +11,10 @@ Prints one JSON line per input: its name, then either the rewritten text
 
 Temp-view and spill-path uuids are normalised, so two runs of the same
 code print the same lines. The fuzzer's per-axis checked/mismatch counts
-go to stderr. A rewriter change that should not alter
-behaviour diffs clean against its parent:
+go to stderr, and a last stderr line sums the run up as JSON: inputs,
+errors, seconds spent inside top-level ``rewrite`` calls (probes
+included) and LIMIT-0 analysis probes sent. A rewriter change that
+should not alter behaviour diffs clean against its parent:
 
     python tools/rewrite_corpus.py SF_DIR > new.jsonl   # then the same on the parent
     diff old.jsonl new.jsonl
@@ -27,6 +29,7 @@ import os
 import random
 import re
 import sys
+import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -62,18 +65,35 @@ def _error(name: str, e: Exception) -> dict:
     return {"name": name, "error": type(e).__name__, "message": _norm(msg)}
 
 
-def _outcome(name: str, fn) -> dict:
+def _outcome(name: str, fn, summary: dict) -> dict:
+    summary["inputs"] += 1
+    t0 = time.perf_counter()
     try:
         return {"name": name, "sql": _norm(fn())}
     except Exception as e:  # noqa: BLE001 - the error is the outcome
+        summary["errors"] += 1
         return _error(name, e)
+    finally:
+        summary["rewrite_s"] += time.perf_counter() - t0
 
 
-class RecordingRewriter(SqlRewriter):
+class CountingRewriter(SqlRewriter):
+    """Counts the analysis probes it sends in ``summary``."""
+
+    def __init__(self, spark, summary: dict):
+        super().__init__(spark)
+        self.summary = summary
+
+    def _probe_analyzes_uncached(self, probe_sql: str) -> bool:
+        self.summary["probes"] += 1
+        return super()._probe_analyzes_uncached(probe_sql)
+
+
+class RecordingRewriter(CountingRewriter):
     """Records the outcome of each top-level ``rewrite`` it serves."""
 
-    def __init__(self, spark, tag: str):
-        super().__init__(spark)
+    def __init__(self, spark, tag: str, summary: dict):
+        super().__init__(spark, summary)
         self.tag, self.records, self._depth = tag, [], 0
 
     def rewrite(self, sql: str) -> str:
@@ -81,13 +101,17 @@ class RecordingRewriter(SqlRewriter):
             return super().rewrite(sql)
         name = f"{self.tag}:{len(self.records)}"
         self._depth += 1
+        self.summary["inputs"] += 1
+        t0 = time.perf_counter()
         try:
             out = super().rewrite(sql)
         except Exception as e:
+            self.summary["errors"] += 1
             self.records.append({**_error(name, e), "input": sql})
             raise
         finally:
             self._depth -= 1
+            self.summary["rewrite_s"] += time.perf_counter() - t0
         self.records.append({"name": name, "sql": _norm(out), "input": sql})
         return out
 
@@ -100,15 +124,17 @@ def main() -> int:
     spark = get_spark("rewrite-corpus", cpus=4)
     Q.load_all()
     load_tables(spark, sf)
+    summary = {"inputs": 0, "errors": 0, "rewrite_s": 0.0, "probes": 0}
     for name in sorted(Q.REGISTRY):
         q = Q.REGISTRY[name]
         for kind, text in (("oracle", q.oracle), ("sql", q.sql)):
             if text is not None:
-                rec = _outcome(f"{name}:{kind}", lambda: SqlRewriter(spark).rewrite(text))
+                rw = CountingRewriter(spark, summary)
+                rec = _outcome(f"{name}:{kind}", lambda: rw.rewrite(text), summary)
                 print(json.dumps(rec), flush=True)
     con = duckdb.connect()
     for seed in FUZZ_SEEDS:
-        rw = RecordingRewriter(spark, f"fuzz{seed}")
+        rw = RecordingRewriter(spark, f"fuzz{seed}", summary)
         for axis in dialect_fuzz.ALL_AXES:
             rw.tag, rw.records = f"fuzz{seed}:{axis}", []
             checked, mismatch, _fails = dialect_fuzz.run_axis(
@@ -117,6 +143,8 @@ def main() -> int:
             print(f"seed {seed} {axis}: checked={checked} mismatch={mismatch}", file=sys.stderr)
             for rec in rw.records:
                 print(json.dumps(rec), flush=True)
+    summary["rewrite_s"] = round(summary["rewrite_s"], 2)
+    print(json.dumps(summary), file=sys.stderr)
     return 0
 
 

@@ -831,21 +831,314 @@ class SqlRewriter:
             i -= 1
         return i
 
-    @classmethod
-    def _name_start(cls, s: str, i: int) -> int:
-        """Start of the dotted name ending at s[i - 1]: words and "…"
-        parts joined by dots (``"t"."c"``, ``"t".c``)."""
-        while i > 0:
-            if s[i - 1] == '"':
-                k = cls._find_open(s, i - 1)
-                if k < 0:
-                    break
-                i = k
-            elif s[i - 1].isalnum() or s[i - 1] in "_.":
-                i = cls._word_start(s, i)
-            else:
-                break
+    # -- operands: where an operator's operand starts and ends ------------
+    # One operand is a literal (optionally after DATE/TIME/TIMESTAMP/
+    # INTERVAL), a number, a dotted or quoted name, a balanced group with
+    # its call name, or CASE … END, followed by postfix calls, […]
+    # subscripts and .field access. A caller widens it through a unary
+    # sign and through the binary operators that bind at least as
+    # tightly as its own. DuckDB, loosest first: postfix !; || and the
+    # other symbol operators; + -; * / % // (left-associative); ^ **
+    # (left-associative); unary sign.
+
+    # words that are never an operand, nor the name of a call
+    _KEYWORDS = frozenset(
+        "select from where group order by limit offset having qualify "
+        "union intersect except all distinct on using join inner cross "
+        "natural as when then else case end and or not in is between like "
+        "ilike glob similar escape exists any some over partition rows "
+        "preceding following unbounded set values window interval".split()
+    )
+    _OP_CHARS = "+-*/%^<>=!|&~:"
+    _OP_TAIL = "*/%^<>=!|&~"  # a char that makes an operator longer
+    _CASE_TOK_RE = re.compile(r"(?i)\b(case|end)\b")
+    _LIT_KW = r"date|time|timestamp(?:_ntz|_s|_ms|_ns|tz)?"
+    _LIT_KW_RE = re.compile(rf"(?i){_LIT_KW}|interval")
+    _TYPED_LIT_RE = re.compile(rf"(?i)(?:{_LIT_KW})\s*'")
+    _IVL_HEAD_RE = re.compile(r"(?i)interval\s+")
+    _IVL_NUM_RE = re.compile(r"[\d.]+")
+    _IVL_UNIT_RE = re.compile(r"\s+([A-Za-z_]+)")
+    _IVL_LIT_RE = re.compile(
+        r"(?i)\binterval\s+(?:" + _STRING + r"|[\d.]+)((?:\s+[a-z_]+)+)$"
+    )
+    _NUMBER_RE = re.compile(r"(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?")
+    _WORD_RE = re.compile(r"[\w$]+")
+    _EXP_HEAD_RE = re.compile(r"(?<![\w.])(?:\d+\.?\d*|\.\d+)[eE][+-]$")
+    _CLAUSE_RE = re.compile(
+        r"(?i)(over|filter|ignore\s+nulls|respect\s+nulls|within\s+group)\b"
+    )
+
+    @staticmethod
+    def _ws_left(s: str, i: int) -> int:
+        while i > 0 and s[i - 1].isspace():
+            i -= 1
         return i
+
+    @staticmethod
+    def _ws_right(s: str, i: int) -> int:
+        while i < len(s) and s[i].isspace():
+            i += 1
+        return i
+
+    def _ends_operand(self, sql: str, i: int) -> bool:
+        """True when an operand ends just before ``i`` (whitespace
+        skipped): otherwise a sign there is unary."""
+        i = self._ws_left(sql, i)
+        c = sql[i - 1 : i]
+        if c and (c.isalnum() or c in "_$"):
+            word = sql[self._word_start(sql, i, "_$") : i].lower()
+            return word == "end" or word not in self._KEYWORDS
+        return bool(c) and c in ")]'\"`"
+
+    def _case_end(self, sql: str, i: int):
+        """End of the CASE … END block whose CASE starts at sql[i]."""
+        depth = 0
+        for tok in self._finditer_code(self._CASE_TOK_RE, sql, i):
+            depth += 1 if tok.group(1).lower() == "case" else -1
+            if not depth:
+                return tok.end()
+        return None
+
+    def _case_start(self, sql: str, i: int):
+        """Start of the CASE … END block whose END starts at sql[i]."""
+        opened: list[int] = []
+        for tok in self._finditer_code(self._CASE_TOK_RE, sql, 0, i + 3):
+            if tok.group(1).lower() == "case":
+                opened.append(tok.start())
+            elif tok.start() == i:
+                return opened[-1] if opened else None
+            elif opened:
+                opened.pop()
+        return None
+
+    def _interval_end(self, sql: str, j: int):
+        """End of the ``<'lit'|number> [UNIT …]`` that follows an
+        INTERVAL keyword at sql[j]; None if no literal is there."""
+        if sql[j : j + 1] == "'":
+            j = self._find_close(sql, j) + 1
+        else:
+            m = self._IVL_NUM_RE.match(sql, j)
+            if not m:
+                return None
+            j = m.end()
+        while (m := self._IVL_UNIT_RE.match(sql, j)) and (
+            m.group(1).lower() in self._IVL_UNIT_WORDS
+        ):
+            j = m.end()
+        return j
+
+    def _window_clause_end(self, sql: str, end: int):
+        """``end`` (just after a call) moved past the window and
+        aggregate clauses that follow: OVER (spec)/OVER name, FILTER
+        (…), WITHIN GROUP (…), IGNORE/RESPECT NULLS; None for a clause
+        without its body."""
+        n = len(sql)
+        while m := self._CLAUSE_RE.match(sql, self._ws_right(sql, end)):
+            kw, q = m.group(1).lower(), self._ws_right(sql, m.end(1))
+            if kw.startswith(("ignore", "respect")):
+                end = m.end(1)
+            elif sql[q : q + 1] == "(":
+                close = self._find_close(sql, q)
+                if close == -1:
+                    return None
+                end = close + 1
+            elif kw == "over" and q < n and (sql[q].isalpha() or sql[q] == "_"):
+                end = q
+                while end < n and (sql[end].isalnum() or sql[end] == "_"):
+                    end += 1
+            else:
+                return None
+        return end
+
+    def _clause_call_end(self, sql: str, i: int, word: str = ""):
+        """When the link starting at sql[i] (``word`` if it is a name)
+        is the body of a window or aggregate clause — OVER (…), OVER
+        name, FILTER (…), WITHIN GROUP (…), IGNORE/RESPECT NULLS — the
+        end of the call that clause belongs to; else None."""
+        p = self._ws_left(sql, i)
+        w = self._word_start(sql, p, "_$")
+        kw = sql[w:p].lower()
+        if word == "nulls" and kw in ("ignore", "respect"):
+            pass
+        elif kw == "group":
+            p = self._ws_left(sql, w)
+            w = self._word_start(sql, p, "_$")
+            if sql[w:p].lower() != "within":
+                return None
+        elif kw not in ("over", "filter") or (kw == "filter" and word):
+            return None
+        q = self._ws_left(sql, w)
+        return q if sql[q - 1 : q] == ")" else None
+
+    def _chain_start(self, sql: str, end: int):
+        """Start of the primary and its postfix chain ending just before
+        ``end`` (whitespace skipped); None if no operand ends there."""
+        i = self._ws_left(sql, end)
+        while i > 0:
+            c = sql[i - 1]
+            if c in ")]":
+                k = self._find_open(sql, i - 1)
+                if k < 0:
+                    return None
+                if c == ")" and (q := self._clause_call_end(sql, k)) is not None:
+                    i = q
+                    continue
+                w_end = self._ws_left(sql, k)
+                w = self._word_start(sql, w_end, "_$")
+                word = sql[w:w_end].lower()
+                if c == ")" and word in ("over", "group"):
+                    return None  # a clause with no call before it
+                if c == ")" and word[:1].isalpha() and word not in self._KEYWORDS:
+                    k = w  # a call: its name heads the link
+                i = k
+                # a subscript applies to the operand right before it
+                if c == "]" and i and (sql[i - 1].isalnum() or sql[i - 1] in "_$)]'\"`"):
+                    continue
+            elif c == "'":
+                k = self._find_open(sql, i - 1)
+                if k < 0:
+                    return None
+                p = self._ws_left(sql, k)
+                w = self._word_start(sql, p, "_")
+                return w if self._LIT_KW_RE.fullmatch(sql, w, p) else k
+            elif c in '"`':
+                i = self._find_open(sql, i - 1)
+                if i < 0:
+                    return None
+            elif c.isalnum() or c in "_$":
+                w = self._word_start(sql, i, "_$")
+                word = sql[w:i].lower()
+                field = sql[w - 1 : w] == "."  # any word may name a field
+                if word == "end" and not field:
+                    return self._case_start(sql, w)
+                if word in self._KEYWORDS and not field:
+                    return None
+                if (q := self._clause_call_end(sql, w, word)) is not None:
+                    i = q
+                    continue
+                if word in self._IVL_UNIT_WORDS:
+                    m = self._IVL_LIT_RE.search(sql[max(0, w - 200) : i])
+                    if m and all(u in self._IVL_UNIT_WORDS for u in m.group(1).lower().split()):
+                        return i - len(m.group())
+                if word[0].isdigit():
+                    m = self._EXP_HEAD_RE.search(sql[max(0, w - 40) : w])
+                    if m:
+                        return w - len(m.group())
+                i = w
+            else:
+                return None
+            if sql[i - 1 : i] != ".":
+                return i
+            if not self._ends_operand(sql, i - 1) or sql[i - 2 : i - 1].isspace():
+                return i - 1 if sql[i].isdigit() else i  # .5
+            i -= 1
+        return None
+
+    def _chain_end(self, sql: str, start: int):
+        """End of the primary and its postfix chain starting at
+        ``start`` (whitespace skipped); None if no operand starts
+        there."""
+        j = self._ws_right(sql, start)
+        if m := self._TYPED_LIT_RE.match(sql, j):
+            return self._find_close(sql, m.end() - 1) + 1
+        if m := self._IVL_HEAD_RE.match(sql, j):
+            return self._interval_end(sql, m.end())
+        c, name = sql[j : j + 1], False
+        if c in ("'", "(", "["):
+            j = self._find_close(sql, j)
+            if j < 0:
+                return None
+            j += 1
+        elif c.isdigit() or (c == "." and sql[j + 1 : j + 2].isdigit()):
+            return self._NUMBER_RE.match(sql, j).end()
+        elif c in ('"', "`"):
+            j, name = self._find_close(sql, j) + 1, True
+        elif c.isalpha() or c in ("_", "$"):
+            e = self._WORD_RE.match(sql, j).end()
+            word = sql[j:e].lower()
+            if word == "case":
+                return self._case_end(sql, j)
+            if word in self._KEYWORDS:
+                return None
+            j, name = e, True
+        else:
+            return None
+        while True:  # postfix: calls with their clauses, subscripts, .field
+            k = self._ws_right(sql, j)
+            nxt = sql[j + 1 : j + 2]
+            if name and sql[k : k + 1] == "(" or sql[j : j + 1] == "[":
+                close = self._find_close(sql, k)  # k == j before a subscript
+                if close < 0:
+                    return j
+                call = sql[k] == "("
+                j = self._window_clause_end(sql, close + 1) if call else close + 1
+                if j is None:
+                    return None
+                name = False
+            elif sql[j : j + 1] == "." and nxt and (nxt.isalpha() or nxt in '_"`'):
+                if nxt in '"`':
+                    j = self._find_close(sql, j + 1) + 1
+                else:
+                    j = self._WORD_RE.match(sql, j + 1).end()
+                name = True
+            else:
+                return j
+
+    def _binary_op_before(self, sql: str, j: int, ops) -> str | None:
+        """The operator of ``ops`` ending at sql[j - 1] when it is binary
+        (an operand ends before it)."""
+        for op in ops:
+            s = j - len(op)
+            if (
+                s > 0
+                and sql.startswith(op, s)
+                and sql[s - 1] not in self._OP_CHARS
+                and self._ends_operand(sql, s)
+            ):
+                return op
+        return None
+
+    def _binary_op_at(self, sql: str, k: int, op: str) -> bool:
+        """True when ``op`` starts at sql[k] and is not the head of a
+        longer operator."""
+        tail = sql[k + len(op) : k + len(op) + 1]
+        return sql.startswith(op, k) and not (tail and tail in self._OP_TAIL)
+
+    def _operand_start(self, sql: str, end: int, ops=(), sign=False):
+        """Start of the operand ending just before ``end`` (whitespace
+        skipped), or None. It extends left through the binary ``ops``
+        (longest first) and the unary signs inside that chain; ``sign``
+        also takes a unary sign in front of it."""
+        start = self._chain_start(sql, end)
+        while start is not None:
+            j = self._ws_left(sql, start)
+            unary = j > 0 and sql[j - 1] in "+-" and not self._ends_operand(sql, j - 1)
+            k = self._ws_left(sql, j - 1) if unary else j
+            op = self._binary_op_before(sql, k, ops)
+            nxt = op and self._chain_start(sql, k - len(op))
+            if nxt is None or op is None:
+                return j - 1 if unary and sign else start
+            start = nxt
+        return None
+
+    def _operand_end(self, sql: str, start: int, ops=()):
+        """End of the operand starting at ``start`` (whitespace skipped),
+        a unary sign that touches it included, or None. It extends
+        right through the binary ``ops`` (longest first)."""
+        j = self._ws_right(sql, start)
+        if sql[j : j + 1] in ("+", "-"):
+            j += 1
+            if sql[j : j + 1].isspace():
+                return None
+        end = self._chain_end(sql, j)
+        while end is not None:
+            k = self._ws_right(sql, end)
+            op = next((o for o in ops if self._binary_op_at(sql, k, o)), None)
+            nxt = op and self._operand_end(sql, k + len(op))
+            if nxt is None or op is None:
+                return end
+            end = nxt
+        return None
 
     @classmethod
     def _split_top(cls, s: str, sep: str) -> list[str]:
@@ -2928,16 +3221,11 @@ class SqlRewriter:
             close = self._find_close(sql, m.end() - 1)
             if close == -1:
                 return sql
-            # scan the operand backwards from the dot
-            end = len(sql[: m.start()].rstrip())
-            if end > 0 and sql[end - 1] == ")":
-                i = self._word_start(sql, max(self._find_open(sql, end - 1), 0), "_")
-            else:
-                i = self._name_start(sql, end)
-            operand = sql[i:end]
-            if not operand or operand.endswith("."):
-                # no operand (e.g. a decimal literal handled elsewhere)
+            i = self._chain_start(sql, m.start())
+            if i is None or sql[i] == "'":
+                # no operand, or a string literal (a DuckDB parse error)
                 return sql
+            operand = sql[i : m.start()].rstrip()
             fname = m.group(1)
             args = sql[m.end() : close].strip()
             inner = f"({operand})" + (f", {args}" if args else "")
@@ -3060,55 +3348,18 @@ class SqlRewriter:
         left operand gets CAST(AS TIMESTAMP) — a no-op for timestamps,
         the DuckDB type for dates. INTERVAL ± INTERVAL is left native
         (same semantics both engines)."""
-
-        def atom_start(j: int) -> int | None:
-            # the atom ending at sql[j - 1]: a DATE/TIMESTAMP literal
-            # (None for a bare string), a bracketed group with its call
-            # name, or a word chain
-            if j > 0 and sql[j - 1] == "'":
-                kw_end = len(sql[: self._find_open(sql, j - 1)].rstrip())
-                k = self._word_start(sql, kw_end, "_")
-                if k < kw_end and re.fullmatch(
-                    r"(?i)date|timestamp(tz|_s|_ms|_ns)?", sql[k:kw_end]
-                ):
-                    return k
-                return None
-            if j > 0 and sql[j - 1] in ")]":
-                j = max(self._find_open(sql, j - 1), 0)
-            return self._word_start(sql, j)
-
         pos = 0
-        while True:
-            m = self._search_code(self._PM_INTERVAL_RE, sql, pos)
-            if not m:
-                return sql
-            # operand scan-back (the AT TIME ZONE machinery's shape)
-            end = len(sql[: m.start()].rstrip())
-            i = atom_start(end)
-            if i is None:
-                pos = m.end() + 8  # a bare string ± interval: skip
-                continue
-            # absorb a preceding additive chain (DATE '…' + 5 - INTERVAL):
-            # the ± operand is the whole chain, not its last atom
-            while True:
-                j = len(sql[:i].rstrip())
-                if j == 0 or sql[j - 1] not in "+-":
-                    break
-                j = len(sql[: j - 1].rstrip())
-                k = atom_start(j)
-                if k is None or k == j:
-                    break  # a string-literal chain member: stop here
-                i = k
-            operand = sql[i:end]
+        while m := self._search_code(self._PM_INTERVAL_RE, sql, pos):
+            # the whole additive chain before ± (DATE '…' + 5 - INTERVAL)
+            end = self._ws_left(sql, m.start())
+            i = self._operand_start(sql, end, ("+", "-"))
+            last = self._chain_start(sql, end)
+            operand = "" if i is None else sql[i:end]
             if (
                 not operand
-                or re.match(r"(?i)^\s*interval\b", operand)
-                or re.search(r"(?i)\binterval\s+('[^']*'|\d+)\s*\w*\s*$", sql[:i])
-                # a reserved word before ± means the sign is UNARY
-                # (SELECT -INTERVAL …, THEN -INTERVAL …): round-10
-                # wave-4 catch — the scan-back grabbed 'SELECT' as the
-                # operand and emitted an unparsable subtraction
-                or operand.strip().lower() in self._ATOM_RESERVED
+                # a bare string or TIME literal, NULL, INTERVAL ± INTERVAL
+                or re.match(r"(?i)'|time\s*'|null$|interval\b", operand)
+                or self._IVL_HEAD_RE.match(sql, last)
             ):
                 pos = m.end() + 8
                 continue
@@ -3118,6 +3369,7 @@ class SqlRewriter:
             repl = f"uq_poly(({operand}), CAST(({operand}) AS TIMESTAMP))"
             sql = sql[:i] + repl + sql[end:]
             pos = i + len(repl) + (m.end() - end) + 8
+        return sql
 
     _GLOB_TVF_RE = re.compile(r"(?i)\b(from|join)\s+glob\s*\(")
 
@@ -3528,21 +3780,10 @@ class SqlRewriter:
                 return sql
             zone = m.group(1)
 
-            end = len(sql[: m.start()].rstrip())
-            if end > 0 and sql[end - 1] == "'":
-                # a literal operand: TIMESTAMP '…' / DATE '…'
-                i = self._find_open(sql, end - 1)
-                j = len(sql[:i].rstrip())
-                k = self._word_start(sql, j, "_")
-                if k < j and re.fullmatch(r"(?i)timestamp(tz)?|date", sql[k:j]):
-                    i = k
-            elif end > 0 and sql[end - 1] == ")":
-                i = self._word_start(sql, max(self._find_open(sql, end - 1), 0))
-            else:
-                i = self._name_start(sql, end)
-            operand = sql[i:end]
-            if not operand:
+            i = self._chain_start(sql, m.start())
+            if i is None:
                 raise UQueryError.sql_error("AT TIME ZONE: missing operand")
+            operand = sql[i : m.start()].rstrip()
             fn = (
                 "from_utc_timestamp"
                 if re.match(r"(?i)^\(*\s*to_utc_timestamp\s*\(", operand)
@@ -3926,25 +4167,25 @@ class SqlRewriter:
             f"ELSE element_at(array({lut}), CAST(({n}) AS INT) - 1) END)"
         )
 
+    # postfix ! binds looser than every binary operator DuckDB's
+    # arithmetic and || use (1 + 2! is 3!); power is a call by now
+    _BANG_OPS = ("||", "//", "+", "-", "*", "/", "%")
+
     def _rewrite_postfix_factorial(self, sql: str) -> str:
         """DuckDB postfix ``n!`` = factorial (5! = 120). Runs after the
         operator-symbols pass so ``!~`` is already consumed; ``!=`` is
-        excluded by lookahead. The operand is the preceding atom
-        (number / identifier chain / balanced group); a fractional
-        numeric literal raises like DuckDB's binder does."""
+        excluded by lookahead. The operand is the whole arithmetic
+        expression before the ``!``, a unary sign included (-3! is
+        (-3)!); a fractional numeric literal raises like DuckDB's
+        binder does."""
         while True:
             m = self._search_code(self._BANG_RE, sql)
             if not m:
                 return sql
-            end = len(sql[: m.start()].rstrip())
-            if end > 0 and sql[end - 1] in ")]":
-                # include a preceding function name, if any
-                i = self._word_start(sql, max(self._find_open(sql, end - 1), 0))
-            else:
-                i = self._name_start(sql, end)
-            operand = sql[i:end]
-            if not operand:
+            i = self._operand_start(sql, m.start(), self._BANG_OPS, sign=True)
+            if i is None:
                 raise UQueryError.sql_error("'!': missing operand for factorial")
+            operand = sql[i : m.start()].strip()
             if re.fullmatch(r"\d+\.\d+", operand):
                 raise UQueryError.sql_error(
                     "factorial (!) requires an integer operand"
@@ -4622,9 +4863,7 @@ class SqlRewriter:
         CASE-folds into the argument exactly (excluded rows become
         NULLs that never collect); works identically under OVER.
         Returns (filter_cond | None, over_text | None, end_index)."""
-        i, n = close + 1, len(sql)
-        while i < n and sql[i].isspace():
-            i += 1
+        i, n = self._ws_right(sql, close + 1), len(sql)
         filt, fend = None, close
         fm = re.match(r"(?i)filter\s*\(", sql[i:])
         if fm:
@@ -4634,15 +4873,11 @@ class SqlRewriter:
             filt = re.sub(
                 r"(?i)^\s*where\b", "", sql[i + fm.end() : fend]
             ).strip()
-            i = fend + 1
-            while i < n and sql[i].isspace():
-                i += 1
+            i = self._ws_right(sql, fend + 1)
         m = re.match(r"(?i)over\b", sql[i:])
         if not m:
             return filt, None, fend
-        j = i + m.end()
-        while j < n and sql[j].isspace():
-            j += 1
+        j = self._ws_right(sql, i + m.end())
         if j < n and sql[j] == "(":
             e = self._find_close(sql, j)
             if e == -1:
@@ -5036,58 +5271,6 @@ class SqlRewriter:
 
     # -- sweep batch 12: operator symbols -----------------------------------
 
-    def _atom_left(self, sql: str, i: int):
-        """Start index of the expression atom ending just before ``i``
-        (dotted name, string literal, or a balanced ()/[]-group with an
-        optional call name) — None if the context is not atomic."""
-        j = len(sql[:i].rstrip())
-        c = sql[j - 1 : j]
-        if c and c in ")]'":
-            k = self._find_open(sql, j - 1)
-            if k < 0:
-                return None
-            return k if c == "'" else self._word_start(sql, k)
-        if c and (c.isalnum() or c in '_."'):
-            return self._name_start(sql, j)
-        return None
-
-    def _atom_right(self, sql: str, i: int):
-        """End index (exclusive) of the atom starting at/after ``i`` —
-        optional sign, then a string literal, or a dotted name / balanced
-        group plus postfix call/subscript chains."""
-        n = len(sql)
-        j = n - len(sql[i:].lstrip())
-        if j < n and sql[j] in "+-":
-            j += 1
-        if j >= n:
-            return None
-        c = sql[j]
-        if c == "'":
-            close = self._find_close(sql, j)
-            return close + 1 if close > j and sql[close] == c else None
-        if c in "([":
-            close = self._find_close(sql, j)
-            if close == -1:
-                return None
-            j = close + 1
-        elif c.isalnum() or c in '_"':
-            # words and "…" parts joined by dots
-            while j < n and (sql[j].isalnum() or sql[j] in '_."'):
-                j = self._find_close(sql, j) + 1 if sql[j] == '"' else j + 1
-        else:
-            return None
-        # postfix chains: calls and subscripts
-        while True:
-            k = n - len(sql[j:].lstrip())
-            if k < n and (sql[k] == "(" or (sql[k] == "[" and k == j)):
-                # no space before a subscript
-                close = self._find_close(sql, k)
-                if close == -1:
-                    return j
-                j = close + 1
-            else:
-                return j
-
     _LIKE_OPS = {
         "!~~*": " NOT ILIKE ", "~~*": " ILIKE ",
         "!~~": " NOT LIKE ", "~~": " LIKE ",
@@ -5097,7 +5280,15 @@ class SqlRewriter:
     _LIKE_OP_RE = re.compile(
         "|".join(map(re.escape, sorted(_LIKE_OPS, key=len, reverse=True))) + "|~"
     )
-    _FN_OPS = [("**", "power"), ("<->", "list_distance"), ("<=>", "list_cosine_similarity")]
+    # (operator, function, the binary operators its operands extend
+    # through): the metric operators bind looser than arithmetic
+    _ARITH_OPS = ("//", "**", "+", "-", "*", "/", "%", "^")
+    _FN_OPS = [
+        ("**", "power", ()),
+        ("<->", "list_distance", _ARITH_OPS),
+        ("<=>", "list_cosine_similarity", _ARITH_OPS),
+        ("^", "power", ()),
+    ]
 
     def _rewrite_operator_symbols(self, sql: str) -> str:
         """Batch-12 sweep — operator symbols (DuckDB-verified):
@@ -5112,9 +5303,10 @@ class SqlRewriter:
           SIMILARITY → the list metric translations of batch 11.
           (Spark's own null-safe ``<=>`` is not part of the DuckDB
           dialect this gateway serves.)
-        Operand extraction is atomic (literal / identifier / balanced
-        group + postfix chains) — matching DuckDB's precedence, where
-        power and the metric operators bind tighter than arithmetic.
+        Operands come from _operand_start/_operand_end with DuckDB's
+        precedence: a unary sign binds tighter than power (-2 ^ 2 is 4),
+        power is left-associative, and the metric operators take whole
+        arithmetic operands.
         """
         # keyword operators first (plain splice, no operand parsing);
         # longest-first, including bare infix ~
@@ -5122,17 +5314,16 @@ class SqlRewriter:
         def like_op(m):
             if m.group() != "~":
                 return self._LIKE_OPS[m.group()]
-            last = sql[: m.start()].rstrip()[-1:]
-            return " RLIKE " if last and (last.isalnum() or last in "_.')]\"") else "~"
+            return " RLIKE " if self._chain_start(sql, m.start()) is not None else "~"
 
         sql = self._sub_code_fn(self._LIKE_OP_RE, like_op, sql)
         # function-style operators: need both operands
-        for op, fn in self._FN_OPS + [("^", "power")]:
+        for op, fn, ops in self._FN_OPS:
             op_re = re.compile(re.escape(op))
             while m := self._search_code(op_re, sql):
                 idx = m.start()
-                ls = self._atom_left(sql, idx)
-                re_ = self._atom_right(sql, idx + len(op))
+                ls = self._operand_start(sql, idx, ops, sign=True)
+                re_ = self._operand_end(sql, idx + len(op), ops)
                 if ls is None or re_ is None:
                     raise UQueryError.sql_error(
                         f"cannot parse operands of '{op}' (use {fn}(a, b))"
@@ -6531,9 +6722,7 @@ class SqlRewriter:
         """Parse the relation after ``ASOF JOIN`` → (rel_sql, alias|None,
         end, kind) where kind is 'on'|'using' for the keyword found."""
         n = len(sql)
-        i = pos
-        while i < n and sql[i].isspace():
-            i += 1
+        i = self._ws_right(sql, pos)
         if i < n and sql[i] == "(":
             j = self._asof_scan_balanced(sql, i)
             rel = sql[i:j]
@@ -6563,18 +6752,11 @@ class SqlRewriter:
         top-level FROM / JOIN / ','."""
 
         def read_word(i: int) -> tuple[str, int]:
-            j = i
-            while j > 0 and (sql[j - 1].isalnum() or sql[j - 1] in "_."):
-                j -= 1
+            j = self._word_start(sql, i)
             return sql[j:i], j
 
-        def skip_ws(i: int) -> int:
-            while i > 0 and sql[i - 1].isspace():
-                i -= 1
-            return i
-
         def check_pre(i: int) -> None:
-            k = skip_ws(i)
+            k = self._ws_left(sql, i)
             if k > 0 and sql[k - 1] == ",":
                 return
             w, _ = read_word(k)
@@ -6583,7 +6765,7 @@ class SqlRewriter:
                     "ASOF JOIN: left relation must follow FROM/JOIN/','"
                 )
 
-        i = skip_ws(end)
+        i = self._ws_left(sql, end)
         if i > 0 and sql[i - 1] == ")":
             start = self._asof_scan_balanced_back(sql, i)
             check_pre(start)
@@ -6591,7 +6773,7 @@ class SqlRewriter:
         word, j = read_word(i)
         if not word:
             raise UQueryError.sql_error("ASOF JOIN: missing left relation")
-        k = skip_ws(j)
+        k = self._ws_left(sql, j)
         if k > 0 and sql[k - 1] == ")":
             # word is the alias of a parenthesised subquery
             start = self._asof_scan_balanced_back(sql, k)
@@ -6599,7 +6781,7 @@ class SqlRewriter:
             return sql[start:k], word, start
         word2, j2 = read_word(k)
         if word2.lower() == "as":
-            k2 = skip_ws(j2)
+            k2 = self._ws_left(sql, j2)
             if k2 > 0 and sql[k2 - 1] == ")":
                 start = self._asof_scan_balanced_back(sql, k2)
                 check_pre(start)
@@ -6610,7 +6792,7 @@ class SqlRewriter:
         if not word2 or word2.lower() in ("from", "join"):
             # bare relation: `FROM t ASOF JOIN …`
             return word, None, j
-        k2 = skip_ws(j2)
+        k2 = self._ws_left(sql, j2)
         if k2 > 0 and sql[k2 - 1] == ",":
             return word, None, j
         # `FROM t alias ASOF JOIN …`
@@ -6685,9 +6867,7 @@ class SqlRewriter:
         on_pair = None  # (lcol, rcol, op_normalized_to_l_side)
         using_cols: list[str] = []
         if kw == "using":
-            i = cond_start
-            while i < len(sql) and sql[i].isspace():
-                i += 1
+            i = self._ws_right(sql, cond_start)
             if i >= len(sql) or sql[i] != "(":
                 raise UQueryError.sql_error("ASOF JOIN USING: expected '(col, …)'")
             close = self._asof_scan_balanced(sql, i)
@@ -6921,28 +7101,6 @@ class SqlRewriter:
 
     # -- DuckDB bracket syntax: literals, indexing, slicing, comprehensions
 
-    @classmethod
-    def _take_operand(cls, head: str) -> tuple[str, str]:
-        """Split accumulated text into (prefix, trailing-operand) where the
-        operand is the expression a postfix [..] applies to: a dotted
-        identifier chain, a quoted token, or a ')'/']'-terminated group
-        with its call name."""
-        i = len(head)
-        while i > 0:
-            c = head[i - 1]
-            if c in ")]":
-                i = cls._word_start(head, max(cls._find_open(head, i - 1), 0))
-            elif c in "'\"":
-                k = cls._find_open(head, i - 1)
-                if k < 0:
-                    break
-                i = k
-            elif c.isalnum() or c in "_.":
-                i = cls._word_start(head, i)
-            else:
-                break
-        return head[:i], head[i:]
-
     @staticmethod
     def _slice_form(operand: str, a: str, b: str, slice_fn: str, size_fn: str) -> str:
         """The normalized DuckDB slice (1-based inclusive, negative from
@@ -7105,9 +7263,11 @@ class SqlRewriter:
             # postfix binds TIGHTLY (`l[2]`, `f(a)[1]`): the char
             # immediately before '[' decides; a space means literal.
             prev = head[-1:]
+            i = None
             if prev and (prev.isalnum() or prev in "_)]'\""):
-                pre, operand = self._take_operand(head)
-                out = [pre, self._bracket_postfix(operand, inner)]
+                i = self._chain_start(head, len(head))
+            if i is not None:
+                out = [head[:i], self._bracket_postfix(head[i:], inner)]
             else:
                 out.append(self._bracket_literal(inner))
             pos = close + 1
@@ -7131,8 +7291,8 @@ class SqlRewriter:
         """DuckDB ``a // b`` (truncating integer division — same semantics
         as Spark's ``div``, verified incl. negatives) → ``a div b``.
         Reached by the ``//`` the ÷0 pass leaves: a divisor it cannot
-        scan as an atom, such as ``- 2`` or ``~2``. String literals are
-        skipped so ``'https://…'`` survives."""
+        scan as an operand, such as ``~2``, or a bare NULL dividend.
+        String literals are skipped so ``'https://…'`` survives."""
         return cls._sub_code_fn(re.compile("//"), lambda _m: " div ", sql)
 
     _IN_SUBQ_RE = re.compile(r"(?i)\b(not\s+)?in\s*\(\s*select\b")
@@ -7167,84 +7327,8 @@ class SqlRewriter:
                 return k
         return "other"
 
-    # bare keywords that must never be swallowed as an IN left operand
-    _IN_LHS_STOP_KW = {
-        "select", "where", "when", "then", "else", "end", "and", "or",
-        "not", "in", "case", "by", "on", "as", "from", "having", "all",
-        "distinct", "between", "like", "is", "union", "except",
-        "intersect", "limit", "offset", "qualify",
-    }
-
-    def _case_start_for_end(self, sql: str, end_tok_start: int):
-        """Start index of the CASE matching the END token that begins at
-        ``end_tok_start`` (literal-aware forward scan) — None if
-        unbalanced."""
-        stack: list[int] = []
-        for tok in self._finditer_code(self._DIV_CASE_TOK_RE, sql):
-            w = tok.group(1)
-            if tok.start() > end_tok_start:
-                break
-            if w.lower() == "case":
-                stack.append(tok.start())
-            else:
-                if tok.start() == end_tok_start:
-                    return stack[-1] if stack else None
-                if stack:
-                    stack.pop()
-        return None
-
-    def _in_atom_or_case_left(self, sql: str, i: int):
-        """Like _atom_left, but a trailing ``END`` captures the whole
-        balanced CASE…END block, and bare clause keywords are rejected
-        (never part of an operand). ADVICE r7: without this, projected
-        ``CASE … END IN (subquery)`` rewrote only the token END into a
-        parse-invalid fragment."""
-        ls = self._atom_left(sql, i)
-        if ls is None:
-            return None
-        j = i
-        while j > ls and sql[j - 1].isspace():
-            j -= 1
-        atom = sql[ls:j]
-        if atom.lower() == "end":
-            return self._case_start_for_end(sql, ls)
-        if atom.lower() in self._IN_LHS_STOP_KW:
-            return None
-        return ls
-
-    def _in_lhs_start(self, sql: str, i: int):
-        """Start of the FULL comparison operand ending just before ``i``:
-        an atom/CASE block, extended left through top-level arithmetic
-        and concat operators (+ - * / % ||) — DuckDB parses
-        ``1 + 2 IN (…)`` as ``(1+2) IN (…)`` (IN binds looser than
-        arithmetic; ADVICE r7). Comparison operators, keywords and
-        clause boundaries stop the walk."""
-        ls = self._in_atom_or_case_left(sql, i)
-        if ls is None:
-            return None
-        while True:
-            j = ls
-            while j > 0 and sql[j - 1].isspace():
-                j -= 1
-            if j >= 2 and sql[j - 2 : j] == "||":
-                op_start = j - 2
-            elif (
-                j >= 1
-                and sql[j - 1] in "+-*/%"
-                # not part of a two-char comparison/operator (e.g. ->)
-                and not (j >= 2 and sql[j - 2] in "<>=!-+")
-            ):
-                op_start = j - 1
-            else:
-                return ls
-            nxt = self._in_atom_or_case_left(sql, op_start)
-            if nxt is None:
-                # unary sign (or keyword before the operator) — keep the
-                # sign if it is unary +/-
-                if sql[op_start] in "+-":
-                    return op_start
-                return ls
-            ls = nxt
+    # IN binds looser than arithmetic and ||: 1 + 2 IN (…) is (1+2) IN (…)
+    _IN_LHS_OPS = ("||", "+", "-", "*", "/", "%")
 
     def _rewrite_in_subquery_null(self, sql: str) -> str:
         """Projected ``x [NOT] IN (SELECT …)`` with a NULL-bearing,
@@ -7273,7 +7357,7 @@ class SqlRewriter:
             if close == -1:
                 pos = m.end()
                 continue
-            ls = self._in_lhs_start(sql, m.start())
+            ls = self._operand_start(sql, m.start(), self._IN_LHS_OPS, sign=True)
             if ls is None:
                 # translate-or-raise: leaving an uncapturable LHS native
                 # would silently keep the FALSE-vs-NULL deviation, and a
@@ -7305,71 +7389,9 @@ class SqlRewriter:
             sql = sql[:ls] + form + sql[close + 1 :]
             pos = ls + len(form)
 
-    _DIV_RHS_SKIP = {
-        "select", "from", "where", "group", "order", "by", "limit",
-        "offset", "having", "union", "all", "distinct", "on", "using",
-        "join", "inner", "left", "right", "full", "cross", "and", "or",
-        "not", "between", "in", "is", "as", "when", "then", "else",
-        "end", "over", "partition", "rows", "range", "interval", "any",
-        "some", "exists",
-    }
-    _DIV_CLAUSE_RE = re.compile(
-        r"(?i)(over|filter|ignore\s+nulls|respect\s+nulls|within\s+group)\b"
-    )
-    _DIV_CASE_TOK_RE = re.compile(r"(?i)\b(case|end)\b")
     _DIV_OP_RE = re.compile(r"//?|%")
-
-    def _div_rhs_end(self, sql: str, i: int):
-        """End index (exclusive) of a DIVISOR expression starting at
-        ``i``: a CASE…END block, or an atom extended through postfix
-        window/aggregate clauses (OVER (spec)/OVER name, FILTER (…),
-        WITHIN GROUP (…), IGNORE/RESPECT NULLS) so the clause stays
-        attached inside the nullif wrap. None = caller leaves the
-        division native (loud ANSI error preserved, no mistranslation
-        risk)."""
-        n = len(sql)
-        j = i
-        while j < n and sql[j].isspace():
-            j += 1
-        if re.match(r"(?i)case\b", sql[j:]):
-            depth = 0
-            for tok in self._finditer_code(self._DIV_CASE_TOK_RE, sql, j):
-                if tok.group(1).lower() == "case":
-                    depth += 1
-                else:
-                    depth -= 1
-                    if depth == 0:
-                        return tok.end()
-            return None
-        end = self._atom_right(sql, i)
-        if end is None:
-            return None
-        while True:
-            k = end
-            while k < n and sql[k].isspace():
-                k += 1
-            m = self._DIV_CLAUSE_RE.match(sql, k)
-            if not m:
-                return end
-            kw = m.group(1).lower()
-            p = m.end(1)
-            if kw.startswith(("ignore", "respect")):
-                end = p
-                continue
-            q = p
-            while q < n and sql[q].isspace():
-                q += 1
-            if q < n and sql[q] == "(":
-                close = self._find_close(sql, q)
-                if close == -1:
-                    return None
-                end = close + 1
-            elif kw == "over" and q < n and (sql[q].isalpha() or sql[q] == "_"):
-                while q < n and (sql[q].isalnum() or sql[q] == "_"):
-                    q += 1
-                end = q
-            else:
-                return None
+    # the dividend of // extends through its own precedence level
+    _FLOORDIV_LHS_OPS = ("//", "*", "/", "%")
 
     def _rewrite_div_by_zero(self, sql: str) -> str:
         """DuckDB returns NULL for division/modulo by zero in EVERY
@@ -7381,27 +7403,20 @@ class SqlRewriter:
         — x / NULL is NULL in both engines, the result TYPE is
         unchanged (nullif preserves its first argument's type, so
         int/decimal/double widths stay exactly what Spark computes
-        today), operator precedence is untouched (one atom replaced in
-        place — no operand-chain parsing), interval dividends keep
-        their native path, and no analysis probe is needed. ``//``
-        becomes ``div nullif(d, 0)`` here (DuckDB 7//0 is NULL too).
-        A divisor that doesn't parse as an atom is left native."""
+        today), operator precedence is untouched (the divisor is one
+        operand of _operand_end, replaced in place), interval dividends
+        keep their native path, and no analysis probe is needed.
+        ``//`` becomes ``div nullif(d, 0)`` here (DuckDB 7//0 is NULL
+        too). A divisor that doesn't scan as an operand (7 // EXISTS
+        (…), a binder error in DuckDB) is left native."""
         pos = 0
         while m := self._search_code(self._DIV_OP_RE, sql, pos):
             i, op = m.start(), m.group()
             oplen = len(op)
-            end = self._div_rhs_end(sql, i + oplen)
-            if end is None:
-                pos = i + oplen
-                continue
-            rhs = sql[i + oplen : end].strip()
-            if not rhs or rhs.lower() in self._DIV_RHS_SKIP:
-                pos = i + oplen
-                continue
-            if rhs.startswith(("nullif((", "nullif(CAST((")):
-                # already wrapped (this pass runs twice: before the
-                # int_div pass for user `//`, after macro expansion
-                # for macro-introduced divisions)
+            end = self._operand_end(sql, i + oplen)
+            rhs = "" if end is None else sql[i + oplen : end].strip()
+            if not rhs or rhs.startswith(("nullif((", "nullif(CAST((")):
+                # no divisor operand, or one this pass already wrapped
                 pos = i + oplen
                 continue
             if op == "//":
@@ -7411,13 +7426,13 @@ class SqlRewriter:
                 # division returning DOUBLE (7.5 // 2 = 3.75,
                 # -7.5 // 2 = -3.75, DECIMAL probes DOUBLE) — the
                 # old blanket div was a silent wrong-value class.
-                # Dispatch needs the LHS atom; when it can't be
-                # scanned safely (subscripted/CASE/window operands)
-                # the integer div stays — fractional operands of
-                # those rare shapes remain a documented deviation.
-                ls = self._floordiv_lhs_start(sql, i)
-                if ls is not None:
-                    lhs = sql[ls:i].strip()
+                # The dividend is everything back to the previous
+                # operator of looser precedence (2 * 7 // 2 is 7). A
+                # bare NULL dividend has no type to dispatch on: the
+                # integer div stays, NULL like DuckDB's.
+                ls = self._operand_start(sql, i, self._FLOORDIV_LHS_OPS)
+                lhs = "" if ls is None else sql[ls:i].strip()
+                if lhs and lhs.upper() != "NULL":
                     repl = (
                         f"uq_poly((({lhs}) / nullif(CAST(({rhs}) AS DOUBLE), 0)), "
                         f"(((({lhs}) & 0) + (({rhs}) & 0)) + "
@@ -8668,9 +8683,11 @@ class SqlRewriter:
         ``::`` natively, but with Spark semantics and Spark type names)."""
         m = self._search_code(self._COLON_CAST_RE, sql)
         while m:
-            pre, operand = self._take_operand(sql[: m.start()])
+            i = self._chain_start(sql, m.start())
+            if i is None:
+                raise UQueryError.sql_error("'::': missing operand")
             ty = m.group(1) + (m.group(2) or "")
-            sql = f"{pre}CAST({operand} AS {ty}){sql[m.end():]}"
+            sql = f"{sql[:i]}CAST({sql[i : m.start()].rstrip()} AS {ty}){sql[m.end():]}"
             m = self._search_code(self._COLON_CAST_RE, sql)
         return sql
 
@@ -8733,116 +8750,22 @@ class SqlRewriter:
         "microseconds quarter quarters decade decades century centuries "
         "millennium millennia to".split()
     )
-    _ATOM_RESERVED = frozenset(
-        "select where when then else and or on by from having case end in "
-        "not like ilike between join union intersect except all distinct "
-        "as set limit offset group order is exists values row rows range "
-        "preceding following unbounded over partition null true false "
-        "interval".split()
-    )
     _TEMPORAL_LIT_RE = re.compile(r"(?is)^(date|timestamp(?:_ntz|tz)?)\s*'")
 
-    def _left_atom_start(self, sql: str, end: int) -> int | None:
-        """Start index of the expression atom ENDING at ``end``
-        (exclusive), scanning left: a parenthesized group (with optional
-        function-name prefix), a string literal (with optional
-        TIME/DATE/TIMESTAMP keyword prefix), or an identifier chain.
-        None when no safe atom boundary exists (reserved word, operator,
-        start of text) — callers then leave the site native."""
-        k = len(sql[:end].rstrip())
-        if k == 0:
-            return None
-        c = sql[k - 1]
-        if c == ")":
-            i = self._find_open(sql, k - 1)
-            if i < 0:
-                return None
-            e = self._word_start(sql, i, "_$")
-            if e == i:
-                return i  # bare parens
-            if sql[e:i].lower() in self._ATOM_RESERVED:
-                return i  # keyword before parens: atom is the parens only
-            # dotted qualifier chain (db.fn(...))
-            start = e
-            while start > 1 and sql[start - 1] == ".":
-                s2 = self._word_start(sql, start - 1, '_$"')
-                if s2 == start - 1:
-                    break
-                start = s2
-            return start
-        if c == "'":
-            i = self._find_open(sql, k - 1)
-            if i < 0:
-                return None
-            j = len(sql[:i].rstrip())
-            w = self._word_start(sql, j, "_")
-            if re.fullmatch(r"(?i)time|date|timestamp(?:_ntz|tz)?", sql[w:j]):
-                return w
-            return i
-        if c.isalnum() or c in '_$"`':
-            start = self._word_start(sql, k, '_$".`')
-            word = sql[start:k].lower()
-            if word in self._ATOM_RESERVED or word in self._IVL_UNIT_WORDS:
-                return None
-            if re.match(r"^[\d.]+$", word):
-                return None
-            return start
-        return None
-
-    def _floordiv_lhs_start(self, sql: str, end: int) -> int | None:
-        """Start of the LEFT operand atom of a ``//`` ending at ``end``
-        (exclusive) — _left_atom_start plus the operand classes floordiv
-        needs that the TIME scanner rejects: numeric literals. Returns
-        None when no safe boundary exists OR the preceding context is a
-        window clause (OVER (spec) / OVER name / FILTER (...)), where
-        the parens/name is NOT the operand — callers keep the plain
-        integer-div translation there."""
-        k = end
-        while k > 0 and sql[k - 1].isspace():
-            k -= 1
-        if k == 0:
-            return None
-        c = sql[k - 1]
-        if c.isdigit() or (c == "." and k > 1 and sql[k - 2].isdigit()):
-            start = k
-            while start > 0 and (sql[start - 1].isdigit() or sql[start - 1] == "."):
-                start -= 1
-            word = sql[start:k]
-            prev = sql[start - 1] if start > 0 else ""
-            if re.match(r"^(\d+\.?\d*|\.\d+)$", word) and not (
-                prev.isalnum() or prev in '_$"`.'
-            ):
-                # scientific-notation tail (1e-5): the digits after the
-                # sign are not a standalone operand
-                if prev == "-" and start > 1 and sql[start - 2] in "eE":
-                    return None
-                return start
-            # identifier ending in digits (col2) → the chain scanner
-        s = self._left_atom_start(sql, end)
-        if s is None:
-            return None
-        j = s
-        while j > 0 and sql[j - 1].isspace():
-            j -= 1
-        e = j
-        while e > 0 and (sql[e - 1].isalnum() or sql[e - 1] in "_$"):
-            e -= 1
-        if sql[e:j].lower() in ("over", "filter"):
-            return None
-        return s
-
     def _time_wrap_skip_atom(self, a: str) -> bool:
-        """Atoms provably not TIME-typed (or interval-literal tails) skip
-        the wrap marker — native arithmetic, zero probe cost. Covers the
-        hot TPC-H shape ``date '1998-12-01' - interval '90' day``."""
+        """Operands provably not TIME-typed (interval, NULL, boolean and
+        number literals included) skip the wrap — native arithmetic,
+        zero probe cost. Covers the hot TPC-H shape ``date
+        '1998-12-01' - interval '90' day``."""
         a = a.strip()
         low = a.lower().lstrip("(").strip()
         return bool(
             re.match(
                 r"^(interval\b|make_interval\b|make_dt_interval\b|"
-                r"make_ym_interval\b|null\b)",
+                r"make_ym_interval\b|null\b|true\b|false\b)",
                 low,
             )
+            or self._NUMBER_RE.fullmatch(a)
             # DATE/TIMESTAMP literals (the regex does NOT match TIME:
             # 'time' is neither 'date' nor a 'timestamp' prefix-match)
             or self._TEMPORAL_LIT_RE.match(a)
@@ -8861,56 +8784,44 @@ class SqlRewriter:
         matched; ``± INTERVAL lit * n`` keeps its literal (the * owns
         it, and deleting would orphan the multiplier)."""
         pos = 0
-        while True:
-            m = self._search_code(self._IVL_KW_RE, text, pos)
-            if not m:
-                return text
-            j = m.end()
-            if j < len(text) and text[j] == "'":
-                j = self._find_close(text, j) + 1
-            else:
-                m2 = re.match(r"[\d.]+", text[j:])
-                if not m2:
-                    pos = m.end()
-                    continue
-                j += m2.end()
-            while True:
-                m2 = re.match(r"\s+([A-Za-z_]+)", text[j:])
-                if m2 and m2.group(1).lower() in self._IVL_UNIT_WORDS:
-                    j += m2.end()
-                else:
-                    break
-            nx = j
-            while nx < len(text) and text[nx].isspace():
-                nx += 1
-            if nx < len(text) and text[nx] in "*/":
-                pos = j
+        while site := self._interval_site(text, pos):
+            start, iend, op, case_a = site
+            if case_a:
+                text, pos = text[:op] + text[iend:], op
+            else:  # `INTERVAL lit +` at expression start: keep the operand
+                text, pos = text[:start] + text[op + 1 :], start
+        return text
+
+    _IVL_KW_RE = re.compile(r"(?i)\binterval\s+")
+
+    def _interval_site(self, sql: str, pos: int):
+        """The next pending interval site at or after ``pos``, as
+        (interval start, interval end, index of its operator, case A?):
+        case A is ``A ± INTERVAL lit [UNIT …]``, case B is ``INTERVAL
+        lit [UNIT …] + A`` at expression start (interval - time is
+        invalid in both engines; only + commutes). An interval that a
+        following * or / owns is no site: ``A ± INTERVAL x UNIT * n``
+        parses as A ± (I * n) (battery5 regression: DATE + INTERVAL 1
+        DAY * (doc_id % 400))."""
+        while m := self._search_code(self._IVL_KW_RE, sql, pos):
+            iend = self._interval_end(sql, m.end())
+            if iend is None:
+                pos = m.end()
                 continue
-            li = m.start() - 1
-            while li >= 0 and text[li].isspace():
-                li -= 1
-            if li >= 0 and text[li] in "+-":
-                text = text[:li] + text[j:]
-                pos = li
+            pos, nx = iend, self._ws_right(sql, iend)
+            if sql[nx : nx + 1] in ("*", "/"):
                 continue
-            # case-B pending site (`INTERVAL lit + atom` at expression
-            # start — also natively unanalyzable for TIME atoms): drop
-            # the `INTERVAL lit +` prefix, keeping the atom
-            at_start = li < 0 or text[li] in "(,=<>"
-            if not at_start and (text[li].isalnum() or text[li] == "_"):
-                we = li + 1
-                ws = we
-                while ws > 0 and (text[ws - 1].isalnum() or text[ws - 1] == "_"):
-                    ws -= 1
-                at_start = text[ws:we].lower() in self._ATOM_RESERVED
-            ri = j
-            while ri < len(text) and text[ri].isspace():
-                ri += 1
-            if at_start and ri < len(text) and text[ri] == "+":
-                text = text[: m.start()] + text[ri + 1 :]
-                pos = m.start()
-            else:
-                pos = j
+            li = self._ws_left(sql, m.start()) - 1
+            if li >= 0 and sql[li] in "+-":
+                return m.start(), iend, li, True
+            at_start = li < 0 or sql[li] in "(,=<>"
+            if not at_start and (sql[li].isalnum() or sql[li] == "_"):
+                word = sql[self._word_start(sql, li + 1, "_") : li + 1]
+                at_start = word.lower() in self._KEYWORDS
+            ri = self._ws_right(sql, iend)
+            if at_start and sql[ri : ri + 1] == "+":
+                return m.start(), iend, ri, False
+        return None
 
     def _probe_analyzes(self, probe_sql: str) -> bool:
         """Boolean LIMIT-0 analysis probe through the RAW py4j transport.
@@ -9048,99 +8959,32 @@ class SqlRewriter:
             return wrap
         return nat
 
-    _IVL_KW_RE = re.compile(r"(?i)\binterval\s+")
-
     def _rewrite_time_interval_wrap(self, sql: str) -> str:
-        """``A ± INTERVAL`` / ``INTERVAL + A`` sites become two-level
-        uq_poly markers (see _time_wrap_marker) so TIME operands get
-        DuckDB's mod-24h wraparound while every other operand class
-        keeps native Spark arithmetic. Sites whose operand is provably
-        non-TIME (date/timestamp/interval literals, strings, numbers)
-        are skipped textually — no probe cost on the common shapes."""
+        """``A ± INTERVAL`` / ``INTERVAL + A`` sites resolve one at a
+        time (_time_wrap_choose) so TIME operands get DuckDB's mod-24h
+        wraparound while every other operand class keeps native Spark
+        arithmetic. The operand is one _operand_start/_operand_end
+        operand; sites whose operand is provably non-TIME
+        (date/timestamp/interval literals, strings, numbers) are
+        skipped textually — no probe cost on the common shapes."""
         pos = 0
-        while True:
-            m = self._search_code(self._IVL_KW_RE, sql, pos)
-            if not m:
-                return sql
-            j = m.end()
-            if j < len(sql) and sql[j] == "'":
-                j = self._find_close(sql, j) + 1
+        while site := self._interval_site(sql, pos):
+            start, iend, op, case_a = site
+            if case_a:
+                s, e = self._operand_start(sql, op), iend
+                a = None if s is None else sql[s:op]
             else:
-                m2 = re.match(r"[\d.]+", sql[j:])
-                if not m2:
-                    pos = m.end()
-                    continue
-                j += m2.end()
-            while True:
-                m2 = re.match(r"\s+([A-Za-z_]+)", sql[j:])
-                if m2 and m2.group(1).lower() in self._IVL_UNIT_WORDS:
-                    j += m2.end()
-                else:
-                    break
-            iend = j
-            ilit = sql[m.start() : iend]
-            # precedence guard: `A ± INTERVAL x UNIT * n` parses as
-            # A ± (I * n) — a trailing higher-precedence operator owns
-            # the interval literal, so the site stays native (battery5
-            # regression: DATE + INTERVAL 1 DAY * (doc_id % 400))
-            nx = iend
-            while nx < len(sql) and sql[nx].isspace():
-                nx += 1
-            if nx < len(sql) and sql[nx] in "*/":
-                pos = iend
-                continue
-            li = m.start() - 1
-            while li >= 0 and sql[li].isspace():
-                li -= 1
-            if li >= 0 and sql[li] in "+-":
-                # case A: A ± INTERVAL
-                op = sql[li]
-                astart = self._left_atom_start(sql, li)
-                if astart is not None:
-                    a = sql[astart:li].strip()
-                    if not self._time_wrap_skip_atom(a):
-                        repl = self._time_wrap_choose(
-                            sql, astart, iend, a, op, ilit
-                        )
-                        sql = sql[:astart] + repl + sql[iend:]
-                        pos = astart + len(repl)
-                        continue
-                pos = iend
-                continue
-            # case B: INTERVAL + A at expression start (interval - time
-            # is invalid in both engines; only + commutes)
-            at_start = li < 0 or sql[li] in "(,=<>"
-            if not at_start and (sql[li].isalnum() or sql[li] == "_"):
-                we = li + 1
-                ws = we
-                while ws > 0 and (sql[ws - 1].isalnum() or sql[ws - 1] == "_"):
-                    ws -= 1
-                at_start = sql[ws:we].lower() in self._ATOM_RESERVED
-            ri = iend
-            while ri < len(sql) and sql[ri].isspace():
-                ri += 1
-            if at_start and ri < len(sql) and sql[ri] == "+":
-                rend = self._div_rhs_end(sql, ri + 1)
-                if rend is not None:
-                    a = sql[ri + 1 : rend].strip()
-                    # keyword-prefixed literal (TIME '01:00:00'): the
-                    # atom scan stops after the keyword — extend through
-                    # the adjacent string literal
-                    if a.lower() in (
-                        "time", "date", "timestamp", "timestamp_ntz",
-                    ):
-                        k2 = len(sql) - len(sql[rend:].lstrip())
-                        if k2 < len(sql) and sql[k2] == "'":
-                            rend = self._find_close(sql, k2) + 1
-                            a = sql[ri + 1 : rend].strip()
-                    if a and not self._time_wrap_skip_atom(a):
-                        repl = self._time_wrap_choose(
-                            sql, m.start(), rend, a, "+", ilit
-                        )
-                        sql = sql[: m.start()] + repl + sql[rend:]
-                        pos = m.start() + len(repl)
-                        continue
+                s, e = start, self._operand_end(sql, op + 1)
+                a = None if e is None else sql[op + 1 : e]
             pos = iend
+            if a and a.strip() and not self._time_wrap_skip_atom(a):
+                ilit = sql[start:iend]
+                repl = self._time_wrap_choose(
+                    sql, s, e, a.strip(), sql[op] if case_a else "+", ilit
+                )
+                sql = sql[:s] + repl + sql[e:]
+                pos = s + len(repl)
+        return sql
 
     def _rewrite_time_cast(self, sql: str) -> str:
         """Round 8: ``CAST(x AS TIME)`` — native under
@@ -10093,7 +9937,6 @@ class SqlRewriter:
         # expanded bodies already flowed through every pass above.
         sql = self._rewrite_div_by_zero(sql)
         sql = self._rewrite_int_div(sql)
-        sql = self._rewrite_div_by_zero(sql)
         # ASOF after the expression passes: subquery relations must be
         # Spark-valid when their schema is probed (LIMIT 0)
         sql = self._rewrite_asof_join(sql)
