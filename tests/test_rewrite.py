@@ -4457,3 +4457,53 @@ def test_floordiv_by_exists_is_an_error(spark, rw):
         duckdb.sql(sql)
     with pytest.raises(AnalysisException):
         spark.sql(rw.rewrite(sql))
+
+
+def test_generate_series_is_empty_when_the_step_moves_away(spark, rw):
+    """``generate_series`` (inclusive stop) is empty when its step does
+    not move toward the stop and NULL when an argument is, like DuckDB's
+    and through range()'s (exclusive stop) guard; Spark's sequence()
+    would count down. (As a table function DuckDB rejects such constant
+    bounds at bind time; served, it yields no rows.)"""
+    import duckdb
+
+    for sql in [
+        "SELECT generate_series(3, 1) AS v",
+        "SELECT generate_series(1, 3, -1) AS v",
+        "SELECT generate_series(3, 1, -1) AS v",
+        "SELECT generate_series(1, 3) AS v",
+        "SELECT generate_series(1, 7, 3) AS v",
+        "SELECT generate_series(2, 2) AS v",
+        "SELECT generate_series(4) AS v",
+        "SELECT generate_series(1, 3, 0) AS v",
+        "SELECT generate_series(1, NULL) AS v",
+        "SELECT range(1, NULL) AS v",
+        "SELECT range(3, 1) AS v",
+        "SELECT [x FOR x IN generate_series(1, len('') - 1)] AS v",
+        "SELECT sum(generate_series) AS v FROM generate_series(6, 2, -2)",
+        "SELECT sum(len(generate_series(n, 2))) AS v FROM (VALUES (3), (1)) t(n)",
+    ]:
+        got = spark.sql(rw.rewrite(sql)).collect()[0].v
+        assert got == duckdb.sql(sql).fetchall()[0][0], sql
+
+
+def test_repetition_stats_text_skips_documents_without_bigrams(spark):
+    """The served ``text_repetition_stats`` text over an empty and a
+    one-token document: they have no bigram, so DuckDB returns no row
+    for them (``generate_series(1, 0)`` is empty)."""
+    import duckdb
+
+    from uquery_rs_spark import queries as Q
+
+    from .conftest import served
+
+    Q.load_all()
+    sql = Q.REGISTRY["text_repetition_stats"].oracle
+    rows = [(1, " ".join(["spam ham"] * 20)), (3, ""), (4, "solo")]
+    con = duckdb.connect()
+    con.sql("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = [(r.doc_id, float(r.top_bigram_frac)) for r in served(spark, sql, documents=docs)]
+    assert got == [(d, float(f)) for d, f in con.sql(sql).fetchall()]
+    assert [d for d, _ in got] == [1]

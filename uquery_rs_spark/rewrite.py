@@ -527,6 +527,7 @@ class SqlRewriter:
 
     _STRUCT_PACK_RE = re.compile(r"(?i)\bstruct_pack\s*\(")
     _SERIES_FROM_RE = re.compile(r"(?i)\b(from|join)\s+generate_series\s*\(")
+    _SERIES_RE = re.compile(r"(?i)\bgenerate_series\s*\(")
 
     def _rewrite_struct_pack(self, sql: str) -> str:
         """DuckDB ``struct_pack(k := v, …)`` → Spark
@@ -543,38 +544,36 @@ class SqlRewriter:
         return self._map_calls(self._STRUCT_PACK_RE, translate, sql)
 
     def _rewrite_generate_series(self, sql: str) -> str:
-        """``FROM/JOIN generate_series(a, b[, s])`` (table function, one
-        row per value, column ``generate_series``) → a lateral-free
-        exploded subquery; scalar ``generate_series(...)`` (returns a
-        LIST, inclusive bounds — exactly Spark's sequence()) is handled
-        by a plain rename."""
-        sql = self._map_calls(
-            self._SERIES_FROM_RE,
-            lambda m, inner: (
-                f"{m.group(1)} (SELECT explode(sequence({inner})) AS generate_series)"
-            ),
-            sql,
-            raw=True,
-        )
-        sql = self._sub_code_fn(
-            re.compile(r"(?i)\bgenerate_series\s*\("), lambda _m: "sequence(", sql
-        )
-        # batch 22: an INTERVAL step makes DuckDB's result TIMESTAMP even
-        # for DATE bounds; Spark's sequence keeps DATE elements — cast
-        # the bounds so the element type (and its string form) matches
+        """``generate_series(a, b[, s])`` is DuckDB's range() with an
+        inclusive stop: the same direction guard (_series_sql), so it is
+        empty when the step does not move toward the stop
+        (generate_series(3, 1) is []) where Spark's sequence() counts
+        down. In FROM/JOIN position (a table function, one row per
+        value, column ``generate_series``) it becomes an exploded
+        subquery. An INTERVAL step makes DuckDB's result TIMESTAMP even
+        for DATE bounds; Spark's sequence keeps DATE elements, so the
+        bounds are cast (element type and string form match)."""
 
-        def translate(m, args):
-            if len(args) == 3 and re.match(
-                r"(?i)^\s*(interval\b|make_interval|make_dt_interval|make_ym_interval)",
-                args[2],
+        def series(args):
+            if len(args) == 1:
+                args = ["0", *args]
+            if len(args) == 2:
+                args = [*args, "1"]
+            if len(args) != 3:
+                return None
+            a, b, s = args
+            if re.match(
+                r"(?i)^\s*(interval\b|make_interval|make_dt_interval|make_ym_interval)", s
             ):
-                return (
-                    f"sequence(CAST(({args[0]}) AS TIMESTAMP), "
-                    f"CAST(({args[1]}) AS TIMESTAMP), {args[2]})"
-                )
-            return None
+                return f"sequence(CAST(({a}) AS TIMESTAMP), CAST(({b}) AS TIMESTAMP), {s})"
+            return self._series_sql(a, b, s, True)
 
-        return self._map_calls(re.compile(r"(?i)\bsequence\s*\("), translate, sql)
+        def table(m, args):
+            seq = series(args)
+            return seq and f"{m.group(1)} (SELECT explode({seq}) AS generate_series)"
+
+        sql = self._map_calls(self._SERIES_FROM_RE, table, sql)
+        return self._map_calls(self._SERIES_RE, lambda m, args: series(args), sql)
 
     def _rewrite_function_names(self, sql: str) -> str:
         """Rename DuckDB functions to their Spark equivalents, skipping
@@ -932,7 +931,6 @@ class SqlRewriter:
         aggregate clauses that follow: OVER (spec)/OVER name, FILTER
         (…), WITHIN GROUP (…), IGNORE/RESPECT NULLS; None for a clause
         without its body."""
-        n = len(sql)
         while m := self._CLAUSE_RE.match(sql, self._ws_right(sql, end)):
             kw, q = m.group(1).lower(), self._ws_right(sql, m.end(1))
             if kw.startswith(("ignore", "respect")):
@@ -942,10 +940,8 @@ class SqlRewriter:
                 if close == -1:
                     return None
                 end = close + 1
-            elif kw == "over" and q < n and (sql[q].isalpha() or sql[q] == "_"):
-                end = q
-                while end < n and (sql[end].isalnum() or sql[end] == "_"):
-                    end += 1
+            elif kw == "over" and (name := self._WORD_RE.match(sql, q)):
+                end = name.end()  # a named window
             else:
                 return None
         return end
@@ -1690,17 +1686,24 @@ class SqlRewriter:
         return self._map_calls(self._LIST_SLICE_RE, translate, sql)
 
     @staticmethod
-    def _range_seq_sql(a: str, b: str, s: str) -> str:
-        """DuckDB range(): start inclusive, stop EXCLUSIVE, empty when
-        the step doesn't move toward stop — vs Spark sequence()'s
-        inclusive stop and auto-negative step. Integer semantics."""
-        empty = "slice(array(CAST(0 AS BIGINT)), 1, 0)"
+    def _series_sql(a: str, b: str, s: str, inclusive: bool) -> str:
+        """DuckDB range() (stop EXCLUSIVE) and generate_series() (stop
+        inclusive): start inclusive, empty when the step doesn't move
+        toward stop, NULL when an argument is — vs Spark sequence()'s
+        inclusive stop and auto-negative step. The elements take the
+        arguments' type. Each argument is evaluated once (bound in a
+        one-element transform), so the ones that need a probe to
+        translate (len(), //, subscripts) are probed once."""
+        up, down = ("<=", ">=") if inclusive else ("<", ">")
+        stop = ("", "") if inclusive else (" - 1", " + 1")
         return (
-            f"CASE WHEN ({s}) > 0 AND ({a}) < ({b}) "
-            f"THEN sequence(CAST(({a}) AS BIGINT), CAST(({b}) AS BIGINT) - 1, CAST(({s}) AS BIGINT)) "
-            f"WHEN ({s}) < 0 AND ({a}) > ({b}) "
-            f"THEN sequence(CAST(({a}) AS BIGINT), CAST(({b}) AS BIGINT) + 1, CAST(({s}) AS BIGINT)) "
-            f"ELSE {empty} END"
+            f"element_at(transform(array(named_struct('a', {a}, 'b', {b}, 's', {s})), "
+            f"uq_sr -> CASE WHEN uq_sr.s > 0 AND uq_sr.a {up} uq_sr.b "
+            f"THEN sequence(uq_sr.a, uq_sr.b{stop[0]}, uq_sr.s) "
+            f"WHEN uq_sr.s < 0 AND uq_sr.a {down} uq_sr.b "
+            f"THEN sequence(uq_sr.a, uq_sr.b{stop[1]}, uq_sr.s) "
+            f"WHEN uq_sr.a IS NULL OR uq_sr.b IS NULL OR uq_sr.s IS NULL THEN NULL "
+            f"ELSE array() END), 1)"
         )
 
     def _rewrite_range_calls(self, sql: str) -> str:
@@ -1730,7 +1733,7 @@ class SqlRewriter:
                     f"uq_rg -> uq_rg <> {bt})"
                 )
             else:
-                seq = self._range_seq_sql(a, b, s)
+                seq = self._series_sql(*(f"CAST(({x}) AS BIGINT)" for x in (a, b, s)), False)
             if re.search(r"(?is)\b(from|join)\s*$", m.string[: m.start()]):
                 return f"(SELECT explode({seq}) AS range)"
             return seq
