@@ -7294,7 +7294,8 @@ class SqlRewriter:
         """DuckDB ``a // b`` (truncating integer division — same semantics
         as Spark's ``div``, verified incl. negatives) → ``a div b``.
         Reached by the ``//`` the ÷0 pass leaves: a divisor it cannot
-        scan as an operand, such as ``~2``, or a bare NULL dividend.
+        scan as an operand, such as ``- 2`` (a sign apart from its
+        operand) or ``~2``, or a bare NULL dividend.
         String literals are skipped so ``'https://…'`` survives."""
         return cls._sub_code_fn(re.compile("//"), lambda _m: " div ", sql)
 
@@ -8980,7 +8981,7 @@ class SqlRewriter:
                 s, e = start, self._operand_end(sql, op + 1)
                 a = None if e is None else sql[op + 1 : e]
             pos = iend
-            if a and a.strip() and not self._time_wrap_skip_atom(a):
+            if a and not self._time_wrap_skip_atom(a):
                 ilit = sql[start:iend]
                 repl = self._time_wrap_choose(
                     sql, s, e, a.strip(), sql[op] if case_a else "+", ilit
