@@ -4459,6 +4459,33 @@ def test_floordiv_by_exists_is_an_error(spark, rw):
         spark.sql(rw.rewrite(sql))
 
 
+_REGEX_MATCH_CASES = {
+    "partial_is_no_match": "SELECT 'abc' ~ 'b' AS v",
+    "negated_partial": "SELECT 'abc' !~ 'b' AS v",
+    "full_match": "SELECT 'abc' ~ 'a.c' AS v",
+    "alternation_is_anchored_whole": "SELECT 'abc' ~ 'a|abc' AS v",
+    "column_pattern": "SELECT s ~ p AS v FROM (VALUES ('abc', 'b'), ('abc', 'a.*'), ('x', NULL)) t(s, p)",
+    "concat_pattern_binds_looser": "SELECT 'ab' ~ 'a' || 'b' AS v",
+    "concat_subject": "SELECT 'a' || 'b' ~ 'ab' AS v",
+    "then_compared": "SELECT 'abc' ~ 'b' = false AS v",
+    "under_not": "SELECT NOT 'abc' ~ 'b' AS v",
+    "in_where": "SELECT count(*) AS v FROM (VALUES ('abc'), ('b'), ('xbx')) t(s) WHERE s ~ 'b'",
+    "null_pattern": "SELECT 'x' ~ NULL AS v",
+}
+
+
+@pytest.mark.parametrize("case", sorted(_REGEX_MATCH_CASES))
+def test_regex_match_operator_is_a_full_match(spark, rw, case):
+    """``~``/``!~`` are DuckDB's regexp_full_match: the whole string must
+    match, where Spark's RLIKE finds the pattern anywhere. Every
+    statement is served and compared with DuckDB."""
+    import duckdb
+
+    sql = _REGEX_MATCH_CASES[case]
+    want = duckdb.sql(sql).fetchall()
+    assert [tuple(r) for r in spark.sql(rw.rewrite(sql)).collect()] == want, sql
+
+
 def test_generate_series_is_empty_when_the_step_moves_away(spark, rw):
     """``generate_series`` (inclusive stop) is empty when its step does
     not move toward the stop and NULL when an argument is, like DuckDB's

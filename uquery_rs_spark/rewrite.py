@@ -5277,12 +5277,9 @@ class SqlRewriter:
     _LIKE_OPS = {
         "!~~*": " NOT ILIKE ", "~~*": " ILIKE ",
         "!~~": " NOT LIKE ", "~~": " LIKE ",
-        "!~": " NOT RLIKE ",
     }
-    # longest first, then a bare infix ~
-    _LIKE_OP_RE = re.compile(
-        "|".join(map(re.escape, sorted(_LIKE_OPS, key=len, reverse=True))) + "|~"
-    )
+    _LIKE_OP_RE = re.compile("|".join(map(re.escape, sorted(_LIKE_OPS, key=len, reverse=True))))
+    _REGEX_OP_RE = re.compile("!?~")
     # (operator, function, the binary operators its operands extend
     # through): the metric operators bind looser than arithmetic
     _ARITH_OPS = ("//", "**", "+", "-", "*", "/", "%", "^")
@@ -5299,8 +5296,15 @@ class SqlRewriter:
         - ``^`` and ``**`` are POWER in DuckDB; Spark's ``^`` is XOR —
           2 ^ 3 is 8 vs 1, a silent wrong answer → power(a, b). Runs
           BEFORE _rewrite_divide_xor, whose xor() output ^ must stay.
-        - ``~``/``!~`` are regexp match → [NOT] RLIKE (infix only — a
-          prefix ~ is bitwise NOT in both engines and left alone);
+        - ``~``/``!~`` are a full regexp match (regexp_full_match), not
+          RLIKE's partial one → ``(a [NOT] RLIKE '^(?:p)$')``; a pattern
+          that is no literal is anchored with ``||``, which keeps a NULL
+          pattern NULL (the concat pass gives ``concat`` DuckDB's
+          NULL-skipping meaning). Infix
+          only — a prefix ~ is bitwise NOT in both engines and left
+          alone. Like DuckDB's other operators they bind looser than
+          arithmetic and as tightly as ``||`` (left-associative), and
+          tighter than comparisons, hence the parentheses;
           ``~~``/``~~*``/negations → LIKE/ILIKE keywords.
         - ``<->`` / ``<=>`` are array euclidean distance / cosine
           SIMILARITY → the list metric translations of batch 11.
@@ -5311,15 +5315,27 @@ class SqlRewriter:
         power is left-associative, and the metric operators take whole
         arithmetic operands.
         """
-        # keyword operators first (plain splice, no operand parsing);
-        # longest-first, including bare infix ~
-
-        def like_op(m):
-            if m.group() != "~":
-                return self._LIKE_OPS[m.group()]
-            return " RLIKE " if self._chain_start(sql, m.start()) is not None else "~"
-
-        sql = self._sub_code_fn(self._LIKE_OP_RE, like_op, sql)
+        # keyword operators first (plain splice, no operand parsing)
+        sql = self._sub_code_fn(self._LIKE_OP_RE, lambda m: self._LIKE_OPS[m.group()], sql)
+        pos = 0
+        while m := self._search_code(self._REGEX_OP_RE, sql, pos):
+            ls = self._operand_start(sql, m.start(), ("||",) + self._ARITH_OPS)
+            if ls is None:  # prefix ~
+                pos = m.end()
+                continue
+            re_ = self._operand_end(sql, m.end(), self._ARITH_OPS)
+            if re_ is None:
+                raise UQueryError.sql_error(
+                    f"cannot parse operands of '{m.group()}' (use regexp_full_match(a, b))"
+                )
+            right = sql[m.end() : re_].strip()
+            pat = self._lit_parse(right)
+            anchored = (
+                f"('^(?:' || ({right}) || ')$')" if pat is None else self._lit_emit(f"^(?:{pat})$")
+            )
+            neg = "NOT " if m.group() == "!~" else ""
+            sql = sql[:ls] + f"({sql[ls : m.start()].strip()} {neg}RLIKE {anchored})" + sql[re_:]
+            pos = ls
         # function-style operators: need both operands
         for op, fn, ops in self._FN_OPS:
             op_re = re.compile(re.escape(op))
