@@ -12,6 +12,7 @@ import json
 import os
 import signal
 import socket
+import statistics
 import subprocess
 import sys
 import threading
@@ -23,6 +24,7 @@ import pyarrow as pa
 import pytest
 
 from uquery_rs_spark.engine import Engine
+from uquery_rs_spark.errors import PROBLEM_JSON
 from uquery_rs_spark.rewrite import SqlRewriter
 from uquery_rs_spark.web.app import ServiceConfig, make_server
 
@@ -367,15 +369,77 @@ def test_csv_export_streams(base_url):
     assert len(body.decode().splitlines()) == 101
 
 
-def test_mid_stream_failure_is_not_a_complete_200(base_url):
-    """An error after the 200 is committed cuts the chunked body short
-    instead of ending it cleanly with some of the rows."""
-    sql = (
-        "SELECT CASE WHEN id >= 150000 THEN CAST(raise_error('boom') AS BIGINT) "
-        "ELSE id END AS v FROM range(0, 200000, 1, 4)"
+def _fails_in_last_partition(parts: int) -> str:
+    """1,000 rows in each of `parts` range partitions; only the last
+    partition raises."""
+    return (
+        f"SELECT CASE WHEN id >= {1000 * (parts - 1)} THEN CAST(raise_error('boom') AS BIGINT) "
+        f"ELSE id END AS v FROM range(0, {1000 * parts}, 1, {parts})"
     )
+
+
+def test_mid_stream_failure_is_not_a_complete_200(spark, base_url):
+    """An error after the 200 is committed cuts the chunked body short
+    instead of ending it cleanly with some of the rows. The result is
+    served in waves of defaultParallelism partitions; the error is in the
+    last of 2·P + 1, so the first wave has been sent when it fails."""
+    sql = _fails_in_last_partition(2 * spark.sparkContext.defaultParallelism + 1)
     with pytest.raises(http.client.IncompleteRead):
         post(base_url, sql, accept="application/jsonl")
+
+
+def test_error_inside_the_first_wave_is_a_400(spark, base_url):
+    """An error in any partition of the first wave comes before the first
+    batch, so the client gets a problem+json 400 naming the Java cause,
+    as the reference answers errors before the first batch
+    (routers.rs:166-173)."""
+    sql = _fails_in_last_partition(spark.sparkContext.defaultParallelism)
+    status, headers, body = post(base_url, sql, accept="application/jsonl")
+    assert status == 400 and headers["Content-Type"] == PROBLEM_JSON
+    assert "boom" in json.loads(body)["detail"]
+
+
+def test_one_spark_job_per_wave_in_partition_order(spark):
+    """engine.execute() runs one Spark job per wave of at most
+    defaultParallelism partitions (P), and serves the rows in partition
+    order: a 4-partition range is 1 job, 2·P + 1 partitions are 3."""
+    from uquery_rs_spark.writers import writer_for_format
+
+    sc = spark.sparkContext
+    eng = Engine(spark, pool_size=2)
+    parts = 2 * sc.defaultParallelism + 1
+    assert sc.defaultParallelism >= 4
+    for sql, n, jobs in (
+        ("SELECT id FROM range(0, 10, 1, 4)", 10, 1),
+        (f"SELECT id FROM range(0, {10 * parts}, 1, {parts})", 10 * parts, 3),
+    ):
+        prepared = eng.prepare(sql)
+        sink = io.BytesIO()
+        prepared.execute(writer_for_format("jsonl", sink))
+        assert [json.loads(line)["id"] for line in sink.getvalue().splitlines()] == list(range(n))
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup(prepared.job_group)) == jobs, sql
+
+
+def test_no_delayed_ack_stall_between_headers_and_body(base_url):
+    """On one keep-alive connection the body of `SELECT 1` follows its
+    headers at once. With Nagle's algorithm on, each small body chunk
+    after the headers waited for the client's delayed ACK (~40 ms)."""
+    port = int(base_url.rsplit(":", 1)[1])
+    conn = http.client.HTTPConnection("127.0.0.1", port, timeout=30)
+    headers = {"Content-Type": "text/plain", "Accept": "application/json"}
+    gaps = []
+    try:
+        for _ in range(20):
+            conn.request("POST", "/", body=b"SELECT 1 AS n", headers=headers)
+            resp = conn.getresponse()
+            t0 = time.perf_counter()
+            body = resp.read()
+            gaps.append(time.perf_counter() - t0)
+            assert resp.status == 200 and json.loads(body) == [{"n": 1}]
+    finally:
+        conn.close()
+    assert statistics.median(gaps) < 0.010, gaps
 
 
 def test_sigterm_stops_server():
@@ -522,8 +586,9 @@ def test_execute_bytes_match_reference_all_formats(spark):
     equal a reference built from the collected result — across doubles,
     dates, timestamps, NULLs, unicode, quotes, several partitions, one
     partition of several JVM batches, nested and decimal types, plus an
-    empty and a duplicate-name result. An ORDER BY over 4 range
-    partitions is compared decoded, in row order."""
+    empty and a duplicate-name result. An ORDER BY over more range
+    partitions than one wave (2·defaultParallelism + 1) is compared
+    decoded, in row order."""
     from uquery_rs_spark.writers import writer_for_format
 
     eng = Engine(spark, pool_size=2)
@@ -552,15 +617,16 @@ def test_execute_bytes_match_reference_all_formats(spark):
             assert sink.getvalue() == _reference_bytes(table, fmt), (sql, fmt)
 
     ordered = "SELECT id, CAST(id AS STRING) AS s FROM range(0, 100000, 1, 3) ORDER BY id DESC"
+    parts = 2 * spark.sparkContext.defaultParallelism + 1
     confs = {
-        "spark.sql.shuffle.partitions": "4",
+        "spark.sql.shuffle.partitions": str(parts),
         "spark.sql.adaptive.coalescePartitions.enabled": "false",
     }
     saved = {k: spark.conf.get(k) for k in confs}
     try:
         for k, v in confs.items():
             spark.conf.set(k, v)
-        assert spark.sql(ordered).rdd.getNumPartitions() == 4
+        assert spark.sql(ordered).rdd.getNumPartitions() == parts
         table = spark.sql(ordered).toArrow()
         assert table.column("id")[0].as_py() == 99999
         for fmt in ("json", "jsonl", "csv", "arrow"):

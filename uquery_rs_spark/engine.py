@@ -15,12 +15,15 @@ based connection release becomes a context-managed permit.
 Streaming: the reference pulls Arrow batches one at a time with bounded
 memory (duckdb.rs:91-93) and hands each to the consumer, which encodes it.
 Here execute() serves the JVM's own Arrow batches (Dataset.toArrowBatchRdd)
-through PythonRDD.toLocalIteratorAndServe: one Spark job per result
-partition, taken in partition order (so a range-partitioned ORDER BY
-stays sorted), with the next partition prefetched. The JVM driver holds
-the partition being served and the prefetched one; Python decodes one IPC
-frame at a time and passes the RecordBatch to the consumer. The stream
-starts no Python worker.
+in waves: a wave is at most defaultParallelism consecutive result
+partitions (one round of tasks), collected by one Spark job
+(PythonRDD.runJob) and served as one buffered socket stream in partition
+order, so a range-partitioned ORDER BY stays sorted and N partitions run
+ceil(N / defaultParallelism) jobs. The JVM driver holds one wave, so
+spark.driver.maxResultSize applies per wave; Python decodes one IPC frame
+at a time and passes the RecordBatch to the consumer. An error inside the
+first wave comes before any batch (a 400). The stream starts no Python
+worker.
 Cancellation: every execution runs in a job group so a timeout or client
 disconnect can cancelJobGroup mid-scan.
 """
@@ -79,8 +82,11 @@ def _arrow_schema(df: DataFrame) -> pa.Schema:
 
 
 def _arrow_batches(df: DataFrame, schema: pa.Schema) -> Iterator[pa.RecordBatch]:
-    """The result's non-empty Arrow batches as the JVM encoded them, one
-    partition at a time in partition order, each conformed to `schema`.
+    """The result's non-empty Arrow batches as the JVM encoded them, in
+    partition order, each conformed to `schema`. Each wave of at most
+    defaultParallelism partitions is one Spark job, whose frames the JVM
+    driver holds (spark.driver.maxResultSize bounds a wave) and writes to
+    one buffered socket stream; an error in the first wave raises first.
 
     Every served frame is one IPC record-batch message without a schema,
     so it is read with the schema the JVM wrote: the announced one, with
@@ -89,16 +95,19 @@ def _arrow_batches(df: DataFrame, schema: pa.Schema) -> Iterator[pa.RecordBatch]
     are UTC instants either way, so they read as the announced UTC type."""
     from pyspark.serializers import NoOpSerializer
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.util import _local_iterator_from_socket
+    from pyspark.util import _load_from_socket
 
     session = df.sparkSession
     wire = to_arrow_schema(df.schema, prefers_large_types=session._jconf.arrowUseLargeVarTypes())
-    jvm = session.sparkContext._jvm
-    sock = jvm.PythonRDD.toLocalIteratorAndServe(df._jdf.toArrowBatchRdd(), True)
-    for frame in _local_iterator_from_socket(sock, NoOpSerializer()):
-        batch = pa.ipc.read_record_batch(pa.py_buffer(frame), wire)
-        if batch.num_rows:
-            yield batch if wire.equals(schema) else batch.cast(schema)
+    sc = session.sparkContext
+    rdd = df._jdf.toArrowBatchRdd().toJavaRDD()
+    parts, wave = rdd.getNumPartitions(), sc.defaultParallelism
+    for lo in range(0, parts, wave):
+        sock = sc._jvm.PythonRDD.runJob(sc._jsc.sc(), rdd, list(range(lo, min(lo + wave, parts))))
+        for frame in _load_from_socket(sock, NoOpSerializer()):
+            batch = pa.ipc.read_record_batch(pa.py_buffer(frame), wire)
+            if batch.num_rows:
+                yield batch if wire.equals(schema) else batch.cast(schema)
 
 
 class PreparedQuery:

@@ -99,6 +99,7 @@ class ServiceConfig:
 
 class UQueryHandler(BaseHTTPRequestHandler):
     protocol_version = "HTTP/1.1"
+    disable_nagle_algorithm = True  # TCP_NODELAY: no body chunk waits for the client's delayed ACK
     config: ServiceConfig  # injected by make_server
 
     # -- plumbing ---------------------------------------------------------
