@@ -5300,12 +5300,11 @@ class SqlRewriter:
           RLIKE's partial one → ``(a [NOT] RLIKE '^(?:p)$')``; a pattern
           that is no literal is anchored with ``||``, which keeps a NULL
           pattern NULL (the concat pass gives ``concat`` DuckDB's
-          NULL-skipping meaning). Infix
-          only — a prefix ~ is bitwise NOT in both engines and left
-          alone. Like DuckDB's other operators they bind looser than
-          arithmetic and as tightly as ``||`` (left-associative), and
-          tighter than comparisons, hence the parentheses;
-          ``~~``/``~~*``/negations → LIKE/ILIKE keywords.
+          NULL-skipping meaning). Infix only — a prefix ~ is bitwise NOT
+          in both engines and left alone. Like DuckDB's other operators
+          they bind looser than arithmetic, as tightly as ``||``
+          (left-associative) and tighter than comparisons, hence the
+          parentheses. ``~~``/``~~*``/negations → LIKE/ILIKE keywords.
         - ``<->`` / ``<=>`` are array euclidean distance / cosine
           SIMILARITY → the list metric translations of batch 11.
           (Spark's own null-safe ``<=>`` is not part of the DuckDB
