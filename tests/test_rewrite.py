@@ -4422,6 +4422,13 @@ _OPERAND_CASES = {
     "window_power": "SELECT sum(x) OVER () ^ 2 AS v FROM (SELECT 3 AS x)",
     "power_of_window": "SELECT 2 ^ sum(x) OVER () AS v FROM (SELECT 3 AS x)",
     "filter_floordiv": "SELECT count(*) FILTER (WHERE x > 1) // 2 AS v FROM (SELECT 7 AS x)",
+    # a :: cast is part of the operand on either side
+    "cast_power": "SELECT x::DOUBLE ^ 2 AS v FROM (SELECT '3' AS x)",
+    "spaced_cast_power": "SELECT x :: DOUBLE ^ 2 AS v FROM (SELECT '3' AS x)",
+    "decimal_cast_starstar": "SELECT x::DECIMAL(4,1) ** 2 AS v FROM (SELECT '1.5' AS x)",
+    "power_of_cast": "SELECT 2 ^ x::DOUBLE AS v FROM (SELECT '3' AS x)",
+    "cast_floordiv": "SELECT x::INT // 2 AS v FROM (SELECT '7' AS x)",
+    "floordiv_by_subscript_cast": "SELECT 7 // l[1]::INT AS v FROM (SELECT ['2'] AS l)",
     # a typed literal is one operand; a keyword is none
     "typed_literal_cast": "SELECT DATE '2024-01-31'::VARCHAR AS v",
     "prefix_bitwise_not": "SELECT ~5 AS v",
@@ -4471,14 +4478,27 @@ _REGEX_MATCH_CASES = {
     "under_not": "SELECT NOT 'abc' ~ 'b' AS v",
     "in_where": "SELECT count(*) AS v FROM (VALUES ('abc'), ('b'), ('xbx')) t(s) WHERE s ~ 'b'",
     "null_pattern": "SELECT 'x' ~ NULL AS v",
+    # a :: cast binds tighter than ~ on either side
+    "cast_subject": "SELECT id::VARCHAR ~ '[0-9]+' AS v FROM (VALUES (1), (23)) t(id)",
+    "cast_literal_pattern": "SELECT 'abc' ~ 'a.c'::VARCHAR AS v",
+    "cast_column_pattern": "SELECT s ~ p::VARCHAR AS v FROM (VALUES ('abc', 'a.c'), ('abc', 'b')) t(s, p)",
+    "chained_cast_subject": "SELECT x::DECIMAL(10,2)::VARCHAR ~ '3\\.00' AS v FROM (VALUES (3)) t(x)",
+    # $ before a final newline is no end of the string in RE2
+    "trailing_newline": "SELECT ('ab' || chr(10)) ~ 'ab' AS v",
+    "escaped_class": "SELECT '123' ~ '\\d+' AS v",
+    "fn_trailing_newline": "SELECT regexp_full_match('ab' || chr(10), 'ab') AS v",
+    "fn_escaped_class": "SELECT regexp_full_match('123', '\\d+') AS v",
+    "fn_column_pattern": "SELECT regexp_full_match(s, p) AS v "
+    "FROM (VALUES ('abc', 'b'), ('abc', 'a.*'), ('x', NULL)) t(s, p)",
 }
 
 
 @pytest.mark.parametrize("case", sorted(_REGEX_MATCH_CASES))
 def test_regex_match_operator_is_a_full_match(spark, rw, case):
     """``~``/``!~`` are DuckDB's regexp_full_match: the whole string must
-    match, where Spark's RLIKE finds the pattern anywhere. Every
-    statement is served and compared with DuckDB."""
+    match, where Spark's RLIKE finds the pattern anywhere, and only up
+    to its very end (Java's ``$`` also matches before a final newline).
+    Every statement is served and compared with DuckDB."""
     import duckdb
 
     sql = _REGEX_MATCH_CASES[case]

@@ -967,8 +967,9 @@ class SqlRewriter:
         return q if sql[q - 1 : q] == ")" else None
 
     def _chain_start(self, sql: str, end: int):
-        """Start of the primary and its postfix chain ending just before
-        ``end`` (whitespace skipped); None if no operand ends there."""
+        """Start of the primary and its postfix chain (``::`` casts
+        included) ending just before ``end`` (whitespace skipped); None
+        if no operand ends there."""
         i = self._ws_left(sql, end)
         while i > 0:
             c = sql[i - 1]
@@ -1023,6 +1024,10 @@ class SqlRewriter:
                 i = w
             else:
                 return None
+            p = self._ws_left(sql, i)
+            if sql[p - 2 : p] == "::":  # a cast: the type's operand heads the chain
+                i = self._ws_left(sql, p - 2)
+                continue
             if sql[i - 1 : i] != ".":
                 return i
             if not self._ends_operand(sql, i - 1) or sql[i - 2 : i - 1].isspace():
@@ -1031,32 +1036,35 @@ class SqlRewriter:
         return None
 
     def _chain_end(self, sql: str, start: int):
-        """End of the primary and its postfix chain starting at
-        ``start`` (whitespace skipped); None if no operand starts
-        there."""
+        """End of the primary and its postfix chain (``::`` casts
+        included) starting at ``start`` (whitespace skipped); None if no
+        operand starts there."""
         j = self._ws_right(sql, start)
-        if m := self._TYPED_LIT_RE.match(sql, j):
-            return self._find_close(sql, m.end() - 1) + 1
         if m := self._IVL_HEAD_RE.match(sql, j):
             return self._interval_end(sql, m.end())
         c, name = sql[j : j + 1], False
-        if c in ("'", "(", "["):
+        if m := self._TYPED_LIT_RE.match(sql, j):
+            j = self._find_close(sql, m.end() - 1) + 1
+        elif c in ("'", "(", "["):
             j = self._find_close(sql, j)
             if j < 0:
                 return None
             j += 1
         elif c.isdigit() or (c == "." and sql[j + 1 : j + 2].isdigit()):
-            return self._NUMBER_RE.match(sql, j).end()
+            j = self._NUMBER_RE.match(sql, j).end()
         elif c in ('"', "`"):
             j, name = self._find_close(sql, j) + 1, True
         elif c.isalpha() or c in ("_", "$"):
             e = self._WORD_RE.match(sql, j).end()
             word = sql[j:e].lower()
             if word == "case":
-                return self._case_end(sql, j)
-            if word in self._KEYWORDS:
+                j = self._case_end(sql, j)
+                if j is None:
+                    return None
+            elif word in self._KEYWORDS:
                 return None
-            j, name = e, True
+            else:
+                j, name = e, True
         else:
             return None
         while True:  # postfix: calls with their clauses, subscripts, .field
@@ -1077,6 +1085,8 @@ class SqlRewriter:
                 else:
                     j = self._WORD_RE.match(sql, j + 1).end()
                 name = True
+            elif m := self._COLON_CAST_RE.match(sql, k):
+                j, name = m.end(), False
             else:
                 return j
 
@@ -5296,12 +5306,11 @@ class SqlRewriter:
         - ``^`` and ``**`` are POWER in DuckDB; Spark's ``^`` is XOR —
           2 ^ 3 is 8 vs 1, a silent wrong answer → power(a, b). Runs
           BEFORE _rewrite_divide_xor, whose xor() output ^ must stay.
-        - ``~``/``!~`` are a full regexp match (regexp_full_match), not
-          RLIKE's partial one → ``(a [NOT] RLIKE '^(?:p)$')``; a pattern
-          that is no literal is anchored with ``||``, which keeps a NULL
-          pattern NULL (the concat pass gives ``concat`` DuckDB's
-          NULL-skipping meaning). Infix only — a prefix ~ is bitwise NOT
-          in both engines and left alone. Like DuckDB's other operators
+        - ``~``/``!~`` are a full regexp match, not RLIKE's partial one
+          → ``([NOT] regexp_full_match(a, p))``, which
+          _rewrite_string_list_corners anchors. Infix only — a prefix ~
+          is bitwise NOT in both engines and left alone. Like DuckDB's
+          other operators
           they bind looser than arithmetic, as tightly as ``||``
           (left-associative) and tighter than comparisons, hence the
           parentheses. ``~~``/``~~*``/negations → LIKE/ILIKE keywords.
@@ -5327,13 +5336,9 @@ class SqlRewriter:
                 raise UQueryError.sql_error(
                     f"cannot parse operands of '{m.group()}' (use regexp_full_match(a, b))"
                 )
-            right = sql[m.end() : re_].strip()
-            pat = self._lit_parse(right)
-            anchored = (
-                f"('^(?:' || ({right}) || ')$')" if pat is None else self._lit_emit(f"^(?:{pat})$")
-            )
+            args = f"{sql[ls : m.start()].strip()}, {sql[m.end() : re_].strip()}"
             neg = "NOT " if m.group() == "!~" else ""
-            sql = sql[:ls] + f"({sql[ls : m.start()].strip()} {neg}RLIKE {anchored})" + sql[re_:]
+            sql = f"{sql[:ls]}({neg}regexp_full_match({args})){sql[re_:]}"
             pos = ls
         # function-style operators: need both operands
         for op, fn, ops in self._FN_OPS:
@@ -5831,7 +5836,11 @@ class SqlRewriter:
           ``list_inner_product`` (+ array_/dot aliases) → zip_with /
           aggregate arithmetic over DOUBLE.
         - ``jaccard`` → character-set Jaccard via split + set algebra.
-        - ``regexp_full_match`` → anchored RLIKE.
+        - ``regexp_full_match`` → RLIKE anchored with ``^(?:p)\\z``:
+          Java's ``$`` also matches before a final line terminator,
+          RE2's does not. A pattern that is no literal is anchored with
+          ``||``, which keeps a NULL pattern NULL (the concat pass gives
+          ``concat`` DuckDB's NULL-skipping meaning).
         - ``like_escape``/``ilike_escape`` → LIKE/ILIKE … ESCAPE.
         ``hash()`` stays native and engine-specific (documented — like
         random(), its VALUES are not portable, only its distribution).
@@ -6030,13 +6039,12 @@ class SqlRewriter:
         def regexp_full(m, args):
             if len(args) != 2:
                 raise UQueryError.sql_error("regexp_full_match expects 2 args")
-            pat = self._lit_parse(args[1])
+            pat, end = self._lit_parse(args[1]), r")\z"
             if pat is None:
-                raise UQueryError.sql_error(
-                    "regexp_full_match: literal patterns only"
-                )
-            repl = f"(({args[0]}) RLIKE '^(?:{pat})$')"
-            return repl
+                anchored = f"({self._lit_emit('^(?:')} || ({args[1]}) || {self._lit_emit(end)})"
+            else:
+                anchored = self._lit_emit(f"^(?:{pat}{end}")
+            return f"(({args[0]}) RLIKE {anchored})"
 
         sql = self._map_calls(self._REGEXP_FULL_RE, regexp_full, sql)
 
