@@ -421,12 +421,46 @@ def test_one_spark_job_per_wave_in_partition_order(spark):
         assert len(sc.statusTracker().getJobIdsForGroup(prepared.job_group)) == jobs, sql
 
 
-def test_no_delayed_ack_stall_between_headers_and_body(base_url):
+def test_wave_over_max_result_size_runs_one_partition_per_job(spark):
+    """A wave whose results exceed spark.driver.maxResultSize runs again
+    one partition per job, so a result whose partitions each fit is
+    served whole and in order; the failed wave sent no frame."""
+    from uquery_rs_spark.writers import writer_for_format
+
+    sc = spark.sparkContext
+    conf, p = sc._jsc.sc().conf(), sc.defaultParallelism
+    rows = 2000 * p  # ~0.4 MiB of Arrow a partition, ~0.4·P MiB a wave
+    old = conf.get("spark.driver.maxResultSize", "1g")
+    conf.set("spark.driver.maxResultSize", "1m")
+    try:
+        prepared = Engine(spark, pool_size=1).prepare(
+            f"SELECT id, repeat('x', 200) AS s FROM range(0, {rows}, 1, {p})"
+        )
+        sink = io.BytesIO()
+        prepared.execute(writer_for_format("jsonl", sink))
+    finally:
+        conf.set("spark.driver.maxResultSize", old)
+    assert [json.loads(line)["id"] for line in sink.getvalue().splitlines()] == list(range(rows))
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(prepared.job_group)) == 1 + p
+
+
+def test_no_delayed_ack_stall_between_headers_and_body(spark):
     """On one keep-alive connection the body of `SELECT 1` follows its
     headers at once. With Nagle's algorithm on, each small body chunk
-    after the headers waited for the client's delayed ACK (~40 ms)."""
-    port = int(base_url.rsplit(":", 1)[1])
-    conn = http.client.HTTPConnection("127.0.0.1", port, timeout=30)
+    after the headers waited for the client's delayed ACK (~40 ms): the
+    accepted socket must carry TCP_NODELAY, and the median wait stays
+    well below that stall."""
+    server, url = _serve(spark, query_timeout_secs=30)
+    accepted, get_request = [], server.get_request
+
+    def record():
+        conn, addr = get_request()
+        accepted.append(conn)
+        return conn, addr
+
+    server.get_request = record
+    conn = http.client.HTTPConnection("127.0.0.1", server.server_address[1], timeout=30)
     headers = {"Content-Type": "text/plain", "Accept": "application/json"}
     gaps = []
     try:
@@ -437,9 +471,12 @@ def test_no_delayed_ack_stall_between_headers_and_body(base_url):
             body = resp.read()
             gaps.append(time.perf_counter() - t0)
             assert resp.status == 200 and json.loads(body) == [{"n": 1}]
+        assert len(accepted) == 1
+        assert accepted[0].getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY)
     finally:
         conn.close()
-    assert statistics.median(gaps) < 0.010, gaps
+        server.shutdown()
+    assert statistics.median(gaps) < 0.025, gaps
 
 
 def test_sigterm_stops_server():

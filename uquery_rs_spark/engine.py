@@ -19,11 +19,11 @@ in waves: a wave is at most defaultParallelism consecutive result
 partitions (one round of tasks), collected by one Spark job
 (PythonRDD.runJob) and served as one buffered socket stream in partition
 order, so a range-partitioned ORDER BY stays sorted and N partitions run
-ceil(N / defaultParallelism) jobs. The JVM driver holds one wave, so
-spark.driver.maxResultSize applies per wave; Python decodes one IPC frame
-at a time and passes the RecordBatch to the consumer. An error inside the
-first wave comes before any batch (a 400). The stream starts no Python
-worker.
+ceil(N / defaultParallelism) jobs. The JVM driver holds one wave; a wave
+over spark.driver.maxResultSize runs again one partition per job. Python
+decodes one IPC frame at a time and passes the RecordBatch to the
+consumer. An error inside the first wave comes before any batch (a 400).
+The stream starts no Python worker.
 Cancellation: every execution runs in a job group so a timeout or client
 disconnect can cancelJobGroup mid-scan.
 """
@@ -85,8 +85,9 @@ def _arrow_batches(df: DataFrame, schema: pa.Schema) -> Iterator[pa.RecordBatch]
     """The result's non-empty Arrow batches as the JVM encoded them, in
     partition order, each conformed to `schema`. Each wave of at most
     defaultParallelism partitions is one Spark job, whose frames the JVM
-    driver holds (spark.driver.maxResultSize bounds a wave) and writes to
-    one buffered socket stream; an error in the first wave raises first.
+    driver holds and writes to one buffered socket stream; from a wave
+    over spark.driver.maxResultSize on, a job is one partition, as Spark
+    checks that bound per job. An error in the first wave raises first.
 
     Every served frame is one IPC record-batch message without a schema,
     so it is read with the schema the JVM wrote: the announced one, with
@@ -101,13 +102,22 @@ def _arrow_batches(df: DataFrame, schema: pa.Schema) -> Iterator[pa.RecordBatch]
     wire = to_arrow_schema(df.schema, prefers_large_types=session._jconf.arrowUseLargeVarTypes())
     sc = session.sparkContext
     rdd = df._jdf.toArrowBatchRdd().toJavaRDD()
-    parts, wave = rdd.getNumPartitions(), sc.defaultParallelism
-    for lo in range(0, parts, wave):
-        sock = sc._jvm.PythonRDD.runJob(sc._jsc.sc(), rdd, list(range(lo, min(lo + wave, parts))))
+    lo, parts, wave = 0, rdd.getNumPartitions(), sc.defaultParallelism
+    while lo < parts:
+        hi = min(lo + wave, parts)
+        try:
+            sock = sc._jvm.PythonRDD.runJob(sc._jsc.sc(), rdd, list(range(lo, hi)))
+        except Exception as e:  # no frame of this wave is out yet
+            if wave == 1 or "maxResultSize" not in _first_line(e):
+                raise
+            wave = 1
+            continue
+        sock = sock[0], sock[1]  # not sock[2], the JVM's server: it keeps the wave alive
         for frame in _load_from_socket(sock, NoOpSerializer()):
             batch = pa.ipc.read_record_batch(pa.py_buffer(frame), wire)
             if batch.num_rows:
                 yield batch if wire.equals(schema) else batch.cast(schema)
+        lo = hi
 
 
 class PreparedQuery:
