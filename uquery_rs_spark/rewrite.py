@@ -5310,10 +5310,9 @@ class SqlRewriter:
           → ``([NOT] regexp_full_match(a, p))``, which
           _rewrite_string_list_corners anchors. Infix only — a prefix ~
           is bitwise NOT in both engines and left alone. Like DuckDB's
-          other operators
-          they bind looser than arithmetic, as tightly as ``||``
-          (left-associative) and tighter than comparisons, hence the
-          parentheses. ``~~``/``~~*``/negations → LIKE/ILIKE keywords.
+          other operators they bind looser than arithmetic, as tightly
+          as ``||`` (left-associative) and tighter than comparisons,
+          hence the parentheses. ``~~``/``~~*``/negations → LIKE/ILIKE keywords.
         - ``<->`` / ``<=>`` are array euclidean distance / cosine
           SIMILARITY → the list metric translations of batch 11.
           (Spark's own null-safe ``<=>`` is not part of the DuckDB
