@@ -7,14 +7,18 @@ Prints one JSON line per input: its name, then either the rewritten text
   a fresh rewriter over the tables at ``sf_dir`` (the gates use sf0.001);
 - every top-level statement ``tools/dialect_fuzz.py`` sends for
   ``all 30`` at seeds 42 and 7, recorded by the rewriter handed to
-  ``run_axis`` (one rewriter per seed, as the fuzzer's ``main`` uses).
+  ``run_axis`` (one rewriter per seed, as the fuzzer's ``main`` uses);
+- a fixed list of extra statements (``EXTRAS``), each through a fresh
+  rewriter, that reach pipeline entries the inputs above never change.
 
 Temp-view and spill-path uuids are normalised, so two runs of the same
 code print the same lines. The fuzzer's per-axis checked/mismatch counts
 go to stderr, and a last stderr line sums the run up as JSON: inputs,
 errors, seconds spent inside top-level ``rewrite`` calls (probes
-included) and LIMIT-0 analysis probes sent. A rewriter change that
-should not alter behaviour diffs clean against its parent:
+included), LIMIT-0 analysis probes sent and ``hits``: for each entry of
+``SqlRewriter._PIPELINE``, in order, how many times it changed its input
+text or raised (empty on a rewriter without the table). A rewriter
+change that should not alter behaviour diffs clean against its parent:
 
     python tools/rewrite_corpus.py SF_DIR > new.jsonl   # then the same on the parent
     diff old.jsonl new.jsonl
@@ -47,6 +51,25 @@ from uquery_rs_spark.session import get_spark  # noqa: E402
 FUZZ_SEEDS = (42, 7)
 FUZZ_BATCHES = 30
 
+# (name, statement): inputs that change or reject through pipeline
+# entries no registry text or fuzz axis reaches.
+EXTRAS = (
+    ("ddl_view", "CREATE VIEW uq_corpus_v AS SELECT 1 AS a"),
+    ("summarize", "SUMMARIZE (SELECT 1 AS a, 'x' AS b)"),
+    ("read_csv", "SELECT count(*) FROM read_csv('tests/fixtures/test.csv', header=true)"),
+    ("glob", "SELECT file FROM glob('tests/fixtures/*.csv')"),
+    ("path_table", "SELECT count(*) FROM 'tests/fixtures/test.zstd.parquet'"),
+    ("md5_number", "SELECT md5_number('abc')"),
+    ("regr_avgx", "SELECT regr_avgx(y, x) FROM (VALUES (1, 2), (3, 5)) t(x, y)"),
+    ("array_length_dim", "SELECT array_length([1, 2, 3], 1)"),
+    ("trailing_comma", "SELECT 1 AS a, 2 AS b, FROM range(1)"),
+    ("any_list", "SELECT 2 > ANY([1, 3]), 2 = ALL([2, 2])"),
+    ("struct_extract", "SELECT struct_extract({'a': 1, 'b': 2}, 'b')"),
+    ("list_has_all", "SELECT list_has_all([1, 2, 3], [1, 3])"),
+    ("list_element", "SELECT list_element([10, 20], 2), list_extract('abc', 0)"),
+    ("named_arg", "SELECT concat(a := 'x')"),
+)
+
 _VOLATILE = [
     (re.compile(r"uq_rec_[0-9a-f]{12}"), "uq_rec_UUID"),
     (re.compile(r"__uq_stage_[0-9a-f]{8}"), "__uq_stage_UUID"),
@@ -77,8 +100,15 @@ def _outcome(name: str, fn, summary: dict) -> dict:
         summary["rewrite_s"] += time.perf_counter() - t0
 
 
+def _entry_name(entry) -> str:
+    """A pipeline entry's name: a text pass's method, or a call
+    translation's translator."""
+    return entry if isinstance(entry, str) else entry[1]
+
+
 class CountingRewriter(SqlRewriter):
-    """Counts the analysis probes it sends in ``summary``."""
+    """Counts the analysis probes it sends and its pipeline entries'
+    hits in ``summary``."""
 
     def __init__(self, spark, summary: dict):
         super().__init__(spark)
@@ -87,6 +117,17 @@ class CountingRewriter(SqlRewriter):
     def _probe_analyzes_uncached(self, probe_sql: str) -> bool:
         self.summary["probes"] += 1
         return super()._probe_analyzes_uncached(probe_sql)
+
+    def _run_entry(self, entry, sql: str) -> str:
+        hits = self.summary["hits"]
+        try:
+            out = super()._run_entry(entry, sql)
+        except Exception:
+            hits[_entry_name(entry)] += 1
+            raise
+        if out != sql:
+            hits[_entry_name(entry)] += 1
+        return out
 
 
 class RecordingRewriter(CountingRewriter):
@@ -124,7 +165,9 @@ def main() -> int:
     spark = get_spark("rewrite-corpus", cpus=4)
     Q.load_all()
     load_tables(spark, sf)
-    summary = {"inputs": 0, "errors": 0, "rewrite_s": 0.0, "probes": 0}
+    pipeline = getattr(SqlRewriter, "_PIPELINE", ())
+    hits = {_entry_name(e): 0 for e in pipeline}
+    summary = {"inputs": 0, "errors": 0, "rewrite_s": 0.0, "probes": 0, "hits": hits}
     for name in sorted(Q.REGISTRY):
         q = Q.REGISTRY[name]
         for kind, text in (("oracle", q.oracle), ("sql", q.sql)):
@@ -143,6 +186,10 @@ def main() -> int:
             print(f"seed {seed} {axis}: checked={checked} mismatch={mismatch}", file=sys.stderr)
             for rec in rw.records:
                 print(json.dumps(rec), flush=True)
+    for name, text in EXTRAS:
+        rw = CountingRewriter(spark, summary)
+        rec = _outcome(f"extra:{name}", lambda: rw.rewrite(text), summary)
+        print(json.dumps(rec), flush=True)
     summary["rewrite_s"] = round(summary["rewrite_s"], 2)
     print(json.dumps(summary), file=sys.stderr)
     return 0
