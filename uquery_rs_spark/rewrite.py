@@ -60,6 +60,11 @@ Passes that translate function calls share one walker, ``_map_calls``:
 outside quoted tokens and left to right, a call's arguments are walked
 before the call itself; a call its pass declines keeps its walked
 arguments; the walk resumes after the spliced text.
+
+The pipeline is one ordered table, ``SqlRewriter._PIPELINE``: after the
+statement head (locked configuration, prepared statements, DDL),
+``_rewrite_inner`` runs each entry in turn through ``_run_entry``. An
+entry is a text pass or a call translation for ``_map_calls``.
 """
 
 from __future__ import annotations
@@ -277,12 +282,9 @@ class SqlRewriter:
 
         return self._sub_code_fn(_PATH_TABLE_RE, sub, sql)
 
-    def _rewrite_tvfs(self, sql: str) -> str:
-        def translate(m, raw_args):
-            path, options = self._parse_tvf_args(raw_args)
-            return self._view_for(path, m.group("fn").split("_", 1)[1], options)
-
-        return self._map_calls(_TVF_RE, translate, sql, raw=True)
+    def _translate_tvfs(self, m, raw_args):
+        path, options = self._parse_tvf_args(raw_args)
+        return self._view_for(path, m.group("fn").split("_", 1)[1], options)
 
     @classmethod
     def _parse_tvf_args(cls, raw: str) -> tuple[str, dict[str, str]]:
@@ -342,7 +344,7 @@ class SqlRewriter:
     _FN_RENAMES = {
         "list_transform": "transform",
         "list_filter": "filter",
-        # list_distinct/array_distinct moved to _rewrite_list_distinct
+        # list_distinct/array_distinct moved to _translate_list_distinct
         # (nested-fuzzer catch r7: DuckDB REMOVES NULLs — [5,NULL,7,NULL]
         # → [7,5] — where Spark's array_distinct keeps one)
         # list_contains/array_contains moved to _rewrite_flatten_factorial_contains (DuckDB
@@ -356,14 +358,14 @@ class SqlRewriter:
         # _rewrite_flatten_factorial_contains (fuzzer catch: Spark's array_position is
         # width-strict where DuckDB coerces numeric types)
         "from_hex": "unhex",
-        # list_zip/array_zip moved to _rewrite_list_zip (round-12
+        # list_zip/array_zip moved to _translate_list_zip (round-12
         # wave-11: DuckDB names the struct fields list_1..list_n where
         # arrays_zip uses positional 0/1 — a silent field-name diff —
         # and supports a literal trailing truncate flag)
         "regexp_matches": "regexp_like",
         "strlen": "length",
         # round-5 sweep batch 2 (1:1 semantics verified against DuckDB)
-        # arg_max/arg_min/max_by/min_by moved to _rewrite_arg_max_avg_corr
+        # arg_max/arg_min/max_by/min_by moved to _translate_arg_max_avg_corr
         # (agg-fuzzer catch: DuckDB skips NULL-VALUE rows, Spark's
         # max_by can return one)
         "editdist3": "levenshtein",
@@ -371,7 +373,7 @@ class SqlRewriter:
         "ord": "ascii",
         "json_keys": "json_object_keys",
         # Spark split() is regex-based — these are direct renames, unlike
-        # string_split (literal separator, regex-escaped by _rewrite_function_names)
+        # string_split (literal separator, regex-escaped by _translate_function_names)
         "string_split_regex": "split",
         "str_split_regex": "split",
         "strpos": "instr",  # both: 1-based position, 0 when absent
@@ -412,7 +414,7 @@ class SqlRewriter:
     # batch 20: bare `split` IS literal-separator in DuckDB (alias of
     # string_split) while Spark's split() is regex — without the escape,
     # split('a.b', '.') silently explodes per-char. Internal passes that
-    # emit Spark regex split() all run after _rewrite_function_names.
+    # emit Spark regex split() all run after _translate_function_names.
     _FN_NAME_RE = re.compile(
         r"(?i)\b(?:(?P<split>string_split|str_split|string_to_array|split)"
         r"|(?P<ren>" + "|".join(_FN_RENAMES) + r"))\s*\(",
@@ -433,19 +435,14 @@ class SqlRewriter:
             flat.append(f"{k.strip()}, {entry[len(k) + 1 :].strip()}")
         return ", ".join(flat)
 
-    def _rewrite_map_literal(self, sql: str) -> str:
+    def _translate_map_literal(self, m, inner):
         """DuckDB ``MAP {'k': v, …}`` → Spark ``map('k', v, …)``
         (keys/values pass through recursively)."""
-        return self._map_calls(
-            self._MAP_LITERAL_RE,
-            lambda m, inner: f"map({self._brace_entries(inner)})",
-            sql,
-            raw=True,
-        )
+        return f"map({self._brace_entries(inner)})"
 
     _DISTINCT_IN_AGG_RE = re.compile(r"(?i)\(\s*distinct\b")
 
-    def _rewrite_string_agg_order(self, sql: str) -> str:
+    def _translate_string_agg_order(self, m, inner):
         """DuckDB ``string_agg(x, sep ORDER BY o)`` → Spark
         ``listagg(x, sep) WITHIN GROUP (ORDER BY o)``; plain string_agg
         (no in-args ORDER BY) is native and left alone.
@@ -460,21 +457,17 @@ class SqlRewriter:
         equivalent comparator-sorted collect_list fold instead of
         listagg (overtriggering is safe — the fold is semantically
         identical and fuzz-validated)."""
-
-        def translate(m, inner):
-            split = re.split(r"(?i)\border\s+by\b", inner, maxsplit=1)
-            if len(split) != 2:
-                return None
-            args, order = split[0].rstrip().rstrip(","), split[1].strip()
-            whole, close = m.string, self._close_of(m)
-            rest = whole[: m.start()] + whole[close + 1 :]
-            over_follows = re.match(r"\s*over\b", whole[close + 1 :], re.I)
-            fold = None
-            if self._DISTINCT_IN_AGG_RE.search(rest) and not over_follows:
-                fold = self._string_agg_sorted_fold(args.strip(), order)
-            return fold or f"listagg({args.strip()}) WITHIN GROUP (ORDER BY {order})"
-
-        return self._map_calls(self._STRING_AGG_RE, translate, sql, raw=True)
+        split = re.split(r"(?i)\border\s+by\b", inner, maxsplit=1)
+        if len(split) != 2:
+            return None
+        args, order = split[0].rstrip().rstrip(","), split[1].strip()
+        whole, close = m.string, self._close_of(m)
+        rest = whole[: m.start()] + whole[close + 1 :]
+        over_follows = re.match(r"\s*over\b", whole[close + 1 :], re.I)
+        fold = None
+        if self._DISTINCT_IN_AGG_RE.search(rest) and not over_follows:
+            fold = self._string_agg_sorted_fold(args.strip(), order)
+        return fold or f"listagg({args.strip()}) WITHIN GROUP (ORDER BY {order})"
 
     def _string_agg_sorted_fold(self, args: str, order: str) -> str | None:
         """Equivalent of ``listagg(x, sep) WITHIN GROUP (ORDER BY …)``
@@ -529,19 +522,15 @@ class SqlRewriter:
     _SERIES_FROM_RE = re.compile(r"(?i)\b(from|join)\s+generate_series\s*\(")
     _SERIES_RE = re.compile(r"(?i)\bgenerate_series\s*\(")
 
-    def _rewrite_struct_pack(self, sql: str) -> str:
+    def _translate_struct_pack(self, m, args):
         """DuckDB ``struct_pack(k := v, …)`` → Spark
         ``named_struct('k', v, …)`` (balanced arg split; nested calls
         recurse)."""
-
-        def translate(m, args):
-            pairs = []
-            for a in args:
-                k, _, v = a.partition(":=")
-                pairs.append(f"'{k.strip()}', {v.strip()}")
-            return f"named_struct({', '.join(pairs)})"
-
-        return self._map_calls(self._STRUCT_PACK_RE, translate, sql)
+        pairs = []
+        for a in args:
+            k, _, v = a.partition(":=")
+            pairs.append(f"'{k.strip()}', {v.strip()}")
+        return f"named_struct({', '.join(pairs)})"
 
     def _rewrite_generate_series(self, sql: str) -> str:
         """``generate_series(a, b[, s])`` is DuckDB's range() with an
@@ -575,26 +564,22 @@ class SqlRewriter:
         sql = self._map_calls(self._SERIES_FROM_RE, table, sql)
         return self._map_calls(self._SERIES_RE, lambda m, args: series(args), sql)
 
-    def _rewrite_function_names(self, sql: str) -> str:
+    def _translate_function_names(self, m, inner):
         """Rename DuckDB functions to their Spark equivalents, skipping
         string literals. string_split/str_split get special handling:
         DuckDB splits on a LITERAL separator while Spark's split() takes a
         regex, so literal separators are metachar-escaped; non-literal
         separators pass through un-escaped (documented caveat)."""
-
-        def translate(m, inner):
-            if m.group("ren"):
-                return f"{self._FN_RENAMES[m.group('ren').lower()]}({inner})"
-            args = self._split_top(inner, ",")
-            sep = args[1].strip() if len(args) == 2 else ""
-            if sep.startswith("'") and sep.endswith("'"):
-                esc = "".join(
-                    ("\\\\" + ch if ch in self._REGEX_META else ch) for ch in sep[1:-1]
-                )
-                return f"split({args[0]}, '{esc}')"
-            return f"split({inner})"
-
-        return self._map_calls(self._FN_NAME_RE, translate, sql, raw=True)
+        if m.group("ren"):
+            return f"{self._FN_RENAMES[m.group('ren').lower()]}({inner})"
+        args = self._split_top(inner, ",")
+        sep = args[1].strip() if len(args) == 2 else ""
+        if sep.startswith("'") and sep.endswith("'"):
+            esc = "".join(
+                ("\\\\" + ch if ch in self._REGEX_META else ch) for ch in sep[1:-1]
+            )
+            return f"split({args[0]}, '{esc}')"
+        return f"split({inner})"
 
     # -- string-literal escape space -------------------------------------
     # DuckDB standard literals are escape-free (a backslash is a literal
@@ -1218,8 +1203,8 @@ class SqlRewriter:
             i += 1
         return "".join(out)
 
-    def _translate_regexp_replace(self, args: list[str]) -> str:
-        """One regexp_replace call, args already recursed. DuckDB replaces
+    def _translate_regexp_replace(self, m, args: list[str]) -> str:
+        """DuckDB regexp_replace(s, pat, repl[, flags]). DuckDB replaces
         the FIRST match unless flagged 'g', accepts an RE2 flag string, and
         uses \\1 backrefs; Spark always replaces all, has no flag arg, and
         uses $1. Verified vs DuckDB: first-only/no-match/empty-match/
@@ -1258,7 +1243,7 @@ class SqlRewriter:
 
     _REGEXP_MATCHES_RE = re.compile(r"(?i)\bregexp_matches\s*\(")
 
-    def _rewrite_regexp_matches_flags(self, sql: str) -> str:
+    def _translate_regexp_matches_flags(self, m, args):
         """3-arg regexp_matches(s, pat, options) — the 2-arg form renames
         1:1 to regexp_like, but Spark's regexp_like has no options arg
         (round-11 wave-6 probe: the 3-arg form was a loud wrong-arity
@@ -1271,90 +1256,73 @@ class SqlRewriter:
         otherwise inline (?i)/(?s) prefixes. Murky newline options
         m/n/p and non-literal flag strings stay untranslated (loud
         arity error, never a silent wrong value)."""
+        if len(args) != 3:
+            return None
+        f = self._lit_parse(args[2])
+        if f is None:
+            return None
+        if "g" in f:
+            raise UQueryError.sql_error(
+                "Option 'g' (global replace) is only valid for regexp_replace"
+            )
+        if not set(f) <= set("cisl"):
+            return None
+        s, pat = args[0], args[1]
+        ci = next((ch for ch in reversed(f) if ch in "ci"), "c") == "i"
+        if "l" in f:
+            if ci:
+                return f"contains(lower(({s})), lower(({pat})))"
+            return f"contains(({s}), ({pat}))"
+        prefix = ("(?i)" if ci else "") + ("(?s)" if "s" in f else "")
+        p_lit = self._lit_parse(pat)
+        if not prefix:
+            pat_expr = pat
+        elif p_lit is not None:
+            pat_expr = self._lit_emit(prefix + p_lit)
+        else:
+            pat_expr = f"concat('{prefix}', {pat})"
+        return f"regexp_like(({s}), {pat_expr})"
 
-        def translate(m, args):
-            if len(args) != 3:
-                return None
-            f = self._lit_parse(args[2])
-            if f is None:
-                return None
-            if "g" in f:
-                raise UQueryError.sql_error(
-                    "Option 'g' (global replace) is only valid for regexp_replace"
-                )
-            if not set(f) <= set("cisl"):
-                return None
-            s, pat = args[0], args[1]
-            ci = next((ch for ch in reversed(f) if ch in "ci"), "c") == "i"
-            if "l" in f:
-                if ci:
-                    return f"contains(lower(({s})), lower(({pat})))"
-                return f"contains(({s}), ({pat}))"
-            prefix = ("(?i)" if ci else "") + ("(?s)" if "s" in f else "")
-            p_lit = self._lit_parse(pat)
-            if not prefix:
-                pat_expr = pat
-            elif p_lit is not None:
-                pat_expr = self._lit_emit(prefix + p_lit)
-            else:
-                pat_expr = f"concat('{prefix}', {pat})"
-            return f"regexp_like(({s}), {pat_expr})"
-
-        return self._map_calls(self._REGEXP_MATCHES_RE, translate, sql)
-
-    def _rewrite_regexp_replace(self, sql: str) -> str:
-        """DuckDB regexp_replace(s, pat, repl[, flags]) → Spark (see
-        _translate_regexp_replace)."""
-        return self._map_calls(
-            self._REGEXP_REPLACE_RE,
-            lambda m, args: self._translate_regexp_replace(args),
-            sql,
-        )
-
-    def _rewrite_regexp_extract(self, sql: str) -> str:
+    def _translate_regexp_extract(self, m, inner):
         """Two-arg regexp_extract[_all](s, pat) returns the WHOLE match in
         DuckDB (group 0) but group 1 in Spark — pin the default with an
         explicit 0. Calls with an explicit group pass through (same
         numbering in both engines)."""
-
-        def translate(m, inner):
-            parts = self._split_top(inner, ",")
-            if len(parts) == 2:
-                return f"{m.group(0)}{inner}, 0)"
-            if (
-                len(parts) == 3
-                and not m.group(1)  # regexp_extract only (not _all)
-                and re.match(r"(?i)^\s*array\s*\(", parts[2].strip())
-            ):
-                # batch 28: named-group LIST form returns a STRUCT —
-                # regexp_extract(s, pat, ['a','b']) = {'a': g1, 'b': g2}
-                # (unmatched optional groups are '' on both engines)
-                am = re.match(r"(?i)^\s*array\s*\(", parts[2].strip())
-                names_body = parts[2].strip()[am.end() : -1]
-                names = [
-                    self._lit_parse(n.strip())
-                    for n in self._split_top(names_body, ",")
-                ]
-                if any(n is None for n in names):
-                    raise UQueryError.sql_error(
-                        "regexp_extract: group names must be string literals"
-                    )
-                s_arg, p_arg = parts[0].strip(), parts[1].strip()
-                fields = ", ".join(
-                    f"'{n}', regexp_extract({s_arg}, {p_arg}, {i + 1})"
-                    for i, n in enumerate(names)
+        parts = self._split_top(inner, ",")
+        if len(parts) == 2:
+            return f"{m.group(0)}{inner}, 0)"
+        if (
+            len(parts) == 3
+            and not m.group(1)  # regexp_extract only (not _all)
+            and re.match(r"(?i)^\s*array\s*\(", parts[2].strip())
+        ):
+            # batch 28: named-group LIST form returns a STRUCT —
+            # regexp_extract(s, pat, ['a','b']) = {'a': g1, 'b': g2}
+            # (unmatched optional groups are '' on both engines)
+            am = re.match(r"(?i)^\s*array\s*\(", parts[2].strip())
+            names_body = parts[2].strip()[am.end() : -1]
+            names = [
+                self._lit_parse(n.strip())
+                for n in self._split_top(names_body, ",")
+            ]
+            if any(n is None for n in names):
+                raise UQueryError.sql_error(
+                    "regexp_extract: group names must be string literals"
                 )
-                return f"named_struct({fields})"
-            return f"{m.group(0)}{inner})"
-
-        return self._map_calls(self._REGEXP_EXTRACT_RE, translate, sql, raw=True)
+            s_arg, p_arg = parts[0].strip(), parts[1].strip()
+            fields = ", ".join(
+                f"'{n}', regexp_extract({s_arg}, {p_arg}, {i + 1})"
+                for i, n in enumerate(names)
+            )
+            return f"named_struct({fields})"
+        return f"{m.group(0)}{inner})"
 
     # -- list_sort / array_to_string argument semantics -------------------
 
     _LIST_SORT_RE = re.compile(r"(?i)\blist_(reverse_)?sort\s*\(")
     _ARRAY_TO_STRING_RE = re.compile(r"(?i)\barray_to_string\s*\(")
 
-    def _rewrite_list_sort(self, sql: str) -> str:
+    def _translate_list_sort(self, m, args):
         """DuckDB list_sort(l[, 'ASC'|'DESC'[, 'NULLS FIRST'|'NULLS LAST']])
         and list_reverse_sort(l[, null_order]) → the Spark call with the
         same NULL placement (verified vs DuckDB: NULLs sort LAST in every
@@ -1362,41 +1330,33 @@ class SqlRewriter:
         DESC→sort_array(l, false) (nulls last), DESC+NULLS FIRST→
         reverse(array_sort). The old plain rename to sort_array put NULLs
         first ascending and rejected the string direction argument."""
+        l = args[0]
+        mods = [(self._lit_parse(a) or "").upper() for a in args[1:]]
+        if m.group(1):  # list_reverse_sort: direction fixed DESC
+            desc, nulls_first = True, "NULLS FIRST" in mods
+        else:
+            desc = "DESC" in mods
+            nulls_first = "NULLS FIRST" in mods
+        if desc:
+            return f"reverse(array_sort({l}))" if nulls_first else f"sort_array({l}, false)"
+        return f"sort_array({l})" if nulls_first else f"array_sort({l})"
 
-        def translate(m, args):
-            l = args[0]
-            mods = [(self._lit_parse(a) or "").upper() for a in args[1:]]
-            if m.group(1):  # list_reverse_sort: direction fixed DESC
-                desc, nulls_first = True, "NULLS FIRST" in mods
-            else:
-                desc = "DESC" in mods
-                nulls_first = "NULLS FIRST" in mods
-            if desc:
-                return f"reverse(array_sort({l}))" if nulls_first else f"sort_array({l}, false)"
-            return f"sort_array({l})" if nulls_first else f"array_sort({l})"
-
-        return self._map_calls(self._LIST_SORT_RE, translate, sql)
-
-    def _rewrite_array_to_string(self, sql: str) -> str:
+    def _translate_array_to_string(self, m, args):
         """array_to_string(l, sep) → array_join guarded for lists with
         no NON-NULL elements: DuckDB yields NULL for [] AND for [NULL]
         (verified batch 16), Spark's array_join yields ''. NULL
         elements are skipped by both when any non-null remains."""
-
-        def translate(m, args):
-            if len(args) != 2:
-                return f"array_join({', '.join(args)})"
-            l, sep = args
-            # cast elements to STRING: DuckDB stringifies non-VARCHAR lists
-            # (array_to_string([1,2], '-') = '1-2'); Spark's array_join
-            # rejects non-string arrays (batch-8 sweep)
-            le = f"transform(({l}), uq_a2s -> CAST(uq_a2s AS STRING))"
-            return (
-                f"CASE WHEN size(filter(({l}), uq_ae -> uq_ae IS NOT NULL)) = 0 "
-                f"THEN NULL ELSE array_join({le}, {sep}) END"
-            )
-
-        return self._map_calls(self._ARRAY_TO_STRING_RE, translate, sql)
+        if len(args) != 2:
+            return f"array_join({', '.join(args)})"
+        l, sep = args
+        # cast elements to STRING: DuckDB stringifies non-VARCHAR lists
+        # (array_to_string([1,2], '-') = '1-2'); Spark's array_join
+        # rejects non-string arrays (batch-8 sweep)
+        le = f"transform(({l}), uq_a2s -> CAST(uq_a2s AS STRING))"
+        return (
+            f"CASE WHEN size(filter(({l}), uq_ae -> uq_ae IS NOT NULL)) = 0 "
+            f"THEN NULL ELSE array_join({le}, {sep}) END"
+        )
 
     # -- round-5 dialect gap-hunt closures (list_aggregate / list_reduce /
     # list_slice / scalar range / format / 3-arg date_diff / bare struct
@@ -1485,29 +1445,22 @@ class SqlRewriter:
         r"product|skewness|kurtosis|string_agg|mad)\s*\("
     )
 
-    def _rewrite_list_agg_aliases(self, sql: str) -> str:
+    def _translate_list_agg_aliases(self, m, args):
         """Standalone ``list_<aggregate>`` sugar (round-11 wave-9:
         list_sem/list_product/… were loud UNRESOLVED_ROUTINE) →
         the ``list_aggregate(x, '<fn>')`` spelling the pass below
         translates. Both spellings are DuckDB-equivalent (probed)."""
-        return self._map_calls(
-            self._LIST_AGG_ALIAS_RE,
-            lambda m, args: (
-                f"list_aggregate({args[0]}, '{m.group(1).lower()}')" if len(args) == 1 else None
-            ),
-            sql,
-        )
+        if len(args) != 1:
+            return None
+        return f"list_aggregate({args[0]}, '{m.group(1).lower()}')"
 
-    def _rewrite_list_aggregate(self, sql: str) -> str:
+    def _translate_list_aggregate(self, m, args: list[str]) -> str:
         """list_aggregate/list_aggr(l, 'fname') for the common fnames:
         min/max → array_min/max; count → size of non-null filter (BIGINT
         like DuckDB); sum → higher-order fold seeded with first-elem*0
         so the accumulator keeps the ELEMENT type; avg → sum/count in
         DOUBLE. NULL elements are skipped like DuckDB. Unsupported
         fnames raise rather than mistranslate."""
-        return self._map_calls(self._LIST_AGG_RE, self._translate_list_aggregate, sql)
-
-    def _translate_list_aggregate(self, m, args: list[str]) -> str:
         if len(args) != 2:
             raise UQueryError.sql_error("list_aggregate expects (list, 'function')")
         l = args[0]
@@ -1633,7 +1586,7 @@ class SqlRewriter:
         r"^\(\s*(\w+)\s*,\s*(\w+)\s*,\s*(\w+)\s*\)\s*->\s*(.*)$", re.S
     )
 
-    def _rewrite_list_reduce(self, sql: str) -> str:
+    def _translate_list_reduce(self, m, args: list[str]) -> str:
         """list_reduce(l, (a, b) -> …) folds from the FIRST element with
         no initial value → Spark reduce() over the tail seeded with
         element 1 (empty list yields NULL where DuckDB errors —
@@ -1647,9 +1600,6 @@ class SqlRewriter:
         outer names, so whole-word substitution outside literals is
         exact). Single-element lists skip the fold (zip_with pads with
         NULLs otherwise)."""
-        return self._map_calls(self._LIST_REDUCE_RE, self._translate_list_reduce, sql)
-
-    def _translate_list_reduce(self, m, args: list[str]) -> str:
         if len(args) != 2:
             raise UQueryError.sql_error("list_reduce expects (list, lambda)")
         l, lam = args
@@ -1674,26 +1624,22 @@ class SqlRewriter:
             f"try_element_at(({l}), 1), {lam})"
         )
 
-    def _rewrite_list_slice(self, sql: str) -> str:
+    def _translate_list_slice(self, m, args):
         """list_slice(l, a, b) — 1-based INCLUSIVE bounds → slice(l, a,
         b - a + 1). Positive indices only (negatives are served by the
         bracket syntax l[a:b], which handles them). The 4-arg STEP form
         (r13 wave-15 — previously a loud wrong-arity error) delegates
-        to the bracket form l[a:b:s] via _rewrite_array_slice_fn
+        to the bracket form l[a:b:s] via _translate_array_slice_fn
         (which runs BEFORE the bracket pass), inheriting its
         negative-step and index handling; DuckDB itself rejects
         string+step, so the string-polymorphic path there is
         permissive-only."""
-
-        def translate(m, args):
-            if len(args) != 3:
-                raise UQueryError.sql_error(
-                    "list_slice expects (list, begin, end[, step])"
-                )
-            l, a, b = args
-            return f"slice(({l}), ({a}), ({b}) - ({a}) + 1)"
-
-        return self._map_calls(self._LIST_SLICE_RE, translate, sql)
+        if len(args) != 3:
+            raise UQueryError.sql_error(
+                "list_slice expects (list, begin, end[, step])"
+            )
+        l, a, b = args
+        return f"slice(({l}), ({a}), ({b}) - ({a}) + 1)"
 
     @staticmethod
     def _series_sql(a: str, b: str, s: str, inclusive: bool) -> str:
@@ -1716,39 +1662,35 @@ class SqlRewriter:
             f"ELSE array() END), 1)"
         )
 
-    def _rewrite_range_calls(self, sql: str) -> str:
+    def _translate_range_calls(self, m, args):
         """Scalar/FROM-position range(…) → guarded sequence() (exclusive
         stop, direction-checked step). FROM range(n) exposes the DuckDB
         column name ``range``."""
-
-        def translate(m, args):
-            # window frames (`RANGE BETWEEN …`) have no '(' right after
-            # RANGE, so any match here is the function form.
-            if len(args) == 1:
-                a, b, s = "0", args[0], "1"
-            elif len(args) == 2:
-                a, b, s = args[0], args[1], "1"
-            elif len(args) == 3:
-                a, b, s = args
-            else:
-                return None
-            if re.search(r"(?i)\binterval\b", s):
-                # temporal range (batch-13): DuckDB's stop stays EXCLUSIVE
-                # and the result is TIMESTAMP even for DATE bounds;
-                # sequence() is inclusive → drop a stop-equal last element.
-                # Positive-interval steps only (the DuckDB-common form).
-                bt = f"CAST(({b}) AS TIMESTAMP)"
-                seq = (
-                    f"filter(sequence(CAST(({a}) AS TIMESTAMP), {bt}, ({s})), "
-                    f"uq_rg -> uq_rg <> {bt})"
-                )
-            else:
-                seq = self._series_sql(*(f"CAST(({x}) AS BIGINT)" for x in (a, b, s)), False)
-            if re.search(r"(?is)\b(from|join)\s*$", m.string[: m.start()]):
-                return f"(SELECT explode({seq}) AS range)"
-            return seq
-
-        return self._map_calls(self._RANGE_CALL_RE, translate, sql)
+        # window frames (`RANGE BETWEEN …`) have no '(' right after
+        # RANGE, so any match here is the function form.
+        if len(args) == 1:
+            a, b, s = "0", args[0], "1"
+        elif len(args) == 2:
+            a, b, s = args[0], args[1], "1"
+        elif len(args) == 3:
+            a, b, s = args
+        else:
+            return None
+        if re.search(r"(?i)\binterval\b", s):
+            # temporal range (batch-13): DuckDB's stop stays EXCLUSIVE
+            # and the result is TIMESTAMP even for DATE bounds;
+            # sequence() is inclusive → drop a stop-equal last element.
+            # Positive-interval steps only (the DuckDB-common form).
+            bt = f"CAST(({b}) AS TIMESTAMP)"
+            seq = (
+                f"filter(sequence(CAST(({a}) AS TIMESTAMP), {bt}, ({s})), "
+                f"uq_rg -> uq_rg <> {bt})"
+            )
+        else:
+            seq = self._series_sql(*(f"CAST(({x}) AS BIGINT)" for x in (a, b, s)), False)
+        if re.search(r"(?is)\b(from|join)\s*$", m.string[: m.start()]):
+            return f"(SELECT explode({seq}) AS range)"
+        return seq
 
     _FMT_SPEC_RE = re.compile(
         r"^(?:(?P<fill>.)?(?P<align>[<>^]))?(?P<sign>[+ ]?)(?P<alt>#?)"
@@ -1819,16 +1761,13 @@ class SqlRewriter:
         prec_s = f".{prec}" if prec is not None else ""
         return f"{flags}{width}{prec_s}{typ}", cast, wrap
 
-    def _rewrite_format(self, sql: str) -> str:
+    def _translate_format(self, m, args: list[str]) -> str:
         """format('…{}…', args) (fmt.format-style braces) →
         format_string: `{}` → `%s`, `{k}` → positional, `{{`/`}}` →
         literal braces, and (batch 28) the format-spec mini-language
         ({:.2f}, {:>6}, {:06.1f}, {:x}, {:,}, {:+.1f}, {:o}, {:e},
         {:b} via conv) with spec-driven argument casts. Only literal
         format strings translate; fmt/Java disagreements raise."""
-        return self._map_calls(self._FORMAT_RE, self._translate_format, sql)
-
-    def _translate_format(self, m, args: list[str]) -> str:
         fmt = self._lit_parse(args[0])
         if fmt is None:
             raise UQueryError.sql_error("format() requires a literal format string")
@@ -1983,40 +1922,30 @@ class SqlRewriter:
         ),
     }
 
-    def _rewrite_date_diff(self, sql: str) -> str:
+    def _translate_date_diff(self, m, args):
         """DuckDB 3-arg date_diff('unit', a, b) counts unit-BOUNDARY
         crossings; Spark's date_diff/timestampdiff count COMPLETE units
         (Jan 31 → Feb 1 is month-diff 1 in DuckDB, 0 in Spark). Each
         unit maps to explicit truncate-then-diff arithmetic. 2-arg
         Spark-style datediff has no leading string literal and is left
         untouched."""
+        if len(args) != 3:
+            raise UQueryError.sql_error("date_diff('unit', start, end) expects 3 args")
+        unit = (self._lit_parse(args[0]) or "").lower().rstrip("s")
+        unit = {"min": "minute", "sec": "second", "mon": "month", "yr": "year"}.get(unit, unit)
+        template = self._DATE_DIFF_UNITS.get(unit)
+        if template is None:
+            raise UQueryError.sql_error(
+                f"date_diff: unsupported unit '{unit}' "
+                f"(supported: {sorted(self._DATE_DIFF_UNITS)})"
+            )
+        return template.format(a=args[1], b=args[2])
 
-        def translate(m, args):
-            if len(args) != 3:
-                raise UQueryError.sql_error("date_diff('unit', start, end) expects 3 args")
-            unit = (self._lit_parse(args[0]) or "").lower().rstrip("s")
-            unit = {"min": "minute", "sec": "second", "mon": "month", "yr": "year"}.get(unit, unit)
-            template = self._DATE_DIFF_UNITS.get(unit)
-            if template is None:
-                raise UQueryError.sql_error(
-                    f"date_diff: unsupported unit '{unit}' "
-                    f"(supported: {sorted(self._DATE_DIFF_UNITS)})"
-                )
-            return template.format(a=args[1], b=args[2])
-
-        return self._map_calls(self._DATE_DIFF3_RE, translate, sql)
-
-    def _rewrite_struct_literal(self, sql: str) -> str:
+    def _translate_struct_literal(self, m, inner):
         """Bare DuckDB struct literal ``{'k': v, …}`` → named_struct
-        ('k', v, …). Runs AFTER _rewrite_map_literal so ``MAP {…}`` has
-        already been consumed; a brace starting with a quoted key is
-        unambiguous in SQL text."""
-        return self._map_calls(
-            self._STRUCT_LIT_RE,
-            lambda m, inner: f"named_struct({self._brace_entries(inner)})",
-            sql,
-            raw=True,
-        )
+        ('k', v, …); a brace starting with a quoted key is unambiguous
+        in SQL text."""
+        return f"named_struct({self._brace_entries(inner)})"
 
     # -- sweep batch 2: datetime epochs / names, quantiles, product,
     # time_bucket ---------------------------------------------------------
@@ -2029,18 +1958,12 @@ class SqlRewriter:
     _INTERVAL_LIT_RE = re.compile(r"(?i)^\s*interval\s+'?(\d+)'?\s+(\w+?)s?\s*$")
     _BUCKET_MS = {"second": 1000, "minute": 60_000, "hour": 3_600_000, "day": 86_400_000}
 
-    def _rewrite_dayname(self, sql: str) -> str:
+    def _translate_dayname(self, m, args):
         """dayname/monthname → date_format full names (Spark's own
         dayname() returns the ABBREVIATED name — 'Mon' vs 'Monday')."""
-        return self._map_calls(
-            self._DAYNAME_RE,
-            lambda m, args: (
-                f"date_format(({args[0]}), '{'EEEE' if m.group(1).lower() == 'day' else 'MMMM'}')"
-            ),
-            sql,
-        )
+        return f"date_format(({args[0]}), '{'EEEE' if m.group(1).lower() == 'day' else 'MMMM'}')"
 
-    def _rewrite_epoch(self, sql: str) -> str:
+    def _translate_epoch(self, m, args: list[str]) -> str:
         """epoch(ts) → fractional seconds as DOUBLE (DuckDB keeps the
         microsecond fraction — bare unix_timestamp truncates); epoch_ms /
         epoch_us → unix_millis / unix_micros (BIGINT in both engines).
@@ -2053,9 +1976,6 @@ class SqlRewriter:
         the argument is integral (Spark's timestamp_millis rejects
         STRING and TIMESTAMP outright, so the dispatch is unambiguous),
         else the extraction form."""
-        return self._map_calls(self._EPOCH_RE, self._translate_epoch, sql)
-
-    def _translate_epoch(self, m, args: list[str]) -> str:
         x = args[0]
         ts = f"CAST(({x}) AS TIMESTAMP)"
         suffix = (m.group(1) or "").lower()
@@ -2084,22 +2004,18 @@ class SqlRewriter:
     )
     _IGN_NULLS_TAIL_RE = re.compile(r"(?i)\b(ignore|respect)\s+nulls\s*$")
 
-    def _rewrite_ignore_nulls_arg(self, sql: str) -> str:
+    def _translate_ignore_nulls_arg(self, m, args):
         """DuckDB puts IGNORE/RESPECT NULLS INSIDE the call's argument
         list — first_value(v IGNORE NULLS), nth_value(v, 2 IGNORE
         NULLS) — and rejects the postfix placement; Spark is exactly
         the opposite (round-11 wave-7 probe: every arg-internal form
         was a loud parse error). Relocate the keyword outside the
         closing paren; argument text is otherwise untouched."""
-
-        def translate(m, args):
-            tm = self._IGN_NULLS_TAIL_RE.search(args[-1])
-            if not tm:
-                return None
-            args[-1] = args[-1][: tm.start()].rstrip()
-            return m.group(0) + ", ".join(args) + f") {tm.group(1).upper()} NULLS"
-
-        return self._map_calls(self._IGN_NULLS_FN_RE, translate, sql)
+        tm = self._IGN_NULLS_TAIL_RE.search(args[-1])
+        if not tm:
+            return None
+        args[-1] = args[-1][: tm.start()].rstrip()
+        return m.group(0) + ", ".join(args) + f") {tm.group(1).upper()} NULLS"
 
     @staticmethod
     def _ordered_spec(over: str | None) -> bool:
@@ -2196,14 +2112,11 @@ class SqlRewriter:
         )
         return repl, endpos
 
-    def _rewrite_quantile(self, sql: str) -> str:
+    def _translate_quantile(self, m, args: list[str]) -> str:
         """quantile_cont/quantile_disc/quantile(x, q) → Spark's ordered-
         set percentile_cont/percentile_disc (bare quantile is DISC in
         DuckDB). List-of-quantiles forms are not translated (array
         result would violate the scalar-column convention anyway)."""
-        return self._map_calls(self._QUANTILE_RE, self._translate_quantile, sql)
-
-    def _translate_quantile(self, m, args: list[str]) -> str:
         if len(args) != 2:
             raise UQueryError.sql_error(
                 "quantile*: only the (expr, scalar_quantile) form is supported"
@@ -2221,7 +2134,7 @@ class SqlRewriter:
         fn = "percentile_cont" if kind == "_cont" else "percentile_disc"
         return f"{fn}({args[1]}) WITHIN GROUP (ORDER BY ({args[0]}))"
 
-    def _rewrite_product(self, sql: str) -> str:
+    def _translate_product(self, m, args):
         """product(x) aggregate → sequential double fold over ONE
         collect_list (Spark has no product aggregate; DOUBLE result
         like DuckDB). The original exp(sum(ln|x|)) form carried ~1e-15
@@ -2245,44 +2158,36 @@ class SqlRewriter:
         products are deterministic run-to-run (collection order varies
         with partitioning; the sign and integer-exact results are
         order-independent, so sorting cannot change them)."""
+        filt, over, endpos = self._nested_agg_over(m.string, self._close_of(m), "product")
+        osuf = f" OVER {over}" if over else ""
+        x = args[0]
+        if filt is not None:
+            x = f"CASE WHEN {filt} THEN ({x}) END"
+        cl = f"array_sort(collect_list(CAST(({x}) AS DOUBLE)){osuf})"
+        repl = (
+            f"(CASE WHEN size({cl}) = 0 THEN CAST(NULL AS DOUBLE) "
+            f"ELSE aggregate({cl}, CAST(1 AS DOUBLE), "
+            f"(uq_pa, uq_px) -> uq_pa * uq_px) END)"
+        )
+        return repl, endpos
 
-        def translate(m, args):
-            filt, over, endpos = self._nested_agg_over(m.string, self._close_of(m), "product")
-            osuf = f" OVER {over}" if over else ""
-            x = args[0]
-            if filt is not None:
-                x = f"CASE WHEN {filt} THEN ({x}) END"
-            cl = f"array_sort(collect_list(CAST(({x}) AS DOUBLE)){osuf})"
-            repl = (
-                f"(CASE WHEN size({cl}) = 0 THEN CAST(NULL AS DOUBLE) "
-                f"ELSE aggregate({cl}, CAST(1 AS DOUBLE), "
-                f"(uq_pa, uq_px) -> uq_pa * uq_px) END)"
-            )
-            return repl, endpos
-
-        return self._map_calls(self._PRODUCT_RE, translate, sql)
-
-    def _rewrite_time_bucket(self, sql: str) -> str:
+    def _translate_time_bucket(self, m, args):
         """time_bucket(INTERVAL n unit, ts) → epoch-aligned floor
         (timestamp_millis of unix_millis div width). Sub-week units only:
         they are origin-independent, while DuckDB aligns week+ buckets to
         2000-01-03 — raise rather than mis-bucket those."""
-
-        def translate(m, args):
-            if len(args) != 2:
-                raise UQueryError.sql_error("time_bucket expects (INTERVAL, ts)")
-            im = self._INTERVAL_LIT_RE.match(args[0])
-            unit_ms = im and self._BUCKET_MS.get(im.group(2).lower())
-            if not unit_ms:
-                raise UQueryError.sql_error(
-                    f"time_bucket: unsupported width '{args[0]}' "
-                    "(literal INTERVAL n second/minute/hour/day only)"
-                )
-            w = int(im.group(1)) * unit_ms
-            ts = f"CAST(({args[1]}) AS TIMESTAMP)"
-            return f"timestamp_millis((unix_millis({ts}) div {w}) * {w})"
-
-        return self._map_calls(self._TIME_BUCKET_RE, translate, sql)
+        if len(args) != 2:
+            raise UQueryError.sql_error("time_bucket expects (INTERVAL, ts)")
+        im = self._INTERVAL_LIT_RE.match(args[0])
+        unit_ms = im and self._BUCKET_MS.get(im.group(2).lower())
+        if not unit_ms:
+            raise UQueryError.sql_error(
+                f"time_bucket: unsupported width '{args[0]}' "
+                "(literal INTERVAL n second/minute/hour/day only)"
+            )
+        w = int(im.group(1)) * unit_ms
+        ts = f"CAST(({args[1]}) AS TIMESTAMP)"
+        return f"timestamp_millis((unix_millis({ts}) div {w}) * {w})"
 
     # -- sweep batch 4: JSON extraction, ISO-week datetimes, interval
     # constructors --------------------------------------------------------
@@ -2301,15 +2206,12 @@ class SqlRewriter:
         "hours": 4, "minutes": 5, "seconds": 6,
     }
 
-    def _rewrite_json_extract(self, sql: str) -> str:
+    def _translate_json_extract(self, m, args: list[str]) -> str:
         """json_extract(j, p) → to_json(variant_get(parse_json(j), p)) —
         EXACT DuckDB semantics incl. JSON string quoting ('"x"' for
         strings, bare 7 for numbers); json_extract_string /
         json_extract_path_text → get_json_object (raw text). A literal
         JSONPointer path ('/a/b') converts to $-path."""
-        return self._map_calls(self._JSON_EXTRACT_RE, self._translate_json_extract, sql)
-
-    def _translate_json_extract(self, m, args: list[str]) -> str:
         if len(args) != 2:
             raise UQueryError.sql_error("json_extract expects (json, path)")
         j, p = args
@@ -2363,7 +2265,7 @@ class SqlRewriter:
 
     _JSON_ARR_LEN_RE = re.compile(r"(?i)\bjson_array_length\s*\(")
 
-    def _rewrite_json_array_length(self, sql: str) -> str:
+    def _translate_json_array_length(self, m, args):
         """json_array_length, both arities, DuckDB-probed semantics the
         jsonfz axis caught Spark's builtin silently missing (round 12):
         a VALID non-array document (or a found non-array path) counts
@@ -2372,50 +2274,41 @@ class SqlRewriter:
         and a missing/json-null path stay NULL. 2-arg counts the array
         AT the path (round-11 wave-8); a [#-n] from-end path routes
         through the UDF walk like json_extract."""
-
-        def translate(m, args):
-            if len(args) not in (1, 2) or not args[0].strip():
-                return None
-            j = args[0]
-            # NB: `parse_json(j) IS NULL` would NOT restore the loud
-            # malformed error — parse_json is null-intolerant, so the
-            # optimizer collapses the IsNull to `j IS NULL` without
-            # ever parsing; a >= comparison over its length survives
-            # optimization and forces the parse (raising like DuckDB).
-            parse_0 = f"IF(length(to_json(parse_json(({j})))) >= 0, 0, 0)"
-            if len(args) == 1:
-                return (
-                    f"(CASE WHEN ({j}) IS NULL THEN CAST(NULL AS INT) "
-                    f"ELSE coalesce(json_array_length(({j})), {parse_0}) END)"
-                )
-            plit = self._lit_parse(args[1].strip())
-            if plit is not None and "[#-" in plit:
-                from .functions.parity_udfs import register_parity_udfs
-
-                register_parity_udfs(self.spark)
-                inner = f"uq_json_extract_fe(CAST(({j}) AS STRING), {args[1]})"
-            else:
-                inner = f"get_json_object(({j}), {args[1]})"
+        if len(args) not in (1, 2) or not args[0].strip():
+            return None
+        j = args[0]
+        # NB: `parse_json(j) IS NULL` would NOT restore the loud
+        # malformed error — parse_json is null-intolerant, so the
+        # optimizer collapses the IsNull to `j IS NULL` without
+        # ever parsing; a >= comparison over its length survives
+        # optimization and forces the parse (raising like DuckDB).
+        parse_0 = f"IF(length(to_json(parse_json(({j})))) >= 0, 0, 0)"
+        if len(args) == 1:
             return (
                 f"(CASE WHEN ({j}) IS NULL THEN CAST(NULL AS INT) "
-                f"WHEN ({inner}) IS NULL THEN nullif({parse_0}, 0) "
-                f"ELSE coalesce(json_array_length({inner}), {parse_0}) END)"
+                f"ELSE coalesce(json_array_length(({j})), {parse_0}) END)"
             )
+        plit = self._lit_parse(args[1].strip())
+        if plit is not None and "[#-" in plit:
+            from .functions.parity_udfs import register_parity_udfs
 
-        return self._map_calls(self._JSON_ARR_LEN_RE, translate, sql)
-
-    def _rewrite_json_valid(self, sql: str) -> str:
-        return self._map_calls(
-            self._JSON_VALID_RE, lambda m, args: f"(try_parse_json(({args[0]})) IS NOT NULL)", sql
+            register_parity_udfs(self.spark)
+            inner = f"uq_json_extract_fe(CAST(({j}) AS STRING), {args[1]})"
+        else:
+            inner = f"get_json_object(({j}), {args[1]})"
+        return (
+            f"(CASE WHEN ({j}) IS NULL THEN CAST(NULL AS INT) "
+            f"WHEN ({inner}) IS NULL THEN nullif({parse_0}, 0) "
+            f"ELSE coalesce(json_array_length({inner}), {parse_0}) END)"
         )
 
-    def _rewrite_iso_datetime(self, sql: str) -> str:
+    def _translate_json_valid(self, m, args):
+        return f"(try_parse_json(({args[0]})) IS NOT NULL)"
+
+    def _translate_iso_datetime(self, m, args: list[str]) -> str:
         """ISO-week family: isodow (Mon=1..Sun=7), week (ISO week),
         yearweek (ISO year*100 + week), century — each as explicit
         arithmetic over Spark's dayofweek/weekofyear/YEAROFWEEK."""
-        return self._map_calls(self._ISO_DT_RE, self._translate_iso_datetime, sql)
-
-    def _translate_iso_datetime(self, m, args: list[str]) -> str:
         d = f"CAST(({args[0]}) AS DATE)"
         return {
             "isodow": f"CAST(pmod(dayofweek({d}) + 5, 7) + 1 AS BIGINT)",
@@ -2430,14 +2323,11 @@ class SqlRewriter:
             "millennium": f"CAST(ceil(year({d}) / 1000.0) AS BIGINT)",
         }[m.group(1).lower()]
 
-    def _rewrite_to_interval(self, sql: str) -> str:
+    def _translate_to_interval(self, m, args: list[str]) -> str:
         """to_days/to_hours/… interval constructors → make_interval with
         the value in the matching slot; sub-second units scale into the
         seconds slot, multi-unit ones (decades/centuries/millennia/
         quarters) into years/months (round-10 wave-4 close)."""
-        return self._map_calls(self._TO_INTERVAL_RE, self._translate_to_interval, sql)
-
-    def _translate_to_interval(self, m, args: list[str]) -> str:
         n = args[0]
         unit = m.group(1).lower()
         scaled = {
@@ -2458,23 +2348,19 @@ class SqlRewriter:
     _SHA256_RE = re.compile(r"(?i)\bsha256\s*\(")
     _TRIM2_RE = re.compile(r"(?i)\b([lr]?)trim\s*\(")
 
-    def _rewrite_sha256(self, sql: str) -> str:
-        return self._map_calls(self._SHA256_RE, lambda m, args: f"sha2(({args[0]}), 256)", sql)
+    def _translate_sha256(self, m, args):
+        return f"sha2(({args[0]}), 256)"
 
-    def _rewrite_trim_chars(self, sql: str) -> str:
+    def _translate_trim_chars(self, m, args):
         """2-arg ltrim/rtrim/trim(string, charset) → TRIM(LEADING/
         TRAILING/BOTH charset FROM string): Spark's own 2-arg forms take
         the arguments in the OPPOSITE order (trimStr first), which
         silently trims the wrong operand — bare 2-arg trim() included
         (batch-18 find). 1-arg forms are identical and left alone."""
-
-        def translate(m, args):
-            if len(args) != 2:
-                return None
-            side = {"l": "LEADING", "r": "TRAILING", "": "BOTH"}[m.group(1).lower()]
-            return f"TRIM({side} {args[1]} FROM ({args[0]}))"
-
-        return self._map_calls(self._TRIM2_RE, translate, sql)
+        if len(args) != 2:
+            return None
+        side = {"l": "LEADING", "r": "TRAILING", "": "BOTH"}[m.group(1).lower()]
+        return f"TRIM({side} {args[1]} FROM ({args[0]}))"
 
     # -- sweep batch 6: quantified comparisons, ordered first/last,
     # struct_extract, list_has_all, divide/xor ----------------------------
@@ -2501,29 +2387,25 @@ class SqlRewriter:
     _MULTIPLY_RE = re.compile(r"(?i)\bmultiply\s*\(")
     _MOD_FN_RE = re.compile(r"(?i)\bmod\s*\(")
 
-    def _rewrite_quantified_cmp(self, sql: str) -> str:
+    def _translate_quantified_cmp(self, m, inner):
         """``x op ANY/SOME(arr)`` → exists(arr, e -> x op e); ``x op
         ALL(arr)`` → forall(...). Subquery operands map to IN / NOT IN
         where semantics allow (= ANY, <>/!= ALL); other op+subquery
         combinations raise. Simple-identifier left operands only."""
-
-        def translate(m, inner):
-            inner = inner.strip()
-            lhs, op, q = m.group("lhs"), m.group("op"), m.group("q").upper()
-            if op == "!=":
-                op = "<>"
-            if re.match(r"(?is)^select\b", inner):
-                if op == "=" and q in ("ANY", "SOME"):
-                    return f"{lhs} IN ({inner})"
-                if op == "<>" and q == "ALL":
-                    return f"{lhs} NOT IN ({inner})"
-                raise UQueryError.sql_error(
-                    f"{op} {q}(subquery) is not supported (only = ANY / <> ALL)"
-                )
-            fn = "forall" if q == "ALL" else "exists"
-            return f"{fn}(({inner}), uq_qe -> {lhs} {op} uq_qe)"
-
-        return self._map_calls(self._QUANT_CMP_RE, translate, sql, raw=True)
+        inner = inner.strip()
+        lhs, op, q = m.group("lhs"), m.group("op"), m.group("q").upper()
+        if op == "!=":
+            op = "<>"
+        if re.match(r"(?is)^select\b", inner):
+            if op == "=" and q in ("ANY", "SOME"):
+                return f"{lhs} IN ({inner})"
+            if op == "<>" and q == "ALL":
+                return f"{lhs} NOT IN ({inner})"
+            raise UQueryError.sql_error(
+                f"{op} {q}(subquery) is not supported (only = ANY / <> ALL)"
+            )
+        fn = "forall" if q == "ALL" else "exists"
+        return f"{fn}(({inner}), uq_qe -> {lhs} {op} uq_qe)"
 
     _B28_AGG_RE = re.compile(
         r"(?i)\b(arg_max|arg_min|argmax|argmin|max_by|min_by|avg|mean|corr)\s*\("
@@ -2531,7 +2413,7 @@ class SqlRewriter:
     _TOPN_MINMAX_RE = re.compile(r"(?i)(?<![\w.])(max|min)\s*\(")
     _PY_LAMBDA_RE = re.compile(r"(?i)\blambda\s+(\w+(?:\s*,\s*\w+)*)\s*:")
 
-    def _rewrite_topn_minmax(self, sql: str) -> str:
+    def _translate_topn_minmax(self, m, args):
         """DuckDB ≥1.1 ``max(arg, n)`` / ``min(arg, n)`` (the reference
         pins 1.5.2): a LIST of the n largest/smallest values, largest-
         first / smallest-first, NULLs skipped (collect_list drops them).
@@ -2541,23 +2423,19 @@ class SqlRewriter:
         emission buffers each group's values (collect_list) where
         DuckDB keeps a bounded heap — fine for the grouped-top-n shapes
         it serves; a corpus-wide top-n belongs to TakeOrdered queries."""
+        if len(args) != 2 or not re.fullmatch(r"\+?\d+", args[1].strip()):
+            return None
+        x, n = args[0], args[1].strip()
+        if int(n) < 1:
+            raise UQueryError.sql_error(
+                f"{m.group(1).lower()}: n must be a positive integer constant"
+            )
+        body = f"array_sort(collect_list(({x})))"
+        if m.group(1).lower() == "max":
+            body = f"reverse({body})"
+        return f"slice({body}, 1, {n})"
 
-        def translate(m, args):
-            if len(args) != 2 or not re.fullmatch(r"\+?\d+", args[1].strip()):
-                return None
-            x, n = args[0], args[1].strip()
-            if int(n) < 1:
-                raise UQueryError.sql_error(
-                    f"{m.group(1).lower()}: n must be a positive integer constant"
-                )
-            body = f"array_sort(collect_list(({x})))"
-            if m.group(1).lower() == "max":
-                body = f"reverse({body})"
-            return f"slice({body}, 1, {n})"
-
-        return self._map_calls(self._TOPN_MINMAX_RE, translate, sql)
-
-    def _rewrite_arg_max_avg_corr(self, sql: str) -> str:
+    def _translate_arg_max_avg_corr(self, m, args: list[str]) -> str | None:
         """Agg-fuzzer catches (batch 28, DuckDB-verified):
 
         - arg_max/arg_min (and their max_by/min_by spellings) SKIP rows
@@ -2572,9 +2450,6 @@ class SqlRewriter:
           DIVIDE_BY_ZERO error under Spark's ANSI mode → pairwise-
           complete covar_pop / (σx·σy) with try_divide.
         """
-        return self._map_calls(self._B28_AGG_RE, self._translate_arg_max_avg_corr, sql)
-
-    def _translate_arg_max_avg_corr(self, m, args: list[str]) -> str | None:
         fn = m.group(1).lower()
         if fn in ("avg", "mean"):
             if len(args) != 1:
@@ -2638,7 +2513,7 @@ class SqlRewriter:
                 raise UQueryError.sql_error(f"{fn} expects (value, key[, n])")
         return repl
 
-    def _rewrite_first_last_order(self, sql: str) -> str:
+    def _translate_first_last(self, m, inner: str) -> str | None:
         """DuckDB ``first/last(x ORDER BY y [DESC])`` → min_by/max_by
         (single sort key; the argless forms are native in both and left
         alone). Batch 18: ``any_value(x ORDER BY y)`` is the same
@@ -2646,9 +2521,6 @@ class SqlRewriter:
         CASE WHEN x IS NOT NULL so min_by/max_by ignore NULL-x rows
         (they skip NULL ordering keys), reproducing first-NON-NULL-in-
         order exactly."""
-        return self._map_calls(self._FIRST_LAST_RE, self._translate_first_last, sql, raw=True)
-
-    def _translate_first_last(self, m, inner: str) -> str | None:
         split = re.split(r"(?i)\border\s+by\b", inner, maxsplit=1)
         if len(split) != 2 or len(self._split_top(inner, ",")) != 1:
             return None
@@ -2681,29 +2553,22 @@ class SqlRewriter:
             key_expr = composite
         return f"{fn}({x}, {key_expr})"
 
-    def _rewrite_struct_extract(self, sql: str) -> str:
+    def _translate_struct_extract(self, m, args):
         """struct_extract(s, 'k') → (s).k (literal keys only)."""
+        if len(args) != 2:
+            raise UQueryError.sql_error("struct_extract expects (struct, 'key')")
+        key = self._lit_parse(args[1])
+        if key is None or not re.fullmatch(r"\w+", key):
+            raise UQueryError.sql_error(
+                "struct_extract: only literal identifier keys are supported"
+            )
+        return f"(({args[0]}).{key})"
 
-        def translate(m, args):
-            if len(args) != 2:
-                raise UQueryError.sql_error("struct_extract expects (struct, 'key')")
-            key = self._lit_parse(args[1])
-            if key is None or not re.fullmatch(r"\w+", key):
-                raise UQueryError.sql_error(
-                    "struct_extract: only literal identifier keys are supported"
-                )
-            return f"(({args[0]}).{key})"
-
-        return self._map_calls(self._STRUCT_EXTRACT_RE, translate, sql)
-
-    def _rewrite_list_has_all(self, sql: str) -> str:
-        def translate(m, args):
-            if len(args) != 2:
-                raise UQueryError.sql_error("list_has_all expects (list, sublist)")
-            a, b = args
-            return f"forall(({b}), uq_he -> array_contains(({a}), uq_he))"
-
-        return self._map_calls(self._LIST_HAS_ALL_RE, translate, sql)
+    def _translate_list_has_all(self, m, args):
+        if len(args) != 2:
+            raise UQueryError.sql_error("list_has_all expects (list, sublist)")
+        a, b = args
+        return f"forall(({b}), uq_he -> array_contains(({a}), uq_he))"
 
     # -- sweep batch 7: explicit raises for untranslatable idioms ---------
 
@@ -2826,7 +2691,7 @@ class SqlRewriter:
         r"(?i)\btrim\s*\((?=\s*(both|leading|trailing)\b)"
     )
 
-    def _rewrite_trim_std(self, sql: str) -> str:
+    def _translate_trim_std(self, m, inner: str) -> str:
         """Batch-18: SQL-standard ``TRIM([BOTH|LEADING|TRAILING] [chars]
         FROM str)``. Spark parses this natively, but the quoted operand
         after FROM matched the path-as-table regex first — `trim(BOTH
@@ -2834,9 +2699,6 @@ class SqlRewriter:
         found by the sweep). Runs BEFORE _rewrite_path_tables and emits
         the DuckDB FUNCTION forms (trim/ltrim/rtrim(s[, chars])) so the
         batch-5 charset-order pass translates them uniformly."""
-        return self._map_calls(self._TRIM_STD_RE, self._translate_trim_std, sql, raw=True)
-
-    def _translate_trim_std(self, m, inner: str) -> str:
         kw = m.group(1).lower()
         rest = inner[re.search(r"(?i)\b" + kw, inner).end() :]
         split = None
@@ -2856,21 +2718,17 @@ class SqlRewriter:
 
     _LIST_WHERE_RE = re.compile(r"(?i)\blist_where\s*\(")
 
-    def _rewrite_list_where(self, sql: str) -> str:
+    def _translate_list_where(self, m, args):
         """Batch-18: ``list_where(l, mask)`` → mask-select via zipped
         structs (NULL mask entries drop the element, like DuckDB)."""
-
-        def translate(m, args):
-            if len(args) != 2:
-                raise UQueryError.sql_error("list_where expects (list, mask)")
-            l, mask = args
-            return (
-                f"transform(filter(zip_with(({l}), ({mask}), "
-                f"(uq_we, uq_wm) -> struct(uq_we AS e, uq_wm AS m)), "
-                f"uq_ws -> uq_ws.m), uq_ws -> uq_ws.e)"
-            )
-
-        return self._map_calls(self._LIST_WHERE_RE, translate, sql)
+        if len(args) != 2:
+            raise UQueryError.sql_error("list_where expects (list, mask)")
+        l, mask = args
+        return (
+            f"transform(filter(zip_with(({l}), ({mask}), "
+            f"(uq_we, uq_wm) -> struct(uq_we AS e, uq_wm AS m)), "
+            f"uq_ws -> uq_ws.m), uq_ws -> uq_ws.e)"
+        )
 
     # -- sweep batch 27: information_schema ---------------------------------
 
@@ -3246,31 +3104,27 @@ class SqlRewriter:
 
     _JSON_CAST_RE = re.compile(r"(?i)\b(try_)?cast\s*\(")
 
-    def _rewrite_json_cast(self, sql: str) -> str:
+    def _translate_json_cast(self, m, inner):
         """``CAST(x AS JSON)`` / ``x::JSON``: DuckDB VALIDATES a VARCHAR
         input and PRESERVES its text (whitespace kept — probed; json()
         is the minifying form), while other types encode through the
         json writer. The input's type is dispatched per ROW-CONSTANT
         typeof() (the uq_duck_typename UDF), so one translation serves
         any operand type."""
+        parts = self._split_top(inner, "as")
+        if len(parts) != 2 or parts[1].strip().lower() != "json":
+            return None
+        x = parts[0].strip()
+        from .functions.parity_udfs import register_parity_udfs
 
-        def translate(m, inner):
-            parts = self._split_top(inner, "as")
-            if len(parts) != 2 or parts[1].strip().lower() != "json":
-                return None
-            x = parts[0].strip()
-            from .functions.parity_udfs import register_parity_udfs
+        register_parity_udfs(self.spark)
+        return (
+            f"(CASE WHEN ({x}) IS NULL THEN CAST(NULL AS STRING) "
+            f"ELSE uq_json_cast(uq_duck_typename(typeof(({x}))), "
+            f"{self._jenc(x)}) END)"
+        )
 
-            register_parity_udfs(self.spark)
-            return (
-                f"(CASE WHEN ({x}) IS NULL THEN CAST(NULL AS STRING) "
-                f"ELSE uq_json_cast(uq_duck_typename(typeof(({x}))), "
-                f"{self._jenc(x)}) END)"
-            )
-
-        return self._map_calls(self._JSON_CAST_RE, translate, sql, raw=True)
-
-    def _rewrite_interval_cast(self, sql: str) -> str:
+    def _translate_interval_cast(self, m, inner):
         """``'1 day 2 hours'::INTERVAL`` / CAST(literal AS INTERVAL)
         (batch 28) → Spark's INTERVAL literal, which picks the proper
         ANSI interval class (day-time or year-month) so comparisons
@@ -3279,17 +3133,13 @@ class SqlRewriter:
         literals error loudly in Spark's parser (DuckDB's calendar
         intervals admit them — documented). Non-literal operands stay
         native."""
-
-        def translate(m, inner):
-            parts = self._split_top(inner, "as")
-            if len(parts) != 2 or parts[1].strip().lower() != "interval":
-                return None
-            lit = self._lit_parse(parts[0].strip())
-            if lit is None:
-                return None
-            return "INTERVAL '" + lit.replace("'", "''") + "'"
-
-        return self._map_calls(self._JSON_CAST_RE, translate, sql, raw=True)
+        parts = self._split_top(inner, "as")
+        if len(parts) != 2 or parts[1].strip().lower() != "interval":
+            return None
+        lit = self._lit_parse(parts[0].strip())
+        if lit is None:
+            return None
+        return "INTERVAL '" + lit.replace("'", "''") + "'"
 
     # no lookahead needed to exclude INTERVAL '1' DAY — its quoted text
     # has no unit words, so the term parser below rejects it anyway
@@ -3386,14 +3236,11 @@ class SqlRewriter:
 
     _GLOB_TVF_RE = re.compile(r"(?i)\b(from|join)\s+glob\s*\(")
 
-    def _rewrite_glob_tvf(self, sql: str) -> str:
+    def _translate_glob_tvf(self, m, args: list[str]) -> str:
         """DuckDB ``FROM glob('pattern')`` → inline VALUES of the
         matched paths (column ``file``, sorted — DuckDB's listing
         order). Driver-side resolution rides the same sandbox as every
         read_* path."""
-        return self._map_calls(self._GLOB_TVF_RE, self._translate_glob_tvf, sql)
-
-    def _translate_glob_tvf(self, m, args: list[str]) -> str:
         if len(args) != 1:
             raise UQueryError.sql_error("glob expects one pattern")
         pat = self._lit_parse(args[0].strip())
@@ -3441,24 +3288,20 @@ class SqlRewriter:
 
     _ARRAY_SLICE_RE = re.compile(r"(?i)\b(array_slice|list_slice)\s*\(")
 
-    def _rewrite_array_slice_fn(self, sql: str) -> str:
+    def _translate_array_slice_fn(self, m, args):
         """array_slice(l, a, b[, step]) → the bracket form (l)[a:b[:s]]
         (runs before the bracket pass; inherits its negative-index,
         step, and string-polymorphism handling). Also consumes the
         4-arg STEP form of list_slice (r13 wave-15 — previously a loud
         wrong-arity error); 3-arg list_slice stays with its own later
         pass (positive-inclusive slice(), no probe round-trip)."""
-
-        def translate(m, args):
-            if m.group(1).lower() == "list_slice" and len(args) != 4:
-                return None
-            if len(args) not in (3, 4):
-                raise UQueryError.sql_error(
-                    "array_slice expects (list, begin, end[, step])"
-                )
-            return f"(({args[0]}))[{':'.join(args[1:])}]"
-
-        return self._map_calls(self._ARRAY_SLICE_RE, translate, sql)
+        if m.group(1).lower() == "list_slice" and len(args) != 4:
+            return None
+        if len(args) not in (3, 4):
+            raise UQueryError.sql_error(
+                "array_slice expects (list, begin, end[, step])"
+            )
+        return f"(({args[0]}))[{':'.join(args[1:])}]"
 
     def _rewrite_fetch_first(self, sql: str) -> str:
         """SQL-standard ``FETCH FIRST/NEXT [n] ROWS ONLY`` → LIMIT, and
@@ -3515,7 +3358,7 @@ class SqlRewriter:
 
     _FROM_JSON_RE = re.compile(r"(?i)\b(from_json|json_transform)\s*\(")
 
-    def _rewrite_from_json(self, sql: str) -> str:
+    def _translate_from_json(self, m, args: list[str]) -> str:
         """DuckDB ``from_json(j, structure)`` / ``json_transform`` →
         per-field try_variant_get over parse_json (round 11 — replaced
         the from_json emission, which silently yielded NULL for
@@ -3529,9 +3372,6 @@ class SqlRewriter:
         casting truncates); the same fractional corner nested inside
         containers still truncates (documented). Non-literal
         structures raise."""
-        return self._map_calls(self._FROM_JSON_RE, self._translate_from_json, sql)
-
-    def _translate_from_json(self, m, args: list[str]) -> str:
         if len(args) != 2:
             raise UQueryError.sql_error(
                 f"{m.group(1)} expects (json, structure)"
@@ -3617,7 +3457,7 @@ class SqlRewriter:
         "milliseconds", "microseconds",
     }
 
-    def _rewrite_timezone_bar_date_trunc(self, sql: str) -> str:
+    def _translate_timezone_bar_date_trunc(self, m, args: list[str]) -> str:
         """Batch-23 sweep:
 
         - timezone(zone, ts) IS ``ts AT TIME ZONE zone`` → the same
@@ -3632,9 +3472,6 @@ class SqlRewriter:
           TIMESTAMP — the string forms silently diverge otherwise);
           decade/century/millennium/isoyear/era raise (no Spark unit).
         """
-        return self._map_calls(self._B23_FN_RE, self._translate_timezone_bar_date_trunc, sql)
-
-    def _translate_timezone_bar_date_trunc(self, m, args: list[str]) -> str:
         fn = m.group(1).lower()
         if fn == "age":
             # batch 28: DuckDB/postgres calendar decomposition as
@@ -4051,7 +3888,7 @@ class SqlRewriter:
     _FACTORIALS = [str(__import__("math").factorial(n)) for n in range(2, 34)]
     _LIST_DISTINCT_RE = re.compile(r"(?i)\b(?:list|array)_distinct\s*\(")
 
-    def _rewrite_list_distinct(self, sql: str) -> str:
+    def _translate_list_distinct(self, m, args):
         """DuckDB list_distinct/array_distinct REMOVE NULL elements
         (list_distinct([5,NULL,7,NULL]) = [7,5], list_distinct([NULL])
         = [] — probed; nested-fuzzer catch round 7) where Spark's
@@ -4061,17 +3898,13 @@ class SqlRewriter:
         was probed per-function and must stay untouched). Element
         order remains a documented deviation (both engines:
         implementation-defined)."""
-
-        def translate(m, args):
-            if len(args) != 1:
-                raise UQueryError.sql_error("list_distinct expects 1 arg")
-            return f"array_distinct(filter(({args[0]}), uq_ld -> uq_ld IS NOT NULL))"
-
-        return self._map_calls(self._LIST_DISTINCT_RE, translate, sql)
+        if len(args) != 1:
+            raise UQueryError.sql_error("list_distinct expects 1 arg")
+        return f"array_distinct(filter(({args[0]}), uq_ld -> uq_ld IS NOT NULL))"
 
     _LIST_ZIP_RE = re.compile(r"(?i)\b(?:list|array)_zip\s*\(")
 
-    def _rewrite_list_zip(self, sql: str) -> str:
+    def _translate_list_zip(self, m, args: list[str]) -> str:
         """list_zip/array_zip → transform over an index sequence into
         named_structs with DuckDB's field names (list_1..list_n;
         arrays_zip would name them 0/1 — probed). NULL-pads to the
@@ -4087,9 +3920,6 @@ class SqlRewriter:
         element type DuckDB's binder would infer. Values match DuckDB
         exactly (all NULL); only the field's declared type diverges
         for non-string sibling lists (ADVICE r13)."""
-        return self._map_calls(self._LIST_ZIP_RE, self._translate_list_zip, sql)
-
-    def _translate_list_zip(self, m, args: list[str]) -> str:
         if not args[0]:
             raise UQueryError.sql_error("list_zip expects at least 1 list")
         agg, trunc = "greatest", False
@@ -4131,7 +3961,7 @@ class SqlRewriter:
 
     _MAP_CONCAT_RE = re.compile(r"(?i)\bmap_concat\s*\(")
 
-    def _rewrite_map_concat(self, sql: str) -> str:
+    def _translate_map_concat(self, m, args):
         """DuckDB map_concat keeps the LAST value for a duplicated key
         AT THE FIRST map's key position (probed: map_concat({'a':1},
         {'b':2,'a':9}) renders keys [a, b] with a=9) where Spark's
@@ -4143,22 +3973,18 @@ class SqlRewriter:
         re-positioned colliding keys at the right map's slot, a
         rendered-key-order divergence). Single-arg calls pass through;
         repeated operand references collapse under Catalyst CSE."""
-
-        def translate(m, args):
-            if len(args) < 2:
-                return None
-            repl = args[0]
-            for b in args[1:]:
-                repl = (
-                    f"map_concat(transform_values(({repl}), (uq_mk, uq_mv) -> "
-                    f"IF(array_contains(map_keys(({b})), uq_mk), "
-                    f"try_element_at(({b}), uq_mk), uq_mv)), "
-                    f"map_filter(({b}), (uq_mk, uq_mv) -> "
-                    f"NOT array_contains(map_keys(({repl})), uq_mk)))"
-                )
-            return repl
-
-        return self._map_calls(self._MAP_CONCAT_RE, translate, sql)
+        if len(args) < 2:
+            return None
+        repl = args[0]
+        for b in args[1:]:
+            repl = (
+                f"map_concat(transform_values(({repl}), (uq_mk, uq_mv) -> "
+                f"IF(array_contains(map_keys(({b})), uq_mk), "
+                f"try_element_at(({b}), uq_mk), uq_mv)), "
+                f"map_filter(({b}), (uq_mk, uq_mv) -> "
+                f"NOT array_contains(map_keys(({repl})), uq_mk)))"
+            )
+        return repl
 
     _B20_FN_RE = re.compile(
         r"(?i)\b(flatten|factorial|trunc|list_contains|array_contains|"
@@ -4592,7 +4418,7 @@ class SqlRewriter:
 
     _ARRAY_AGG_RE = re.compile(r"(?i)\barray_agg\s*\(")
 
-    def _rewrite_array_agg_order(self, sql: str) -> str:
+    def _translate_array_agg_order(self, m, inner: str):
         """Batch-16 sweep: ``array_agg(x ORDER BY k …)`` — DuckDB's
         ordered aggregate; Spark's array_agg has no ORDER BY → collect
         (key…, value) structs and sort with an explicit comparator
@@ -4603,11 +4429,8 @@ class SqlRewriter:
         Window usage and DISTINCT+ORDER BY raise. Structs are never
         NULL, so NULL values are kept exactly like DuckDB; round 8
         added the trailing-FILTER fold and the empty→NULL guard, and
-        `_rewrite_array_agg_nulls` gives the remaining UNORDERED forms
+        `_translate_array_agg_nulls` gives the remaining UNORDERED forms
         the same NULL-keeping treatment (deviation fully closed)."""
-        return self._map_calls(self._ARRAY_AGG_RE, self._translate_array_agg_order, sql, raw=True)
-
-    def _translate_array_agg_order(self, m, inner: str):
         sql, close = m.string, self._close_of(m)
         ob = next(
             (s for s, _e, _w in self._scan_top_level(inner, {"order"})),
@@ -4713,13 +4536,13 @@ class SqlRewriter:
         # the duplicated aggregate dedupes in Catalyst
         return f"(CASE WHEN size({arr}) = 0 THEN NULL ELSE {arr} END)", suffix_end - 1
 
-    def _rewrite_array_agg_nulls(self, sql: str) -> str:
+    def _translate_array_agg_nulls(self, m, inner: str):
         """Unordered ``list()``/``array_agg`` NULL parity (closes NOTES
         item 11, the last known silent wrong-value deviation): DuckDB's
         list()/array_agg KEEP NULL elements and return NULL (not [])
         when no rows aggregate; Spark's collect_list/array_agg drop
         NULLs and return []. Every remaining array_agg call (the
-        ordered forms were consumed by _rewrite_array_agg_order) is
+        ordered forms were consumed by _translate_array_agg_order) is
         rewritten element-in-struct — structs are never NULL, so
         nothing is dropped — then size-guarded back to NULL on empty:
 
@@ -4739,9 +4562,6 @@ class SqlRewriter:
         DuckDB-1.x-probed: NULL-keep, single-NULL DISTINCT, empty→NULL,
         FILTER exclusion, windowed running frames.
         """
-        return self._map_calls(self._ARRAY_AGG_RE, self._translate_array_agg_nulls, sql, raw=True)
-
-    def _translate_array_agg_nulls(self, m, inner: str):
         sql, close = m.string, self._close_of(m)
         inner = inner.strip()
         distinct = False
@@ -5600,7 +5420,7 @@ class SqlRewriter:
         # stddev_pop / sqrt(n) (probed: sem of one value is 0.0, so the
         # POPULATION deviation, not samp); arg_min_null/arg_max_null
         # keep NULL-valued rows → Spark's bare min_by/max_by (the skip
-        # wrap in _rewrite_arg_max_avg_corr exists precisely because the bare
+        # wrap in _translate_arg_max_avg_corr exists precisely because the bare
         # forms DON'T skip).
         sql = self._map_calls(
             self._KURT_POP_RE,
@@ -6136,13 +5956,10 @@ class SqlRewriter:
     # to the unambiguous calendar fields)
     _DATE_PART_OK = {"year", "month", "day", "hour", "minute", "second", "quarter"}
 
-    def _rewrite_date_part_list(self, sql: str) -> str:
+    def _translate_date_part_list(self, m, args: list[str]) -> str:
         """DuckDB ``date_part(['year','month'], e)`` returns a STRUCT of
         the named parts → named_struct over Spark's scalar date_part.
         Runs before the bracket pass (the list must still be [...])."""
-        return self._map_calls(self._DATE_PART_LIST_RE, self._translate_date_part_list, sql)
-
-    def _translate_date_part_list(self, m, args: list[str]) -> str:
         if len(args) != 2:
             raise UQueryError.sql_error("date_part([...], expr) expects 2 args")
         lst = args[0].strip()
@@ -6165,14 +5982,11 @@ class SqlRewriter:
 
     _MAP_ENTRIES_RE = re.compile(r"(?i)\bmap_from_entries\s*\(")
 
-    def _rewrite_map_entries_tuples(self, sql: str) -> str:
+    def _translate_map_entries(self, m, args: list[str]) -> str:
         """DuckDB admits bare tuple literals in map_from_entries
         (``[('a', 1), …]``) — each top-level parenthesised tuple becomes
         struct(...). Runs before the bracket pass; struct-literal
         entries ({'k':…}) are handled by the struct-literal pass."""
-        return self._map_calls(self._MAP_ENTRIES_RE, self._translate_map_entries, sql)
-
-    def _translate_map_entries(self, m, args: list[str]) -> str:
         if len(args) == 1:
             lst = args[0].strip()
             if lst.startswith("[") and lst.endswith("]"):
@@ -6380,7 +6194,7 @@ class SqlRewriter:
     _WINDOW_FILTER_RE = re.compile(r"(?i)\)\s*filter\s*\(\s*where\b")
     _DISTINCT_AGG_RE = re.compile(r"(?i)\b(\w+)\s*\((?=\s*distinct\b)")
 
-    def _rewrite_distinct_over(self, sql: str) -> str:
+    def _translate_distinct_over(self, m, inner: str):
         """Batch-15: DISTINCT aggregates over windows (running distinct
         counts — Spark rejects them) → expression trees over
         ``collect_set(x) OVER w`` (same NULL-skipping, frame semantics
@@ -6389,9 +6203,6 @@ class SqlRewriter:
         DuckDB), min/max → DISTINCT dropped (no-op). Other aggregates
         raise. The repeated collect_set is one physical window function
         (identical expressions dedupe)."""
-        return self._map_calls(self._DISTINCT_AGG_RE, self._translate_distinct_over, sql, raw=True)
-
-    def _translate_distinct_over(self, m, inner: str):
         sql, close = m.string, self._close_of(m)
         after = sql[close + 1 :]
         om = re.match(r"(?i)\s*over\s*", after)
@@ -6441,7 +6252,7 @@ class SqlRewriter:
         → the filter folds into the argument: agg(CASE WHEN c THEN x
         END) (NULL rows don't aggregate), count(*) → count(CASE WHEN c
         THEN 1 END). Multi-arg aggregates raise. DISTINCT window
-        aggregates are handled by _rewrite_distinct_over (batch 15),
+        aggregates are handled by _translate_distinct_over (batch 15),
         which runs first, so any DISTINCT reaching the FILTER fold
         here is the untranslatable combination and raises below. Plain
         (non-window) FILTER is native and untouched (the batch-9 pass
@@ -8332,7 +8143,7 @@ class SqlRewriter:
     }
     _STRF_RE = re.compile(r"(?i)\b(strftime|try_strptime|strptime)\s*\(")
 
-    def _rewrite_strftime(self, sql: str) -> str:
+    def _translate_strftime(self, m, args):
         """DuckDB ``strftime(ts, '%Y-%m-%d')`` / ``strptime(s, fmt)`` →
         Spark ``date_format(ts, 'yyyy-MM-dd')`` / ``to_timestamp(s,
         fmt)`` with C format codes mapped to Java pattern letters.
@@ -8436,81 +8247,78 @@ class SqlRewriter:
             ]
             return f"concat({', '.join(segs)})" if len(segs) > 1 else segs[0]
 
-        def translate(m, args):
-            fn = {
-                "strftime": "date_format",
-                "strptime": "to_timestamp",
-                # batch 18: NULL on parse failure, like DuckDB
-                "try_strptime": "try_to_timestamp",
-            }[m.group(1).lower()]
-            fmt_arg = args[1].strip() if len(args) == 2 else ""
-            # the bracket pass has already turned [..] into array(..)
-            am = re.match(r"(?i)^array\s*\(", fmt_arg)
-            if am and fmt_arg.endswith(")"):
-                fmt_arg = "[" + fmt_arg[am.end() : -1] + "]"
-            if fn != "date_format" and fmt_arg.startswith("["):
-                # batch 22: strptime(s, ['%fmt1', '%fmt2', …]) tries each
-                # format in order. strptime errors when NONE match (but
-                # is NULL on NULL input); try_strptime yields NULL.
-                # Width deviation: DuckDB's list form returns TIMESTAMPTZ
-                # (displays '+00' in a UTC session) — ours stays naive,
-                # same wall-time value (CAST AS TIMESTAMP for parity).
-                fmts = [
-                    f.strip()
-                    for f in self._split_top(fmt_arg[1:-1], ",")
-                    if f.strip()
-                ]
-                if not all(f.startswith("'") and f.endswith("'") for f in fmts):
-                    raise UQueryError.sql_error(
-                        "strptime: format list must be string literals"
-                    )
-                a0 = args[0].strip()
-                tries = ", ".join(
-                    year_defaulted(
-                        f"try_to_timestamp({a0}, {_strf_sql(xlate(f[1:-1]))})",
-                        f[1:-1],
-                    )
-                    for f in fmts
+        fn = {
+            "strftime": "date_format",
+            "strptime": "to_timestamp",
+            # batch 18: NULL on parse failure, like DuckDB
+            "try_strptime": "try_to_timestamp",
+        }[m.group(1).lower()]
+        fmt_arg = args[1].strip() if len(args) == 2 else ""
+        # the bracket pass has already turned [..] into array(..)
+        am = re.match(r"(?i)^array\s*\(", fmt_arg)
+        if am and fmt_arg.endswith(")"):
+            fmt_arg = "[" + fmt_arg[am.end() : -1] + "]"
+        if fn != "date_format" and fmt_arg.startswith("["):
+            # batch 22: strptime(s, ['%fmt1', '%fmt2', …]) tries each
+            # format in order. strptime errors when NONE match (but
+            # is NULL on NULL input); try_strptime yields NULL.
+            # Width deviation: DuckDB's list form returns TIMESTAMPTZ
+            # (displays '+00' in a UTC session) — ours stays naive,
+            # same wall-time value (CAST AS TIMESTAMP for parity).
+            fmts = [
+                f.strip()
+                for f in self._split_top(fmt_arg[1:-1], ",")
+                if f.strip()
+            ]
+            if not all(f.startswith("'") and f.endswith("'") for f in fmts):
+                raise UQueryError.sql_error(
+                    "strptime: format list must be string literals"
                 )
-                body = f"coalesce({tries})"
-                if fn == "to_timestamp":  # strict strptime
-                    body = (
-                        f"(CASE WHEN ({a0}) IS NULL THEN CAST(NULL AS TIMESTAMP) "
-                        f"WHEN {body} IS NOT NULL THEN {body} "
-                        f"ELSE CAST(raise_error('strptime: no format matched') "
-                        f"AS TIMESTAMP) END)"
+            a0 = args[0].strip()
+            tries = ", ".join(
+                year_defaulted(
+                    f"try_to_timestamp({a0}, {_strf_sql(xlate(f[1:-1]))})",
+                    f[1:-1],
+                )
+                for f in fmts
+            )
+            body = f"coalesce({tries})"
+            if fn == "to_timestamp":  # strict strptime
+                body = (
+                    f"(CASE WHEN ({a0}) IS NULL THEN CAST(NULL AS TIMESTAMP) "
+                    f"WHEN {body} IS NOT NULL THEN {body} "
+                    f"ELSE CAST(raise_error('strptime: no format matched') "
+                    f"AS TIMESTAMP) END)"
+                )
+            return body
+        if len(args) == 2 and args[1].strip().startswith("'"):
+            fmt = args[1].strip()[1:-1]
+            a0 = args[0].strip()
+            if fn == "date_format":
+                body = xlate_spliced(fmt, a0)
+            else:
+                strict, lenient = xlate(fmt), xlate(fmt, lenient=True)
+                if strict == lenient:
+                    body = year_defaulted(
+                        f"{fn}({a0}, {_strf_sql(strict)})", fmt
                     )
-                return body
-            if len(args) == 2 and args[1].strip().startswith("'"):
-                fmt = args[1].strip()[1:-1]
-                a0 = args[0].strip()
-                if fn == "date_format":
-                    body = xlate_spliced(fmt, a0)
                 else:
-                    strict, lenient = xlate(fmt), xlate(fmt, lenient=True)
-                    if strict == lenient:
-                        body = year_defaulted(
-                            f"{fn}({a0}, {_strf_sql(strict)})", fmt
+                    # strict wins when both parse (identical result);
+                    # the lenient arm admits DuckDB's unpadded inputs
+                    body = year_defaulted(
+                        f"coalesce(try_to_timestamp({a0}, {_strf_sql(strict)}), "
+                        f"try_to_timestamp({a0}, {_strf_sql(lenient)}))",
+                        fmt,
+                    )
+                    if fn == "to_timestamp":  # strict strptime raises
+                        body = (
+                            f"(CASE WHEN ({a0}) IS NULL THEN CAST(NULL AS TIMESTAMP) "
+                            f"WHEN {body} IS NOT NULL THEN {body} "
+                            f"ELSE CAST(raise_error('strptime: input did not match format') "
+                            f"AS TIMESTAMP) END)"
                         )
-                    else:
-                        # strict wins when both parse (identical result);
-                        # the lenient arm admits DuckDB's unpadded inputs
-                        body = year_defaulted(
-                            f"coalesce(try_to_timestamp({a0}, {_strf_sql(strict)}), "
-                            f"try_to_timestamp({a0}, {_strf_sql(lenient)}))",
-                            fmt,
-                        )
-                        if fn == "to_timestamp":  # strict strptime raises
-                            body = (
-                                f"(CASE WHEN ({a0}) IS NULL THEN CAST(NULL AS TIMESTAMP) "
-                                f"WHEN {body} IS NOT NULL THEN {body} "
-                                f"ELSE CAST(raise_error('strptime: input did not match format') "
-                                f"AS TIMESTAMP) END)"
-                            )
-                return body
-            return None
-
-        return self._map_calls(self._STRF_RE, translate, sql)
+            return body
+        return None
 
     # DuckDB len() is polymorphic (chars of a string / elements of a
     # list); Spark splits it into length() and size().
@@ -8622,7 +8430,7 @@ class SqlRewriter:
 
     _TRY_RE = re.compile(r"(?i)(?<![\w.])TRY\s*\(")
 
-    def _rewrite_try_expr(self, sql: str) -> str:
+    def _translate_try_expr(self, m, args):
         """DuckDB ≥1.2 ``TRY(expr)`` — NULL instead of an error (the
         reference pins 1.5.2; 1.0.0 lacks the form). Narrow, honest
         support: the error classes TRY actually guards map to Spark
@@ -8654,54 +8462,51 @@ class SqlRewriter:
                 return h[2]
             return None
 
-        def translate(m, args):
-            if len(args) != 1:
-                raise UQueryError.sql_error("TRY expects exactly 1 expression")
-            inner = args[0]
-            sqrt_args = _whole(r"(?i)^sqrt\s*\(", inner)
-            if _whole(r"(?i)^cast\s*\(", inner) is not None:
-                # a cast CHAIN (nested colon-casts have folded to
-                # CAST(CAST(..) ..) by now) converts at EVERY level —
-                # DuckDB's TRY nulls an inner conversion error too, and
-                # try_cast over NULL stays NULL, so the chain matches
-                cm = re.match(r"(?i)^cast\s*\(", inner)
-                body = inner[cm.end() : len(inner) - 1]
-                parts = self._split_top(body, "as")
-                operand = " AS ".join(parts[:-1]).strip()
-                # the colon-cast pass parenthesizes its operand —
-                # strip balanced outer parens so the chain test sees it
-                while (
-                    operand.startswith("(")
-                    and self._find_close(operand, 0) == len(operand) - 1
-                ):
-                    operand = operand[1:-1].strip()
-                if len(parts) >= 2 and _whole(r"(?i)^cast\s*\(", operand) is not None:
-                    operand = self._rewrite_try_expr(f"TRY({operand})")
-                    repl = f"try_cast({operand} AS {parts[-1].strip()})"
-                else:
-                    repl = "try_" + inner
-            elif _whole(r"(?i)^(?:try_)?strptime\s*\(", inner) is not None:
-                repl = "try_" + inner if not inner.lower().startswith("try_") else inner
-            elif _whole(r"(?i)^(ln|log|log2|log10)\s*\(", inner) is not None:
-                repl = f"({inner})"
-            elif sqrt_args is not None:
-                if len(sqrt_args) != 1:
-                    raise UQueryError.sql_error("TRY(sqrt): malformed call")
-                a = sqrt_args[0]
-                repl = (
-                    f"(CASE WHEN ({a}) < 0 THEN CAST(NULL AS DOUBLE) "
-                    f"ELSE sqrt(({a})) END)"
-                )
+        if len(args) != 1:
+            raise UQueryError.sql_error("TRY expects exactly 1 expression")
+        inner = args[0]
+        sqrt_args = _whole(r"(?i)^sqrt\s*\(", inner)
+        if _whole(r"(?i)^cast\s*\(", inner) is not None:
+            # a cast CHAIN (nested colon-casts have folded to
+            # CAST(CAST(..) ..) by now) converts at EVERY level —
+            # DuckDB's TRY nulls an inner conversion error too, and
+            # try_cast over NULL stays NULL, so the chain matches
+            cm = re.match(r"(?i)^cast\s*\(", inner)
+            body = inner[cm.end() : len(inner) - 1]
+            parts = self._split_top(body, "as")
+            operand = " AS ".join(parts[:-1]).strip()
+            # the colon-cast pass parenthesizes its operand —
+            # strip balanced outer parens so the chain test sees it
+            while (
+                operand.startswith("(")
+                and self._find_close(operand, 0) == len(operand) - 1
+            ):
+                operand = operand[1:-1].strip()
+            if len(parts) >= 2 and _whole(r"(?i)^cast\s*\(", operand) is not None:
+                operand = self._translate_try_expr(m, [operand])
+                repl = f"try_cast({operand} AS {parts[-1].strip()})"
             else:
-                raise UQueryError.sql_error(
-                    "TRY: unsupported expression form (supported, each "
-                    "spanning the whole argument: CAST/::, strptime, "
-                    "ln/log/log2/log10, sqrt; division and modulo "
-                    "by zero are already NULL)"
-                )
-            return repl
-
-        return self._map_calls(self._TRY_RE, translate, sql)
+                repl = "try_" + inner
+        elif _whole(r"(?i)^(?:try_)?strptime\s*\(", inner) is not None:
+            repl = "try_" + inner if not inner.lower().startswith("try_") else inner
+        elif _whole(r"(?i)^(ln|log|log2|log10)\s*\(", inner) is not None:
+            repl = f"({inner})"
+        elif sqrt_args is not None:
+            if len(sqrt_args) != 1:
+                raise UQueryError.sql_error("TRY(sqrt): malformed call")
+            a = sqrt_args[0]
+            repl = (
+                f"(CASE WHEN ({a}) < 0 THEN CAST(NULL AS DOUBLE) "
+                f"ELSE sqrt(({a})) END)"
+            )
+        else:
+            raise UQueryError.sql_error(
+                "TRY: unsupported expression form (supported, each "
+                "spanning the whole argument: CAST/::, strptime, "
+                "ln/log/log2/log10, sqrt; division and modulo "
+                "by zero are already NULL)"
+            )
+        return repl
 
     def _rewrite_colon_cast(self, sql: str) -> str:
         """DuckDB ``expr::TYPE`` → ``CAST(expr AS TYPE)`` so the CAST pass
@@ -8725,10 +8530,9 @@ class SqlRewriter:
 
     _UQ_POLY_ANY_RE = re.compile(r"\buq_poly(mapi?)?\s*\(")
 
-    def _neutralize_markers(
-        self, text: str, token: str, mode: str = "null"
-    ) -> str:
-        """Neutralize every unresolved poly marker in a probe text: an
+    def _neutralize_marker(self, token: str, mode: str, hm, hargs) -> str:
+        """The neutral form of one unresolved poly marker in a probe text,
+        a ``_map_calls`` translator over ``_UQ_POLY_ANY_RE``: an
         ANCESTOR marker (containing the tagged occurrence) keeps the arg
         holding the token so the occurrence survives. SIBLING markers:
         mode 'null' replaces them with NULL (type-wildcard — but a
@@ -8746,27 +8550,23 @@ class SqlRewriter:
         fallback). probe_ok tries all three (batch-28 temporal-fuzzer
         catch first showed a NULLed sibling silently vetoing the
         date-widening arm)."""
-
-        def neutralize(hm, hargs):
-            kind = hm.group(1)
-            if any(token in a for a in hargs) and len(hargs) in (2, 3):
-                inner = next((a for a in hargs if token in a), hargs[0])
-            elif mode == "null":
-                inner = "NULL"
-            elif mode == "mapform" and kind and len(hargs) in (2, 3):
-                inner = (
-                    f"filter(array(try_element_at(({hargs[0]}), {hargs[1]})), "
-                    f"uq_mv -> uq_mv IS NOT NULL)"
-                )
-            elif kind == "mapi" and len(hargs) == 3:
-                inner = hargs[2]
-            elif kind == "map" and len(hargs) == 2:
-                inner = f"element_at(({hargs[0]}), {hargs[1]})"
-            else:
-                inner = hargs[0]
-            return f"({inner})"
-
-        return self._map_calls(self._UQ_POLY_ANY_RE, neutralize, text)
+        kind = hm.group(1)
+        if any(token in a for a in hargs) and len(hargs) in (2, 3):
+            inner = next((a for a in hargs if token in a), hargs[0])
+        elif mode == "null":
+            inner = "NULL"
+        elif mode == "mapform" and kind and len(hargs) in (2, 3):
+            inner = (
+                f"filter(array(try_element_at(({hargs[0]}), {hargs[1]})), "
+                f"uq_mv -> uq_mv IS NOT NULL)"
+            )
+        elif kind == "mapi" and len(hargs) == 3:
+            inner = hargs[2]
+        elif kind == "map" and len(hargs) == 2:
+            inner = f"element_at(({hargs[0]}), {hargs[1]})"
+        else:
+            inner = hargs[0]
+        return f"({inner})"
 
     _TIME_CAST_RE = re.compile(r"(?i)\b(try_)?cast\s*\(")
 
@@ -9012,7 +8812,7 @@ class SqlRewriter:
                 pos = s + len(repl)
         return sql
 
-    def _rewrite_time_cast(self, sql: str) -> str:
+    def _translate_time_cast(self, m, inner):
         """Round 8: ``CAST(x AS TIME)`` — native under
         spark.sql.timeType.enabled for string/time operands, but Spark
         has no TIMESTAMP→TIME cast, so that operand class takes a
@@ -9021,20 +8821,16 @@ class SqlRewriter:
         dispatches per occurrence with proper sibling neutralization —
         a compose-style probe breaks when one query holds several TIME
         casts (each slot's neutral form is itself unanalyzable)."""
-
-        def translate(m, inner):
-            parts = self._split_top(inner, "as")
-            if len(parts) != 2 or parts[1].strip().lower() != "time":
-                return None
-            kw = (m.group(1) or "").upper()
-            expr = parts[0].strip()
-            return (
-                f"uq_poly({kw}CAST(date_format(({expr}), "
-                f"'HH:mm:ss.SSSSSS') AS TIME), "
-                f"{kw}CAST(({expr}) AS TIME))"
-            )
-
-        return self._map_calls(self._TIME_CAST_RE, translate, sql, raw=True)
+        parts = self._split_top(inner, "as")
+        if len(parts) != 2 or parts[1].strip().lower() != "time":
+            return None
+        kw = (m.group(1) or "").upper()
+        expr = parts[0].strip()
+        return (
+            f"uq_poly({kw}CAST(date_format(({expr}), "
+            f"'HH:mm:ss.SSSSSS') AS TIME), "
+            f"{kw}CAST(({expr}) AS TIME))"
+        )
 
     def _rewrite_poly_subscript(self, sql: str) -> str:
         """Resolve ``uq_poly(list_form, string_form)`` markers emitted by
@@ -9091,7 +8887,11 @@ class SqlRewriter:
             def probe_ok(cand: str) -> bool:
                 tagged = sql[: m.start()] + f"({TOKEN}({cand}))" + sql[close + 1 :]
                 for mode in ("null", "arg1", "mapform"):
-                    probe = self._neutralize_markers(tagged, TOKEN, mode)
+                    probe = self._map_calls(
+                        self._UQ_POLY_ANY_RE,
+                        functools.partial(self._neutralize_marker, TOKEN, mode),
+                        tagged,
+                    )
                     # pending TIME ∓ year-month interval sites (fixed by
                     # the LATER wraparound pass) do not analyze natively
                     # and would veto every sibling probe — strip them,
@@ -9319,7 +9119,8 @@ class SqlRewriter:
             target = f"(SELECT * FROM {target})"
         # resolve quoted paths / read_* TVFs inside the target up front —
         # the schema probe below needs runnable Spark SQL
-        target = self._rewrite_path_tables(self._rewrite_tvfs(target))
+        target = self._map_calls(_TVF_RE, self._translate_tvfs, target, raw=True)
+        target = self._rewrite_path_tables(target)
         schema = self.spark.sql(f"SELECT * FROM {target} t LIMIT 0").schema
         aggs: list[str] = ["count(*) AS uq_n"]
         cells: list[str] = []
@@ -9563,18 +9364,174 @@ class SqlRewriter:
         fixpoint). Whoever runs that text drops them when it is done."""
         return list(getattr(_PROBE_TLS, "temp_views", ()))
 
+    # -- pipeline steps of their own --------------------------------------
+
+    _LITERAL_YEAR_RE = re.compile(r"(?i)\b(date|timestamp(?:_ntz)?|timestamptz)(\s*')(\d{1,3})-")
+
+    def _pad_literal_years(self, sql: str) -> str:
+        """Zero-pad a typed literal's year to 4 digits: Spark requires
+        them, DuckDB accepts DATE '999-06-01'. BC years stay untouched
+        (a loud error, not a silent one)."""
+        return self._sub_code_fn(
+            self._LITERAL_YEAR_RE,
+            lambda m: f"{m.group(1)}{m.group(2)}{int(m.group(3)):04d}-",
+            sql,
+        )
+
+    _ARRAY_TYPE_RE = re.compile(
+        r"(?i)(\bas\s+|::\s*)"
+        r"([a-z_]\w*(?:\s*\(\s*\d+(?:\s*,\s*\d+)?\s*\))?)"
+        r"((?:\s*\[\s*\d*\s*\])+)"
+    )
+
+    def _rewrite_array_types(self, sql: str) -> str:
+        """DuckDB's array-type suffix, CAST(x AS DOUBLE[]) / x::FLOAT[2]
+        → ARRAY<…>. Fixed sizes drop (Spark has no fixed-length arrays;
+        the values are the same), and the element's DuckDB type name
+        maps here, so the cast pass never descends into ARRAY<…>."""
+
+        def array_type(m):
+            ty = self._map_type(m.group(2).strip())
+            for _ in range(m.group(3).count("[")):
+                ty = f"ARRAY<{ty}>"
+            return m.group(1) + ty
+
+        return self._sub_code_fn(self._ARRAY_TYPE_RE, array_type, sql)
+
+    def _rewrite_py_lambda(self, sql: str) -> str:
+        """DuckDB ≥1.3's python-style ``lambda x, y: expr`` → the arrow
+        form ``(x, y) -> expr`` that the later passes and Spark read."""
+        return self._sub_code_fn(
+            self._PY_LAMBDA_RE,
+            lambda m: (
+                m.group(1)
+                if "," not in m.group(1)
+                else "(" + ", ".join(p.strip() for p in m.group(1).split(",")) + ")"
+            )
+            + " -> ",
+            sql,
+        )
+
+    _ELEMENT_AT_RE = re.compile(r"(?i)\belement_at\s*\(")
+
+    def _translate_element_at(self, m, inner):
+        """DuckDB's element_at is the MAP accessor (a one-element list,
+        [] for a missing key): exactly Spark's map_extract."""
+        return f"map_extract({inner})"
+
+    _REVERSE_RE = re.compile(r"(?i)(?<![\w.])(uq_native_)?reverse\s*\(")
+
+    def _translate_reverse(self, m, inner):
+        """DuckDB's reverse() is string-only and grapheme-aware →
+        uq_reverse_graphemes. The bracket pass's step slices reverse
+        lists through the ``uq_native_reverse`` sentinel, which becomes
+        Spark's own reverse here."""
+        if m.group(1):
+            return f"reverse({inner})"
+        from .functions.parity_udfs import register_parity_udfs
+
+        register_parity_udfs(self.spark)
+        return f"uq_reverse_graphemes({inner})"
+
+    _UNICODE_PARITY_RE = re.compile(
+        r"(?i)(?<![\w.])(upper|ucase|lower|lcase|levenshtein|editdist3)\s*\("
+    )
+    # DuckDB name → (native Spark function, parity UDF, argument count)
+    _UNICODE_PARITY = {
+        "upper": ("upper", "uq_upper_simple", 1),
+        "ucase": ("upper", "uq_upper_simple", 1),
+        "lower": ("lower", "uq_lower_simple", 1),
+        "lcase": ("lower", "uq_lower_simple", 1),
+        "levenshtein": ("levenshtein", "uq_lev_bytes", 2),
+        "editdist3": ("levenshtein", "uq_lev_bytes", 2),
+    }
+
+    def _translate_unicode_parity(self, m, args):
+        """DuckDB cases through utf8proc's SIMPLE 1:1 mapping
+        (upper('straße') = 'STRAẞE') and measures string distances on
+        UTF-8 bytes. ASCII input (length = octet_length) keeps the native
+        JVM function; only non-ASCII rows pay the parity UDF. Inside a
+        higher-order lambda, where a Python UDF cannot run, the uq_poly
+        probe falls back to the native form (a documented deviation)."""
+        native, udf, nargs = self._UNICODE_PARITY[m.group(1).lower()]
+        if len(args) != nargs:
+            return None
+        from .functions.parity_udfs import register_parity_udfs
+
+        register_parity_udfs(self.spark)
+        ascii_guard = " AND ".join(f"length(({a})) = octet_length(({a}))" for a in args)
+        argtext = ", ".join(f"({a})" for a in args)
+        hybrid = f"CASE WHEN {ascii_guard} THEN {native}({argtext}) ELSE {udf}({argtext}) END"
+        return f"uq_poly({native}({argtext}), {hybrid})"
+
+    _TZ_OFFSET_RE = re.compile(r"(?i)\b(timezone_hour|timezone_minute)\s*\(")
+
+    def _translate_timezone_offset(self, m, args):
+        """timezone_hour/timezone_minute are 0 for naive timestamps in a
+        UTC session (as in DuckDB), and NULL for NULL."""
+        if len(args) != 1:
+            raise UQueryError.sql_error(f"{m.group(1).lower()} expects 1 arg")
+        return (
+            f"(CASE WHEN CAST(({args[0]}) AS TIMESTAMP) IS NULL "
+            f"THEN CAST(NULL AS BIGINT) ELSE 0 END)"
+        )
+
+    _SPLIT_TO_TABLE_RE = re.compile(r"(?i)\bregexp_split_to_table\s*\(")
+
+    def _translate_regexp_split_to_table(self, m, args):
+        """regexp_split_to_table(s, re) is unnest over a regex split."""
+        if len(args) != 2:
+            raise UQueryError.sql_error("regexp_split_to_table expects (string, regex)")
+        return f"unnest(split({args[0]}, {args[1]}, -1))"
+
+    _CONSTANT_RE = re.compile(
+        r"(?i)\b(current_database|version|count_star)\s*\(\s*\)|\b(current_user)\b(?!\s*\()"
+    )
+    # DuckDB's zero-argument constants; version() is read on use
+    _CONSTANTS = {
+        "current_database": "'memory'",
+        "count_star": "count(*)",
+        "current_user": "'duckdb'",
+    }
+
+    def _rewrite_constants(self, sql: str) -> str:
+        """current_database(), version() (the oracle engine's 'vX.Y.Z'),
+        count_star() and current_user → their values."""
+
+        def constant(m):
+            name = m.group(m.lastindex).lower()
+            return self._CONSTANTS.get(name) or f"'v{_duckdb_version()}'"
+
+        return self._sub_code_fn(self._CONSTANT_RE, constant, sql)
+
+    def _reject_named_args(self, sql: str) -> str:
+        """A ``:=`` that no pass consumed is a DuckDB named-argument
+        call, which Spark's builtins do not accept: a clean 400."""
+        if self._search_code(re.compile(r":="), sql):
+            raise UQueryError.sql_error(
+                "named function arguments (name := value) are not supported"
+            )
+        return sql
+
+    def _restore_pivot_names(self, sql: str) -> str:
+        """Pivot-name tokens back to their column names. getattr: pure
+        rewrite property tests call passes without rewrite(). The map is
+        dropped with the call state, so a token from another request can
+        never be seen or cleared here."""
+        names = getattr(_PROBE_TLS, "pivot_names", None)
+        if names and "uq_pvn_" in sql:
+            for tok in [t for t in names if f"`{t}`" in sql]:
+                sql = sql.replace(f"`{tok}`", f"`{names[tok]}`")
+        return sql
+
     def _rewrite_inner(self, sql: str) -> str:
         if _FORBIDDEN_RE.match(sql):
             raise UQueryError.sql_error(
                 "session-mutating statements are disabled (configuration is locked)"
             )
-        # PREPARE / EXECUTE / DEALLOCATE — DuckDB prepared statements
-        # (round 11; probed: redefinition allowed, DEALLOCATE of a
-        # missing name is a silent no-op, EXECUTE of a missing name
-        # errors, $n repeats/reorders, '$1' inside literals is text,
-        # strict argument-count match). The statement TEXT is stored
-        # raw and the full pipeline runs at EXECUTE time, so prepared
-        # statements see current views/macros like DuckDB's binder.
+        # PREPARE / EXECUTE / DEALLOCATE: DuckDB prepared statements. The
+        # text is stored raw and the whole pipeline runs at EXECUTE, so it
+        # sees the views and macros current then, as DuckDB's binder does.
         m = _PREPARE_RE.match(sql)
         if m:
             self._prepared[m.group(1).lower()] = m.group(2)
@@ -9587,11 +9544,8 @@ class SqlRewriter:
                     f'Prepared statement "{m.group(1)}" does not exist'
                 )
             args = self._arg_list(m.group(2) or "")
-            # Depth guard (ADVICE r12): a self-referential statement
-            # (PREPARE a AS EXECUTE a($1); EXECUTE a(1)) otherwise
-            # recurses until an uncaught RecursionError — bound it like
-            # the macro fixpoint's loop and raise the 400-contract
-            # error instead.
+            # a self-referential statement (PREPARE a AS EXECUTE a($1))
+            # would recurse without bound: raise a 400 instead
             depth = _PROBE_TLS.execute_depth
             if depth >= 16:
                 raise UQueryError.sql_error(
@@ -9609,405 +9563,163 @@ class SqlRewriter:
         if m:
             self._prepared.pop(m.group(1).lower(), None)
             return "SELECT 1 AS ok WHERE false"
-        # batch-26 session DDL first: CREATE VIEW/TABLE bodies recurse
-        # through the full pipeline, DML raises
+        # session DDL: CREATE VIEW/TABLE bodies recurse through rewrite(),
+        # DML raises
         if re.match(r"(?is)^\s*(create|drop|insert|update|delete|merge|truncate)\b", sql):
             return self._rewrite_session_ddl(sql)
-        # batch-28 statement normalizations: DuckDB's EXPLAIN ANALYZE
-        # profiles at runtime — Spark's closest is the plain plan
-        # (documented: no runtime profile); SHOW ALL TABLES lists the
-        # same set as SHOW TABLES here (single in-memory schema)
+        # EXPLAIN ANALYZE profiles at run time in DuckDB; Spark's closest
+        # is the plain plan. SHOW ALL TABLES lists the one schema.
         sql = re.sub(r"(?is)^\s*explain\s+analyze\b", "EXPLAIN", sql)
         sql = re.sub(r"(?is)^\s*show\s+all\s+tables\b", "SHOW TABLES", sql)
-        # macros FIRST — DuckDB inlines at bind and user macros shadow
-        # every built-in name (round-10 regression: the operator-alias
-        # pass saw a 2-arg macro named `mod` first and emitted `%` —
-        # silent wrong value); bodies are raw DuckDB dialect and need
-        # the full pipeline below anyway.
-        sql = self._expand_macros(sql)
-        sql = self._rewrite_summarize(sql)
-        sql = self._rewrite_from_first(sql)
-        sql = self._rewrite_recursive_union(sql)
-        # batch-24: standard FETCH FIRST / OFFSET n ROWS → LIMIT/OFFSET
-        sql = self._rewrite_fetch_first(sql)
-        sql = self._rewrite_tvfs(sql)
-        sql = self._rewrite_glob_tvf(sql)
-        sql = self._rewrite_information_schema(sql)
-        sql = self._rewrite_pivot_statement(sql)
-        sql = self._rewrite_unpivot_statement(sql)
-        # batch-18: standard TRIM(... FROM 'lit') BEFORE path tables —
-        # the quoted operand after FROM would read as a path table
-        sql = self._rewrite_trim_std(sql)
-        sql = self._rewrite_path_tables(sql)
-        # literal escape space first: user literals are DuckDB (escape-
-        # free); every pass below emits literals in Spark escape space
-        sql = self._normalize_literals(sql)
-        # Spark's typed literals require 4-digit years; DuckDB accepts
-        # DATE '999-06-01' (round-11 wave-6 probe — the whole family
-        # errored loudly). Zero-pad the year. BC years (DuckDB
-        # '(-infinity)'/negative) stay untouched: loud, not silent.
-        sql = self._sub_code_fn(
-            re.compile(
-                r"(?i)\b(date|timestamp(?:_ntz)?|timestamptz)(\s*')(\d{1,3})-"
-            ),
-            lambda m: f"{m.group(1)}{m.group(2)}{int(m.group(3)):04d}-",
-            sql,
-        )
-        # DuckDB array-type suffix — CAST(x AS DOUBLE[]) / x::FLOAT[2] —
-        # BEFORE the bracket pass, which would otherwise read `TYPE[]`
-        # as a subscript on an identifier and mangle the cast (round-11
-        # wave-9 catch: every spelling was a loud parse error). Fixed
-        # sizes drop (Spark has no fixed-length arrays — same values,
-        # documented); inner DuckDB type names map here so the late
-        # cast pass never needs to descend into ARRAY<…>.
-        def _arr_ty(m):
-            ty = self._map_type(m.group(2).strip())
-            for _ in range(m.group(3).count("[")):
-                ty = f"ARRAY<{ty}>"
-            return m.group(1) + ty
-
-        sql = self._sub_code_fn(
-            re.compile(
-                r"(?i)(\bas\s+|::\s*)"
-                r"([a-z_]\w*(?:\s*\(\s*\d+(?:\s*,\s*\d+)?\s*\))?)"
-                r"((?:\s*\[\s*\d*\s*\])+)"
-            ),
-            _arr_ty,
-            sql,
-        )
-        sql = self._raise_unsupported(sql)
-        sql = self._rewrite_json_arrows(sql)
-        # DuckDB ≥1.3 python-style lambda — `lambda x, y: expr` is the
-        # NEW preferred syntax (docs deprecate `x -> expr`; the
-        # reference pins 1.5.2) → normalize to the arrow form the rest
-        # of the pipeline and Spark parse. Before the map-literal pass
-        # only for tidiness — the `lambda` keyword makes the colon
-        # unambiguous. Code-only scan: 'lambda' inside string literals
-        # stays text.
-        sql = self._sub_code_fn(
-            self._PY_LAMBDA_RE,
-            lambda m: (
-                m.group(1)
-                if "," not in m.group(1)
-                else "(" + ", ".join(p.strip() for p in m.group(1).split(",")) + ")"
-            )
-            + " -> ",
-            sql,
-        )
-        # MAP {} before brackets: a subscript on a map literal must see a
-        # ')'-terminated operand to read as postfix.
-        sql = self._rewrite_map_literal(sql)
-        # batch-23: DuckDB element_at is the MAP accessor (returns a
-        # single-element LIST, [] when missing) — exactly map_extract.
-        # Must run before the bracket pass, whose step-slice output emits
-        # Spark's own element_at().
-        sql = self._sub_code_fn(
-            re.compile(r"(?i)\belement_at\s*\("), lambda _m: "map_extract(", sql
-        )
-        # bare struct literals AFTER map literals: `MAP {…}` must be
-        # consumed first or the lookbehind would read it as a struct.
-        sql = self._rewrite_struct_literal(sql)
-        # batch-24: array_slice(l, a, b[, step]) is the function spelling
-        # of the bracket slice — convert BEFORE the bracket pass so
-        # negatives/steps/string-poly all ride the same machinery
-        sql = self._rewrite_array_slice_fn(sql)
-        # list-typed date_part and tuple entries need the [...] / (…,…)
-        # source text — before the bracket pass consumes it
-        sql = self._rewrite_date_part_list(sql)
-        sql = self._rewrite_map_entries_tuples(sql)
-        sql = self._rewrite_bracket_syntax(sql)
-        # batch-25: dot-chaining x.f(a) → f(x, a) AFTER brackets (list
-        # literals are array(...) calls by now) and BEFORE renames
-        sql = self._rewrite_dot_chain(sql)
-        # batch-28: DuckDB reverse() is GRAPHEME-aware and string-only
-        # (list reversal is list_reverse); intercept user calls here —
-        # later passes emit Spark's native reverse for lists, and the
-        # bracket pass's step-slice emission used the sentinel above
-        if self._search_code(re.compile(r"(?i)(?<![\w.])reverse\s*\("), sql):
-            from .functions.parity_udfs import register_parity_udfs
-
-            register_parity_udfs(self.spark)
-            sql = self._sub_code_fn(
-                re.compile(r"(?i)(?<![\w.])reverse\s*\("),
-                lambda _m: "uq_reverse_graphemes(",
-                sql,
-            )
-        # restore the bracket pass's sentinel (list reversal is native)
-        sql = self._sub_code_fn(
-            re.compile(r"\buq_native_reverse\s*\("), lambda _m: "reverse(", sql
-        )
-        # batch-28 unicode matrix: DuckDB cases via utf8proc's SIMPLE
-        # 1:1 mapping (upper('straße')='STRAẞE', no full/context maps)
-        # and its string distances run on UTF-8 BYTES. ASCII input —
-        # detected by length = octet_length — keeps the native JVM
-        # fast path; only non-ASCII rows pay the parity UDF.
-        for name, native, udf, nargs in (
-            ("upper", "upper", "uq_upper_simple", 1),
-            ("ucase", "upper", "uq_upper_simple", 1),
-            ("lower", "lower", "uq_lower_simple", 1),
-            ("lcase", "lower", "uq_lower_simple", 1),
-            ("levenshtein", "levenshtein", "uq_lev_bytes", 2),
-            ("editdist3", "levenshtein", "uq_lev_bytes", 2),
-        ):
-
-            def unicode_parity(m2, args2, native=native, udf=udf, nargs=nargs):
-                if len(args2) != nargs:
-                    return None
-                from .functions.parity_udfs import register_parity_udfs
-
-                register_parity_udfs(self.spark)
-                ascii_guard = " AND ".join(
-                    f"length(({a})) = octet_length(({a}))" for a in args2
-                )
-                argtext = ", ".join(f"({a})" for a in args2)
-                hybrid = (
-                    f"CASE WHEN {ascii_guard} THEN {native}({argtext}) "
-                    f"ELSE {udf}({argtext}) END"
-                )
-                # uq_poly: a Python UDF can't sit inside a higher-order
-                # lambda — there the probe falls back to the native JVM
-                # form (residual deviation: non-ASCII casing INSIDE
-                # lambdas keeps full-map semantics; documented)
-                return f"uq_poly({native}({argtext}), {hybrid})"
-
-            sql = self._map_calls(
-                re.compile(rf"(?i)(?<![\w.]){name}\s*\("), unicode_parity, sql
-            )
-        # batch-28: timezone_hour/minute are 0 for naive timestamps
-        # (UTC session — DuckDB-verified), NULL-propagating
-        for tzfn in ("timezone_hour", "timezone_minute"):
-
-            def tz_offset(m, args, tzfn=tzfn):
-                if len(args) != 1:
-                    raise UQueryError.sql_error(f"{tzfn} expects 1 arg")
-                return (
-                    f"(CASE WHEN CAST(({args[0]}) AS TIMESTAMP) IS NULL "
-                    f"THEN CAST(NULL AS BIGINT) ELSE 0 END)"
-                )
-
-            sql = self._map_calls(re.compile(rf"(?i)\b{tzfn}\s*\("), tz_offset, sql)
-        # round-8 gap scalars BEFORE the rename (2-arg array_length
-        # collapses to the 1-arg form the rename maps to size)
-        sql = self._rewrite_regr_avg_array_length(sql)
-        # 3-arg regexp_matches BEFORE the rename (the 1:1 rename to
-        # regexp_like only fits the 2-arg form)
-        sql = self._rewrite_regexp_matches_flags(sql)
-        sql = self._rewrite_function_names(sql)
-        # batch-15 parity scalars after the rename table (their names
-        # are not in it) and before lambda/scalar passes touch the args
-        sql = self._rewrite_parity_fns(sql)
-        # batch-16: ordered array_agg AFTER the list->array_agg rename,
-        # unnest (FROM + select generator), COLLATE NOCASE
-        sql = self._rewrite_array_agg_order(sql)
-        # regexp_split_to_table(s, re) is unnest∘regexp-split (r13
-        # probe batch B — was UNRESOLVED_ROUTINE); rewritten BEFORE the
-        # unnest pass so generator placement rules apply unchanged
-
-        def split_to_table(m, args):
-            if len(args) != 2:
-                raise UQueryError.sql_error(
-                    "regexp_split_to_table expects (string, regex)"
-                )
-            return f"unnest(split({args[0]}, {args[1]}, -1))"
-
-        sql = self._map_calls(
-            re.compile(r"(?i)\bregexp_split_to_table\s*\("), split_to_table, sql
-        )
-        sql = self._rewrite_unnest(sql)
-        sql = self._rewrite_collate(sql)
-        # list_distinct NULL removal BEFORE b17/scalar passes that emit
-        # Spark's native array_distinct internally
-        sql = self._rewrite_list_distinct(sql)
-        sql = self._rewrite_map_concat(sql)
-        sql = self._rewrite_list_zip(sql)
-        sql = self._rewrite_sign_encode_make_timestamp(sql)
-        # batch-19 list family BEFORE list_aggregate (list_sum/avg/count
-        # expand to list_aggregate text)
-        sql = self._rewrite_list_family(sql)
-        sql = self._rewrite_lambda_index(sql)
-        # batch-12 operator symbols BEFORE divide_xor (whose xor() output
-        # emits a genuine XOR ^) and before the list-metric translations
-        sql = self._rewrite_operator_symbols(sql)
-        # batch-20 AFTER operator symbols (postfix ! must not see !~)
-        sql = self._rewrite_flatten_factorial_contains(sql)
-        # batch-22: printf/graphemes/AT TIME ZONE/split_part(…, 0)
-        sql = self._rewrite_printf_graphemes_at_time_zone(sql)
-        # batch-23: timezone()/bar()/bitstring()/date_trunc DATE units
-        sql = self._rewrite_timezone_bar_date_trunc(sql)
-        # batch-8 scalar semantics BEFORE list_nulls (that pass emits
-        # array concat() calls that must stay un-stringified)
-        sql = self._rewrite_scalar_semantics(sql)
-        sql = self._rewrite_agg_semantics(sql)
-        # batch-28 agg fixes AFTER agg_semantics (ORDER BY stripping,
-        # favg emission) and BEFORE first_last (its min_by/max_by
-        # emissions keep NULL values by design)
-        sql = self._rewrite_arg_max_avg_corr(sql)
-        sql = self._rewrite_topn_minmax(sql)
-        # unordered array_agg NULL parity AFTER agg_semantics (FILTER
-        # gains its WHERE keyword there) and BEFORE the window passes
-        # (the emitted OVER name still gets named-spec inlining)
-        sql = self._rewrite_array_agg_nulls(sql)
-        # batch-15 nested aggregates (mad/entropy/histogram) emit plain
-        # Spark lambdas/CASTs that later passes leave alone
-        sql = self._rewrite_nested_aggs(sql)
-        # batch-10 datetime corners BEFORE the epoch/ISO passes (the
-        # EXTRACT conversion emits epoch()/isodow() function forms)
-        sql = self._rewrite_datetime_corners(sql)
-        sql = self._rewrite_string_list_corners(sql)
-        sql = self._rewrite_list_agg_aliases(sql)
-        sql = self._rewrite_list_aggregate(sql)
-        sql = self._rewrite_list_reduce(sql)
-        sql = self._rewrite_list_slice(sql)
-        sql = self._rewrite_range_calls(sql)
-        sql = self._rewrite_format(sql)
-        sql = self._rewrite_date_diff(sql)
-        sql = self._rewrite_dayname(sql)
-        sql = self._rewrite_epoch(sql)
-        # ordered-window percentiles BEFORE the WITHIN-GROUP quantile
-        # rewrite (Spark's percentile family rejects ORDER BY specs)
-        sql = self._rewrite_ordered_window_percentiles(sql)
-        sql = self._rewrite_quantile(sql)
-        sql = self._rewrite_product(sql)
-        sql = self._rewrite_time_bucket(sql)
-        sql = self._rewrite_similar_glob(sql)
-        sql = self._strip_trailing_select_comma(sql)
-        sql = self._rewrite_json_extract(sql)
-        sql = self._rewrite_json_array_length(sql)
-        sql = self._rewrite_json_valid(sql)
-        # batch-21 JSON tail AFTER scalar_semantics (emits concat()
-        # calls that must stay un-stringified) and after json_extract
-        sql = self._rewrite_json_functions(sql)
-        # batch-24: from_json/json_transform structure translation
-        sql = self._rewrite_from_json(sql)
-        sql = self._rewrite_iso_datetime(sql)
-        sql = self._rewrite_to_interval(sql)
-        sql = self._rewrite_sha256(sql)
-        sql = self._rewrite_trim_chars(sql)
-        sql = self._rewrite_quantified_cmp(sql)
-        # DuckDB's arg-internal IGNORE/RESPECT NULLS relocates to
-        # Spark's postfix placement BEFORE first_last parses the args
-        sql = self._rewrite_ignore_nulls_arg(sql)
-        sql = self._rewrite_first_last_order(sql)
-        sql = self._rewrite_struct_extract(sql)
-        sql = self._rewrite_list_has_all(sql)
-        sql = self._rewrite_list_where(sql)
-        sql = self._rewrite_list_index(sql)
-        sql = self._rewrite_list_nulls(sql)
-        sql = self._rewrite_hamming_to_base(sql)
-        sql = self._rewrite_divide_xor(sql)
-        sql = self._rewrite_regexp_replace(sql)
-        sql = self._rewrite_regexp_extract(sql)
-        sql = self._rewrite_list_sort(sql)
-        sql = self._rewrite_array_to_string(sql)
-        sql = self._rewrite_colon_cast(sql)
-        # DuckDB ≥1.2 TRY(expr): after :: normalization so TRY(x::T)
-        # sees the CAST form; before the JSON/interval cast passes so
-        # the emitted try_cast rides them where applicable
-        sql = self._rewrite_try_expr(sql)
-        # batch-25: CAST(x AS JSON) — typeof-dispatched (VARCHAR input
-        # validates and PRESERVES text, DuckDB-verified; other types
-        # encode via the json writer); session identity literals
-        sql = self._rewrite_json_cast(sql)
-        sql = self._rewrite_interval_cast(sql)
-        sql = self._rewrite_date_interval_widen(sql)
-        # AFTER the widen pass, so DATE + mixed-literal still widens to
-        # TIMESTAMP off the INTERVAL keyword before the literal becomes
-        # a make_interval() call
-        sql = self._rewrite_mixed_interval_literal(sql)
-        sql = self._sub_code_fn(
-            re.compile(r"(?i)\bcurrent_database\s*\(\s*\)"),
-            lambda m: "'memory'",
-            sql,
-        )
-        # round-8 gap-probe: version() mirrors the oracle engine's
-        # 'vX.Y.Z'; count_star() is DuckDB's count(*) alias
-        sql = self._sub_code_fn(
-            re.compile(r"(?i)\bversion\s*\(\s*\)"),
-            lambda m: f"'v{_duckdb_version()}'",
-            sql,
-        )
-        sql = self._sub_code_fn(
-            re.compile(r"(?i)\bcount_star\s*\(\s*\)"),
-            lambda m: "count(*)",
-            sql,
-        )
-        sql = self._sub_code_fn(
-            re.compile(r"(?i)\bcurrent_user\b(?!\s*\()"),
-            lambda m: "'duckdb'",
-            sql,
-        )
-        sql = self._rewrite_struct_pack(sql)
-        sql = self._rewrite_generate_series(sql)
-        sql = self._rewrite_string_agg_order(sql)
-        # batch-15 LIMIT n% before the window passes: its emitted
-        # OVER (ORDER BY …) keys get NULLS LAST from _rewrite_order_nulls
-        sql = self._rewrite_limit_pct(sql)
-        # window passes after every ORDER-BY-generating expression pass:
-        # named specs inline first, then null placement (the inlined text
-        # gets NULLS LAST too), then frame EXCLUDE (its spec copies carry
-        # the fixed null placement)
-        sql = self._rewrite_named_window_ext(sql)
-        sql = self._rewrite_order_nulls(sql)
-        sql = self._rewrite_window_exclude(sql)
-        sql = self._rewrite_distinct_over(sql)
-        sql = self._rewrite_window_filter(sql)
-        sql = self._rewrite_strftime(sql)
-        sql = self._rewrite_exclude(sql)
-        # USING SAMPLE n% must be consumed BEFORE the ÷0 pass (its '%'
-        # precedes a parenthesized (method, seed) group the divisor
-        # scan would otherwise wrap)
-        sql = self._rewrite_using_sample(sql)
-        # ÷0 → NULL parity BEFORE int_div (user `//` divisors wrap here,
-        # emitting div directly). Macro expansion moved to the pipeline
-        # HEAD in round 11 (macros shadow built-ins at bind time), so
-        # expanded bodies already flowed through every pass above.
-        sql = self._rewrite_div_by_zero(sql)
-        sql = self._rewrite_int_div(sql)
-        # ASOF after the expression passes: subquery relations must be
-        # Spark-valid when their schema is probed (LIMIT 0)
-        sql = self._rewrite_asof_join(sql)
-        # projected IN (subquery) 3VL BEFORE qualify/distinct_on rewrite
-        # the clause keywords the position classifier reads
-        sql = self._rewrite_in_subquery_null(sql)
-        sql = self._rewrite_distinct_on(sql)
-        sql = self._rewrite_qualify(sql)
-        sql = self._rewrite_star_replace(sql)
-        sql = self._rewrite_columns_expr(sql)
-        sql = self._rewrite_union_by_name(sql)
-        # batch-15 struct_insert next to the other probe passes (same
-        # Spark-valid-modulo-cast/len contract)
-        sql = self._rewrite_struct_insert(sql)
-        sql = self._rewrite_struct_extract_at(sql)
-        # TIME casts become uq_poly markers BEFORE the resolver below
-        sql = self._rewrite_time_cast(sql)
-        # polymorphic subscripts resolve by LIMIT-0 probe — the text must
-        # be fully Spark-valid modulo casts/len, which the probe composes
-        sql = self._rewrite_poly_subscript(sql)
-        # TIME ± INTERVAL wraparound AFTER the resolver: the pass
-        # probe-dispatches each site in place on marker-free text
-        # (an earlier marker-based version duplicated operands into
-        # both arms and chains overflowed the resolver — NOTES r9)
-        sql = self._rewrite_time_interval_wrap(sql)
-        sql = self._rewrite_cast(sql)  # probes compose with _rewrite_len
-        sql = self._rewrite_len(sql)  # LAST: probes need valid Spark SQL
-        sql = self._rewrite_length_poly(sql)  # after len: same contract
-        # every legitimate := consumer (struct_pack/struct_insert/TVF
-        # options/macro tables) has run — a leftover := is a DuckDB
-        # named-argument call, which Spark's builtins don't accept
-        # (batch 16: clean raise, not a parser error)
-        m = self._search_code(re.compile(r":="), sql)
-        if m:
-            raise UQueryError.sql_error(
-                "named function arguments (name := value) are not supported"
-            )
-        # getattr: pure-rewrite property tests call passes without
-        # rewrite(). The map is dropped with the call state, so a token
-        # from another request can never be seen or cleared here.
-        names = getattr(_PROBE_TLS, "pivot_names", None)
-        if names and "uq_pvn_" in sql:
-            for tok in [t for t in names if f"`{t}`" in sql]:
-                sql = sql.replace(f"`{tok}`", f"`{names[tok]}`")
+        for entry in self._PIPELINE:
+            sql = self._run_entry(entry, sql)
         return sql
+
+    def _run_entry(self, entry, sql: str) -> str:
+        """One ``_PIPELINE`` entry over the statement text."""
+        if isinstance(entry, str):
+            return getattr(self, entry)(sql)
+        regex, translate, raw = entry
+        return self._map_calls(regex, getattr(self, translate), sql, raw)
+
+    # The rewrite pipeline, in order. An entry is a text pass, named by its
+    # method (statement text → statement text), or a call translation:
+    # (call regex, translator method, raw flag), run through _map_calls.
+    # An entry that must run before or after another says why beside it.
+    _PIPELINE = (
+        "_expand_macros",  # first: macros inline at bind time and shadow built-in names
+        "_rewrite_summarize",
+        "_rewrite_from_first",
+        "_rewrite_recursive_union",
+        "_rewrite_fetch_first",
+        (_TVF_RE, "_translate_tvfs", True),
+        (_GLOB_TVF_RE, "_translate_glob_tvf", False),
+        "_rewrite_information_schema",
+        "_rewrite_pivot_statement",
+        "_rewrite_unpivot_statement",
+        (_TRIM_STD_RE, "_translate_trim_std", True),  # before path tables take its FROM 'lit'
+        "_rewrite_path_tables",
+        "_normalize_literals",  # user literals are escape-free; entries below emit Spark escapes
+        "_pad_literal_years",
+        "_rewrite_array_types",  # before brackets, which read TYPE[] as a subscript
+        "_raise_unsupported",
+        "_rewrite_json_arrows",
+        "_rewrite_py_lambda",
+        (_MAP_LITERAL_RE, "_translate_map_literal", True),  # before brackets subscript its map(…)
+        (_ELEMENT_AT_RE, "_translate_element_at", True),  # before brackets emit Spark's element_at
+        (_STRUCT_LIT_RE, "_translate_struct_literal", True),  # after MAP {…} is consumed
+        (_ARRAY_SLICE_RE, "_translate_array_slice_fn", False),  # before brackets: emits l[a:b:s]
+        (_DATE_PART_LIST_RE, "_translate_date_part_list", False),  # before brackets take its [...]
+        (_MAP_ENTRIES_RE, "_translate_map_entries", False),  # before brackets take its (…, …)
+        "_rewrite_bracket_syntax",
+        "_rewrite_dot_chain",  # after brackets (list literals are array() calls), before renames
+        (_REVERSE_RE, "_translate_reverse", True),  # after brackets, which emit uq_native_reverse
+        (_UNICODE_PARITY_RE, "_translate_unicode_parity", False),
+        (_TZ_OFFSET_RE, "_translate_timezone_offset", False),
+        "_rewrite_regr_avg_array_length",  # before renames: 2-arg array_length → 1-arg
+        (_REGEXP_MATCHES_RE, "_translate_regexp_matches_flags", False),  # before the 2-arg rename
+        (_FN_NAME_RE, "_translate_function_names", True),
+        "_rewrite_parity_fns",  # after renames (not its names), before lambda/scalar entries
+        (_ARRAY_AGG_RE, "_translate_array_agg_order", True),  # after the list → array_agg rename
+        (_SPLIT_TO_TABLE_RE, "_translate_regexp_split_to_table", False),  # before unnest
+        "_rewrite_unnest",
+        "_rewrite_collate",
+        (_LIST_DISTINCT_RE, "_translate_list_distinct", False),  # before array_distinct emitters
+        (_MAP_CONCAT_RE, "_translate_map_concat", False),
+        (_LIST_ZIP_RE, "_translate_list_zip", False),
+        "_rewrite_sign_encode_make_timestamp",
+        "_rewrite_list_family",  # before list_aggregate: list_sum/avg/count expand to it
+        "_rewrite_lambda_index",
+        "_rewrite_operator_symbols",  # before divide_xor, whose xor() emits a real ^
+        "_rewrite_flatten_factorial_contains",  # after operator symbols: postfix ! must not see !~
+        "_rewrite_printf_graphemes_at_time_zone",
+        (_B23_FN_RE, "_translate_timezone_bar_date_trunc", False),
+        "_rewrite_scalar_semantics",  # before list_nulls, whose array concat() stays unstringified
+        "_rewrite_agg_semantics",
+        # after agg_semantics (ORDER BY stripped, favg), before first_last (keeps NULLs)
+        (_B28_AGG_RE, "_translate_arg_max_avg_corr", False),
+        (_TOPN_MINMAX_RE, "_translate_topn_minmax", False),
+        (_ARRAY_AGG_RE, "_translate_array_agg_nulls", True),  # after agg_semantics' FILTER WHERE
+        "_rewrite_nested_aggs",
+        "_rewrite_datetime_corners",  # before epoch/ISO: EXTRACT emits epoch()/isodow() calls
+        "_rewrite_string_list_corners",
+        (_LIST_AGG_ALIAS_RE, "_translate_list_agg_aliases", False),  # emits list_aggregate
+        (_LIST_AGG_RE, "_translate_list_aggregate", False),
+        (_LIST_REDUCE_RE, "_translate_list_reduce", False),
+        (_LIST_SLICE_RE, "_translate_list_slice", False),
+        (_RANGE_CALL_RE, "_translate_range_calls", False),
+        (_FORMAT_RE, "_translate_format", False),
+        (_DATE_DIFF3_RE, "_translate_date_diff", False),
+        (_DAYNAME_RE, "_translate_dayname", False),
+        (_EPOCH_RE, "_translate_epoch", False),
+        "_rewrite_ordered_window_percentiles",  # before quantile: percentiles reject ORDER BY specs
+        (_QUANTILE_RE, "_translate_quantile", False),
+        (_PRODUCT_RE, "_translate_product", False),
+        (_TIME_BUCKET_RE, "_translate_time_bucket", False),
+        "_rewrite_similar_glob",
+        "_strip_trailing_select_comma",
+        (_JSON_EXTRACT_RE, "_translate_json_extract", False),
+        (_JSON_ARR_LEN_RE, "_translate_json_array_length", False),
+        (_JSON_VALID_RE, "_translate_json_valid", False),
+        "_rewrite_json_functions",  # after scalar_semantics and json_extract
+        (_FROM_JSON_RE, "_translate_from_json", False),
+        (_ISO_DT_RE, "_translate_iso_datetime", False),
+        (_TO_INTERVAL_RE, "_translate_to_interval", False),
+        (_SHA256_RE, "_translate_sha256", False),
+        (_TRIM2_RE, "_translate_trim_chars", False),
+        (_QUANT_CMP_RE, "_translate_quantified_cmp", True),
+        (_IGN_NULLS_FN_RE, "_translate_ignore_nulls_arg", False),  # before first_last reads args
+        (_FIRST_LAST_RE, "_translate_first_last", True),
+        (_STRUCT_EXTRACT_RE, "_translate_struct_extract", False),
+        (_LIST_HAS_ALL_RE, "_translate_list_has_all", False),
+        (_LIST_WHERE_RE, "_translate_list_where", False),
+        "_rewrite_list_index",
+        "_rewrite_list_nulls",
+        "_rewrite_hamming_to_base",
+        "_rewrite_divide_xor",
+        (_REGEXP_REPLACE_RE, "_translate_regexp_replace", False),
+        (_REGEXP_EXTRACT_RE, "_translate_regexp_extract", True),
+        (_LIST_SORT_RE, "_translate_list_sort", False),
+        (_ARRAY_TO_STRING_RE, "_translate_array_to_string", False),
+        "_rewrite_colon_cast",
+        (_TRY_RE, "_translate_try_expr", False),  # after ::, before the JSON/interval casts
+        (_JSON_CAST_RE, "_translate_json_cast", True),
+        (_JSON_CAST_RE, "_translate_interval_cast", True),
+        "_rewrite_date_interval_widen",
+        "_rewrite_mixed_interval_literal",  # after the widen, which reads the INTERVAL keyword
+        "_rewrite_constants",
+        (_STRUCT_PACK_RE, "_translate_struct_pack", False),
+        "_rewrite_generate_series",
+        (_STRING_AGG_RE, "_translate_string_agg_order", True),
+        "_rewrite_limit_pct",  # before the window entries: its ORDER BY keys get NULLS LAST
+        "_rewrite_named_window_ext",  # windows after every ORDER BY emitter; named specs first
+        "_rewrite_order_nulls",  # after inlining: inlined specs get NULLS LAST too
+        "_rewrite_window_exclude",  # after null placement: its spec copies carry it
+        (_DISTINCT_AGG_RE, "_translate_distinct_over", True),
+        "_rewrite_window_filter",
+        (_STRF_RE, "_translate_strftime", False),
+        "_rewrite_exclude",
+        "_rewrite_using_sample",  # before ÷0, whose divisor scan would wrap its (method, seed)
+        "_rewrite_div_by_zero",  # before int_div: user // divisors wrap here
+        "_rewrite_int_div",
+        "_rewrite_asof_join",  # after expression entries: its probes need Spark-valid relations
+        "_rewrite_in_subquery_null",  # before qualify/distinct_on rewrite the clauses it reads
+        "_rewrite_distinct_on",
+        "_rewrite_qualify",
+        "_rewrite_star_replace",
+        "_rewrite_columns_expr",
+        "_rewrite_union_by_name",
+        "_rewrite_struct_insert",
+        "_rewrite_struct_extract_at",
+        (_TIME_CAST_RE, "_translate_time_cast", True),  # emits uq_poly markers for the resolver
+        "_rewrite_poly_subscript",  # probes: text must be Spark-valid but for casts and len
+        "_rewrite_time_interval_wrap",  # after the resolver: probes sites on marker-free text
+        "_rewrite_cast",
+        "_rewrite_len",  # last probe entries: cast and len compose in every probe
+        "_rewrite_length_poly",
+        "_reject_named_args",  # after every := consumer
+        "_restore_pivot_names",
+    )
 
 
 # DuckDB read_csv option → Spark reader option
