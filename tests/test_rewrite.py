@@ -4490,15 +4490,22 @@ _REGEX_MATCH_CASES = {
     "fn_escaped_class": "SELECT regexp_full_match('123', '\\d+') AS v",
     "fn_column_pattern": "SELECT regexp_full_match(s, p) AS v "
     "FROM (VALUES ('abc', 'b'), ('abc', 'a.*'), ('x', NULL)) t(s, p)",
+    # SIMILAR TO and a bracketed GLOB anchor the same way
+    "similar_trailing_newline": "SELECT ('ab' || chr(10)) SIMILAR TO 'ab' AS v",
+    "not_similar_trailing_newline": "SELECT ('ab' || chr(10)) NOT SIMILAR TO 'ab' AS v",
+    "similar_escaped_class": "SELECT '123' SIMILAR TO '\\d+' AS v",
+    "glob_class_trailing_newline": "SELECT ('ab' || chr(10)) GLOB 'a[b]' AS v",
+    "glob_class": "SELECT s GLOB 'a[bc]*' AS v FROM (VALUES ('abx'), ('adx')) t(s)",
 }
 
 
 @pytest.mark.parametrize("case", sorted(_REGEX_MATCH_CASES))
 def test_regex_match_operator_is_a_full_match(spark, rw, case):
-    """``~``/``!~`` are DuckDB's regexp_full_match: the whole string must
-    match, where Spark's RLIKE finds the pattern anywhere, and only up
-    to its very end (Java's ``$`` also matches before a final newline).
-    Every statement is served and compared with DuckDB."""
+    """``~``/``!~`` are DuckDB's regexp_full_match, and SIMILAR TO and a
+    bracketed GLOB full matches too: the whole string must match, where
+    Spark's RLIKE finds the pattern anywhere, and only up to its very
+    end (Java's ``$`` also matches before a final newline). Every
+    statement is served and compared with DuckDB."""
     import duckdb
 
     sql = _REGEX_MATCH_CASES[case]

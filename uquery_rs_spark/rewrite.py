@@ -5655,11 +5655,7 @@ class SqlRewriter:
           ``list_inner_product`` (+ array_/dot aliases) → zip_with /
           aggregate arithmetic over DOUBLE.
         - ``jaccard`` → character-set Jaccard via split + set algebra.
-        - ``regexp_full_match`` → RLIKE anchored with ``^(?:p)\\z``:
-          Java's ``$`` also matches before a final line terminator,
-          RE2's does not. A pattern that is no literal is anchored with
-          ``||``, which keeps a NULL pattern NULL (the concat pass gives
-          ``concat`` DuckDB's NULL-skipping meaning).
+        - ``regexp_full_match`` → RLIKE anchored by ``_full_match``.
         - ``like_escape``/``ilike_escape`` → LIKE/ILIKE … ESCAPE.
         ``hash()`` stays native and engine-specific (documented — like
         random(), its VALUES are not portable, only its distribution).
@@ -5858,12 +5854,7 @@ class SqlRewriter:
         def regexp_full(m, args):
             if len(args) != 2:
                 raise UQueryError.sql_error("regexp_full_match expects 2 args")
-            pat, end = self._lit_parse(args[1]), r")\z"
-            if pat is None:
-                anchored = f"({self._lit_emit('^(?:')} || ({args[1]}) || {self._lit_emit(end)})"
-            else:
-                anchored = self._lit_emit(f"^(?:{pat}{end}")
-            return f"(({args[0]}) RLIKE {anchored})"
+            return f"(({args[0]}) RLIKE {self._full_match(args[1])})"
 
         sql = self._map_calls(self._REGEXP_FULL_RE, regexp_full, sql)
 
@@ -6835,21 +6826,32 @@ class SqlRewriter:
     _GLOB_RE = re.compile(r"(?i)\bglob\s+'((?:[^']|'')*)'")
     _TRAILING_COMMA_RE = re.compile(r",(\s+from\b)", re.IGNORECASE)
 
+    def _full_match(self, pattern: str) -> str:
+        """A regex argument as the operand of a full-match RLIKE,
+        ``^(?:p)\\z``: Java's ``$`` also matches before a final line
+        terminator, RE2's does not. A pattern that is no literal is
+        anchored with ``||``, which keeps a NULL pattern NULL (the concat
+        pass gives ``concat`` DuckDB's NULL-skipping meaning)."""
+        pat, end = self._lit_parse(pattern), r")\z"
+        if pat is None:
+            return f"({self._lit_emit('^(?:')} || ({pattern}) || {self._lit_emit(end)})"
+        return self._lit_emit(f"^(?:{pat}{end}")
+
     def _rewrite_similar_glob(self, sql: str) -> str:
-        """``x [NOT] SIMILAR TO 'p'`` → anchored ``[NOT] RLIKE
-        '^(?:p)$'`` (SIMILAR TO is a fully-anchored regex in DuckDB);
+        """``x [NOT] SIMILAR TO 'p'`` → ``[NOT] RLIKE`` anchored by
+        ``_full_match`` (SIMILAR TO is a fully-anchored regex in DuckDB);
         ``x GLOB 'pat'`` → LIKE with * → % and ? → _ (existing LIKE
-        metachars escaped; bracket classes raise — LIKE can't express
-        them). Only the operator + literal is replaced, so the left
+        metachars escaped), or, with bracket classes, a fully-anchored
+        RLIKE. Only the operator + literal is replaced, so the left
         operand needs no parsing."""
 
         def similar(m: re.Match) -> str:
             neg = "NOT " if m.group(1) else ""
-            return f"{neg}RLIKE '^(?:{m.group(2)})$'"
+            return f"{neg}RLIKE " + self._full_match("'" + m.group(2) + "'")
 
         def glob_regex(pat: str) -> str | None:
-            """GLOB with bracket classes (batch 28, pattern fuzzer) →
-            anchored regex. DuckDB-probed: only '!' negates ('^' is a
+            """GLOB with bracket classes (batch 28, pattern fuzzer) → a
+            regex for a full match. DuckDB-probed: only '!' negates ('^' is a
             literal member), ']' as first member is literal, an
             UNCLOSED '[' never matches anything (→ '(?!)'); a bare
             leading/trailing '-' raises (DuckDB's own never-match edge
@@ -6894,7 +6896,7 @@ class SqlRewriter:
                 else:
                     out.append(c)
                 i += 1
-            return "^(?:" + "".join(out) + ")$"
+            return "".join(out)
 
         def glob(m: re.Match) -> str:
             pat = m.group(1)
@@ -6902,8 +6904,7 @@ class SqlRewriter:
                 rx = glob_regex(pat)
                 if rx is None:
                     rx = "(?!)"  # unclosed '[': DuckDB matches nothing
-                # emitted literal must be in Spark escape space
-                return "RLIKE '" + rx.replace("\\", "\\\\") + "'"
+                return "RLIKE " + self._full_match(self._lit_emit(rx))
             like = (
                 pat.replace("\\", "\\\\")
                 .replace("%", "\\%")
