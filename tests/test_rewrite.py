@@ -4513,6 +4513,26 @@ def test_regex_match_operator_is_a_full_match(spark, rw, case):
     assert [tuple(r) for r in spark.sql(rw.rewrite(sql)).collect()] == want, sql
 
 
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT x IN (SELECT -1) AS v FROM (SELECT -1 AS x)",
+        "SELECT x NOT IN (SELECT +1) AS v FROM (SELECT 1 AS x)",
+        "SELECT x IN (SELECT (1)) AS v FROM (SELECT 1 AS x)",
+        "SELECT count(*) AS v FROM (SELECT -1 AS x) WHERE x IN (SELECT - 1 + 0)",
+        "SELECT x = ANY(SELECT -1) AS v FROM (SELECT -1 AS x)",
+    ],
+)
+def test_in_subquery_of_a_signed_select(spark, rw, sql):
+    """A subquery after IN whose select list starts with a sign or a
+    parenthesis is served (Spark reads ``(SELECT -1)`` there as the
+    expression ``SELECT - 1``), and compared with DuckDB."""
+    import duckdb
+
+    want = duckdb.sql(sql).fetchall()
+    assert [tuple(r) for r in spark.sql(rw.rewrite(sql)).collect()] == want, sql
+
+
 def test_generate_series_is_empty_when_the_step_moves_away(spark, rw):
     """``generate_series`` (inclusive stop) is empty when its step does
     not move toward the stop and NULL when an argument is, like DuckDB's

@@ -68,6 +68,7 @@ EXTRAS = (
     ("list_has_all", "SELECT list_has_all([1, 2, 3], [1, 3])"),
     ("list_element", "SELECT list_element([10, 20], 2), list_extract('abc', 0)"),
     ("named_arg", "SELECT concat(a := 'x')"),
+    ("in_select_sign", "SELECT x IN (SELECT -1) FROM (SELECT -1 AS x)"),
 )
 
 _VOLATILE = [

@@ -7165,6 +7165,15 @@ class SqlRewriter:
                 return k
         return "other"
 
+    _IN_SELECT_SIGN_RE = re.compile(r"(?i)(\bIN\s*\(\s*SELECT)(?=\s*[-+(])")
+
+    def _rewrite_in_select_sign(self, sql: str) -> str:
+        """``x IN (SELECT -1)``: Spark's parser reads a subquery after IN
+        whose select list starts with a sign or a parenthesis as the
+        expression list ``SELECT - 1`` (a column named SELECT) or the call
+        ``SELECT(1)``. ``SELECT ALL``, the same query, reads only as one."""
+        return self._sub_code_fn(self._IN_SELECT_SIGN_RE, lambda m: m.group(1) + " ALL", sql)
+
     # IN binds looser than arithmetic and ||: 1 + 2 IN (…) is (1+2) IN (…)
     _IN_LHS_OPS = ("||", "+", "-", "*", "/", "%")
 
@@ -9669,6 +9678,7 @@ class SqlRewriter:
         (_SHA256_RE, "_translate_sha256", False),
         (_TRIM2_RE, "_translate_trim_chars", False),
         (_QUANT_CMP_RE, "_translate_quantified_cmp", True),
+        "_rewrite_in_select_sign",  # after quantified_cmp emits IN (subquery); before probes
         (_IGN_NULLS_FN_RE, "_translate_ignore_nulls_arg", False),  # before first_last reads args
         (_FIRST_LAST_RE, "_translate_first_last", True),
         (_STRUCT_EXTRACT_RE, "_translate_struct_extract", False),
