@@ -4533,6 +4533,28 @@ def test_in_subquery_of_a_signed_select(spark, rw, sql):
     assert [tuple(r) for r in spark.sql(rw.rewrite(sql)).collect()] == want, sql
 
 
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT count(*) AS v FROM (VALUES (3), (1)) t(n), unnest([n, 2])",
+        "SELECT * FROM (VALUES (3), (1)) t(n), unnest([n, 2]) ORDER BY ALL",
+        "SELECT n, u FROM (VALUES (3), (1)) t(n), unnest([n, 2]) AS x(u) ORDER BY ALL",
+        "SELECT * FROM (VALUES (3), (1)) t(n) JOIN unnest([n, 2]) ON true ORDER BY ALL",
+        "SELECT * FROM (VALUES (3), (1)) t(n) CROSS JOIN unnest([n, 2]) ORDER BY ALL",
+        "SELECT a, unnest([1, 2]) AS u FROM (SELECT 1 AS a) ORDER BY ALL",
+        "SELECT a IS DISTINCT FROM 2, unnest([1, 2]) AS u FROM (SELECT 1 AS a) ORDER BY ALL",
+    ],
+)
+def test_from_unnest_reads_an_earlier_from_item(spark, rw, sql):
+    """A FROM-position ``unnest`` after a comma or JOIN may read a column
+    of an earlier FROM item (a LATERAL subquery); one in a SELECT list
+    stays a generator. Compared with DuckDB."""
+    import duckdb
+
+    want = duckdb.sql(sql).fetchall()
+    assert [tuple(r) for r in spark.sql(rw.rewrite(sql)).collect()] == want, sql
+
+
 def test_generate_series_is_empty_when_the_step_moves_away(spark, rw):
     """``generate_series`` (inclusive stop) is empty when its step does
     not move toward the stop and NULL when an argument is, like DuckDB's

@@ -69,6 +69,7 @@ EXTRAS = (
     ("list_element", "SELECT list_element([10, 20], 2), list_extract('abc', 0)"),
     ("named_arg", "SELECT concat(a := 'x')"),
     ("in_select_sign", "SELECT x IN (SELECT -1) FROM (SELECT -1 AS x)"),
+    ("lateral_unnest", "SELECT count(*) FROM (VALUES (3), (1)) t(n), unnest([n, 2])"),
 )
 
 _VOLATILE = [

@@ -4247,7 +4247,7 @@ class SqlRewriter:
 
     # -- sweep batch 16 -----------------------------------------------------
 
-    _UNNEST_FROM_RE = re.compile(r"(?i)\b(from|join)\s+unnest\s*\(")
+    _UNNEST_FROM_RE = re.compile(r"(?i)(?:\b(from|join)\s+|,\s*)unnest\s*\(")
     _UNNEST_RE = re.compile(r"(?i)\bunnest\s*\(")
     _SELECT_KW_RE = re.compile(r"(?i)\bselect\b")
     _GENERATOR_RE = re.compile(r"(?i)\b(unnest|generate_subscripts)\s*\(")
@@ -4259,6 +4259,7 @@ class SqlRewriter:
         {"from", "where", "group", "having", "qualify", "window", "order",
          "limit", "union", "except", "intersect"}
     )
+    _CLAUSE_KW = _SELECT_LIST_END | {"select"}
     _COLLATE_RE = re.compile(r"(?i)\bcollate\s+(\w+)")
 
     def _rewrite_unnest(self, sql: str) -> str:
@@ -4269,8 +4270,9 @@ class SqlRewriter:
         instead of forming Spark's cross product. ``FROM unnest(arr)``
         (table-function position) → an exploded subquery with column
         ``unnest`` (DuckDB auto-names the column after the expression
-        text — not portable either way; alias it). ``recursive := true``
-        raises."""
+        text — not portable either way; alias it); after a comma or JOIN
+        the subquery is LATERAL, so it may read an earlier FROM item.
+        ``recursive := true`` raises."""
 
         def no_recursive(inner: str) -> None:
             if ":=" in inner:
@@ -4279,8 +4281,12 @@ class SqlRewriter:
                 )
 
         def from_unnest(m, inner):
+            kw = m.group(1)
+            if kw is None and not self._in_from_list(m.string, m.start()):
+                return None  # a generator in a SELECT list
             no_recursive(inner)
-            return f"{m.group(1)} (SELECT explode({inner}) AS unnest)"
+            lateral = "" if kw and kw.lower() == "from" else " LATERAL"
+            return f"{kw or ','}{lateral} (SELECT explode({inner}) AS unnest)"
 
         def rename(m):
             close = self._close_of(m)
@@ -4291,6 +4297,24 @@ class SqlRewriter:
         sql = self._map_calls(self._UNNEST_FROM_RE, from_unnest, sql, raw=True)
         sql = self._zip_select_generators(sql)
         return self._sub_code_fn(self._UNNEST_RE, rename, sql)
+
+    def _in_from_list(self, sql: str, pos: int) -> bool:
+        """Whether ``pos`` sits directly in a FROM list: the last clause
+        keyword before it at its own bracket depth is FROM (not the FROM
+        of ``IS DISTINCT FROM``)."""
+        stack, prev = [None], ""
+        for m, _depth in self._code_scan(sql, r"[^\W\d]\w*", 0, pos):
+            if m.lastgroup == "open":
+                stack.append(None)
+            elif m.lastgroup == "close":
+                if len(stack) > 1:
+                    stack.pop()
+            else:
+                word = m.group().lower()
+                if word in self._CLAUSE_KW and (word, prev) != ("from", "distinct"):
+                    stack[-1] = word
+                prev = word
+        return stack[-1] == "from"
 
     @staticmethod
     def _subscripts(arr: str) -> str:
