@@ -4217,6 +4217,44 @@ def test_concurrent_rewrite_keeps_pivot_column_names(spark, rw, monkeypatch):
     assert df.columns == ["a b", "c"]
 
 
+def test_macro_defined_while_another_rewrite_expands_macros(spark, monkeypatch):
+    """One rewriter serves every handler thread. A served CREATE MACRO
+    that lands while another rewrite is expanding macros must not break
+    that rewrite: it used to iterate the live macro dict and fail with
+    "dictionary changed size during iteration" (a 500)."""
+    rw = SqlRewriter(spark, allowed_dirs=[FIXTURES])
+    rw.rewrite("CREATE MACRO uq_race_a(x) AS x + 1")
+    rw.rewrite("CREATE MACRO uq_race_b(x) AS x * 2")
+    entered, go, out = threading.Event(), threading.Event(), {}
+    orig = rw._search_code
+
+    def search(pat, *args):
+        # pause the expanding thread at its first macro-call search
+        if threading.current_thread() is worker and "uq_race_a" in pat.pattern:
+            entered.set()
+            assert go.wait(30)
+        return orig(pat, *args)
+
+    def run():
+        try:
+            out["sql"] = rw.rewrite("SELECT uq_race_a(1) + uq_race_b(2) AS v")
+        except Exception as e:  # noqa: BLE001 - checked below
+            out["error"] = e
+        finally:
+            entered.set()
+
+    monkeypatch.setattr(rw, "_search_code", search)
+    worker = threading.Thread(target=run)
+    worker.start()
+    assert entered.wait(30)
+    rw.rewrite("CREATE MACRO uq_race_c(x) AS x - 1")
+    go.set()
+    worker.join(30)
+    assert "error" not in out, out.get("error")
+    assert spark.sql(out["sql"]).collect()[0].v == 6
+    assert spark.sql(rw.rewrite("SELECT uq_race_c(1) AS v")).collect()[0].v == 0
+
+
 def test_more_than_100_polymorphic_markers_resolve(spark, rw):
     """Each epoch() call leaves one polymorphic marker for the late
     probe pass. A select list with more markers than any fixed lap

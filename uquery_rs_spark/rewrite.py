@@ -197,6 +197,13 @@ def _scanner(tokens: str) -> "re.Pattern[str]":
 
 
 class SqlRewriter:
+    # One rewriter serves every handler thread, and served statements
+    # (CREATE/DROP MACRO, PREPARE, DEALLOCATE) change its session state:
+    # _views, _macros, _table_macros, _pivot_vals and _prepared. Every
+    # read and write of them holds this lock, and nothing else does, so
+    # no rewrite iterates a dict another one changes.
+    _state_lock = threading.Lock()
+
     def __init__(
         self,
         spark: SparkSession,
@@ -265,13 +272,15 @@ class SqlRewriter:
 
     def _view_for(self, path: str, fmt: str | None, options: dict[str, str]) -> str:
         key = f"{path}|{fmt}|{sorted(options.items())}"
-        view = self._views.get(key)
+        with self._state_lock:
+            view = self._views.get(key)
         if view is None:
             self.check_path(path)
             df = resolve_path(self.spark, path, fmt, options)
             view = "uq_file_" + hashlib.sha1(key.encode()).hexdigest()[:12]
             df.createOrReplaceTempView(view)
-            self._views[key] = view
+            with self._state_lock:
+                self._views[key] = view
         return view
 
     # -- rewrites -----------------------------------------------------------
@@ -3016,7 +3025,9 @@ class SqlRewriter:
             # (reference main.rs:413-450 provisions macros; users also
             # define them per session in DuckDB)
             orep, name, params, is_table, body = m.groups()
-            if not orep and name.lower() in self._macros:
+            with self._state_lock:
+                exists = name.lower() in self._macros
+            if not orep and exists:
                 raise UQueryError.sql_error(
                     f"Macro with name \"{name}\" already exists "
                     f"(use CREATE OR REPLACE)"
@@ -3041,12 +3052,15 @@ class SqlRewriter:
         m = self._DROP_MACRO_RE.match(sql)
         if m:
             ifex, name = m.groups()
-            if name.lower() in self._macros:
-                del self._macros[name.lower()]
-            elif name.lower() in self._table_macros:
-                self._table_macros.discard(name.lower())
+            key = name.lower()
+            with self._state_lock:
+                scalar = self._macros.pop(key, None) is not None
+                table = not scalar and key in self._table_macros
+                if table:
+                    self._table_macros.remove(key)
+            if table:
                 self.spark.sql(f"DROP VIEW IF EXISTS {name}")
-            elif not ifex:
+            elif not scalar and not ifex:
                 raise UQueryError.sql_error(f"Macro \"{name}\" does not exist")
             return "SELECT 1 AS ok WHERE false"
         m = self._DROP_RE.match(sql)
@@ -7710,7 +7724,8 @@ class SqlRewriter:
                     )
             return vals
         cache_key = (tbl, col)
-        vals = self._pivot_vals.get(cache_key)
+        with self._state_lock:
+            vals = self._pivot_vals.get(cache_key)
         if vals is None:
             # NULL is dropped from DISCOVERED values (DuckDB probes,
             # round-10 pivotfz fuzzer catch at seed 660001: a NULL
@@ -7733,9 +7748,10 @@ class SqlRewriter:
             # disables caching entirely for sessions whose file-backed
             # sources mutate (staleness trade documented in __init__).
             if os.environ.get("UQ_PIVOT_CACHE", "1") != "0":
-                if len(self._pivot_vals) >= 256:
-                    self._pivot_vals.clear()
-                self._pivot_vals[cache_key] = vals
+                with self._state_lock:
+                    if len(self._pivot_vals) >= 256:
+                        self._pivot_vals.clear()
+                    self._pivot_vals[cache_key] = vals
         if len(vals) > self._PIVOT_MAX_VALUES:
             raise UQueryError.sql_error(
                 f"PIVOT ON {col} exceeds {self._PIVOT_MAX_VALUES} distinct values"
@@ -9203,11 +9219,14 @@ class SqlRewriter:
     def add_scalar_macro(self, name: str, params: list[str], body: str) -> None:
         """Register a textual macro: name(args) inlines to body with args
         substituted — DuckDB macro semantics (inlined at bind, not called)."""
-        self._macros[name.lower()] = (params, self._lex_head(body))
+        body = self._lex_head(body)
+        with self._state_lock:
+            self._macros[name.lower()] = (params, body)
 
     def add_table_macro(self, name: str) -> None:
         """Register a parameterless table macro: FROM name() → FROM name."""
-        self._table_macros.add(name.lower())
+        with self._state_lock:
+            self._table_macros.add(name.lower())
 
     def _arg_list(self, raw: str) -> list[str]:
         """The stripped top-level arguments of a call's argument text
@@ -9229,8 +9248,10 @@ class SqlRewriter:
         .db attach, main.rs:414-419) get the full translation pipeline;
         the old tail position inserted them after nearly every pass.
         Searches skip string literals (_search_code)."""
-        if self._table_macros:
-            names = "|".join(re.escape(n) for n in self._table_macros)
+        with self._state_lock:
+            table_macros, macros = list(self._table_macros), list(self._macros.items())
+        if table_macros:
+            names = "|".join(re.escape(n) for n in table_macros)
             sql = self._sub_code_fn(
                 re.compile(rf"(?i)\b({names})\s*\(\s*\)"),
                 lambda m: m.group(1),
@@ -9238,7 +9259,7 @@ class SqlRewriter:
             )
         for _ in range(10):
             changed = False
-            for name, (params, body) in self._macros.items():
+            for name, (params, body) in macros:
                 pat = re.compile(rf"(?i)\b{re.escape(name)}\s*\(")
                 m = self._search_code(pat, sql)
                 while m:
@@ -9568,12 +9589,14 @@ class SqlRewriter:
         # sees the views and macros current then, as DuckDB's binder does.
         m = _PREPARE_RE.match(sql)
         if m:
-            self._prepared[m.group(1).lower()] = m.group(2)
+            with self._state_lock:
+                self._prepared[m.group(1).lower()] = m.group(2)
             return "SELECT 1 AS ok WHERE false"
         m = _EXECUTE_RE.match(sql)
         if m:
-            name = m.group(1).lower()
-            if name not in self._prepared:
+            with self._state_lock:
+                text = self._prepared.get(m.group(1).lower())
+            if text is None:
                 raise UQueryError.sql_error(
                     f'Prepared statement "{m.group(1)}" does not exist'
                 )
@@ -9588,14 +9611,13 @@ class SqlRewriter:
                 )
             _PROBE_TLS.execute_depth = depth + 1
             try:
-                return self.rewrite(
-                    self._substitute_prepared_params(self._prepared[name], args)
-                )
+                return self.rewrite(self._substitute_prepared_params(text, args))
             finally:
                 _PROBE_TLS.execute_depth = depth
         m = _DEALLOCATE_RE.match(sql)
         if m:
-            self._prepared.pop(m.group(1).lower(), None)
+            with self._state_lock:
+                self._prepared.pop(m.group(1).lower(), None)
             return "SELECT 1 AS ok WHERE false"
         # session DDL: CREATE VIEW/TABLE bodies recurse through rewrite(),
         # DML raises
