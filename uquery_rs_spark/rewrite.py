@@ -8717,11 +8717,7 @@ class SqlRewriter:
         Py4JJavaError whose Java-side detail is fetched LAZILY, so
         catching it unread costs one round trip: the analysis itself.
         Same eager parse+analysis either way (Dataset.ofRows asserts
-        analyzed).
-
-        Falls back to the public SparkSession.sql when _jsparkSession
-        is absent (Spark Connect sessions have no py4j handle) — the
-        probe result is identical, just slower per failure."""
+        analyzed)."""
         # Per-top-level-rewrite memo (thread-local, see rewrite()):
         # ~17% of a probe-heavy statement's probes repeat the exact
         # same text across dispatch sites/passes — the result cannot
@@ -8743,19 +8739,9 @@ class SqlRewriter:
         """True iff ``probe_sql`` analyzes. Only an analysis or parse
         failure means "no": a transport failure (a dead gateway)
         propagates rather than silently picking a fallback form."""
-        jsession = getattr(self.spark, "_jsparkSession", None)
-        if jsession is None:
-            from pyspark.errors import AnalysisException, ParseException
-
-            try:
-                with _probe_quiet():
-                    self.spark.sql(probe_sql)
-                return True
-            except (AnalysisException, ParseException):
-                return False
         from py4j import protocol as _p4jp
 
-        member = jsession.sql  # JavaMember; py4j caches it on the object
+        member = self.spark._jsparkSession.sql  # JavaMember; py4j caches it on the object
         with _probe_quiet():
             try:
                 args_command, temp_args = member._build_args(probe_sql)
