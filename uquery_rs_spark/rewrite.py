@@ -201,7 +201,8 @@ class SqlRewriter:
     # (CREATE/DROP MACRO, PREPARE, DEALLOCATE) change its session state:
     # _views, _macros, _table_macros, _pivot_vals and _prepared. Every
     # read and write of them holds this lock, and nothing else does, so
-    # no rewrite iterates a dict another one changes.
+    # no rewrite iterates a dict another one changes. Its critical
+    # sections are single dict operations, so every rewriter shares it.
     _state_lock = threading.Lock()
 
     def __init__(
@@ -2705,8 +2706,7 @@ class SqlRewriter:
         FROM str)``. Spark parses this natively, but the quoted operand
         after FROM matched the path-as-table regex first — `trim(BOTH
         'x' FROM 'y')` became a table scan of path 'y' (misparse class,
-        found by the sweep). Runs BEFORE _rewrite_path_tables and emits
-        the DuckDB FUNCTION forms (trim/ltrim/rtrim(s[, chars])) so the
+        found by the sweep). Emits the DuckDB FUNCTION forms (trim/ltrim/rtrim(s[, chars])) so the
         batch-5 charset-order pass translates them uniformly."""
         kw = m.group(1).lower()
         rest = inner[re.search(r"(?i)\b" + kw, inner).end() :]
@@ -3091,10 +3091,9 @@ class SqlRewriter:
         """DuckDB function chaining: ``x.f(a, b)`` = ``f(x, a, b)``
         (``[1,2].list_sum()``, ``col.lower().trim()`` — probed working
         on columns, bracket results, and call results; a dotted STRING
-        LITERAL is a parse error in DuckDB itself). Runs after the
-        bracket pass (list literals are already array(...) calls, so
-        every operand ends in an identifier chain, ')' or marker) and
-        before the rename pass (chained names rename afterwards).
+        LITERAL is a parse error in DuckDB itself). List literals are
+        array(...) calls by now, so every operand ends in an identifier
+        chain, ')' or marker; chained names rename afterwards.
 
         Known ambiguity (documented): ``a.b(x)`` with ``a`` a schema
         name would be a qualified call — the gateway has no schemas, so
@@ -3304,8 +3303,8 @@ class SqlRewriter:
 
     def _translate_array_slice_fn(self, m, args):
         """array_slice(l, a, b[, step]) → the bracket form (l)[a:b[:s]]
-        (runs before the bracket pass; inherits its negative-index,
-        step, and string-polymorphism handling). Also consumes the
+        (inherits its negative-index, step, and string-polymorphism
+        handling). Also consumes the
         4-arg STEP form of list_slice (r13 wave-15 — previously a loud
         wrong-arity error); 3-arg list_slice stays with its own later
         pass (positive-inclusive slice(), no probe round-trip)."""
@@ -3906,10 +3905,10 @@ class SqlRewriter:
         """DuckDB list_distinct/array_distinct REMOVE NULL elements
         (list_distinct([5,NULL,7,NULL]) = [7,5], list_distinct([NULL])
         = [] — probed; nested-fuzzer catch round 7) where Spark's
-        array_distinct keeps one NULL → filter first. Runs BEFORE the
-        passes that emit Spark's native array_distinct internally
-        (entropy/histogram/jaccard translations — their NULL handling
-        was probed per-function and must stay untouched). Element
+        array_distinct keeps one NULL → filter first. The passes that
+        emit Spark's native array_distinct internally (entropy/
+        histogram/jaccard translations) run later: their NULL handling
+        was probed per-function and must stay untouched. Element
         order remains a documented deviation (both engines:
         implementation-defined)."""
         if len(args) != 1:
@@ -4594,8 +4593,7 @@ class SqlRewriter:
           collect_list; named specs are inlined by the later window
           passes as usual
 
-        Runs after _rewrite_agg_semantics (WHERE-keyword insertion) and
-        before the window passes. Reference semantics via the DuckDB
+        Reference semantics via the DuckDB
         delegation pass-through (src/core/duckdb.rs:87-88); behavior
         DuckDB-1.x-probed: NULL-keep, single-NULL DISTINCT, empty→NULL,
         FILTER exclusion, windowed running frames.
@@ -5233,9 +5231,9 @@ class SqlRewriter:
         - ``concat``: DuckDB stringifies EVERY argument and SKIPS NULLs
           (concat('a', NULL, 'b') = 'ab'; concat([1,2]) = '[1, 2]');
           Spark concat is NULL-propagating and type-generic →
-          concat_ws('', CAST(each AS STRING)). Runs BEFORE
-          _rewrite_list_nulls so that pass's generated array concat()
-          is never touched. Deviation: scientific-notation float
+          concat_ws('', CAST(each AS STRING)); the array concat()
+          that _rewrite_list_nulls emits later is never touched.
+          Deviation: scientific-notation float
           formatting differs ('1.5e-07' vs '1.5E-7').
         - one-arg ``log``: DuckDB log10, Spark ln → log10. (2-arg
           log(base, x) agrees.)
@@ -5987,8 +5985,8 @@ class SqlRewriter:
 
     def _translate_date_part_list(self, m, args: list[str]) -> str:
         """DuckDB ``date_part(['year','month'], e)`` returns a STRUCT of
-        the named parts → named_struct over Spark's scalar date_part.
-        Runs before the bracket pass (the list must still be [...])."""
+        the named parts → named_struct over Spark's scalar date_part
+        (the list must still be [...])."""
         if len(args) != 2:
             raise UQueryError.sql_error("date_part([...], expr) expects 2 args")
         lst = args[0].strip()
@@ -6014,8 +6012,8 @@ class SqlRewriter:
     def _translate_map_entries(self, m, args: list[str]) -> str:
         """DuckDB admits bare tuple literals in map_from_entries
         (``[('a', 1), …]``) — each top-level parenthesised tuple becomes
-        struct(...). Runs before the bracket pass; struct-literal
-        entries ({'k':…}) are handled by the struct-literal pass."""
+        struct(...); struct-literal entries ({'k':…}) are handled by
+        the struct-literal pass."""
         if len(args) == 1:
             lst = args[0].strip()
             if lst.startswith("[") and lst.endswith("]"):
@@ -9224,16 +9222,12 @@ class SqlRewriter:
         """Balanced-paren expansion of registered scalar + table macros,
         iterated to a fixpoint so macros may nest (bounded to catch cycles).
 
-        Runs FIRST in the pipeline (round 11): DuckDB inlines macros at
-        bind time and user macros SHADOW built-in names (probed: CREATE
-        MACRO mod(a) AS a + 1; SELECT mod(3) → 4), so no name-keyed
-        rewrite pass may ever see a macro call — the round-10 alias
-        passes (mod/add/divide/…) running before expansion silently
-        replaced 2-arg macros with the arithmetic operator. Early
-        expansion also means macro BODIES (raw DuckDB dialect from a
-        .db attach, main.rs:414-419) get the full translation pipeline;
-        the old tail position inserted them after nearly every pass.
-        Searches skip string literals (_search_code)."""
+        DuckDB inlines macros at bind time and user macros SHADOW
+        built-in names (probed: CREATE MACRO mod(a) AS a + 1; SELECT
+        mod(3) → 4), so no name-keyed rewrite pass may see a macro
+        call, and macro BODIES (raw DuckDB dialect from a .db attach,
+        main.rs:414-419) get the full translation pipeline. Searches
+        skip string literals (_search_code)."""
         with self._state_lock:
             table_macros, macros = list(self._table_macros), list(self._macros.items())
         if table_macros:
