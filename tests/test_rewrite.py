@@ -4593,6 +4593,32 @@ def test_from_unnest_reads_an_earlier_from_item(spark, rw, sql):
     assert [tuple(r) for r in spark.sql(rw.rewrite(sql)).collect()] == want, sql
 
 
+@pytest.mark.parametrize(
+    "sql",
+    [
+        "SELECT [w[i+1] FOR i IN range(len(w)) IF i > 0] AS k FROM (VALUES (['a','b','c'])) t(w)",
+        "SELECT [w[i+1] FOR i IN range(len(w)) IF len(w[1]) = i] AS k "
+        "FROM (VALUES (['a','bb','c'])) t(w)",
+        "SELECT len(w) AS n, [x FOR x IN w IF len(x) > 1] AS k FROM (VALUES (['a','bb'])) t(w)",
+        "SELECT [1, 2, 3][id] AS v FROM range(4) t(id) ORDER BY id",
+        "SELECT [10, 20, 30][-id] AS v FROM range(1, 5) t(id) ORDER BY id",
+        "SELECT [1, 2, 3][CAST(4294967297 AS BIGINT)] AS v",
+        "SELECT 'abc'[id] AS v FROM range(1, 5) t(id) ORDER BY id",
+    ],
+)
+def test_list_subscript_takes_a_bigint_index(spark, rw, sql):
+    """A list subscript whose index is a BIGINT (a ``range`` element, say)
+    is served: Spark's ``element_at`` takes only an INT index, so the
+    index is ``try_cast`` to INT (out of INT range gives NULL, like
+    DuckDB). Before, such a comprehension failed analysis in every
+    ``len()`` probe, so ``len()`` of the list came out as ``length()``.
+    Compared with DuckDB."""
+    import duckdb
+
+    want = duckdb.sql(sql).fetchall()
+    assert [tuple(r) for r in spark.sql(rw.rewrite(sql)).collect()] == want, sql
+
+
 def test_generate_series_is_empty_when_the_step_moves_away(spark, rw):
     """``generate_series`` (inclusive stop) is empty when its step does
     not move toward the stop and NULL when an argument is, like DuckDB's

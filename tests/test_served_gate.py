@@ -57,10 +57,6 @@ EXCLUDED: dict[str, str] = {
     "corpus_quality_sample": _HEX_CAST,
     "corpus_token_budget_mix": _HEX_CAST,
     "dedup_cluster_canonical": _RECURSIVE_UNION,
-    "dedup_exact_substring": (
-        "len() of an earlier FROM item's column inside a LATERAL unnest: "
-        "dispatched to length(), not size()"
-    ),
     "dedup_funnel": _RECURSIVE_UNION,
     "dedup_simhash": _HEX_CAST,
     "dedup_winnowing": _HEX_CAST,
@@ -105,6 +101,10 @@ KEPT_AS_CODE: dict[str, str] = {
     "corpus_pack_emit": (
         "its kernel (operators/corpus.py::pack_sequences_emit) is reached only from "
         "here and the property tests; retiring both to SQL text is still open"
+    ),
+    "dedup_exact_substring": (
+        "its kernel (operators/text.py::exact_substring_dedup) is reached only from "
+        "here and tests/test_operators.py; retiring both to SQL text is still open"
     ),
     "text_compression_ratio": _CONSTANT_CHECKS,
     "multimodal_audio_rms": _CLOSED_FORM,

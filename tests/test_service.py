@@ -645,6 +645,12 @@ def test_execute_bytes_match_reference_all_formats(spark):
         "named_struct('a', id, 'b', IF(id % 3 = 0, NULL, CAST(id AS STRING))) AS st, "
         "map('k', id, 'v', id * 2) AS m, CAST(id AS DECIMAL(20, 3)) / 7 AS dec "
         "FROM range(0, 3000, 1, 2)",
+        # float32, NaN, ±Inf, -0.0 and control characters
+        "SELECT CAST(id / 7 AS FLOAT) AS f32, "
+        "CAST(CASE id % 5 WHEN 0 THEN 'NaN' WHEN 1 THEN 'Infinity' WHEN 2 THEN '-Infinity' "
+        "WHEN 3 THEN '-0.0' END AS DOUBLE) AS special, "
+        "concat(chr(1 + id % 31), '\\\\', '\"', chr(127), CAST(id AS STRING)) AS ctl "
+        "FROM range(0, 3000, 1, 2)",
     ]
     for sql in cases:
         table = spark.sql(sql).toArrow()

@@ -7089,11 +7089,13 @@ class SqlRewriter:
         # end). Zero-guard + try_: DuckDB yields NULL for l[0] and any
         # out-of-bounds list index ('' for strings — the dynamic
         # substring gets the batch-8 window translation which
-        # reproduces that)
+        # reproduces that). element_at takes only an INT index where
+        # DuckDB takes a BIGINT (a range() element): try_cast, NULL
+        # out of INT range
         return (
             f"uq_polymapi({operand}, ({idx}), "
             f"uq_poly((CASE WHEN ({idx}) = 0 THEN NULL "
-            f"ELSE try_element_at({operand}, ({idx})) END), "
+            f"ELSE try_element_at({operand}, try_cast(({idx}) AS INT)) END), "
             f"substring({operand}, ({idx}), 1)))"
         )
 

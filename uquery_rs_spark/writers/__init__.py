@@ -6,7 +6,9 @@ Arrow IPC stream. Each implements RecordBatchConsumer: it encodes the
 Arrow batches it is handed on the driver, a bounded slice at a time, into
 any `write(bytes)` sink — a socket, a gzip wrapper, a buffer — so server
 memory stays flat regardless of result size (reference
-docs/docs/response-formats.md:97-104).
+docs/docs/response-formats.md:97-104). JSON and JSON Lines encode a
+slice column by column in Arrow compute kernels, like the reference's
+arrow-json writers; CSV goes through the slice's Python objects.
 """
 
 from .consumers import (  # noqa: F401
